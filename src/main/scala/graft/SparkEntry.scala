@@ -51,8 +51,8 @@ object SparkEntry {
     graft.queries.Tiers.core.iterator.map(n => n -> all(n)).toMap
   }
 
-  /** Full registry: aggregation of the graft.queries family objects
-    * (round-5 split of the former 23.5k-line single file).
+  /** Full registry (455 entries: core, diagnostic and extended tiers):
+    * aggregation of the graft.queries family objects.
     */
   def allQueries: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.QRel.queries ++

@@ -1,26 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
   *
-  * Round-5 hardening (VERDICT r4 "What's wrong" #1 — the round-4 artifact
-  * zeroed to `{}` because this main wrote oracle_sql.json only AFTER a
-  * 594-query loop that outran the driver window):
+  * Hardened against a run that outlives the driver window:
   *
   *  1. `oracle_sql.json` is written FIRST — it is pure metadata, so even a
   *     run truncated mid-loop leaves the driver every completed query's
   *     parquet plus the full oracle map to score it with.
   *  2. The default run is the CORE tier only ([[graft.queries.Tiers.core]],
-  *     133 entries ≈ the round-3 driver-green surface); the 594-entry
+  *     133 entries ≈ the round-3 driver-green surface); the 455-entry
   *     registry runs only under `SPARK_GRAFT_TIER=full` (or explicit
   *     query-name args).
   *  3. Queries run through a small thread pool (`SPARK_GRAFT_VERIFY_THREADS`,
   *     default 4 — Spark local mode schedules concurrent jobs fine and the
   *     sf0.01 fixtures are tiny), submitted §2-contract-first so a truncated
-  *     run still scores the contract surface before the long tail.
+  *     run still scores the contract surface before the long tail. Each
+  *     query is built in its own child session ([[build]]).
   *  4. Every completion is logged to stderr with wall seconds, so a killed
   *     run leaves a visible frontier.
   */
@@ -40,6 +39,17 @@ object Verify {
       case _ => 2
     }
   }
+
+  /** Builds registry entry `name` in its own child session of `spark`. The
+    * child shares the SparkContext, and with it the SQL conf the context
+    * was started with, but has its own temp views and registered
+    * functions: entries that register views (`orders_gs`, `pts`) cannot
+    * race each other under the thread pool.
+    */
+  def build(spark: SparkSession,
+            registry: Map[String, (SparkSession, String) => DataFrame],
+            name: String, sfDir: String): DataFrame =
+    registry(name)(spark.newSession(), sfDir)
 
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -102,7 +112,7 @@ object Verify {
       pool.execute { () =>
         val q0 = System.nanoTime()
         try {
-          registry(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+          build(spark, registry, name, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           val secs = (System.nanoTime() - q0) / 1e9
           System.err.println(f"[verify] $name ok $secs%.1fs (t+${(System.nanoTime() - t0) / 1e9}%.0fs)")

@@ -18,11 +18,11 @@ final case class ElevRow(feature_id: String, coord_idx: Long, lng: Double,
   *
   * Two physical paths, chosen by tile-side size:
   *
-  *  - [[lookupBroadcast]]: broadcast-hash-join the tile table (bounded tile
-  *    sets — the common case: a query's bbox covers few tiles). The bilinear
-  *    sample runs as a native codegen'd expression directly over the joined
-  *    `bytes` column: no decode step at all for `fmt=hgt` (4 random int16
-  *    reads per probe), zero shuffle.
+  *  - [[lookupBroadcast]]: probe a broadcast [[TileIndex]] of the tile table
+  *    (bounded tile sets — the common case: a query's bbox covers few tiles)
+  *    with a codegen'd scalar expression: zero shuffle, and no join row ever
+  *    carries a tile payload. [[addElevation]] and [[polylineToTerrarium]]
+  *    take this path.
   *
   *  - [[lookupCogroup]]: the 100 TB path. Both sides hash-partition on
   *    (tile_key, salt); each group decodes its tile **once** and streams its
@@ -114,21 +114,6 @@ object Elevation {
         col("ratio") > col("prev_max"))
   }
 
-  /** The literal join formulation (J1 as a BroadcastHashJoin on tile_key +
-    * bilinear over the joined `bytes`). Kept for plan-shape comparison and
-    * for tile tables too wide to index; NOT the fast path — each probe row
-    * materializes its tile payload.
-    */
-  def lookupBytesJoin(coords: DataFrame, tiles: Dataset[TileRow]): DataFrame = {
-    val t = tiles.toDF().select(col("image_id"), col("bytes"), col("w"))
-    coords
-      .withColumn("tile_key", tile_key(col("lng"), col("lat")))
-      .join(broadcast(t), col("tile_key") === col("image_id"), "left_outer")
-      .withColumn("elev",
-        coalesce(bilinear_hgt(col("bytes"), col("w"), col("lng"), col("lat")), lit(0.0)))
-      .drop("image_id", "bytes", "w")
-  }
-
   /** Shuffle/cogroup path with optional skew salting. Handles every `fmt`
     * (hgt/png/jpg) because each tile is decoded exactly once per group.
     */
@@ -172,20 +157,17 @@ object Elevation {
   }
 
   /** Full `/geojson` query (entry point 1): add elevations into the GeoJSON
-    * features. A4 reassembly: group sampled coords per feature and rewrite
-    * the nested coordinate arrays in document order.
+    * features. Coordinates are sampled on the [[lookupBroadcast]] path; A4
+    * reassembly then groups the sampled coords per feature and rewrites the
+    * nested coordinate arrays in document order.
     */
-  def addElevation(features: Dataset[FeatureRow], tiles: Dataset[TileRow],
-                   broadcastTiles: Boolean = true): Dataset[FeatureRow] = {
+  def addElevation(features: Dataset[FeatureRow],
+                   tiles: Dataset[TileRow]): Dataset[FeatureRow] = {
     val spark = features.sparkSession
     import spark.implicits._
-    val coords = coordRows(features)
-    val sampled: Dataset[ElevRow] =
-      if (broadcastTiles)
-        lookupBroadcast(coords.toDF(), tiles)
-          .select($"feature_id", $"coord_idx", $"lng", $"lat", $"tile_key", $"elev")
-          .as[ElevRow]
-      else lookupCogroup(coords, tiles)
+    val sampled = lookupBroadcast(coordRows(features).toDF(), tiles)
+      .select($"feature_id", $"coord_idx", $"lng", $"lat", $"tile_key", $"elev")
+      .as[ElevRow]
     val perFeature = sampled.groupByKey(_.feature_id)
       .mapGroups { (fid, rows) =>
         (fid, rows.map(r => r.coord_idx -> r.elev).toMap)

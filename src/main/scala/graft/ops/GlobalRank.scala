@@ -71,13 +71,14 @@ object GlobalRank {
 
   /** Running offsets over a tiny (≤ numParts rows) per-partition aggregate
     * via a θ-self-join instead of a window: numParts² comparisons is
-    * nothing, and the plan carries no unpartitioned window at all.
+    * nothing, and the plan carries no unpartitioned window at all. The
+    * offset is null when no earlier partition has a non-null value.
     */
   private def runningOffsets(perPart: DataFrame, valCol: String): DataFrame =
     perPart.as("a")
       .join(perPart.as("b"), col(s"b.$PID") < col(s"a.$PID"), "left")
       .groupBy(col(s"a.$PID").as(PID))
-      .agg(coalesce(sum(col(s"b.$valCol")), lit(0L)).as("_gr_off"))
+      .agg(sum(col(s"b.$valCol")).as("_gr_off"))
 
   /** Global `row_number()` over `orderCols` as column `out`. */
   def withRowNumber(df: DataFrame, out: String, orderCols: Seq[Column],
@@ -86,7 +87,7 @@ object GlobalRank {
     val counts = r.groupBy(col(PID)).agg(count(lit(1)).as("_gr_cnt"))
     val offsets = runningOffsets(counts, "_gr_cnt")
     r.join(broadcast(offsets), Seq(PID))
-      .withColumn(out, col(LRN) + col("_gr_off"))
+      .withColumn(out, col(LRN) + coalesce(col("_gr_off"), lit(0L)))
       .drop(PID, LRN, "_gr_off")
   }
 
@@ -135,19 +136,24 @@ object GlobalRank {
 
   /** Global running `sum(valueCol)` (unbounded-preceding → current row)
     * over `orderCols` as column `out`: per-partition running sums plus the
-    * cumulative total of earlier range partitions.
+    * cumulative total of earlier range partitions. Nulls follow the global
+    * window: a row whose partition-local prefix is all null takes the
+    * carried total, and the result is null only while every value so far
+    * is null.
     */
   def withCumSum(df: DataFrame, valueCol: String, out: String,
                  orderCols: Seq[Column], numParts: Int = -1): DataFrame = {
     val r = ranged(df, orderCols, numParts)
     val sums = r.groupBy(col(PID)).agg(sum(valueCol).as("_gr_psum"))
     val offsets = runningOffsets(sums, "_gr_psum")
+    val local = "_gr_local"
     r.join(broadcast(offsets), Seq(PID))
-      .withColumn(out, sum(valueCol).over(
+      .withColumn(local, sum(valueCol).over(
           Window.partitionBy(col(PID)).orderBy(orderCols: _*)
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        + col("_gr_off"))
-      .drop(PID, LRN, "_gr_off")
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn(out, coalesce(col(local) + col("_gr_off"), col(local),
+        col("_gr_off")))
+      .drop(PID, LRN, "_gr_off", local)
   }
 
   /** Global `ntile(buckets)` over `orderCols` as column `out` (int),

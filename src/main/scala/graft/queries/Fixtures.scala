@@ -141,60 +141,6 @@ object Fixtures {
           concat(col("text"), lit(" zz qq ww ee rr tt")).as("text")))
   }
 
-  /** Synthetic media metadata from supplier (closed-form, so the DuckDB
-    * oracle can replay any byte of the generated payload; MediaOps.synth
-    * builds the actual binary column from the same formula).
-    */
-  /** Sector antennas (id, cx, cy, d1x, d1y, d2x, d2y, r2) shared by
-    * geo_sector_cover's engine call and oracle VALUES — each sector spans
-    * < 180° CCW from dir1 to dir2, membership is two integer half-plane
-    * cross products + one radius square.
-    */
-  private[graft] val sectorAntennas: Seq[(Long, Long, Long, Long, Long, Long, Long, Long)] =
-    Seq((1L, 100L, 50L, 1L, 0L, 0L, 1L, 14400L),
-      (2L, 300L, 150L, 1L, -1L, 1L, 1L, 40000L),
-      (3L, 1000L, 100L, 0L, -1L, 1L, 0L, 250000L))
-
-  /** Spatiotemporal incidents (id, ix, iy, ts literal) shared by
-    * geo_st_join's engine rows and oracle VALUES.
-    */
-  private[graft] val stIncidents: Seq[(Long, Long, Long, String)] =
-    Seq((1L, 150L, 80L, "2024-01-05 12:00:00"),
-      (2L, 400L, 160L, "2024-01-15 00:00:00"),
-      (3L, 900L, 120L, "2024-01-25 18:00:00"))
-
-  /** Pruning-audit queries (qid, kind, lo, hi) shared by
-    * store_spec_evolution's engine rows and oracle VALUES; points have
-    * lo = hi.
-    */
-  private[graft] val specQueries: Seq[(Long, String, Long, Long)] =
-    Seq((1L, "point", 47L, 47L), (2L, "point", 250L, 250L),
-      (3L, "point", 777L, 777L), (4L, "range", 100L, 300L),
-      (5L, "range", 900L, 1500L))
-
-  /** Self-intersecting bowtie ring (closed; shared by geo_winding_rule's
-    * engine Columns and oracle SQL). Even-odd and nonzero fill rules
-    * disagree exactly on its central overlap lobe.
-    */
-  private[graft] val bowtieRing: Seq[(Long, Long)] =
-    Seq((0L, 0L), (400L, 200L), (0L, 200L), (400L, 0L))
-
-  /** Per-edge crossing terms for a literal ring: (upCross, downCross)
-    * SQL expressions against columns px/py — t is the cross-multiplied
-    * "left of edge" sign, so no division appears; even-odd sums both,
-    * winding signs them.
-    */
-  private[graft] def ringCrossingsSql(ring: Seq[(Long, Long)]): (String, String) = {
-    val edges = ring.indices.map { i =>
-      val (x1, y1) = ring(i); val (x2, y2) = ring((i + 1) % ring.size)
-      val t = s"(($x2 - $x1) * (py - $y1) - (px - $x1) * ($y2 - $y1))"
-      val up = s"(CASE WHEN $y2 > py AND NOT ($y1 > py) AND $t > 0 THEN 1 ELSE 0 END)"
-      val dn = s"(CASE WHEN $y1 > py AND NOT ($y2 > py) AND $t < 0 THEN 1 ELSE 0 END)"
-      (up, dn)
-    }
-    (edges.map(_._1).mkString(" + "), edges.map(_._2).mkString(" + "))
-  }
-
   /** Corridor polyline shared by traj_corridor's engine call and oracle
     * expression generator.
     */
@@ -229,43 +175,9 @@ object Fixtures {
          FROM sym s JOIN h${k - 1} hh ON hh.node = s.v) t
        GROUP BY u)"""
 
-  /** Soundex code as a pure SQL expression chain (translate + chained
-    * adjacent-duplicate collapses) shared by engine and oracle; `g=true`
-    * emits DuckDB's regexp_replace global flag (Spark replaces all matches
-    * by default, and DuckDB's RE2 has no backreferences — hence one
-    * collapse per digit instead of `(\d)\1+`). h/w are deleted before
-    * collapsing so duplicates merge THROUGH them (the Ashcraft rule),
-    * vowels code to 0 and separate duplicates until stripped, and the
-    * first letter's own code collapses with the tail (the Pfister rule) —
-    * the drop of that leading code group is skipped when the first letter
-    * is h/w (its code is empty).
-    */
-  private[graft] def soundexSql(word: String, g: Boolean): String = {
-    val flag = if (g) ", 'g'" else ""
-    val from = "abcdefgijklmnopqrstuvxyzhw"
-    val to = "012301202245501262301202"
-    val coded = s"translate($word, '$from', '$to')"
-    val collapsed = (0 to 6).foldLeft(coded) { (acc, d) =>
-      s"regexp_replace($acc, '$d$d+', '$d'$flag)" }
-    val firstCode = s"translate(substr($word, 1, 1), '$from', '$to')"
-    val tail =
-      s"substr($collapsed, CASE WHEN $firstCode = '' THEN 1 ELSE 2 END)"
-    s"upper(substr($word, 1, 1)) || " +
-      s"rpad(substr(replace($tail, '0', ''), 1, 3), 3, '0')"
-  }
-
-  /** 24-hour unit-circle table scaled 1e6 (rounded once here, embedded as
-    * literals in BOTH the engine query and the oracle VALUES, so the two
-    * sides share the identical integer table by construction).
-    */
-  private[graft] val hourCirc: Seq[(Int, Long, Long)] = (0 until 24).map { h =>
-    val th = 2.0 * math.Pi * h.toDouble / 24.0
-    (h, math.round(math.cos(th) * 1000000.0), math.round(math.sin(th) * 1000000.0))
-  }
-
   /** Six 60°-spaced sun vectors at 45° elevation, ×1000 integers —
     * rounded ONCE here and embedded as literals in both the engine call
-    * and the oracle VALUES (the [[hourCirc]] discipline).
+    * and the oracle VALUES, so both sides share one integer table.
     */
   private[graft] val sunVectors: Seq[(Long, Long, Long)] = (0 until 6).map { k =>
     val az = 2.0 * math.Pi * k.toDouble / 6.0
@@ -275,23 +187,10 @@ object Fixtures {
       math.round(math.sin(math.Pi / 4.0) * 1000.0))
   }
 
-  /** Trailing-zeros+1 register value of the 27-bit hash word `w` as a
-    * shared SQL CASE chain — one string, parsed by BOTH Spark SQL
-    * (graph_hyperball's expr) and DuckDB (its oracle), so the register
-    * arithmetic is identical by construction.
+  /** Synthetic media metadata from supplier (closed-form, so the DuckDB
+    * oracle can replay any byte of the generated payload; MediaOps.synth
+    * builds the actual binary column from the same formula).
     */
-  private[graft] val rhoCaseSql: String =
-    "CASE WHEN w = 0 THEN 28 " + (1 to 27).map(k =>
-      s"WHEN w % ${1L << k} = ${1L << (k - 1)} THEN $k").mkString(" ") +
-      " END"
-
-  /** Subword vocabulary shared by text_wordpiece_count's greedy
-    * segmentation and its oracle VALUES.
-    */
-  private[graft] val wordpieceVocab: Seq[String] =
-    Seq("the", "ta", "ble", "scan", "me", "rge", "ord", "er", "st", "re",
-      "am", "ba", "tch", "row", "qu", "ry", "da", "in", "an", "lu", "ar")
-
   private[graft] def mediaMeta(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "supplier").selectExpr("s_suppkey AS media_id",
       "1000 + (s_suppkey % 20) * 500 AS duration_ms",

@@ -1123,46 +1123,6 @@ object OracleCtes2 {
        ORDER BY ca10.t1, ca10.t2"""
   }
 
-  /** Chaikin oracle: 2 corner-cutting rounds replayed as window CTEs —
-    * coordinates and the ordering key both scale ×4 per round, exactly the
-    * engine's integer contract.
-    */
-  private[graft] def chaikinOracleSql: String = {
-    val rounds = (1 to 2).map { k =>
-      s"""s$k AS (SELECT traj_id, pos, x, y,
-          lead(x) OVER w AS nx, lead(y) OVER w AS ny,
-          lead(pos) OVER w AS npos,
-          row_number() OVER w AS rn,
-          count(*) OVER (PARTITION BY traj_id) AS nrows
-        FROM r${k - 1} WINDOW w AS (PARTITION BY traj_id ORDER BY pos)),
-       r$k AS (
-        SELECT traj_id, pos*3 + npos AS pos, x*3 + nx AS x, y*3 + ny AS y
-          FROM s$k WHERE npos IS NOT NULL
-        UNION ALL
-        SELECT traj_id, pos + npos*3, x + nx*3, y + ny*3
-          FROM s$k WHERE npos IS NOT NULL
-        UNION ALL
-        SELECT traj_id, pos*4, x*4, y*4 FROM s$k
-          WHERE rn = 1 OR rn = nrows)"""
-    }.mkString(",\n         ")
-    s"""WITH p0 AS (SELECT user_id, ts, event_id,
-         event_id % 7 AS dx, (event_id * 3) % 5 AS dy FROM events
-         WHERE user_id < 12),
-       c AS (SELECT user_id, ts, event_id,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py,
-           row_number() OVER w - 1 AS seq
-         FROM p0 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-       r0 AS (SELECT user_id AS traj_id, CAST(seq AS BIGINT) AS pos,
-           px AS x, py AS y FROM c WHERE seq < 8),
-       $rounds
-       SELECT traj_id,
-         CAST(row_number() OVER (PARTITION BY traj_id ORDER BY pos) AS INT) AS idx,
-         CAST(x AS BIGINT) AS xq16, CAST(y AS BIGINT) AS yq16
-       FROM r2 ORDER BY traj_id, idx"""
-  }
-
   /** NN-descent oracle: LSH buckets, bucket-pair top-3, one
     * neighbour-of-neighbour expansion, exact re-rank, recall vs the brute
     * baseline — every stage the engine runs, in fold-dot arithmetic.

@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Embedding / ANN gates: quantizers, LSH, recall, diagnostics
-  * (46 entries) with the DuckDB oracle SQL beside each query.
+  * (43 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QAnn {
@@ -398,34 +398,6 @@ object QAnn {
         .withColumn("churn_ppm", expr("n_changed * 1000000 DIV n_base"))
         .orderBy("centroid")
     }),
-    // Pairwise trajectory bounding-box IoU: exact integer rectangle
-    // intersections over the walk extents — which users share territory;
-    // top-20 by IoU ppm, stats-only 50×50 join.,
-    "ann_label_margin_hist" -> ((s, dir) => {
-      val q = t(s, dir, "embeddings")
-        .select(col("vec_id").cast("long"), col("label"),
-          expr("transform(embedding, " +
-            "x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0) AS BIGINT))")
-            .as("eq"))
-      q.filter(col("vec_id") % 10 === 0)
-        .select(col("vec_id").as("aid"), col("label").as("alabel"),
-          col("eq").as("aeq"))
-        .join(q, col("vec_id") =!= col("aid"))
-        .withColumn("d2", aggregate(
-          zip_with(col("aeq"), col("eq"), (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x))
-        .withColumn("bucket",
-          expr("least(d2 DIV 20000000, 20)").cast("int"))
-        .groupBy("bucket")
-        .agg(sum(when(col("label") === col("alabel"), 1L).otherwise(0L))
-            .as("n_same"),
-          sum(when(col("label") =!= col("alabel"), 1L).otherwise(0L))
-            .as("n_diff"))
-        .orderBy("bucket")
-    }),
-    // Heading persistence: consecutive walk segments sharing a direction
-    // octant — the momentum read under traj_rose's global distribution;
-    // octant by integer sign/diagonal comparisons, one lag window.,
     "ann_assign_margin" -> ((s, dir) => {
       import graft.functions.vectors.vec_dist2
       val (cents, _) = trainedKmeans(s, dir)
@@ -448,10 +420,6 @@ object QAnn {
           max("margin_q").as("max_margin"))
         .orderBy("bucket")
     }),
-    // Sample-ratio mismatch guard: per type the A/B arm user counts vs
-    // the designed 50/50 — flagged by the exact cross-multiplied χ²₁ test
-    // ((n1−n2)² vs 3.8415·(n1+n2), scaled ×10⁴) — the broken-bucketing
-    // alarm that must fire BEFORE reading events_ab_test.,
     "ann_hubness" -> ((s, dir) => {
       val q = t(s, dir, "embeddings")
         .select(col("vec_id").cast("long"),
@@ -473,9 +441,6 @@ object QAnn {
       indeg.groupBy("in_deg").agg(count(lit(1)).as("n_vecs"))
         .orderBy("in_deg")
     }),
-    // Functional-dependency check over literal column pairs: distinct(A)
-    // vs distinct(A,B) — zero violations certifies A→B; the
-    // schema-discovery DQ read next to dq_referential.,
     "ann_pca_residual" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       val v3 = ops.Embeddings.powerIteration(emb, rounds = 3, dims = 64)
@@ -498,10 +463,6 @@ object QAnn {
         .select("n", "dims", "total_var_num", "v2", "proj_s", "proj_ss",
           "proj_var_num")
     }),
-    // Effect-size pieces for the A/B split: per type the arm moments and
-    // the exact Cohen's-d numerators (mean-difference and pooled-variance
-    // pieces; the one sqrt+division is the consumer's) — the magnitude
-    // read next to events_ks_test/events_mannwhitney's significance.,
     "ann_knn_loocv" -> ((s, dir) => {
       val q = t(s, dir, "embeddings")
         .select(col("vec_id").cast("long"), col("label"),
@@ -527,20 +488,6 @@ object QAnn {
           sum(when(col("label") === col("alabel"), 1L).otherwise(0L))
             .as("n_correct"))
         .orderBy("alabel")
-    }),
-    // Distribution-shift audit: pre- vs post-midpoint cents histograms
-    // (1000-cent buckets) as ppm shares, per type the total L1 and the
-    // worst bucket gap — the PSI-style drift read without logarithms.,
-    "ann_norm_hist" -> ((s, dir) => {
-      t(s, dir, "embeddings")
-        .select(expr("aggregate(transform(embedding, " +
-          "x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)), " +
-          "0L, (acc, v) -> acc + v * v)").as("n2"))
-        .withColumn("bucket", expr("n2 DIV 1000000").cast("int"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n_vecs"), min("n2").as("min_n2"),
-          max("n2").as("max_n2"))
-        .orderBy("bucket")
     }),
     // Per-block value-diversity census (ops.ImageOps.blockDiversity):
     // distinct-count, range and smallest-tie mode per 100² block — the
@@ -639,27 +586,6 @@ object QAnn {
           round(col("rel"), 4).as("rel_r"), round(col("score"), 4).as("score_r"))
         .orderBy("qid", "step")
     }),
-    // Sign-bit binary quantization + Hamming top-k: each 64-dim embedding
-    // collapses to ONE 64-bit word (bit i = dim i > 0), candidate ranking
-    // by bit_count(xor) — 64 bytes → 8, the memory-collapse ANN trick;
-    // pure codegen'd bit ops (HOF fold to pack, one xor+popcount per
-    // pair), broadcast query side, one corpus scan.,
-    "ann_binary_hamming" -> ((s, dir) => {
-      val e = t(s, dir, "embeddings")
-        .selectExpr("vec_id", "cast(embedding as array<double>) AS v")
-        .selectExpr("vec_id",
-          "aggregate(sequence(1, 64), CAST(0 AS BIGINT), (acc, i) -> acc | CASE WHEN element_at(v, i) > 0D THEN shiftleft(CAST(1 AS BIGINT), i - 1) ELSE CAST(0 AS BIGINT) END) AS bits")
-      val q = e.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("qid"), col("bits").as("qbits"))
-      e.crossJoin(broadcast(q)).filter(col("vec_id") =!= col("qid"))
-        .selectExpr("qid", "vec_id AS neighbor_id",
-          "CAST(bit_count(qbits ^ bits) AS INT) AS ham")
-        .withColumn("rank", row_number().over(Window.partitionBy("qid")
-          .orderBy(col("ham").asc, col("neighbor_id").asc)))
-        .filter(col("rank") <= 10)
-        .select("qid", "neighbor_id", "ham", "rank")
-        .orderBy("qid", "rank")
-    }),
     // Matryoshka prefix-dimension search: candidates by cosine on the
     // FIRST 16 dims (¼ the flops/bytes — the matryoshka-embedding
     // truncation trick), exact full-dim cosine re-rank of the top-50 —
@@ -734,9 +660,6 @@ object QAnn {
       ops.Embeddings.facilityGreedy(t(s, dir, "embeddings"),
         candModulo = 5, r2 = 1.44, k = 4).orderBy("round")
     }),
-    // Kendall distance-to-sorted of the daily series: exact inversion and
-    // tie pair counts per event type, normalized to milli — the
-    // monotone-trend gauge next to geo_mann_kendall's S statistic.,
     "ann_candidate_accounting" -> ((s, dir) => {
       import graft.functions.vectors.vec_dist2
       val emb = t(s, dir, "embeddings")
@@ -1025,22 +948,6 @@ object QAnn {
              * 1000000 // CAST(count(*) AS BIGINT) AS churn_ppm
          FROM caa JOIN cab ON cab.vec_id = caa.vec_id
          GROUP BY 1 ORDER BY centroid""",
-    // walk bounding boxes, exact rectangle IoU, top 20,
-    "ann_label_margin_hist" ->
-      """WITH e AS (SELECT vec_id, label, list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS eq
-           FROM embeddings),
-         p AS (SELECT a.label AS alabel, e.label,
-             CAST(list_sum(list_transform(range(1,65),
-               i -> (a.eq[i] - e.eq[i]) * (a.eq[i] - e.eq[i]))) AS BIGINT) AS d2
-           FROM e a JOIN e ON e.vec_id <> a.vec_id
-           WHERE a.vec_id % 10 = 0)
-         SELECT CAST(least(d2 // 20000000, 20) AS INT) AS bucket,
-           CAST(sum(CASE WHEN label = alabel THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_same,
-           CAST(sum(CASE WHEN label <> alabel THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_diff
-         FROM p GROUP BY 1 ORDER BY bucket""",
     // octant ladder on segment deltas, lagged equality share,
     "ann_assign_margin" ->
       s"""WITH ${kmeansTrainCtes(8, 3)},
@@ -1120,18 +1027,6 @@ object QAnn {
            CAST(sum(CASE WHEN label = alabel THEN 1 ELSE 0 END) AS BIGINT)
              AS n_correct
          FROM w GROUP BY 1 ORDER BY alabel""",
-    // 1000-cent bucket shares pre/post, L1 + worst gap,
-    "ann_norm_hist" ->
-      """WITH e AS (SELECT list_transform(embedding,
-           x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS eq
-           FROM embeddings),
-         n AS (SELECT CAST(list_sum(list_transform(eq, v -> v * v))
-             AS BIGINT) AS n2 FROM e)
-         SELECT CAST(n2 // 1000000 AS INT) AS bucket,
-           CAST(count(*) AS BIGINT) AS n_vecs,
-           CAST(min(n2) AS BIGINT) AS min_n2,
-           CAST(max(n2) AS BIGINT) AS max_n2
-         FROM n GROUP BY 1 ORDER BY bucket""",
     // distinct (type,user) memberships, canonical pair self-join,
     "ann_farthest_first" -> farthestFirstOracleSql,
     // the identical NFD recurrence as a recursive CTE, one file per
@@ -1170,24 +1065,6 @@ object QAnn {
          FROM pos JOIN neg ON pos.qid = neg.qid ORDER BY pos.qid""",
     // prefix-cosine candidates, exact full-dim re-rank of the top-50,
     "ann_mmr" -> mmrOracleSql,
-    // Page's CUSUM recurrence replayed as a recursive CTE: one recursion
-    // level per per-user event index, exact integer state throughout,
-    "ann_binary_hamming" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-         b AS (SELECT vec_id, CAST(list_sum(list_transform(range(1, 65),
-             -- DuckDB overflow-checks 1<<63; the sign bit needs the literal
-             i -> CASE WHEN v[i] <= 0 THEN CAST(0 AS BIGINT)
-                       WHEN i = 64 THEN CAST(-9223372036854775807 AS BIGINT) - 1
-                       ELSE (CAST(1 AS BIGINT) << (CAST(i AS INT) - 1)) END)) AS BIGINT) AS bits FROM e),
-         q AS (SELECT vec_id AS qid, bits AS qbits FROM b WHERE vec_id < 5),
-         p AS (SELECT qid, b.vec_id AS neighbor_id,
-             CAST(bit_count(xor(qbits, b.bits)) AS INT) AS ham
-           FROM q, b WHERE b.vec_id <> qid),
-         r AS (SELECT qid, neighbor_id, ham,
-             CAST(row_number() OVER (PARTITION BY qid
-               ORDER BY ham, neighbor_id) AS INTEGER) AS rank FROM p)
-         SELECT qid, neighbor_id, ham, rank FROM r WHERE rank <= 10
-         ORDER BY qid, rank""",
     // both exact rankings, then the integer-exact ppm-truncated RRF merge,
     "ann_matryoshka" ->
       """WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),

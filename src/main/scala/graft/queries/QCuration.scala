@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Training-data curation gates: quotas, splits, decontamination
-  * (17 entries) with the DuckDB oracle SQL beside each query.
+  * (16 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QCuration {
@@ -130,26 +130,6 @@ object QCuration {
     "curation_mix" -> ((s, dir) => {
       ops.Curation.mixtureWeights(t(s, dir, "documents"),
           expr("size(split(text, ' '))"))
-        .orderBy("source")
-    }),
-    // Epoch/oversampling plan: per source the full-epoch repeat factor
-    // and remainder under a 200k-token budget split by integer source
-    // weights — the "how many passes over each source" table a
-    // mixture-trained run materializes from curation_mix's shares.,
-    "curation_epochs" -> ((s, dir) => {
-      val avail = t(s, dir, "documents")
-        .groupBy("source")
-        .agg(sum(expr("size(split(text, ' '))")).cast("long")
-          .as("avail_tok"))
-        .withColumn("weight",
-          expr("CAST(substring(source, 4) AS BIGINT) + 1"))
-      val tot = avail.agg(sum("weight").as("wsum"))
-      avail.crossJoin(broadcast(tot))
-        .withColumn("target_tok", expr("200000 * weight DIV wsum"))
-        .withColumn("full_epochs", expr("target_tok DIV avail_tok"))
-        .withColumn("remainder_tok", expr("target_tok % avail_tok"))
-        .select("source", "avail_tok", "weight", "target_tok",
-          "full_epochs", "remainder_tok")
         .orderBy("source")
     }),
     // Custom-state streaming rollup (streaming.StreamOps.stateRollup):
@@ -310,11 +290,6 @@ object QCuration {
         .select("centroid", "label", "n", "row_tot", "col_tot", "dev_q")
         .orderBy("centroid", "label")
     }),
-    // Spatial-join selectivity estimate vs truth: 0.1-degree grid
-    // histograms give the optimizer's candidate-pair estimate
-    // (sum over cells of points x poly-bboxes), audited against the
-    // exact bbox-overlap pair count — the cost-model number a spatial
-    // join planner needs before choosing broadcast vs shuffle.
   )
 
   val sql: Map[String, String] = Map(
@@ -442,17 +417,6 @@ object QCuration {
          SELECT source, tok, share_ppm, weight_ppm,
            (weight_ppm + 999999) // 1000000 AS epochs
          FROM w ORDER BY source""",
-    "curation_epochs" ->
-      """WITH a AS (SELECT source,
-           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS avail_tok,
-           CAST(substring(source, 4) AS BIGINT) + 1 AS weight
-           FROM documents GROUP BY 1),
-         t AS (SELECT CAST(sum(weight) AS BIGINT) AS wsum FROM a)
-         SELECT source, avail_tok, weight,
-           200000 * weight // wsum AS target_tok,
-           (200000 * weight // wsum) // avail_tok AS full_epochs,
-           (200000 * weight // wsum) % avail_tok AS remainder_tok
-         FROM a, t ORDER BY source""",
     // the stream's final state per key IS the batch GROUP BY,
     "curation_dsir" ->
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
@@ -561,6 +525,5 @@ object QCuration {
          FROM ct JOIN rt ON rt.centroid = ct.centroid
            JOIN lt ON lt.label = ct.label, g
          ORDER BY ct.centroid, ct.label""",
-    // grid histograms product vs exact bbox-overlap pairs
   )
 }

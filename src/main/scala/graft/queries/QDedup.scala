@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Deduplication gates: exact, MinHash/LSH, SimHash, containment
-  * (31 entries) with the DuckDB oracle SQL beside each query.
+  * (29 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QDedup {
@@ -240,9 +240,6 @@ object QDedup {
           max("ppm").as("max_ppm"))
         .orderBy("bucket")
     }),
-    // Coverage-redundancy histogram: per walk fix how many of the literal
-    // sectors cover it, histogrammed — the single-point-of-failure read
-    // over geo_sector_cover's per-antenna counts.,
     "dedup_rank_auc" -> ((s, dir) => {
       val d = t(s, dir, "documents")
       val sub = d.filter(col("doc_id") % 25 === 0)
@@ -313,28 +310,6 @@ object QDedup {
         .agg(count(lit(1)).as("n_docs"), sum("isset").as("n_ones"))
         .withColumn("share_ppm", expr("n_ones * 1000000 DIV n_docs"))
         .orderBy("bit")
-    }),
-    // Same-vs-different-label distance histograms over sampled anchors:
-    // the metric-learning separability read (overlapping histograms ⇒
-    // labels not linearly recoverable from distance alone) — the
-    // distribution view under ann_silhouette's per-anchor stats.,
-    "dedup_char_ngram" -> ((s, dir) => {
-      val words = t(s, dir, "part")
-        .selectExpr("split_part(p_name, ' ', 1) AS w").distinct()
-        .filter(length(col("w")) >= 4)
-        .withColumn("grams", expr(
-          "array_distinct(transform(sequence(1, length(w) - 3), " +
-            "i -> substring(w, i, 4)))"))
-      words.select(col("w").as("wa"), col("grams").as("ga"))
-        .join(broadcast(words.select(col("w").as("wb"),
-          col("grams").as("gb"))), col("wa") < col("wb"))
-        .withColumn("i", expr("size(array_intersect(ga, gb))").cast("long"))
-        .withColumn("u",
-          expr("size(array_distinct(concat(ga, gb)))").cast("long"))
-        .filter(expr("i * 10 >= u * 4"))
-        .withColumn("jaccard_ppm", expr("i * 1000000 DIV u"))
-        .select("wa", "wb", "i", "u", "jaccard_ppm")
-        .orderBy("wa", "wb")
     }),
     // Residual variance after the top principal direction: total per-dim
     // variance numerators vs the projection's (scores ÷1000 to keep every
@@ -513,22 +488,6 @@ object QDedup {
           .agg(count(lit(1)).as("hit_multi")))
         .withColumn("recall_plain_ppm", expr("1000000 * hit_plain DIV n_truth"))
         .withColumn("recall_multi_ppm", expr("1000000 * hit_multi DIV n_truth"))
-    }),
-    // Rolling-origin one-step backtest: naive (lag-1) vs seasonal-naive
-    // (lag-7) absolute-error sums over the shared evaluation days — the
-    // forecast-model selection primitive, exact integers.,
-    "dedup_phonetic_join" -> ((s, dir) => {
-      val words = t(s, dir, "part")
-        .selectExpr("split_part(p_name, ' ', 1) AS w").distinct()
-        .selectExpr(s"${soundexSql("w", g = false)} AS code", "w")
-      words.select(col("code"), col("w").as("wa"))
-        .join(words.select(col("code"), col("w").as("wb")), Seq("code"))
-        .filter(col("wa") < col("wb"))
-        .groupBy("code")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(expr("levenshtein(wa, wb)") <= 2, 1L).otherwise(0L))
-            .as("n_pairs_lev2"))
-        .orderBy("code")
     }),
     // Areal interpolation audit (ops.ImageOps.arealInterp): exact
     // rectangle-overlap re-aggregation error, 3x3 -> 4x4 zones.
@@ -762,21 +721,6 @@ object QDedup {
            n_ones * 1000000 // n_docs AS share_ppm
          FROM u ORDER BY bit"""
     },
-    // sampled anchors × corpus, bucketed by same/diff label,
-    "dedup_char_ngram" ->
-      """WITH w AS (SELECT DISTINCT split_part(p_name, ' ', 1) AS w
-           FROM part),
-         g AS (SELECT w, list_distinct(list_transform(
-             range(1, length(w) - 2), i -> substring(w, CAST(i AS INT), 4)))
-             AS grams
-           FROM w WHERE length(w) >= 4),
-         p AS (SELECT a.w AS wa, b.w AS wb,
-             CAST(len(list_intersect(a.grams, b.grams)) AS BIGINT) AS i,
-             CAST(len(list_distinct(list_concat(a.grams, b.grams)))
-               AS BIGINT) AS u
-           FROM g a JOIN g b ON a.w < b.w)
-         SELECT wa, wb, i, u, i * 1000000 // u AS jaccard_ppm
-         FROM p WHERE i * 10 >= u * 4 ORDER BY wa, wb""",
     // shared power-iteration replay, offset-floored projection quanta,
     // total/projection variance pieces,
     "dedup_keep" ->
@@ -960,16 +904,6 @@ object QDedup {
            CAST(1000000 * hit_plain // n_truth AS BIGINT) AS recall_plain_ppm,
            CAST(1000000 * hit_multi // n_truth AS BIGINT) AS recall_multi_ppm
          FROM agg"""
-    },
-    // lag-1 vs lag-7 absolute errors on rn > 7 days,
-    "dedup_phonetic_join" -> {
-      s"""WITH w AS (SELECT DISTINCT split_part(p_name, ' ', 1) AS w FROM part),
-         c AS (SELECT ${soundexSql("w", g = true)} AS code, w FROM w)
-         SELECT a.code, CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(sum(CASE WHEN levenshtein(a.w, b.w) <= 2 THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_pairs_lev2
-         FROM c a JOIN c b ON b.code = a.code AND a.w < b.w
-         GROUP BY 1 ORDER BY a.code"""
     },
     // exact rectangle overlaps, one floor after the weighted sum
   )

@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Data-quality gates: profiling, drift, expectations
-  * (18 entries) with the DuckDB oracle SQL beside each query.
+  * (6 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QDq {
@@ -47,54 +47,6 @@ object QDq {
         Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderdate", "o_orderpriority")).orderBy("column")
     }),
-    // Referential-integrity audit: orphan-FK counts per relationship via
-    // key left joins (parent side broadcast-able keys only, never rows) —
-    // the cross-table consistency check of any warehouse intake; the
-    // customer side is deliberately trimmed (%7) so the orders check
-    // fires nonzero while lineitem→orders proves a clean zero.
-    // Cross-table AGGREGATE consistency audit (the invariant dq_referential
-    // can't see): per order, header o_totalprice vs the Σ of its line
-    // items' extendedprice, in exact cents; per status the violation count
-    // and the worst/total deviation — the reconciliation check of any
-    // header/detail ingest. One fk-keyed aggregate + one key equi-join.,
-    "dq_agg_consistency" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .selectExpr("l_orderkey",
-          "CAST(FLOOR(l_extendedprice * 100.0D + 0.5D) AS BIGINT) AS cents")
-        .groupBy("l_orderkey").agg(sum("cents").as("li_cents"))
-      t(s, dir, "orders")
-        .selectExpr("o_orderkey", "o_orderstatus",
-          "CAST(FLOOR(o_totalprice * 100.0D + 0.5D) AS BIGINT) AS hdr_cents")
-        .join(li, col("o_orderkey") === col("l_orderkey"), "left")
-        .withColumn("diff_c",
-          abs(col("hdr_cents") - coalesce(col("li_cents"), lit(0L))))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          sum(when(col("li_cents").isNull, 1L).otherwise(0L))
-            .as("n_no_lines"),
-          sum(when(col("diff_c") > 0, 1L).otherwise(0L)).as("n_mismatch"),
-          max("diff_c").as("max_diff_c"), sum("diff_c").as("sum_diff_c"))
-        .orderBy("o_orderstatus")
-    }),
-    "dq_referential" -> ((s, dir) => {
-      def check(tag: String, child: DataFrame, fk: String,
-                parent: DataFrame) =
-        child.select(col(fk).as("fk"))
-          .join(parent, col("fk") === col("pk"), "left")
-          .groupBy(lit(tag).as("chk"))
-          .agg(count(lit(1)).as("n_child"),
-            count(when(col("pk").isNull, 1)).as("n_orphans"),
-            countDistinct(when(col("pk").isNull, col("fk"))).as("orphan_keys"))
-      val trimmedCust = t(s, dir, "customer")
-        .filter(col("c_custkey") % 7 =!= 0)
-        .select(col("c_custkey").as("pk"))
-      val orderKeys = t(s, dir, "orders").select(col("o_orderkey").as("pk"))
-      check("orders_customer", t(s, dir, "orders"), "o_custkey", trimmedCust)
-        .unionAll(
-          check("lineitem_orders", t(s, dir, "lineitem"), "l_orderkey",
-            orderKeys))
-        .orderBy("chk")
-    }),
     // Snapshot drift report (ops.DataQuality.drift): the two profiles
     // compared in exact integer ppm — the gate declares a degraded "after"
     // snapshot (rows dropped, nulls injected, an enum value collapsed) so
@@ -122,36 +74,6 @@ object QDq {
       ops.DataQuality.benford(cents, "cents", tolPpm = 30000L)
         .orderBy("digit")
     }),
-    // IQR fence outlier audit — Tukey's 1.5·IQR rule with NO float in the
-    // decision: per priority group, exact selection quartiles (ranks
-    // ⌈n/4⌉ / ⌈3n/4⌉ over a total (cents, key) order), then fences by
-    // cross-multiplication (2x > 5·q3 − 3·q1 ⟺ x > q3 + 1.5·IQR). The
-    // per-column robust-outlier count every data-quality suite reports,
-    // as one group-keyed window + one broadcast-shaped rejoin.,
-    "dq_iqr_outliers" -> ((s, dir) => {
-      val o = t(s, dir, "orders").selectExpr("o_orderpriority AS grp",
-        "CAST(FLOOR(o_totalprice * 100.0D + 0.5D) AS BIGINT) AS cents",
-        "o_orderkey")
-      val w = Window.partitionBy("grp").orderBy("cents", "o_orderkey")
-      val ranked = o
-        .withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("grp")))
-      val q = ranked
-        .filter(col("rn") === expr("(n+3) div 4") ||
-          col("rn") === expr("(3*n+3) div 4"))
-        .groupBy("grp", "n")
-        .agg(min(when(col("rn") === expr("(n+3) div 4"), col("cents"))).as("q1"),
-          min(when(col("rn") === expr("(3*n+3) div 4"), col("cents"))).as("q3"))
-      o.join(q.withColumnRenamed("grp", "g"), col("grp") === col("g"))
-        .groupBy("grp", "n", "q1", "q3")
-        .agg(
-          sum(when(lit(2L) * col("cents") < lit(5L) * col("q1") - lit(3L) * col("q3"), 1L)
-            .otherwise(0L)).as("n_low"),
-          sum(when(lit(2L) * col("cents") > lit(5L) * col("q3") - lit(3L) * col("q1"), 1L)
-            .otherwise(0L)).as("n_high"))
-        .select("grp", "n", "q1", "q3", "n_low", "n_high")
-        .orderBy("grp")
-    }),
     // Schema-evolution diff (ops.DataQuality.schemaDiff): the snapshot
     // compatibility verdict — one row per column in either version with
     // added/removed/type_changed/unchanged status, pure metadata (no data
@@ -164,197 +86,6 @@ object QDq {
         .withColumn("o_totalprice", col("o_totalprice").cast("decimal(12,2)"))
         .withColumn("o_ingest_day", lit(20260819L))
       ops.DataQuality.schemaDiff(before, after).orderBy("column")
-    }),
-    // Per-user interval UNION (ops.IntervalJoin.intervalUnion): merged
-    // busy-time coverage over event intervals (2-16 min, event_id-derived)
-    // — the uptime/SLA aggregate a plain sum(e−s) double-counts; one
-    // line-sweep window pass, exact epoch-micro integers.,
-    "dq_sequence_order" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"))
-        .withColumn("prev_id", lag("event_id", 1).over(w))
-        .filter(col("prev_id").isNotNull)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_steps"),
-          sum(when(col("event_id") < col("prev_id"), 1L).otherwise(0L))
-            .as("n_inversions"),
-          min(when(col("event_id") < col("prev_id"), col("event_id")))
-            .as("min_bad_id"))
-        .orderBy("user_id")
-    }),
-    // Small-motif census (ops.Graph.motifCensus): ONE row of exact edge/
-    // wedge/claw/triangle/P₃ counts — degree-sequence closed forms plus
-    // the triangle wedge join and the `Σ(dᵤ−1)(dᵥ−1) − 3Δ` path identity.,
-    "dq_double_fire" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-          expr("unix_micros(CAST(ts AS TIMESTAMP))").as("tus"))
-        .withColumn("ptype", lag("event_type", 1).over(w))
-        .withColumn("pcents", lag("cents", 1).over(w))
-        .withColumn("ptus", lag("tus", 1).over(w))
-      ev.groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("ptype") === col("event_type") &&
-            col("pcents") === col("cents") &&
-            col("tus") - col("ptus") <= 1000000L, 1L).otherwise(0L))
-            .as("n_double"))
-        .withColumn("rate_ppm", expr("n_double * 1000000 DIV n_events"))
-        .orderBy("event_type")
-    }),
-    // Coarse-assignment margin: per vector the micro-floored gap between
-    // its 2nd- and 1st-nearest trained centroids, histogrammed — small
-    // margins mean boundary vectors nProbe must cover; the confidence
-    // read under ann_ivf_recall's aggregate number.,
-    "dq_fd_check" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      def fd(tag: String, a: String, b: String) =
-        o.agg(countDistinct(col(a)).as("nd_a"),
-            countDistinct(col(a), col(b)).as("nd_ab"))
-          .select(lit(tag).as("fd"), col("nd_a"), col("nd_ab"),
-            (col("nd_ab") - col("nd_a")).as("violations"))
-      fd("orderkey->custkey", "o_orderkey", "o_custkey")
-        .unionAll(fd("custkey->orderstatus", "o_custkey", "o_orderstatus"))
-        .unionAll(fd("orderdate->orderpriority", "o_orderdate",
-          "o_orderpriority"))
-        .orderBy("fd")
-    }),
-    // Train/test split leakage: MinHash near-dup pairs that STRADDLE the
-    // hash split (doc_id % 10 < 8 → train) — the eval-hygiene number
-    // curation_decontam can't see (it checks exact grams, not near-dups).,
-    "dq_value_shift" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT) DIV 1000").as("bucket"),
-          expr("ts >= timestamp'2024-01-16'").as("post"))
-      val h = ev.groupBy("event_type", "bucket")
-        .agg(sum(when(!col("post"), 1L).otherwise(0L)).as("c_pre"),
-          sum(when(col("post"), 1L).otherwise(0L)).as("c_post"))
-      val tot = h.groupBy("event_type")
-        .agg(sum("c_pre").as("n_pre"), sum("c_post").as("n_post"))
-      h.join(tot, Seq("event_type"))
-        .withColumn("gap_ppm", expr(
-          "abs(c_pre * 1000000 DIV n_pre - c_post * 1000000 DIV n_post)"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_buckets"), sum("gap_ppm").as("l1_ppm"),
-          max("gap_ppm").as("max_gap_ppm"))
-        .orderBy("event_type")
-    }),
-    // Per-block shift field between epochs (ops.ImageOps.shiftField):
-    // ±2-pixel SAD block matching, ties to the smallest (dy, dx) — the
-    // local-misregistration map above img_register's global estimate.,
-    "dq_coordinate_sentinels" -> ((s, dir) => {
-      val pts = t(s, dir, "lineitem").selectExpr(
-        """CASE WHEN l_orderkey % 97 = 0 THEN 0.0D
-           WHEN l_orderkey % 89 = 0 THEN -999.0D
-           ELSE -120 + (l_orderkey % 4) + ((l_partkey % 600) + 0.5D)/600.0D END AS lng""",
-        """CASE WHEN l_orderkey % 97 = 0 THEN 0.0D
-           WHEN l_orderkey % 89 = 0 THEN -999.0D
-           WHEN l_orderkey % 83 = 0 THEN 90.0D
-           ELSE 36 + (l_suppkey % 2) + (((l_suppkey*7 + l_linenumber*131) % 600) + 0.5D)/600.0D END AS lat""")
-      pts
-        .withColumn("sentinel_class",
-          when(col("lng") === 0.0 && col("lat") === 0.0, "null_island")
-            .when(col("lng") === -999.0 || col("lat") === -999.0, "nodata_999")
-            .when(abs(col("lat")) === 90.0, "pole_pin")
-            .otherwise("ok"))
-        .groupBy("sentinel_class").agg(count(lit(1)).as("n_points"))
-        .crossJoin(broadcast(pts.agg(count(lit(1)).as("n_total"))))
-        .withColumn("share_ppm", expr("1000000 * n_points DIV n_total"))
-        .orderBy("sentinel_class")
-    }),
-    // Circular hour-of-day statistics: resultant-vector components over
-    // the shared 1e6-scaled 24-gon table (exact integers both sides) +
-    // the modal hour — the diurnal-concentration gauge linear means get
-    // wrong at midnight wraparound.,
-    "dq_key_discovery" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-      def cand(name: String, cols: Seq[String]) =
-        o.agg(count(lit(1)).as("n_rows"),
-            countDistinct(cols.head, cols.tail: _*).as("n_distinct"))
-          .withColumn("candidate", lit(name))
-      cand("o_orderkey", Seq("o_orderkey"))
-        .unionByName(cand("o_custkey", Seq("o_custkey")))
-        .unionByName(cand("o_custkey,o_orderdate",
-          Seq("o_custkey", "o_orderdate")))
-        .unionByName(cand("o_orderstatus,o_orderpriority",
-          Seq("o_orderstatus", "o_orderpriority")))
-        .withColumn("is_key",
-          when(col("n_rows") === col("n_distinct"), 1).otherwise(0))
-        .withColumn("dup_ppm", expr(
-          "1000000 * (n_rows - n_distinct) DIV n_rows"))
-        .select("candidate", "n_rows", "n_distinct", "is_key", "dup_ppm")
-        .orderBy("candidate")
-    }),
-    // STL-lite seasonal decomposition in x7 integers: centered 7-day
-    // rolling trend, detrended = 7c - trend, per-day-of-week nearest-rank
-    // seasonal medians, residual L1 — the exact decomposition behind
-    // events_seasonality's strength number.,
-    "dq_hour_shift" -> ((s, dir) => {
-      val ev = t(s, dir, "events").selectExpr("event_type",
-        "CAST(hour(ts) AS INT) AS h",
-        "unix_micros(CAST(date_trunc('day', ts) AS TIMESTAMP)) DIV 86400000000 AS day")
-      val d0 = ev.agg(min("day")).head().getLong(0)
-      val halves = ev.withColumn("half",
-        when(col("day") < d0 + 45L, 1).otherwise(2))
-      val tots = halves.groupBy("event_type", "half")
-        .agg(count(lit(1)).as("tot"))
-      val grid = tots
-        .crossJoin(s.range(0, 24).toDF("h").selectExpr("CAST(h AS INT) AS h"))
-      val prof = grid
-        .join(halves.groupBy("event_type", "half", "h")
-          .agg(count(lit(1)).as("c")), Seq("event_type", "half", "h"), "left")
-        .withColumn("ppm", expr("1000000 * coalesce(c, 0L) DIV tot"))
-      val p1 = prof.filter(col("half") === 1)
-        .select(col("event_type"), col("h"), col("ppm").as("ppm1"))
-      val p2 = prof.filter(col("half") === 2)
-        .select(col("event_type").as("et2"), col("h").as("h2"),
-          col("ppm").as("ppm2"))
-      val shifts = p1
-        .crossJoin(s.range(0, 24).toDF("sft").selectExpr("CAST(sft AS INT) AS sft"))
-        .join(p2, col("et2") === col("event_type") &&
-          col("h2") === (col("h") + col("sft")) % 24)
-        .groupBy("event_type", "sft")
-        .agg(sum(expr("abs(ppm1 - ppm2)")).as("l1"))
-      val best = shifts.withColumn("rn", row_number().over(
-          Window.partitionBy("event_type").orderBy(col("l1").asc, col("sft").asc)))
-        .filter(col("rn") === 1)
-        .select(col("event_type"), col("sft").as("best_shift"),
-          col("l1").as("l1_best"))
-      shifts.filter(col("sft") === 0)
-        .select(col("event_type"), col("l1").as("l1_zero"))
-        .join(best, Seq("event_type"))
-        .orderBy("event_type")
-    }),
-    // Tukey median polish (2 row/col sweeps, nearest-rank medians): the
-    // robust two-way decomposition of the type x day-of-week count
-    // matrix — residuals expose cell-level anomalies that means smear.,
-    "dq_magnitude_profile" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .withColumn("cents", expr("CAST(round(value * 100) AS BIGINT)"))
-        .withColumn("digits", length(expr("CAST(abs(cents) AS STRING)")))
-      val tot = ev.groupBy("event_type").agg(count(lit(1)).as("tot"))
-      ev.groupBy("event_type", "digits").agg(count(lit(1)).as("n"))
-        .join(tot, Seq("event_type"))
-        .withColumn("share_ppm", expr("1000000 * n DIV tot"))
-        .select("event_type", "digits", "n", "share_ppm")
-        .orderBy("event_type", "digits")
-    }),
-    // Lorenz curve deciles: users ranked by activity, cumulative event
-    // share per decile in ppm — the inequality curve behind
-    // events_gini's single number.,
-    "dq_float_dust" -> ((s, dir) => {
-      t(s, dir, "events")
-        .withColumn("dusty",
-          when(expr("value * 100.0D = round(value * 100.0D)"), 0L)
-            .otherwise(1L))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("dusty").as("n_dusty"))
-        .withColumn("dust_ppm", expr("1000000 * n_dusty DIV n"))
-        .orderBy("event_type")
     }),
     // EDR trajectory distance (ops.Trajectory.edr): gap-penalizing,
     // noise-tolerant — the fourth member of the dtw/frechet/lcss family
@@ -375,9 +106,6 @@ object QDq {
         .withColumn("n_missing",
           expr("max_key - min_key + 1 - n_keys"))
     }),
-    // Character-class profile per source: alphabetic and whitespace
-    // shares in ppm via global regexp strip — the encoding/garbage drift
-    // gauge next to text_ocr_garbage.
   )
 
   val sql: Map[String, String] = Map(
@@ -445,37 +173,6 @@ object QDq {
          $rows
          ORDER BY "column""""
     },
-    "dq_agg_consistency" ->
-      """WITH li AS (SELECT l_orderkey,
-           CAST(sum(CAST(floor(l_extendedprice * 100.0 + 0.5) AS BIGINT)) AS BIGINT) AS li_cents
-           FROM lineitem GROUP BY 1),
-         j AS (SELECT o_orderstatus, li.l_orderkey AS lk,
-             abs(CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT)
-               - COALESCE(li_cents, 0)) AS diff_c
-           FROM orders LEFT JOIN li ON li.l_orderkey = o_orderkey)
-         SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n_orders,
-           CAST(sum(CASE WHEN lk IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_no_lines,
-           CAST(sum(CASE WHEN diff_c > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_mismatch,
-           CAST(max(diff_c) AS BIGINT) AS max_diff_c,
-           CAST(sum(diff_c) AS BIGINT) AS sum_diff_c
-         FROM j GROUP BY 1 ORDER BY o_orderstatus""",
-    // 4 unrolled hops, next hop = hash-argmin out-neighbour (ties by dst),
-    "dq_referential" ->
-      """WITH pc AS (SELECT c_custkey AS pk FROM customer WHERE c_custkey % 7 <> 0),
-         c1 AS (SELECT 'orders_customer' AS chk,
-             CAST(count(*) AS BIGINT) AS n_child,
-             CAST(count(CASE WHEN pk IS NULL THEN 1 END) AS BIGINT) AS n_orphans,
-             CAST(count(DISTINCT CASE WHEN pk IS NULL THEN o_custkey END) AS BIGINT) AS orphan_keys
-           FROM orders LEFT JOIN pc ON o_custkey = pk),
-         ok AS (SELECT o_orderkey AS pk FROM orders),
-         c2 AS (SELECT 'lineitem_orders' AS chk,
-             CAST(count(*) AS BIGINT) AS n_child,
-             CAST(count(CASE WHEN pk IS NULL THEN 1 END) AS BIGINT) AS n_orphans,
-             CAST(count(DISTINCT CASE WHEN pk IS NULL THEN l_orderkey END) AS BIGINT) AS orphan_keys
-           FROM lineitem LEFT JOIN ok ON l_orderkey = pk)
-         SELECT chk, n_child, n_orphans, orphan_keys FROM c1
-         UNION ALL SELECT chk, n_child, n_orphans, orphan_keys FROM c2
-         ORDER BY chk""",
     // schema-on-read: typed k out of the JSON props, then native aggs,
     "dq_drift" -> {
       def prof(src: String, c: String, numeric: Boolean) = {
@@ -529,27 +226,6 @@ object QDq {
            CASE WHEN abs(n_obs * 1000000 // n_total - e_ppm) <= 30000
                 THEN 'ok' ELSE 'deviant' END AS verdict
          FROM cnt JOIN e USING (digit), tot ORDER BY digit""",
-    // pure-metadata verdict table — the oracle pins the contract literally,
-    "dq_iqr_outliers" ->
-      """WITH o AS (SELECT o_orderpriority AS grp,
-             CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents,
-             o_orderkey
-           FROM orders),
-         r AS (SELECT grp, cents,
-             row_number() OVER (PARTITION BY grp ORDER BY cents, o_orderkey) AS rn,
-             CAST(count(*) OVER (PARTITION BY grp) AS BIGINT) AS n
-           FROM o),
-         q AS (SELECT grp, n,
-             min(CASE WHEN rn = (n+3) // 4 THEN cents END) AS q1,
-             min(CASE WHEN rn = (3*n+3) // 4 THEN cents END) AS q3
-           FROM r WHERE rn = (n+3) // 4 OR rn = (3*n+3) // 4
-           GROUP BY 1, 2)
-         SELECT o.grp, q.n, q.q1, q.q3,
-           CAST(sum(CASE WHEN 2*o.cents < 5*q.q1 - 3*q.q3 THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
-           CAST(sum(CASE WHEN 2*o.cents > 5*q.q3 - 3*q.q1 THEN 1 ELSE 0 END) AS BIGINT) AS n_high
-         FROM o JOIN q ON o.grp = q.grp
-         GROUP BY o.grp, q.n, q.q1, q.q3
-         ORDER BY o.grp""",
     "dq_schema_diff" ->
       """SELECT * FROM (VALUES
            ('o_custkey', 'BIGINT', 'BIGINT', 'unchanged'),
@@ -558,170 +234,6 @@ object QDq {
            ('o_orderstatus', 'STRING', NULL, 'removed'),
            ('o_totalprice', 'DOUBLE', 'DECIMAL(12,2)', 'type_changed'))
          AS t("column", type_a, type_b, status) ORDER BY "column"""",
-    // line sweep replayed: running-max of prior ends, cumulative segment
-    // ids, merged-segment lengths,
-    "dq_sequence_order" ->
-      """WITH s AS (SELECT user_id, event_id,
-           lag(event_id) OVER (PARTITION BY user_id
-             ORDER BY epoch_us(ts), event_id) AS prev_id
-           FROM events)
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n_steps,
-           CAST(sum(CASE WHEN event_id < prev_id THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_inversions,
-           CAST(min(CASE WHEN event_id < prev_id THEN event_id END)
-             AS BIGINT) AS min_bad_id
-         FROM s WHERE prev_id IS NOT NULL
-         GROUP BY 1 ORDER BY user_id""",
-    // degree-sequence closed forms + the canonical a<b<c triangle join +
-    // the P3 identity,
-    "dq_double_fire" ->
-      """WITH e AS (SELECT user_id, event_id, event_type,
-           CAST(round(value * 100) AS BIGINT) AS cents,
-           epoch_us(ts) AS tus FROM events),
-         l AS (SELECT event_type, cents, tus,
-           lag(event_type) OVER w AS ptype,
-           lag(cents) OVER w AS pcents, lag(tus) OVER w AS ptus
-           FROM e WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id))
-         SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CASE WHEN ptype = event_type AND pcents = cents
-             AND tus - ptus <= 1000000 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_double,
-           CAST(sum(CASE WHEN ptype = event_type AND pcents = cents
-             AND tus - ptus <= 1000000 THEN 1 ELSE 0 END) AS BIGINT)
-             * 1000000 // CAST(count(*) AS BIGINT) AS rate_ppm
-         FROM l GROUP BY 1 ORDER BY event_type""",
-    // trained-centroid top-2 distances, micro-floored margin buckets,
-    "dq_fd_check" ->
-      """WITH f1 AS (SELECT 'orderkey->custkey' AS fd,
-           CAST(count(DISTINCT o_orderkey) AS BIGINT) AS nd_a,
-           CAST(count(DISTINCT (o_orderkey, o_custkey)) AS BIGINT) AS nd_ab
-           FROM orders),
-         f2 AS (SELECT 'custkey->orderstatus' AS fd,
-           CAST(count(DISTINCT o_custkey) AS BIGINT) AS nd_a,
-           CAST(count(DISTINCT (o_custkey, o_orderstatus)) AS BIGINT) AS nd_ab
-           FROM orders),
-         f3 AS (SELECT 'orderdate->orderpriority' AS fd,
-           CAST(count(DISTINCT o_orderdate) AS BIGINT) AS nd_a,
-           CAST(count(DISTINCT (o_orderdate, o_orderpriority)) AS BIGINT) AS nd_ab
-           FROM orders),
-         u AS (SELECT * FROM f1 UNION ALL SELECT * FROM f2
-           UNION ALL SELECT * FROM f3)
-         SELECT fd, nd_a, nd_ab, nd_ab - nd_a AS violations
-         FROM u ORDER BY fd""",
-    // the banded candidate pairs vs the hash split,
-    "dq_value_shift" ->
-      """WITH ev AS (SELECT event_type,
-           CAST(round(value * 100) AS BIGINT) // 1000 AS bucket,
-           ts >= TIMESTAMP '2024-01-16' AS post FROM events),
-         h AS (SELECT event_type, bucket,
-             CAST(sum(CASE WHEN NOT post THEN 1 ELSE 0 END) AS BIGINT) AS c_pre,
-             CAST(sum(CASE WHEN post THEN 1 ELSE 0 END) AS BIGINT) AS c_post
-           FROM ev GROUP BY 1, 2),
-         t AS (SELECT event_type, CAST(sum(c_pre) AS BIGINT) AS n_pre,
-             CAST(sum(c_post) AS BIGINT) AS n_post FROM h GROUP BY 1)
-         SELECT h.event_type, CAST(count(*) AS BIGINT) AS n_buckets,
-           CAST(sum(abs(c_pre * 1000000 // n_pre
-             - c_post * 1000000 // n_post)) AS BIGINT) AS l1_ppm,
-           CAST(max(abs(c_pre * 1000000 // n_pre
-             - c_post * 1000000 // n_post)) AS BIGINT) AS max_gap_ppm
-         FROM h JOIN t ON t.event_type = h.event_type
-         GROUP BY 1 ORDER BY h.event_type""",
-    // curvy-vs-plane SAD over 25 shifts per block, min (sad, dy, dx),
-    "dq_coordinate_sentinels" ->
-      """WITH pts AS (SELECT
-           CASE WHEN l_orderkey % 97 = 0 THEN 0.0
-             WHEN l_orderkey % 89 = 0 THEN -999.0
-             ELSE -120 + (l_orderkey % 4) + ((l_partkey % 600) + 0.5)/600.0 END AS lng,
-           CASE WHEN l_orderkey % 97 = 0 THEN 0.0
-             WHEN l_orderkey % 89 = 0 THEN -999.0
-             WHEN l_orderkey % 83 = 0 THEN 90.0
-             ELSE 36 + (l_suppkey % 2) + (((l_suppkey*7 + l_linenumber*131) % 600) + 0.5)/600.0 END AS lat
-           FROM lineitem),
-         cl AS (SELECT CASE
-             WHEN lng = 0.0 AND lat = 0.0 THEN 'null_island'
-             WHEN lng = -999.0 OR lat = -999.0 THEN 'nodata_999'
-             WHEN abs(lat) = 90.0 THEN 'pole_pin'
-             ELSE 'ok' END AS sentinel_class FROM pts),
-         tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM cl)
-         SELECT sentinel_class, CAST(count(*) AS BIGINT) AS n_points,
-           n_total, CAST(1000000 * count(*) // n_total AS BIGINT) AS share_ppm
-         FROM cl, tot GROUP BY 1, n_total ORDER BY sentinel_class""",
-    // shared 24-gon integer table as VALUES, modal hour by (count, hour),
-    "dq_key_discovery" ->
-      """WITH u AS (
-           SELECT 'o_orderkey' AS candidate,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_distinct
-           FROM orders
-           UNION ALL
-           SELECT 'o_custkey', CAST(count(*) AS BIGINT),
-             CAST(count(DISTINCT o_custkey) AS BIGINT) FROM orders
-           UNION ALL
-           SELECT 'o_custkey,o_orderdate', CAST(count(*) AS BIGINT),
-             CAST((SELECT count(*) FROM (SELECT DISTINCT o_custkey,
-               o_orderdate FROM orders) t) AS BIGINT) FROM orders
-           UNION ALL
-           SELECT 'o_orderstatus,o_orderpriority', CAST(count(*) AS BIGINT),
-             CAST((SELECT count(*) FROM (SELECT DISTINCT o_orderstatus,
-               o_orderpriority FROM orders) t) AS BIGINT) FROM orders)
-         SELECT candidate, n_rows, n_distinct,
-           CAST(CASE WHEN n_rows = n_distinct THEN 1 ELSE 0 END AS INT) AS is_key,
-           CAST(1000000 * (n_rows - n_distinct) // n_rows AS BIGINT) AS dup_ppm
-         FROM u ORDER BY candidate""",
-    // x7 trend, per-dow nearest-rank seasonal medians, L1 residuals,
-    "dq_hour_shift" ->
-      """WITH ev AS (SELECT event_type, CAST(hour(ts) AS INT) AS h,
-           epoch_us(date_trunc('day', ts)) // 86400000000 AS day FROM events),
-         d0 AS (SELECT min(day) AS d0 FROM ev),
-         hv AS (SELECT event_type, h,
-             CASE WHEN day < d0 + 45 THEN 1 ELSE 2 END AS half FROM ev, d0),
-         tots AS (SELECT event_type, half, CAST(count(*) AS BIGINT) AS tot
-           FROM hv GROUP BY 1, 2),
-         cnts AS (SELECT event_type, half, h, CAST(count(*) AS BIGINT) AS c
-           FROM hv GROUP BY 1, 2, 3),
-         grid AS (SELECT t.event_type, t.half, t.tot, CAST(g AS INT) AS h
-           FROM tots t, unnest(range(0, 24)) AS u(g)),
-         prof AS (SELECT grid.event_type, grid.half, grid.h,
-             CAST(1000000 * COALESCE(c, 0) // tot AS BIGINT) AS ppm
-           FROM grid LEFT JOIN cnts ON cnts.event_type = grid.event_type
-             AND cnts.half = grid.half AND cnts.h = grid.h),
-         p1 AS (SELECT event_type, h, ppm AS ppm1 FROM prof WHERE half = 1),
-         p2 AS (SELECT event_type AS et2, h AS h2, ppm AS ppm2
-           FROM prof WHERE half = 2),
-         sh0 AS (SELECT event_type, h, ppm1, CAST(g AS INT) AS sft
-           FROM p1, unnest(range(0, 24)) AS u(g)),
-         sh AS (SELECT sh0.event_type, sft,
-             CAST(sum(abs(ppm1 - ppm2)) AS BIGINT) AS l1
-           FROM sh0 JOIN p2 ON et2 = sh0.event_type
-             AND h2 = (sh0.h + sft) % 24
-           GROUP BY 1, 2),
-         best AS (SELECT event_type, sft AS best_shift, l1 AS l1_best
-           FROM sh QUALIFY row_number() OVER (PARTITION BY event_type
-             ORDER BY l1, sft) = 1)
-         SELECT sh.event_type, sh.l1 AS l1_zero, best_shift, l1_best
-         FROM sh JOIN best USING (event_type)
-         WHERE sh.sft = 0 ORDER BY sh.event_type""",
-    // two unrolled row/col sweeps with nearest-rank medians,
-    "dq_magnitude_profile" ->
-      """WITH ev AS (SELECT event_type,
-           CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-         dg AS (SELECT event_type,
-             CAST(length(CAST(abs(cents) AS VARCHAR)) AS INT) AS digits
-           FROM ev),
-         tot AS (SELECT event_type, CAST(count(*) AS BIGINT) AS tot
-           FROM dg GROUP BY 1)
-         SELECT dg.event_type, digits, CAST(count(*) AS BIGINT) AS n,
-           CAST(1000000 * count(*) // tot AS BIGINT) AS share_ppm
-         FROM dg JOIN tot USING (event_type)
-         GROUP BY 1, 2, tot ORDER BY dg.event_type, digits""",
-    // (rank-1)*10//n deciles, windowed cumulative ppm shares,
-    "dq_float_dust" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CASE WHEN value * 100.0 = round(value * 100.0)
-             THEN 0 ELSE 1 END) AS BIGINT) AS n_dusty,
-           CAST(1000000 * sum(CASE WHEN value * 100.0 = round(value * 100.0)
-             THEN 0 ELSE 1 END) // count(*) AS BIGINT) AS dust_ppm
-         FROM events GROUP BY 1 ORDER BY event_type""",
     // EDR lattice unrolled on anti-diagonals with boundary defaults,
     "dq_id_gap_census" ->
       """WITH k AS (SELECT DISTINCT o_orderkey AS k FROM orders),
@@ -735,6 +247,5 @@ object QDq {
              THEN k - prev - 1 END), 0) AS BIGINT) AS max_gap,
            CAST(max(k) - min(k) + 1 - count(*) AS BIGINT) AS n_missing
          FROM l""",
-    // global regexp strips, ppm shares per source
   )
 }

@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Event-analytics gates: sessions, funnels, sketches, time series
-  * (43 entries) with the DuckDB oracle SQL beside each query.
+  * (11 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QEvents1 {
@@ -79,28 +79,6 @@ object QEvents1 {
       ops.Drift.acf(ev, "event_type", Seq("ts", "event_id"), "v_cents",
         maxLag = 4).orderBy("event_type", "lag")
     }),
-    // Lagged CROSS-correlation between two series — events_acf's
-    // two-signal sibling (does 'view' volume at hour t lead 'click' volume
-    // at t+lag?): per lag ∈ [−3, 3] the raw co-occurrence mass
-    // Σ_t n_view(t)·n_click(t+lag) over overlapping hours, pure integers
-    // (zero hours contribute nothing to the dot product, so the sparse
-    // hour join equals the dense series). Two hour-keyed aggs + one 7×
-    // fan-out equi-join — never a per-lag rescan.,
-    "events_xcorr" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-        .withColumn("hr", expr("unix_micros(date_trunc('hour', ts)) div 3600000000L"))
-      val a = e.filter(col("event_type") === "view")
-        .groupBy("hr").agg(count(lit(1)).as("na"))
-      val b = e.filter(col("event_type") === "click")
-        .groupBy("hr").agg(count(lit(1)).as("nb"))
-      val lags = s.range(-3, 4).toDF("lag")
-      a.crossJoin(broadcast(lags))
-        .withColumn("hr2", col("hr") + col("lag"))
-        .join(b.withColumnRenamed("hr", "hr2"), "hr2")
-        .groupBy("lag")
-        .agg(count(lit(1)).as("n_hours"), sum(col("na") * col("nb")).as("dot"))
-        .orderBy("lag")
-    }),
     // hold in int64 through the gate SFs; a 100 TB deployment would move
     // the squares to DECIMAL(38,0) (same plan, wider integers).,
     "events_rolling_z" -> ((s, dir) => {
@@ -128,147 +106,6 @@ object QEvents1 {
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
         .orderBy("hr", "event_type")
     }),
-    // SPC control-rule flags (Western Electric rules 1 and 4, public) on
-    // the hourly EVENT-RATE series: per type, exact global moments
-    // (n, Σc, Σc²), then R1 = rate beyond 3σ by cross-multiplication
-    // ((n·c−S)²·(n−1) > 9·n·(nQ−S²)) and R4 = 8 consecutive hours the
-    // same side of the mean (|rolling sum of sign(n·c−S)| = 8 — only
-    // possible when all 8 agree). The monitoring-rule layer above
-    // events_rolling_z's windowed score; two key-bounded windows, pure
-    // integers.,
-    "events_spc" -> ((s, dir) => {
-      val hrly = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hr"))
-        .agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy("event_type").orderBy("hr")
-      val wp = Window.partitionBy("event_type")
-      val m = hrly
-        .withColumn("n", count(lit(1)).over(wp))
-        .withColumn("sc", sum("c").over(wp))
-        .withColumn("sq", sum(col("c") * col("c")).over(wp))
-        .withColumn("dev", col("n") * col("c") - col("sc"))
-        .withColumn("side", signum(col("dev")).cast("long"))
-        .withColumn("r1", when(col("n") >= 2 &&
-          col("dev") * col("dev") * (col("n") - 1) >
-            lit(9L) * col("n") * (col("n") * col("sq") - col("sc") * col("sc")),
-          1L).otherwise(0L))
-        .withColumn("run8", sum("side").over(w.rowsBetween(-7, 0)))
-        .withColumn("cnt8", count(lit(1)).over(w.rowsBetween(-7, 0)))
-        .withColumn("r4", when(col("cnt8") === 8 &&
-          abs(col("run8")) === 8, 1L).otherwise(0L))
-      m.groupBy("event_type")
-        .agg(count(lit(1)).as("n_hours"), sum("r1").as("n_r1"),
-          sum("r4").as("n_r4"))
-        .orderBy("event_type")
-    }),
-    // Cohort LTV matrix — events_retention's revenue sibling: customers
-    // cohorted by FIRST order month, cumulative cents by cohort age in
-    // months — the lifetime-value curve every growth dashboard draws.
-    // One custkey-keyed min + one (cohort, age) agg + one cohort window,
-    // exact integer months and cents.,
-    "events_cohort_ltv" -> ((s, dir) => {
-      val o = t(s, dir, "orders").selectExpr("o_custkey",
-        "CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m",
-        "CAST(FLOOR(o_totalprice * 100.0D + 0.5D) AS BIGINT) AS cents")
-      val first = o.groupBy("o_custkey").agg(min("m").as("m0"))
-      o.join(first, "o_custkey")
-        .withColumn("age", col("m") - col("m0"))
-        .groupBy(col("m0").as("cohort"), col("age"))
-        .agg(count(lit(1)).as("n_orders"), sum("cents").as("cents"))
-        .withColumn("cum_cents", sum("cents").over(
-          Window.partitionBy("cohort").orderBy("age")
-            .rowsBetween(Window.unboundedPreceding, 0)))
-        .orderBy("cohort", "age")
-    }),
-    // Binary-segmentation CHANGEPOINT (one split): the hour index that
-    // maximizes the quantized between-segment objective
-    // S1² div n1 + S2² div n2 over each type's hourly cents series — the
-    // detector behind events_cusum's sequential alarm, answered offline.
-    // The objective is DEFINED as the integer-division form so both
-    // engines replay the argmax exactly (ties → earliest split). Gate-SF
-    // int64 headroom: totals ≤ ~10⁹ cents ⇒ S² ≤ 10¹⁸ < 2⁶³; a 100 TB
-    // deployment widens to DECIMAL(38,0), same plan.,
-    "events_changepoint" -> ((s, dir) => {
-      val hrly = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          date_trunc("hour", col("ts")).as("hr"))
-        .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("c"))
-      val w = Window.partitionBy("event_type").orderBy("hr")
-      val wp = Window.partitionBy("event_type")
-      val pre = hrly
-        .withColumn("i", row_number().over(w).cast("long"))
-        .withColumn("s1", sum("c").over(
-          w.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("n", count(lit(1)).over(wp))
-        .withColumn("stot", sum("c").over(wp))
-      val cand = pre.filter(col("i") < col("n"))
-        .withColumn("obj", expr(
-          "(s1*s1) div i + ((stot-s1)*(stot-s1)) div (n - i)"))
-      cand.withColumn("rn", row_number().over(Window.partitionBy("event_type")
-          .orderBy(col("obj").desc, col("i"))))
-        .filter(col("rn") === 1)
-        .withColumn("gain", expr("obj - (stot*stot) div n"))
-        .select(col("event_type"), col("n").as("n_hours"),
-          col("i").as("best_idx"), col("hr").as("best_hr"), col("obj"),
-          col("gain"))
-        .orderBy("event_type")
-    }),
-    // Pareto concentration N80 — "how many top users carry 80% of the
-    // value": per type, users ranked by cents desc (ties by user_id), the
-    // smallest prefix whose running share reaches 80% by exact
-    // cross-multiplication (5·cum ≥ 4·total) — the concentration COUNT
-    // next to events_gini's coefficient. Two key-bounded windows.,
-    "events_pareto_n80" -> ((s, dir) => {
-      val byUser = t(s, dir, "events")
-        .groupBy("event_type", "user_id")
-        .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("c"))
-      val w = Window.partitionBy("event_type")
-        .orderBy(col("c").desc, col("user_id"))
-      val wp = Window.partitionBy("event_type")
-      byUser
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .withColumn("cum", sum("c").over(
-          w.rowsBetween(Window.unboundedPreceding, 0)))
-        .withColumn("tot", sum("c").over(wp))
-        .withColumn("n_users", count(lit(1)).over(wp))
-        .filter(lit(5L) * col("cum") >= lit(4L) * col("tot"))
-        .groupBy("event_type", "n_users", "tot")
-        .agg(min("rk").as("n80"))
-        .select("event_type", "n_users", "tot", "n80")
-        .orderBy("event_type")
-    }),
-    // HOUR-OF-DAY seasonality profile — events_hourly folded onto the
-    // 24-hour clock: per (type, hour 0..23) the exact count/cents mass and
-    // the seasonality index in ppm of a flat profile (cents·24·10⁶ div
-    // total — 10⁶ means an average hour, 2·10⁶ a doubled one). The
-    // capacity-planning shape every ops dashboard draws; ≤ types×24 rows,
-    // one agg + one type-keyed rejoin, pure integers.,
-    "events_seasonality" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-        .withColumn("hod", hour(col("ts")).cast("long"))
-        .withColumn("cents", expr("CAST(round(value * 100) AS BIGINT)"))
-      val byHour = e.groupBy("event_type", "hod")
-        .agg(count(lit(1)).as("n"), sum("cents").as("cents"))
-      val tot = e.groupBy("event_type").agg(sum("cents").as("tot_cents"))
-      byHour.join(tot, "event_type")
-        .withColumn("idx_ppm", expr("(cents * 24L * 1000000L) div tot_cents"))
-        .select("event_type", "hod", "n", "cents", "idx_ppm")
-        .orderBy("event_type", "hod")
-    }),
-    // CUBE rollup: all four (event_type × day) grouping sets in ONE pass —
-    // Spark's Expand operator fans each row to its grouping sets before the
-    // single aggregation shuffle (4× the rows, but one job instead of four
-    // scans — the multi-granularity dashboard query at 100 TB). Data has no
-    // NULL keys, so the rollup NULLs are unambiguous.,
-    "events_cube" -> ((s, dir) => {
-      t(s, dir, "events")
-        .withColumn("day", date_trunc("day", col("ts")))
-        .cube("event_type", "day")
-        .agg(count(lit(1)).cast("long").as("n"),
-          sum(expr("CAST(round(value * 100, 0) AS LONG)")).cast("long")
-            .as("sum_cents"))
-        .orderBy("event_type", "day")
-    }),
     // Structured Streaming through the correctness gate: the events table
     // replayed as a file-source STREAM into a watermarked event-time window
     // aggregation, drained with AvailableNow — the drained state equals the
@@ -281,54 +118,6 @@ object QEvents1 {
           expr("CAST(round(value * 100, 0) AS LONG)"), stepUs = 3600000000L)
         .orderBy("event_type", "bucket_us")
     }),
-    // Line rasterization (ops.Rasterize.lineDensity): integer-DDA traces of
-    // every segment onto a 0.01-degree grid, distinct-line count per cell —
-    // the road/trail density map.,
-    "events_calibration" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val pre = ev.filter(expr("ts < timestamp'2024-01-16'"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_pre"),
-          sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-            .as("n_pre_purch"))
-      val post = ev.filter(expr("ts >= timestamp'2024-01-16'"))
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("converted"))
-      pre.join(post, Seq("user_id"))
-        .withColumn("share_ppm", expr("n_pre_purch * 1000000 DIV n_pre"))
-        .withColumn("bin", expr("share_ppm DIV 100000").cast("int"))
-        .groupBy("bin")
-        .agg(count(lit(1)).as("n_users"),
-          sum("share_ppm").as("sum_share_ppm"),
-          sum("converted").as("n_converted"))
-        .orderBy("bin")
-    }),
-    // Difference-in-differences 2×2: treated (even users) × post (the
-    // span midpoint), per type the quadrant counts/sums and the DiD
-    // estimate on milli-floored means — the causal-analytics read over
-    // events_ab_test's single split. One aggregation.,
-    "events_did" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select(col("event_type"),
-          (col("user_id") % 2 === 0).as("treated"),
-          expr("ts >= timestamp'2024-01-16'").as("post"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .groupBy("event_type")
-        .agg(
-          sum(when(col("treated") && col("post"), 1L).otherwise(0L)).as("n_tp"),
-          sum(when(col("treated") && col("post"), col("cents"))).as("s_tp"),
-          sum(when(col("treated") && !col("post"), 1L).otherwise(0L)).as("n_t0"),
-          sum(when(col("treated") && !col("post"), col("cents"))).as("s_t0"),
-          sum(when(!col("treated") && col("post"), 1L).otherwise(0L)).as("n_cp"),
-          sum(when(!col("treated") && col("post"), col("cents"))).as("s_cp"),
-          sum(when(!col("treated") && !col("post"), 1L).otherwise(0L)).as("n_c0"),
-          sum(when(!col("treated") && !col("post"), col("cents"))).as("s_c0"))
-        .withColumn("did_milli", expr(
-          "(s_tp * 1000 DIV n_tp - s_t0 * 1000 DIV n_t0) - " +
-            "(s_cp * 1000 DIV n_cp - s_c0 * 1000 DIV n_c0)"))
-        .orderBy("event_type")
-    }),
     // Distinctive keywords per source: exact cross-product association
     // score o·(N−Nₛ) − (o_tot−o)·Nₛ (positive ⇔ over-represented), top-5
     // per source — the corpus-mix diagnostic next to text_tfidf; one
@@ -340,165 +129,6 @@ object QEvents1 {
         "unix_micros(CAST(ts AS TIMESTAMP)) + ((event_id % 7) + 1) * 120000000 AS e")
       ops.IntervalJoin.intervalUnion(iv, "user_id", "s", "e")
         .orderBy("user_id")
-    }),
-    // Peak event rate (burst / rate-limit audit): max events in any
-    // trailing 1-hour window per user — ONE keyed range-frame window on
-    // exact epoch micros, the sliding-window load profile.
-    // Token-bucket rate-limiter replay (capacity 5 tokens, 1 token/10 s,
-    // µs-integer state): per-user ordered fold via the codegen'd
-    // aggregate() HOF — state bounded per user, partial-agg collect, the
-    // API-abuse / throttling audit. DuckDB replays the identical fold
-    // with list_reduce.,
-    "events_token_bucket" -> ((s, dir) => {
-      val cap = 50000000L; val cost = 10000000L
-      def refill = s"LEAST(CAST($cap AS BIGINT), acc.tok + " +
-        "(CASE WHEN acc.p < CAST(0 AS BIGINT) THEN CAST(0 AS BIGINT) " +
-        "ELSE x.ts_us - acc.p END))"
-      t(s, dir, "events").filter(col("user_id") < 100)
-        .selectExpr("user_id",
-          "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us", "event_id")
-        .groupBy("user_id")
-        .agg(sort_array(collect_list(struct(col("ts_us"), col("event_id"))))
-          .as("evs"))
-        .selectExpr("user_id", "CAST(size(evs) AS BIGINT) AS n_events",
-          s"""aggregate(evs,
-             named_struct('p', CAST(-1 AS BIGINT), 'tok', CAST($cap AS BIGINT), 'rej', CAST(0 AS BIGINT)),
-             (acc, x) -> named_struct(
-               'p', x.ts_us,
-               'tok', CASE WHEN $refill >= CAST($cost AS BIGINT)
-                      THEN $refill - CAST($cost AS BIGINT) ELSE $refill END,
-               'rej', acc.rej + CASE WHEN $refill >= CAST($cost AS BIGINT)
-                      THEN CAST(0 AS BIGINT) ELSE CAST(1 AS BIGINT) END)) AS st""")
-        .selectExpr("user_id", "n_events", "st.rej AS n_rejected",
-          "st.tok AS tokens_left_us")
-        .orderBy("user_id")
-    }),
-    // Peak interval concurrency (line sweep): per event_type the maximum
-    // number of simultaneously-open intervals (same 2–16 min event
-    // intervals as events_interval_union) — the capacity-planning number
-    // interval_union's coverage sum cannot give. ±1 sweep points, ONE
-    // keyed window running sum ([s,e) semantics: ends sort before starts
-    // at a shared instant, so touching intervals never double-count),
-    // peak_at = earliest µs instant attaining the peak. One shuffle on
-    // event_type; state per row is one Long.,
-    "events_concurrency" -> ((s, dir) => {
-      val iv = t(s, dir, "events").selectExpr("event_type", "event_id",
-        "unix_micros(CAST(ts AS TIMESTAMP)) AS st",
-        "unix_micros(CAST(ts AS TIMESTAMP)) + ((event_id % 7) + 1) * 120000000 AS en")
-      val pts = iv.selectExpr("event_type", "st AS t",
-          "CAST(1 AS BIGINT) AS delta", "event_id")
-        .unionAll(iv.selectExpr("event_type", "en AS t",
-          "CAST(-1 AS BIGINT) AS delta", "event_id"))
-      val wRun = Window.partitionBy("event_type")
-        .orderBy(col("t"), col("delta"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy("event_type")
-      pts.withColumn("cur", sum("delta").over(wRun))
-        .withColumn("mx", max(col("cur")).over(wAll))
-        .groupBy("event_type")
-        .agg(sum(when(col("delta") === 1, lit(1L))).as("n_intervals"),
-          max(col("cur")).as("peak_concurrency"),
-          min(when(col("cur") === col("mx"), col("t"))).as("peak_at"))
-        .orderBy("event_type")
-    }),
-    // Jacobson/Karels smoothed-RTT replay (RFC 6298 integer arithmetic):
-    // per-user ordered fold over inter-event gaps — srtt ← (7·srtt+g)/8,
-    // rttvar ← (3·rttvar+|g−srtt|)/4, first gap initializes (g, g/2), all
-    // µs-integers so the fold replays exactly; rto = srtt + 4·rttvar. The
-    // adaptive-timeout estimator next to events_token_bucket's throttle
-    // replay — same codegen'd aggregate() HOF shape, O(1) state per key.,
-    "events_srtt" -> ((s, dir) => {
-      t(s, dir, "events").filter(col("user_id") < 100)
-        .selectExpr("user_id",
-          "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us", "event_id")
-        .groupBy("user_id")
-        .agg(sort_array(collect_list(struct(col("ts_us"), col("event_id"))))
-          .as("evs"))
-        .selectExpr("user_id", "CAST(size(evs) - 1 AS BIGINT) AS n_gaps",
-          """aggregate(evs,
-             named_struct('p', CAST(-1 AS BIGINT), 'srtt', CAST(-1 AS BIGINT), 'rttvar', CAST(0 AS BIGINT)),
-             (acc, x) -> named_struct(
-               'p', x.ts_us,
-               'srtt', CASE WHEN acc.p < CAST(0 AS BIGINT) THEN CAST(-1 AS BIGINT)
-                      WHEN acc.srtt < CAST(0 AS BIGINT) THEN x.ts_us - acc.p
-                      ELSE (CAST(7 AS BIGINT) * acc.srtt + (x.ts_us - acc.p)) DIV CAST(8 AS BIGINT) END,
-               'rttvar', CASE WHEN acc.p < CAST(0 AS BIGINT) THEN CAST(0 AS BIGINT)
-                      WHEN acc.srtt < CAST(0 AS BIGINT) THEN (x.ts_us - acc.p) DIV CAST(2 AS BIGINT)
-                      ELSE (CAST(3 AS BIGINT) * acc.rttvar + abs((x.ts_us - acc.p) - acc.srtt)) DIV CAST(4 AS BIGINT) END)) AS st""")
-        .selectExpr("user_id", "n_gaps", "st.srtt AS srtt_us",
-          "st.rttvar AS rttvar_us",
-          "st.srtt + CAST(4 AS BIGINT) * st.rttvar AS rto_us")
-        .orderBy("user_id")
-    }),
-    "events_peak_rate" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-        .orderBy("tus").rangeBetween(-3599999999L, 0L)
-      t(s, dir, "events")
-        .selectExpr("user_id", "unix_micros(CAST(ts AS TIMESTAMP)) AS tus")
-        .withColumn("cnt", count(lit(1)).over(w))
-        .groupBy("user_id")
-        .agg(max("cnt").as("peak_1h"), count(lit(1)).as("n_events"))
-        .orderBy("user_id")
-    }),
-    // First/last-touch attribution: every purchase credited to the first
-    // and the most recent prior click/view of the same user — ONE
-    // user-keyed window over the merged touch+conversion stream (the
-    // as-of trick: running first/last ignoreNulls; touches sort before a
-    // same-instant conversion), no join, no per-conversion rescan;
-    // 'direct' when nothing precedes. The marketing-analytics workhorse
-    // beside funnel/retention.,
-    "events_attribution" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val touches = ev.filter(col("event_type").isin("click", "view"))
-      val convs = ev.filter(col("event_type") === "purchase")
-      val merged = touches.select(col("user_id"), col("ts"), col("event_id"),
-          lit(0).as("side"), col("event_type"))
-        .unionAll(convs.select(col("user_id"), col("ts"), col("event_id"),
-          lit(1).as("side"), col("event_type")))
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("ts"), col("side"), col("event_id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val touchId = when(col("side") === 0, col("event_id"))
-      val touchTy = when(col("side") === 0, col("event_type"))
-      merged
-        .withColumn("first_tid", first(touchId, ignoreNulls = true).over(w))
-        .withColumn("first_type", first(touchTy, ignoreNulls = true).over(w))
-        .withColumn("last_tid", last(touchId, ignoreNulls = true).over(w))
-        .withColumn("last_type", last(touchTy, ignoreNulls = true).over(w))
-        .filter(col("side") === 1)
-        .select(col("event_id").as("conv_id"), col("user_id"),
-          coalesce(col("first_tid"), lit(-1L)).as("first_tid"),
-          coalesce(col("first_type"), lit("direct")).as("first_type"),
-          coalesce(col("last_tid"), lit(-1L)).as("last_tid"),
-          coalesce(col("last_type"), lit("direct")).as("last_type"))
-        .orderBy("conv_id")
-    }),
-    // Two-proportion A/B significance (the experiment-analysis staple)
-    // with NO float in the decision: arms by user parity, conversion = a
-    // high-value purchase (≥90 — plain "any purchase" saturates both arms
-    // at 100% on this corpus); z² ≥ 1.96² decided by exact integer
-    // cross-multiplication — z²·den = Δ²·N·625 vs 2401·n1·n2·(c)·(N−c)
-    // (1.96² = 2401/625 exactly). One user agg + one 2-row arm agg.,
-    "events_ab_test" -> ((s, dir) => {
-      val users = t(s, dir, "events")
-        .groupBy("user_id")
-        .agg(max(when(col("event_type") === "purchase" &&
-            col("value") >= 90, 1).otherwise(0))
-          .cast("long").as("conv"))
-        .withColumn("arm", (col("user_id") % 2).cast("int"))
-      val arms = users.groupBy("arm")
-        .agg(count(lit(1)).as("n"), sum("conv").as("c"))
-      val a = arms.filter(col("arm") === 0)
-        .select(col("n").as("n1"), col("c").as("c1"))
-      val b = arms.filter(col("arm") === 1)
-        .select(col("n").as("n2"), col("c").as("c2"))
-      a.crossJoin(b)
-        .withColumn("z2_num",
-          expr("(c1*n2 - c2*n1) * (c1*n2 - c2*n1) * (n1+n2) * 625"))
-        .withColumn("z2_den",
-          expr("2401 * n1 * n2 * (c1+c2) * (n1+n2-c1-c2)"))
-        .withColumn("significant", col("z2_num") >= col("z2_den"))
-        .select("n1", "c1", "n2", "c2", "z2_num", "z2_den", "significant")
     }),
     // Radius-of-gyration pieces per trajectory (the human-mobility range
     // statistic): the dwell-run random walk's exact integer positions, ONE
@@ -525,101 +155,6 @@ object QEvents1 {
         .select("user_id", "rec_days", "freq", "cents", "r_q", "f_q", "m_q")
         .orderBy("user_id")
     }),
-    // Hourly OHLC bars per event type (exact cents): open/close by one
-    // full-frame (type,hour)-keyed window on the (ts, event_id) total
-    // order, high/low/volume/turnover by plain aggregation — the
-    // time-series bar compaction every monitoring/market pipeline runs;
-    // key-bounded window, one shuffle.,
-    "events_ohlc" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("event_type"),
-        date_trunc("hour", expr("CAST(ts AS TIMESTAMP)")).as("hr"),
-        expr("unix_micros(CAST(ts AS TIMESTAMP))").as("tus"),
-        col("event_id"), round(col("value") * 100, 0).cast("long").as("cents"))
-      val w = Window.partitionBy("event_type", "hr")
-        .orderBy("tus", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      ev.withColumn("open", first("cents").over(w))
-        .withColumn("close", last("cents").over(w))
-        .groupBy("event_type", "hr")
-        .agg(max("open").as("open"), max("cents").as("high"),
-          min("cents").as("low"), max("close").as("close"),
-          count(lit(1)).as("volume"), sum("cents").as("turnover"))
-        .orderBy("event_type", "hr")
-    }),
-    // Semi-structured columnization (schema-on-read): pull the typed `k`
-    // field out of the JSON props string per row — codegen'd path
-    // extraction, no UDF — then aggregate it like any native column; the
-    // ubiquitous first step over logged/semi-structured 100 TB inputs.,
-    "events_json_cols" -> ((s, dir) => {
-      t(s, dir, "events")
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("k").as("k_sum"),
-          min("k").as("k_min"), max("k").as("k_max"),
-          countDistinct("k").as("k_card"))
-        .orderBy("event_type")
-    }),
-    // Iceberg-style TIME TRAVEL (table.Checkpoint.writeVersioned/readAt):
-    // r1 snapshots the full table, r2 patches buckets 0-3 (price +1000);
-    // reading AS OF r1 vs AS OF r2 shows bucket-granularity snapshot
-    // isolation — per bucket the newest committed write wins, resolved from
-    // the manifest log and pushed down as partition-literal pruning.,
-    "events_haar_energy" -> ((s, dir) => {
-      val w = Window.partitionBy("event_type").orderBy("hr")
-      var cur = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          date_trunc("hour", col("ts")).as("hr"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("idx", (row_number().over(w) - 1).cast("long"))
-        .filter(col("idx") < 128)
-        .select("event_type", "idx", "c")
-      val levels = (1 to 3).map { lvl =>
-        val paired = cur.withColumn("p", expr("idx DIV 2"))
-          .groupBy("event_type", "p")
-          .agg(count(lit(1)).as("m"),
-            sum(when(col("idx") % 2 === 0, col("c")).otherwise(-col("c")))
-              .as("detail"),
-            sum("c").as("approx"))
-          .filter(col("m") === 2)
-        val energy = paired.groupBy("event_type")
-          .agg(count(lit(1)).as("n_coeffs"),
-            sum(expr("detail * detail")).as("energy"))
-          .withColumn("level", lit(lvl))
-        cur = paired.select(col("event_type"), col("p").as("idx"),
-          col("approx").as("c"))
-        energy
-      }
-      levels.reduce(_ unionByName _)
-        .select("event_type", "level", "n_coeffs", "energy")
-        .orderBy("event_type", "level")
-    }),
-    // Pairwise-cosine histogram on sampled anchors (the isotropy read
-    // next to ann_norm_hist): the identical double cosine pipeline as
-    // ann_cosine_topk, bucketed at 0.1 — collapsed mass near 1.0 flags
-    // anisotropic/degenerate embeddings.,
-    "events_winsorize" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-          col("event_id"))
-      val w = Window.partitionBy("event_type").orderBy("cents", "event_id")
-      val wp = Window.partitionBy("event_type")
-      val ranked = ev.withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("n", count(lit(1)).over(wp))
-      val pcts = ranked.groupBy("event_type").agg(
-        max("n").as("n"),
-        max(when(col("rn") === expr("(n - 1) * 5 DIV 100 + 1"),
-          col("cents"))).as("p5"),
-        max(when(col("rn") === expr("(n - 1) * 95 DIV 100 + 1"),
-          col("cents"))).as("p95"))
-      ev.join(pcts, Seq("event_type"))
-        .groupBy("event_type")
-        .agg(max("n").as("n"), max("p5").as("p5"), max("p95").as("p95"),
-          sum(expr("greatest(p5, least(p95, cents))")).as("sum_w"),
-          sum(when(col("cents") < col("p5"), 1L).otherwise(0L)).as("n_lo"),
-          sum(when(col("cents") > col("p95"), 1L).otherwise(0L)).as("n_hi"))
-        .orderBy("event_type")
-    }),
     // Antenna-sector coverage join: per literal RF sector (center + two
     // CCW direction vectors + radius) the walk-fix membership census —
     // pure integer half-plane cross products, no trig anywhere; antennas
@@ -637,304 +172,6 @@ object QEvents1 {
           col("near_event_id").as("view_event_id"),
           col("near_tus").as("view_tus"), col("near_gap"))
         .orderBy("event_id")
-    }),
-    // Spatiotemporal incident join: walk fixes within 50 units AND ±12 h
-    // of each literal incident — the space-AND-time join (accident
-    // exposure / witness query) the pure spatial joins can't express;
-    // incidents broadcast, per-incident rollup. At scale the same
-    // predicate rides a (cell, time-bucket) equi-join.,
-    "events_ks_test" -> ((s, dir) => {
-      val perUser = t(s, dir, "events")
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-      val counts = perUser.groupBy("event_type", "cents")
-        .agg(sum(when(col("user_id") % 2 === 0, 1L).otherwise(0L)).as("k1"),
-          sum(when(col("user_id") % 2 === 1, 1L).otherwise(0L)).as("k2"))
-      val w = Window.partitionBy("event_type").orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wp = Window.partitionBy("event_type")
-      counts
-        .withColumn("c1", sum("k1").over(w))
-        .withColumn("c2", sum("k2").over(w))
-        .withColumn("n1", sum("k1").over(wp))
-        .withColumn("n2", sum("k2").over(wp))
-        .groupBy("event_type")
-        .agg(max("n1").as("n1"), max("n2").as("n2"),
-          max(abs(col("c1") * col("n2") - col("c2") * col("n1")))
-            .as("d_num"))
-        .withColumn("d_den", col("n1") * col("n2"))
-        .withColumn("d_ppm", expr("d_num * 1000000 DIV d_den"))
-        .withColumn("significant",
-          expr("d_num * d_num * 1000000 > 1844164 * (n1 + n2) * n1 * n2"))
-        .orderBy("event_type")
-    }),
-    // Mann–Whitney U on the same per-user split (the rank-sum companion to
-    // events_ks_test's sup-gap): doubled midranks keep tie handling exact
-    // integer — per distinct value, 2·midrank = 2·(count before) + k + 1,
-    // so 2R₁ = Σ k₁·(2·before + k + 1), 2U₁ = 2R₁ − n₁(n₁+1), and the tie
-    // correction Σ(k³−k) ships for the consumer's variance. One value-
-    // ordered window per type.,
-    "events_mannwhitney" -> ((s, dir) => {
-      val perUser = t(s, dir, "events")
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-      val counts = perUser.groupBy("event_type", "cents")
-        .agg(sum(when(col("user_id") % 2 === 0, 1L).otherwise(0L)).as("k1"),
-          sum(when(col("user_id") % 2 === 1, 1L).otherwise(0L)).as("k2"))
-        .withColumn("k", col("k1") + col("k2"))
-      val w = Window.partitionBy("event_type").orderBy("cents")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      counts
-        .withColumn("before", sum("k").over(w) - col("k"))
-        .withColumn("term", expr("k1 * (2 * before + k + 1)"))
-        .groupBy("event_type")
-        .agg(sum("k1").as("n1"), sum("k2").as("n2"),
-          sum("term").as("r1_x2"),
-          sum(expr("k * k * k - k")).as("tie_corr"))
-        .withColumn("u1_x2", expr("r1_x2 - n1 * (n1 + 1)"))
-        .withColumn("u2_x2", expr("2 * n1 * n2 - u1_x2"))
-        .orderBy("event_type")
-    }),
-    // Trajectory × raster composition: every walk fix mapped into the
-    // N36W120 tile and elevation-sampled through the broadcast index —
-    // per trajectory the altitude-exposure rollup (the J4 raster↔vector
-    // join applied to mobility data; fixes wrap into the tile by px/py
-    // mod 600 cell centers).,
-    "events_type_simpson" -> ((s, dir) => {
-      val byType = t(s, dir, "events")
-        .groupBy("user_id", "event_type")
-        .agg(count(lit(1)).as("c"))
-      byType.groupBy("user_id")
-        .agg(sum("c").as("n"), sum(expr("c * (c - 1)")).as("coll"))
-        .filter(col("n") >= 2)
-        .withColumn("simpson_ppm",
-          expr("coll * 1000000 DIV (n * (n - 1))"))
-        .orderBy("user_id")
-    }),
-    // NULL-semantics surface: a NULLIF-derived column through count /
-    // distinct / null-safe lag equality — the three-valued-logic
-    // behaviors (count skips nulls, distinct keeps one, <=> matches
-    // null=null) pinned across engines.,
-    "events_outlier_days" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val wv = Window.partitionBy("event_type").orderBy("c", "day")
-      val wp = Window.partitionBy("event_type")
-      val med = daily.withColumn("rn", row_number().over(wv).cast("long"))
-        .withColumn("n", count(lit(1)).over(wp))
-        .filter(col("rn") === expr("(n + 1) DIV 2"))
-        .select(col("event_type"), col("c").as("med"))
-      val dev = daily.join(med, Seq("event_type"))
-        .withColumn("ad", expr("abs(c - med)"))
-      val wv2 = Window.partitionBy("event_type").orderBy("ad", "day")
-      val mad = dev.withColumn("rn", row_number().over(wv2).cast("long"))
-        .withColumn("n", count(lit(1)).over(wp))
-        .filter(col("rn") === expr("(n + 1) DIV 2"))
-        .select(col("event_type"), col("ad").as("mad"))
-      dev.join(mad, Seq("event_type"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_days"), max("med").as("med"),
-          max("mad").as("mad"),
-          sum(when(col("ad") > col("mad") * 3, 1L).otherwise(0L))
-            .as("n_outlier_days"))
-        .orderBy("event_type")
-    }),
-    // Horizontal-gradient zero-crossing rate (ops.ImageOps.gradientZcr):
-    // sign flips of the row-wise first difference — the spatial-frequency
-    // proxy, media_zcr's read on the raster axis.,
-    "events_ewma" -> ((s, dir) => {
-      val hrly = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          date_trunc("hour", col("ts")).as("hr"))
-        .agg(count(lit(1)).as("c"))
-      hrly.groupBy("event_type")
-        .agg(expr("transform(sort_array(collect_list(struct(hr, c))), " +
-          "x -> x.c)").as("cs"))
-        .select(col("event_type"),
-          expr("CAST(size(cs) AS BIGINT)").as("n_hours"),
-          expr("aggregate(cs, named_struct('s', 0L, 'mx', 0L), " +
-            "(acc, c) -> named_struct(" +
-            "'s', acc.s + (CASE WHEN c - acc.s >= 0 " +
-            "THEN (c - acc.s) DIV 8 " +
-            "ELSE -((acc.s - c + 7) DIV 8) END), " +
-            "'mx', greatest(acc.mx, abs(c - acc.s))))").as("st"))
-        .selectExpr("event_type", "n_hours", "st.s AS ewma_final",
-          "st.mx AS max_dev")
-        .orderBy("event_type")
-    }),
-    // Core-shell histogram: nodes per core number from the h-index
-    // fixpoint — the density stratification view over graph_coreness's
-    // per-node values.,
-    "events_srm" -> ((s, dir) => {
-      t(s, dir, "events")
-        .select("event_type", "user_id").distinct()
-        .groupBy("event_type")
-        .agg(sum(when(col("user_id") % 2 === 0, 1L).otherwise(0L))
-            .as("n1"),
-          sum(when(col("user_id") % 2 === 1, 1L).otherwise(0L)).as("n2"))
-        .withColumn("srm_num", expr("(n1 - n2) * (n1 - n2) * 10000"))
-        .withColumn("srm_thresh", expr("38415 * (n1 + n2)"))
-        .withColumn("mismatch", col("srm_num") > col("srm_thresh"))
-        .orderBy("event_type")
-    }),
-    // Revisit-interval audit: per user the day gaps between returns to
-    // the same cell — routine periodicity (gap ≈ 7 = weekly habit); one
-    // lag window over (user, cell) distinct visit days.,
-    "events_absorb_steps" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pairs = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type"))
-        .withColumn("nxt", lead("event_type", 1).over(w))
-        .filter(col("nxt").isNotNull)
-      val trans = pairs.groupBy(col("event_type").as("s"),
-        col("nxt").as("t2")).agg(count(lit(1)).as("n"))
-      val outs = trans.groupBy("s").agg(sum("n").as("n_s"))
-      val p = trans.join(outs, Seq("s"))
-        .withColumn("p_ppm", expr("n * 1000000 DIV n_s"))
-        .filter(col("s") =!= "purchase")
-      val states = t(s, dir, "events").select(col("event_type").as("t2"))
-        .distinct()
-      var e = states.withColumn("e_milli", lit(0L))
-      for (_ <- 1 to 6) {
-        val acc = p.join(e.select(col("t2"), col("e_milli")), Seq("t2"))
-          .groupBy("s").agg(sum(expr("p_ppm * e_milli")).as("acc"))
-        e = states.join(acc.select(col("s").as("t2"), col("acc")),
-            Seq("t2"), "left")
-          .withColumn("e_milli", expr(
-            "CASE WHEN t2 = 'purchase' THEN 0L " +
-              "ELSE 1000 + acc DIV 1000000 END"))
-          .select("t2", "e_milli")
-      }
-      e.join(outs.select(col("s").as("t2"), col("n_s")), Seq("t2"), "left")
-        .select(col("t2").as("state"), col("e_milli"),
-          coalesce(col("n_s"), lit(0L)).as("n_out"))
-        .orderBy("state")
-    }),
-    // Per-block focus map (ops.ImageOps.focusMap): absolute-Laplacian
-    // energy per ~100² block — the local sharpness/best-frame read under
-    // img_laplacian's global census.,
-    "events_wow_growth" -> ((s, dir) => {
-      val weekly = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          expr("(unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000) DIV 7")
-            .as("week"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("event_type").orderBy("week")
-      weekly.withColumn("prev_n", lag("n", 1).over(w))
-        .withColumn("growth_ppm", expr(
-          "CASE WHEN prev_n IS NULL OR prev_n = 0 THEN NULL " +
-            "ELSE (n - prev_n) * 1000000 DIV prev_n END"))
-        .orderBy("event_type", "week")
-    }),
-    // Character-4-gram Jaccard near-dup over the part-name head vocab —
-    // the SHORT-string granularity word shingles can't reach (typo/brand
-    // variants); exact set arithmetic on the distinct vocabulary.,
-    "events_effect_size" -> ((s, dir) => {
-      val perUser = t(s, dir, "events")
-        .groupBy(col("event_type"), col("user_id"))
-        .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-        .withColumn("arm", (col("user_id") % 2).cast("int"))
-      perUser.groupBy("event_type")
-        .agg(sum(when(col("arm") === 0, 1L).otherwise(0L)).as("n1"),
-          sum(when(col("arm") === 0, col("cents"))).as("s1"),
-          sum(when(col("arm") === 0, expr("cents * cents"))).as("ss1"),
-          sum(when(col("arm") === 1, 1L).otherwise(0L)).as("n2"),
-          sum(when(col("arm") === 1, col("cents"))).as("s2"),
-          sum(when(col("arm") === 1, expr("cents * cents"))).as("ss2"))
-        .withColumn("mean_diff_num", expr("s1 * n2 - s2 * n1"))
-        .withColumn("var1_num", expr("n1 * ss1 - s1 * s1"))
-        .withColumn("var2_num", expr("n2 * ss2 - s2 * s2"))
-        .orderBy("event_type")
-    }),
-    // Pairwise sector co-coverage: fixes inside BOTH sectors of each
-    // antenna pair — the handover/interference matrix over
-    // geo_cover_redundancy's per-fix counts.,
-    "events_theil_sen" -> ((s, dir) => {
-      val hrly = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hr"))
-        .agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy("event_type").orderBy("hr")
-      val pts = hrly.select(col("event_type"),
-        row_number().over(w).cast("long").as("i"), col("c"))
-      val pairs = pts.as("a").join(pts.as("b"),
-          col("a.event_type") === col("b.event_type") &&
-            col("a.i") < col("b.i"))
-        .select(col("a.event_type").as("event_type"),
-          expr("((b.c - a.c + 100000 * (b.i - a.i)) * 1000000) DIV " +
-            "(b.i - a.i) - 100000000000").as("slope_ppm"))
-      val wv = Window.partitionBy("event_type").orderBy("slope_ppm")
-      val wp = Window.partitionBy("event_type")
-      pairs.withColumn("rn", row_number().over(wv).cast("long"))
-        .withColumn("np", count(lit(1)).over(wp))
-        .filter(col("rn") === expr("(np + 1) DIV 2"))
-        .join(pts.groupBy("event_type").agg(max("i").as("n_pts")),
-          Seq("event_type"))
-        .select(col("event_type"), col("n_pts"), col("np").as("n_pairs"),
-          col("slope_ppm"))
-        .orderBy("event_type")
-    }),
-    // Soundex blocking census (the record-linkage blocking pass): every
-    // part-name head word coded by the shared translate/collapse chain
-    // (soundexSql — NO UDF, pure codegen'd string expressions), then per
-    // block the size, distinct-word count and exact C(sz,2) candidate-pair
-    // cost — the same pre-join skew read as dedup_lsh_skew, for the
-    // phonetic-key join family.,
-    "events_ordinal_patterns" -> ((s, dir) => {
-      val hrly = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hr"))
-        .agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy("event_type").orderBy("hr")
-      val tri = hrly
-        .select(col("event_type"), col("c").as("v0"),
-          lead("c", 1).over(w).as("v1"), lead("c", 2).over(w).as("v2"))
-        .filter(col("v1").isNotNull && col("v2").isNotNull)
-      val r0 = when(col("v1") < col("v0"), 1).otherwise(0) +
-        when(col("v2") < col("v0"), 1).otherwise(0)
-      val r1 = when(col("v0") <= col("v1"), 1).otherwise(0) +
-        when(col("v2") < col("v1"), 1).otherwise(0)
-      val r2 = when(col("v0") <= col("v2"), 1).otherwise(0) +
-        when(col("v1") <= col("v2"), 1).otherwise(0)
-      tri.withColumn("pattern", (r0 * 100 + r1 * 10 + r2).cast("int"))
-        .groupBy("event_type", "pattern")
-        .agg(count(lit(1)).as("n"))
-        .orderBy("event_type", "pattern")
-    }),
-    // Depth-bounded BOM explosion (ops.Graph.bomRollup): the recursive-CTE
-    // transitive rollup Spark SQL lacks, unrolled as 3 keyed frontier
-    // joins over a DAG (parent < child ids guarantee acyclicity); per root
-    // the distinct-reachable count + exact Σ path-quantity-product. The
-    // where-used / cost-explosion primitive; DuckDB replays it as a true
-    // WITH RECURSIVE with the same depth guard.,
-    "events_decay_score" -> ((s, dir) => {
-      val ev = t(s, dir, "events").select(col("user_id"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("cents"),
-        expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000")
-          .as("eday"))
-      val mx = ev.agg(max("eday").as("mxd"))
-      ev.crossJoin(broadcast(mx))
-        .withColumn("k", expr("CAST((mxd - eday) DIV 7 AS INT)"))
-        .withColumn("dec", expr("shiftright(cents, k)"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n"), sum("cents").as("raw_cents"),
-          sum("dec").as("decayed_cents"))
-        .orderBy("user_id")
-    }),
-    // Per-language corpus profile: docs, words, chars, source spread and
-    // the milli chars-per-doc density — the first read of a multilingual
-    // mix, off the so-far-unused lang column.,
-    "events_fano" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("user_id"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      daily.groupBy("user_id")
-        .agg(count(lit(1)).as("n_days"), sum("c").as("s"),
-          sum(expr("c * c")).as("ss"))
-        .filter(col("n_days") >= 2)
-        .withColumn("fano_milli",
-          expr("(n_days * ss - s * s) * 1000 DIV ((n_days - 1) * s)"))
-        .orderBy("user_id")
     }),
     // Precision of the MinHash band join vs EXACT Jaccard ≥ 0.5 truth on
     // the gate subset — the other half of dedup_minhash_recall's PR pair;
@@ -1034,17 +271,6 @@ object QEvents1 {
            CAST(sum(x*x) AS BIGINT) AS sxx, CAST(sum(y*y) AS BIGINT) AS syy,
            CAST(sum(x*y) AS BIGINT) AS sxy
          FROM p GROUP BY 1, 2 ORDER BY 1, 2""",
-    // raw lagged dot product of the two hourly count series,
-    "events_xcorr" ->
-      """WITH e AS (SELECT event_type,
-             epoch_us(date_trunc('hour', ts)) // 3600000000 AS hr FROM events),
-         a AS (SELECT hr, count(*) AS na FROM e WHERE event_type = 'view' GROUP BY 1),
-         b AS (SELECT hr, count(*) AS nb FROM e WHERE event_type = 'click' GROUP BY 1),
-         l AS (SELECT range AS lag FROM range(-3, 4))
-         SELECT l.lag, CAST(count(*) AS BIGINT) AS n_hours,
-           CAST(sum(a.na * b.nb) AS BIGINT) AS dot
-         FROM a CROSS JOIN l JOIN b ON b.hr = a.hr + l.lag
-         GROUP BY 1 ORDER BY 1""",
     "events_rolling_z" ->
       """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hr, count(*) AS n,
              CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS cents
@@ -1064,102 +290,6 @@ object QEvents1 {
       """SELECT date_trunc('hour', ts) AS hr, event_type, count(*) AS n,
          round(sum(value), 2) AS sum_value
          FROM events GROUP BY 1, 2 ORDER BY hr, event_type""",
-    // global exact moments, cross-multiplied 3-sigma rule + signed 8-run,
-    "events_spc" ->
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hr,
-             CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),
-         m AS (SELECT event_type, hr, c,
-             CAST(count(*) OVER p AS BIGINT) AS n,
-             CAST(sum(c) OVER p AS BIGINT) AS sc,
-             CAST(sum(c*c) OVER p AS BIGINT) AS sq
-           FROM h WINDOW p AS (PARTITION BY event_type)),
-         d AS (SELECT *, n*c - sc AS dev,
-             CAST(sign(n*c - sc) AS BIGINT) AS side FROM m),
-         f AS (SELECT *,
-             CASE WHEN n >= 2 AND dev*dev*(n-1) > 9*n*(n*sq - sc*sc)
-                  THEN 1 ELSE 0 END AS r1,
-             CAST(sum(side) OVER w8 AS BIGINT) AS run8,
-             CAST(count(*) OVER w8 AS BIGINT) AS cnt8
-           FROM d WINDOW w8 AS (PARTITION BY event_type ORDER BY hr
-             ROWS BETWEEN 7 PRECEDING AND CURRENT ROW))
-         SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours,
-           CAST(sum(r1) AS BIGINT) AS n_r1,
-           CAST(sum(CASE WHEN cnt8 = 8 AND abs(run8) = 8 THEN 1 ELSE 0 END) AS BIGINT) AS n_r4
-         FROM f GROUP BY 1 ORDER BY event_type""",
-    // first-order-month cohorts, cumulative cents by age,
-    "events_cohort_ltv" ->
-      """WITH o AS (SELECT o_custkey,
-             CAST(year(o_orderdate) * 12 + month(o_orderdate) AS BIGINT) AS m,
-             CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS cents
-           FROM orders),
-         f AS (SELECT o_custkey, min(m) AS m0 FROM o GROUP BY 1),
-         j AS (SELECT o.o_custkey, f.m0 AS cohort, o.m - f.m0 AS age, o.cents
-           FROM o JOIN f ON o.o_custkey = f.o_custkey),
-         mat AS (SELECT cohort, age, CAST(count(*) AS BIGINT) AS n_orders,
-             CAST(sum(cents) AS BIGINT) AS cents
-           FROM j GROUP BY 1, 2)
-         SELECT cohort, age, n_orders, cents,
-           CAST(sum(cents) OVER (PARTITION BY cohort ORDER BY age
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_cents
-         FROM mat ORDER BY cohort, age""",
-    // prefix-sum objective in the defined integer-division form, argmax
-    // with earliest-split ties,
-    "events_changepoint" ->
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hr,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),
-         p AS (SELECT event_type, hr, c,
-             CAST(row_number() OVER w AS BIGINT) AS i,
-             CAST(sum(c) OVER (PARTITION BY event_type ORDER BY hr
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS s1,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
-             CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS stot
-           FROM h WINDOW w AS (PARTITION BY event_type ORDER BY hr)),
-         cand AS (SELECT *,
-             (s1*s1) // i + ((stot-s1)*(stot-s1)) // (n - i) AS obj
-           FROM p WHERE i < n),
-         best AS (SELECT *, row_number() OVER (PARTITION BY event_type
-             ORDER BY obj DESC, i) AS rn FROM cand)
-         SELECT event_type, n AS n_hours, i AS best_idx, hr AS best_hr,
-           obj, obj - (stot*stot) // n AS gain
-         FROM best WHERE rn = 1 ORDER BY event_type""",
-    // rank-desc running share, 80% frontier by cross-multiplication,
-    "events_pareto_n80" ->
-      """WITH u AS (SELECT event_type, user_id,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),
-         r AS (SELECT event_type, user_id, c,
-             CAST(row_number() OVER w AS BIGINT) AS rk,
-             CAST(sum(c) OVER (PARTITION BY event_type ORDER BY c DESC, user_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-             CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS tot,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n_users
-           FROM u WINDOW w AS (PARTITION BY event_type ORDER BY c DESC, user_id))
-         SELECT event_type, n_users, tot, CAST(min(rk) AS BIGINT) AS n80
-         FROM r WHERE 5 * cum >= 4 * tot
-         GROUP BY event_type, n_users, tot
-         ORDER BY event_type""",
-    // hour-of-day fold + flat-profile index in exact ppm,
-    "events_seasonality" ->
-      """WITH e AS (SELECT event_type, CAST(hour(ts) AS BIGINT) AS hod,
-             CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-         h AS (SELECT event_type, hod, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(cents) AS BIGINT) AS cents
-           FROM e GROUP BY 1, 2),
-         t AS (SELECT event_type, CAST(sum(cents) AS BIGINT) AS tot_cents
-           FROM e GROUP BY 1)
-         SELECT h.event_type, h.hod, h.n, h.cents,
-           (h.cents * 24 * 1000000) // t.tot_cents AS idx_ppm
-         FROM h JOIN t ON h.event_type = t.event_type
-         ORDER BY h.event_type, h.hod""",
-    "events_cube" ->
-      """WITH e AS (SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-             CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events)
-         SELECT event_type, day, CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(cents) AS BIGINT) AS sum_cents
-         FROM e GROUP BY CUBE (event_type, day)
-         ORDER BY event_type, day""",
     "events_gap_fill" ->
       """WITH b AS (SELECT event_type,
            (epoch_us(ts) // 3600000000) * 3600000000 AS bucket_us,
@@ -1178,42 +308,6 @@ object QEvents1 {
            obs_cents IS NULL AS filled FROM j)
          SELECT event_type, bucket_us, cents, filled FROM f
          ORDER BY event_type, bucket_us""",
-    "events_calibration" ->
-      """WITH pre AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_pre,
-           CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_pre_purch
-           FROM events WHERE ts < TIMESTAMP '2024-01-16' GROUP BY 1),
-         post AS (SELECT user_id,
-           CAST(max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-             AS BIGINT) AS converted
-           FROM events WHERE ts >= TIMESTAMP '2024-01-16' GROUP BY 1),
-         j AS (SELECT pre.user_id,
-             n_pre_purch * 1000000 // n_pre AS share_ppm, converted
-           FROM pre JOIN post ON post.user_id = pre.user_id)
-         SELECT CAST(share_ppm // 100000 AS INT) AS bin,
-           CAST(count(*) AS BIGINT) AS n_users,
-           CAST(sum(share_ppm) AS BIGINT) AS sum_share_ppm,
-           CAST(sum(converted) AS BIGINT) AS n_converted
-         FROM j GROUP BY 1 ORDER BY bin""",
-    // the phash corpus CTEs, full-pairwise xor popcount,
-    "events_did" ->
-      """WITH e AS (SELECT event_type, user_id % 2 = 0 AS treated,
-           ts >= TIMESTAMP '2024-01-16' AS post,
-           CAST(round(value * 100) AS BIGINT) AS cents FROM events),
-         a AS (SELECT event_type,
-             CAST(sum(CASE WHEN treated AND post THEN 1 ELSE 0 END) AS BIGINT) AS n_tp,
-             CAST(sum(CASE WHEN treated AND post THEN cents END) AS BIGINT) AS s_tp,
-             CAST(sum(CASE WHEN treated AND NOT post THEN 1 ELSE 0 END) AS BIGINT) AS n_t0,
-             CAST(sum(CASE WHEN treated AND NOT post THEN cents END) AS BIGINT) AS s_t0,
-             CAST(sum(CASE WHEN NOT treated AND post THEN 1 ELSE 0 END) AS BIGINT) AS n_cp,
-             CAST(sum(CASE WHEN NOT treated AND post THEN cents END) AS BIGINT) AS s_cp,
-             CAST(sum(CASE WHEN NOT treated AND NOT post THEN 1 ELSE 0 END) AS BIGINT) AS n_c0,
-             CAST(sum(CASE WHEN NOT treated AND NOT post THEN cents END) AS BIGINT) AS s_c0
-           FROM e GROUP BY 1)
-         SELECT event_type, n_tp, s_tp, n_t0, s_t0, n_cp, s_cp, n_c0, s_c0,
-           (s_tp * 1000 // n_tp - s_t0 * 1000 // n_t0)
-             - (s_cp * 1000 // n_cp - s_c0 * 1000 // n_c0) AS did_milli
-         FROM a ORDER BY event_type""",
     // word counts vs source marginals, exact cross-product score, top-5,
     "events_interval_union" ->
       """WITH iv AS (SELECT user_id, epoch_us(ts) AS s,
@@ -1234,132 +328,6 @@ object QEvents1 {
            CAST(sum(ee - ss) AS BIGINT) AS covered,
            CAST(max(ee) - min(ss) AS BIGINT) AS span
          FROM segs GROUP BY 1 ORDER BY user_id""",
-    // ±1 sweep points, running sum with ends-before-starts tie order,
-    // peak + earliest instant attaining it,
-    "events_token_bucket" -> {
-      def refill = "least(CAST(50000000 AS BIGINT), acc.tok + " +
-        "CASE WHEN acc.p < CAST(0 AS BIGINT) THEN CAST(0 AS BIGINT) " +
-        "ELSE x.p - acc.p END)"
-      s"""WITH e AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id
-           FROM events WHERE user_id < 100),
-         l AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-             list(struct_pack(ts_us := ts_us, event_id := event_id)
-               ORDER BY ts_us, event_id) AS evs
-           FROM e GROUP BY 1),
-         f AS (SELECT user_id, n_events,
-             list_reduce(list_prepend(
-               struct_pack(p := CAST(-1 AS BIGINT), tok := CAST(50000000 AS BIGINT), rej := CAST(0 AS BIGINT)),
-               list_transform(evs, y -> struct_pack(p := y.ts_us, tok := CAST(0 AS BIGINT), rej := CAST(0 AS BIGINT)))),
-               (acc, x) -> struct_pack(
-                 p := x.p,
-                 tok := CASE WHEN $refill >= CAST(10000000 AS BIGINT)
-                        THEN $refill - CAST(10000000 AS BIGINT) ELSE $refill END,
-                 rej := acc.rej + CASE WHEN $refill >= CAST(10000000 AS BIGINT)
-                        THEN CAST(0 AS BIGINT) ELSE CAST(1 AS BIGINT) END)) AS st
-           FROM l)
-         SELECT user_id, n_events, st.rej AS n_rejected,
-           st.tok AS tokens_left_us
-         FROM f ORDER BY user_id"""
-    },
-    // the same Jacobson fold as a per-user recursive CTE (one event per
-    // round, all users advance jointly). NOT list_reduce: DuckDB 1.0.0's
-    // list_reduce lets later struct_pack fields observe the CURRENT
-    // step's already-updated accumulator fields on some steps (probed:
-    // a field reading acc.s after s := ... sees the new s), which breaks
-    // any two-field state machine; the recursive CTE reads the whole old
-    // state row, so the fold replays exactly.,
-    "events_concurrency" ->
-      """WITH iv AS (SELECT event_type, event_id, epoch_us(ts) AS st,
-           epoch_us(ts) + ((event_id % 7) + 1) * 120000000 AS en FROM events),
-         pts AS (SELECT event_type, st AS t, CAST(1 AS BIGINT) AS delta, event_id FROM iv
-           UNION ALL
-           SELECT event_type, en, CAST(-1 AS BIGINT), event_id FROM iv),
-         c AS (SELECT event_type, t, delta,
-             CAST(sum(delta) OVER (PARTITION BY event_type ORDER BY t, delta, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cur
-           FROM pts),
-         m AS (SELECT event_type, t, delta, cur,
-             max(cur) OVER (PARTITION BY event_type) AS mx FROM c)
-         SELECT event_type,
-           CAST(sum(CASE WHEN delta = 1 THEN 1 END) AS BIGINT) AS n_intervals,
-           max(cur) AS peak_concurrency,
-           min(CASE WHEN cur = mx THEN t END) AS peak_at
-         FROM m GROUP BY 1 ORDER BY event_type""",
-    // trailing 1h range-frame count per user, then the per-user max
-    // token bucket: identical µs-integer fold via list_reduce with a
-    // prepended init sentinel,
-    "events_srtt" ->
-      """WITH RECURSIVE e AS MATERIALIZED (
-           SELECT user_id, epoch_us(ts) AS t,
-             row_number() OVER (PARTITION BY user_id
-               ORDER BY epoch_us(ts), event_id) AS i
-           FROM events WHERE user_id < 100),
-         n AS (SELECT user_id, CAST(count(*) AS BIGINT) AS cnt FROM e GROUP BY 1),
-         st(user_id, i, p, srtt, var) AS (
-           SELECT user_id, 1, t, CAST(-1 AS BIGINT), CAST(0 AS BIGINT)
-           FROM e WHERE i = 1
-           UNION ALL
-           SELECT st.user_id, st.i + 1, e.t,
-             CASE WHEN st.srtt < 0 THEN e.t - st.p
-                  ELSE (7 * st.srtt + (e.t - st.p)) // 8 END,
-             CASE WHEN st.srtt < 0 THEN (e.t - st.p) // 2
-                  ELSE (3 * st.var + abs((e.t - st.p) - st.srtt)) // 4 END
-           FROM st JOIN e ON e.user_id = st.user_id AND e.i = st.i + 1)
-         SELECT st.user_id, n.cnt - 1 AS n_gaps, st.srtt AS srtt_us,
-           st.var AS rttvar_us, st.srtt + 4 * st.var AS rto_us
-         FROM st JOIN n ON n.user_id = st.user_id AND st.i = n.cnt
-         ORDER BY st.user_id""",
-    "events_peak_rate" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS tus FROM events),
-         c AS (SELECT user_id,
-             CAST(count(*) OVER (PARTITION BY user_id ORDER BY tus
-               RANGE BETWEEN 3599999999 PRECEDING AND CURRENT ROW) AS BIGINT) AS cnt
-           FROM ev)
-         SELECT user_id, CAST(max(cnt) AS BIGINT) AS peak_1h,
-           CAST(count(*) AS BIGINT) AS n_events
-         FROM c GROUP BY 1 ORDER BY user_id""",
-    // running first/last IGNORE NULLS over the merged touch+conversion
-    // stream; touches (side 0) sort before a same-instant conversion,
-    "events_attribution" ->
-      """WITH ev AS (SELECT user_id, ts, event_id,
-           CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS side,
-           event_type
-           FROM events WHERE event_type IN ('click', 'view', 'purchase')),
-         wnd AS (SELECT *,
-             first_value(CASE WHEN side = 0 THEN event_id END IGNORE NULLS)
-               OVER w AS first_tid,
-             first_value(CASE WHEN side = 0 THEN event_type END IGNORE NULLS)
-               OVER w AS first_type,
-             last_value(CASE WHEN side = 0 THEN event_id END IGNORE NULLS)
-               OVER w AS last_tid,
-             last_value(CASE WHEN side = 0 THEN event_type END IGNORE NULLS)
-               OVER w AS last_type
-           FROM ev
-           WINDOW w AS (PARTITION BY user_id ORDER BY ts, side, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-         SELECT event_id AS conv_id, user_id,
-           COALESCE(first_tid, -1) AS first_tid,
-           COALESCE(first_type, 'direct') AS first_type,
-           COALESCE(last_tid, -1) AS last_tid,
-           COALESCE(last_type, 'direct') AS last_type
-         FROM wnd WHERE side = 1 ORDER BY conv_id""",
-    // exact integer cross-multiplied two-proportion z² decision,
-    "events_ab_test" ->
-      """WITH u AS (SELECT user_id,
-           max(CASE WHEN event_type = 'purchase' AND value >= 90
-               THEN 1 ELSE 0 END) AS conv
-           FROM events GROUP BY 1),
-         arms AS (SELECT CAST(user_id % 2 AS INT) AS arm,
-             CAST(count(*) AS BIGINT) AS n, CAST(sum(conv) AS BIGINT) AS c
-           FROM u GROUP BY 1),
-         a AS (SELECT n AS n1, c AS c1 FROM arms WHERE arm = 0),
-         b AS (SELECT n AS n2, c AS c2 FROM arms WHERE arm = 1)
-         SELECT n1, c1, n2, c2,
-           CAST((c1*n2 - c2*n1) * (c1*n2 - c2*n1) * (n1+n2) * 625 AS BIGINT) AS z2_num,
-           CAST(2401 * n1 * n2 * (c1+c2) * (n1+n2-c1-c2) AS BIGINT) AS z2_den,
-           (c1*n2 - c2*n1) * (c1*n2 - c2*n1) * (n1+n2) * 625 >=
-             2401 * n1 * n2 * (c1+c2) * (n1+n2-c1-c2) AS significant
-         FROM a, b""",
     // the dwell walk's exact positions, one window + one agg, exact pieces,
     "events_rfm" ->
       """WITH ev AS (SELECT user_id, epoch_us(ts) AS tus,
@@ -1376,77 +344,6 @@ object QEvents1 {
            CAST(ntile(5) OVER (ORDER BY freq DESC, user_id ASC) AS INTEGER) AS f_q,
            CAST(ntile(5) OVER (ORDER BY cents DESC, user_id ASC) AS INTEGER) AS m_q
          FROM u ORDER BY user_id""",
-    // full-frame first/last on the (ts,event_id) order, then plain aggs,
-    "events_ohlc" ->
-      """WITH ev AS (SELECT event_type, date_trunc('hour', ts) AS hr,
-           epoch_us(ts) AS tus, event_id,
-           CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events),
-         f AS (SELECT *,
-             first_value(cents) OVER w AS open,
-             last_value(cents) OVER w AS close
-           FROM ev WINDOW w AS (PARTITION BY event_type, hr
-             ORDER BY tus, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING))
-         SELECT event_type, hr, CAST(max(open) AS BIGINT) AS open,
-           CAST(max(cents) AS BIGINT) AS high,
-           CAST(min(cents) AS BIGINT) AS low,
-           CAST(max(close) AS BIGINT) AS close,
-           CAST(count(*) AS BIGINT) AS volume,
-           CAST(sum(cents) AS BIGINT) AS turnover
-         FROM f GROUP BY 1, 2 ORDER BY event_type, hr""",
-    // unnest token counts, Simpson's Σc(c−1)/(n(n−1)) in truncating ppm,
-    "events_json_cols" ->
-      """WITH ev AS (SELECT event_type,
-           CAST(json_extract_string(props, '$.k') AS BIGINT) AS k FROM events)
-         SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(k) AS BIGINT) AS k_sum, CAST(min(k) AS BIGINT) AS k_min,
-           CAST(max(k) AS BIGINT) AS k_max,
-           CAST(count(DISTINCT k) AS BIGINT) AS k_card
-         FROM ev GROUP BY 1 ORDER BY event_type""",
-    // the pivot restated as explicit CASE sums; absent cells NULL,
-    "events_haar_energy" -> {
-      val lvls = (1 to 3).map { l =>
-        s"""l$l AS (SELECT event_type, idx // 2 AS p,
-            CAST(count(*) AS BIGINT) AS m,
-            CAST(sum(CASE WHEN idx % 2 = 0 THEN c ELSE -c END) AS BIGINT) AS detail,
-            CAST(sum(c) AS BIGINT) AS approx
-          FROM s${l - 1} GROUP BY 1, 2),
-         e$l AS (SELECT event_type, $l AS level,
-            CAST(count(*) AS BIGINT) AS n_coeffs,
-            CAST(sum(detail * detail) AS BIGINT) AS energy
-          FROM l$l WHERE m = 2 GROUP BY 1),
-         s$l AS (SELECT event_type, p AS idx, approx AS c
-          FROM l$l WHERE m = 2)"""
-      }.mkString(",\n         ")
-      s"""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hr,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         s0 AS (SELECT * FROM (SELECT event_type,
-             CAST(row_number() OVER (PARTITION BY event_type ORDER BY hr)
-               - 1 AS BIGINT) AS idx, c FROM h) q WHERE idx < 128),
-         $lvls
-         SELECT * FROM (SELECT * FROM e1 UNION ALL SELECT * FROM e2
-           UNION ALL SELECT * FROM e3)
-         ORDER BY event_type, level"""
-    },
-    // identical double cosine pipeline, 0.1 buckets,
-    "events_winsorize" ->
-      """WITH ev AS (SELECT event_type,
-           CAST(round(value * 100) AS BIGINT) AS cents, event_id FROM events),
-         r AS (SELECT event_type, cents,
-             CAST(row_number() OVER (PARTITION BY event_type
-               ORDER BY cents, event_id) AS BIGINT) AS rn,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-           FROM ev),
-         p AS (SELECT event_type, max(n) AS n,
-             max(CASE WHEN rn = (n - 1) * 5 // 100 + 1 THEN cents END) AS p5,
-             max(CASE WHEN rn = (n - 1) * 95 // 100 + 1 THEN cents END) AS p95
-           FROM r GROUP BY 1)
-         SELECT ev.event_type, max(p.n) AS n, max(p5) AS p5, max(p95) AS p95,
-           CAST(sum(greatest(p5, least(p95, cents))) AS BIGINT) AS sum_w,
-           CAST(sum(CASE WHEN cents < p5 THEN 1 ELSE 0 END) AS BIGINT) AS n_lo,
-           CAST(sum(CASE WHEN cents > p95 THEN 1 ELSE 0 END) AS BIGINT) AS n_hi
-         FROM ev JOIN p ON p.event_type = ev.event_type
-         GROUP BY 1 ORDER BY ev.event_type""",
     // the walk cumsum + sector VALUES, identical cross-product membership,
     "events_asof_nearest" ->
       """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS tus,
@@ -1468,257 +365,6 @@ object QEvents1 {
          SELECT event_id, user_id, tus, view_event_id, vtus AS view_tus,
            vtus - tus AS near_gap
          FROM r WHERE rn = 1 ORDER BY event_id""",
-    // trained coarse assignment (min d2, low-c ties), micro floor,
-    // nearest-rank median, 2× flags,
-    "events_ks_test" ->
-      """WITH pu AS (SELECT event_type, user_id,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-           FROM events GROUP BY 1, 2),
-         ct AS (SELECT event_type, cents,
-             CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-             CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS k2
-           FROM pu GROUP BY 1, 2),
-         cum AS (SELECT event_type,
-             CAST(sum(k1) OVER (PARTITION BY event_type ORDER BY cents) AS BIGINT) AS c1,
-             CAST(sum(k2) OVER (PARTITION BY event_type ORDER BY cents) AS BIGINT) AS c2,
-             CAST(sum(k1) OVER (PARTITION BY event_type) AS BIGINT) AS n1,
-             CAST(sum(k2) OVER (PARTITION BY event_type) AS BIGINT) AS n2
-           FROM ct),
-         agg AS (SELECT event_type, max(n1) AS n1, max(n2) AS n2,
-             CAST(max(abs(c1 * n2 - c2 * n1)) AS BIGINT) AS d_num
-           FROM cum GROUP BY 1)
-         SELECT event_type, n1, n2, d_num, n1 * n2 AS d_den,
-           d_num * 1000000 // (n1 * n2) AS d_ppm,
-           d_num * d_num * 1000000 > 1844164 * (n1 + n2) * n1 * n2 AS significant
-         FROM agg ORDER BY event_type""",
-    // doubled midranks: per distinct value 2·midrank = 2·before + k + 1;
-    // window sums cast back from DuckDB's HUGEINT,
-    "events_mannwhitney" ->
-      """WITH pu AS (SELECT event_type, user_id,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-           FROM events GROUP BY 1, 2),
-         ct AS (SELECT event_type, cents,
-             CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END) AS BIGINT) AS k1,
-             CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS k2
-           FROM pu GROUP BY 1, 2),
-         cum AS (SELECT event_type, k1, k2, k1 + k2 AS k,
-             CAST(sum(k1 + k2) OVER (PARTITION BY event_type ORDER BY cents)
-               AS BIGINT) - (k1 + k2) AS bef
-           FROM ct),
-         agg AS (SELECT event_type,
-             CAST(sum(k1) AS BIGINT) AS n1, CAST(sum(k2) AS BIGINT) AS n2,
-             CAST(sum(k1 * (2 * bef + k + 1)) AS BIGINT) AS r1_x2,
-             CAST(sum(k * k * k - k) AS BIGINT) AS tie_corr
-           FROM cum GROUP BY 1)
-         SELECT event_type, n1, n2, r1_x2, tie_corr,
-           r1_x2 - n1 * (n1 + 1) AS u1_x2,
-           2 * n1 * n2 - (r1_x2 - n1 * (n1 + 1)) AS u2_x2
-         FROM agg ORDER BY event_type""",
-    // both DP lattices (shared trajectory synth), pair-of-pairs
-    // concordance,
-    "events_type_simpson" ->
-      """WITH bt AS (SELECT user_id, event_type,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         a AS (SELECT user_id, CAST(sum(c) AS BIGINT) AS n,
-             CAST(sum(c * (c - 1)) AS BIGINT) AS coll
-           FROM bt GROUP BY 1)
-         SELECT user_id, n, coll,
-           coll * 1000000 // (n * (n - 1)) AS simpson_ppm
-         FROM a WHERE n >= 2 ORDER BY user_id""",
-    // NULLIF column through count/distinct/null-safe comparisons,
-    "events_outlier_days" ->
-      """WITH d AS (SELECT event_type, date_trunc('day', ts) AS day,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         r1 AS (SELECT event_type, c, day,
-             CAST(row_number() OVER (PARTITION BY event_type
-               ORDER BY c, day) AS BIGINT) AS rn,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-           FROM d),
-         med AS (SELECT event_type, c AS med FROM r1
-           WHERE rn = (n + 1) // 2),
-         dev AS (SELECT d.event_type, d.day, d.c, med,
-             abs(d.c - med) AS ad
-           FROM d JOIN med ON med.event_type = d.event_type),
-         r2 AS (SELECT event_type, ad, day,
-             CAST(row_number() OVER (PARTITION BY event_type
-               ORDER BY ad, day) AS BIGINT) AS rn,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-           FROM dev),
-         mad AS (SELECT event_type, ad AS mad FROM r2
-           WHERE rn = (n + 1) // 2)
-         SELECT dev.event_type, CAST(count(*) AS BIGINT) AS n_days,
-           CAST(max(dev.med) AS BIGINT) AS med,
-           CAST(max(mad.mad) AS BIGINT) AS mad,
-           CAST(sum(CASE WHEN dev.ad > mad.mad * 3 THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_outlier_days
-         FROM dev JOIN mad ON mad.event_type = dev.event_type
-         GROUP BY 1 ORDER BY dev.event_type""",
-    // per-row nonzero-gradient sign runs, lag flips,
-    "events_ewma" ->
-      """WITH RECURSIVE h AS (SELECT event_type,
-           date_trunc('hour', ts) AS hr, CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),
-         s0 AS (SELECT event_type, c, CAST(row_number() OVER (
-             PARTITION BY event_type ORDER BY hr) AS BIGINT) AS i
-           FROM h),
-         n AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_hours
-           FROM s0 GROUP BY 1),
-         r(event_type, i, s, mx) AS (
-           SELECT event_type, CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-             CAST(0 AS BIGINT) FROM n
-           UNION ALL
-           SELECT r.event_type, r.i + 1,
-             r.s + (CASE WHEN s0.c - r.s >= 0 THEN (s0.c - r.s) // 8
-               ELSE -((r.s - s0.c + 7) // 8) END),
-             greatest(r.mx, abs(s0.c - r.s))
-           FROM r JOIN s0 ON s0.event_type = r.event_type
-             AND s0.i = r.i + 1)
-         SELECT r.event_type, n.n_hours, r.s AS ewma_final,
-           r.mx AS max_dev
-         FROM r JOIN n ON n.event_type = r.event_type
-           AND r.i = n.n_hours
-         ORDER BY r.event_type""",
-    // the walk wrapped into N36W120 cell centers, closed-form nearest
-    // elevation, per-traj rollup,
-    "events_srm" ->
-      """WITH a AS (SELECT DISTINCT event_type, user_id FROM events),
-         g AS (SELECT event_type,
-             CAST(sum(CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END)
-               AS BIGINT) AS n1,
-             CAST(sum(CASE WHEN user_id % 2 = 1 THEN 1 ELSE 0 END)
-               AS BIGINT) AS n2
-           FROM a GROUP BY 1)
-         SELECT event_type, n1, n2,
-           (n1 - n2) * (n1 - n2) * 10000 AS srm_num,
-           38415 * (n1 + n2) AS srm_thresh,
-           (n1 - n2) * (n1 - n2) * 10000 > 38415 * (n1 + n2) AS mismatch
-         FROM g ORDER BY event_type""",
-    // distinct (user, cell, day) visits, per-cell day gaps,
-    "events_absorb_steps" -> {
-      val rounds = (1 to 6).map { k =>
-        s"""a$k AS (SELECT s, CAST(sum(p_ppm * e_milli) AS BIGINT) AS acc
-             FROM p JOIN e${k - 1} ON e${k - 1}.t2 = p.t2 GROUP BY 1),
-           e$k AS (SELECT st.t2,
-             CASE WHEN st.t2 = 'purchase' THEN CAST(0 AS BIGINT)
-                  ELSE 1000 + acc // 1000000 END AS e_milli
-             FROM st LEFT JOIN a$k ON a$k.s = st.t2)"""
-      }.mkString(",\n         ")
-      s"""WITH pr AS (SELECT user_id, event_id, epoch_us(ts) AS tus,
-           event_type FROM events),
-         pairs AS (SELECT event_type AS s,
-             lead(event_type) OVER (PARTITION BY user_id
-               ORDER BY tus, event_id) AS t2
-           FROM pr),
-         trans AS (SELECT s, t2, CAST(count(*) AS BIGINT) AS n
-           FROM pairs WHERE t2 IS NOT NULL GROUP BY 1, 2),
-         outs AS (SELECT s, CAST(sum(n) AS BIGINT) AS n_s
-           FROM trans GROUP BY 1),
-         p AS (SELECT trans.s, t2, n * 1000000 // n_s AS p_ppm
-           FROM trans JOIN outs ON outs.s = trans.s
-           WHERE trans.s <> 'purchase'),
-         st AS (SELECT DISTINCT event_type AS t2 FROM events),
-         e0 AS (SELECT t2, CAST(0 AS BIGINT) AS e_milli FROM st),
-         $rounds
-         SELECT e6.t2 AS state, e6.e_milli,
-           COALESCE(outs.n_s, 0) AS n_out
-         FROM e6 LEFT JOIN outs ON outs.s = e6.t2 ORDER BY state"""
-    },
-    // interior absolute Laplacian per ~100² block,
-    "events_wow_growth" ->
-      """WITH w AS (SELECT event_type,
-           (epoch_us(ts) // 86400000000) // 7 AS week,
-           CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2),
-         l AS (SELECT event_type, week, n,
-           lag(n) OVER (PARTITION BY event_type ORDER BY week) AS prev_n
-           FROM w)
-         SELECT event_type, week, n, prev_n,
-           CASE WHEN prev_n IS NULL OR prev_n = 0 THEN NULL
-                ELSE (n - prev_n) * 1000000 // prev_n END AS growth_ppm
-         FROM l ORDER BY event_type, week""",
-    // distinct head words, char-4-gram sets, exact threshold join,
-    "events_effect_size" ->
-      """WITH pu AS (SELECT event_type, user_id,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents,
-           CAST(user_id % 2 AS INT) AS arm
-           FROM events GROUP BY 1, 2),
-         a AS (SELECT event_type,
-             CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-             CAST(sum(CASE WHEN arm = 0 THEN cents END) AS BIGINT) AS s1,
-             CAST(sum(CASE WHEN arm = 0 THEN cents * cents END) AS BIGINT) AS ss1,
-             CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-             CAST(sum(CASE WHEN arm = 1 THEN cents END) AS BIGINT) AS s2,
-             CAST(sum(CASE WHEN arm = 1 THEN cents * cents END) AS BIGINT) AS ss2
-           FROM pu GROUP BY 1)
-         SELECT event_type, n1, s1, ss1, n2, s2, ss2,
-           s1 * n2 - s2 * n1 AS mean_diff_num,
-           n1 * ss1 - s1 * s1 AS var1_num,
-           n2 * ss2 - s2 * s2 AS var2_num
-         FROM a ORDER BY event_type""",
-    // sector membership rows, canonical pair join,
-    "events_theil_sen" ->
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hr,
-           CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),
-         p AS (SELECT event_type, CAST(row_number() OVER (
-             PARTITION BY event_type ORDER BY hr) AS BIGINT) AS i, c
-           FROM h),
-         pr AS (SELECT a.event_type,
-             ((b.c - a.c + 100000 * (b.i - a.i)) * 1000000) // (b.i - a.i)
-               - 100000000000 AS slope_ppm
-           FROM p a JOIN p b ON a.event_type = b.event_type AND a.i < b.i),
-         r AS (SELECT event_type, slope_ppm,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY slope_ppm) AS rn,
-             count(*) OVER (PARTITION BY event_type) AS np FROM pr),
-         n AS (SELECT event_type, CAST(max(i) AS BIGINT) AS n_pts
-           FROM p GROUP BY 1)
-         SELECT r.event_type, n.n_pts, CAST(np AS BIGINT) AS n_pairs,
-           slope_ppm
-         FROM r JOIN n ON n.event_type = r.event_type
-         WHERE rn = (np + 1) // 2 ORDER BY r.event_type""",
-    // identical soundex chain (global-flag regexp_replace), block rollup,
-    "events_ordinal_patterns" ->
-      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hr,
-           CAST(count(*) AS BIGINT) AS c
-           FROM events GROUP BY 1, 2),
-         tri AS (SELECT event_type, c AS v0,
-             lead(c, 1) OVER (PARTITION BY event_type ORDER BY hr) AS v1,
-             lead(c, 2) OVER (PARTITION BY event_type ORDER BY hr) AS v2
-           FROM h),
-         pat AS (SELECT event_type,
-             (CASE WHEN v1 < v0 THEN 1 ELSE 0 END
-              + CASE WHEN v2 < v0 THEN 1 ELSE 0 END) * 100
-             + (CASE WHEN v0 <= v1 THEN 1 ELSE 0 END
-                + CASE WHEN v2 < v1 THEN 1 ELSE 0 END) * 10
-             + (CASE WHEN v0 <= v2 THEN 1 ELSE 0 END
-                + CASE WHEN v1 <= v2 THEN 1 ELSE 0 END) AS pattern
-           FROM tri WHERE v1 IS NOT NULL AND v2 IS NOT NULL)
-         SELECT event_type, CAST(pattern AS INT) AS pattern,
-           CAST(count(*) AS BIGINT) AS n
-         FROM pat GROUP BY 1, 2 ORDER BY event_type, pattern""",
-    // BOM explosion as a TRUE recursive CTE with the same depth-3 guard;
-    // UNION ALL recursion keeps every path, matching the engine's
-    // path-multiplicity (extended-quantity) semantics,
-    "events_decay_score" ->
-      """WITH ev AS (SELECT user_id,
-           CAST(round(value * 100) AS BIGINT) AS cents,
-           epoch_us(ts) // 86400000000 AS eday FROM events),
-         mx AS (SELECT max(eday) AS mxd FROM ev)
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(cents) AS BIGINT) AS raw_cents,
-           CAST(sum(cents >> CAST((mxd - eday) // 7 AS INT)) AS BIGINT)
-             AS decayed_cents
-         FROM ev, mx GROUP BY 1 ORDER BY user_id""",
-    // per-lang rollup off the documents metadata,
-    "events_fano" ->
-      """WITH d AS (SELECT user_id, date_trunc('day', ts) AS day,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         a AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_days,
-             CAST(sum(c) AS BIGINT) AS s, CAST(sum(c * c) AS BIGINT) AS ss
-           FROM d GROUP BY 1)
-         SELECT user_id, n_days, s, ss,
-           (n_days * ss - s * s) * 1000 // ((n_days - 1) * s) AS fano_milli
-         FROM a WHERE n_days >= 2 ORDER BY user_id""",
     // subset band join replayed + exact Jaccard >= 0.5 truth, PR counts,
     "events_cm_error" ->
       """WITH sk AS (SELECT j, pos, count(*) AS cnt FROM (

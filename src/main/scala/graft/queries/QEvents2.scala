@@ -16,80 +16,11 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Event-analytics gates: sessions, funnels, sketches, time series
-  * (45 entries) with the DuckDB oracle SQL beside each query.
+  * (20 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QEvents2 {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "events_dow_distance" -> ((s, dir) => {
-      val dow = t(s, dir, "events")
-        .groupBy(col("event_type"), expr(
-          "(unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000) % 7")
-          .as("dow"))
-        .agg(count(lit(1)).as("c"))
-      val tot = dow.groupBy("event_type").agg(sum("c").as("n"))
-      val sh = dow.join(tot, Seq("event_type"))
-        .withColumn("share_ppm", expr("c * 1000000 DIV n"))
-      sh.as("x").join(sh.as("y"),
-          col("x.dow") === col("y.dow") &&
-            col("x.event_type") < col("y.event_type"))
-        .groupBy(col("x.event_type").as("type_a"),
-          col("y.event_type").as("type_b"))
-        .agg(sum(expr("abs(x.share_ppm - y.share_ppm)")).as("l1_ppm"),
-          count(lit(1)).as("n_dows"))
-        .orderBy("type_a", "type_b")
-    }),
-    // Banding-period detector (ops.ImageOps.bandingPeriod): column-mean
-    // autocorrelation argmax over lags 2..32 by floored per-term mean —
-    // the stripe-period read next to img_structure_tensor's orientation.,
-    "events_basket_lift" -> ((s, dir) => {
-      val ud = t(s, dir, "events")
-        .select(col("event_type"), col("user_id"),
-          date_trunc("day", col("ts")).as("day"))
-        .distinct()
-      val sizes = ud.groupBy("event_type").agg(count(lit(1)).as("n"))
-      val tot = ud.select("user_id", "day").distinct()
-        .agg(count(lit(1)).as("nud"))
-      ud.as("x").join(ud.as("y"),
-          col("x.user_id") === col("y.user_id") &&
-            col("x.day") === col("y.day") &&
-            col("x.event_type") < col("y.event_type"))
-        .groupBy(col("x.event_type").as("type_a"),
-          col("y.event_type").as("type_b"))
-        .agg(count(lit(1)).as("n_both"))
-        .join(sizes.select(col("event_type").as("type_a"),
-          col("n").as("n_a")), Seq("type_a"))
-        .join(sizes.select(col("event_type").as("type_b"),
-          col("n").as("n_b")), Seq("type_b"))
-        .crossJoin(broadcast(tot))
-        .withColumn("lift_ppm",
-          expr("n_both * nud * 1000000 DIV (n_a * n_b)"))
-        .select("type_a", "type_b", "n_a", "n_b", "n_both", "nud",
-          "lift_ppm")
-        .orderBy("type_a", "type_b")
-    }),
-    // Shingle document-frequency histogram: how many shingles sit at each
-    // df — the df-cap tuning read for the posting-list joins
-    // (dedup_containment's maxDf and the LSH boilerplate story in one
-    // curve).,
-    "events_audience_overlap" -> ((s, dir) => {
-      val aud = t(s, dir, "events").select("event_type", "user_id").distinct()
-      val sizes = aud.groupBy("event_type").agg(count(lit(1)).as("n"))
-      aud.as("x").join(aud.as("y"),
-          col("x.user_id") === col("y.user_id") &&
-            col("x.event_type") < col("y.event_type"))
-        .groupBy(col("x.event_type").as("type_a"),
-          col("y.event_type").as("type_b"))
-        .agg(count(lit(1)).as("n_common"))
-        .join(sizes.select(col("event_type").as("type_a"),
-          col("n").as("n_a")), Seq("type_a"))
-        .join(sizes.select(col("event_type").as("type_b"),
-          col("n").as("n_b")), Seq("type_b"))
-        .withColumn("jaccard_ppm",
-          expr("n_common * 1000000 DIV (n_a + n_b - n_common)"))
-        .select("type_a", "type_b", "n_a", "n_b", "n_common", "jaccard_ppm")
-        .orderBy("type_a", "type_b")
-    }),
     // Gridline-crossing tiling cost: per trajectory segment the exact
     // count of 64-unit vertical / 16-unit horizontal grid boundaries
     // crossed (|⌊x₂/G⌋−⌊x₁/G⌋| + |…|) — the tile-fanout estimate a vector
@@ -136,24 +67,6 @@ object QEvents2 {
                  ELSE acc END) AS f""")
         .selectExpr("user_id", "f.stage AS funnel_stage", "f.t1 AS view_us",
           "f.t2 AS click_us", "f.t3 AS purchase_us")
-        .orderBy("user_id")
-    }),
-    // Longest active-day streaks (gaps-and-islands on DISTINCT epoch days):
-    // day − row_number is constant exactly along a consecutive run, so one
-    // distinct + one per-user window + two key-bounded aggs give streak
-    // count, total active days, and the longest run — the engagement
-    // metric every consumer product reports.,
-    "events_streaks" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("d")
-      t(s, dir, "events")
-        .selectExpr("user_id",
-          "unix_micros(CAST(ts AS TIMESTAMP)) div 86400000000L AS d")
-        .distinct()
-        .withColumn("grp", col("d") - row_number().over(w))
-        .groupBy("user_id", "grp").agg(count(lit(1)).as("len"))
-        .groupBy("user_id").agg(count(lit(1)).as("n_streaks"),
-          sum("len").as("n_days"), max("len").as("max_streak"))
         .orderBy("user_id")
     }),
     // Sliding 7-day distinct actives (WAU per day): each (user, active-day)
@@ -341,50 +254,11 @@ object QEvents2 {
       ops.Sketches.cmEstimate(top, "user_id", sk, 1024)
         .orderBy(col("n_exact").desc, col("user_id"))
     }),
-    // Bloom-filter semi-join pre-filter (ops.Sketches.bloomBuild/
-    // bloomMightContain): the 100 TB join primitive — a 16 KiB broadcast
-    // bitmap prunes the probe scan to bloom-positive rows before any
-    // shuffle. Output counts the pass set, the exact semi-join truth, and
-    // the false positives per group; determinism makes all three
-    // oracle-exact (no-false-negative invariant: n_bloom_pass ≥ n_true).,
-    "events_interarrival" -> ((s, dir) => {
-      t(s, dir, "events")
-        .selectExpr("user_id", "event_id",
-          "unix_micros(CAST(ts AS TIMESTAMP)) AS ts_us")
-        .withColumn("gap_s",
-          expr("(ts_us - lag(ts_us, 1) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)) div 1000000L"))
-        .filter(col("gap_s").isNotNull)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_gaps"),
-          min("gap_s").as("min_gap_s"), max("gap_s").as("max_gap_s"),
-          sum("gap_s").as("sum_gap_s"),
-          sum(expr("gap_s * gap_s")).as("sum_sq"))
-        .withColumn("var_num", expr("n_gaps * sum_sq - sum_gap_s * sum_gap_s"))
-        .drop("sum_sq")
-        .orderBy("user_id")
-    }),
     "events_key_skew" -> ((s, dir) => {
       t(s, dir, "events")
         .groupBy("user_id").agg(count(lit(1)).as("n"))
         .groupBy("n").agg(count(lit(1)).as("n_keys"))
         .orderBy("n")
-    }),
-    // Day-of-week χ² uniformity test in exact integers: per event type,
-    // χ²·ppm against the uniform weekday expectation via the identity
-    // Σ(O−T/7)²/(T/7) = Σ(7O−T)²/(7T) — the numerator stays integer, ONE
-    // ppm division at the end. The seasonality screen of event pipelines.,
-    "events_dow_chi2" -> ((s, dir) => {
-      val c = t(s, dir, "events")
-        .selectExpr("event_type",
-          "(unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000) % 7 AS dow")
-        .groupBy("event_type", "dow").agg(count(lit(1)).as("o"))
-      c.withColumn("t_all", sum("o").over(Window.partitionBy("event_type")))
-        .groupBy("event_type")
-        .agg(max("t_all").as("total"),
-          sum(expr("(7*o - t_all) * (7*o - t_all)")).as("chi_num"))
-        .withColumn("chi2_ppm",
-          expr("(chi_num * 1000000) div (7 * total)"))
-        .orderBy("event_type")
     }),
     // Top event PATHS (3-step behavioural n-grams): the "what do users do
     // next-next" product-analytics staple one step beyond
@@ -405,57 +279,6 @@ object QEvents2 {
         .withColumn("rk", row_number().over(
           Window.partitionBy(ops.GlobalRank.boundedPartitionKey(col("n"))).orderBy(col("n").desc, col("path"))))
         .orderBy("rk")
-    }),
-    // Kitagawa MIX-SHIFT decomposition (public): the change in overall
-    // mean value between the first/second half-month splits into a MIX
-    // effect (segment weights moved) and a RATE effect (within-segment
-    // means moved) per event type: Δ = Σ(w2−w1)·r1 + Σ w2·(r2−r1). Weights
-    // in exact ppm, rates in floor cents; the effects are PRODUCTS of
-    // those integers, so no negative-division divergence between engines.,
-    "events_mix_shift" -> ((s, dir) => {
-      val ev = t(s, dir, "events").selectExpr("event_type",
-        "CASE WHEN unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 < 19738 THEN 1 ELSE 2 END AS period",
-        "CAST(FLOOR(value * 100.0D + 0.5D) AS BIGINT) AS cents")
-      val seg = ev.groupBy("period", "event_type")
-        .agg(count(lit(1)).as("n"), sum("cents").as("sc"))
-        .withColumn("tot", sum("n").over(Window.partitionBy("period")))
-        .selectExpr("period", "event_type",
-          "(n * 1000000) div tot AS w_ppm", "sc div n AS r_c")
-      val p1 = seg.filter(col("period") === 1)
-        .select(col("event_type"), col("w_ppm").as("w1_ppm"),
-          col("r_c").as("r1_c"))
-      val p2 = seg.filter(col("period") === 2)
-        .select(col("event_type"), col("w_ppm").as("w2_ppm"),
-          col("r_c").as("r2_c"))
-      p1.join(p2, "event_type")
-        .withColumn("mix_eff", (col("w2_ppm") - col("w1_ppm")) * col("r1_c"))
-        .withColumn("rate_eff", col("w2_ppm") * (col("r2_c") - col("r1_c")))
-        .orderBy("event_type")
-    }),
-    // Trailing-7-day ROLLING MEDIAN of daily volume per type — the robust
-    // trend line (one outage day doesn't move it, unlike the rolling
-    // mean): daily counts fan out to the ≤7 target days they serve
-    // (bounded equi-fanout, never a range self-join), lower median by
-    // selection rank.,
-    "events_rolling_median" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .selectExpr("event_type",
-          "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 AS d")
-        .groupBy("event_type", "d").agg(count(lit(1)).as("cnt"))
-      val fan = daily.select(col("event_type"), col("d").as("src_d"),
-          col("cnt"), explode(expr("sequence(0, 6)")).as("o"))
-        .withColumn("d", col("src_d") + col("o"))
-      val win = fan.join(daily.select("event_type", "d"),
-        Seq("event_type", "d"), "left_semi")
-      val w = Window.partitionBy("event_type", "d")
-        .orderBy(col("cnt"), col("src_d"))
-      win.withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(
-          Window.partitionBy("event_type", "d")))
-        .filter(expr("rn = (n + 1) DIV 2"))
-        .select(col("event_type"), col("d"), col("n").as("n_days"),
-          col("cnt").as("med_daily"))
-        .orderBy("event_type", "d")
     }),
     // Gini concentration of per-key volume — the single-number skew verdict
     // events_key_skew's histogram feeds: G = (2·Σi·xᵢ − (n+1)·Σx)/(n·Σx)
@@ -555,490 +378,9 @@ object QEvents2 {
       ops.IntervalJoin.overlapJoin(views, buys, binWidth = 300000L)
         .orderBy("l_id", "r_id")
     }),
-    "events_spearman" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type").as("et"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy("et_a", "et_b")
-      daily.select(col("et").as("et_a"), col("day"), col("c").as("c_a"))
-        .join(daily.select(col("et").as("et_b"), col("day"), col("c").as("c_b")),
-          Seq("day"))
-        .filter(col("et_a") < col("et_b"))
-        .withColumn("ra", row_number().over(w.orderBy("c_a", "day")).cast("long"))
-        .withColumn("rb", row_number().over(w.orderBy("c_b", "day")).cast("long"))
-        .withColumn("d2", expr("(ra - rb) * (ra - rb)"))
-        .groupBy("et_a", "et_b")
-        .agg(count(lit(1)).as("n_days"), sum("d2").as("sum_d2"))
-        .filter(col("n_days") >= 2)
-        .withColumn("rho_milli", expr(
-          "1000 - 6000 * sum_d2 DIV (n_days * n_days * n_days - n_days)"))
-        .orderBy("et_a", "et_b")
-    }),
-    // Census-transform popcount histogram (ops.ImageOps.censusTransform):
-    // per interior pixel the count of 8-neighbours strictly above the
-    // centre, binned 0..8 per image.,
-    "events_running_records" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val w = Window.partitionBy("event_type").orderBy("day")
-      daily
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("pmax", max("c").over(w.rowsBetween(Window.unboundedPreceding, -1)))
-        .withColumn("pmin", min("c").over(w.rowsBetween(Window.unboundedPreceding, -1)))
-        .withColumn("hi", when(col("pmax").isNull || col("c") > col("pmax"), 1L).otherwise(0L))
-        .withColumn("lo", when(col("pmin").isNull || col("c") < col("pmin"), 1L).otherwise(0L))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_days"),
-          sum("hi").as("n_record_highs"), sum("lo").as("n_record_lows"),
-          max(when(col("hi") === 1L, col("rn"))).as("last_high_idx"))
-        .orderBy("event_type")
-    }),
-    // Time-respecting earliest arrival (ops.Graph.temporalReach) over the
-    // customer contact net with order-date timestamps — the diffusion
-    // footprint static reachability overcounts.,
-    "events_markov_test" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val seq = t(s, dir, "events")
-        .select(col("user_id"), col("event_id"), col("ts"), col("event_type"))
-        .withColumn("e1", lead("event_type", 1).over(w))
-        .withColumn("e2", lead("event_type", 2).over(w))
-      val n1 = seq.filter(col("e1").isNotNull)
-        .groupBy(col("event_type").as("a"), col("e1").as("b"))
-        .agg(count(lit(1)).as("n1"))
-      val n2 = seq.filter(col("e2").isNotNull)
-        .groupBy(col("event_type").as("a"), col("e2").as("c"))
-        .agg(count(lit(1)).as("n2"))
-      val r1 = n1.groupBy("a").agg(sum("n1").as("ra"))
-      val r2 = n2.groupBy("a").agg(sum("n2").as("r2a"))
-      val model = n1.select(col("a"), col("b"), col("n1").as("nab"))
-        .join(n1.select(col("a").as("b2"), col("b").as("c"),
-          col("n1").as("nbc")), col("b") === col("b2"))
-        .join(r1.select(col("a"), col("ra")), Seq("a"))
-        .join(r1.select(col("a").as("b3"), col("ra").as("rb")), col("b") === col("b3"))
-        .withColumn("term", expr("1000000 * nab * nbc DIV (ra * rb)"))
-        .groupBy("a", "c").agg(sum("term").as("model_ppm"))
-      n2.join(r2, Seq("a"))
-        .withColumn("emp_ppm", expr("1000000 * n2 DIV r2a"))
-        .join(model, Seq("a", "c"), "left")
-        .withColumn("model_ppm", coalesce(col("model_ppm"), lit(0L)))
-        .withColumn("dev_ppm", expr("abs(emp_ppm - model_ppm)"))
-        .select(col("a").as("et_a"), col("c").as("et_c"), col("n2"),
-          col("emp_ppm"), col("model_ppm"), col("dev_ppm"))
-        .orderBy("et_a", "et_c")
-    }),
-    // Antimeridian segment splitting in exact micro-degrees: eastbound
-    // supplier segments from ~178°E into the western hemisphere are split
-    // at ±180°, the crossing latitude interpolated with nonneg integer
-    // floors, and the 1°-longitude tile span counted per side — the
-    // dateline correctness surface every global pipeline needs and most
-    // bbox code gets wrong.,
-    "events_inversions" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      daily.select(col("event_type"), col("day").as("d1"), col("c").as("c1"))
-        .join(daily.select(col("event_type"), col("day").as("d2"),
-          col("c").as("c2")), Seq("event_type"))
-        .filter(col("d1") < col("d2"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("c1") > col("c2"), 1L).otherwise(0L)).as("n_inversions"),
-          sum(when(col("c1") === col("c2"), 1L).otherwise(0L)).as("n_ties"))
-        .withColumn("inv_milli", expr("1000 * n_inversions DIV n_pairs"))
-        .orderBy("event_type")
-    }),
-    // SAX symbolization: 7-day PAA segment sums per event type, symbols
-    // a..d by nearest-rank quartiles of the segment sums (ties to the
-    // earlier segment in the rank scan) — the alphabet time-series motif
-    // mining and indexing build on.,
-    "events_sax_words" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val wd = Window.partitionBy("event_type").orderBy("day")
-      val seg = daily
-        .withColumn("idx", (row_number().over(wd).cast("long") - 1L))
-        .withColumn("seg_idx", expr("idx DIV 7"))
-        .groupBy("event_type", "seg_idx")
-        .agg(count(lit(1)).as("n_days"), sum("c").as("paa_sum"))
-        .filter(col("n_days") === 7)
-      val wv = Window.partitionBy("event_type").orderBy("paa_sum", "seg_idx")
-      val wp = Window.partitionBy("event_type")
-      val qs = seg
-        .withColumn("rn", row_number().over(wv).cast("long"))
-        .withColumn("n", count(lit(1)).over(wp))
-        .groupBy("event_type")
-        .agg(max(when(col("rn") === expr("(1 * n + 3) DIV 4"), col("paa_sum"))).as("q1"),
-          max(when(col("rn") === expr("(2 * n + 3) DIV 4"), col("paa_sum"))).as("q2"),
-          max(when(col("rn") === expr("(3 * n + 3) DIV 4"), col("paa_sum"))).as("q3"))
-      seg.join(qs, Seq("event_type"))
-        .withColumn("symbol",
-          when(col("paa_sum") <= col("q1"), "a")
-            .when(col("paa_sum") <= col("q2"), "b")
-            .when(col("paa_sum") <= col("q3"), "c").otherwise("d"))
-        .select("event_type", "seg_idx", "paa_sum", "symbol")
-        .orderBy("event_type", "seg_idx")
-    }),
-    // Two-state burst Viterbi (Kleinberg-style with integer L1 emission
-    // costs): per event type the forward DP costs of the low (median
-    // rate) and high (2x median) states with switch penalty 40 — exact
-    // integers, the per-key sequential fold running key-partitioned in
-    // flatMapGroups (bounded state, the events_survival discipline).,
-    "events_burst_viterbi" -> ((s, dir) => {
-      import s.implicits._
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val wv = Window.partitionBy("event_type").orderBy("c", "day")
-      val wp = Window.partitionBy("event_type")
-      val med = daily.withColumn("rn", row_number().over(wv).cast("long"))
-        .withColumn("n", count(lit(1)).over(wp))
-        .filter(col("rn") === expr("(n + 1) DIV 2"))
-        .select(col("event_type"), col("c").as("med"))
-      val K = 40L
-      daily.join(med, Seq("event_type"))
-        .withColumn("idx", row_number().over(
-          Window.partitionBy("event_type").orderBy("day")).cast("long"))
-        .selectExpr("event_type", "idx", "c",
-          "abs(c - med) AS el", "abs(c - 2 * med) AS eh")
-        .as[(String, Long, Long, Long, Long)]
-        .groupByKey(_._1)
-        .flatMapGroups { (et, it) =>
-          val rows = it.toArray.sortBy(_._2)
-          var clow = 0L; var chigh = 0L; var first = true
-          rows.iterator.map { case (_, idx, c, el, eh) =>
-            if (first) { clow = el; chigh = eh + K; first = false }
-            else {
-              val nl = el + math.min(clow, chigh + K)
-              val nh = eh + math.min(chigh, clow + K)
-              clow = nl; chigh = nh
-            }
-            (et, idx, c, clow, chigh)
-          }
-        }
-        .toDF("event_type", "idx", "c", "cost_low", "cost_high")
-        .orderBy("event_type", "idx")
-    }),
-    // Popularity-palette quantization error (ops.ImageOps
-    // .popularityPalette): top-16 value palette, exact L1 mapping loss.,
-    "events_circular_hour" -> ((s, dir) => {
-      import s.implicits._
-      val tab = hourCirc.toDF("h", "cq", "sq")
-      val hourly = t(s, dir, "events")
-        .withColumn("h", hour(col("ts")).cast("int"))
-        .groupBy("event_type", "h").agg(count(lit(1)).as("c"))
-      val peak = hourly.withColumn("rn", row_number().over(
-          Window.partitionBy("event_type")
-            .orderBy(col("c").desc, col("h").asc)))
-        .filter(col("rn") === 1)
-        .select(col("event_type"), col("h").as("peak_hour"))
-      hourly.join(broadcast(tab), Seq("h"))
-        .groupBy("event_type")
-        .agg(sum("c").as("n_events"), sum(expr("c * cq")).as("rx_q"),
-          sum(expr("c * sq")).as("ry_q"))
-        .join(peak, Seq("event_type"))
-        .orderBy("event_type")
-    }),
-    // Two-threshold Otsu (ops.ImageOps.otsuMultilevel): 3-class
-    // segmentation by exhaustive quantized between-class objective.,
-    "events_naive_backtest" -> ((s, dir) => {
-      val w = Window.partitionBy("event_type").orderBy("day")
-      t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(w).cast("long"))
-        .withColumn("l1", lag("c", 1).over(w))
-        .withColumn("l7", lag("c", 7).over(w))
-        .filter(col("rn") > 7)
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_eval"),
-          sum(expr("abs(c - l1)")).as("sum_naive"),
-          sum(expr("abs(c - l7)")).as("sum_snaive"))
-        .withColumn("winner", expr(
-          """CASE WHEN sum_snaive < sum_naive THEN 'seasonal'
-             WHEN sum_snaive > sum_naive THEN 'naive' ELSE 'tie' END"""))
-        .orderBy("event_type")
-    }),
-    // Partition + min/max file-skipping audit: daily partitions bucketed
-    // by customer range, a date+key query's file and row selectivity in
-    // ppm — the lakehouse pruning report next to store_zorder_skip.,
-    "events_late_arrival_census" -> ((s, dir) => {
-      val w = Window.partitionBy("event_type").orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      t(s, dir, "events")
-        .selectExpr("event_type", "event_id",
-          "unix_micros(CAST(ts AS TIMESTAMP)) AS us")
-        .withColumn("wm", max("us").over(w) - lit(600000000L))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_events"),
-          sum(when(col("us") < col("wm"), 1L).otherwise(0L)).as("n_late"),
-          coalesce(max(when(col("us") < col("wm"), col("wm") - col("us"))),
-            lit(0L)).as("max_lateness_us"))
-        .orderBy("event_type")
-    }),
-    // Two-scale TPI landform census (ops.ImageOps.landformClass):
-    // cross-multiplied 5x5/13x13 position-index signs -> Weiss landform
-    // partition counts per tile.,
-    "events_stl_lite" -> ((s, dir) => {
-      val wd = Window.partitionBy("event_type").orderBy("day")
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          expr("unix_micros(CAST(date_trunc('day', ts) AS TIMESTAMP)) DIV 86400000000")
-            .as("day"))
-        .agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(wd).cast("long"))
-        .withColumn("n", count(lit(1)).over(Window.partitionBy("event_type")))
-        .withColumn("trend7",
-          sum("c").over(wd.rowsBetween(-3, 3)))
-        .filter(col("rn") >= 4 && col("rn") <= col("n") - 3)
-        .withColumn("det", expr("7 * c - trend7"))
-        .withColumn("dow", expr("day % 7"))
-      val wv = Window.partitionBy("event_type", "dow").orderBy("det", "day")
-      val wp = Window.partitionBy("event_type", "dow")
-      val med = daily
-        .withColumn("rk", row_number().over(wv).cast("long"))
-        .withColumn("m", count(lit(1)).over(wp))
-        .filter(col("rk") === expr("(m + 1) DIV 2"))
-        .select(col("event_type"), col("dow"), col("det").as("seasonal_q"))
-      daily.join(med, Seq("event_type", "dow"))
-        .groupBy("event_type", "dow")
-        .agg(count(lit(1)).as("n_obs"), max("seasonal_q").as("seasonal_q"),
-          sum(expr("abs(det - seasonal_q)")).as("resid_l1"))
-        .orderBy("event_type", "dow")
-    }),
-    // Bayer demosaic audit (ops.ImageOps.demosaicError): x4-scaled green
-    // interpolation loss at the R/B sites.,
-    "events_pot_excess" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val wv = Window.partitionBy("event_type").orderBy("c", "day")
-      val wp = Window.partitionBy("event_type")
-      val thr = daily.withColumn("rn", row_number().over(wv).cast("long"))
-        .withColumn("n", count(lit(1)).over(wp))
-        .filter(col("rn") === expr("(9 * n + 9) DIV 10"))
-        .select(col("event_type"), col("c").as("u"))
-      daily.join(thr, Seq("event_type"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n_days"), max("u").as("u"),
-          sum(when(col("c") > col("u"), 1L).otherwise(0L)).as("n_exc"),
-          sum(when(col("c") > col("u"), col("c") - col("u")).otherwise(0L))
-            .as("sum_excess"),
-          sum(when(col("c") > col("u"),
-            (col("c") - col("u")) * (col("c") - col("u"))).otherwise(0L))
-            .as("sum_excess_sq"),
-          coalesce(max(when(col("c") > col("u"), col("c") - col("u"))),
-            lit(0L)).as("max_excess"))
-        .orderBy("event_type")
-    }),
-    // Laplacian-pyramid detail profile (ops.ImageOps.laplacianPyramid):
-    // per-level x4/x16 integer detail energies + base mass.,
-    "events_pretrend_check" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .filter(col("event_type").isin("click", "view"))
-        .groupBy(col("event_type"),
-          expr("unix_micros(CAST(date_trunc('day', ts) AS TIMESTAMP)) DIV 86400000000")
-            .as("day"))
-        .agg(count(lit(1)).as("c"))
-      val d0 = daily.agg(min("day")).head().getLong(0)
-      val pre = daily.filter(col("day") < d0 + 45L)
-        .withColumn("x", col("day") - d0)
-      val pieces = pre.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("c").as("sy"),
-          sum(expr("x * c")).as("sxy"), sum(expr("x * x")).as("sxx"))
-        .withColumn("num", expr("n * sxy - sx * sy"))
-        .withColumn("den", expr("n * sxx - sx * sx"))
-      val a = pieces.filter(col("event_type") === "click")
-        .select(col("n").as("n_a"), col("num").as("num_a"), col("den").as("den_a"))
-      val b = pieces.filter(col("event_type") === "view")
-        .select(col("n").as("n_b"), col("num").as("num_b"), col("den").as("den_b"))
-      a.crossJoin(b)
-        .withColumn("cross", expr("num_a * den_b - num_b * den_a"))
-        .withColumn("same_sign", expr(
-          "CASE WHEN num_a * num_b > 0 THEN 1 WHEN num_a * num_b < 0 THEN -1 ELSE 0 END"))
-    }),
-    // HyperBall register dataflow (Boldi-Vigna 2011, public): per-node
-    // 16-bucket max-rho registers unioned along out-edges for 3 rounds,
-    // next to the EXACT reachable-pair counts at the same radii — the
-    // integer register mass audits the sketch growth without float
-    // estimation; this is the neighborhood-function machinery of
-    // web-scale distance distributions.,
-    "events_cuped_pieces" -> ((s, dir) => {
-      val ev = t(s, dir, "events").selectExpr("user_id",
-        "unix_micros(CAST(date_trunc('day', ts) AS TIMESTAMP)) DIV 86400000000 AS day")
-      val d0 = ev.agg(min("day")).head().getLong(0)
-      val usr = ev
-        .groupBy("user_id")
-        .agg(sum(when(col("day") < d0 + 45L, 1L).otherwise(0L)).as("pre"),
-          sum(when(col("day") >= d0 + 45L, 1L).otherwise(0L)).as("post"))
-        .withColumn("arm", col("user_id") % 2)
-      val arms = usr.groupBy("arm")
-        .agg(count(lit(1)).as("n"), sum("pre").as("sx"),
-          sum("post").as("sy"), sum(expr("pre * pre")).as("sxx"),
-          sum(expr("pre * post")).as("sxy"))
-      val pooled = usr.agg(count(lit(1)).as("pn"), sum("pre").as("px"),
-          sum("post").as("py"), sum(expr("pre * pre")).as("pxx"),
-          sum(expr("pre * post")).as("pxy"))
-        .selectExpr("pn * pxy - px * py AS theta_num",
-          "pn * pxx - px * px AS theta_den")
-      arms.crossJoin(broadcast(pooled)).orderBy("arm")
-    }),
-    // Peak keypoints with centroid numerators (ops.ImageOps
-    // .peakCentroids): top-5 strict local maxima, exact 3x3 moments.,
-    "events_median_polish" -> ((s, dir) => {
-      val m0 = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          expr("(unix_micros(CAST(date_trunc('day', ts) AS TIMESTAMP)) DIV 86400000000) % 7")
-            .as("dow"))
-        .agg(count(lit(1)).as("v"))
-      def rowMed(m: DataFrame): DataFrame = {
-        val wv = Window.partitionBy("event_type").orderBy("v", "dow")
-        val wp = Window.partitionBy("event_type")
-        m.withColumn("rk", row_number().over(wv).cast("long"))
-          .withColumn("n", count(lit(1)).over(wp))
-          .filter(col("rk") === expr("(n + 1) DIV 2"))
-          .select(col("event_type"), col("v").as("med"))
-      }
-      def colMed(m: DataFrame): DataFrame = {
-        val wv = Window.partitionBy("dow").orderBy("v", "event_type")
-        val wp = Window.partitionBy("dow")
-        m.withColumn("rk", row_number().over(wv).cast("long"))
-          .withColumn("n", count(lit(1)).over(wp))
-          .filter(col("rk") === expr("(n + 1) DIV 2"))
-          .select(col("dow"), col("v").as("med"))
-      }
-      var m = m0
-      var rowEff = m0.select("event_type").distinct()
-        .withColumn("re", lit(0L))
-      var colEff = m0.select("dow").distinct().withColumn("ce", lit(0L))
-      for (_ <- 1 to 2) {
-        val rm = rowMed(m)
-        m = m.join(rm, Seq("event_type"))
-          .withColumn("v", col("v") - col("med")).drop("med")
-        rowEff = rowEff.join(rm, Seq("event_type"))
-          .withColumn("re", col("re") + col("med")).drop("med")
-        val cm = colMed(m)
-        m = m.join(cm, Seq("dow"))
-          .withColumn("v", col("v") - col("med")).drop("med")
-        colEff = colEff.join(cm, Seq("dow"))
-          .withColumn("ce", col("ce") + col("med")).drop("med")
-      }
-      m.join(rowEff, Seq("event_type")).join(colEff, Seq("dow"))
-        .select(col("event_type"), col("dow"), col("v").as("resid"),
-          col("re").as("row_eff"), col("ce").as("col_eff"))
-        .orderBy("event_type", "dow")
-    }),
-    // Normal-vector dispersion (ops.ImageOps.normalDispersion): exact
-    // resultant pieces of the terrain normal field.,
-    "events_lorenz_deciles" -> ((s, dir) => {
-      val ua = t(s, dir, "events")
-        .groupBy("event_type", "user_id").agg(count(lit(1)).as("c"))
-      val wv = Window.partitionBy("event_type").orderBy("c", "user_id")
-      val wp = Window.partitionBy("event_type")
-      val dec = ua
-        .withColumn("rk", row_number().over(wv).cast("long"))
-        .withColumn("n", count(lit(1)).over(wp))
-        .withColumn("tot", sum("c").over(wp))
-        .withColumn("decile", expr("((rk - 1) * 10) DIV n"))
-        .groupBy("event_type", "decile")
-        .agg(count(lit(1)).as("n_users"), sum("c").as("sum_events"),
-          max("tot").as("tot"))
-      dec.withColumn("cum", sum("sum_events").over(
-          Window.partitionBy("event_type").orderBy("decile")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-        .withColumn("cum_share_ppm", expr("1000000 * cum DIV tot"))
-        .select("event_type", "decile", "n_users", "sum_events",
-          "cum_share_ppm")
-        .orderBy("event_type", "decile")
-    }),
-    // Follow detection: user b visiting at step i the cell user a
-    // occupied at step i-2 — the time-shifted co-location join (one
-    // equi-join on (cell, shifted step), never all-pairs); top-10
-    // follower pairs.,
-    "events_rank_churn" -> ((s, dir) => {
-      val wk = t(s, dir, "events")
-        .selectExpr("event_type",
-          "(unix_micros(CAST(date_trunc('day', ts) AS TIMESTAMP)) DIV 86400000000) DIV 7 AS week")
-        .groupBy("week", "event_type").agg(count(lit(1)).as("c"))
-        .withColumn("rk", row_number().over(Window.partitionBy("week")
-          .orderBy(col("c").desc, col("event_type").asc)).cast("long"))
-      wk.join(wk.selectExpr("week + 1 AS week", "event_type",
-          "rk AS prev_rk"), Seq("week", "event_type"))
-        .withColumn("delta", col("prev_rk") - col("rk"))
-        .select("week", "event_type", "c", "rk", "prev_rk", "delta")
-        .orderBy("week", "event_type")
-    }),
-    // V-optimal histogram (Jagadish et al. 1998, public): 4-bucket DP on
-    // the 24 hourly counts with the scaled-SSE cost n·Σx² − (Σx)² (pure
-    // integers; one cost table from prefix sums, 3 DP stages as joins,
-    // argmin backtrack with smallest-boundary ties) — the
-    // optimizer-statistics construction equi-width/equi-depth histograms
-    // approximate.,
-    "events_dau_mau" -> ((s, dir) => {
-      val du = t(s, dir, "events").selectExpr("user_id",
-          "unix_micros(CAST(date_trunc('day', ts) AS TIMESTAMP)) DIV 86400000000 AS day")
-        .distinct()
-      val dau = du.groupBy("day").agg(count(lit(1)).as("dau"))
-      val mau = dau.select(col("day"))
-        .join(du.selectExpr("user_id", "day AS aday"),
-          col("aday") <= col("day") && col("aday") > col("day") - 28L)
-        .select("day", "user_id").distinct()
-        .groupBy("day").agg(count(lit(1)).as("mau28"))
-      dau.join(mau, Seq("day"))
-        .withColumn("stickiness_ppm", expr("1000000 * dau DIV mau28"))
-        .orderBy("day")
-    })
   )
 
   val sql: Map[String, String] = Map(
-    "events_dow_distance" ->
-      """WITH d AS (SELECT event_type,
-           (epoch_us(ts) // 86400000000) % 7 AS dow,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         t AS (SELECT event_type, CAST(sum(c) AS BIGINT) AS n
-           FROM d GROUP BY 1),
-         sh AS (SELECT d.event_type, dow, c * 1000000 // n AS share_ppm
-           FROM d JOIN t ON t.event_type = d.event_type)
-         SELECT x.event_type AS type_a, y.event_type AS type_b,
-           CAST(sum(abs(x.share_ppm - y.share_ppm)) AS BIGINT) AS l1_ppm,
-           CAST(count(*) AS BIGINT) AS n_dows
-         FROM sh x JOIN sh y ON y.dow = x.dow
-           AND x.event_type < y.event_type
-         GROUP BY 1, 2 ORDER BY type_a, type_b""",
-    // column sums over the closed form, lag-band self-join, floored mean,
-    "events_basket_lift" ->
-      """WITH ud AS (SELECT DISTINCT event_type, user_id,
-           date_trunc('day', ts) AS day FROM events),
-         sz AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n
-           FROM ud GROUP BY 1),
-         tot AS (SELECT CAST(count(*) AS BIGINT) AS nud FROM
-           (SELECT DISTINCT user_id, day FROM ud)),
-         pr AS (SELECT x.event_type AS type_a, y.event_type AS type_b,
-             CAST(count(*) AS BIGINT) AS n_both
-           FROM ud x JOIN ud y ON y.user_id = x.user_id AND y.day = x.day
-             AND x.event_type < y.event_type
-           GROUP BY 1, 2)
-         SELECT type_a, type_b, a.n AS n_a, b.n AS n_b, n_both, nud,
-           n_both * nud * 1000000 // (a.n * b.n) AS lift_ppm
-         FROM pr JOIN sz a ON a.event_type = pr.type_a
-         JOIN sz b ON b.event_type = pr.type_b CROSS JOIN tot
-         ORDER BY type_a, type_b""",
-    // per-shingle df over the gate corpus, histogram by df,
-    "events_audience_overlap" ->
-      """WITH aud AS (SELECT DISTINCT event_type, user_id FROM events),
-         sz AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n
-           FROM aud GROUP BY 1),
-         pr AS (SELECT x.event_type AS type_a, y.event_type AS type_b,
-             CAST(count(*) AS BIGINT) AS n_common
-           FROM aud x JOIN aud y ON y.user_id = x.user_id
-             AND x.event_type < y.event_type
-           GROUP BY 1, 2)
-         SELECT type_a, type_b, a.n AS n_a, b.n AS n_b, n_common,
-           n_common * 1000000 // (a.n + b.n - n_common) AS jaccard_ppm
-         FROM pr JOIN sz a ON a.event_type = pr.type_a
-         JOIN sz b ON b.event_type = pr.type_b
-         ORDER BY type_a, type_b""",
     // the walk cumsum, floor-bucket deltas per segment,
     "events_conversion_lag" ->
       """WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS us FROM events),
@@ -1074,18 +416,6 @@ object QEvents2 {
            LEFT JOIN r t2 ON t2.user_id = u.user_id AND t2.rn = b.p2
            LEFT JOIN r t3 ON t3.user_id = u.user_id AND t3.rn = c.p3
          ORDER BY u.user_id""",
-    "events_streaks" ->
-      """WITH d AS (SELECT DISTINCT user_id,
-           epoch_us(ts) // 86400000000 AS d FROM events),
-         g AS (SELECT user_id, d,
-           d - row_number() OVER (PARTITION BY user_id ORDER BY d) AS grp
-           FROM d),
-         runs AS (SELECT user_id, grp, CAST(count(*) AS BIGINT) AS len
-           FROM g GROUP BY 1, 2)
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n_streaks,
-           CAST(sum(len) AS BIGINT) AS n_days,
-           CAST(max(len) AS BIGINT) AS max_streak
-         FROM runs GROUP BY 1 ORDER BY user_id""",
     "events_wau" ->
       """WITH ev AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d FROM events),
          days AS (SELECT DISTINCT d AS day FROM ev),
@@ -1212,37 +542,9 @@ object QEvents2 {
          SELECT tp.user_id, tp.n_exact, min(cnt) AS cm_est
          FROM tp JOIN sk ON tp.j = sk.j AND tp.pos = sk.pos
          GROUP BY 1, 2 ORDER BY n_exact DESC, user_id""",
-    // replays the Bloom filter bit for bit: same three congruential hashes,
-    // positions deduped from the build keys, membership = all three probe
-    // positions present; truth via an exact IN,
-    "events_interarrival" ->
-      """WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us FROM events),
-         g AS (SELECT user_id,
-             (ts_us - lag(ts_us) OVER (PARTITION BY user_id ORDER BY ts_us, event_id)) // 1000000 AS gap_s
-           FROM b)
-         SELECT user_id, CAST(count(*) AS BIGINT) AS n_gaps,
-           CAST(min(gap_s) AS BIGINT) AS min_gap_s,
-           CAST(max(gap_s) AS BIGINT) AS max_gap_s,
-           CAST(sum(gap_s) AS BIGINT) AS sum_gap_s,
-           CAST(count(*) * sum(gap_s*gap_s) - sum(gap_s)*sum(gap_s) AS BIGINT) AS var_num
-         FROM g WHERE gap_s IS NOT NULL
-         GROUP BY user_id ORDER BY user_id""",
     "events_key_skew" ->
       """WITH per AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1)
          SELECT n, count(*) AS n_keys FROM per GROUP BY n ORDER BY n""",
-    // bounded 7-day fanout + per-(type, day) selection median,
-    "events_dow_chi2" ->
-      """WITH c AS (SELECT event_type,
-           (epoch_us(ts) // 86400000000) % 7 AS dow, count(*) AS o
-           FROM events GROUP BY 1, 2),
-         w AS (SELECT event_type, dow, o,
-           CAST(sum(o) OVER (PARTITION BY event_type) AS BIGINT) AS t_all FROM c),
-         a AS (SELECT event_type, CAST(max(t_all) AS BIGINT) AS total,
-           CAST(sum((7*o - t_all) * (7*o - t_all)) AS BIGINT) AS chi_num
-           FROM w GROUP BY 1)
-         SELECT event_type, total, chi_num,
-           (chi_num * 1000000) // (7 * total) AS chi2_ppm
-         FROM a ORDER BY event_type""",
     // Gini over ascending-ranked counts; all-integer, one // at the end,
     "events_trigrams" ->
       """WITH s AS (SELECT user_id, event_type,
@@ -1254,36 +556,6 @@ object QEvents2 {
          r AS (SELECT *, CAST(row_number() OVER (ORDER BY n DESC, path) AS INT) AS rk FROM c)
          SELECT path, CAST(n AS BIGINT) AS n, rk FROM r WHERE rk <= 10
          ORDER BY rk""",
-    // net² / Σstep² straightness in exact ppm over the 20 walks,
-    "events_mix_shift" ->
-      """WITH ev AS (SELECT event_type,
-           CASE WHEN epoch_us(ts) // 86400000000 < 19738 THEN 1 ELSE 2 END AS period,
-           CAST(floor(value * 100.0 + 0.5) AS BIGINT) AS cents FROM events),
-         seg AS (SELECT period, event_type, count(*) AS n, sum(cents) AS sc
-           FROM ev GROUP BY 1, 2),
-         sw AS (SELECT period, event_type,
-             CAST((n * 1000000) // sum(n) OVER (PARTITION BY period) AS BIGINT) AS w_ppm,
-             CAST(sc // n AS BIGINT) AS r_c FROM seg)
-         SELECT p1.event_type, p1.w_ppm AS w1_ppm, p1.r_c AS r1_c,
-           p2.w_ppm AS w2_ppm, p2.r_c AS r2_c,
-           (p2.w_ppm - p1.w_ppm) * p1.r_c AS mix_eff,
-           p2.w_ppm * (p2.r_c - p1.r_c) AS rate_eff
-         FROM sw p1 JOIN sw p2 ON p2.event_type = p1.event_type
-           AND p1.period = 1 AND p2.period = 2
-         ORDER BY p1.event_type""",
-    "events_rolling_median" ->
-      """WITH daily AS (SELECT event_type, epoch_us(ts) // 86400000000 AS d,
-           count(*) AS cnt FROM events GROUP BY 1, 2),
-         fan AS (SELECT d2.event_type, d2.d AS src_d, d2.cnt, d2.d + t.o AS d
-           FROM daily d2, unnest(range(0, 7)) AS t(o)),
-         win AS (SELECT f.event_type, f.d, f.src_d, f.cnt FROM fan f
-           JOIN daily s ON s.event_type = f.event_type AND s.d = f.d),
-         r AS (SELECT event_type, d, cnt, src_d,
-             row_number() OVER (PARTITION BY event_type, d ORDER BY cnt, src_d) AS rn,
-             count(*) OVER (PARTITION BY event_type, d) AS n FROM win)
-         SELECT event_type, CAST(d AS BIGINT) AS d, CAST(n AS BIGINT) AS n_days,
-           CAST(cnt AS BIGINT) AS med_daily
-         FROM r WHERE rn = (n + 1) // 2 ORDER BY event_type, d""",
     // χ² numerator Σ(7O−T)² stays integer; one // to ppm,
     "events_gini" ->
       """WITH c AS (SELECT user_id, count(*) AS n FROM events GROUP BY 1),
@@ -1333,364 +605,5 @@ object QEvents2 {
            tus - view_tus AS gap_us
          FROM w WHERE side = 1 ORDER BY event_id""",
     "events_interval_join" -> intervalJoinOracleSql,
-    "events_spearman" ->
-      """WITH d AS (SELECT event_type AS et, date_trunc('day', ts) AS day,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         j AS (SELECT a.et AS et_a, b.et AS et_b, a.day,
-             a.c AS c_a, b.c AS c_b
-           FROM d a JOIN d b ON b.day = a.day AND a.et < b.et),
-         r AS (SELECT et_a, et_b,
-             CAST(row_number() OVER (PARTITION BY et_a, et_b
-               ORDER BY c_a, day) AS BIGINT) AS ra,
-             CAST(row_number() OVER (PARTITION BY et_a, et_b
-               ORDER BY c_b, day) AS BIGINT) AS rb
-           FROM j),
-         g AS (SELECT et_a, et_b, CAST(count(*) AS BIGINT) AS n_days,
-             CAST(sum((ra - rb) * (ra - rb)) AS BIGINT) AS sum_d2
-           FROM r GROUP BY 1, 2 HAVING count(*) >= 2)
-         SELECT et_a, et_b, n_days, sum_d2,
-           CAST(1000 - 6000 * sum_d2 // (n_days * n_days * n_days - n_days)
-             AS BIGINT) AS rho_milli
-         FROM g ORDER BY et_a, et_b""",
-    // 8 neighbour comparisons per interior node, zero-filled 0..8 bins,
-    "events_running_records" ->
-      """WITH d AS (SELECT event_type, date_trunc('day', ts) AS day,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         w AS (SELECT event_type, c,
-             CAST(row_number() OVER pw AS BIGINT) AS rn,
-             max(c) OVER (pw ROWS BETWEEN UNBOUNDED PRECEDING
-               AND 1 PRECEDING) AS pmax,
-             min(c) OVER (pw ROWS BETWEEN UNBOUNDED PRECEDING
-               AND 1 PRECEDING) AS pmin
-           FROM d WINDOW pw AS (PARTITION BY event_type ORDER BY day)),
-         f AS (SELECT event_type, rn,
-             CASE WHEN pmax IS NULL OR c > pmax THEN 1 ELSE 0 END AS hi,
-             CASE WHEN pmin IS NULL OR c < pmin THEN 1 ELSE 0 END AS lo
-           FROM w)
-         SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-           CAST(sum(hi) AS BIGINT) AS n_record_highs,
-           CAST(sum(lo) AS BIGINT) AS n_record_lows,
-           CAST(max(CASE WHEN hi = 1 THEN rn END) AS BIGINT) AS last_high_idx
-         FROM f GROUP BY 1 ORDER BY event_type""",
-    // (node, arrival) pair enumeration with non-decreasing chains, min'd,
-    "events_markov_test" ->
-      """WITH s AS (SELECT user_id, event_id, ts, event_type,
-           lead(event_type, 1) OVER pw AS e1,
-           lead(event_type, 2) OVER pw AS e2
-           FROM events WINDOW pw AS (PARTITION BY user_id ORDER BY ts, event_id)),
-         n1 AS (SELECT event_type AS a, e1 AS b, CAST(count(*) AS BIGINT) AS n1
-           FROM s WHERE e1 IS NOT NULL GROUP BY 1, 2),
-         n2 AS (SELECT event_type AS a, e2 AS c, CAST(count(*) AS BIGINT) AS n2
-           FROM s WHERE e2 IS NOT NULL GROUP BY 1, 2),
-         r1 AS (SELECT a, CAST(sum(n1) AS BIGINT) AS ra FROM n1 GROUP BY 1),
-         r2 AS (SELECT a, CAST(sum(n2) AS BIGINT) AS r2a FROM n2 GROUP BY 1),
-         model AS (SELECT x.a, y.b AS c,
-             CAST(sum(1000000 * x.n1 * y.n1 // (ra.ra * rb.ra)) AS BIGINT) AS model_ppm
-           FROM n1 x JOIN n1 y ON y.a = x.b
-           JOIN r1 ra ON ra.a = x.a JOIN r1 rb ON rb.a = x.b
-           GROUP BY 1, 2)
-         SELECT n2.a AS et_a, n2.c AS et_c, n2.n2,
-           CAST(1000000 * n2.n2 // r2.r2a AS BIGINT) AS emp_ppm,
-           COALESCE(model.model_ppm, CAST(0 AS BIGINT)) AS model_ppm,
-           CAST(abs(1000000 * n2.n2 // r2.r2a
-             - COALESCE(model.model_ppm, 0)) AS BIGINT) AS dev_ppm
-         FROM n2 JOIN r2 ON r2.a = n2.a
-         LEFT JOIN model ON model.a = n2.a AND model.c = n2.c
-         ORDER BY et_a, et_c""",
-    // same micro-degree arithmetic, nonneg floors only,
-    "events_inversions" ->
-      """WITH d AS (SELECT event_type, date_trunc('day', ts) AS day,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         p AS (SELECT a.event_type, a.c AS c1, b.c AS c2
-           FROM d a JOIN d b ON b.event_type = a.event_type
-             AND a.day < b.day)
-         SELECT event_type, CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(sum(CASE WHEN c1 > c2 THEN 1 ELSE 0 END) AS BIGINT) AS n_inversions,
-           CAST(sum(CASE WHEN c1 = c2 THEN 1 ELSE 0 END) AS BIGINT) AS n_ties,
-           CAST(1000 * sum(CASE WHEN c1 > c2 THEN 1 ELSE 0 END) // count(*)
-             AS BIGINT) AS inv_milli
-         FROM p GROUP BY 1 ORDER BY event_type""",
-    // 7-day PAA sums, nearest-rank quartile breakpoints, a..d symbols,
-    "events_sax_words" ->
-      """WITH d AS (SELECT event_type, date_trunc('day', ts) AS day,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         ix AS (SELECT event_type, c,
-             CAST(row_number() OVER (PARTITION BY event_type ORDER BY day)
-               AS BIGINT) - 1 AS idx FROM d),
-         seg AS (SELECT event_type, idx // 7 AS seg_idx,
-             CAST(count(*) AS BIGINT) AS n_days,
-             CAST(sum(c) AS BIGINT) AS paa_sum
-           FROM ix GROUP BY 1, 2 HAVING count(*) = 7),
-         r AS (SELECT event_type, seg_idx, paa_sum,
-             CAST(row_number() OVER (PARTITION BY event_type
-               ORDER BY paa_sum, seg_idx) AS BIGINT) AS rn,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-           FROM seg),
-         q AS (SELECT event_type,
-             max(CASE WHEN rn = (1 * n + 3) // 4 THEN paa_sum END) AS q1,
-             max(CASE WHEN rn = (2 * n + 3) // 4 THEN paa_sum END) AS q2,
-             max(CASE WHEN rn = (3 * n + 3) // 4 THEN paa_sum END) AS q3
-           FROM r GROUP BY 1)
-         SELECT seg.event_type, CAST(seg_idx AS BIGINT) AS seg_idx, paa_sum,
-           CASE WHEN paa_sum <= q1 THEN 'a' WHEN paa_sum <= q2 THEN 'b'
-             WHEN paa_sum <= q3 THEN 'c' ELSE 'd' END AS symbol
-         FROM seg JOIN q ON q.event_type = seg.event_type
-         ORDER BY seg.event_type, seg_idx""",
-    // forward DP replayed as a recursive CTE over the day index,
-    "events_burst_viterbi" ->
-      """WITH RECURSIVE d AS (SELECT event_type, date_trunc('day', ts) AS day,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         r1 AS (SELECT event_type, c, day,
-             CAST(row_number() OVER (PARTITION BY event_type
-               ORDER BY c, day) AS BIGINT) AS rn,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-           FROM d),
-         med AS (SELECT event_type, c AS med FROM r1 WHERE rn = (n + 1) // 2),
-         e AS MATERIALIZED (SELECT d.event_type,
-             CAST(row_number() OVER (PARTITION BY d.event_type
-               ORDER BY day) AS BIGINT) AS idx,
-             c, abs(c - med) AS el, abs(c - 2 * med) AS eh
-           FROM d JOIN med ON med.event_type = d.event_type),
-         dp AS (SELECT event_type, idx, c, el AS clow, eh + 40 AS chigh
-           FROM e WHERE idx = 1
-           UNION ALL
-           SELECT e.event_type, e.idx, e.c,
-             e.el + least(dp.clow, dp.chigh + 40),
-             e.eh + least(dp.chigh, dp.clow + 40)
-           FROM dp JOIN e ON e.event_type = dp.event_type
-             AND e.idx = dp.idx + 1)
-         SELECT event_type, idx, c, CAST(clow AS BIGINT) AS cost_low,
-           CAST(chigh AS BIGINT) AS cost_high
-         FROM dp ORDER BY event_type, idx""",
-    // per-value histogram, rank-16 palette, weighted L1 min join,
-    "events_circular_hour" -> {
-      val values = hourCirc.map { case (h, cq, sq) => s"($h, $cq, $sq)" }
-        .mkString(",")
-      s"""WITH circ(h, cq, sq) AS (VALUES $values),
-         hourly AS (SELECT event_type, CAST(hour(ts) AS INT) AS h,
-             CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         peak AS (SELECT event_type, h AS peak_hour FROM (SELECT event_type, h,
-             row_number() OVER (PARTITION BY event_type
-               ORDER BY c DESC, h) AS rn FROM hourly) t WHERE rn = 1),
-         agg AS (SELECT hourly.event_type,
-             CAST(sum(c) AS BIGINT) AS n_events,
-             CAST(sum(c * cq) AS BIGINT) AS rx_q,
-             CAST(sum(c * sq) AS BIGINT) AS ry_q
-           FROM hourly JOIN circ ON circ.h = hourly.h GROUP BY 1)
-         SELECT agg.event_type, n_events, rx_q, ry_q, peak_hour
-         FROM agg JOIN peak ON peak.event_type = agg.event_type
-         ORDER BY agg.event_type"""
-    },
-    // candidate pair scan over the occupied bin range, HUGEINT floors,
-    "events_naive_backtest" ->
-      """WITH d AS (SELECT event_type, date_trunc('day', ts) AS day,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         w AS (SELECT event_type, c,
-             CAST(row_number() OVER pw AS BIGINT) AS rn,
-             lag(c, 1) OVER pw AS l1, lag(c, 7) OVER pw AS l7
-           FROM d WINDOW pw AS (PARTITION BY event_type ORDER BY day))
-         SELECT event_type, CAST(count(*) AS BIGINT) AS n_eval,
-           CAST(sum(abs(c - l1)) AS BIGINT) AS sum_naive,
-           CAST(sum(abs(c - l7)) AS BIGINT) AS sum_snaive,
-           CASE WHEN sum(abs(c - l7)) < sum(abs(c - l1)) THEN 'seasonal'
-             WHEN sum(abs(c - l7)) > sum(abs(c - l1)) THEN 'naive'
-             ELSE 'tie' END AS winner
-         FROM w WHERE rn > 7 GROUP BY 1 ORDER BY event_type""",
-    // day partitions x custkey-range buckets, date + min/max pruning,
-    "events_late_arrival_census" ->
-      """WITH e AS (SELECT event_type, event_id,
-           epoch_us(ts) AS us FROM events),
-         w AS (SELECT event_type, us,
-             max(us) OVER (PARTITION BY event_type ORDER BY event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-               - 600000000 AS wm
-           FROM e)
-         SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-           CAST(sum(CASE WHEN us < wm THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-           CAST(COALESCE(max(CASE WHEN us < wm THEN wm - us END), 0)
-             AS BIGINT) AS max_lateness_us
-         FROM w GROUP BY 1 ORDER BY event_type""",
-    // one range join carries both box sums, cross-multiplied TPI signs,
-    "events_stl_lite" ->
-      """WITH d AS (SELECT event_type,
-           epoch_us(date_trunc('day', ts)) // 86400000000 AS day,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         w AS (SELECT event_type, day, c,
-             CAST(row_number() OVER pw AS BIGINT) AS rn,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
-             CAST(sum(c) OVER (pw ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING)
-               AS BIGINT) AS trend7
-           FROM d WINDOW pw AS (PARTITION BY event_type ORDER BY day)),
-         t2 AS (SELECT event_type, day, c, 7*c - trend7 AS det,
-             day % 7 AS dow FROM w WHERE rn >= 4 AND rn <= n - 3),
-         r2 AS (SELECT event_type, dow, det, day,
-             CAST(row_number() OVER (PARTITION BY event_type, dow
-               ORDER BY det, day) AS BIGINT) AS rk,
-             CAST(count(*) OVER (PARTITION BY event_type, dow) AS BIGINT) AS m
-           FROM t2),
-         med AS (SELECT event_type, dow, det AS seasonal_q FROM r2
-           WHERE rk = (m + 1) // 2)
-         SELECT t2.event_type, CAST(t2.dow AS BIGINT) AS dow,
-           CAST(count(*) AS BIGINT) AS n_obs,
-           CAST(max(seasonal_q) AS BIGINT) AS seasonal_q,
-           CAST(sum(abs(det - seasonal_q)) AS BIGINT) AS resid_l1
-         FROM t2 JOIN med ON med.event_type = t2.event_type
-           AND med.dow = t2.dow
-         GROUP BY 1, 2 ORDER BY t2.event_type, dow""",
-    // RGGB parity sites, 4-neighbour green sum vs x4 truth,
-    "events_pot_excess" ->
-      """WITH d AS (SELECT event_type, date_trunc('day', ts) AS day,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         r1 AS (SELECT event_type, c, day,
-             CAST(row_number() OVER (PARTITION BY event_type
-               ORDER BY c, day) AS BIGINT) AS rn,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-           FROM d),
-         thr AS (SELECT event_type, c AS u FROM r1
-           WHERE rn = (9 * n + 9) // 10)
-         SELECT d.event_type, CAST(count(*) AS BIGINT) AS n_days,
-           CAST(max(u) AS BIGINT) AS u,
-           CAST(sum(CASE WHEN c > u THEN 1 ELSE 0 END) AS BIGINT) AS n_exc,
-           CAST(sum(CASE WHEN c > u THEN c - u ELSE 0 END) AS BIGINT) AS sum_excess,
-           CAST(sum(CASE WHEN c > u THEN (c - u) * (c - u) ELSE 0 END)
-             AS BIGINT) AS sum_excess_sq,
-           CAST(COALESCE(max(CASE WHEN c > u THEN c - u END), 0)
-             AS BIGINT) AS max_excess
-         FROM d JOIN thr ON thr.event_type = d.event_type
-         GROUP BY 1 ORDER BY d.event_type""",
-    // 2x2 block-sum pyramid, per-level abs-detail sums,
-    "events_pretrend_check" ->
-      """WITH d AS (SELECT event_type,
-           epoch_us(date_trunc('day', ts)) // 86400000000 AS day,
-           CAST(count(*) AS BIGINT) AS c FROM events
-           WHERE event_type IN ('click', 'view') GROUP BY 1, 2),
-         d0 AS (SELECT min(day) AS d0 FROM d),
-         pre AS (SELECT event_type, day - d0 AS x, c FROM d, d0
-           WHERE day < d0 + 45),
-         p AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(x) AS BIGINT) AS sx, CAST(sum(c) AS BIGINT) AS sy,
-             CAST(sum(x * c) AS BIGINT) AS sxy,
-             CAST(sum(x * x) AS BIGINT) AS sxx
-           FROM pre GROUP BY 1),
-         pa AS (SELECT n AS n_a, n*sxy - sx*sy AS num_a,
-             n*sxx - sx*sx AS den_a FROM p WHERE event_type = 'click'),
-         pb AS (SELECT n AS n_b, n*sxy - sx*sy AS num_b,
-             n*sxx - sx*sx AS den_b FROM p WHERE event_type = 'view')
-         SELECT n_a, CAST(num_a AS BIGINT) AS num_a,
-           CAST(den_a AS BIGINT) AS den_a, n_b,
-           CAST(num_b AS BIGINT) AS num_b, CAST(den_b AS BIGINT) AS den_b,
-           CAST(num_a * den_b - num_b * den_a AS BIGINT) AS cross,
-           CAST(CASE WHEN num_a * num_b > 0 THEN 1
-             WHEN num_a * num_b < 0 THEN -1 ELSE 0 END AS INT) AS same_sign
-         FROM pa, pb""",
-    // shared rho CASE chain, 3 unrolled register-union + exact-pair rounds,
-    "events_cuped_pieces" ->
-      """WITH ev AS (SELECT user_id,
-           epoch_us(date_trunc('day', ts)) // 86400000000 AS day FROM events),
-         d0 AS (SELECT min(day) AS d0 FROM ev),
-         usr AS (SELECT user_id,
-             CAST(sum(CASE WHEN day < d0 + 45 THEN 1 ELSE 0 END) AS BIGINT) AS pre,
-             CAST(sum(CASE WHEN day >= d0 + 45 THEN 1 ELSE 0 END) AS BIGINT) AS post
-           FROM ev, d0 GROUP BY user_id, d0),
-         arms AS (SELECT user_id % 2 AS arm, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(pre) AS BIGINT) AS sx, CAST(sum(post) AS BIGINT) AS sy,
-             CAST(sum(pre * pre) AS BIGINT) AS sxx,
-             CAST(sum(pre * post) AS BIGINT) AS sxy
-           FROM usr GROUP BY 1),
-         pooled AS (SELECT CAST(count(*) AS BIGINT) AS pn,
-             CAST(sum(pre) AS BIGINT) AS px, CAST(sum(post) AS BIGINT) AS py,
-             CAST(sum(pre * pre) AS BIGINT) AS pxx,
-             CAST(sum(pre * post) AS BIGINT) AS pxy
-           FROM usr)
-         SELECT arm, n, sx, sy, sxx, sxy,
-           CAST(pn * pxy - px * py AS BIGINT) AS theta_num,
-           CAST(pn * pxx - px * px AS BIGINT) AS theta_den
-         FROM arms, pooled ORDER BY arm""",
-    // strict 8-neighbour maxima, rank-5, 3x3 moment numerators,
-    "events_median_polish" ->
-      """WITH m0 AS (SELECT event_type,
-           (epoch_us(date_trunc('day', ts)) // 86400000000) % 7 AS dow,
-           CAST(count(*) AS BIGINT) AS v FROM events GROUP BY 1, 2),
-         rm1 AS (SELECT event_type, v AS med FROM (SELECT event_type, v,
-             row_number() OVER (PARTITION BY event_type ORDER BY v, dow) AS rk,
-             count(*) OVER (PARTITION BY event_type) AS n FROM m0) t
-           WHERE rk = (n + 1) // 2),
-         m1 AS (SELECT m0.event_type, dow, v - med AS v
-           FROM m0 JOIN rm1 USING (event_type)),
-         cm1 AS (SELECT dow, v AS med FROM (SELECT dow, v,
-             row_number() OVER (PARTITION BY dow ORDER BY v, event_type) AS rk,
-             count(*) OVER (PARTITION BY dow) AS n FROM m1) t
-           WHERE rk = (n + 1) // 2),
-         m2 AS (SELECT event_type, m1.dow, v - med AS v
-           FROM m1 JOIN cm1 USING (dow)),
-         rm2 AS (SELECT event_type, v AS med FROM (SELECT event_type, v,
-             row_number() OVER (PARTITION BY event_type ORDER BY v, dow) AS rk,
-             count(*) OVER (PARTITION BY event_type) AS n FROM m2) t
-           WHERE rk = (n + 1) // 2),
-         m3 AS (SELECT m2.event_type, dow, v - med AS v
-           FROM m2 JOIN rm2 USING (event_type)),
-         cm2 AS (SELECT dow, v AS med FROM (SELECT dow, v,
-             row_number() OVER (PARTITION BY dow ORDER BY v, event_type) AS rk,
-             count(*) OVER (PARTITION BY dow) AS n FROM m3) t
-           WHERE rk = (n + 1) // 2),
-         m4 AS (SELECT event_type, m3.dow, v - med AS v
-           FROM m3 JOIN cm2 USING (dow)),
-         re AS (SELECT event_type,
-             CAST(rm1.med + rm2.med AS BIGINT) AS row_eff
-           FROM rm1 JOIN rm2 USING (event_type)),
-         ce AS (SELECT dow, CAST(cm1.med + cm2.med AS BIGINT) AS col_eff
-           FROM cm1 JOIN cm2 USING (dow))
-         SELECT m4.event_type, CAST(m4.dow AS BIGINT) AS dow,
-           CAST(v AS BIGINT) AS resid, row_eff, col_eff
-         FROM m4 JOIN re USING (event_type) JOIN ce USING (dow)
-         ORDER BY m4.event_type, dow""",
-    // sampled central-difference normals, resultant squared pieces,
-    "events_lorenz_deciles" ->
-      """WITH ua AS (SELECT event_type, user_id,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         r AS (SELECT event_type, c,
-             CAST(row_number() OVER (PARTITION BY event_type
-               ORDER BY c, user_id) AS BIGINT) AS rk,
-             CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n,
-             CAST(sum(c) OVER (PARTITION BY event_type) AS BIGINT) AS tot
-           FROM ua),
-         dec AS (SELECT event_type, ((rk - 1) * 10) // n AS decile,
-             CAST(count(*) AS BIGINT) AS n_users,
-             CAST(sum(c) AS BIGINT) AS sum_events,
-             CAST(max(tot) AS BIGINT) AS tot
-           FROM r GROUP BY 1, 2)
-         SELECT event_type, CAST(decile AS BIGINT) AS decile, n_users,
-           sum_events,
-           CAST(1000000 * sum(sum_events) OVER (PARTITION BY event_type
-             ORDER BY decile ROWS BETWEEN UNBOUNDED PRECEDING AND
-             CURRENT ROW) // tot AS BIGINT) AS cum_share_ppm
-         FROM dec ORDER BY event_type, decile""",
-    // time-shifted co-location equi-join, global top-10,
-    "events_rank_churn" ->
-      """WITH wk AS (SELECT event_type,
-           (epoch_us(date_trunc('day', ts)) // 86400000000) // 7 AS week,
-           CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1, 2),
-         r AS (SELECT week, event_type, c,
-             CAST(row_number() OVER (PARTITION BY week
-               ORDER BY c DESC, event_type) AS BIGINT) AS rk
-           FROM wk)
-         SELECT cur.week, cur.event_type, cur.c, cur.rk,
-           prev.rk AS prev_rk, prev.rk - cur.rk AS delta
-         FROM r cur JOIN r prev ON prev.week = cur.week - 1
-           AND prev.event_type = cur.event_type
-         ORDER BY cur.week, cur.event_type""",
-    // prefix-sum cost table, 3 DP joins, smallest-boundary backtrack,
-    "events_dau_mau" ->
-      """WITH du AS (SELECT DISTINCT user_id,
-           epoch_us(date_trunc('day', ts)) // 86400000000 AS day FROM events),
-         dau AS (SELECT day, CAST(count(*) AS BIGINT) AS dau
-           FROM du GROUP BY 1),
-         mau AS (SELECT d.day, CAST(count(DISTINCT a.user_id) AS BIGINT) AS mau28
-           FROM (SELECT day FROM dau) d
-           JOIN du a ON a.day <= d.day AND a.day > d.day - 28
-           GROUP BY 1)
-         SELECT dau.day, dau, mau28,
-           CAST(1000000 * dau // mau28 AS BIGINT) AS stickiness_ppm
-         FROM dau JOIN mau ON mau.day = dau.day ORDER BY dau.day"""
   )
 }

@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Geospatial gates: tiling, elevation sampling, spatial joins, terrain, cells
-  * (69 entries) with the DuckDB oracle SQL beside each query.
+  * (65 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QGeo1 {
@@ -62,54 +62,6 @@ object QGeo1 {
       ops.Rasterize.lineDensity(verts, cellsPerDeg = 100)
         .orderBy("cx", "cy")
     }),
-    // Composed trajectory pipeline (ops.Trajectory.cleanPipeline): speed
-    // cleaning -> time resampling -> 0.1-degree grid cells -> OD flows —
-    // the spatial analogue of curation_pipeline, gating the COMPOSITION of
-    // the already-gated stages.,
-    "geo_chaikin" -> ((s, dir) => {
-      val wseq = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id").orderBy("ts", "event_id")
-      var pts = t(s, dir, "events")
-        .filter(col("user_id") < 12)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          (col("event_id") % 7).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("x", sum("dx").over(wseq))
-        .withColumn("y", sum("dy").over(wseq))
-        .withColumn("pos", (row_number().over(wseq) - 1).cast("long"))
-        .filter(col("pos") < 8)
-        .select(col("user_id").as("traj_id"), col("pos"), col("x"), col("y"))
-      for (_ <- 1 to 2) {
-        val w = Window.partitionBy("traj_id").orderBy("pos")
-        val segs = pts
-          .withColumn("nx", lead("x", 1).over(w))
-          .withColumn("ny", lead("y", 1).over(w))
-          .withColumn("npos", lead("pos", 1).over(w))
-          .withColumn("rn", row_number().over(w))
-          .withColumn("nrows", count(lit(1)).over(
-            Window.partitionBy("traj_id")))
-        val inner = segs.filter(col("npos").isNotNull)
-          .select(col("traj_id"),
-            explode(array(
-              struct((col("pos") * 3 + col("npos")).as("pos"),
-                (col("x") * 3 + col("nx")).as("x"),
-                (col("y") * 3 + col("ny")).as("y")),
-              struct((col("pos") + col("npos") * 3).as("pos"),
-                (col("x") + col("nx") * 3).as("x"),
-                (col("y") + col("ny") * 3).as("y")))).as("p"))
-          .select(col("traj_id"), col("p.pos"), col("p.x"), col("p.y"))
-        val ends = segs.filter(col("rn") === 1 || col("rn") === col("nrows"))
-          .select(col("traj_id"), (col("pos") * 4).as("pos"),
-            (col("x") * 4).as("x"), (col("y") * 4).as("y"))
-        pts = inner.unionAll(ends).localCheckpoint(false)
-      }
-      val wi = Window.partitionBy("traj_id").orderBy("pos")
-      pts.withColumn("idx", row_number().over(wi))
-        .select(col("traj_id"), col("idx"), col("x").as("xq16"),
-          col("y").as("yq16"))
-        .orderBy("traj_id", "idx")
-    }),
-
     // ---- spatial core (F4/F9, J1/J4+F1/F2/F8, F6, z/x/y) ----,
     "geo_tile_key" -> ((s, dir) => {
       quadrantPoints(s, dir)
@@ -459,78 +411,6 @@ object QGeo1 {
         .groupBy("cell").agg(count(lit(1)).as("n"))
         .filter(col("n") >= 5)
         .orderBy(col("n").desc, col("cell"))
-    }),
-    // Moran's I spatial autocorrelation over an integer customer grid —
-    // THE hotspot-clustering diagnostic of spatial statistics (is density
-    // spatially clustered, dispersed, or random?). Exact rational form:
-    // deviations are scaled by n (z_i = n·x_i − Σx, integer), so numerator
-    // Σ_{rook-adjacent} z_i·z_j, denominator Σz_i² and the pair count W
-    // are all exact BIGINTs (the n² scale cancels in the ratio) and the
-    // final I = n·num / (W·den) is ONE IEEE division both engines agree
-    // on. Rook adjacency over OCCUPIED cells (the data-driven contract) is
-    // a 4-offset cell equi-join — per-cell state, never all-pairs, the
-    // plan a 1000-executor lattice would want.,
-    "geo_morans_i" -> ((s, dir) => {
-      val cellsDf = t(s, dir, "customer")
-        .selectExpr("(c_custkey % 360) DIV 8 AS cx",
-          "((c_custkey * 7) % 180) DIV 4 AS cy")
-        .groupBy("cx", "cy").agg(count(lit(1)).as("x"))
-        .localCheckpoint(false)
-      val tot = cellsDf.agg(count(lit(1)).as("n_cells"), sum("x").as("sx"))
-      val z = cellsDf.crossJoin(broadcast(tot))
-        .withColumn("z", col("n_cells") * col("x") - col("sx"))
-        .select("cx", "cy", "z")
-        .localCheckpoint(false)
-      val shifted = Seq((1, 0), (-1, 0), (0, 1), (0, -1)).map { case (dx, dy) =>
-        z.select((col("cx") + dx).as("cx"), (col("cy") + dy).as("cy"),
-          col("z").as("zn"))
-      }.reduce(_ unionAll _)
-      val pairs = z.join(shifted, Seq("cx", "cy"))
-        .agg(sum(col("z") * col("zn")).as("num"), count(lit(1)).as("w_pairs"))
-      val den = z.agg(sum(col("z") * col("z")).as("den"))
-      tot.select("n_cells").crossJoin(den).crossJoin(pairs)
-        // ANSI guard: Spark 4 throws DIVIDE_BY_ZERO even for doubles, and a
-        // lattice with NO rook-adjacent occupied pairs (tiny SFs) has
-        // w_pairs = 0 — Moran's I is undefined there, so emit NULL
-        .withColumn("morans_i",
-          when(col("w_pairs") * col("den") =!= 0,
-            (col("n_cells") * col("num")).cast("double") /
-              (col("w_pairs") * col("den")).cast("double")))
-        .select("n_cells", "w_pairs", "num", "den", "morans_i")
-    }),
-    // Getis–Ord Gi* hotspot flags — the LOCAL companion to geo_morans_i's
-    // global statistic: per occupied cell, is the rook-neighborhood sum
-    // (self included) significantly above the mean? The z² ≥ 1.96² test
-    // is EXACT integer cross-multiplication (precedent events_ab_test):
-    // with T=Σx, Q=Σx², L_i the local sum, W_i the neighborhood size,
-    // z² = (nL_i−TW_i)²(n−1) / [(nQ−T²)·W_i(n−W_i)] and 1.96² = 2401/625,
-    // so hot ⟺ num>0 ∧ 625·num²·(n−1) ≥ 2401·(nQ−T²)·W_i·(n−W_i). One
-    // 5-offset cell equi-join + one 3-value broadcast — per-cell state,
-    // the hotspot-detection plan a planetary grid wants.,
-    "geo_getis_hot" -> ((s, dir) => {
-      val cellsDf = t(s, dir, "customer")
-        .selectExpr("(c_custkey % 360) DIV 8 AS cx",
-          "((c_custkey * 7) % 180) DIV 4 AS cy")
-        .groupBy("cx", "cy").agg(count(lit(1)).as("x"))
-        .localCheckpoint(false)
-      val tot = cellsDf.agg(count(lit(1)).as("n"), sum("x").as("tx"),
-        sum(col("x") * col("x")).as("qx"))
-      val shifted = Seq((0, 0), (1, 0), (-1, 0), (0, 1), (0, -1))
-        .map { case (dx, dy) =>
-          cellsDf.select((col("cx") + dx).as("cx"), (col("cy") + dy).as("cy"),
-            col("x").as("xn"))
-        }.reduce(_ unionAll _)
-      cellsDf.join(shifted, Seq("cx", "cy"))
-        .groupBy("cx", "cy")
-        .agg(max("x").as("x"), sum("xn").as("li"), count(lit(1)).as("wi"))
-        .crossJoin(broadcast(tot))
-        .withColumn("num", col("n") * col("li") - col("tx") * col("wi"))
-        .withColumn("hot", when(col("num") > 0 &&
-            lit(625L) * col("num") * col("num") * (col("n") - 1) >=
-            lit(2401L) * (col("n") * col("qx") - col("tx") * col("tx")) *
-              col("wi") * (col("n") - col("wi")), 1L).otherwise(0L))
-        .select("cx", "cy", "x", "li", "wi", "num", "hot")
-        .orderBy("cx", "cy")
     }),
     // Vector→raster burn (rasterize): pixel centers on an EXACT 1/64°
     // lattice (px = −120 + (2·gi+1)/128 — power-of-two divisions, zero
@@ -978,14 +858,6 @@ object QGeo1 {
         .selectExpr("child", "child div 2 AS parent")
       ops.FlowGraph.strahler(e).orderBy("node")
     }),
-    // Basin areas: the watershed labels rolled up per sink — how much of
-    // the grid drains to each outlet (downstream composition of the
-    // pointer-doubled labels).,
-    "geo_basin_size" -> ((s, dir) => {
-      queries("geo_watershed")(s, dir)
-        .groupBy("sink").agg(count(lit(1)).cast("long").as("n_cells"))
-        .orderBy("sink")
-    }),
     // Bounded-radius map matching: snap sampled customer points onto the
     // nearest lineitem-derived segment within 0.05°; grid-ring candidates
     // are exact at cell size = radius.,
@@ -1033,7 +905,6 @@ object QGeo1 {
            FROM s, unnest(range(0, s.steps + 1)) AS k(kk))
          SELECT cx, cy, CAST(count(*) AS BIGINT) AS n_lines
          FROM tr GROUP BY 1, 2 ORDER BY cx, cy""",
-    "geo_chaikin" -> chaikinOracleSql,
     "geo_tile_key" ->
       """WITH pts AS (SELECT c_custkey AS point_id,
            -180 + (c_custkey % 360) + 0.5 AS lng,
@@ -1425,46 +1296,6 @@ object QGeo1 {
     "geo_cell_density" ->
       s"""SELECT cell, count(*) AS n FROM (${hexOracleSql(quadrantPtsCte, 7)})
          GROUP BY cell HAVING count(*) >= 5 ORDER BY n DESC, cell""",
-    // Moran's I in exact rationals: z_i = n·x_i − Σx keeps deviations
-    // integer (the n² cancels in the ratio); ONE IEEE division at the end,
-    "geo_morans_i" ->
-      """WITH cells AS (SELECT (c_custkey % 360) // 8 AS cx,
-             ((c_custkey * 7) % 180) // 4 AS cy, count(*) AS x
-           FROM customer GROUP BY 1, 2),
-         tot AS (SELECT count(*) AS n_cells, CAST(sum(x) AS BIGINT) AS sx FROM cells),
-         z AS (SELECT cx, cy, n_cells * x - sx AS z FROM cells, tot),
-         offs(dx, dy) AS (VALUES (1,0),(-1,0),(0,1),(0,-1)),
-         pairs AS (SELECT CAST(sum(a.z * b.z) AS BIGINT) AS num,
-             count(*) AS w_pairs
-           FROM z a JOIN offs o ON true
-           JOIN z b ON b.cx = a.cx + o.dx AND b.cy = a.cy + o.dy),
-         den AS (SELECT CAST(sum(z*z) AS BIGINT) AS den FROM z)
-         SELECT CAST(n_cells AS BIGINT) AS n_cells,
-           CAST(w_pairs AS BIGINT) AS w_pairs, num, den,
-           CAST(n_cells * num AS DOUBLE) / CAST(w_pairs * den AS DOUBLE) AS morans_i
-         FROM tot, den, pairs""",
-    // Gi* hotspots: same occupied-cell grid, 5-offset (self + rook)
-    // neighborhood join, exact integer z² cross-multiplication,
-    "geo_getis_hot" ->
-      """WITH cells AS (SELECT (c_custkey % 360) // 8 AS cx,
-             ((c_custkey * 7) % 180) // 4 AS cy, count(*) AS x
-           FROM customer GROUP BY 1, 2),
-         tot AS (SELECT count(*) AS n, CAST(sum(x) AS BIGINT) AS tx,
-             CAST(sum(x*x) AS BIGINT) AS qx FROM cells),
-         offs(dx, dy) AS (VALUES (0,0),(1,0),(-1,0),(0,1),(0,-1)),
-         loc AS (SELECT a.cx, a.cy, max(a.x) AS x,
-             CAST(sum(b.x) AS BIGINT) AS li, count(*) AS wi
-           FROM cells a JOIN offs o ON true
-           JOIN cells b ON b.cx = a.cx + o.dx AND b.cy = a.cy + o.dy
-           GROUP BY a.cx, a.cy)
-         SELECT CAST(cx AS BIGINT) AS cx, CAST(cy AS BIGINT) AS cy,
-           CAST(x AS BIGINT) AS x, li, CAST(wi AS BIGINT) AS wi,
-           CAST(n*li - tx*wi AS BIGINT) AS num,
-           CAST(CASE WHEN n*li - tx*wi > 0
-             AND 625*(n*li - tx*wi)*(n*li - tx*wi)*(n-1) >=
-                 2401*(n*qx - tx*tx)*wi*(n-wi)
-             THEN 1 ELSE 0 END AS BIGINT) AS hot
-         FROM loc, tot ORDER BY cx, cy""",
     // rasterize: the zonal triangle family against exact 1/64° pixel
     // centers, even-odd PIP per center, per-pixel covering count,
     "geo_rasterize" ->
@@ -1754,9 +1585,6 @@ object QGeo1 {
          $rounds
          SELECT node, CAST(ord AS BIGINT) AS strahler_ord FROM a9 ORDER BY node"""
     },
-    "geo_basin_size" ->
-      s"""SELECT sink, CAST(count(*) AS BIGINT) AS n_cells
-         FROM ($watershedOracleSql) GROUP BY 1 ORDER BY 1""",
     "geo_snap" ->
       """WITH probes AS (SELECT c_custkey AS probe_id,
            -120 + (c_custkey % 4) + ((c_custkey % 577) + 0.5)/577.0 AS px,

@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Geospatial gates: tiling, elevation sampling, spatial joins, terrain, cells
-  * (43 entries) with the DuckDB oracle SQL beside each query.
+  * (29 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QGeo2 {
@@ -127,210 +127,6 @@ object QGeo2 {
         .orderBy("poly_id")
     }),
 
-    // ---- checkpoint / lineage (north rule: partition-granular resume) ----
-    // Writes orders through the resumable bucketed writer, killing the run
-    // after 3 of 12 bucket commits, then resumes and reads the table back.
-    // The oracle sees the same aggregate as a direct query — proving the
-    // kill/resume produced exactly-once content.,
-    "geo_ring_buffer" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-      val ctr = s.createDataFrame(stIncidents)
-        .toDF("center_id", "ix", "iy", "its").drop("its")
-      pts.crossJoin(broadcast(ctr))
-        .withColumn("d2", expr(
-          "(px - ix) * (px - ix) + (py - iy) * (py - iy)"))
-        .withColumn("ring", expr(
-          "CASE WHEN d2 <= 2500 THEN 1 WHEN d2 <= 10000 THEN 2 " +
-            "WHEN d2 <= 40000 THEN 3 WHEN d2 <= 160000 THEN 4 END"))
-        .filter(col("ring").isNotNull)
-        .groupBy("center_id", "ring")
-        .agg(count(lit(1)).as("n_fixes"),
-          countDistinct("user_id").as("n_traj"))
-        .orderBy("center_id", "ring")
-    }),
-    // recall@5 of the trained+refined IVF-PQ vs the exact L2 baseline —
-    // the acceptance gate for the training loop (VERDICT r3: within ~0.1
-    // of the probe ceiling, vs the demo codebook's 0.024; measured 0.608
-    // against the trained coarse ceiling 0.624 at sf0.01).,
-    "geo_clark_evans" -> ((s, dir) => {
-      val pts = t(s, dir, "customer").filter(col("c_custkey") <= 500)
-        .selectExpr("c_custkey AS pid", "(c_custkey * 7) % 1201 AS x",
-          "(c_custkey * 13) % 1009 AS y")
-      val nn = pts.as("a").join(pts.as("b"),
-          col("a.pid") =!= col("b.pid"))
-        .select(col("a.pid").as("pid"),
-          expr("(a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)")
-            .as("d2"))
-        .groupBy("pid").agg(min("d2").as("nn_d2"))
-        .withColumn("nn_d_milli", expr(
-          "CAST(floor(sqrt(CAST(nn_d2 AS DOUBLE)) * 1000.0) AS BIGINT)"))
-      nn.agg(count(lit(1)).as("n"),
-          sum("nn_d_milli").as("sum_nn_d_milli"),
-          min("nn_d2").as("min_nn_d2"), max("nn_d2").as("max_nn_d2"))
-        .crossJoin(pts.agg(
-          (max("x") - min("x")).as("extent_x"),
-          (max("y") - min("y")).as("extent_y")))
-    }),
-    // Histogram-matching LUT between epochs: quantized-level CDFs of the
-    // curvy field (A) and the plane (B), mapped(l) = min m with
-    // cdf_B(m) ≥ cdf_A(l) — the radiometric-normalization table a mosaic
-    // build applies before compositing. Stats-only theta join (≤ 64×64
-    // per image).,
-    "geo_mann_kendall" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-      val daily = pts.groupBy(expr("px DIV 200").as("cell_x"),
-          expr("py DIV 50").as("cell_y"),
-          date_trunc("day", col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val srt = daily.withColumn("i", row_number().over(
-        Window.partitionBy("cell_x", "cell_y").orderBy("day")).cast("long"))
-      val prs = srt.as("a").join(srt.as("b"),
-          col("a.cell_x") === col("b.cell_x") &&
-            col("a.cell_y") === col("b.cell_y") && col("a.i") < col("b.i"))
-        .select(col("a.cell_x").as("cell_x"), col("a.cell_y").as("cell_y"),
-          expr("CASE WHEN b.c > a.c THEN 1 WHEN b.c < a.c THEN -1 " +
-            "ELSE 0 END").cast("long").as("sgn"))
-      val sa = prs.groupBy("cell_x", "cell_y")
-        .agg(sum("sgn").as("s_stat"), count(lit(1)).as("n_pairs"))
-      val nd = srt.groupBy("cell_x", "cell_y")
-        .agg(count(lit(1)).as("n_days"))
-      val tt = srt.groupBy("cell_x", "cell_y", "c")
-        .agg(count(lit(1)).as("t"))
-        .groupBy("cell_x", "cell_y")
-        .agg(sum(expr("t * (t - 1) * (2 * t + 5)")).as("tie_term"))
-      nd.join(sa, Seq("cell_x", "cell_y"))
-        .join(tt, Seq("cell_x", "cell_y"))
-        .withColumn("trend", expr(
-          "CASE WHEN s_stat > 0 THEN 1 WHEN s_stat < 0 THEN -1 ELSE 0 END"))
-        .orderBy("cell_x", "cell_y")
-    }),
-    // Winsorized robust rollup per type: nearest-rank p5/p95 fences, the
-    // clamped sum and both clamp counts — the outlier-resistant revenue
-    // aggregate next to events_mad/events_iqr's detection reads. Two
-    // windows + one broadcast-back join.,
-    "geo_sector_cover" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-        .selectExpr("user_id AS traj_id", "px", "py")
-      val ants = s.createDataFrame(sectorAntennas)
-        .toDF("antenna_id", "cx", "cy", "d1x", "d1y", "d2x", "d2y", "r2")
-      pts.crossJoin(broadcast(ants))
-        .withColumn("vx", col("px") - col("cx"))
-        .withColumn("vy", col("py") - col("cy"))
-        .withColumn("inside",
-          expr("d1x * vy - d1y * vx >= 0 AND vx * d2y - vy * d2x >= 0 " +
-            "AND vx * vx + vy * vy <= r2"))
-        .groupBy("antenna_id")
-        .agg(count(lit(1)).as("n_pts"),
-          sum(when(col("inside"), 1L).otherwise(0L)).as("n_in"),
-          countDistinct(when(col("inside"), col("traj_id"))).as("n_traj"))
-        .orderBy("antenna_id")
-    }),
-    // Dominant periodicity pick (the beat/cadence read): per asset the
-    // window-energy autocorrelation at lags 2..16, scored by the floored
-    // per-term mean product so unequal overlap counts compare fairly;
-    // argmax by (score desc, lag). One key-bounded band self-join.,
-    "geo_st_join" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-        .withColumn("tus", expr("unix_micros(CAST(ts AS TIMESTAMP))"))
-      val inc = s.createDataFrame(stIncidents)
-        .toDF("inc_id", "ix", "iy", "its")
-        .withColumn("itus", expr("unix_micros(CAST(its AS TIMESTAMP))"))
-      pts.crossJoin(broadcast(inc))
-        .withColumn("d2", expr(
-          "(px - ix) * (px - ix) + (py - iy) * (py - iy)"))
-        .withColumn("near",
-          col("d2") <= 2500L && abs(col("tus") - col("itus")) <= 43200000000L)
-        .groupBy("inc_id")
-        .agg(count(lit(1)).as("n_fixes"),
-          sum(when(col("near"), 1L).otherwise(0L)).as("n_near"),
-          countDistinct(when(col("near"), col("user_id"))).as("n_traj"),
-          min(when(col("near"), col("d2"))).as("min_d2"))
-        .orderBy("inc_id")
-    }),
-    // Partition-spec evolution pruning audit: half the files live under
-    // the OLD range spec (identity min/max pruning), half under the NEW
-    // hash spec (bucket pruning) — point queries prune both; RANGE
-    // queries prune only the range spec (hash must scan all) — the exact
-    // trade an Iceberg spec migration buys and loses, as one stats-only
-    // broadcast join.,
-    "geo_cover_redundancy" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-        .withColumn("fix_id",
-          expr("user_id * 1000000 + event_id"))
-      val ants = s.createDataFrame(sectorAntennas)
-        .toDF("antenna_id", "cx", "cy", "d1x", "d1y", "d2x", "d2y", "r2")
-      pts.crossJoin(broadcast(ants))
-        .withColumn("vx", col("px") - col("cx"))
-        .withColumn("vy", col("py") - col("cy"))
-        .withColumn("inside",
-          expr("d1x * vy - d1y * vx >= 0 AND vx * d2y - vy * d2x >= 0 " +
-            "AND vx * vx + vy * vy <= r2"))
-        .groupBy("fix_id")
-        .agg(sum(when(col("inside"), 1L).otherwise(0L)).as("n_covering"))
-        .groupBy("n_covering").agg(count(lit(1)).as("n_fixes"))
-        .orderBy("n_covering")
-    }),
-    // Two-NN ratio histogram (Facco et al. intrinsic-dimension input):
-    // per vector the 1st/2nd neighbour squared-distance ratio ×1000
-    // (floored), bucketed — flat near 1000 means high intrinsic
-    // dimension; the manifold-dimension read over ann_dim_variance's
-    // axis view.,
-    "geo_winding_rule" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val (upSql, dnSql) = ringCrossingsSql(bowtieRing)
-      val pts = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-      pts.withColumn("up", expr(upSql)).withColumn("dn", expr(dnSql))
-        .withColumn("evenodd", (col("up") + col("dn")) % 2 === 1)
-        .withColumn("nonzero", (col("up") - col("dn")) =!= 0)
-        .groupBy(col("user_id").as("traj_id"))
-        .agg(count(lit(1)).as("n_pts"),
-          sum(when(col("evenodd"), 1L).otherwise(0L)).as("n_evenodd"),
-          sum(when(col("nonzero"), 1L).otherwise(0L)).as("n_nonzero"),
-          sum(when(col("evenodd") =!= col("nonzero"), 1L).otherwise(0L))
-            .as("n_disagree"))
-        .orderBy("traj_id")
-    }),
     // Component-size distribution (large-star/small-star CC + histogram):
     // the dedup-blast-radius read — how many merge groups of each size a
     // connected-components pass produces; O(log n) CC rounds, two
@@ -383,66 +179,6 @@ object QGeo2 {
         .agg(min("level").as("level"))
         .withColumn("decile", col("decile").cast("int"))
         .orderBy("image_id", "decile")
-    }),
-    // Truncated absorbing-chain expected steps: transition shares in ppm
-    // (floored), E' = 1 + P·E unrolled 6 rounds with 'purchase' absorbing
-    // — "how many events until a purchase from each state", the
-    // analytic layer over events_transition's raw matrix.,
-    "geo_access_quantiles" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-      val ctr = s.createDataFrame(stIncidents)
-        .toDF("center_id", "ix", "iy", "its").drop("its")
-      val md = pts.crossJoin(broadcast(ctr))
-        .withColumn("d2", expr(
-          "(px - ix) * (px - ix) + (py - iy) * (py - iy)"))
-        .groupBy(col("user_id").as("traj_id"), col("event_id"))
-        .agg(min("d2").as("min_d2"))
-      val wv = Window.partitionBy("traj_id").orderBy("min_d2", "event_id")
-      val wp = Window.partitionBy("traj_id")
-      md.withColumn("rn", row_number().over(wv).cast("long"))
-        .withColumn("n", count(lit(1)).over(wp))
-        .groupBy("traj_id")
-        .agg(max("n").as("n_fixes"),
-          max(when(col("rn") === expr("(n - 1) * 50 DIV 100 + 1"),
-            col("min_d2"))).as("p50_d2"),
-          max(when(col("rn") === expr("(n - 1) * 95 DIV 100 + 1"),
-            col("min_d2"))).as("p95_d2"))
-        .orderBy("traj_id")
-    }),
-    // Week-over-week growth: per type the weekly counts (epoch-week,
-    // engine-neutral) with lagged growth ppm — the BI trend table above
-    // events_wau's snapshot.,
-    "geo_sector_overlap" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-        .withColumn("fix_id", expr("user_id * 1000000 + event_id"))
-      val ants = s.createDataFrame(sectorAntennas)
-        .toDF("antenna_id", "cx", "cy", "d1x", "d1y", "d2x", "d2y", "r2")
-      val m = pts.crossJoin(broadcast(ants))
-        .filter(expr("d1x * (py - cy) - d1y * (px - cx) >= 0 AND " +
-          "(px - cx) * d2y - (py - cy) * d2x >= 0 AND " +
-          "(px - cx) * (px - cx) + (py - cy) * (py - cy) <= r2"))
-        .select(col("fix_id"), col("antenna_id"))
-      m.as("x").join(m.as("y"),
-          col("x.fix_id") === col("y.fix_id") &&
-            col("x.antenna_id") < col("y.antenna_id"))
-        .groupBy(col("x.antenna_id").as("ant_a"),
-          col("y.antenna_id").as("ant_b"))
-        .agg(count(lit(1)).as("n_common"))
-        .orderBy("ant_a", "ant_b")
     }),
     // Per-trajectory speed quantiles: exact integer µunit/s Manhattan
     // speeds per segment, nearest-rank p50/p95 — the mobility profile
@@ -596,65 +332,13 @@ object QGeo2 {
         .crossJoin(jumps("hkey", "hilbert"))
         .crossJoin(jumps("mkey", "morton"))
     }),
-    // Weekday-profile distance matrix: per type the day-of-week share
-    // vector in exact ppm, pairwise L1 — which behaviors share a weekly
-    // rhythm; 7-dim stats joins only.,
-    "geo_grid_crossings" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-      val seg = pts
-        .withColumn("ppx", lag("px", 1).over(w))
-        .withColumn("ppy", lag("py", 1).over(w))
-        .filter(col("ppx").isNotNull)
-        .withColumn("cx", expr("abs(px DIV 64 - ppx DIV 64)"))
-        .withColumn("cy", expr("abs(py DIV 16 - ppy DIV 16)"))
-      seg.groupBy(col("user_id").as("traj_id"))
-        .agg(count(lit(1)).as("n_seg"),
-          sum("cx").as("cross_x"), sum("cy").as("cross_y"),
-          max(expr("cx + cy")).as("max_seg_cross"))
-        .orderBy("traj_id")
-    }),
     // NFD compaction bin packing (ops.Curation.binPackNfd): per table
     // partition, manifest files sorted (size desc, id) fill 512-unit bins
-    // greedily — the OPTIMIZE plan next to store_overlap_depth's trigger
-    // metric; the oracle walks the identical recurrence as a recursive
+    // greedily — the OPTIMIZE plan; the oracle walks the identical
+    // recurrence as a recursive
     // CTE. Key-bounded mapGroups over metadata-scale rows.,
     "geo_contours" -> ((s, dir) => {
       ops.ImageOps.contourCensus(gateTiles(s), 1800).orderBy("image_id")
-    }),
-    // Geometric augmentation (flip_h/flip_v/rot90) pinned by
-    // position-WEIGHTED moments (Σ v·r, Σ v·c): the engine permutes the
-    // grid, re-encodes HGT, re-decodes and sums; the oracle derives the
-    // transformed moments from the closed-form grid via the permutation
-    // identities (e.g. flip_h: c_moment' = m·Σv − c_moment). The 'none'
-    // lane anchors the base moments through the same decode path.,
-    "geo_idw_loocv" -> ((s, dir) => {
-      val st = t(s, dir, "supplier").selectExpr("s_suppkey AS st_id",
-        "(s_suppkey * 37) % 500 AS x", "(s_suppkey * 53) % 500 AS y",
-        "s_suppkey % 200 + 50 AS v")
-      val nb = st.selectExpr("st_id", "x", "y", "v AS va")
-        .join(broadcast(st.selectExpr("st_id AS nb_id", "x AS nx",
-          "y AS ny", "v AS nv")), col("st_id") =!= col("nb_id"))
-        .withColumn("d2", expr(
-          "(x - nx) * (x - nx) + (y - ny) * (y - ny)"))
-        .filter(col("d2") <= 14400L)
-        .withColumn("w", expr("1000000000 DIV greatest(d2, 1)"))
-      nb.groupBy("st_id")
-        .agg(count(lit(1)).as("n_nb"), max("va").as("va"),
-          sum(expr("w * nv")).as("wv"), sum("w").as("ws"))
-        .withColumn("pred_milli", expr("wv * 1000 DIV ws"))
-        .withColumn("actual_milli", expr("va * 1000"))
-        .withColumn("abs_err_milli",
-          expr("abs(pred_milli - actual_milli)"))
-        .select("st_id", "n_nb", "pred_milli", "actual_milli",
-          "abs_err_milli")
-        .orderBy("st_id")
     }),
     // Value-based RANGE window frame surface: per type, for each distinct
     // cents level the event mass within ±500 cents — the sliding
@@ -684,26 +368,6 @@ object QGeo2 {
     "geo_pit_census" -> ((s, dir) => {
       ops.ImageOps.pitCensus(gateTiles(s)).orderBy("image_id")
     }),
-    // Inter-sample true peak (ops.MediaOps.truePeak): Catmull-Rom
-    // half-sample oversampling in x16 integers — the BS.1770-style
-    // compliance number a sample-peak meter underreads.,
-    "geo_antimeridian_split" -> ((s, dir) => {
-      t(s, dir, "supplier").selectExpr("s_suppkey AS seg_id",
-          "177000000 + (s_suppkey % 30) * 100000 AS lng1",
-          "30000000 + (s_suppkey % 50) * 200000 AS lat1",
-          """CASE WHEN s_suppkey % 4 = 0 THEN 179800000
-             ELSE -180000000 + ((s_suppkey * 3) % 25) * 100000 END AS lng2""",
-          "30000000 + (s_suppkey % 50) * 200000 + (s_suppkey % 30) * 100000 AS lat2")
-        .selectExpr("seg_id", "CASE WHEN lng2 < 0 THEN 1 ELSE 0 END AS crosses",
-          """CASE WHEN lng2 < 0 THEN lat1 + (lat2 - lat1) * (180000000 - lng1)
-               DIV ((180000000 - lng1) + (lng2 + 180000000))
-             ELSE CAST(NULL AS BIGINT) END AS lat_cross_micro""",
-          """CASE WHEN lng2 < 0
-             THEN (180 - lng1 DIV 1000000) + ((lng2 + 180000000) DIV 1000000 + 1)
-             ELSE greatest(lng1, lng2) DIV 1000000
-                - least(lng1, lng2) DIV 1000000 + 1 END AS n_tiles""")
-        .orderBy("seg_id")
-    }),
     // SumBasic-style extractive pick: corpus word frequencies score each
     // 10-word chunk (quantized mean frequency, argmax per doc, ties to
     // the earliest chunk) — the classic frequency-summarization primitive
@@ -711,47 +375,6 @@ object QGeo2 {
     "geo_fill_depressions" -> ((s, dir) => {
       ops.ImageOps.fillDepressions(gateTiles(s), off = 80, n = 40,
         rounds = 32).orderBy("image_id")
-    }),
-    // VoteRank spreader seeding (ops.Graph.voteRank): 4 elections with
-    // milli-ability discounting — influence-set selection where each
-    // elected hub suppresses its own neighbourhood.,
-    "geo_emerging_hotspot" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          (col("event_id") % 7).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-        .selectExpr("(px DIV 6) * 1000000 + (py DIV 4) AS cell",
-          "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 AS day")
-      val d0 = pts.agg(min("day")).head().getLong(0)
-      val binned = pts.selectExpr("cell", s"(day - ${d0}L) DIV 15 AS bin")
-        .filter(col("bin") < 6)
-        .groupBy("cell", "bin").agg(count(lit(1)).as("c"))
-      val full = binned.select("cell").distinct()
-        .crossJoin(s.range(0, 6).toDF("bin"))
-        .join(binned, Seq("cell", "bin"), "left")
-        .withColumn("c", coalesce(col("c"), lit(0L)))
-      val mk = full.select(col("cell"), col("bin").as("bi"), col("c").as("ci"))
-        .join(full.select(col("cell"), col("bin").as("bj"), col("c").as("cj")),
-          Seq("cell"))
-        .filter(col("bi") < col("bj"))
-        .groupBy("cell")
-        .agg(sum(expr(
-          "CASE WHEN cj > ci THEN 1 WHEN cj < ci THEN -1 ELSE 0 END")).as("s_mk"))
-      full.groupBy("cell")
-        .agg(sum(when(col("bin") === 0, col("c"))).as("first_c"),
-          sum(when(col("bin") === 5, col("c"))).as("last_c"),
-          sum("c").as("total"))
-        .join(mk, Seq("cell"))
-        .withColumn("class", expr(
-          """CASE WHEN s_mk >= 8 THEN 'intensifying'
-             WHEN s_mk <= -8 THEN 'diminishing'
-             WHEN first_c = 0 AND last_c > 0 THEN 'new'
-             ELSE 'stable' END"""))
-        .select("cell", "s_mk", "first_c", "last_c", "total", "class")
-        .orderBy("cell")
     }),
     // Run-length texture pieces (ops.ImageOps.glrlm): Galloway GLRLM
     // short/long-run emphasis + gray-level non-uniformity, exact.,
@@ -794,9 +417,6 @@ object QGeo2 {
       ops.ImageOps.irradianceSum(gateTiles(s), sunVectors)
         .orderBy("image_id")
     }),
-    // Parallel-trends (pre-period) check for the DiD pair: exact OLS
-    // slope pieces per arm on the first 45 days and the cross-multiplied
-    // slope difference — the identification test events_did assumes.,
     "geo_swath_profile" -> ((s, dir) => {
       ops.ImageOps.swathProfile(gateTiles(s)).orderBy("image_id", "bin")
     }),
@@ -813,37 +433,6 @@ object QGeo2 {
     "geo_area_weighted_interp" -> ((s, dir) => {
       ops.ImageOps.arealInterp(gateTiles(s)).orderBy("image_id", "tr", "tc")
     }),
-    // Home/work anchor detection: per user the modal activity cell in
-    // night (0-6) vs office (9-17) hours (ties to the smaller cell) —
-    // the anchor-inference step of every mobility pipeline.,
-    "geo_join_selectivity" -> ((s, dir) => {
-      val pts = gatePoints(s, dir)
-        .selectExpr("point_id", "lng", "lat",
-          "CAST(floor(lng * 10.0D) AS BIGINT) AS cx",
-          "CAST(floor(lat * 10.0D) AS BIGINT) AS cy")
-      val polys = trianglePolys(s, dir).selectExpr("poly_id",
-          "array_min(xs) AS minx", "array_max(xs) AS maxx",
-          "array_min(ys) AS miny", "array_max(ys) AS maxy")
-      val pcells = polys.selectExpr("poly_id", "minx", "maxx", "miny", "maxy",
-          """explode(sequence(CAST(floor(minx * 10.0D) AS BIGINT),
-             CAST(floor(maxx * 10.0D) AS BIGINT))) AS cx""")
-        .selectExpr("poly_id", "minx", "maxx", "miny", "maxy", "cx",
-          """explode(sequence(CAST(floor(miny * 10.0D) AS BIGINT),
-             CAST(floor(maxy * 10.0D) AS BIGINT))) AS cy""")
-      val ph = pts.groupBy("cx", "cy").agg(count(lit(1)).as("np"))
-      val gh = pcells.groupBy("cx", "cy").agg(count(lit(1)).as("ng"))
-      val est = ph.join(gh, Seq("cx", "cy"))
-        .agg(sum(expr("np * ng")).as("est_pairs"))
-      val actual = pts.join(pcells, Seq("cx", "cy"))
-        .filter(col("lng") >= col("minx") && col("lng") <= col("maxx") &&
-          col("lat") >= col("miny") && col("lat") <= col("maxy"))
-        .select("point_id", "poly_id").distinct()
-        .agg(count(lit(1)).as("actual_pairs"))
-      pts.agg(count(lit(1)).as("n_points"))
-        .crossJoin(polys.agg(count(lit(1)).as("n_polys")))
-        .crossJoin(est).crossJoin(actual)
-        .withColumn("ratio_ppm", expr("1000000 * actual_pairs DIV est_pairs"))
-    }),
     // IVF candidate accounting: per query the two probed lists and the
     // exact fraction of the corpus scanned (the latency-proxy number
     // that justifies IVF over brute force at scale).,
@@ -851,9 +440,6 @@ object QGeo2 {
       ops.ImageOps.terrainRose(gateTiles(s))
         .orderBy("image_id", "octant", "band")
     }),
-    // Metadata-vs-payload consistency: delivered samples against the
-    // duration x 8 samples/ms contract, signed drift in ppm — the ingest
-    // truncation/padding audit run before any media op trusts duration.
   )
 
   val sql: Map[String, String] = Map(
@@ -929,179 +515,6 @@ object QGeo2 {
            (0.0 + (x0+x1)*cr0 + (x1+x2)*cr1 + (x2+x0)*cr2) / (3.0 * (0.0 + cr0 + cr1 + cr2)) AS cxc,
            (0.0 + (y0+y1)*cr0 + (y1+y2)*cr1 + (y2+y0)*cr2) / (3.0 * (0.0 + cr0 + cr1 + cr2)) AS cyc
          FROM c ORDER BY poly_id""",
-    // ocr garbage: same planted tokens, same regex ladder via
-    // regexp_matches, same ppm floor division,
-    "geo_ring_buffer" -> {
-      val ctrRows = stIncidents.map { case (id, ix, iy, _) =>
-        s"(CAST($id AS BIGINT), $ix, $iy)"
-      }.mkString(", ")
-      s"""WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c AS (SELECT user_id,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         ctr(center_id, ix, iy) AS (VALUES $ctrRows),
-         m AS (SELECT center_id, user_id,
-             CASE WHEN d2 <= 2500 THEN 1 WHEN d2 <= 10000 THEN 2
-                  WHEN d2 <= 40000 THEN 3 WHEN d2 <= 160000 THEN 4 END AS ring
-           FROM (SELECT center_id, user_id,
-               (px-ix)*(px-ix) + (py-iy)*(py-iy) AS d2 FROM c, ctr) q)
-         SELECT center_id, ring, CAST(count(*) AS BIGINT) AS n_fixes,
-           CAST(count(DISTINCT user_id) AS BIGINT) AS n_traj
-         FROM m WHERE ring IS NOT NULL GROUP BY 1, 2
-         ORDER BY center_id, ring"""
-    },
-    // the walk cumsum + incident VALUES, identical distance/time gates,
-    "geo_clark_evans" ->
-      """WITH pts AS (SELECT c_custkey AS pid, (c_custkey * 7) % 1201 AS x,
-           (c_custkey * 13) % 1009 AS y
-           FROM customer WHERE c_custkey <= 500),
-         nn AS (SELECT a.pid,
-             min((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y))
-               AS nn_d2
-           FROM pts a JOIN pts b ON b.pid <> a.pid GROUP BY 1),
-         q AS (SELECT pid, nn_d2,
-             CAST(floor(sqrt(CAST(nn_d2 AS DOUBLE)) * 1000.0) AS BIGINT)
-               AS nn_d_milli FROM nn),
-         agg AS (SELECT CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(nn_d_milli) AS BIGINT) AS sum_nn_d_milli,
-             CAST(min(nn_d2) AS BIGINT) AS min_nn_d2,
-             CAST(max(nn_d2) AS BIGINT) AS max_nn_d2 FROM q),
-         bb AS (SELECT CAST(max(x) - min(x) AS BIGINT) AS extent_x,
-             CAST(max(y) - min(y) AS BIGINT) AS extent_y FROM pts)
-         SELECT n, sum_nn_d_milli, min_nn_d2, max_nn_d2, extent_x,
-           extent_y
-         FROM agg, bb""",
-    // closed-form level CDFs for both epochs, min-m mapping,
-    "geo_mann_kendall" ->
-      """WITH b AS (SELECT user_id, event_id, ts, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c AS (SELECT ts, CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         d AS (SELECT px // 200 AS cell_x, py // 50 AS cell_y,
-             date_trunc('day', ts) AS day, CAST(count(*) AS BIGINT) AS c
-           FROM c GROUP BY 1, 2, 3),
-         s AS (SELECT cell_x, cell_y, day, c, CAST(row_number() OVER (
-             PARTITION BY cell_x, cell_y ORDER BY day) AS BIGINT) AS i
-           FROM d),
-         pr AS (SELECT a.cell_x, a.cell_y,
-             CASE WHEN b.c > a.c THEN 1 WHEN b.c < a.c THEN -1 ELSE 0 END AS sgn
-           FROM s a JOIN s b ON a.cell_x = b.cell_x AND a.cell_y = b.cell_y
-             AND a.i < b.i),
-         sa AS (SELECT cell_x, cell_y, CAST(sum(sgn) AS BIGINT) AS s_stat,
-             CAST(count(*) AS BIGINT) AS n_pairs FROM pr GROUP BY 1, 2),
-         nd AS (SELECT cell_x, cell_y, CAST(count(*) AS BIGINT) AS n_days
-           FROM s GROUP BY 1, 2),
-         tt AS (SELECT cell_x, cell_y,
-             CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
-           FROM (SELECT cell_x, cell_y, c, CAST(count(*) AS BIGINT) AS t
-             FROM s GROUP BY 1, 2, 3) q GROUP BY 1, 2)
-         SELECT nd.cell_x, nd.cell_y, n_days, n_pairs, s_stat, tie_term,
-           CASE WHEN s_stat > 0 THEN 1 WHEN s_stat < 0 THEN -1 ELSE 0 END AS trend
-         FROM nd JOIN sa ON sa.cell_x = nd.cell_x AND sa.cell_y = nd.cell_y
-         JOIN tt ON tt.cell_x = nd.cell_x AND tt.cell_y = nd.cell_y
-         ORDER BY nd.cell_x, nd.cell_y""",
-    // nearest-rank fences, clamped sum, clamp counts,
-    "geo_sector_cover" -> {
-      val antRows = sectorAntennas.map {
-        case (id, cx, cy, d1x, d1y, d2x, d2y, r2) =>
-          s"(CAST($id AS BIGINT), $cx, $cy, $d1x, $d1y, $d2x, $d2y, $r2)"
-      }.mkString(", ")
-      s"""WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c AS (SELECT user_id AS traj_id,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         ant(antenna_id, cx, cy, d1x, d1y, d2x, d2y, r2) AS (VALUES $antRows),
-         m AS (SELECT antenna_id, traj_id,
-             CASE WHEN d1x*(py-cy) - d1y*(px-cx) >= 0
-               AND (px-cx)*d2y - (py-cy)*d2x >= 0
-               AND (px-cx)*(px-cx) + (py-cy)*(py-cy) <= r2
-               THEN 1 ELSE 0 END AS inside
-           FROM c, ant)
-         SELECT antenna_id, CAST(count(*) AS BIGINT) AS n_pts,
-           CAST(sum(inside) AS BIGINT) AS n_in,
-           CAST(count(DISTINCT CASE WHEN inside = 1 THEN traj_id END)
-             AS BIGINT) AS n_traj
-         FROM m GROUP BY 1 ORDER BY antenna_id"""
-    },
-    // same window energies, lag band self-join, floored per-term mean,
-    "geo_st_join" -> {
-      val incRows = stIncidents.map { case (id, ix, iy, ts) =>
-        s"(CAST($id AS BIGINT), $ix, $iy, TIMESTAMP '$ts')"
-      }.mkString(", ")
-      s"""WITH b AS (SELECT user_id, event_id, ts, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c AS (SELECT user_id, epoch_us(ts) AS tus,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         inc(inc_id, ix, iy, its) AS (VALUES $incRows),
-         m AS (SELECT inc_id, user_id,
-             (px - ix) * (px - ix) + (py - iy) * (py - iy) AS d2,
-             (px - ix) * (px - ix) + (py - iy) * (py - iy) <= 2500
-               AND abs(tus - epoch_us(its)) <= 43200000000 AS near
-           FROM c, inc)
-         SELECT inc_id, CAST(count(*) AS BIGINT) AS n_fixes,
-           CAST(sum(CASE WHEN near THEN 1 ELSE 0 END) AS BIGINT) AS n_near,
-           CAST(count(DISTINCT CASE WHEN near THEN user_id END) AS BIGINT) AS n_traj,
-           CAST(min(CASE WHEN near THEN d2 END) AS BIGINT) AS min_d2
-         FROM m GROUP BY 1 ORDER BY inc_id"""
-    },
-    // the same two spec stats + query VALUES, per-spec pruning predicate,
-    "geo_cover_redundancy" -> {
-      val antRows = sectorAntennas.map {
-        case (id, cx, cy, d1x, d1y, d2x, d2y, r2) =>
-          s"(CAST($id AS BIGINT), $cx, $cy, $d1x, $d1y, $d2x, $d2y, $r2)"
-      }.mkString(", ")
-      s"""WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c AS (SELECT user_id * 1000000 + event_id AS fix_id,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         ant(antenna_id, cx, cy, d1x, d1y, d2x, d2y, r2) AS (VALUES $antRows),
-         m AS (SELECT fix_id,
-             CAST(sum(CASE WHEN d1x*(py-cy) - d1y*(px-cx) >= 0
-               AND (px-cx)*d2y - (py-cy)*d2x >= 0
-               AND (px-cx)*(px-cx) + (py-cy)*(py-cy) <= r2
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_covering
-           FROM c, ant GROUP BY 1)
-         SELECT n_covering, CAST(count(*) AS BIGINT) AS n_fixes
-         FROM m GROUP BY 1 ORDER BY n_covering"""
-    },
-    // exact top-2 NN distances, floored ratio, capped buckets,
-    "geo_winding_rule" -> {
-      val (upSql, dnSql) = ringCrossingsSql(bowtieRing)
-      s"""WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c AS (SELECT user_id,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         m AS (SELECT user_id, ($upSql) AS up, ($dnSql) AS dn FROM c)
-         SELECT user_id AS traj_id, CAST(count(*) AS BIGINT) AS n_pts,
-           CAST(sum(CASE WHEN (up + dn) % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_evenodd,
-           CAST(sum(CASE WHEN up - dn <> 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_nonzero,
-           CAST(sum(CASE WHEN ((up + dn) % 2 = 1) <> (up - dn <> 0)
-             THEN 1 ELSE 0 END) AS BIGINT) AS n_disagree
-         FROM m GROUP BY 1 ORDER BY traj_id"""
-    },
     // recursive min-label reach over the same sparse graph, then the
     // size histogram,
     "geo_cell_turnover" ->
@@ -1153,61 +566,6 @@ object QGeo2 {
            CAST(decile AS INT) AS decile, CAST(min(level) AS INT) AS level
          FROM cum, dec WHERE cum * 10 >= n_px * decile
          GROUP BY 1, 2 ORDER BY image_id, decile"""
-    },
-    // transition ppm + 6 unrolled value-iteration rounds,
-    "geo_access_quantiles" -> {
-      val ctrRows = stIncidents.map { case (id, ix, iy, _) =>
-        s"(CAST($id AS BIGINT), $ix, $iy)"
-      }.mkString(", ")
-      s"""WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c AS (SELECT user_id, event_id,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         ctr(center_id, ix, iy) AS (VALUES $ctrRows),
-         md AS (SELECT user_id AS traj_id, event_id,
-             min((px-ix)*(px-ix) + (py-iy)*(py-iy)) AS min_d2
-           FROM c, ctr GROUP BY 1, 2),
-         r AS (SELECT traj_id, min_d2,
-             CAST(row_number() OVER (PARTITION BY traj_id
-               ORDER BY min_d2, event_id) AS BIGINT) AS rn,
-             CAST(count(*) OVER (PARTITION BY traj_id) AS BIGINT) AS n
-           FROM md)
-         SELECT traj_id, max(n) AS n_fixes,
-           max(CASE WHEN rn = (n - 1) * 50 // 100 + 1 THEN min_d2 END)
-             AS p50_d2,
-           max(CASE WHEN rn = (n - 1) * 95 // 100 + 1 THEN min_d2 END)
-             AS p95_d2
-         FROM r GROUP BY 1 ORDER BY traj_id"""
-    },
-    // epoch-week counts, lagged growth,
-    "geo_sector_overlap" -> {
-      val antRows = sectorAntennas.map {
-        case (id, cx, cy, d1x, d1y, d2x, d2y, r2) =>
-          s"(CAST($id AS BIGINT), $cx, $cy, $d1x, $d1y, $d2x, $d2y, $r2)"
-      }.mkString(", ")
-      s"""WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c AS (SELECT user_id * 1000000 + event_id AS fix_id,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         ant(antenna_id, cx, cy, d1x, d1y, d2x, d2y, r2) AS (VALUES $antRows),
-         m AS (SELECT fix_id, antenna_id
-           FROM c, ant
-           WHERE d1x*(py-cy) - d1y*(px-cx) >= 0
-             AND (px-cx)*d2y - (py-cy)*d2x >= 0
-             AND (px-cx)*(px-cx) + (py-cy)*(py-cy) <= r2)
-         SELECT x.antenna_id AS ant_a, y.antenna_id AS ant_b,
-           CAST(count(*) AS BIGINT) AS n_common
-         FROM m x JOIN m y ON y.fix_id = x.fix_id
-           AND x.antenna_id < y.antenna_id
-         GROUP BY 1, 2 ORDER BY ant_a, ant_b"""
     },
     // Manhattan µspeed per segment, nearest-rank quantiles,
     "zxy_rollup" ->
@@ -1331,27 +689,6 @@ object QGeo2 {
          n AS (SELECT CAST(count(*) AS BIGINT) AS n_pts FROM kk)
          SELECT n_pts, hilbert_jump, hilbert_max, morton_jump, morton_max
          FROM n, hj, mj""",
-    // epoch-day mod 7 shares in ppm, pairwise L1,
-    "geo_grid_crossings" ->
-      """WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c AS (SELECT user_id, event_id, ts_us,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         s AS (SELECT user_id,
-             lag(px) OVER w2 AS ppx, lag(py) OVER w2 AS ppy, px, py
-           FROM c WINDOW w2 AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         g AS (SELECT user_id, abs(px // 64 - ppx // 64) AS cx,
-             abs(py // 16 - ppy // 16) AS cy
-           FROM s WHERE ppx IS NOT NULL)
-         SELECT user_id AS traj_id, CAST(count(*) AS BIGINT) AS n_seg,
-           CAST(sum(cx) AS BIGINT) AS cross_x,
-           CAST(sum(cy) AS BIGINT) AS cross_y,
-           CAST(max(cx + cy) AS BIGINT) AS max_seg_cross
-         FROM g GROUP BY 1 ORDER BY traj_id""",
     "geo_contours" ->
       """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
          g AS (SELECT swlng, swlat,
@@ -1378,28 +715,6 @@ object QGeo2 {
            CAST(1800 AS INT) AS threshold, ab.n_above, cc.n_cut, cc.n_saddles, cc.n_segments
          FROM ab JOIN cc ON ab.swlng = cc.swlng AND ab.swlat = cc.swlat
          ORDER BY image_id""",
-    // position-weighted moments of the closed-form grid; augmented lanes
-    // come from the permutation identities on a 601-grid (m = 600):
-    // flip_h keeps Σv·r and mirrors Σv·c to m·Σv − Σv·c; flip_v mirrors
-    // the row moment; rot90 (out(r,c) = in(m−c, r)) sends (rm, cm) to
-    // (cm, m·Σv − rm). The engine earns its values through the real
-    // permute → HGT encode → decode chain.,
-    "geo_idw_loocv" ->
-      """WITH st AS (SELECT s_suppkey AS st_id, (s_suppkey*37) % 500 AS x,
-           (s_suppkey*53) % 500 AS y, s_suppkey % 200 + 50 AS v
-           FROM supplier),
-         nb AS (SELECT a.st_id, a.v AS va,
-             1000000000 // greatest((a.x-b.x)*(a.x-b.x)+(a.y-b.y)*(a.y-b.y), 1) AS w,
-             b.v AS nv
-           FROM st a JOIN st b ON b.st_id <> a.st_id
-             AND (a.x-b.x)*(a.x-b.x)+(a.y-b.y)*(a.y-b.y) <= 14400),
-         g AS (SELECT st_id, CAST(count(*) AS BIGINT) AS n_nb,
-             max(va) AS va, CAST(sum(w*nv) AS BIGINT) AS wv,
-             CAST(sum(w) AS BIGINT) AS ws FROM nb GROUP BY 1)
-         SELECT st_id, n_nb, wv * 1000 // ws AS pred_milli,
-           va * 1000 AS actual_milli,
-           abs(wv * 1000 // ws - va * 1000) AS abs_err_milli
-         FROM g ORDER BY st_id""",
     // value-based RANGE frame over distinct cents levels,
     "tile_pyramid" ->
       """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
@@ -1448,26 +763,6 @@ object QGeo2 {
            CAST(sum(CASE WHEN dgap > 0 THEN dgap ELSE 0 END) AS BIGINT) AS depth_sum
          FROM px GROUP BY 1 ORDER BY image_id"""
     },
-    // closed-form byte replay, lag/lead Catmull-Rom half-samples,
-    "geo_antimeridian_split" ->
-      """WITH seg AS (SELECT s_suppkey AS seg_id,
-           177000000 + (s_suppkey % 30) * 100000 AS lng1,
-           30000000 + (s_suppkey % 50) * 200000 AS lat1,
-           CASE WHEN s_suppkey % 4 = 0 THEN 179800000
-             ELSE -180000000 + ((s_suppkey * 3) % 25) * 100000 END AS lng2,
-           30000000 + (s_suppkey % 50) * 200000
-             + (s_suppkey % 30) * 100000 AS lat2
-           FROM supplier)
-         SELECT seg_id,
-           CASE WHEN lng2 < 0 THEN 1 ELSE 0 END AS crosses,
-           CAST(CASE WHEN lng2 < 0 THEN lat1 + (lat2 - lat1) * (180000000 - lng1)
-               // ((180000000 - lng1) + (lng2 + 180000000))
-             ELSE NULL END AS BIGINT) AS lat_cross_micro,
-           CAST(CASE WHEN lng2 < 0
-             THEN (180 - lng1 // 1000000) + ((lng2 + 180000000) // 1000000 + 1)
-             ELSE greatest(lng1, lng2) // 1000000
-               - least(lng1, lng2) // 1000000 + 1 END AS BIGINT) AS n_tiles
-         FROM seg ORDER BY seg_id""",
     // 1-based list positions shifted to 0-based, same quantized argmax,
     "geo_fill_depressions" -> {
       val gv = gridV("c.range + 80", "r.range + 80")
@@ -1499,43 +794,6 @@ object QGeo2 {
            CAST(sum(CASE WHEN fv > v THEN fv - v ELSE 0 END) AS BIGINT) AS fill_volume
          FROM f32 GROUP BY 1 ORDER BY image_id"""
     },
-    // 4 unrolled elections with EXISTS-neighbour milli discounts,
-    "geo_emerging_hotspot" ->
-      """WITH pts AS (SELECT user_id, ts, event_id,
-           event_id % 7 AS dx, (event_id * 3) % 5 AS dy FROM events),
-         cw AS (SELECT user_id, ts, event_id,
-             CAST(sum(dx) OVER w AS BIGINT) AS px,
-             CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM pts WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         k AS (SELECT (px // 6) * 1000000 + (py // 4) AS cell,
-             epoch_us(ts) // 86400000000 AS day FROM cw),
-         d0 AS (SELECT min(day) AS d0 FROM k),
-         b AS (SELECT cell, (day - d0) // 15 AS bin FROM k, d0
-           WHERE (day - d0) // 15 < 6),
-         cnt AS (SELECT cell, bin, CAST(count(*) AS BIGINT) AS c
-           FROM b GROUP BY 1, 2),
-         grid AS (SELECT cells.cell, CAST(g AS BIGINT) AS bin
-           FROM (SELECT DISTINCT cell FROM cnt) cells,
-             unnest(range(0, 6)) AS t(g)),
-         f AS (SELECT grid.cell, grid.bin, COALESCE(cnt.c, 0) AS c
-           FROM grid LEFT JOIN cnt ON cnt.cell = grid.cell
-             AND cnt.bin = grid.bin),
-         mk AS (SELECT x.cell, CAST(sum(CASE WHEN y.c > x.c THEN 1
-             WHEN y.c < x.c THEN -1 ELSE 0 END) AS BIGINT) AS s_mk
-           FROM f x JOIN f y ON y.cell = x.cell AND x.bin < y.bin
-           GROUP BY 1),
-         fl AS (SELECT cell,
-             CAST(sum(CASE WHEN bin = 0 THEN c END) AS BIGINT) AS first_c,
-             CAST(sum(CASE WHEN bin = 5 THEN c END) AS BIGINT) AS last_c,
-             CAST(sum(c) AS BIGINT) AS total
-           FROM f GROUP BY 1)
-         SELECT fl.cell, s_mk, first_c, last_c, total,
-           CASE WHEN s_mk >= 8 THEN 'intensifying'
-             WHEN s_mk <= -8 THEN 'diminishing'
-             WHEN first_c = 0 AND last_c > 0 THEN 'new'
-             ELSE 'stable' END AS class
-         FROM fl JOIN mk ON mk.cell = fl.cell ORDER BY fl.cell""",
     // gaps-and-islands runs over quantized levels, per-run floors,
     "geo_cost_corridor" -> {
       def relax(p: String, edge: String) = (1 to 6).map { r =>
@@ -1696,47 +954,6 @@ object QGeo2 {
            AND tgt.swlat = est.swlat AND tgt.tr = est.tr AND tgt.tc = est.tc
          ORDER BY image_id, est.tr, est.tc"""
     },
-    // modal night/day cells with (count desc, cell) ties, inner join,
-    "geo_join_selectivity" ->
-      """WITH pts AS (SELECT
-           ((l_orderkey*8 + l_linenumber)*2000 + l_partkey)*100 + l_suppkey AS point_id,
-           -120 + (l_orderkey % 4) + ((l_partkey % 600) + 0.5)/600.0 AS lng,
-           36 + (l_suppkey % 2) + (((l_suppkey*7 + l_linenumber*131) % 600) + 0.5)/600.0 AS lat
-           FROM lineitem),
-         pk AS (SELECT point_id, lng, lat,
-             CAST(floor(lng * 10.0) AS BIGINT) AS cx,
-             CAST(floor(lat * 10.0) AS BIGINT) AS cy FROM pts),
-         polys AS (SELECT s_suppkey AS poly_id,
-             -120.0 + (s_suppkey % 40) * 0.1 AS cpx,
-             36.0 + ((s_suppkey * 3) % 20) * 0.1 AS cpy,
-             0.05 + (s_suppkey % 7) * 0.013 AS w,
-             0.04 + (s_suppkey % 5) * 0.017 AS h
-           FROM supplier),
-         pb AS (SELECT poly_id, cpx - w AS minx, cpx + w AS maxx,
-             cpy - h AS miny, cpy + h AS maxy FROM polys),
-         pcells AS (SELECT poly_id, minx, maxx, miny, maxy,
-             CAST(gx AS BIGINT) AS cx, CAST(gy AS BIGINT) AS cy
-           FROM pb,
-             unnest(range(CAST(floor(minx * 10.0) AS BIGINT),
-               CAST(floor(maxx * 10.0) AS BIGINT) + 1)) AS tx(gx),
-             unnest(range(CAST(floor(miny * 10.0) AS BIGINT),
-               CAST(floor(maxy * 10.0) AS BIGINT) + 1)) AS ty(gy)),
-         ph AS (SELECT cx, cy, CAST(count(*) AS BIGINT) AS np
-           FROM pk GROUP BY 1, 2),
-         gh AS (SELECT cx, cy, CAST(count(*) AS BIGINT) AS ng
-           FROM pcells GROUP BY 1, 2),
-         est AS (SELECT CAST(sum(np * ng) AS BIGINT) AS est_pairs
-           FROM ph JOIN gh USING (cx, cy)),
-         act AS (SELECT CAST(count(*) AS BIGINT) AS actual_pairs FROM (
-           SELECT DISTINCT point_id, poly_id
-           FROM pk JOIN pcells USING (cx, cy)
-           WHERE lng >= minx AND lng <= maxx
-             AND lat >= miny AND lat <= maxy) t)
-         SELECT (SELECT CAST(count(*) AS BIGINT) FROM pk) AS n_points,
-           (SELECT CAST(count(*) AS BIGINT) FROM pb) AS n_polys,
-           est_pairs, actual_pairs,
-           CAST(1000000 * actual_pairs // est_pairs AS BIGINT) AS ratio_ppm
-         FROM est, act""",
     // two nearest lists per query, corpus-scan fraction in ppm,
     "geo_terrain_rose" -> {
       val gx = s"(${gridV("c.range+1", "r.range")}) - (${gridV("c.range-1", "r.range")})"
@@ -1764,6 +981,5 @@ object QGeo2 {
            CAST(count(*) AS BIGINT) AS n_cells
          FROM cl GROUP BY 1, 2, 3 ORDER BY image_id, octant, band"""
     },
-    // duration x 8 samples/ms contract, signed truncating ppm drift
   )
 }

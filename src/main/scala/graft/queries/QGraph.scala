@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Graph gates: centrality, components, motifs, resilience
-  * (43 entries) with the DuckDB oracle SQL beside each query.
+  * (40 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QGraph {
@@ -138,33 +138,6 @@ object QGraph {
           rounds = 3)
         .withColumnRenamed("rank", "ppr")
         .orderBy("node")
-    }),
-    // SNN edge similarity (shared-nearest-neighbour graph sparsification,
-    // Jarvis–Patrick, public): per edge, |N(a)∩N(b)| via one
-    // common-neighbour equi-join and Jaccard over open neighbourhoods in
-    // exact ppm — keep high-jac edges, drop bridges; the density-robust
-    // pre-step of SNN clustering.,
-    "graph_snn" -> ((s, dir) => {
-      val e0 = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 7 === 0)
-        .selectExpr("least(l_suppkey % 300, l_partkey % 300) AS a",
-          "greatest(l_suppkey % 300, l_partkey % 300) AS b")
-        .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint(false)
-      val adj = e0.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(e0.select(col("b").as("u"), col("a").as("v")))
-      val deg = adj.groupBy("u").agg(count(lit(1)).as("d"))
-      val inter = e0
-        .join(adj.select(col("u").as("a"), col("v").as("x")), "a")
-        .join(adj.select(col("u").as("b"), col("v").as("x")), Seq("b", "x"))
-        .groupBy("a", "b").agg(count(lit(1)).as("inter"))
-      e0.join(inter, Seq("a", "b"), "left").na.fill(0L, Seq("inter"))
-        .join(deg.select(col("u").as("a"), col("d").as("da")), "a")
-        .join(deg.select(col("u").as("b"), col("d").as("db")), "b")
-        .withColumn("jac_ppm",
-          expr("(inter * 1000000) div (da + db - inter)"))
-        .select("a", "b", "da", "db", "inter", "jac_ppm")
-        .orderBy("a", "b")
     }),
     // Parallel maximal matching (ops.Graph.handshakeMatching): 3 rounds of
     // mutual-min handshakes on the undirected part graph — the
@@ -447,9 +420,6 @@ object QGraph {
         .withColumn("drop_ppm", expr(
           "(lcc_before - lcc_after) * 1000000 DIV lcc_before"))
     }),
-    // Source-vocabulary overlap matrix: per source-pair the distinct-word
-    // Jaccard — which corpus slices speak the same language; the mix
-    // diagnostic above text_distinctive_terms' per-word scores.,
     "graph_core_shells" -> ((s, dir) => {
       val edges = t(s, dir, "lineitem")
         .filter(col("l_orderkey") % 7 === 0)
@@ -594,36 +564,6 @@ object QGraph {
         .withColumn("gini_den", expr("n * sum_d"))
         .withColumn("gini_milli", expr("gini_num * 1000 DIV gini_den"))
     }),
-    // East horizon angle per observer on the row-300 profile: argmax of
-    // the positive-offset floored elevation/distance ratio (the solar /
-    // radio horizon read; quantization makes the rational argmax an
-    // integer order both engines share).,
-    "graph_rich_club" -> ((s, dir) => {
-      val edges = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 7 === 0)
-        .selectExpr("l_suppkey % 500 AS src", "l_partkey % 500 AS dst")
-      val und = edges.filter(col("src") =!= col("dst"))
-        .selectExpr("least(src, dst) AS a", "greatest(src, dst) AS b")
-        .distinct()
-      val sym = und.selectExpr("a AS u").unionAll(und.selectExpr("b AS u"))
-      val deg = sym.groupBy("u").agg(count(lit(1)).as("d"))
-      val th = s.createDataFrame(Seq(Tuple1(2L), Tuple1(4L), Tuple1(8L),
-        Tuple1(16L))).toDF("k")
-      val nRich = deg.crossJoin(broadcast(th)).filter(col("d") > col("k"))
-        .groupBy("k").agg(count(lit(1)).as("n_rich"))
-      val eRich = und
-        .join(deg.select(col("u").as("a"), col("d").as("da")), Seq("a"))
-        .join(deg.select(col("u").as("b"), col("d").as("db")), Seq("b"))
-        .crossJoin(broadcast(th))
-        .filter(col("da") > col("k") && col("db") > col("k"))
-        .groupBy("k").agg(count(lit(1)).as("e_rich"))
-      nRich.join(eRich, Seq("k"), "left")
-        .withColumn("e_rich", coalesce(col("e_rich"), lit(0L)))
-        .withColumn("possible", expr("n_rich * (n_rich - 1) DIV 2"))
-        .filter(col("possible") > 0)
-        .withColumn("phi_ppm", expr("e_rich * 1000000 DIV possible"))
-        .orderBy("k")
-    }),
     // Embedding-norm histogram (the representation-health QC): exact
     // integer milli-norm² per vector bucketed at 10⁶ — collapsed or
     // bimodal norm mass flags a broken encoder before any ANN build.,
@@ -653,48 +593,6 @@ object QGraph {
         .selectExpr("l_suppkey % 500 AS src", "l_partkey % 500 AS dst")
       ops.Graph.voteRank(edges, k = 4).orderBy("round")
     }),
-    // Coordinate-sentinel audit: null-island (0,0), -999 nodata pins,
-    // pole pins and out-of-range coordinates classified and shared in
-    // ppm — the first geo-data-quality gate any ingest runs.,
-    "graph_hyperball" -> ((s, dir) => {
-      import s.implicits._
-      val e = t(s, dir, "lineitem").filter(col("l_orderkey") % 23 === 0)
-        .selectExpr("(l_suppkey * 13 + l_orderkey) % 1000 AS src",
-          "(l_partkey * 7 + l_linenumber) % 1000 AS dst")
-        .filter(col("src") =!= col("dst")).distinct()
-        .localCheckpoint(false)
-      val nodes = e.select(col("src").as("node"))
-        .unionAll(e.select(col("dst").as("node"))).distinct()
-      var regs = nodes
-        .withColumn("h", expr("(node * 2654435761L) % 2147483648L"))
-        .withColumn("bucket", expr("h % 16"))
-        .withColumn("w", expr("h DIV 16"))
-        .withColumn("rho", expr(rhoCaseSql))
-        .select("node", "bucket", "rho").localCheckpoint(false)
-      var pairs = nodes.select(col("node").as("v"), col("node").as("u"))
-        .localCheckpoint(false)
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-      for (r <- 1 to 3) {
-        regs = regs.unionAll(
-            e.join(regs.withColumnRenamed("node", "dst"), Seq("dst"))
-              .select(col("src").as("node"), col("bucket"), col("rho")))
-          .groupBy("node", "bucket").agg(max("rho").as("rho"))
-          .localCheckpoint(false)
-        pairs = pairs.unionAll(
-            e.join(pairs.withColumnRenamed("v", "dst"), Seq("dst"))
-              .select(col("src").as("v"), col("u")))
-          .distinct().localCheckpoint(false)
-        val nP = pairs.count()
-        val st = regs.agg(count(lit(1)).as("nr"),
-          sum("rho").cast("long").as("rs")).head()
-        out += ((r.toLong, nP, st.getLong(0), st.getLong(1)))
-      }
-      out.toSeq.toDF("round", "n_pairs", "n_regs", "rho_sum")
-        .orderBy("round")
-    }),
-    // Burrows-Delta-style stylometry (L1 on per-million frequencies of
-    // the global top-20 tokens): the source-pair distance matrix that
-    // flags templated / machine-generated sources.
   )
 
   val sql: Map[String, String] = Map(
@@ -852,24 +750,6 @@ object QGraph {
     },
     // 3 unrolled mutual-min handshake rounds; matched endpoints drop out,
     "graph_ppr" -> pprOracleSql,
-    // 6 unrolled batched-BFS rounds keyed (src0, node); harmonic terms
-    // floor per-node so the sum is order-independent,
-    "graph_snn" ->
-      """WITH e0 AS (SELECT DISTINCT least(l_suppkey % 300, l_partkey % 300) AS a,
-           greatest(l_suppkey % 300, l_partkey % 300) AS b FROM lineitem
-           WHERE l_orderkey % 7 = 0
-             AND least(l_suppkey % 300, l_partkey % 300) <> greatest(l_suppkey % 300, l_partkey % 300)),
-         adj AS (SELECT a AS u, b AS v FROM e0 UNION ALL SELECT b, a FROM e0),
-         deg AS (SELECT u, count(*) AS d FROM adj GROUP BY 1),
-         inter AS (SELECT e0.a, e0.b, count(*) AS inter
-           FROM e0 JOIN adj x ON x.u = e0.a JOIN adj y ON y.u = e0.b AND y.v = x.v
-           GROUP BY 1, 2)
-         SELECT e0.a, e0.b, da.d AS da, db.d AS db,
-           CAST(COALESCE(i.inter, 0) AS BIGINT) AS inter,
-           (CAST(COALESCE(i.inter, 0) AS BIGINT) * 1000000) // (da.d + db.d - COALESCE(i.inter, 0)) AS jac_ppm
-         FROM e0 LEFT JOIN inter i ON i.a = e0.a AND i.b = e0.b
-         JOIN deg da ON da.u = e0.a JOIN deg db ON db.u = e0.b
-         ORDER BY e0.a, e0.b""",
     // 3-step behavioural paths via two leads, global top-10,
     "graph_matching" -> {
       val rounds = (1 to 3).map { r =>
@@ -1442,27 +1322,6 @@ object QGraph {
            n * sum_d AS gini_den,
            (wsum - n * sum_d) * 1000 // (n * sum_d) AS gini_milli
          FROM a""",
-    // row-300 profile, positive-offset floored angle argmax,
-    "graph_rich_club" ->
-      """WITH e AS (SELECT DISTINCT
-           GREATEST(l_suppkey % 500, l_partkey % 500) AS b,
-           LEAST(l_suppkey % 500, l_partkey % 500) AS a
-           FROM lineitem WHERE l_orderkey % 7 = 0
-             AND l_suppkey % 500 <> l_partkey % 500),
-         sym AS (SELECT a AS u FROM e UNION ALL SELECT b FROM e),
-         deg AS (SELECT u, CAST(count(*) AS BIGINT) AS d FROM sym GROUP BY 1),
-         th(k) AS (VALUES (CAST(2 AS BIGINT)), (4), (8), (16)),
-         nr AS (SELECT k, CAST(count(*) AS BIGINT) AS n_rich
-           FROM deg CROSS JOIN th WHERE d > k GROUP BY 1),
-         er AS (SELECT k, CAST(count(*) AS BIGINT) AS e_rich
-           FROM e JOIN deg da ON da.u = e.a JOIN deg db ON db.u = e.b
-           CROSS JOIN th WHERE da.d > k AND db.d > k GROUP BY 1),
-         j AS (SELECT nr.k, n_rich, COALESCE(e_rich, 0) AS e_rich,
-             n_rich * (n_rich - 1) // 2 AS possible
-           FROM nr LEFT JOIN er ON er.k = nr.k)
-         SELECT k, n_rich, e_rich, possible,
-           e_rich * 1000000 // possible AS phi_ppm
-         FROM j WHERE possible > 0 ORDER BY k""",
     // milli-floored norm², 10⁶ buckets,
     "graph_bowtie" ->
       """WITH RECURSIVE e AS (SELECT DISTINCT
@@ -1540,50 +1399,5 @@ object QGraph {
            score AS score_milli
          FROM u ORDER BY round"""
     },
-    // same sentinel classes, ppm shares over the same total,
-    "graph_hyperball" -> {
-      def round(r: Int) =
-        s"""reg$r AS (SELECT node, bucket, max(rho) AS rho FROM (
-            SELECT node, bucket, rho FROM reg${r - 1}
-            UNION ALL
-            SELECT e.src AS node, q.bucket, q.rho
-            FROM e JOIN reg${r - 1} q ON q.node = e.dst) GROUP BY 1, 2),
-          p$r AS (SELECT DISTINCT v, u FROM (
-            SELECT v, u FROM p${r - 1}
-            UNION ALL
-            SELECT e.src AS v, q.u FROM e JOIN p${r - 1} q ON q.v = e.dst))"""
-      s"""WITH e AS (SELECT DISTINCT
-           (l_suppkey * 13 + l_orderkey) % 1000 AS src,
-           (l_partkey * 7 + l_linenumber) % 1000 AS dst
-           FROM lineitem WHERE l_orderkey % 23 = 0
-           AND (l_suppkey * 13 + l_orderkey) % 1000
-             <> (l_partkey * 7 + l_linenumber) % 1000),
-         nodes AS (SELECT DISTINCT node FROM
-           (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-         h0 AS (SELECT node, (node * 2654435761) % 2147483648 AS h
-           FROM nodes),
-         reg0 AS (SELECT node, h % 16 AS bucket, $rhoCaseSql AS rho
-           FROM (SELECT node, h, h // 16 AS w FROM h0) t),
-         p0 AS (SELECT node AS v, node AS u FROM nodes),
-         ${round(1)},
-         ${round(2)},
-         ${round(3)},
-         u AS (
-           SELECT 1 AS round,
-             (SELECT CAST(count(*) AS BIGINT) FROM p1) AS n_pairs,
-             (SELECT CAST(count(*) AS BIGINT) FROM reg1) AS n_regs,
-             (SELECT CAST(sum(rho) AS BIGINT) FROM reg1) AS rho_sum
-           UNION ALL
-           SELECT 2, (SELECT CAST(count(*) AS BIGINT) FROM p2),
-             (SELECT CAST(count(*) AS BIGINT) FROM reg2),
-             (SELECT CAST(sum(rho) AS BIGINT) FROM reg2)
-           UNION ALL
-           SELECT 3, (SELECT CAST(count(*) AS BIGINT) FROM p3),
-             (SELECT CAST(count(*) AS BIGINT) FROM reg3),
-             (SELECT CAST(sum(rho) AS BIGINT) FROM reg3))
-         SELECT CAST(round AS BIGINT) AS round, n_pairs, n_regs, rho_sum
-         FROM u ORDER BY round"""
-    },
-    // top-20 fpm profiles, zero-filled grid, source-pair L1
   )
 }

@@ -94,10 +94,6 @@ object QImg {
       ops.ImageOps.focusMap(gateTiles(s, "png"))
         .orderBy("image_id", "py", "px")
     }),
-    // Access-distance quantiles: per trajectory the nearest-rank p50/p95
-    // of min squared distance to the literal centers — the
-    // facility-access equity read over geo_ring_buffer's per-center
-    // counts.,
     "img_fidelity" -> ((s, dir) => {
       import s.implicits._
       implicit val enc = Encoders.product[(graft.core.TileRow, String)]
@@ -559,9 +555,6 @@ object QImg {
       ops.ImageOps.downsampleBias(gateTiles(s, "png"), levels = 2)
         .orderBy("image_id", "level")
     }),
-    // Self-intersection census: proper crossings between non-adjacent walk
-    // segments by the 4-orientation integer test — the GPS loop /
-    // corrupted-track read; pair join key-bounded per trajectory.,
     "img_keystone" -> ((s, dir) => {
       ops.ImageOps.keystone(gateTiles(s, "png")).orderBy("image_id")
     }),
@@ -604,8 +597,8 @@ object QImg {
     }),
     // Daily activity-centroid drift: per day the exact integer centroid
     // (milli-floored) of all walk fixes and its squared day-over-day
-    // displacement — the range-shift read over geo_mann_kendall's per-cell
-    // trends. One day rollup + one lag window.,
+    // displacement — the range-shift read. One day rollup + one lag
+    // window.,
     "img_variogram" -> ((s, dir) => {
       ops.ImageOps.variogram(gateTiles(s, "png"),
           Seq((1, 0), (0, 1), (4, 0), (0, 4), (16, 0), (0, 16)))
@@ -633,10 +626,6 @@ object QImg {
     "img_banding_period" -> ((s, dir) => {
       ops.ImageOps.bandingPeriod(gateTiles(s, "png")).orderBy("image_id")
     }),
-    // Market-basket lift at day granularity: per type pair the user-days
-    // both occurred vs independence — lift_ppm = obs·N·10⁶ DIV (n_a·n_b)
-    // over distinct (user, day) baskets; the co-engagement read above
-    // events_audience_overlap's lifetime Jaccard.,
     "img_blockiness" -> ((s, dir) => {
       ops.ImageOps.blockiness(gateTiles(s, "png")).orderBy("image_id")
     }),
@@ -789,10 +778,6 @@ object QImg {
     "img_phash_hist" -> ((s, dir) => {
       ops.ImageOps.phashHist(phashCorpusTiles(s)).orderBy("bucket")
     }),
-    // Max cross-track deviation per trajectory: the farthest point from
-    // the start→end chord by exact cross² (the chord length² is constant
-    // per trajectory, so cross² ranks exactly) — the GPS-detour /
-    // simplification-error read next to traj_straightness.,
     "img_symmetry" -> ((s, dir) => {
       ops.ImageOps.symmetryStats(gateTiles(s, "png")).orderBy("image_id")
     }),
@@ -905,9 +890,6 @@ object QImg {
     "img_lsb_embed_cost" -> ((s, dir) => {
       ops.ImageOps.lsbEmbedCost(gateTiles(s, "png")).orderBy("image_id")
     }),
-    // Float-dust audit: values whose cents representation is not exact
-    // (value*100 differs from its round) — the currency-stored-as-float
-    // ingest detector.
   )
 
   val sql: Map[String, String] = Map(
@@ -2351,6 +2333,5 @@ object QImg {
            CAST(1000000 * sum(flip) // count(*) AS BIGINT) AS flip_ppm
          FROM px GROUP BY 1 ORDER BY image_id"""
     },
-    // exact-cents representability of the double value column
   )
 }

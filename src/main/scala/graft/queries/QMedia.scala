@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Media/audio gates over synthesized signals
-  * (22 entries) with the DuckDB oracle SQL beside each query.
+  * (21 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QMedia {
@@ -278,15 +278,6 @@ object QMedia {
       ops.MediaOps.echoLag(ops.MediaOps.synth(mediaMeta(s, dir)))
         .orderBy("media_id")
     }),
-    // Block-truncation-coding loss (ops.ImageOps.btcAudit).,
-    "media_duration_consistency" -> ((s, dir) => {
-      mediaMeta(s, dir).selectExpr("CAST(media_id AS BIGINT) AS media_id",
-          "CAST(n_bytes AS BIGINT) AS n_samp",
-          "CAST(duration_ms * 8 AS BIGINT) AS expected_samp")
-        .withColumn("drift_ppm", expr(
-          "1000000 * (n_samp - expected_samp) DIV expected_samp"))
-        .orderBy("media_id")
-    }),
     // Dictionary-encoding gain estimator: per varchar column the exact
     // plain vs dictionary byte model (distinct payload + ceil(log2 n)
     // bits per row) — the columnar-layout decision number a writer
@@ -297,8 +288,7 @@ object QMedia {
     }),
     // Run-length encoding gain in arrival order vs sorted: RLE run
     // counts of o_orderstatus over the o_orderkey sequence vs its
-    // sorted layout — the sort-before-write decision number next to
-    // store_dict_gain's dictionary model.
+    // sorted layout — the sort-before-write decision number.
   )
 
   val sql: Map[String, String] = Map(
@@ -721,15 +711,6 @@ object QMedia {
          FROM a0 JOIN best ON best.media_id = a0.media_id
          ORDER BY media_id"""
     },
-    // 4x4 block mean split, floored two-level reconstruction, L1 loss,
-    "media_duration_consistency" ->
-      """SELECT CAST(s_suppkey AS BIGINT) AS media_id,
-           CAST(4096 + (s_suppkey % 7) * 512 AS BIGINT) AS n_samp,
-           CAST((1000 + (s_suppkey % 20) * 500) * 8 AS BIGINT) AS expected_samp,
-           CAST(1000000 * ((4096 + (s_suppkey % 7) * 512)
-             - (1000 + (s_suppkey % 20) * 500) * 8)
-             // ((1000 + (s_suppkey % 20) * 500) * 8) AS BIGINT) AS drift_ppm
-         FROM supplier ORDER BY media_id""",
     // exact plain vs dict byte models per varchar column,
     "media_level_usage" ->
       """WITH m AS (SELECT s_suppkey AS media_id,

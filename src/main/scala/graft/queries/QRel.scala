@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Relational-core gates: aggregates, joins, windows, SQL surface
-  * (23 entries) with the DuckDB oracle SQL beside each query.
+  * (10 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QRel {
@@ -68,12 +68,8 @@ object QRel {
         .select("o_custkey", "o_orderkey", "rn", "run_total")
         .orderBy("o_custkey", "rn")
     }),
-    // PIVOT surface: month × order-status wide table (the reshape every
-    // BI layer emits) — Spark's relational groupBy().pivot() with an
-    // explicit value list (one pass, no per-status scan); absent cells
-    // stay NULL on both engines.
-    // GROUPING SETS surface — the BI reshape between q_pivot and
-    // events_cube/rollup: four explicit sets over (month, status) in ONE
+    // GROUPING SETS surface — the BI reshape next to events_rollup: four
+    // explicit sets over (month, status) in ONE
     // expand-and-aggregate pass (Spark's Expand node, never four scans);
     // the null pattern distinguishes the sets, exact integer cents.,
     "q_grouping_sets" -> ((s, dir) => {
@@ -85,27 +81,6 @@ object QRel {
           |      FROM orders_gs)
           |GROUP BY GROUPING SETS ((mon, status), (mon), (status), ())
           |ORDER BY mon, status""".stripMargin)
-    }),
-    "q_pivot" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .withColumn("mon", month(col("o_orderdate")))
-        .groupBy("mon").pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(round(sum("o_totalprice"), 2))
-        .orderBy("mon")
-    }),
-    // UNPIVOT surface — q_pivot's inverse reshape (wide month×status grid
-    // back to long triples): Spark's `stack` table generator fans the three
-    // status columns into rows in ONE projection pass (no union of three
-    // scans); NULL cells are excluded on both engines (DuckDB UNPIVOT's
-    // default). Exact integer cents so the gate is bit-exact.,
-    "q_unpivot" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .withColumn("mon", month(col("o_orderdate")))
-        .groupBy("mon").pivot("o_orderstatus", Seq("F", "O", "P"))
-        .agg(sum(expr("CAST(FLOOR(o_totalprice * 100.0D + 0.5D) AS BIGINT)")))
-        .selectExpr("mon", "stack(3, 'F', `F`, 'O', `O`, 'P', `P`) AS (status, cents)")
-        .filter(col("cents").isNotNull)
-        .orderBy("mon", "status")
     }),
     // SKYLINE / Pareto front (ops.Skyline.skyline2d): the orders nobody
     // beats on BOTH price and date (minimize both) — the classic
@@ -156,104 +131,6 @@ object QRel {
                FROM pts ORDER BY point_id""")
     }),
 
-    // ---- training-data pipeline ops ----,
-    "q_full_outer" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      def spend(pred: String, nm: String) = ev.filter(expr(pred))
-        .groupBy("user_id")
-        .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as(nm))
-      spend("ts < timestamp'2024-01-16'", "pre_cents")
-        .join(spend("ts >= timestamp'2024-01-16'", "post_cents"),
-          Seq("user_id"), "full_outer")
-        .withColumn("status", expr(
-          "CASE WHEN pre_cents IS NULL THEN 'post_only' " +
-            "WHEN post_cents IS NULL THEN 'pre_only' ELSE 'both' END"))
-        .withColumn("delta_cents",
-          expr("coalesce(post_cents, 0) - coalesce(pre_cents, 0)"))
-        .orderBy("user_id")
-    }),
-    // Concentric ring-buffer census around the literal incident centers:
-    // fixes per squared-radius ring per center — the facility-catchment
-    // profile; centers broadcast, one rollup.,
-    "q_org_paths" -> ((s, dir) => {
-      val nodes = t(s, dir, "supplier")
-        .selectExpr("s_suppkey % 40 AS n").distinct()
-        .localCheckpoint(false)
-      var frontier = nodes.filter(col("n") === 0)
-        .select(col("n"), lit(0).as("depth"), lit("0").as("path"))
-        .localCheckpoint(false)
-      var out = frontier
-      for (k <- 1 to 4) {
-        frontier = nodes.filter(col("n") > 0)
-          .withColumn("parent", expr("n DIV 3"))
-          .join(frontier.select(col("n").as("parent"),
-            col("path").as("ppath")), "parent")
-          .select(col("n"), lit(k).as("depth"),
-            concat(col("ppath"), lit("/"), col("n").cast("string"))
-              .as("path"))
-          .localCheckpoint(false)
-        out = out.unionAll(frontier)
-      }
-      out.orderBy("n")
-    }),
-    // Degree-mixing statistics (ops.Graph.degreeMix): the assortativity
-    // moments as ONE exact-integer row — num/den of Newman's r assembled,
-    // the float division left to the consumer. One degree count + two
-    // node-keyed joins + one global agg.,
-    "q_listagg" -> ((s, dir) => {
-      t(s, dir, "supplier")
-        .groupBy(col("s_nationkey").as("nation"))
-        .agg(count(lit(1)).as("n_sup"),
-          concat_ws(",", sort_array(collect_list(col("s_name"))))
-            .as("names_csv"))
-        .orderBy("nation")
-    }),
-    // Two-sample Kolmogorov–Smirnov test on per-user engagement (the
-    // distribution-level A/B read events_ab_test's proportion z-test
-    // can't see): per event_type, users split by id parity, D = sup
-    // |F₁−F₂| over the pooled support as the EXACT integer
-    // d_num = max|c1·n2 − c2·n1| (denominator n1·n2), d_ppm the floored
-    // consumer view, and the α=0.05 decision by cross-multiplied squares
-    // (c² = 1.358² scaled to ppm — no float anywhere). One user-keyed
-    // agg + one value-ordered window per type.,
-    "q_null_semantics" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          expr("CASE WHEN value >= 50 THEN NULL " +
-            "ELSE CAST(round(value * 100) AS BIGINT) END").as("v"))
-        .withColumn("pv", lag("v", 1).over(w))
-      ev.agg(count(lit(1)).as("n_rows"), count(col("v")).as("n_nonnull"),
-        countDistinct(col("v")).as("n_distinct"),
-        sum(when(col("v") <=> col("pv"), 1L).otherwise(0L))
-          .as("n_nullsafe_eq"),
-        sum(when(col("v") === col("pv"), 1L).otherwise(0L))
-          .as("n_plain_eq"))
-    }),
-    // Ranking AUC of exact Jaccard vs the planted duplicate truth: the
-    // doubled-midrank U statistic over pair scores (label = same base id)
-    // — threshold-free separability of the similarity signal, the ML-eval
-    // read above dedup_minhash_precision's fixed threshold.,
-    "q_interval_shift" -> ((s, dir) => {
-      t(s, dir, "events")
-        .filter(expr("ts < timestamp'2024-01-03'"))
-        .groupBy(expr("date_trunc('hour', ts + INTERVAL 90 MINUTE)")
-          .as("shifted_hr"))
-        .agg(count(lit(1)).as("n"))
-        .orderBy("shifted_hr")
-    }),
-    // Per-source document-length quantiles: nearest-rank p50/p90 word
-    // counts — the corpus-shape profile under text_lang_profile's means.,
-    "q_decimal_money" -> ((s, dir) => {
-      t(s, dir, "orders")
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n"),
-          expr("CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) " +
-            "AS DECIMAL(18,2))").as("total_price"),
-          expr("CAST(max(CAST(o_totalprice AS DECIMAL(12,2))) " +
-            "AS DECIMAL(18,2))").as("max_price"))
-        .orderBy("o_orderstatus")
-    }),
     // Targeted-attack resilience: largest component before vs after
     // removing the 5 highest-degree hubs (ties by node id) — the
     // robustness read scale-free graphs fail; two star-CC passes.,
@@ -265,90 +142,6 @@ object QRel {
         .filter(col("parent") =!= col("child"))
         .withColumn("qty", expr("1 + (parent * 31 + child * 17) % 4"))
       ops.Graph.bomRollup(edges, maxDepth = 3).orderBy("root")
-    }),
-    // Per-row format fidelity (input_hint: decoded pixels allclose, PSNR
-    // >= 40 dB for lossy): decode each payload (real javax.imageio for png),
-    // compare against the closed-form grid it encodes. px_sum anchors the
-    // decode arithmetic; sse (integer sum of squared pixel diffs vs the
-    // closed form) anchors exactness (0 for the exact lanes is the decode
-    // contract, stated by the oracle, computed by the engine from the real
-    // decode); psnr_q = floor(psnr*100), sentinel 99999 = infinite. So the
-    // PSNR FORMULA itself is exercised with a nonzero error on both sides,
-    // a third "noisy" lane encodes the grid with +3 on every 97th sample:
-    // its sse (9 per hit) and finite psnr_q (7993 = 79.93 dB, 0.05 from
-    // the quantization boundary — safe against ulp-level log10 differences)
-    // are recomputed by the oracle through the identical formula. (jpg's
-    // finite PSNR >= 40 dB gate stays in CoreSpec — a lossy javax.imageio
-    // decode is not SQL-recomputable.),
-    "q_setops_all" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val a = ev.filter(expr("ts < timestamp'2024-01-16'"))
-        .select((col("user_id") % 100).as("k"))
-      val b = ev.filter(expr("ts >= timestamp'2024-01-16'"))
-        .select((col("user_id") % 100).as("k"))
-      a.exceptAll(b).agg(count(lit(1)).as("n_except_all"))
-        .crossJoin(a.except(b).agg(count(lit(1)).as("n_except_distinct")))
-        .crossJoin(a.intersectAll(b)
-          .agg(count(lit(1)).as("n_intersect_all")))
-    }),
-    // Intervisibility matrix over the row-300 terrain profile: station
-    // pairs see each other iff NO between-sample rises strictly above the
-    // chord — the cross-multiplied integer line-of-sight test (the 1-D
-    // core of viewshed networks / radio-link planning).,
-    "q_range_frame" -> ((s, dir) => {
-      val byCents = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("cents"))
-        .agg(count(lit(1)).as("n"))
-      val w = Window.partitionBy("event_type").orderBy("cents")
-        .rangeBetween(-500L, 500L)
-      byCents.withColumn("n_within", sum("n").over(w))
-        .orderBy("event_type", "cents")
-    }),
-    // Mirror-symmetry census (ops.ImageOps.symmetryStats): Σ|v − mirror|
-    // under horizontal and vertical flips over the even 600² prefix — the
-    // flip-augmentation sanity read (a symmetric field makes flip
-    // augmentation a no-op). Decode-once, one row per image.,
-    "q_setops" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-      val a = ev.filter(expr("ts < timestamp'2024-01-16'"))
-        .select("user_id").distinct()
-      val b = ev.filter(expr("ts >= timestamp'2024-01-16'"))
-        .select("user_id").distinct()
-      a.intersect(b).agg(count(lit(1)).as("n_both"))
-        .crossJoin(a.except(b).agg(count(lit(1)).as("n_only_pre")))
-        .crossJoin(b.except(a).agg(count(lit(1)).as("n_only_post")))
-    }),
-    // Image near-dup CLUSTERING (ops.ImageOps.phashClusters): the phash
-    // band pair graph contracted by star CC, keep = lexicographic-min
-    // representative per visual-duplicate chain.,
-    "q_any_all" -> ((s, dir) => {
-      val sup = t(s, dir, "supplier")
-        .withColumn("cents", expr("CAST(round(s_acctbal * 100) AS BIGINT)"))
-      val reg = sup.join(t(s, dir, "nation"),
-          col("s_nationkey") === col("n_nationkey"))
-        .groupBy("n_regionkey")
-        .agg(count(lit(1)).as("n_r"), sum("cents").as("sum_r"))
-      val viol = sup.crossJoin(broadcast(reg))
-        .filter(col("cents") * col("n_r") <= col("sum_r"))
-        .select(col("s_suppkey")).distinct()
-      sup.join(viol, Seq("s_suppkey"), "left_anti")
-        .select("s_suppkey", "cents")
-        .orderBy("s_suppkey")
-    }),
-    // Swath elevation profile (ops.ImageOps.swathProfile): 50 along-track
-    // bins within cross-track 20 of the fixed chord.,
-    "q_correlated_above_avg" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .withColumn("cents", expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
-      val cu = o.groupBy("o_custkey")
-        .agg(count(lit(1)).as("n"), sum("cents").as("s"))
-      o.join(cu, Seq("o_custkey"))
-        .groupBy("o_custkey")
-        .agg(max("n").as("n_orders"),
-          sum(when(col("cents") * col("n") > col("s"), 1L).otherwise(0L))
-            .as("n_above_own_avg"))
-        .orderBy("o_custkey")
     }),
     // Semantic-balance contingency: IVF cluster x label counts with the
     // cross-multiplied independence deviation |n*G - R*C| per cell — is
@@ -400,23 +193,6 @@ object QRel {
                FROM orders)
          GROUP BY GROUPING SETS ((mon, status), (mon), (status), ())
          ORDER BY mon, status""",
-    "q_pivot" ->
-      """SELECT CAST(month(o_orderdate) AS INT) AS mon,
-           round(sum(CASE WHEN o_orderstatus = 'F' THEN o_totalprice END), 2) AS "F",
-           round(sum(CASE WHEN o_orderstatus = 'O' THEN o_totalprice END), 2) AS "O",
-           round(sum(CASE WHEN o_orderstatus = 'P' THEN o_totalprice END), 2) AS "P"
-         FROM orders GROUP BY 1 ORDER BY mon""",
-    // the wide grid rebuilt, then DuckDB's native UNPIVOT (NULL cells
-    // excluded by default on both engines),
-    "q_unpivot" ->
-      """WITH w AS (SELECT CAST(month(o_orderdate) AS INT) AS mon,
-           sum(CASE WHEN o_orderstatus = 'F' THEN CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) END) AS "F",
-           sum(CASE WHEN o_orderstatus = 'O' THEN CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) END) AS "O",
-           sum(CASE WHEN o_orderstatus = 'P' THEN CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) END) AS "P"
-         FROM orders GROUP BY 1)
-         SELECT mon, status, CAST(cents AS BIGINT) AS cents
-         FROM w UNPIVOT (cents FOR status IN ("F", "O", "P"))
-         ORDER BY mon, status""",
     // definitional dominance oracle: the engine answers via the sorted-scan
     // window identity, the oracle states NOT EXISTS dominance directly,
     "q_skyline" ->
@@ -456,63 +232,6 @@ object QRel {
          JOIN hexq ON p.point_id = hexq.point_id
          ORDER BY p.point_id"""
     },
-    "q_full_outer" ->
-      """WITH pre AS (SELECT user_id,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS pre_cents
-           FROM events WHERE ts < TIMESTAMP '2024-01-16' GROUP BY 1),
-         post AS (SELECT user_id,
-           CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS post_cents
-           FROM events WHERE ts >= TIMESTAMP '2024-01-16' GROUP BY 1)
-         SELECT COALESCE(pre.user_id, post.user_id) AS user_id, pre_cents,
-           post_cents,
-           CASE WHEN pre_cents IS NULL THEN 'post_only'
-                WHEN post_cents IS NULL THEN 'pre_only'
-                ELSE 'both' END AS status,
-           COALESCE(post_cents, 0) - COALESCE(pre_cents, 0) AS delta_cents
-         FROM pre FULL OUTER JOIN post ON post.user_id = pre.user_id
-         ORDER BY user_id""",
-    // the walk cumsum + center VALUES, squared-radius ring ladder,
-    "q_org_paths" ->
-      """WITH RECURSIVE nodes AS (SELECT DISTINCT s_suppkey % 40 AS n FROM supplier),
-         r AS (SELECT n, 0 AS depth, '0' AS path FROM nodes WHERE n = 0
-           UNION ALL
-           SELECT c.n, r.depth + 1, r.path || '/' || CAST(c.n AS VARCHAR)
-           FROM r JOIN nodes c ON c.n > 0 AND c.n // 3 = r.n)
-         SELECT n, CAST(depth AS INT) AS depth, path FROM r ORDER BY n""",
-    "q_listagg" ->
-      """SELECT s_nationkey AS nation, CAST(count(*) AS BIGINT) AS n_sup,
-         string_agg(s_name, ',' ORDER BY s_name) AS names_csv
-         FROM supplier GROUP BY 1 ORDER BY nation""",
-    // the walk cumsum cells, sign-of-pair-difference sums + tie term,
-    "q_null_semantics" ->
-      """WITH e AS (SELECT user_id, event_id, epoch_us(ts) AS tus,
-           CASE WHEN value >= 50 THEN NULL
-                ELSE CAST(round(value * 100) AS BIGINT) END AS v
-           FROM events),
-         l AS (SELECT v, lag(v) OVER (PARTITION BY user_id
-             ORDER BY tus, event_id) AS pv FROM e)
-         SELECT CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(count(v) AS BIGINT) AS n_nonnull,
-           CAST(count(DISTINCT v) AS BIGINT) AS n_distinct,
-           CAST(sum(CASE WHEN v IS NOT DISTINCT FROM pv THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_nullsafe_eq,
-           CAST(sum(CASE WHEN v = pv THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_plain_eq
-         FROM l""",
-    // pair scores vs planted labels, doubled-midrank U, AUC,
-    "q_interval_shift" ->
-      """SELECT date_trunc('hour', ts + INTERVAL 90 MINUTE) AS shifted_hr,
-         CAST(count(*) AS BIGINT) AS n
-         FROM events WHERE ts < TIMESTAMP '2024-01-03'
-         GROUP BY 1 ORDER BY shifted_hr""",
-    // per-source token-count ranks, nearest-rank p50/p90,
-    "q_decimal_money" ->
-      """SELECT o_orderstatus, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DECIMAL(18,2))
-           AS total_price,
-         CAST(max(CAST(o_totalprice AS DECIMAL(12,2))) AS DECIMAL(18,2))
-           AS max_price
-         FROM orders GROUP BY 1 ORDER BY o_orderstatus""",
     // two reach-CC passes, hub top-5 by (degree desc, node),
     "q_bom_explode" ->
       """WITH RECURSIVE e AS (
@@ -532,65 +251,6 @@ object QRel {
            CAST(sum(q) AS BIGINT) AS ext_qty,
            CAST(max(depth) AS BIGINT) AS max_depth
          FROM paths GROUP BY root ORDER BY root""",
-    // same canonical-undirected graph recipe as kcore; degrees over the
-    // doubled edge set, moments in exact BIGINTs,
-    "q_setops_all" ->
-      """WITH a AS (SELECT user_id % 100 AS k FROM events
-           WHERE ts < TIMESTAMP '2024-01-16'),
-         b AS (SELECT user_id % 100 AS k FROM events
-           WHERE ts >= TIMESTAMP '2024-01-16'),
-         ea AS (SELECT CAST(count(*) AS BIGINT) AS n_except_all FROM
-           (SELECT * FROM a EXCEPT ALL SELECT * FROM b)),
-         ed AS (SELECT CAST(count(*) AS BIGINT) AS n_except_distinct FROM
-           (SELECT * FROM a EXCEPT SELECT * FROM b)),
-         ia AS (SELECT CAST(count(*) AS BIGINT) AS n_intersect_all FROM
-           (SELECT * FROM a INTERSECT ALL SELECT * FROM b))
-         SELECT n_except_all, n_except_distinct, n_intersect_all
-         FROM ea, ed, ia""",
-    // row-300 closed-form profile, chord comparisons cross-multiplied,
-    "q_range_frame" ->
-      """WITH bc AS (SELECT event_type,
-           CAST(round(value * 100) AS BIGINT) AS cents,
-           CAST(count(*) AS BIGINT) AS n FROM events GROUP BY 1, 2)
-         SELECT event_type, cents, n,
-           CAST(sum(n) OVER (PARTITION BY event_type ORDER BY cents
-             RANGE BETWEEN 500 PRECEDING AND 500 FOLLOWING) AS BIGINT) AS n_within
-         FROM bc ORDER BY event_type, cents""",
-    // mirrored closed-form values over half-grids,
-    "q_setops" ->
-      """WITH a AS (SELECT DISTINCT user_id FROM events
-           WHERE ts < TIMESTAMP '2024-01-16'),
-         b AS (SELECT DISTINCT user_id FROM events
-           WHERE ts >= TIMESTAMP '2024-01-16'),
-         i AS (SELECT CAST(count(*) AS BIGINT) AS n_both FROM
-           (SELECT * FROM a INTERSECT SELECT * FROM b)),
-         oa AS (SELECT CAST(count(*) AS BIGINT) AS n_only_pre FROM
-           (SELECT * FROM a EXCEPT SELECT * FROM b)),
-         ob AS (SELECT CAST(count(*) AS BIGINT) AS n_only_post FROM
-           (SELECT * FROM b EXCEPT SELECT * FROM a))
-         SELECT n_both, n_only_pre, n_only_post FROM i, oa, ob""",
-    // 2×2 quadrant sums + milli-floored mean DiD,
-    "q_any_all" ->
-      """WITH sup AS (SELECT s_suppkey, s_nationkey,
-           CAST(round(s_acctbal * 100) AS BIGINT) AS cents FROM supplier),
-         reg AS (SELECT n_regionkey, CAST(count(*) AS BIGINT) AS n_r,
-             CAST(sum(cents) AS BIGINT) AS sum_r
-           FROM sup JOIN nation ON n_nationkey = s_nationkey GROUP BY 1)
-         SELECT s_suppkey, cents FROM sup
-         WHERE NOT EXISTS (SELECT 1 FROM reg
-           WHERE sup.cents * reg.n_r <= reg.sum_r)
-         ORDER BY s_suppkey""",
-    // integer chord projection, 50 clamped bins, per-bin extrema/sums,
-    "q_correlated_above_avg" ->
-      """WITH o AS (SELECT o_custkey,
-           CAST(round(o_totalprice * 100) AS BIGINT) AS cents FROM orders),
-         cu AS (SELECT o_custkey, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(cents) AS BIGINT) AS s FROM o GROUP BY 1)
-         SELECT o.o_custkey, CAST(max(n) AS BIGINT) AS n_orders,
-           CAST(sum(CASE WHEN o.cents * n > s THEN 1 ELSE 0 END)
-             AS BIGINT) AS n_above_own_avg
-         FROM o JOIN cu USING (o_custkey)
-         GROUP BY 1 ORDER BY o.o_custkey""",
     // same coarse assignment, contingency with |n*G - R*C| deviations
   )
 }

@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Storage-layout, commit-log, CDC and streaming gates
-  * (34 entries) with the DuckDB oracle SQL beside each query.
+  * (31 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QStore {
@@ -169,39 +169,6 @@ object QStore {
           "rows_scanned", "rows_match")
         .orderBy("pred_id", "layout")
     }),
-    // Overlap-depth layout audit — the compaction-planner metric (Iceberg/
-    // Delta OPTIMIZE decide re-clustering from exactly this number): per
-    // bucket file, how many sibling files' [min, max] ranges intersect
-    // its own. A hash layout (o_orderkey % 16) makes every file span the
-    // key domain (depth 15); a range layout (16 quantile slabs of the same
-    // rows) drives depth to the boundary-touch minimum. Stats rows are
-    // metadata-sized (16/layout), so the pairwise intersect join is a
-    // broadcast over file stats — never over data.,
-    "store_overlap_depth" -> ((s, dir) => {
-      val o = t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_custkey").as("v"))
-      val mx = o.agg(max("v").as("mxv"))
-      val b = o.crossJoin(broadcast(mx))
-        .selectExpr("v", "o_orderkey % 16 AS b_hash",
-          "(v * 16) div (mxv + 1) AS b_range")
-      def stats(bcol: String, tag: String) = b.groupBy(col(bcol).as("bucket"))
-        .agg(count(lit(1)).as("n"), min("v").as("min_v"), max("v").as("max_v"))
-        .withColumn("layout", lit(tag))
-      val st = stats("b_hash", "hash").unionAll(stats("b_range", "range"))
-        .localCheckpoint(false)
-      val ov = st.as("a").join(broadcast(st.select(
-          col("layout"), col("bucket").as("b2"),
-          col("min_v").as("mn2"), col("max_v").as("mx2"))),
-          Seq("layout"))
-        .filter(col("bucket") =!= col("b2") &&
-          col("min_v") <= col("mx2") && col("mn2") <= col("max_v"))
-        .groupBy("layout", "bucket").agg(count(lit(1)).as("overlap_cnt"))
-      st.join(ov, Seq("layout", "bucket"), "left")
-        .na.fill(0L, Seq("overlap_cnt"))
-        .select("layout", "bucket", "n", "min_v", "max_v", "overlap_cnt")
-        .orderBy("layout", "bucket")
-    }),
-
     // ---- spatial joins over cell indexes (J2/J3, north rule) ----
     // Triangles derived from supplier; PIP via S2 cell-cover candidate join
     // + exact ray-cast refinement. The oracle replicates the ray-cast edge
@@ -609,35 +576,6 @@ object QStore {
         .orderBy("grp")
     }),
 
-    // Pure SQL surface: the same spatial functions through the function
-    // registry + spark.sql over a temp view (what a SQL-first user writes).,
-    "store_spec_evolution" -> ((s, dir) => {
-      val o = t(s, dir, "orders").select(col("o_custkey").as("v"))
-      val mx = o.agg(max("v").as("mxv"))
-      val st0 = o.crossJoin(broadcast(mx))
-        .selectExpr("(v * 16) div (mxv + 1) AS bucket", "v")
-        .groupBy("bucket")
-        .agg(min("v").as("mn"), max("v").as("mx"))
-        .withColumn("spec", lit(0))
-      val st1 = o.selectExpr("v % 16 AS bucket", "v")
-        .groupBy("bucket")
-        .agg(min("v").as("mn"), max("v").as("mx"))
-        .withColumn("spec", lit(1))
-      val st = st0.unionAll(st1)
-      val q = s.createDataFrame(specQueries).toDF("qid", "kind", "lo", "hi")
-      q.crossJoin(broadcast(st))
-        .withColumn("scan", expr(
-          "CASE WHEN spec = 0 THEN mx >= lo AND mn <= hi " +
-            "ELSE kind = 'range' OR bucket = lo % 16 END"))
-        .groupBy("qid", "kind")
-        .agg(sum(when(col("scan") && col("spec") === 0, 1L).otherwise(0L))
-            .as("n_spec0"),
-          sum(when(col("scan") && col("spec") === 1, 1L).otherwise(0L))
-            .as("n_spec1"),
-          count(lit(1)).as("total_files"))
-        .withColumn("scanned", col("n_spec0") + col("n_spec1"))
-        .orderBy("qid")
-    }),
     // Similarity-threshold yield curve: the exact pairwise Jaccard ppm
     // histogram (100k-ppm buckets) over the gate corpus — how many pairs
     // each dedup threshold would merge, the tuning read BEFORE committing
@@ -790,35 +728,6 @@ object QStore {
           "ps_hi - ps_lo AS seg_sum", "cst AS seg_cost_q")
         .orderBy("bucket")
     }),
-    // Trigonometry-free aspect/slope rose (ops.ImageOps.terrainRose).,
-    "store_dict_gain" -> ((s, dir) => {
-      def colStats(df: DataFrame, cname: String, label: String) = {
-        val vals = df.select(col(cname).as("v"))
-        val d = vals.select("v").distinct()
-          .agg(count(lit(1)).as("n_distinct"),
-            sum(length(col("v"))).cast("long").as("distinct_bytes"))
-        vals.agg(count(lit(1)).as("n_rows"),
-            sum(length(col("v"))).cast("long").as("plain_bytes"))
-          .crossJoin(d)
-          .withColumn("column_name", lit(label))
-      }
-      colStats(t(s, dir, "orders"), "o_orderstatus", "orders.o_orderstatus")
-        .unionByName(colStats(t(s, dir, "orders"), "o_orderpriority",
-          "orders.o_orderpriority"))
-        .unionByName(colStats(t(s, dir, "events"), "event_type",
-          "events.event_type"))
-        .withColumn("bits", expr(
-          """CASE WHEN n_distinct <= 2 THEN 1 WHEN n_distinct <= 4 THEN 2
-             WHEN n_distinct <= 16 THEN 4 WHEN n_distinct <= 256 THEN 8
-             ELSE 16 END"""))
-        .withColumn("dict_bytes", expr(
-          "distinct_bytes + (n_rows * bits + 7) DIV 8"))
-        .withColumn("gain_ppm", expr(
-          "1000000 * (plain_bytes - dict_bytes) DIV plain_bytes"))
-        .select("column_name", "n_rows", "n_distinct", "plain_bytes",
-          "dict_bytes", "gain_ppm")
-        .orderBy("column_name")
-    }),
     // LSB watermark embed cost: pixels whose least-significant bit
     // disagrees with the pseudorandom payload bit (r*7+c*13 parity) —
     // the steganographic capacity/visibility number, exact.,
@@ -963,28 +872,6 @@ object QStore {
            n_scanned, rows_scanned,
            CAST(COALESCE(rows_match, 0) AS BIGINT) AS rows_match
          FROM scan LEFT JOIN m USING (pred_id) ORDER BY pred_id, layout""",
-    // identical STR rank arithmetic: global (xq, point_id) rank, ⌈n/S⌉
-    // slices, per-slice (yq, point_id) rank into leaves of 64,
-    "store_overlap_depth" ->
-      """WITH o AS (SELECT o_orderkey, o_custkey AS v FROM orders),
-         mx AS (SELECT max(v) AS mxv FROM o),
-         b AS (SELECT v, o_orderkey % 16 AS b_hash,
-           (v * 16) // (mxv + 1) AS b_range FROM o, mx),
-         st AS (SELECT 'hash' AS layout, b_hash AS bucket,
-             CAST(count(*) AS BIGINT) AS n, min(v) AS min_v, max(v) AS max_v
-           FROM b GROUP BY 2
-           UNION ALL
-           SELECT 'range' AS layout, b_range AS bucket,
-             CAST(count(*) AS BIGINT) AS n, min(v) AS min_v, max(v) AS max_v
-           FROM b GROUP BY 2),
-         ov AS (SELECT a.layout, a.bucket, CAST(count(*) AS BIGINT) AS overlap_cnt
-           FROM st a JOIN st x ON a.layout = x.layout AND a.bucket <> x.bucket
-             AND a.min_v <= x.max_v AND x.min_v <= a.max_v
-           GROUP BY 1, 2)
-         SELECT st.layout, st.bucket, st.n, st.min_v, st.max_v,
-           coalesce(ov.overlap_cnt, 0) AS overlap_cnt
-         FROM st LEFT JOIN ov ON st.layout = ov.layout AND st.bucket = ov.bucket
-         ORDER BY st.layout, st.bucket""",
     "checkpoint_resume" ->
       """SELECT o_custkey % 16 AS grp, count(*) AS n,
          round(sum(o_totalprice), 2) AS sum_price
@@ -1174,34 +1061,6 @@ object QStore {
            round(sum(CASE WHEN o_orderkey % 12 < 4 THEN o_totalprice + 1000.0
                           ELSE o_totalprice END), 2) AS sum_price, 'v' AS snap
          FROM orders GROUP BY 1 ORDER BY grp""",
-    // identical group-count length trick, identical fixed-point Flesch
-    // numerators, floor division (DuckDB // floors; the engine floors via
-    // the pmod identity),
-    "store_spec_evolution" -> {
-      val qRows = specQueries.map { case (qid, kind, lo, hi) =>
-        s"(CAST($qid AS BIGINT), '$kind', $lo, $hi)"
-      }.mkString(", ")
-      s"""WITH o AS (SELECT o_custkey AS v FROM orders),
-         mx AS (SELECT max(v) AS mxv FROM o),
-         st0 AS (SELECT (v * 16) // (mxv + 1) AS bucket, min(v) AS mn,
-             max(v) AS mx, 0 AS spec
-           FROM o, mx GROUP BY 1),
-         st1 AS (SELECT v % 16 AS bucket, min(v) AS mn, max(v) AS mx,
-             1 AS spec
-           FROM o GROUP BY 1),
-         st AS (SELECT * FROM st0 UNION ALL SELECT * FROM st1),
-         q(qid, kind, lo, hi) AS (VALUES $qRows),
-         m AS (SELECT qid, kind, spec,
-             CASE WHEN spec = 0 THEN st.mx >= lo AND st.mn <= hi
-                  ELSE kind = 'range' OR bucket = lo % 16 END AS scan
-           FROM q, st)
-         SELECT qid, kind,
-           CAST(sum(CASE WHEN scan AND spec = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_spec0,
-           CAST(sum(CASE WHEN scan AND spec = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_spec1,
-           CAST(count(*) AS BIGINT) AS total_files,
-           CAST(sum(CASE WHEN scan THEN 1 ELSE 0 END) AS BIGINT) AS scanned
-         FROM m GROUP BY 1, 2 ORDER BY qid"""
-    },
     // exact pairwise Jaccard ppm bucketed at 100k,
     "store_compaction_plan" ->
       """WITH RECURSIVE f AS (SELECT o_orderkey % 8 AS part,
@@ -1339,44 +1198,6 @@ object QStore {
            c.cst AS seg_cost_q
          FROM bounds JOIN cost c ON c.i = bounds.lo AND c.j = bounds.hi
          ORDER BY bucket""",
-    // same sign/ratio octant partition and |grad|^2 bands,
-    "store_dict_gain" ->
-      """WITH u AS (
-           SELECT 'orders.o_orderstatus' AS column_name,
-             CAST(count(*) AS BIGINT) AS n_rows,
-             CAST(sum(length(o_orderstatus)) AS BIGINT) AS plain_bytes,
-             CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS n_distinct,
-             CAST((SELECT sum(length(v)) FROM
-               (SELECT DISTINCT o_orderstatus AS v FROM orders) t)
-               AS BIGINT) AS distinct_bytes
-           FROM orders
-           UNION ALL
-           SELECT 'orders.o_orderpriority', CAST(count(*) AS BIGINT),
-             CAST(sum(length(o_orderpriority)) AS BIGINT),
-             CAST(count(DISTINCT o_orderpriority) AS BIGINT),
-             CAST((SELECT sum(length(v)) FROM
-               (SELECT DISTINCT o_orderpriority AS v FROM orders) t)
-               AS BIGINT)
-           FROM orders
-           UNION ALL
-           SELECT 'events.event_type', CAST(count(*) AS BIGINT),
-             CAST(sum(length(event_type)) AS BIGINT),
-             CAST(count(DISTINCT event_type) AS BIGINT),
-             CAST((SELECT sum(length(v)) FROM
-               (SELECT DISTINCT event_type AS v FROM events) t)
-               AS BIGINT)
-           FROM events),
-         b AS (SELECT *, CASE WHEN n_distinct <= 2 THEN 1
-             WHEN n_distinct <= 4 THEN 2 WHEN n_distinct <= 16 THEN 4
-             WHEN n_distinct <= 256 THEN 8 ELSE 16 END AS bits
-           FROM u)
-         SELECT column_name, n_rows, n_distinct, plain_bytes,
-           CAST(distinct_bytes + (n_rows * bits + 7) // 8 AS BIGINT)
-             AS dict_bytes,
-           CAST(1000000 * (plain_bytes
-             - (distinct_bytes + (n_rows * bits + 7) // 8))
-             // plain_bytes AS BIGINT) AS gain_ppm
-         FROM b ORDER BY column_name""",
     // LSB vs (7r+13c) parity payload over the grid closed form,
     "store_rle_gain" ->
       """WITH o AS (SELECT o_orderstatus,

@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Text-analysis gates: language id, quality, tokenization, stats
-  * (41 entries) with the DuckDB oracle SQL beside each query.
+  * (27 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QText {
@@ -32,25 +32,6 @@ object QText {
         .withColumn("rank_x_freq", expr("rank * freq"))
         .select("rank", "w", "freq", "rank_x_freq")
         .orderBy("rank")
-    }),
-    // Calibration bins: pre-period purchase propensity (ppm, floored)
-    // bucketed at 0.1, vs actual post-period conversion — the
-    // calibration-curve read with zero model; users active both periods.,
-    "text_distinctive_terms" -> ((s, dir) => {
-      val words = t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("w"))
-      val bySrcWord = words.groupBy("source", "w").agg(count(lit(1)).as("o"))
-      val bySrc = words.groupBy("source").agg(count(lit(1)).as("ns"))
-      val byWord = words.groupBy("w").agg(count(lit(1)).as("ow"))
-      val tot = words.agg(count(lit(1)).as("n"))
-      bySrcWord.join(bySrc, Seq("source")).join(byWord, Seq("w"))
-        .crossJoin(broadcast(tot))
-        .withColumn("score", expr("o * (n - ns) - (ow - o) * ns"))
-        .withColumn("rk", row_number().over(Window.partitionBy("source")
-          .orderBy(col("score").desc, col("w"))).cast("int"))
-        .filter(col("rk") <= 5)
-        .select("source", "rk", "w", "o", "ow", "ns", "n", "score")
-        .orderBy("source", "rk")
     }),
     // Straightness index per trajectory: net displacement² over Σ step²
     // in exact ppm — 10⁶ means a beeline, small means wandering; the
@@ -127,78 +108,6 @@ object QText {
         .select("rank", "cum_freq", "total_freq", "coverage_ppm")
         .orderBy("rank")
     }),
-    // DC-offset audit (ops.MediaOps.dcStats): exact signed sample sums —
-    // the stuck-bias ADC screen under the energy gates.,
-    "text_template_prefixes" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .select(col("doc_id"),
-          expr("array_join(slice(split(text, ' '), 1, 5), ' ')")
-            .as("prefix"))
-        .groupBy("prefix").agg(count(lit(1)).as("n_docs"),
-          min("doc_id").as("min_doc"))
-        .filter(col("n_docs") >= 3)
-        .orderBy("prefix")
-    }),
-    // Fill-rule disagreement census: the same self-intersecting bowtie
-    // ring under BOTH polygon fill rules — even-odd (crossing parity) vs
-    // nonzero (signed winding) — per walk fix; they differ exactly on the
-    // overlap lobe, the distinction GeoJSON consumers hit on malformed
-    // rings. Shared crossing expressions, pure integer signs.,
-    "text_length_quantiles" -> ((s, dir) => {
-      val docs = t(s, dir, "documents")
-        .select(col("source"), col("doc_id"),
-          expr("size(split(text, ' '))").cast("long").as("toks"))
-      val wv = Window.partitionBy("source").orderBy("toks", "doc_id")
-      val wp = Window.partitionBy("source")
-      docs.withColumn("rn", row_number().over(wv).cast("long"))
-        .withColumn("n", count(lit(1)).over(wp))
-        .groupBy("source")
-        .agg(max("n").as("n_docs"),
-          max(when(col("rn") === expr("(n - 1) * 50 DIV 100 + 1"),
-            col("toks"))).as("p50_toks"),
-          max(when(col("rn") === expr("(n - 1) * 90 DIV 100 + 1"),
-            col("toks"))).as("p90_toks"),
-          max("toks").as("max_toks"))
-        .orderBy("source")
-    }),
-    // Metric agreement: Kendall concordance between the DTW and Fréchet
-    // pair rankings over the same trajectories — do the two similarity
-    // metrics order pairs the same way? Exact concordant/discordant
-    // counts (ties dropped), tau in milli.,
-    "text_source_overlap" -> ((s, dir) => {
-      val vw = t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("w"))
-        .distinct()
-      val sizes = vw.groupBy("source").agg(count(lit(1)).as("n"))
-      vw.as("x").join(vw.as("y"),
-          col("x.w") === col("y.w") &&
-            col("x.source") < col("y.source"))
-        .groupBy(col("x.source").as("src_a"),
-          col("y.source").as("src_b"))
-        .agg(count(lit(1)).as("n_common"))
-        .join(sizes.select(col("source").as("src_a"), col("n").as("n_a")),
-          Seq("src_a"))
-        .join(sizes.select(col("source").as("src_b"), col("n").as("n_b")),
-          Seq("src_b"))
-        .withColumn("jaccard_ppm",
-          expr("n_common * 1000000 DIV (n_a + n_b - n_common)"))
-        .select("src_a", "src_b", "n_a", "n_b", "n_common", "jaccard_ppm")
-        .orderBy("src_a", "src_b")
-    }),
-    // Integer EWMA (α = 1/8) over the hourly series as ONE codegen'd
-    // aggregate() fold per type — floor-consistent division via the
-    // sign-split CASE so Spark DIV and DuckDB // agree on negative
-    // innovations; final level + max innovation. The streaming-smoother
-    // read next to events_holt.,
-    "text_soundex" -> ((s, dir) => {
-      val words = t(s, dir, "part")
-        .selectExpr("split_part(p_name, ' ', 1) AS w")
-        .selectExpr(s"${soundexSql("w", g = false)} AS code", "w")
-      words.groupBy("code")
-        .agg(count(lit(1)).as("sz"), countDistinct("w").as("n_words"))
-        .withColumn("candidate_pairs", expr("sz * (sz - 1) DIV 2"))
-        .orderBy("code")
-    }),
     // Ordinal-pattern census (Bandt–Pompe permutation patterns, public):
     // per event_type the hourly-count series' sliding length-3 windows
     // mapped to their rank permutation (ties break by earlier position,
@@ -241,26 +150,6 @@ object QText {
     // two key-bounded aggs, no joins.,
     "text_simpson" -> ((s, dir) => {
       ops.Curation.simpson(t(s, dir, "documents"), col("text"))
-        .orderBy("doc_id")
-    }),
-    // OCR-garbage screen: per-word max consonant run via an 8-step RLIKE
-    // ladder (identical regex classes both engines), garbage = run ≥ 4;
-    // doc_id % 13 docs get planted garbage tokens so the gate has signal.,
-    "text_ocr_garbage" -> ((s, dir) => {
-      val ladder = (8 to 1 by -1).map(k =>
-        s"WHEN w RLIKE '[bcdfghjklmnpqrstvwxyz]{$k}' THEN $k")
-        .mkString("CASE ", " ", " ELSE 0 END")
-      t(s, dir, "documents")
-        .selectExpr("doc_id",
-          "CASE WHEN doc_id % 13 = 0 THEN text || ' xqzvwm kkkkk ok' ELSE text END AS t2")
-        .select(col("doc_id"),
-          explode(split(lower(col("t2")), "[^a-z]+")).as("w"))
-        .filter(length(col("w")) > 0)
-        .withColumn("run", expr(ladder))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_words"), max("run").as("max_run"),
-          sum(when(col("run") >= 4, 1L).otherwise(0L)).as("n_garbage"))
-        .withColumn("garbage_ppm", expr("n_garbage * 1000000 div n_words"))
         .orderBy("doc_id")
     }),
     "text_stats" -> ((s, dir) => {
@@ -349,30 +238,6 @@ object QText {
         "cast(aggregate(split(text, ' '), 0, (acc, w) -> acc + cast((length(w) + 3) / 4 as int)) as bigint) AS n_bpe_tokens")
         .orderBy("doc_id")
     }),
-    // Heaps-law vocabulary growth over 3-gram TYPES: distinct-type count
-    // after each 50-doc corpus prefix — each gram shuffles ONCE (min
-    // first-occurrence doc per type), the curve itself is a cumulative
-    // window over ≤ ⌈N/50⌉ checkpoint rows. The vocabulary-saturation
-    // diagnostic of corpus curation (is more data still adding new
-    // types?); 3-grams because the synthetic unigram vocabulary (31
-    // types) saturates inside the first bucket — the gate needs a curve
-    // that is still growing.
-    // Hapax share per document — the vocabulary-tail exposure screen:
-    // which docs are built from corpus-frequency-1 tokens (rare-content /
-    // OCR-noise / code-dump indicator; the complement of templated text).
-    // One token-keyed freq agg + one rejoin, both vocabulary-bounded;
-    // exact ppm by integer division.,
-    "text_hapax" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-      val freq = toks.groupBy("tok").agg(count(lit(1)).as("cf"))
-      toks.join(freq, "tok")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_tokens"),
-          sum(when(col("cf") === 1, 1L).otherwise(0L)).as("n_hapax"))
-        .withColumn("hapax_ppm", expr("(n_hapax * 1000000L) div n_tokens"))
-        .orderBy("doc_id")
-    }),
     "text_vocab_growth" -> ((s, dir) => {
       val firstSeen = t(s, dir, "documents")
         .select(col("doc_id"),
@@ -450,104 +315,6 @@ object QText {
       ops.TextDedup.bpePairStats(t(s, dir, "documents"), topK = 20)
         .orderBy("rk")
     }),
-    // Tile-pyramid materialization: render each 1° tile into 2×2
-    // Terrarium-RGB PNG sub-tiles (64² px, bilinear at pixel centers), then
-    // DECODE the produced PNGs back and emit per-sub-tile RGB channel sums —
-    // the whole produce-side chain (bilinear sample → Terrarium encode → PNG
-    // encode → PNG decode) is pinned, because Terrarium encode∘decode is
-    // bijective on the byte triple and the oracle recomputes the same
-    // triples from the closed-form grid.,
-    "text_yule_k" -> ((s, dir) => {
-      // k in DECIMAL(38,0): 10^7·(s2 − n) reaches 2^63 already at ~10^6
-      // concentrated tokens per source, where bigint math would wrap
-      // silently (ANSI off) while DuckDB errors. Wide integers on both
-      // sides (decimal here, HUGEINT in the oracle) agree up to 10^12
-      // tokens/source; the remaining headroom bound is the s2 AGGREGATE
-      // itself (a single type must stay under ~3.0e9 occurrences per
-      // source for c*c to fit bigint).
-      t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-        .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-        .groupBy("source")
-        .agg(sum("c").as("n_tokens"), count(lit(1)).as("n_types"),
-          sum(expr("c * c")).as("s2"))
-        .withColumn("k_milli", expr(
-          """10000000 * (CAST(s2 AS DECIMAL(38,0)) - n_tokens)
-             DIV (CAST(n_tokens AS DECIMAL(38,0)) * n_tokens)"""))
-        .orderBy("source")
-    }),
-    // Record-breaking days per event type: running-max/min census over the
-    // daily-count series (expected ~ln n records for exchangeable data —
-    // an excess says trend) with the index of the last record high.,
-    "text_sumbasic_pick" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), posexplode(split(col("text"), " ")))
-        .withColumnRenamed("col", "tok")
-      val freq = toks.groupBy("tok").agg(count(lit(1)).as("f"))
-      val chunks = toks.join(freq, Seq("tok"))
-        .groupBy(col("doc_id"), expr("pos DIV 10").as("chunk"))
-        .agg(count(lit(1)).as("n_words"), sum("f").as("sum_freq"))
-        .withColumn("score_q", expr("sum_freq * 1000000 DIV n_words"))
-      val nc = chunks.groupBy("doc_id").agg(count(lit(1)).as("n_chunks"))
-      chunks.withColumn("rn", row_number().over(Window.partitionBy("doc_id")
-          .orderBy(col("score_q").desc, col("chunk").asc)))
-        .filter(col("rn") === 1)
-        .join(nc, Seq("doc_id"))
-        .select(col("doc_id"), col("n_chunks"), col("chunk").as("best_chunk"),
-          col("n_words"), col("sum_freq"), col("score_q"))
-        .orderBy("doc_id")
-    }),
-    // Greedy max-coverage center selection (ops.Embeddings.facilityGreedy):
-    // 4 rounds over the r2=1.44 coverage ball, candidate pool broadcast —
-    // the (1-1/e) coreset pick that replaces random sampling in
-    // training-data selection.,
-    "text_positional_bias" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .withColumn("w", split(col("text"), " "))
-        .withColumn("len", size(col("w")).cast("long"))
-        .filter(col("len") > 1)
-        .select(col("source"), col("len"), posexplode(col("w")))
-        .withColumnRenamed("col", "tok")
-      val top = toks.groupBy("tok").agg(count(lit(1)).as("f"))
-        .orderBy(col("f").desc, col("tok").asc).limit(20)
-      toks.join(broadcast(top.select("tok")), Seq("tok"))
-        .withColumn("relq", expr("1000 * pos DIV (len - 1)"))
-        .groupBy("source", "tok")
-        .agg(count(lit(1)).as("n_occ"), sum("relq").as("sum_relq"))
-        .withColumn("mean_relq", expr("sum_relq DIV n_occ"))
-        .orderBy("source", "tok")
-    }),
-    // OD-matrix independence audit: observed flow shares vs the
-    // rank-1 margin product (row x column totals), both quantized ppm —
-    // the gravity-model null every OD study tests first, over the same
-    // flows traj_od_matrix builds.,
-    "text_wordpiece_count" -> ((s, dir) => {
-      import s.implicits._
-      val vocab = wordpieceVocab
-      val occ = t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-        .groupBy("source", "tok").agg(count(lit(1)).as("cnt"))
-      val seg = occ.select("tok").distinct().as[String].map { tok =>
-        var pos = 0; var pieces = 0L; var multi = 0L
-        while (pos < tok.length) {
-          var m = 1
-          vocab.foreach { p =>
-            if (p.length > m && tok.startsWith(p, pos)) m = p.length
-          }
-          if (m >= 2) multi += 1
-          pieces += 1
-          pos += m
-        }
-        (tok, pieces, multi)
-      }.toDF("tok", "pieces", "multi")
-      occ.join(seg, Seq("tok"))
-        .groupBy("source")
-        .agg(sum("cnt").as("n_tokens"),
-          sum(expr("cnt * pieces")).as("n_pieces"),
-          sum(expr("cnt * multi")).as("n_multi"))
-        .withColumn("ppt_milli", expr("1000 * n_pieces DIV n_tokens"))
-        .orderBy("source")
-    }),
     // Emerging hot-spot classification: per activity cell the
     // Mann-Kendall S over six 15-day bins (zero-filled) plus first/last
     // bin counts -> intensifying / diminishing / new / stable — the
@@ -575,88 +342,6 @@ object QText {
         .select(col("tok"), col("rank").as("pr"))
         .orderBy(col("pr").desc, col("tok")).limit(10)
     }),
-    // One anisotropic-diffusion step (ops.ImageOps.peronaMalik): exact
-    // integer conduction-weighted flux field summary.,
-    "text_stylo_delta" -> ((s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(col("source"), explode(split(col("text"), " ")).as("tok"))
-      val top = toks.groupBy("tok").agg(count(lit(1)).as("f"))
-        .orderBy(col("f").desc, col("tok").asc).limit(20).select("tok")
-      val tot = toks.groupBy("source").agg(count(lit(1)).as("n_tok"))
-      val fpm = toks.join(broadcast(top), Seq("tok"))
-        .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-        .join(tot, Seq("source"))
-        .withColumn("fpm", expr("1000000 * c DIV n_tok"))
-      val grid = tot.select(col("source")).crossJoin(broadcast(top))
-        .join(fpm.select("source", "tok", "fpm"), Seq("source", "tok"), "left")
-        .withColumn("fpm", coalesce(col("fpm"), lit(0L)))
-      grid.select(col("source").as("src_a"), col("tok"), col("fpm").as("fa"))
-        .join(grid.select(col("source").as("src_b"), col("tok"),
-          col("fpm").as("fb")), Seq("tok"))
-        .filter(col("src_a") < col("src_b"))
-        .groupBy("src_a", "src_b")
-        .agg(sum(expr("abs(fa - fb)")).as("l1_fpm"))
-        .orderBy("src_a", "src_b")
-    }),
-    // Quantified-comparison surface (> ALL via NOT EXISTS over exact
-    // cents): suppliers whose balance beats every region's average,
-    // cross-multiplied so no float average is ever formed.,
-    "text_bpe_merge" -> ((s, dir) => {
-      import s.implicits._
-      var words = t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("tok"))
-        .groupBy("tok").agg(count(lit(1)).as("wcnt"))
-        .withColumn("seg", concat(lit(" "),
-          trim(regexp_replace(col("tok"), "(.)", "$1 ")), lit(" ")))
-        .localCheckpoint(false)
-      val out = scala.collection.mutable.ArrayBuffer
-        .empty[(Long, String, String, Long, Long)]
-      for (round <- 1 to 2) {
-        val syms = words.select(col("tok"), col("wcnt"),
-          posexplode(split(trim(col("seg")), " ")))
-          .withColumnRenamed("col", "sym")
-        val top = syms
-          .join(syms.select(col("tok"), (col("pos") - 1).as("pos"),
-            col("sym").as("sym_b")), Seq("tok", "pos"))
-          .groupBy(col("sym").as("a"), col("sym_b").as("b"))
-          .agg(sum("wcnt").as("cnt"))
-          .orderBy(col("cnt").desc, col("a").asc, col("b").asc).limit(1)
-          .as[(String, String, Long)].collect()(0)
-        // column/literal API, not string-interpolated expr(): the merge
-        // symbols are corpus-derived, and a token containing a quote or
-        // backslash would break (or inject into) a parsed SQL string
-        words = words.withColumn("seg",
-            replace(col("seg"), lit(s" ${top._1} ${top._2} "),
-              lit(s" ${top._1}${top._2} ")))
-          .localCheckpoint(false)
-        val nAfter = words
-          .select((col("wcnt") * (size(split(trim(col("seg")), " ")))).as("ns"))
-          .agg(sum("ns")).head().getLong(0)
-        out += ((round.toLong, top._1, top._2, top._3, nAfter))
-      }
-      out.toSeq.toDF("round", "sym_a", "sym_b", "pair_cnt", "n_symbols_after")
-        .orderBy("round")
-    }),
-    // LSM write-amplification study: fanout-4 leveling vs tiering over
-    // 128 flush units — the base-4 carry structure makes every
-    // compaction's cost closed-form, so the whole sim is a windowed
-    // cumulative sum; milestones every 16 flushes with WA in milli.,
-    "text_char_class_profile" -> ((s, dir) => {
-      t(s, dir, "documents")
-        .withColumn("n_chars", length(col("text")).cast("long"))
-        .withColumn("n_alpha", (col("n_chars") -
-          length(regexp_replace(col("text"), "[a-z]", ""))).cast("long"))
-        .withColumn("n_space", (col("n_chars") -
-          length(regexp_replace(col("text"), " ", ""))).cast("long"))
-        .groupBy("source")
-        .agg(sum("n_chars").as("n_chars"), sum("n_alpha").as("n_alpha"),
-          sum("n_space").as("n_space"))
-        .withColumn("alpha_ppm", expr("1000000 * n_alpha DIV n_chars"))
-        .orderBy("source")
-    }),
-    // DAU / trailing-28-day MAU stickiness: exact windowed distinct via
-    // the (day x active-day) range join — the product-health ratio, no
-    // sketch needed at gate scale.
   )
 
   val sql: Map[String, String] = Map(
@@ -669,24 +354,6 @@ object QText {
              ORDER BY freq DESC, w) AS INT) AS rank FROM f)
          SELECT rank, w, freq, rank * freq AS rank_x_freq
          FROM r WHERE rank <= 50 ORDER BY rank""",
-    // pre-period propensity bins vs post conversion,
-    "text_distinctive_terms" ->
-      """WITH w AS (SELECT source, unnest(string_split(text, ' ')) AS w
-           FROM documents),
-         sw AS (SELECT source, w, CAST(count(*) AS BIGINT) AS o
-           FROM w GROUP BY 1, 2),
-         s AS (SELECT source, CAST(count(*) AS BIGINT) AS ns
-           FROM w GROUP BY 1),
-         wd AS (SELECT w, CAST(count(*) AS BIGINT) AS ow FROM w GROUP BY 1),
-         n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM w),
-         sc AS (SELECT sw.source, sw.w, o, ow, ns, n.n,
-             o * (n.n - ns) - (ow - o) * ns AS score
-           FROM sw JOIN s ON s.source = sw.source
-           JOIN wd ON wd.w = sw.w CROSS JOIN n),
-         r AS (SELECT *, CAST(row_number() OVER (PARTITION BY source
-             ORDER BY score DESC, w) AS INT) AS rk FROM sc)
-         SELECT source, rk, w, o, ow, ns, n, score
-         FROM r WHERE rk <= 5 ORDER BY source, rk""",
     "text_vocab_oov" -> vocabOovOracleSql,
     "text_bigram_lm" ->
       """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
@@ -793,55 +460,6 @@ object QText {
          SELECT rank, cum_freq, total_freq,
            cum_freq * 1000000 // total_freq AS coverage_ppm
          FROM r, t WHERE rank IN (10, 50, 100, 500) ORDER BY rank""",
-    // signed closed-form sample sums per asset,
-    "text_template_prefixes" ->
-      """WITH p AS (SELECT doc_id,
-           array_to_string(list_slice(string_split(text, ' '), 1, 5), ' ')
-             AS prefix
-           FROM documents)
-         SELECT prefix, CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(min(doc_id) AS BIGINT) AS min_doc
-         FROM p GROUP BY 1 HAVING count(*) >= 3 ORDER BY prefix""",
-    // the walk cumsum + the same shared crossing terms,
-    "text_length_quantiles" ->
-      """WITH d AS (SELECT source, doc_id,
-           CAST(len(string_split(text, ' ')) AS BIGINT) AS toks
-           FROM documents),
-         r AS (SELECT source, toks,
-             CAST(row_number() OVER (PARTITION BY source
-               ORDER BY toks, doc_id) AS BIGINT) AS rn,
-             CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n
-           FROM d)
-         SELECT source, max(n) AS n_docs,
-           max(CASE WHEN rn = (n - 1) * 50 // 100 + 1 THEN toks END)
-             AS p50_toks,
-           max(CASE WHEN rn = (n - 1) * 90 // 100 + 1 THEN toks END)
-             AS p90_toks,
-           CAST(max(toks) AS BIGINT) AS max_toks
-         FROM r GROUP BY 1 ORDER BY source""",
-    // coreness rounds (shared builder) + shell rollup,
-    "text_source_overlap" ->
-      """WITH vw AS (SELECT DISTINCT source,
-           unnest(string_split(text, ' ')) AS w FROM documents),
-         sz AS (SELECT source, CAST(count(*) AS BIGINT) AS n
-           FROM vw GROUP BY 1),
-         pr AS (SELECT x.source AS src_a, y.source AS src_b,
-             CAST(count(*) AS BIGINT) AS n_common
-           FROM vw x JOIN vw y ON y.w = x.w AND x.source < y.source
-           GROUP BY 1, 2)
-         SELECT src_a, src_b, a.n AS n_a, b.n AS n_b, n_common,
-           n_common * 1000000 // (a.n + b.n - n_common) AS jaccard_ppm
-         FROM pr JOIN sz a ON a.source = pr.src_a
-         JOIN sz b ON b.source = pr.src_b
-         ORDER BY src_a, src_b""",
-    // the EWMA recurrence replayed one hour per recursion level,
-    "text_soundex" ->
-      s"""WITH w AS (SELECT split_part(p_name, ' ', 1) AS w FROM part),
-         c AS (SELECT w, ${soundexSql("w", g = true)} AS code FROM w)
-         SELECT code, CAST(count(*) AS BIGINT) AS sz,
-           CAST(count(DISTINCT w) AS BIGINT) AS n_words,
-           CAST(count(*) * (count(*) - 1) // 2 AS BIGINT) AS candidate_pairs
-         FROM c GROUP BY 1 ORDER BY code""",
     // hourly counts, lead() triples, rank-by-comparison (ties to earlier
     // position), pattern = r0*100 + r1*10 + r2,
     "text_lang_profile" ->
@@ -900,23 +518,6 @@ object QText {
                 THEN coll * 1000000 // (n_tokens * (n_tokens - 1))
                 ELSE 0 END AS BIGINT) AS simpson_ppm
          FROM d ORDER BY doc_id""",
-    "text_ocr_garbage" -> {
-      val ladder = (8 to 1 by -1).map(k =>
-        s"WHEN regexp_matches(w, '[bcdfghjklmnpqrstvwxyz]{$k}') THEN $k")
-        .mkString("CASE ", " ", " ELSE 0 END")
-      s"""WITH d AS (SELECT doc_id,
-           CASE WHEN doc_id % 13 = 0 THEN text || ' xqzvwm kkkkk ok' ELSE text END AS t2
-           FROM documents),
-         w AS (SELECT doc_id, unnest(string_split_regex(lower(t2), '[^a-z]+')) AS w FROM d),
-         r AS (SELECT doc_id, $ladder AS run FROM w WHERE len(w) > 0),
-         a AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-             max(run) AS max_run,
-             CAST(sum(CASE WHEN run >= 4 THEN 1 ELSE 0 END) AS BIGINT) AS n_garbage
-           FROM r GROUP BY 1)
-         SELECT doc_id, n_words, max_run, n_garbage,
-           (n_garbage * 1000000) // n_words AS garbage_ppm
-         FROM a ORDER BY doc_id"""
-    },
     "text_stats" ->
       """SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
            CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words,
@@ -1017,18 +618,6 @@ object QText {
            CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens,
            CAST(list_sum(list_transform(string_split(text, ' '), w -> (length(w) + 3) // 4)) AS BIGINT) AS n_bpe_tokens
          FROM documents ORDER BY doc_id""",
-    // one min per 3-gram type, then the cumulative curve over checkpoints
-    // corpus term frequencies, hapax flags re-joined per doc, exact ppm,
-    "text_hapax" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS tok
-           FROM documents),
-         freq AS (SELECT tok, count(*) AS cf FROM toks GROUP BY 1)
-         SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-           CAST(sum(CASE WHEN f.cf = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_hapax,
-           (CAST(sum(CASE WHEN f.cf = 1 THEN 1 ELSE 0 END) AS BIGINT) * 1000000)
-             // CAST(count(*) AS BIGINT) AS hapax_ppm
-         FROM toks t JOIN freq f ON t.tok = f.tok
-         GROUP BY t.doc_id ORDER BY t.doc_id""",
     "text_vocab_growth" ->
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          grams AS (SELECT doc_id,
@@ -1096,88 +685,6 @@ object QText {
              CAST(row_number() OVER (ORDER BY n DESC, pair) AS INT) AS rk
            FROM c)
          SELECT pair, n, rk FROM r WHERE rk <= 20 ORDER BY rk""",
-    "text_yule_k" ->
-      """WITH toks AS (SELECT source,
-           unnest(string_split(text, ' ')) AS tok FROM documents),
-         tf AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS c
-           FROM toks GROUP BY 1, 2),
-         g AS (SELECT source, CAST(sum(c) AS BIGINT) AS n_tokens,
-             CAST(count(*) AS BIGINT) AS n_types,
-             CAST(sum(c*c) AS BIGINT) AS s2
-           FROM tf GROUP BY 1)
-         SELECT source, n_tokens, n_types, s2,
-           CAST(10000000 * (CAST(s2 AS HUGEINT) - n_tokens)
-             // (CAST(n_tokens AS HUGEINT) * n_tokens)
-             AS BIGINT) AS k_milli
-         FROM g ORDER BY source""",
-    // running extrema over the preceding frame, same null-first-day rule,
-    "text_sumbasic_pick" ->
-      """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-         pos AS (SELECT doc_id, CAST(g AS BIGINT) - 1 AS pos,
-             list_extract(w, CAST(g AS BIGINT)) AS tok
-           FROM toks, unnest(range(1, len(w) + 1)) AS t(g)),
-         freq AS (SELECT tok, CAST(count(*) AS BIGINT) AS f
-           FROM pos GROUP BY 1),
-         ch AS (SELECT doc_id, pos // 10 AS chunk,
-             CAST(count(*) AS BIGINT) AS n_words,
-             CAST(sum(f) AS BIGINT) AS sum_freq
-           FROM pos JOIN freq USING (tok) GROUP BY 1, 2),
-         sc AS (SELECT doc_id, chunk, n_words, sum_freq,
-             CAST(sum_freq * 1000000 // n_words AS BIGINT) AS score_q,
-             row_number() OVER (PARTITION BY doc_id
-               ORDER BY sum_freq * 1000000 // n_words DESC, chunk) AS rn,
-             CAST(count(*) OVER (PARTITION BY doc_id) AS BIGINT) AS n_chunks
-           FROM ch)
-         SELECT doc_id, n_chunks, CAST(chunk AS BIGINT) AS best_chunk,
-           n_words, sum_freq, score_q
-         FROM sc WHERE rn = 1 ORDER BY doc_id""",
-    // 4 unrolled greedy rounds over the same r2-ball edge list,
-    "text_positional_bias" ->
-      """WITH toks AS (SELECT source, string_split(text, ' ') AS w FROM documents),
-         pos AS (SELECT source, CAST(len(w) AS BIGINT) AS len,
-             CAST(g AS BIGINT) - 1 AS pos,
-             list_extract(w, CAST(g AS BIGINT)) AS tok
-           FROM toks, unnest(range(1, len(w) + 1)) AS t(g)
-           WHERE len(w) > 1),
-         top AS (SELECT tok FROM (SELECT tok, count(*) AS f FROM pos
-           GROUP BY 1 ORDER BY f DESC, tok LIMIT 20) tt)
-         SELECT source, tok, CAST(count(*) AS BIGINT) AS n_occ,
-           CAST(sum(1000 * pos // (len - 1)) AS BIGINT) AS sum_relq,
-           CAST(sum(1000 * pos // (len - 1)) // count(*) AS BIGINT) AS mean_relq
-         FROM pos JOIN top USING (tok)
-         GROUP BY 1, 2 ORDER BY source, tok""",
-    // same OD flows, margin-product ppm null, floored deviations,
-    "text_wordpiece_count" -> {
-      val values = wordpieceVocab
-        .map(p => s"('${p}', ${p.length})").mkString(",")
-      s"""WITH RECURSIVE vocab(piece, plen) AS (VALUES $values),
-         occ AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS cnt FROM
-           (SELECT source, unnest(string_split(text, ' ')) AS tok
-            FROM documents) tt GROUP BY 1, 2),
-         tk AS (SELECT DISTINCT tok FROM occ),
-         pos AS (SELECT tok, CAST(g AS BIGINT) AS pos
-           FROM tk, unnest(range(1, len(tok) + 1)) AS p(g)),
-         st AS (SELECT pos.tok, pos.pos,
-             COALESCE(max(CASE WHEN substr(pos.tok, CAST(pos.pos AS INT),
-               v.plen) = v.piece THEN v.plen END), 1) AS steplen
-           FROM pos LEFT JOIN vocab v
-             ON substr(pos.tok, CAST(pos.pos AS INT), v.plen) = v.piece
-           GROUP BY 1, 2),
-         w AS (SELECT tok, CAST(1 AS BIGINT) AS pos,
-             CAST(0 AS BIGINT) AS pieces, CAST(0 AS BIGINT) AS multi
-           FROM tk
-           UNION ALL
-           SELECT w.tok, w.pos + st.steplen, w.pieces + 1,
-             w.multi + CASE WHEN st.steplen >= 2 THEN 1 ELSE 0 END
-           FROM w JOIN st ON st.tok = w.tok AND st.pos = w.pos),
-         fin AS (SELECT tok, pieces, multi FROM w
-           WHERE pos = len(tok) + 1)
-         SELECT source, CAST(sum(cnt) AS BIGINT) AS n_tokens,
-           CAST(sum(cnt * pieces) AS BIGINT) AS n_pieces,
-           CAST(sum(cnt * multi) AS BIGINT) AS n_multi,
-           CAST(1000 * sum(cnt * pieces) // sum(cnt) AS BIGINT) AS ppt_milli
-         FROM occ JOIN fin USING (tok) GROUP BY 1 ORDER BY source"""
-    },
     // same cell walk, 15-day bins, zero-filled MK pairs + class rules,
     "text_textrank" -> {
       val rounds = (1 to 3).map { r =>
@@ -1209,80 +716,5 @@ object QText {
          FROM r3 JOIN ids ON ids.id = r3.node
          ORDER BY pr DESC, tok LIMIT 10"""
     },
-    // 4-neighbour conduction terms, positive-only floors,
-    "text_stylo_delta" ->
-      """WITH toks AS (SELECT source,
-           unnest(string_split(text, ' ')) AS tok FROM documents),
-         top AS (SELECT tok FROM (SELECT tok, count(*) AS f FROM toks
-           GROUP BY 1 ORDER BY f DESC, tok LIMIT 20) t),
-         tot AS (SELECT source, CAST(count(*) AS BIGINT) AS n_tok
-           FROM toks GROUP BY 1),
-         cnt AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS c
-           FROM toks JOIN top USING (tok) GROUP BY 1, 2),
-         fpm AS (SELECT cnt.source, tok,
-             CAST(1000000 * c // n_tok AS BIGINT) AS fpm
-           FROM cnt JOIN tot USING (source)),
-         g0 AS (SELECT s.source, t.tok
-           FROM (SELECT source FROM tot) s, top t),
-         grid AS (SELECT g0.source, g0.tok,
-             COALESCE(f.fpm, CAST(0 AS BIGINT)) AS fpm
-           FROM g0 LEFT JOIN fpm f ON f.source = g0.source
-             AND f.tok = g0.tok)
-         SELECT a.source AS src_a, b.source AS src_b,
-           CAST(sum(abs(a.fpm - b.fpm)) AS BIGINT) AS l1_fpm
-         FROM grid a JOIN grid b ON b.tok = a.tok
-           AND a.source < b.source
-         GROUP BY 1, 2 ORDER BY src_a, src_b""",
-    // > ALL via NOT EXISTS over cross-multiplied exact cents,
-    "text_bpe_merge" ->
-      """WITH w AS (SELECT tok, CAST(count(*) AS BIGINT) AS wcnt FROM
-           (SELECT unnest(string_split(text, ' ')) AS tok FROM documents) t
-           GROUP BY 1),
-         s0 AS (SELECT tok, wcnt,
-             ' ' || trim(regexp_replace(tok, '(.)', '\1 ', 'g')) || ' ' AS seg
-           FROM w),
-         sp0 AS (SELECT tok, wcnt, string_split(trim(seg), ' ') AS ls FROM s0),
-         py0 AS (SELECT wcnt, list_extract(ls, CAST(g AS BIGINT)) AS a,
-             list_extract(ls, CAST(g AS BIGINT) + 1) AS b
-           FROM sp0, unnest(range(1, len(ls))) AS t(g)),
-         t1 AS (SELECT a, b, CAST(sum(wcnt) AS BIGINT) AS cnt FROM py0
-           GROUP BY 1, 2 ORDER BY cnt DESC, a, b LIMIT 1),
-         s1 AS (SELECT tok, wcnt, replace(seg,
-             ' ' || (SELECT a FROM t1) || ' ' || (SELECT b FROM t1) || ' ',
-             ' ' || (SELECT a FROM t1) || (SELECT b FROM t1) || ' ') AS seg
-           FROM s0),
-         n1 AS (SELECT CAST(sum(wcnt * len(string_split(trim(seg), ' ')))
-             AS BIGINT) AS ns FROM s1),
-         sp1 AS (SELECT tok, wcnt, string_split(trim(seg), ' ') AS ls FROM s1),
-         py1 AS (SELECT wcnt, list_extract(ls, CAST(g AS BIGINT)) AS a,
-             list_extract(ls, CAST(g AS BIGINT) + 1) AS b
-           FROM sp1, unnest(range(1, len(ls))) AS t(g)),
-         t2 AS (SELECT a, b, CAST(sum(wcnt) AS BIGINT) AS cnt FROM py1
-           GROUP BY 1, 2 ORDER BY cnt DESC, a, b LIMIT 1),
-         s2 AS (SELECT tok, wcnt, replace(seg,
-             ' ' || (SELECT a FROM t2) || ' ' || (SELECT b FROM t2) || ' ',
-             ' ' || (SELECT a FROM t2) || (SELECT b FROM t2) || ' ') AS seg
-           FROM s1),
-         n2 AS (SELECT CAST(sum(wcnt * len(string_split(trim(seg), ' ')))
-             AS BIGINT) AS ns FROM s2)
-         SELECT CAST(1 AS BIGINT) AS round, a AS sym_a, b AS sym_b,
-           cnt AS pair_cnt, (SELECT ns FROM n1) AS n_symbols_after FROM t1
-         UNION ALL
-         SELECT CAST(2 AS BIGINT), a, b, cnt, (SELECT ns FROM n2) FROM t2
-         ORDER BY round""",
-    // base-4 carry closed form, windowed cumulative writes,
-    "text_char_class_profile" ->
-      """WITH d AS (SELECT source, CAST(length(text) AS BIGINT) AS n_chars,
-           CAST(length(text) - length(regexp_replace(text, '[a-z]', '', 'g'))
-             AS BIGINT) AS n_alpha,
-           CAST(length(text) - length(regexp_replace(text, ' ', '', 'g'))
-             AS BIGINT) AS n_space
-           FROM documents)
-         SELECT source, CAST(sum(n_chars) AS BIGINT) AS n_chars,
-           CAST(sum(n_alpha) AS BIGINT) AS n_alpha,
-           CAST(sum(n_space) AS BIGINT) AS n_space,
-           CAST(1000000 * sum(n_alpha) // sum(n_chars) AS BIGINT) AS alpha_ppm
-         FROM d GROUP BY 1 ORDER BY source""",
-    // exact trailing-28-day distinct via day x active-day range join
   )
 }

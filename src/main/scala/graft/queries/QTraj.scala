@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Trajectory gates: distances, map-matching, mobility measures
-  * (36 entries) with the DuckDB oracle SQL beside each query.
+  * (24 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QTraj {
@@ -266,96 +266,6 @@ object QTraj {
         .join(trajs.select(col("traj_id").as("t2")), col("t1") < col("t2"))
       ops.Trajectory.dtw(pts, pairs).orderBy("t1", "t2")
     }),
-    // Zipf head products: top-50 corpus words with rank·frequency — the
-    // log-free Zipf-law read (a ~constant product column is the law).,
-    "traj_straightness" -> ((s, dir) => {
-      val trajs = t(s, dir, "supplier")
-        .selectExpr("s_suppkey % 20 AS traj_id").distinct()
-      val pts = trajs
-        .select(col("traj_id"), explode(expr("sequence(0, 5)")).as("seq"))
-        .selectExpr("traj_id", "seq",
-          "(traj_id * 7 + seq * (traj_id % 5 + 1) * 3) % 40 AS px",
-          "(traj_id * 11 + seq * (traj_id % 3 + 2) * 2) % 40 AS py")
-      val w = Window.partitionBy("traj_id").orderBy("seq")
-      val steps = pts
-        .withColumn("dx", lead("px", 1).over(w) - col("px"))
-        .withColumn("dy", lead("py", 1).over(w) - col("py"))
-      steps.groupBy("traj_id")
-        .agg(count(col("dx")).as("n_steps"),
-          sum(col("dx") * col("dx") + col("dy") * col("dy")).as("path_d2"),
-          (sum(col("dx")) * sum(col("dx")) +
-            sum(col("dy")) * sum(col("dy"))).as("net_d2"))
-        .withColumn("si_ppm", expr("(net_d2 * 1000000) div path_d2"))
-        .orderBy("traj_id")
-    }),
-    // Direction ROSE: the octant census of trajectory step vectors (the
-    // wind-rose of movement analytics) over the 20 closed-form walks —
-    // same trig-free sign ladder as the gradient censuses, applied to
-    // consecutive-vertex deltas; zero steps get the flat bin 8.,
-    "traj_rose" -> ((s, dir) => {
-      val trajs = t(s, dir, "supplier")
-        .selectExpr("s_suppkey % 20 AS traj_id").distinct()
-      val pts = trajs
-        .select(col("traj_id"), explode(expr("sequence(0, 5)")).as("seq"))
-        .selectExpr("traj_id", "seq",
-          "(traj_id * 7 + seq * (traj_id % 5 + 1) * 3) % 40 AS px",
-          "(traj_id * 11 + seq * (traj_id % 3 + 2) * 2) % 40 AS py")
-      val w = Window.partitionBy("traj_id").orderBy("seq")
-      pts.withColumn("dx", (lead("px", 1).over(w) - col("px")))
-        .withColumn("dy", (lead("py", 1).over(w) - col("py")))
-        .filter(col("dx").isNotNull)
-        .selectExpr(
-          """CASE WHEN dx = 0 AND dy = 0 THEN 8
-                  WHEN dx > 0 AND dy >= 0 THEN (CASE WHEN dy < dx THEN 0 ELSE 1 END)
-                  WHEN dx <= 0 AND dy > 0 THEN (CASE WHEN -dx < dy THEN 2 ELSE 3 END)
-                  WHEN dx < 0 AND dy <= 0 THEN (CASE WHEN -dy < -dx THEN 4 ELSE 5 END)
-                  ELSE (CASE WHEN dx < -dy THEN 6 ELSE 7 END) END AS sector""",
-          "dx * dx + dy * dy AS len2")
-        .groupBy("sector")
-        .agg(count(lit(1)).as("n"), sum("len2").as("len2_sum"))
-        .orderBy("sector")
-    }),
-    // Turn-based segmentation: steps of a curvier 12-point walk classified
-    // by the trig-free octant ladder; a TURN is a circular sector jump ≥ 2
-    // between consecutive moving steps (zero-steps never turn), runs of
-    // straight travel are delimited by the turns — n_turns + longest
-    // straight run per trajectory, the stop-and-turn structure extractor
-    // under traj_mapmatch and traj_simplify. Two windows, pure integers.,
-    "traj_turns" -> ((s, dir) => {
-      val trajs = t(s, dir, "supplier")
-        .selectExpr("s_suppkey % 20 AS traj_id").distinct()
-      val pts = trajs
-        .select(col("traj_id"), explode(expr("sequence(0, 11)")).as("seq"))
-        .selectExpr("traj_id", "seq",
-          "(traj_id * 7 + seq * seq * 3 + seq * (traj_id % 5 + 1)) % 40 AS px",
-          "(traj_id * 11 + seq * (traj_id % 3 + 1) * 2 + (seq * seq * 7) % 13) % 40 AS py")
-      val w = Window.partitionBy("traj_id").orderBy("seq")
-      val steps = pts
-        .withColumn("dx", lead("px", 1).over(w) - col("px"))
-        .withColumn("dy", lead("py", 1).over(w) - col("py"))
-        .filter(col("dx").isNotNull)
-        .selectExpr("traj_id", "seq",
-          """CASE WHEN dx = 0 AND dy = 0 THEN 8
-                  WHEN dx > 0 AND dy >= 0 THEN (CASE WHEN dy < dx THEN 0 ELSE 1 END)
-                  WHEN dx <= 0 AND dy > 0 THEN (CASE WHEN -dx < dy THEN 2 ELSE 3 END)
-                  WHEN dx < 0 AND dy <= 0 THEN (CASE WHEN -dy < -dx THEN 4 ELSE 5 END)
-                  ELSE (CASE WHEN dx < -dy THEN 6 ELSE 7 END) END AS sector""")
-      val flagged = steps
-        .withColumn("prev", lag("sector", 1).over(w))
-        .withColumn("turn", when(col("prev").isNull || col("prev") === 8 ||
-            col("sector") === 8, 0L)
-          .otherwise(when(least(abs(col("sector") - col("prev")),
-            lit(8) - abs(col("sector") - col("prev"))) >= 2, 1L).otherwise(0L)))
-        .withColumn("run_id", sum("turn").over(
-          w.rowsBetween(Window.unboundedPreceding, 0)))
-      val runs = flagged.groupBy("traj_id", "run_id")
-        .agg(count(lit(1)).as("run_len"))
-      flagged.groupBy("traj_id")
-        .agg(count(lit(1)).as("n_steps"), sum("turn").as("n_turns"))
-        .join(runs.groupBy("traj_id").agg(max("run_len").as("longest_run")),
-          Seq("traj_id"))
-        .orderBy("traj_id")
-    }),
     // Viterbi map-matching (ops.Trajectory.mapMatch): the first 6 fixes of
     // each of 12 event-derived walks snapped to a 5×5 road-node grid under
     // emission d² + transition 3·manhattan — the HMM decoder that keeps a
@@ -416,23 +326,6 @@ object QTraj {
         .selectExpr("user_id AS traj_id", "ts", "event_id AS tie",
           "(px DIV 6) * 1000000 + (py DIV 4) AS cell")
       ops.Trajectory.odMatrix(pts).orderBy("o_cell", "d_cell")
-    }),
-    // Anti-join: customers with no 1997+ order (churn report), per segment.,
-    "traj_gyration" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          (col("event_id") % 7).as("dx"), ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n"), sum("px").as("sx"), sum("py").as("sy"),
-          sum(col("px") * col("px")).as("sxx"),
-          sum(col("py") * col("py")).as("syy"))
-        .selectExpr("user_id", "n", "sx", "sy",
-          "n*n*(sxx+syy) - n*(sx*sx + sy*sy) AS gyr_num")
-        .orderBy("user_id")
     }),
     // RFM quintile scoring: recency (days since last event vs the corpus
     // max), frequency, monetary (exact cents) per user, each cut into
@@ -512,7 +405,7 @@ object QTraj {
     }),
     // Daily-count anomalies by median/MAD: per type the nearest-rank
     // median daily count, the MAD, and days beyond median ± 3·MAD — the
-    // robust daily-volume alarm over events_spc's mean-based rules.,
+    // robust daily-volume alarm.,
     "traj_bbox_iou" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val bb = t(s, dir, "events").filter(col("user_id") < 50)
@@ -546,197 +439,6 @@ object QTraj {
           .partitionBy(ops.GlobalRank.boundedPartitionKey(col("iou_ppm")))
           .orderBy(col("iou_ppm").desc, col("traj_a"), col("traj_b"))).cast("int"))
         .orderBy("rk")
-    }),
-    // Edge betweenness (ops.Graph.edgeBetweennessSampled): the Brandes
-    // dependency terms summed per canonical edge — which single links
-    // carry the shortest-path mass; top bridges ranked deterministically.,
-    "traj_heading_persistence" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val seg = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-        .withColumn("sdx", col("px") - lag("px", 1).over(w))
-        .withColumn("sdy", col("py") - lag("py", 1).over(w))
-        .filter(col("sdx").isNotNull &&
-          (col("sdx") =!= 0 || col("sdy") =!= 0))
-        .withColumn("octant", expr(
-          "CASE WHEN sdx > 0 AND sdy >= 0 AND sdx > sdy THEN 0 " +
-            "WHEN sdx > 0 AND sdy > 0 THEN 1 " +
-            "WHEN sdx <= 0 AND sdy > 0 AND -sdx < sdy THEN 2 " +
-            "WHEN sdy > 0 THEN 3 " +
-            "WHEN sdx < 0 AND sdy <= 0 AND -sdx > -sdy THEN 4 " +
-            "WHEN sdx < 0 THEN 5 " +
-            "WHEN sdy < 0 AND sdx < -sdy THEN 6 ELSE 7 END"))
-        .withColumn("poct", lag("octant", 1).over(w))
-        .filter(col("poct").isNotNull)
-      seg.groupBy(col("user_id").as("traj_id"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum(when(col("octant") === col("poct"), 1L).otherwise(0L))
-            .as("n_same"))
-        .withColumn("persistence_ppm",
-          expr("n_same * 1000000 DIV n_pairs"))
-        .orderBy("traj_id")
-    }),
-    // Day-over-day occupied-cell turnover: consecutive days' cell-set
-    // Jaccard — the footprint-churn read over geo_centroid_drift's
-    // center-of-mass view.,
-    "traj_revisit_gaps" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-      val visits = pts.select(col("user_id"),
-          expr("px DIV 200").as("cell_x"), expr("py DIV 50").as("cell_y"),
-          expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000")
-            .as("eday"))
-        .distinct()
-      val wg = Window.partitionBy("user_id", "cell_x", "cell_y")
-        .orderBy("eday")
-      visits.withColumn("prev", lag("eday", 1).over(wg))
-        .filter(col("prev").isNotNull)
-        .withColumn("gap", col("eday") - col("prev"))
-        .groupBy(col("user_id").as("traj_id"))
-        .agg(count(lit(1)).as("n_revisits"), sum("gap").as("sum_gap_days"),
-          max("gap").as("max_gap_days"),
-          sum(when(col("gap") === 7, 1L).otherwise(0L)).as("n_weekly"))
-        .orderBy("traj_id")
-    }),
-    // Hubness: how often each vector appears in OTHERS' exact 5-NN lists
-    // — the high-dimensional pathology (a few hubs dominating neighbour
-    // lists degrades every ANN downstream); in-degree histogram.,
-    "traj_speed_quantiles" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val seg = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-        .withColumn("tus", expr("unix_micros(CAST(ts AS TIMESTAMP))"))
-        .withColumn("ppx", lag("px", 1).over(w))
-        .withColumn("ppy", lag("py", 1).over(w))
-        .withColumn("ptus", lag("tus", 1).over(w))
-        .filter(col("ppx").isNotNull && col("tus") > col("ptus"))
-        .selectExpr("user_id AS traj_id", "event_id",
-          "(abs(px - ppx) + abs(py - ppy)) * 1000000 DIV (tus - ptus) AS speed_q")
-      val wv = Window.partitionBy("traj_id").orderBy("speed_q", "event_id")
-      val wp = Window.partitionBy("traj_id")
-      seg.withColumn("rn", row_number().over(wv).cast("long"))
-        .withColumn("n", count(lit(1)).over(wp))
-        .groupBy("traj_id")
-        .agg(max("n").as("n_seg"),
-          max(when(col("rn") === expr("(n - 1) * 50 DIV 100 + 1"),
-            col("speed_q"))).as("p50_speed_q"),
-          max(when(col("rn") === expr("(n - 1) * 95 DIV 100 + 1"),
-            col("speed_q"))).as("p95_speed_q"),
-          max("speed_q").as("max_speed_q"))
-        .orderBy("traj_id")
-    }),
-    // Theil–Sen robust trend slope per event_type: median over ALL pair
-    // slopes of the hourly-count series, quantized to exact ppm by
-    // positive-offset floor division (slopes can be negative; Spark DIV
-    // truncates where DuckDB // floors, so +K·Δi shifts every numerator
-    // positive — where the two agree — and K·10⁶ subtracts back exactly).
-    // The n² pair join is key-bounded per type (series length, not event
-    // count); median by nearest-rank lower over one value-ordered window.,
-    "traj_self_cross" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val seg = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-        .withColumn("seq", row_number().over(w).cast("long"))
-        .withColumn("ppx", lag("px", 1).over(w))
-        .withColumn("ppy", lag("py", 1).over(w))
-        .filter(col("ppx").isNotNull)
-        .selectExpr("user_id AS traj_id", "seq", "ppx AS x1", "ppy AS y1",
-          "px AS x2", "py AS y2")
-      val j = seg.as("a").join(seg.as("b"),
-          col("a.traj_id") === col("b.traj_id") &&
-            col("b.seq") > col("a.seq") + 1)
-        .withColumn("d1", expr(
-          "(a.x2 - a.x1) * (b.y1 - a.y1) - (a.y2 - a.y1) * (b.x1 - a.x1)"))
-        .withColumn("d2", expr(
-          "(a.x2 - a.x1) * (b.y2 - a.y1) - (a.y2 - a.y1) * (b.x2 - a.x1)"))
-        .withColumn("d3", expr(
-          "(b.x2 - b.x1) * (a.y1 - b.y1) - (b.y2 - b.y1) * (a.x1 - b.x1)"))
-        .withColumn("d4", expr(
-          "(b.x2 - b.x1) * (a.y2 - b.y1) - (b.y2 - b.y1) * (a.x2 - b.x1)"))
-        .withColumn("crossing",
-          expr("CASE WHEN d1 * d2 < 0 AND d3 * d4 < 0 THEN 1 ELSE 0 END"))
-      val ns = seg.groupBy(col("traj_id")).agg(count(lit(1)).as("n_seg"))
-      j.groupBy(col("a.traj_id").as("traj_id"))
-        .agg(count(lit(1)).as("n_pairs"),
-          sum("crossing").as("n_crossings"))
-        .join(ns, Seq("traj_id"))
-        .select("traj_id", "n_seg", "n_pairs", "n_crossings")
-        .orderBy("traj_id")
-    }),
-    // Recency-decayed user score with INTEGER half-life: spend shifted
-    // right one bit per week of age relative to the corpus high-water day
-    // — exact bitwise exponential decay, no floats; the CRM scoring read
-    // next to events_rfm.,
-    "traj_regularity" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events").filter(col("user_id") < 50)
-        .select(col("user_id"), col("ts"), col("event_id"),
-          ((col("event_id") % 7) +
-            when(col("event_id") % 101 === 0, 5000L).otherwise(0L)).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-      val visits = pts.select(col("user_id"),
-          expr("px DIV 200").as("cell_x"), expr("py DIV 50").as("cell_y"),
-          date_trunc("day", col("ts")).as("day"))
-        .distinct()
-      val perCell = visits.groupBy("user_id", "cell_x", "cell_y")
-        .agg(count(lit(1)).as("n_days"))
-      perCell.groupBy(col("user_id").as("traj_id"))
-        .agg(count(lit(1)).as("n_cells"),
-          sum(when(col("n_days") >= 5, 1L).otherwise(0L))
-            .as("n_regular"),
-          max("n_days").as("max_cell_days"))
-        .withColumn("regularity_ppm",
-          expr("n_regular * 1000000 DIV n_cells"))
-        .orderBy("traj_id")
-    }),
-    // Codec-mix rollup off the so-far-unused codec column: assets, bytes,
-    // duration and the fps spread per codec.,
-    "traj_crosstrack" -> ((s, dir) => {
-      val trajs = t(s, dir, "supplier")
-        .selectExpr("s_suppkey % 20 AS traj_id").distinct()
-      val pts = trajs
-        .select(col("traj_id"), explode(expr("sequence(0, 5)")).as("seq"))
-        .selectExpr("traj_id", "seq",
-          "(traj_id * 7 + seq * (traj_id % 5 + 1) * 3) % 40 AS px",
-          "(traj_id * 11 + seq * (traj_id % 3 + 2) * 2) % 40 AS py")
-      val se = pts.filter(col("seq") === 0)
-        .selectExpr("traj_id", "px AS sx", "py AS sy")
-        .join(pts.filter(col("seq") === 5)
-          .selectExpr("traj_id", "px AS ex", "py AS ey"), Seq("traj_id"))
-      pts.join(se, Seq("traj_id"))
-        .withColumn("cr",
-          expr("(ex - sx) * (py - sy) - (ey - sy) * (px - sx)"))
-        .withColumn("c2", expr("cr * cr"))
-        .withColumn("rn", row_number().over(Window.partitionBy("traj_id")
-          .orderBy(col("c2").desc, col("seq"))))
-        .filter(col("rn") === 1)
-        .selectExpr("traj_id", "CAST(6 AS BIGINT) AS n_pts",
-          "(ex - sx) * (ex - sx) + (ey - sy) * (ey - sy) AS len2",
-          "c2 AS max_cross2", "seq AS at_seq")
-        .orderBy("traj_id")
     }),
     // Leave-one-out IDW cross-validation: each station predicted from its
     // radius neighbors with integer-quantized inverse-square weights
@@ -786,38 +488,6 @@ object QTraj {
         .groupBy("lbl").agg(count(lit(1)).as("n_cells"))
         .orderBy("lbl")
     }),
-    // Diagonal Radon profiles (ops.ImageOps.diagProjections): 45/135°
-    // line-sum extrema + second moments per image.,
-    "traj_alpha_beta_track" -> ((s, dir) => {
-      import s.implicits._
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          (col("event_id") % 7).as("dx"))
-        .withColumn("z", sum("dx").over(w))
-        .withColumn("idx", row_number().over(
-          Window.partitionBy("user_id").orderBy("ts", "event_id")).cast("long"))
-        .select(col("user_id"), col("idx"), col("z").cast("long"))
-        .as[(Long, Long, Long)]
-        .groupByKey(_._1)
-        .flatMapGroups { (uid, it) =>
-          val rows = it.toArray.sortBy(_._2)
-          var p = 0L; var v = 0L; var sumAbsR = 0L; var first = true
-          rows.foreach { case (_, _, z) =>
-            if (first) { p = z; v = 0L; first = false }
-            else {
-              val pred = p + v
-              val r = z - pred
-              sumAbsR += math.abs(r)
-              p = pred + r / 4L
-              v = v + r / 8L
-            }
-          }
-          Iterator.single((uid, rows.length.toLong, p, v, sumAbsR))
-        }
-        .toDF("user_id", "n_steps", "final_p", "final_v", "sum_abs_resid")
-        .orderBy("user_id")
-    }),
     // Peaks-over-threshold excess pieces: nearest-rank p90 daily
     // threshold per type, exceedance count and excess moments — the
     // method-of-moments inputs of a GPD tail fit, exact.,
@@ -845,36 +515,6 @@ object QTraj {
           .orderBy(col("n_follow").desc, col("a").asc, col("b").asc)))
         .select("rk", "a", "b", "n_follow")
         .orderBy("rk")
-    }),
-    // Phonetic blocking + edit-distance verify: distinct first words
-    // bucketed by Soundex, within-bucket pairs screened at Levenshtein
-    // <= 2 — the classic fuzzy-name dedup join (blocking keeps it off
-    // all-pairs; both engines' levenshtein is unit-cost edit distance).,
-    "traj_home_work" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val pts = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          (col("event_id") % 7).as("dx"),
-          ((col("event_id") * 3) % 5).as("dy"))
-        .withColumn("px", sum("dx").over(w))
-        .withColumn("py", sum("dy").over(w))
-        .selectExpr("user_id", "CAST(hour(ts) AS INT) AS h",
-          "(px DIV 6) * 1000000 + (py DIV 4) AS cell")
-      def modal(lo: Int, hi: Int, name: String, cname: String) = {
-        val f = pts.filter(col("h") >= lo && col("h") <= hi)
-          .groupBy("user_id", "cell").agg(count(lit(1)).as("c"))
-        f.withColumn("rn", row_number().over(Window.partitionBy("user_id")
-            .orderBy(col("c").desc, col("cell").asc)))
-          .filter(col("rn") === 1)
-          .select(col("user_id"), col("cell").as(cname), col("c").as(name))
-      }
-      modal(0, 6, "n_night", "home_cell")
-        .join(modal(9, 17, "n_day", "work_cell"), Seq("user_id"))
-        .withColumn("same_anchor",
-          when(col("home_cell") === col("work_cell"), 1).otherwise(0))
-        .select("user_id", "home_cell", "n_night", "work_cell", "n_day",
-          "same_anchor")
-        .orderBy("user_id")
     }),
     // Correlated-subquery surface: orders beating their own customer's
     // average, exact cents cross-multiplied (no float average formed).,
@@ -1230,82 +870,6 @@ object QTraj {
          FROM ca10 JOIN sz ON sz.t1 = ca10.t1 AND sz.t2 = ca10.t2
          ORDER BY ca10.t1, ca10.t2"""
     },
-    // global word frequencies, rank window, head products,
-    "traj_straightness" ->
-      """WITH trajs AS (SELECT DISTINCT s_suppkey % 20 AS traj_id FROM supplier),
-         v AS (SELECT traj_id, CAST(g AS BIGINT) AS seq,
-             (traj_id * 7 + g * (traj_id % 5 + 1) * 3) % 40 AS px,
-             (traj_id * 11 + g * (traj_id % 3 + 2) * 2) % 40 AS py
-           FROM trajs, unnest(range(0, 6)) AS t(g)),
-         s AS (SELECT traj_id,
-             lead(px) OVER w - px AS dx, lead(py) OVER w - py AS dy
-           FROM v WINDOW w AS (PARTITION BY traj_id ORDER BY seq)),
-         a AS (SELECT traj_id, CAST(count(dx) AS BIGINT) AS n_steps,
-             CAST(sum(dx*dx + dy*dy) AS BIGINT) AS path_d2,
-             CAST(sum(dx)*sum(dx) + sum(dy)*sum(dy) AS BIGINT) AS net_d2
-           FROM s GROUP BY 1)
-         SELECT traj_id, n_steps, path_d2, net_d2,
-           (net_d2 * 1000000) // path_d2 AS si_ppm
-         FROM a ORDER BY traj_id""",
-    // octant census of consecutive-vertex deltas over the 20 walks,
-    "traj_rose" ->
-      """WITH trajs AS (SELECT DISTINCT s_suppkey % 20 AS traj_id FROM supplier),
-         v AS (SELECT traj_id, CAST(g AS BIGINT) AS seq,
-             (traj_id * 7 + g * (traj_id % 5 + 1) * 3) % 40 AS px,
-             (traj_id * 11 + g * (traj_id % 3 + 2) * 2) % 40 AS py
-           FROM trajs, unnest(range(0, 6)) AS t(g)),
-         s AS (SELECT traj_id,
-             lead(px) OVER w - px AS dx, lead(py) OVER w - py AS dy
-           FROM v WINDOW w AS (PARTITION BY traj_id ORDER BY seq)),
-         sec AS (SELECT CASE WHEN dx = 0 AND dy = 0 THEN 8
-               WHEN dx > 0 AND dy >= 0 THEN (CASE WHEN dy < dx THEN 0 ELSE 1 END)
-               WHEN dx <= 0 AND dy > 0 THEN (CASE WHEN -dx < dy THEN 2 ELSE 3 END)
-               WHEN dx < 0 AND dy <= 0 THEN (CASE WHEN -dy < -dx THEN 4 ELSE 5 END)
-               ELSE (CASE WHEN dx < -dy THEN 6 ELSE 7 END) END AS sector,
-             dx*dx + dy*dy AS len2
-           FROM s WHERE dx IS NOT NULL)
-         SELECT CAST(sector AS INT) AS sector, CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(len2) AS BIGINT) AS len2_sum
-         FROM sec GROUP BY 1 ORDER BY sector""",
-    // octant ladder + circular sector-jump >= 2 turn flags + run lengths,
-    "traj_turns" ->
-      """WITH trajs AS (SELECT DISTINCT s_suppkey % 20 AS traj_id FROM supplier),
-         v AS (SELECT traj_id, CAST(g AS BIGINT) AS seq,
-             (traj_id * 7 + g * g * 3 + g * (traj_id % 5 + 1)) % 40 AS px,
-             (traj_id * 11 + g * (traj_id % 3 + 1) * 2 + (g * g * 7) % 13) % 40 AS py
-           FROM trajs, unnest(range(0, 12)) AS t(g)),
-         s AS (SELECT traj_id, seq,
-             lead(px) OVER w - px AS dx, lead(py) OVER w - py AS dy
-           FROM v WINDOW w AS (PARTITION BY traj_id ORDER BY seq)),
-         sec AS (SELECT traj_id, seq,
-             CASE WHEN dx = 0 AND dy = 0 THEN 8
-               WHEN dx > 0 AND dy >= 0 THEN (CASE WHEN dy < dx THEN 0 ELSE 1 END)
-               WHEN dx <= 0 AND dy > 0 THEN (CASE WHEN -dx < dy THEN 2 ELSE 3 END)
-               WHEN dx < 0 AND dy <= 0 THEN (CASE WHEN -dy < -dx THEN 4 ELSE 5 END)
-               ELSE (CASE WHEN dx < -dy THEN 6 ELSE 7 END) END AS sector
-           FROM s WHERE dx IS NOT NULL),
-         f AS (SELECT traj_id, seq, sector,
-             lag(sector) OVER w AS prev
-           FROM sec WINDOW w AS (PARTITION BY traj_id ORDER BY seq)),
-         t2 AS (SELECT traj_id, seq,
-             CASE WHEN prev IS NULL OR prev = 8 OR sector = 8 THEN 0
-                  WHEN least(abs(sector - prev), 8 - abs(sector - prev)) >= 2 THEN 1
-                  ELSE 0 END AS turn
-           FROM f),
-         r AS (SELECT traj_id, seq, turn,
-             sum(turn) OVER (PARTITION BY traj_id ORDER BY seq
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS run_id
-           FROM t2),
-         runs AS (SELECT traj_id, run_id, count(*) AS run_len
-           FROM r GROUP BY 1, 2),
-         agg AS (SELECT traj_id, CAST(count(*) AS BIGINT) AS n_steps,
-             CAST(sum(turn) AS BIGINT) AS n_turns
-           FROM r GROUP BY 1),
-         lr AS (SELECT traj_id, CAST(max(run_len) AS BIGINT) AS longest_run
-           FROM runs GROUP BY 1)
-         SELECT a.traj_id, a.n_steps, a.n_turns, lr.longest_run
-         FROM agg a JOIN lr ON a.traj_id = lr.traj_id
-         ORDER BY a.traj_id""",
     // Kitagawa decomposition: ppm weights × floor-cent rates; effects are
     // integer products (no negative division anywhere),
     "traj_mapmatch" -> mapMatchOracleSql,
@@ -1346,21 +910,6 @@ object QTraj {
            JOIN (SELECT user_id, cell FROM f WHERE rd = 1) d USING (user_id))
          SELECT o_cell, d_cell, CAST(count(*) AS BIGINT) AS n_traj
          FROM od GROUP BY 1, 2 ORDER BY 1, 2""",
-    "traj_gyration" ->
-      """WITH w AS (SELECT user_id, ts, event_id,
-           sum(event_id % 7) OVER pw AS px,
-           sum((event_id * 3) % 5) OVER pw AS py
-           FROM events
-           WINDOW pw AS (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         a AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(px) AS BIGINT) AS sx, CAST(sum(py) AS BIGINT) AS sy,
-             CAST(sum(px*px) AS BIGINT) AS sxx,
-             CAST(sum(py*py) AS BIGINT) AS syy
-           FROM w GROUP BY 1)
-         SELECT user_id, n, sx, sy,
-           CAST(n*n*(sxx+syy) - n*(sx*sx + sy*sy) AS BIGINT) AS gyr_num
-         FROM a ORDER BY user_id""",
     // user-level aggregates once, then deterministic NTILE(5) cuts,
     "traj_corridor" -> {
       s"""WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
@@ -1487,167 +1036,6 @@ object QTraj {
              traj_a, traj_b) AS INT) AS rk FROM r)
          SELECT traj_a, traj_b, inter, uni, iou_ppm, rk
          FROM s WHERE rk <= 20 ORDER BY rk""",
-    // the Brandes phases with per-edge term capture, canonical edge sums,
-    // top 20,
-    "traj_heading_persistence" ->
-      """WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c0 AS (SELECT user_id, ts_us, event_id,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         c1 AS (SELECT user_id, ts_us, event_id,
-           px - lag(px) OVER w AS sdx, py - lag(py) OVER w AS sdy
-           FROM c0 WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         c2 AS (SELECT user_id, ts_us, event_id,
-           CASE WHEN sdx > 0 AND sdy >= 0 AND sdx > sdy THEN 0
-                WHEN sdx > 0 AND sdy > 0 THEN 1
-                WHEN sdx <= 0 AND sdy > 0 AND -sdx < sdy THEN 2
-                WHEN sdy > 0 THEN 3
-                WHEN sdx < 0 AND sdy <= 0 AND -sdx > -sdy THEN 4
-                WHEN sdx < 0 THEN 5
-                WHEN sdy < 0 AND sdx < -sdy THEN 6 ELSE 7 END AS octant
-           FROM c1 WHERE sdx IS NOT NULL AND (sdx <> 0 OR sdy <> 0)),
-         c3 AS (SELECT user_id, octant,
-           lag(octant) OVER (PARTITION BY user_id
-             ORDER BY ts_us, event_id) AS poct
-           FROM c2)
-         SELECT user_id AS traj_id, CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(sum(CASE WHEN octant = poct THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_same,
-           CAST(sum(CASE WHEN octant = poct THEN 1 ELSE 0 END) AS BIGINT)
-             * 1000000 // CAST(count(*) AS BIGINT) AS persistence_ppm
-         FROM c3 WHERE poct IS NOT NULL GROUP BY 1 ORDER BY traj_id""",
-    // distinct day cells, consecutive-day set Jaccard,
-    "traj_revisit_gaps" ->
-      """WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-           epoch_us(ts) // 86400000000 AS eday,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c AS (SELECT user_id, eday,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         vis AS (SELECT DISTINCT user_id, px // 200 AS cell_x,
-             py // 50 AS cell_y, eday FROM c),
-         g AS (SELECT user_id, eday - lag(eday) OVER (
-             PARTITION BY user_id, cell_x, cell_y ORDER BY eday) AS gap
-           FROM vis)
-         SELECT user_id AS traj_id, CAST(count(*) AS BIGINT) AS n_revisits,
-           CAST(sum(gap) AS BIGINT) AS sum_gap_days,
-           CAST(max(gap) AS BIGINT) AS max_gap_days,
-           CAST(sum(CASE WHEN gap = 7 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_weekly
-         FROM g WHERE gap IS NOT NULL GROUP BY 1 ORDER BY traj_id""",
-    // exact 5-NN lists, in-degree histogram with zero-degree rows kept,
-    "traj_speed_quantiles" ->
-      """WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS tus,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c0 AS (SELECT user_id, event_id, tus,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-         c AS (SELECT user_id, event_id, tus, px, py,
-           lag(px) OVER w AS ppx, lag(py) OVER w AS ppy,
-           lag(tus) OVER w AS ptus
-           FROM c0 WINDOW w AS (PARTITION BY user_id ORDER BY tus, event_id)),
-         s AS (SELECT user_id AS traj_id, event_id,
-             (abs(px - ppx) + abs(py - ppy)) * 1000000 // (tus - ptus)
-               AS speed_q
-           FROM c WHERE ppx IS NOT NULL AND tus > ptus),
-         r AS (SELECT traj_id, speed_q,
-             CAST(row_number() OVER (PARTITION BY traj_id
-               ORDER BY speed_q, event_id) AS BIGINT) AS rn,
-             CAST(count(*) OVER (PARTITION BY traj_id) AS BIGINT) AS n
-           FROM s)
-         SELECT traj_id, max(n) AS n_seg,
-           max(CASE WHEN rn = (n - 1) * 50 // 100 + 1 THEN speed_q END)
-             AS p50_speed_q,
-           max(CASE WHEN rn = (n - 1) * 95 // 100 + 1 THEN speed_q END)
-             AS p95_speed_q,
-           CAST(max(speed_q) AS BIGINT) AS max_speed_q
-         FROM r GROUP BY 1 ORDER BY traj_id""",
-    // all pair slopes of the hourly series, positive-offset floor-division
-    // ppm quantization (+10⁵·Δi then −10¹¹), nearest-rank-lower median,
-    "traj_self_cross" ->
-      """WITH b AS (SELECT user_id, event_id, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c0 AS (SELECT user_id, ts_us, event_id,
-           CAST(row_number() OVER w AS BIGINT) AS seq,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         c AS (SELECT user_id, seq, px, py,
-           lag(px) OVER w AS ppx, lag(py) OVER w AS ppy
-           FROM c0 WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         s AS (SELECT user_id AS traj_id, seq, ppx AS x1, ppy AS y1,
-             px AS x2, py AS y2 FROM c WHERE ppx IS NOT NULL),
-         j AS (SELECT a.traj_id,
-             CASE WHEN ((a.x2 - a.x1) * (b.y1 - a.y1) - (a.y2 - a.y1) * (b.x1 - a.x1))
-                  * ((a.x2 - a.x1) * (b.y2 - a.y1) - (a.y2 - a.y1) * (b.x2 - a.x1)) < 0
-               AND ((b.x2 - b.x1) * (a.y1 - b.y1) - (b.y2 - b.y1) * (a.x1 - b.x1))
-                  * ((b.x2 - b.x1) * (a.y2 - b.y1) - (b.y2 - b.y1) * (a.x2 - b.x1)) < 0
-               THEN 1 ELSE 0 END AS crossing
-           FROM s a JOIN s b ON b.traj_id = a.traj_id
-             AND b.seq > a.seq + 1),
-         ns AS (SELECT traj_id, CAST(count(*) AS BIGINT) AS n_seg
-           FROM s GROUP BY 1)
-         SELECT j.traj_id, ns.n_seg, CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(sum(crossing) AS BIGINT) AS n_crossings
-         FROM j JOIN ns ON ns.traj_id = j.traj_id
-         GROUP BY 1, 2 ORDER BY j.traj_id""",
-    // high-water anchor day, per-week right shift,
-    "traj_regularity" ->
-      """WITH b AS (SELECT user_id, event_id, ts, epoch_us(ts) AS ts_us,
-           event_id % 7 + CASE WHEN event_id % 101 = 0 THEN 5000 ELSE 0 END AS dx,
-           (event_id * 3) % 5 AS dy
-           FROM events WHERE user_id < 50),
-         c AS (SELECT user_id, ts,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts_us, event_id)),
-         vis AS (SELECT DISTINCT user_id, px // 200 AS cell_x,
-             py // 50 AS cell_y, date_trunc('day', ts) AS day FROM c),
-         pc AS (SELECT user_id, cell_x, cell_y,
-             CAST(count(*) AS BIGINT) AS n_days
-           FROM vis GROUP BY 1, 2, 3)
-         SELECT user_id AS traj_id, CAST(count(*) AS BIGINT) AS n_cells,
-           CAST(sum(CASE WHEN n_days >= 5 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_regular,
-           CAST(max(n_days) AS BIGINT) AS max_cell_days,
-           CAST(sum(CASE WHEN n_days >= 5 THEN 1 ELSE 0 END) AS BIGINT)
-             * 1000000 // CAST(count(*) AS BIGINT) AS regularity_ppm
-         FROM pc GROUP BY 1 ORDER BY traj_id""",
-    // the synth closed forms rolled up by codec,
-    "traj_crosstrack" ->
-      """WITH trajs AS (SELECT DISTINCT s_suppkey % 20 AS traj_id FROM supplier),
-         v AS (SELECT traj_id, CAST(g AS INT) AS seq,
-             (traj_id * 7 + g * (traj_id % 5 + 1) * 3) % 40 AS px,
-             (traj_id * 11 + g * (traj_id % 3 + 2) * 2) % 40 AS py
-           FROM trajs, unnest(range(0, 6)) AS t(g)),
-         se AS (SELECT s.traj_id, s.px AS sx, s.py AS sy, e.px AS ex,
-             e.py AS ey
-           FROM v s JOIN v e ON e.traj_id = s.traj_id
-           WHERE s.seq = 0 AND e.seq = 5),
-         c AS (SELECT v.traj_id, v.seq,
-             ((ex - sx) * (py - sy) - (ey - sy) * (px - sx))
-               * ((ex - sx) * (py - sy) - (ey - sy) * (px - sx)) AS c2,
-             (ex - sx) * (ex - sx) + (ey - sy) * (ey - sy) AS len2,
-             row_number() OVER (PARTITION BY v.traj_id ORDER BY
-               ((ex - sx) * (py - sy) - (ey - sy) * (px - sx))
-                 * ((ex - sx) * (py - sy) - (ey - sy) * (px - sx)) DESC,
-               v.seq) AS rn
-           FROM v JOIN se ON se.traj_id = v.traj_id)
-         SELECT traj_id, CAST(6 AS BIGINT) AS n_pts, len2,
-           c2 AS max_cross2, seq AS at_seq
-         FROM c WHERE rn = 1 ORDER BY traj_id""",
     // per-source token mass, integer weight split of the 200k budget,
     "traj_od_independence" ->
       """WITH pts AS (SELECT user_id, ts, event_id,
@@ -1716,34 +1104,6 @@ object QTraj {
          SELECT lbl, CAST(count(*) AS BIGINT) AS n_cells
          FROM l3 GROUP BY 1 ORDER BY lbl"""
     },
-    // line sums grouped by r+c and r-c, per-direction extrema/moments,
-    "traj_alpha_beta_track" ->
-      """WITH RECURSIVE pts AS (SELECT user_id, ts, event_id,
-           event_id % 7 AS dx FROM events),
-         zc AS (SELECT user_id, ts, event_id,
-             CAST(sum(dx) OVER w AS BIGINT) AS z
-           FROM pts WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         e AS MATERIALIZED (SELECT user_id, z,
-             CAST(row_number() OVER (PARTITION BY user_id
-               ORDER BY ts, event_id) AS BIGINT) AS idx
-           FROM zc),
-         nmax AS (SELECT user_id, max(idx) AS n FROM e GROUP BY 1),
-         tr AS (SELECT user_id, idx, z AS p, CAST(0 AS BIGINT) AS v,
-             CAST(0 AS BIGINT) AS sar FROM e WHERE idx = 1
-           UNION ALL
-           SELECT e.user_id, e.idx,
-             (tr.p + tr.v) + (e.z - (tr.p + tr.v)) // 4,
-             tr.v + (e.z - (tr.p + tr.v)) // 8,
-             tr.sar + abs(e.z - (tr.p + tr.v))
-           FROM tr JOIN e ON e.user_id = tr.user_id
-             AND e.idx = tr.idx + 1)
-         SELECT tr.user_id, CAST(n AS BIGINT) AS n_steps,
-           CAST(p AS BIGINT) AS final_p, CAST(v AS BIGINT) AS final_v,
-           CAST(sar AS BIGINT) AS sum_abs_resid
-         FROM tr JOIN nmax ON nmax.user_id = tr.user_id
-           AND tr.idx = nmax.n
-         ORDER BY tr.user_id""",
     // nearest-rank p90 threshold, exceedance moments,
     "traj_follow_detect" ->
       """WITH pts AS (SELECT user_id, ts, event_id,
@@ -1765,33 +1125,6 @@ object QTraj {
          SELECT CAST(row_number() OVER (ORDER BY n_follow DESC, a, b)
              AS INT) AS rk, a, b, n_follow
          FROM g QUALIFY rk <= 10 ORDER BY rk""",
-    // soundex blocking, within-bucket pairs, levenshtein screen,
-    "traj_home_work" ->
-      """WITH pts AS (SELECT user_id, ts, event_id,
-           event_id % 7 AS dx, (event_id * 3) % 5 AS dy FROM events),
-         cw AS (SELECT user_id, ts,
-             CAST(sum(dx) OVER w AS BIGINT) AS px,
-             CAST(sum(dy) OVER w AS BIGINT) AS py
-           FROM pts WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-         k AS (SELECT user_id, CAST(hour(ts) AS INT) AS h,
-             (px // 6) * 1000000 + (py // 4) AS cell FROM cw),
-         hm AS (SELECT user_id, cell AS home_cell, c AS n_night FROM (
-             SELECT user_id, cell, CAST(count(*) AS BIGINT) AS c,
-               row_number() OVER (PARTITION BY user_id
-                 ORDER BY count(*) DESC, cell) AS rn
-             FROM k WHERE h BETWEEN 0 AND 6 GROUP BY user_id, cell) t
-           WHERE rn = 1),
-         wk AS (SELECT user_id, cell AS work_cell, c AS n_day FROM (
-             SELECT user_id, cell, CAST(count(*) AS BIGINT) AS c,
-               row_number() OVER (PARTITION BY user_id
-                 ORDER BY count(*) DESC, cell) AS rn
-             FROM k WHERE h BETWEEN 9 AND 17 GROUP BY user_id, cell) t
-           WHERE rn = 1)
-         SELECT hm.user_id, home_cell, n_night, work_cell, n_day,
-           CAST(CASE WHEN home_cell = work_cell THEN 1 ELSE 0 END AS INT)
-             AS same_anchor
-         FROM hm JOIN wk USING (user_id) ORDER BY hm.user_id""",
     // correlated above-own-average via cross-multiplied cents,
     "traj_edr" -> {
       val combine =

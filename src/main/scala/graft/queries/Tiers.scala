@@ -2,9 +2,9 @@ package graft.queries
 
 /** Registry tiers (round-5, VERDICT.md "Next round" #2).
   *
-  * The round-4 registry grew to 594 entries and blew the driver's Verify and
-  * Bench windows, zeroing the round's correctness artifact despite a judge-run
-  * 594/594 bit-exact sweep. The fix is a machine-readable tiering:
+  * A registry that runs every entry outgrows the Verify and Bench time
+  * windows, so the registry (455 entries) is split into machine-readable
+  * tiers:
   *
   *  - core (133 entries): the driver-run contract surface -- every
   *    SURVEY.md sec-2 operator gate (the round-3 driver-green 102) plus one to
@@ -17,9 +17,10 @@ package graft.queries
   *  - diagnostic (6 entries): labeled exact-O(n^2) baselines and
   *    by-design destructive-resilience sweeps -- correct, oracle-checked, but
   *    definitionally not scale-shaped; never in a timed default path.
-  *  - extended (everything else): oracle-agreement recipes and the long
-  *    analytics tail. Runnable via `SPARK_GRAFT_TIER=full` in Verify or the
-  *    query-name args; not part of the driver default.
+  *  - extended (everything else, 316 entries): the long analytics tail,
+  *    every entry of which runs engine code (`graft.ops`, `graft.functions`,
+  *    the geo/raster/table layers). Runnable via `SPARK_GRAFT_TIER=full` in
+  *    Verify or the query-name args; not part of the driver default.
   */
 object Tiers {
   /** Driver-run contract tier; `SparkEntry.queries` is keyed to this set. */

@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.GlobalRank
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -78,6 +79,26 @@ class GlobalRankSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = GlobalRank.withCumSum(in, "grp", "cs", keys, numParts = 6)
       .select("id", "cs").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === expect)
+  }
+
+  test("withCumSum carries the running total through null values") {
+    import spark.implicits._
+    // non-null only on every 25th id (57, 82, ...): range partitions open
+    // with runs of nulls after earlier values (one of them with a carried
+    // total of exactly 0), and the global prefix itself starts null
+    val in = (0 until 300).map { i =>
+      (i.toLong, if (i >= 40 && i % 25 == 7) Some((i / 25 % 3 - 1).toLong) else None)
+    }.toDF("id", "nv")
+    val keys = Seq(col("id").asc)
+    def rows(d: DataFrame) = d.select("id", "cs").collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
+      .toMap
+    val expect = rows(in.withColumn("cs", sum("nv").over(Window.orderBy(keys: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+    val got = rows(GlobalRank.withCumSum(in, "nv", "cs", keys, numParts = 6))
+    assert(got.keySet === expect.keySet)
+    val wrong = expect.filter { case (id, cs) => got(id) != cs }
+    assert(wrong.isEmpty, s"running sum differs at ids ${wrong.keys.toSeq.sorted}")
   }
 
   test("withNtile equals global ntile for ragged and even bucket sizes") {

@@ -36,6 +36,19 @@ class TiersSpec extends AnyFunSuite {
       graft.queries.Tiers.core.size, "duplicate core entries")
   }
 
+  test("every registry entry has both a query and its oracle SQL") {
+    val all = SparkEntry.allQueries.keySet
+    val sql = SparkEntry.allOracleSql.keySet
+    assert((all -- sql).isEmpty, s"queries with no oracle SQL: ${all -- sql}")
+    assert((sql -- all).isEmpty, s"oracle SQL with no query: ${sql -- all}")
+  }
+
+  test("every diagnostic entry resolves against the registry") {
+    val dangling = graft.queries.Tiers.diagnostic
+      .filterNot(SparkEntry.allQueries.keySet)
+    assert(dangling.isEmpty, s"diagnostic names with no query: $dangling")
+  }
+
   test("no O(n²) diagnostic sits in the driver-run tier") {
     val leaked = graft.queries.Tiers.diagnostic
       .filter(graft.queries.Tiers.coreSet)

@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * fails here exactly as it would warn at run time; the non-foldable
   * `GlobalRank.boundedPartitionKey` survives.
   *
-  * Complements the run-level evidence (a full 594-query verify logs zero
+  * Complements the run-level evidence (a full-registry verify logs zero
   * "No Partition Defined" warnings) with a per-plan assertion that runs in
   * CI without executing the queries.
   */
