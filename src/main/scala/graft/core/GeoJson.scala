@@ -91,22 +91,22 @@ object GeoJson {
     out.toSeq
   }
 
-  /** Write elevations back into a feature's coordinates (position index 2,
-    * overwriting any existing third component — the reference's mutation,
-    * src/elevation/addElevation.ts:13-15). `elevs(i)` pairs with coordEach
-    * order index i; missing indices are written as 0.0.
+  /** Sample every position of a feature in coordEach order with
+    * `elev(lng, lat)` and write the result into position index 2,
+    * overwriting any existing third component (the reference's mutation,
+    * src/elevation/addElevation.ts:13-15). A feature without positions (null
+    * geometry, empty coordinates) comes back unchanged, byte for byte.
     */
-  def withElevations(fr: FeatureRow, elevs: Map[Long, Double]): FeatureRow = {
+  def withElevations(fr: FeatureRow)(elev: (Double, Double) => Double): FeatureRow = {
     val f = parse(fr.feature_json)
     val geom = if (f.get("type").asText() == "Feature") f.get("geometry") else f
-    var i = 0L
+    var any = false
     eachPosition(geom) { pos =>
-      val e = elevs.getOrElse(i, 0.0)
-      if (pos.size() >= 3) pos.set(2, DoubleNode.valueOf(e))
-      else pos.add(DoubleNode.valueOf(e))
-      i += 1
+      val e = DoubleNode.valueOf(elev(pos.get(0).asDouble(), pos.get(1).asDouble()))
+      if (pos.size() >= 3) pos.set(2, e) else pos.add(e)
+      any = true
     }
-    FeatureRow(fr.feature_id, write(f))
+    if (any) FeatureRow(fr.feature_id, write(f)) else fr
   }
 
   /** Read back the third (elevation) component of every position in

@@ -11,9 +11,23 @@ package graft.geo
   */
 object TileKey {
   def ofDegrees(lngDeg: Int, latDeg: Int): String = {
-    val latH = if (latDeg < 0) "S" else "N"
-    val lngH = if (lngDeg < 0) "W" else "E"
-    f"$latH${math.abs(latDeg)}%02d$lngH${math.abs(lngDeg)}%03d"
+    val sb = new java.lang.StringBuilder(7)
+    sb.append(if (latDeg < 0) 'S' else 'N')
+    zeroPad(sb, math.abs(latDeg), 2)
+    sb.append(if (lngDeg < 0) 'W' else 'E')
+    zeroPad(sb, math.abs(lngDeg), 3)
+    sb.toString
+  }
+
+  /** `%0<width>d` without `String.format` (it parses the format on every
+    * call). `math.abs(Int.MinValue)` stays negative, but its digits are
+    * wider than any width here, so the sign never needs zeros after it.
+    */
+  private def zeroPad(sb: java.lang.StringBuilder, v: Int, width: Int): Unit = {
+    val digits = Integer.toString(v)
+    var i = digits.length
+    while (i < width) { sb.append('0'); i += 1 }
+    sb.append(digits)
   }
 
   /** Tile key of the 1°×1° tile containing the coordinate (floor, not trunc). */

@@ -2,8 +2,8 @@ package graft.ops
 
 import graft.core._
 import graft.functions.spatial._
-import graft.geo.TileKey
-import graft.raster.Bilinear
+import graft.geo.{Polyline, TileKey}
+import graft.raster.{Bilinear, Terrarium}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -21,8 +21,9 @@ final case class ElevRow(feature_id: String, coord_idx: Long, lng: Double,
   *  - [[lookupBroadcast]]: probe a broadcast [[TileIndex]] of the tile table
   *    (bounded tile sets — the common case: a query's bbox covers few tiles)
   *    with a codegen'd scalar expression: zero shuffle, and no join row ever
-  *    carries a tile payload. [[addElevation]] and [[polylineToTerrarium]]
-  *    take this path.
+  *    carries a tile payload. The two endpoints, [[addElevation]] and
+  *    [[polylineToTerrarium]], probe the same broadcast index inside each
+  *    feature or polyline row: no coordinate rows and no reassembly shuffle.
   *
   *  - [[lookupCogroup]]: the 100 TB path. Both sides hash-partition on
   *    (tile_key, salt); each group decodes its tile **once** and streams its
@@ -157,44 +158,37 @@ object Elevation {
   }
 
   /** Full `/geojson` query (entry point 1): add elevations into the GeoJSON
-    * features. Coordinates are sampled on the [[lookupBroadcast]] path; A4
-    * reassembly then groups the sampled coords per feature and rewrites the
-    * nested coordinate arrays in document order.
+    * features. One narrow pass per feature, like the reference's in-place
+    * `coordEach` mutation (src/elevation/addElevation.ts): the tile table is
+    * broadcast once as a [[TileIndex]], and every position is sampled inside
+    * the row that owns it with [[TileIndex.elevation]] (the method the
+    * `elev_at` probe of [[lookupBroadcast]] calls) and written into index 2.
+    * No coordinate rows, no shuffle, no join. A feature without positions
+    * comes back unchanged.
     */
   def addElevation(features: Dataset[FeatureRow],
                    tiles: Dataset[TileRow]): Dataset[FeatureRow] = {
     val spark = features.sparkSession
     import spark.implicits._
-    val sampled = lookupBroadcast(coordRows(features).toDF(), tiles)
-      .select($"feature_id", $"coord_idx", $"lng", $"lat", $"tile_key", $"elev")
-      .as[ElevRow]
-    val perFeature = sampled.groupByKey(_.feature_id)
-      .mapGroups { (fid, rows) =>
-        (fid, rows.map(r => r.coord_idx -> r.elev).toMap)
-      }
-    features.joinWith(perFeature, features("feature_id") === perFeature("_1"), "left_outer")
-      .map { case (f, kv) =>
-        if (kv == null) f else GeoJson.withElevations(f, kv._2)
-      }
+    val bc = TileIndex.broadcastIndex(tiles)
+    features.map(f => GeoJson.withElevations(f)(bc.value.elevation))
   }
 
   /** Entry point 2 (`/polyline`): decode polyline → sample → Terrarium byte
-    * stream in coordinate order (F5 → J1 → F6).
+    * stream in vertex order (F5 → J1 → F6), one narrow pass per polyline
+    * over the broadcast [[TileIndex]]. A polyline without vertices emits no
+    * row.
     */
   def polylineToTerrarium(polylines: Dataset[(String, String)],
                           tiles: Dataset[TileRow]): Dataset[(String, Array[Byte])] = {
     val spark = polylines.sparkSession
     import spark.implicits._
-    val coords = polylines.flatMap { case (id, pl) =>
-      graft.geo.Polyline.decode(pl).iterator.zipWithIndex.map {
-        case ((lng, lat), i) => CoordRow(id, i.toLong, lng, lat)
-      }
-    }
-    val sampled = lookupBroadcast(coords.toDF(), tiles)
-      .select($"feature_id", $"coord_idx", $"elev").as[(String, Long, Double)]
-    sampled.groupByKey(_._1).mapGroups { (id, rows) =>
-      val elevs = rows.toArray.sortBy(_._2).map(_._3)
-      (id, graft.raster.Terrarium.encodeStream(elevs))
+    val bc = TileIndex.broadcastIndex(tiles)
+    polylines.flatMap { case (id, pl) =>
+      val vertices = Polyline.decode(pl)
+      val index = bc.value
+      Option.when(vertices.nonEmpty)(
+        id -> Terrarium.encodeStream(vertices.map { case (lng, lat) => index.elevation(lng, lat) }))
     }
   }
 }

@@ -173,8 +173,8 @@ object QGeo1 {
       }.toDF("grp", "idx", "lng5", "lat5").orderBy("grp", "idx")
     }),
     // A4 + P4 end to end: synthesize LineString features from point groups,
-    // run the full GeoJSON addElevation pipeline (flatten → broadcast-index
-    // sample → nested write-back), then re-extract per-feature stats whose
+    // run the full GeoJSON addElevation pipeline (per-feature broadcast-index
+    // sample and nested write-back), then re-extract per-feature stats whose
     // oracle is the closed-form bilinear field. first/last/min/max are
     // order-independent or index-pinned — exact doubles, no float-sum order
     // sensitivity.,

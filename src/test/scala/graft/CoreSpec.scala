@@ -36,6 +36,26 @@ class TileKeySpec extends AnyFunSuite {
     assert(TileKey.of(0.0, 0.0) == "N00E000")
     assert(TileKey.of(-0.5, -0.5) == "S01W001")
   }
+  test("ofDegrees matches the %02d/%03d formatter on arbitrary ints and the Int edges") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    def formatted(lngDeg: Int, latDeg: Int): String = {
+      val latH = if (latDeg < 0) "S" else "N"
+      val lngH = if (lngDeg < 0) "W" else "E"
+      f"$latH${math.abs(latDeg)}%02d$lngH${math.abs(lngDeg)}%03d"
+    }
+    val edges = Gen.oneOf(Int.MinValue, Int.MinValue + 1, -1000, -999, -181, -180, -100, -99,
+      -91, -90, -10, -9, -1, 0, 1, 9, 10, 90, 99, 100, 180, 999, 1000, Int.MaxValue - 1, Int.MaxValue)
+    val degrees = Gen.frequency(2 -> edges, 3 -> Gen.choose(-200, 200),
+      3 -> Gen.choose(Int.MinValue, Int.MaxValue))
+    val prop = Prop.forAll(degrees, degrees) { (lng, lat) => TileKey.ofDegrees(lng, lat) == formatted(lng, lat) }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(20000), prop)
+    assert(res.passed, res.status)
+    // finite huge coordinates floor to the Int edges
+    for (lng <- Seq(-1e300, -3e9, 3e9, 1e300); lat <- Seq(-1e300, 1e300)) {
+      assert(TileKey.of(lng, lat) == formatted(math.floor(lng).toInt, math.floor(lat).toInt))
+    }
+    assert(TileKey.of(1e300, -1e300) == "S-2147483648E2147483647")
+  }
   test("key round-trip") {
     for (lng <- Seq(-180, -119, -1, 0, 1, 179); lat <- Seq(-90, -37, 0, 36, 89)) {
       assert(TileKey.toDegrees(TileKey.ofDegrees(lng, lat)) == ((lng, lat)))
@@ -224,7 +244,8 @@ class GeoJsonSpec extends AnyFunSuite {
   test("withElevations writes position index 2, preserves properties") {
     val f = core.FeatureRow("x",
       """{"type":"Feature","id":"x","geometry":{"type":"LineString","coordinates":[[1.0,2.0],[3.0,4.0,99.0]]},"properties":{"title":"t","updated":1439166161000}}""")
-    val out = GeoJson.withElevations(f, Map(0L -> 10.5, 1L -> 20.5))
+    val elevs = Map((1.0, 2.0) -> 10.5, (3.0, 4.0) -> 20.5)
+    val out = GeoJson.withElevations(f)((lng, lat) => elevs((lng, lat)))
     val node = GeoJson.parse(out.feature_json)
     val cs = node.get("geometry").get("coordinates")
     assert(cs.get(0).get(2).asDouble() == 10.5)

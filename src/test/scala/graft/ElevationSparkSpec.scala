@@ -1,18 +1,23 @@
 package graft
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.{ArrayNode, DoubleNode}
 import graft.core._
-import graft.geo.TileKey
-import graft.ops.Elevation
-import graft.raster.Bilinear
+import graft.geo.{Polyline, TileKey}
+import graft.ops.{Elevation, TileIndex}
+import graft.raster.{Bilinear, Terrarium}
 import graft.synth.TileGen
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end `/geojson` query on the reference's own golden fixture against
   * a pure-Scala scalar oracle (reference semantics re-implemented coordinate
   * by coordinate), plus physical-path equivalence (broadcast vs cogroup vs
-  * salted cogroup vs png-format tiles).
+  * salted cogroup vs png-format tiles, and both endpoints against the
+  * coordinate-row plans they replaced).
   */
 class ElevationSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -133,6 +138,154 @@ class ElevationSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bytes.sameElements(expected))
   }
 
+  /** Oracle for `polylineToTerrarium` as a coordinate-row plan: explode to
+    * vertex rows, probe them with `lookupBroadcast`, group them back per id
+    * and sort by vertex index.
+    */
+  private def coordRowTerrarium(polylines: Dataset[(String, String)],
+                                tds: Dataset[TileRow]): Dataset[(String, Array[Byte])] = {
+    import spark.implicits._
+    val coords = polylines.flatMap { case (id, pl) =>
+      Polyline.decode(pl).iterator.zipWithIndex.map {
+        case ((lng, lat), i) => CoordRow(id, i.toLong, lng, lat)
+      }
+    }
+    Elevation.lookupBroadcast(coords.toDF(), tds)
+      .select($"feature_id", $"coord_idx", $"elev").as[(String, Long, Double)]
+      .groupByKey(_._1).mapGroups { (id, rows) =>
+        (id, Terrarium.encodeStream(rows.toArray.sortBy(_._2).map(_._3)))
+      }
+  }
+
+  /** Oracle for `addElevation` as a coordinate-row plan: explode to
+    * coordinate rows, probe them with `lookupBroadcast`, group the
+    * elevations per feature id and join them back onto the features; a
+    * feature without coordinates falls out of the join's null branch
+    * unchanged.
+    */
+  private def coordRowAddElevation(features: Dataset[FeatureRow],
+                                   tds: Dataset[TileRow]): Dataset[FeatureRow] = {
+    import spark.implicits._
+    val perFeature = Elevation.lookupBroadcast(Elevation.coordRows(features).toDF(), tds)
+      .select($"feature_id", $"coord_idx", $"elev").as[(String, Long, Double)]
+      .groupByKey(_._1)
+      .mapGroups((fid, rows) => (fid, rows.map(r => r._2 -> r._3).toMap))
+    features.joinWith(perFeature, features("feature_id") === perFeature("_1"), "left_outer")
+      .map { case (f, kv) => if (kv == null) f else ElevationSparkSpec.writeElevations(f, kv._2) }
+  }
+
+  /** 200 seeded polylines: lines that wander over and off the four tiles,
+    * all-sea lines, lines with vertices on exact integer degrees (tile
+    * corners and edges), 1-vertex lines and short walks inside one tile.
+    */
+  private def seededPolylines: Seq[(String, String)] = {
+    val r = new scala.util.Random(20240601L)
+    def in(lo: Double, hi: Double): Double = lo + r.nextDouble() * (hi - lo)
+    (0 until 200).map { i =>
+      val n = 2 + r.nextInt(30)
+      val vs: Seq[(Double, Double)] = i % 5 match {
+        case 0 => Seq.fill(n)((in(-121.0, -117.5), in(35.5, 38.5)))
+        case 1 => Seq.fill(n)((in(-150.0, -140.0), in(0.0, 10.0)))
+        case 2 => Seq.fill(n)(
+          if (r.nextBoolean()) ((-121 + r.nextInt(4)).toDouble, (35 + r.nextInt(4)).toDouble)
+          else ((-120 + r.nextInt(2)).toDouble, in(36.0, 38.0)))
+        case 3 => Seq((in(-120.0, -118.0), in(36.0, 38.0)))
+        case _ =>
+          var p = (in(-119.9, -119.1), in(36.1, 36.9))
+          Seq.fill(n) { p = (p._1 + in(-0.01, 0.01), p._2 + in(-0.01, 0.01)); p }
+      }
+      (s"line-$i", Polyline.encode(vs))
+    }
+  }
+
+  test("polylineToTerrarium equals the coordinate-row plan byte for byte (200 seeded polylines)") {
+    import spark.implicits._
+    val tds = spark.createDataset(tiles("hgt"))(Encoders.product[TileRow])
+    val input = spark.createDataset(seededPolylines :+ ("empty" -> ""))
+    val got = Elevation.polylineToTerrarium(input, tds).collect()
+    val want = coordRowTerrarium(input, tds).collect()
+    assert(got.length == 200 && want.length == 200) // the empty polyline emits no row
+    assert(got.map(_._1).distinct.length == 200)
+    assert(got.map { case (id, b) => id -> b.toSeq }.toMap ==
+      want.map { case (id, b) => id -> b.toSeq }.toMap)
+    // the cases the seeded set exists for all occur
+    val decoded = seededPolylines.map { case (id, pl) => id -> Polyline.decode(pl) }
+    assert(decoded.exists(_._2.length == 1))
+    assert(decoded.exists(_._2.exists { case (lng, lat) => lng.isWhole && lat.isWhole }))
+    assert(got.exists { case (_, b) => b.grouped(3).forall(_.toSeq == Terrarium.encodeStream(Seq(0.0)).toSeq) })
+    assert(decoded.exists(_._2.map { case (lng, lat) => TileKey.of(lng, lat) }.distinct.length > 1))
+  }
+
+  private val extraFeatures = Seq(
+    // null geometry and empty coordinates: returned byte for byte (1.50 would
+    // be rewritten to 1.5 by a parse-and-write round trip)
+    FeatureRow("x-null", """{"type":"Feature","geometry":null,"properties":{"w":1.50}}"""),
+    FeatureRow("x-empty", """{"type":"Feature","geometry":{"type":"LineString","coordinates":[]},"properties":{"w":1.50}}"""),
+    FeatureRow("x-gc", """{"type":"Feature","geometry":{"type":"GeometryCollection","geometries":[{"type":"Point","coordinates":[-119.25,36.75]},{"type":"LineString","coordinates":[[-120.5,37.5],[-118.5,36.5]]}]},"properties":{}}"""),
+    FeatureRow("x-third", """{"type":"Feature","geometry":{"type":"LineString","coordinates":[[-119.5,36.5,1234.5],[-119.4,36.6,-7]]},"properties":{"w":1.50}}"""),
+    FeatureRow("x-sea", """{"type":"Feature","geometry":{"type":"MultiPoint","coordinates":[[-150.0,5.0],[-149.5,5.5]]},"properties":{}}"""),
+    FeatureRow("x-whole", """{"type":"Feature","geometry":{"type":"MultiLineString","coordinates":[[[-119,37],[-120,36]],[[-118,38],[-121,35]]]},"properties":{}}"""),
+    FeatureRow("x-poly", """{"type":"Feature","geometry":{"type":"Polygon","coordinates":[[[-120.5,36.5],[-118.5,36.5],[-118.5,37.5],[-120.5,36.5]]]},"properties":{}}"""),
+    FeatureRow("x-bare", """{"type":"Point","coordinates":[-119.75,37.25]}"""))
+
+  test("addElevation equals the coordinate-row plan string for string (JMT + edge features)") {
+    import spark.implicits._
+    val tds = spark.createDataset(tiles("hgt"))(Encoders.product[TileRow])
+    val input = GeoJson.featureRows(GeoJson.parse(jmt)) ++ extraFeatures
+    val ds = spark.createDataset(input)
+    val got = Elevation.addElevation(ds, tds).collect()
+    val want = coordRowAddElevation(ds, tds).collect()
+    assert(got.length == input.length && want.length == input.length)
+    assert(got.map(f => f.feature_id -> f.feature_json).toMap ==
+      want.map(f => f.feature_id -> f.feature_json).toMap)
+    val byId = got.map(f => f.feature_id -> f.feature_json).toMap
+    assert(byId("x-null") == extraFeatures(0).feature_json)
+    assert(byId("x-empty") == extraFeatures(1).feature_json)
+    val third = ElevationSparkSpec.positions(GeoJson.parse(byId("x-third")).get("geometry"))
+    assert(third.map(_.size()) == Seq(3, 3) && third.head.get(2).asDouble() != 1234.5)
+  }
+
+  test("rows that share an id are each sampled on their own coordinates") {
+    import spark.implicits._
+    val ts = tiles("hgt")
+    val tds = spark.createDataset(ts)(Encoders.product[TileRow])
+    val index = new TileIndex(ts.toArray)
+    val features = Seq(
+      FeatureRow("dup", """{"type":"Feature","geometry":{"type":"LineString","coordinates":[[-119.5,36.5],[-119.25,36.25],[-119.1,36.9]]},"properties":{"n":1}}"""),
+      FeatureRow("dup", """{"type":"Feature","geometry":{"type":"Point","coordinates":[-119.8,37.6]},"properties":{"n":2}}"""))
+    val got = Elevation.addElevation(spark.createDataset(features), tds).collect()
+    assert(got.length == 2)
+    got.foreach { f =>
+      val cs = GeoJson.coordRows(f)
+      assert(GeoJson.elevations(f) == cs.map(c => index.elevation(c.lng, c.lat)))
+    }
+    assert(got.map(f => GeoJson.coordRows(f).length).sorted.toSeq == Seq(1, 3))
+
+    val lines = Seq(Seq((-119.5, 36.5), (-119.25, 36.25), (-119.1, 36.9)), Seq((-119.8, 37.6), (-118.2, 36.1)))
+    val input = lines.map(vs => "dup" -> Polyline.encode(vs))
+    val out = Elevation.polylineToTerrarium(spark.createDataset(input), tds).collect()
+    val want = input.map { case (_, pl) =>
+      Terrarium.encodeStream(Polyline.decode(pl).map { case (lng, lat) => index.elevation(lng, lat) }).toSeq
+    }
+    assert(out.map(_._2.toSeq).sortBy(_.length).toSeq == want.sortBy(_.length))
+  }
+
+  test("both endpoints run as narrow passes: no shuffle exchange in the executed plans") {
+    import spark.implicits._
+    val tds = spark.createDataset(tiles("hgt"))(Encoders.product[TileRow])
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // the final adaptive plan is in place only after the action has run
+    def shuffles(ds: Dataset[_]): Seq[ShuffleExchangeExec] = {
+      ds.collect()
+      aqe.collect(ds.queryExecution.executedPlan) { case s: ShuffleExchangeExec => s }
+    }
+    val polylines = Elevation.polylineToTerrarium(spark.createDataset(seededPolylines), tds)
+    assert(shuffles(polylines).isEmpty, polylines.queryExecution.executedPlan.toString)
+    val features = Elevation.addElevation(
+      spark.createDataset(GeoJson.featureRows(GeoJson.parse(jmt))), tds)
+    assert(shuffles(features).isEmpty, features.queryExecution.executedPlan.toString)
+  }
+
   test("SparkEntry.entry smoke: rows > 0 and Whitney-area elevations positive") {
     val df = SparkEntry.entry(spark)
     assert(df.count() == 5998)
@@ -161,5 +314,35 @@ class ElevationSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
           s"($sx,$sy) px($r,$c): got $got want $want")
       }
     }
+  }
+}
+
+/** Helpers the coordinate-row oracle ships to executors (outside the suite,
+  * which is not serializable).
+  */
+object ElevationSparkSpec {
+  /** Every position array of a GeoJSON geometry in coordEach order. */
+  def positions(geom: JsonNode): Seq[ArrayNode] =
+    if (geom == null || geom.isNull) Nil
+    else if (geom.get("type").asText() == "GeometryCollection") {
+      val gs = geom.get("geometries")
+      (0 until gs.size()).flatMap(i => positions(gs.get(i)))
+    } else {
+      def walk(n: JsonNode): Seq[ArrayNode] =
+        if (!n.isArray) Nil
+        else if (n.size() > 0 && n.get(0).isNumber) Seq(n.asInstanceOf[ArrayNode])
+        else (0 until n.size()).flatMap(i => walk(n.get(i)))
+      walk(geom.get("coordinates"))
+    }
+
+  /** Write `elevs(i)` into index 2 of the i-th position (0.0 where absent). */
+  def writeElevations(f: FeatureRow, elevs: Map[Long, Double]): FeatureRow = {
+    val node = GeoJson.parse(f.feature_json)
+    val geom = if (node.get("type").asText() == "Feature") node.get("geometry") else node
+    positions(geom).zipWithIndex.foreach { case (pos, i) =>
+      val e = DoubleNode.valueOf(elevs.getOrElse(i.toLong, 0.0))
+      if (pos.size() >= 3) pos.set(2, e) else pos.add(e)
+    }
+    FeatureRow(f.feature_id, GeoJson.write(node))
   }
 }
