@@ -4,6 +4,7 @@ import graft.core._
 import graft.functions.spatial._
 import graft.geo.{Polyline, TileKey}
 import graft.raster.{Bilinear, Terrarium}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
@@ -167,11 +168,15 @@ object Elevation {
     * comes back unchanged.
     */
   def addElevation(features: Dataset[FeatureRow],
-                   tiles: Dataset[TileRow]): Dataset[FeatureRow] = {
+                   tiles: Dataset[TileRow]): Dataset[FeatureRow] =
+    addElevation(features, TileIndex.broadcastIndex(tiles))
+
+  /** [[addElevation]] over a tile index the caller has already broadcast. */
+  def addElevation(features: Dataset[FeatureRow],
+                   index: Broadcast[TileIndex]): Dataset[FeatureRow] = {
     val spark = features.sparkSession
     import spark.implicits._
-    val bc = TileIndex.broadcastIndex(tiles)
-    features.map(f => GeoJson.withElevations(f)(bc.value.elevation))
+    features.map(f => GeoJson.withElevations(f)(index.value.elevation))
   }
 
   /** Entry point 2 (`/polyline`): decode polyline → sample → Terrarium byte

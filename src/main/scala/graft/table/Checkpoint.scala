@@ -1,9 +1,12 @@
 package graft.table
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.IntegerType
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, StructType}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+
+import scala.jdk.CollectionConverters._
 
 /** One committed bucket of a resumable write: the lineage + row-count metrics
   * row (north rule: "all stages checkpoint per-partition with lineage +
@@ -54,8 +57,8 @@ final case class BucketManifest(run_id: String, bucket: Int, row_count: Long,
   */
 object Checkpoint {
 
-  private val ManifestSchema = "run_id string, bucket int, row_count bigint, " +
-    "checksum bigint, wall_ms bigint, committed_at bigint"
+  private val ManifestSchema = StructType.fromDDL("run_id string, bucket int, " +
+    "row_count bigint, checksum bigint, wall_ms bigint, committed_at bigint")
 
   private def hadoopConf(spark: Option[SparkSession]) =
     spark.map(_.sparkContext.hadoopConfiguration)
@@ -66,35 +69,58 @@ object Checkpoint {
     (p.getFileSystem(hadoopConf(spark)), p)
   }
 
-  private def commitFiles(dir: String, spark: SparkSession, suffix: String): Boolean = {
-    val (fs, p) = fsOf(dir, Some(spark))
-    fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(suffix))
+  private val mapper = new ObjectMapper()
+
+  /** One commit-log line as a manifest row. A line is a commit only if it
+    * parses to an object with an integer `bucket`: a torn or hand-edited
+    * line must read as "not committed", never crash every later resume.
+    * Other fields that are absent or mistyped read as null, as in Spark's
+    * JSON source.
+    */
+  private def manifestRow(line: String): Option[Row] = {
+    val n = try mapper.readTree(line) catch { case _: java.io.IOException => null }
+    if (n == null || !n.path("bucket").isInt) None
+    else {
+      def long(f: String): java.lang.Long =
+        if (n.path(f).isIntegralNumber && n.path(f).canConvertToLong) n.path(f).asLong() else null
+      val runId = if (n.path("run_id").isTextual) n.path("run_id").asText() else null
+      Some(Row(runId, n.path("bucket").asInt(), long("row_count"), long("checksum"),
+        long("wall_ms"), long("committed_at")))
+    }
   }
 
-  /** The commit log is JSON-lines written directly through Hadoop
-    * `FileSystem` (like real table formats' metadata, and unlike the data
-    * files, which ARE Spark jobs): a manifest append must not cost a Spark
-    * job — at 1,024 buckets that was ~1,000 job launches of pure overhead,
-    * dwarfing the single data write. Tables whose manifests were committed
-    * by the earlier parquet-append protocol stay readable: both formats are
-    * read and unioned.
+  /** The commit log, read on the driver through Hadoop `FileSystem`, the way
+    * [[appendManifest]] writes it: a manifest append must not cost a Spark
+    * job, and neither must reading the log back — at 1,024 buckets the
+    * per-commit job launches were pure overhead that dwarfed the single data
+    * write. Hidden names (`.`/`_` prefixes, as Spark's listing skips them)
+    * are never commits; that covers the `.tmp` of an append killed before
+    * its rename. Tables whose manifests were committed by the earlier
+    * parquet-append protocol stay readable: their `.parquet` commit files
+    * are read by Spark and unioned. Without one the frame is a local
+    * relation, so the collects of [[committedBuckets]] run no Spark job.
     */
   def manifests(spark: SparkSession, dir: String): DataFrame = {
-    val schema = org.apache.spark.sql.types.StructType.fromDDL(ManifestSchema)
-    val hasJson = commitFiles(s"$dir/manifest", spark, ".json")
-    val hasParquet = commitFiles(s"$dir/manifest", spark, ".parquet")
+    val (fs, mdir) = fsOf(s"$dir/manifest", Some(spark))
+    val files =
+      if (!fs.exists(mdir)) Seq.empty[Path]
+      else fs.listStatus(mdir).toSeq.filter(_.isFile).map(_.getPath)
+        .filterNot(p => p.getName.startsWith(".") || p.getName.startsWith("_"))
+        .sortBy(_.getName)
+    val rows = files.filter(_.getName.endsWith(".json")).flatMap { p =>
+      val in = new java.io.BufferedReader(new java.io.InputStreamReader(
+        fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
+      try Iterator.continually(in.readLine()).takeWhile(_ != null)
+        .filter(_.trim.nonEmpty).flatMap(manifestRow).toList
+      finally in.close()
+    }
+    val local = spark.createDataFrame(rows.asJava, ManifestSchema)
     // pathGlobFilter: a migrated table holds BOTH formats in one directory,
-    // and Spark's file listing filters only hidden files, not extensions —
-    // without the glob each branch would also read the other format's files
-    val parts = Seq(
-      if (hasJson) Some(spark.read.schema(schema)
-        .option("pathGlobFilter", "*.json").json(s"$dir/manifest")) else None,
-      if (hasParquet) Some(spark.read.schema(schema)
-        .option("pathGlobFilter", "*.parquet").parquet(s"$dir/manifest")) else None
-    ).flatten
-    if (parts.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-    else parts.reduceLeft(_ unionAll _)
+    // and Spark's file listing filters only hidden files, not extensions
+    if (files.exists(_.getName.endsWith(".parquet")))
+      local.unionAll(spark.read.schema(ManifestSchema)
+        .option("pathGlobFilter", "*.parquet").parquet(s"$dir/manifest"))
+    else local
   }
 
   /** Crash-atomic append: write to a hidden .tmp path, sync (where the
@@ -141,8 +167,7 @@ object Checkpoint {
 
   def committedBuckets(spark: SparkSession, dir: String): Set[Int] = {
     import spark.implicits._
-    // na.drop: a malformed commit line must read as "not committed", never
-    // crash every subsequent resume
+    // na.drop: a legacy parquet manifest row without a bucket is not a commit
     manifests(spark, dir).select("bucket").na.drop().as[Int].collect().toSet
   }
 

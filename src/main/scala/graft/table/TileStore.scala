@@ -3,6 +3,7 @@ package graft.table
 import graft.core.TileRow
 import graft.geo.{S2, TileKey}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 
 /** On-disk tile table with scan-level cell-range pruning (north star:
@@ -38,9 +39,18 @@ object TileStore {
 
   def read(spark: SparkSession, dir: String): DataFrame = spark.read.parquet(dir)
 
-  /** Read back as the typed input-table row (drops partition duplicates). */
+  /** The table as [[write]] lays it out: the [[TileRow]] columns, then the
+    * two partition columns.
+    */
+  private val TableSchema = StructType.fromDDL(
+    "image_id string, bytes binary, w int, h int, fmt string, caption string, " +
+      "phash bigint, cell8 bigint, tile_key string")
+
+  /** Read back as the typed input-table row (drops partition duplicates).
+    * The schema is given, so no Spark job infers it from Parquet footers.
+    */
   def readTiles(spark: SparkSession, dir: String): Dataset[TileRow] =
-    read(spark, dir)
+    spark.read.schema(TableSchema).parquet(dir)
       .select("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
       .as[TileRow](Encoders.product[TileRow])
 

@@ -95,6 +95,64 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Checkpoint.committedBuckets(spark, dir) == Set(0, 1, 99))
   }
 
+  /** Write `lines` verbatim as one file of `dir`'s commit log. */
+  private def forgeCommit(dir: String, name: String, lines: String*): Unit = {
+    val m = java.nio.file.Paths.get(s"$dir/manifest")
+    java.nio.file.Files.createDirectories(m)
+    java.nio.file.Files.writeString(m.resolve(name), lines.map(_ + "\n").mkString)
+  }
+
+  test("commit log: malformed lines are not commits; valid lines beside them count") {
+    val dir = freshDir("malformed")
+    forgeCommit(dir, "commit-forged.json",
+      """{"run_id":"r","bucket":0,"row_count":5,"checksum":1,"wall_ms":2,"committed_at":3}""",
+      "this is not json",
+      """{"run_id":"r","bucket":""",
+      """{"run_id":"r","bucket":"x","row_count":7,"checksum":1,"wall_ms":2,"committed_at":3}""",
+      """{"run_id":"r","bucket":2,"row_count":6,"checksum":1,"wall_ms":2,"committed_at":3}""")
+    assert(Checkpoint.committedBuckets(spark, dir) == Set(0, 2))
+  }
+
+  test("commit log: a leftover hidden .tmp commit file is ignored") {
+    val dir = freshDir("hiddentmp")
+    forgeCommit(dir, "commit-a.json",
+      """{"run_id":"r","bucket":1,"row_count":5,"checksum":1,"wall_ms":2,"committed_at":3}""")
+    // an append killed before its rename
+    forgeCommit(dir, ".commit-b.json.tmp",
+      """{"run_id":"r","bucket":7,"row_count":5,"checksum":1,"wall_ms":2,"committed_at":3}""")
+    assert(Checkpoint.committedBuckets(spark, dir) == Set(1))
+  }
+
+  test("commit log: a table without a manifest directory has no committed buckets") {
+    val dir = freshDir("nomanifest")
+    assert(Checkpoint.committedBuckets(spark, dir).isEmpty)
+    new java.io.File(s"$dir/data").mkdirs()
+    assert(Checkpoint.committedBuckets(spark, dir).isEmpty)
+    assert(Checkpoint.manifests(spark, dir).count() == 0)
+  }
+
+  test("commit log: manifests equals Spark's JSON read of the log on a multi-run table") {
+    import spark.implicits._
+    val dir = freshDir("manifestrows")
+    val base = (0 until 600).map(i => (i.toLong, i * 3L)).toDF("k", "v")
+    Checkpoint.writeVersioned(base, col("k") % 6, 6, dir, "r1", bucketsPerJob = 4)
+    Checkpoint.writeVersioned(base.filter(col("k") % 6 < 2), col("k") % 6, 6, dir, "r2")
+    Checkpoint.writeVersioned(base.filter(col("k") % 6 === 5), col("k") % 6, 6, dir, "r3",
+      bucketsPerJob = 1)
+    // the commit-log read as Spark's JSON source does it
+    val oracle = spark.read
+      .schema("run_id string, bucket int, row_count bigint, checksum bigint, " +
+        "wall_ms bigint, committed_at bigint")
+      .option("pathGlobFilter", "*.json").json(s"$dir/manifest")
+    val got = Checkpoint.manifests(spark, dir)
+    assert(got.columns.toSeq == oracle.columns.toSeq)
+    assert(got.schema.map(f => (f.name, f.dataType)) == oracle.schema.map(f => (f.name, f.dataType)))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+      .sortBy(_.mkString("|"))
+    assert(rows(got).size == 6 + 2 + 1)
+    assert(rows(got) == rows(oracle))
+  }
+
   test("checksum detects content drift between manifest and recomputation") {
     import spark.implicits._
     val dir = freshDir("checksum")

@@ -252,6 +252,60 @@ class GeoJsonSpec extends AnyFunSuite {
     assert(cs.get(1).get(2).asDouble() == 20.5) // overwrites existing 3rd component
     assert(node.get("properties").get("updated").asLong() == 1439166161000L)
   }
+  test("withElevations writes every finite double so it parses back bit-identical (property)") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import java.lang.Double.{doubleToRawLongBits, longBitsToDouble}
+    val point = core.FeatureRow("p",
+      """{"type":"Feature","geometry":{"type":"Point","coordinates":[1.0,2.0]},"properties":{}}""")
+    val plain = new com.fasterxml.jackson.databind.ObjectMapper()
+    val edges = Gen.oneOf(0.0, -0.0, Double.MinPositiveValue, -Double.MinPositiveValue,
+      java.lang.Double.MIN_NORMAL, -java.lang.Double.MIN_NORMAL,
+      math.nextDown(java.lang.Double.MIN_NORMAL), Double.MaxValue, -Double.MaxValue,
+      1e23, 8.41e21, 2.0e-3, 1.0e7, 9999999.999999998, 4.9e-324, 1.0, -1.0)
+    val sign = Gen.oneOf(1.0, -1.0)
+    val subnormal = for (m <- Gen.choose(1L, (1L << 52) - 1); s <- sign) yield s * longBitsToDouble(m)
+    val anyBits = Gen.choose(Long.MinValue, Long.MaxValue).map(longBitsToDouble)
+      .suchThat(d => !d.isNaN && !d.isInfinite)
+    val elevLike = Gen.choose(-100.0, 3900.0)
+    val doubles = Gen.frequency(2 -> edges, 2 -> subnormal, 4 -> anyBits, 2 -> elevLike)
+    val prop = Prop.forAll(doubles) { d =>
+      val out = GeoJson.withElevations(point)((_, _) => d)
+      val viaProgram = GeoJson.elevations(out).head
+      val viaJdk = plain.readTree(out.feature_json).get("geometry").get("coordinates").get(2)
+        .asDouble()
+      Prop(doubleToRawLongBits(viaProgram) == doubleToRawLongBits(d) &&
+        doubleToRawLongBits(viaJdk) == doubleToRawLongBits(d)) :| s"$d -> ${out.feature_json}"
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(20000), prop)
+    assert(res.passed, res.status)
+  }
+  test("split then withElevations on JMT writes the same JSON as a default ObjectMapper") {
+    import com.fasterxml.jackson.databind.JsonNode
+    import com.fasterxml.jackson.databind.node.{ArrayNode, DoubleNode}
+    val index = new graft.ops.TileIndex(
+      TileGen.tiles(Seq((-119, 36), (-120, 36), (-119, 37), (-120, 37)), 1201, "hgt").toArray)
+    // what readDocuments and addElevation run per document and per feature
+    val got = GeoJson.featureRows(GeoJson.parse(jmt))
+      .map(fr => GeoJson.withElevations(fr)(index.elevation).feature_json)
+    // the same steps over Jackson's defaults (JDK double parse and print)
+    val plain = new com.fasterxml.jackson.databind.ObjectMapper()
+    def walk(n: JsonNode): Unit =
+      if (n != null && n.isArray) {
+        if (n.size() > 0 && n.get(0).isNumber) {
+          val pos = n.asInstanceOf[ArrayNode]
+          val e = DoubleNode.valueOf(index.elevation(pos.get(0).asDouble(), pos.get(1).asDouble()))
+          if (pos.size() >= 3) pos.set(2, e) else pos.add(e)
+        } else (0 until n.size()).foreach(i => walk(n.get(i)))
+      }
+    val fs = plain.readTree(jmt).get("features")
+    val want = (0 until fs.size()).map { i =>
+      val f = plain.readTree(plain.writeValueAsString(fs.get(i)))
+      walk(f.get("geometry").get("coordinates"))
+      plain.writeValueAsString(f)
+    }
+    assert(got.size == 54)
+    got.zip(want).zipWithIndex.foreach { case ((g, w), i) => assert(g == w, s"feature $i") }
+  }
   test("geometry collection + bare geometry traversal") {
     val g = """{"type":"GeometryCollection","geometries":[{"type":"Point","coordinates":[1,2]},{"type":"MultiPolygon","coordinates":[[[[0,0],[1,0],[1,1],[0,0]]]]}]}"""
     val rows = GeoJson.featureRows(GeoJson.parse(g))

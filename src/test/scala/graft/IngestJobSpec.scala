@@ -242,12 +242,47 @@ class IngestJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(TileStore.ingestHgt(spark, s"$base/strict/hgt", s"$base/strict/store2") == 1)
   }
 
-  test("ElevationJob end to end: JMT file in, GeoJSON-lines out, elevations > 0") {
-    graft.table.Checkpoint.clear(s"$base/job")
-    new java.io.File(s"$base/job").mkdirs()
+  private def writeJmt(dir: String): String = {
+    new java.io.File(dir).mkdirs()
     val in = getClass.getResourceAsStream("/JMT.json")
     val jmt = try scala.io.Source.fromInputStream(in).mkString finally in.close()
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$base/job/jmt.geojson"), jmt)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/jmt.geojson"), jmt)
+    s"$dir/jmt.geojson"
+  }
+
+  test("ElevationJob over a tile store runs at most 7 Spark jobs; summary counts") {
+    // the job stops the suite's session: this runs after every test that
+    // uses `spark`, and before the last test, which starts its own
+    graft.table.Checkpoint.clear(s"$base/jobcount")
+    val docs = writeJmt(s"$base/jobcount")
+    val corners = Seq((-119, 36), (-120, 36), (-119, 37), (-120, 37))
+    TileStore.write(spark.createDataset(TileGen.tiles(corners, 121, "hgt"))(
+      org.apache.spark.sql.Encoders.product[graft.core.TileRow]), s"$base/jobcount/store")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    })
+    val stdout = new java.io.ByteArrayOutputStream()
+    Console.withOut(stdout) {
+      ElevationJob.main(Array(docs, s"$base/jobcount/store", s"$base/jobcount/out"))
+    }
+    // stopping the session drained the listener bus: every job is counted.
+    // One pass: tile collect for the broadcast, the bucketed write (shuffle
+    // map + write), the written-files stats (shuffle map + collect), the
+    // data-schema read of the committed table and the GeoJSON-lines write
+    info(s"${jobs.get()} Spark jobs in one ElevationJob pass")
+    assert(jobs.get() <= 7, s"${jobs.get()} Spark jobs in one ElevationJob pass")
+    val summary = stdout.toString(java.nio.charset.StandardCharsets.UTF_8).linesIterator
+      .find(_.contains("\"job\":\"elevation\"")).getOrElse(fail(s"no summary line in: $stdout"))
+    val json = new com.fasterxml.jackson.databind.ObjectMapper().readTree(summary)
+    assert(json.get("tiles").asLong() == 4L, summary)
+    assert(json.get("features").asLong() == 54L, summary)
+  }
+
+  test("ElevationJob end to end: JMT file in, GeoJSON-lines out, elevations > 0") {
+    graft.table.Checkpoint.clear(s"$base/job")
+    writeJmt(s"$base/job")
     // the job owns (and stops) the active session — runs last in this suite;
     // assertions get a fresh session
     ElevationJob.main(Array(s"$base/job/jmt.geojson", "SYNTH", s"$base/job/out"))
