@@ -20,17 +20,16 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
   * runs [[graft.table.TileStore.ingestHgt]] over its HGT archive and passes
   * the store directory.
   *
-  * One pass over a tile store runs 7 Spark jobs, and every one of them
+  * One pass over a tile store runs 4 Spark jobs, and every one of them
   * moves tile or feature data:
   *  1. collect the tiles for the broadcast [[TileIndex]] (the store is read
   *     with its known schema, so no footer-inference job precedes it);
   *  2. the shuffle map stage of the bucketed write: read the documents, add
-  *     elevations and hash the features into buckets;
-  *  3. the bucketed write;
-  *  4–5. the per-bucket row-count and checksum stats over the written
-  *     files (map stage, then collect);
-  *  6. schema inference of the committed table's Parquet files;
-  *  7. the GeoJSON-lines write.
+  *     elevations and route the features to their buckets;
+  *  3. the bucketed write, whose tasks also count each bucket's rows and
+  *     checksum for its manifest row;
+  *  4. the GeoJSON-lines write of the committed table, read with the schema
+  *     recorded in the commit log.
   * The commit log is written and read on the driver, and the summary's
   * `tiles` and `features` come from the index and the commit log, so none
   * of those is a job.
@@ -68,8 +67,7 @@ object ElevationJob {
     GeoJsonSource.writeLines(committed, s"$outDir/features")
     // counts from the commit log the driver just wrote (no Spark job) rather
     // than re-parsing the output
-    val nFeatures = table.Checkpoint.manifests(spark, s"$outDir/table")
-      .select("row_count").na.drop().as[Long](Encoders.scalaLong).collect().sum
+    val nFeatures = table.Checkpoint.committedRowCount(spark, s"$outDir/table")
     val secs = (System.nanoTime() - t0) / 1e9
     println(f"""{"job":"elevation","features":$nFeatures,"tiles":${index.value.size},"sec":$secs%.3f,"buckets":8}""")
     spark.stop()

@@ -2,9 +2,11 @@ package graft.table
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, StructType}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructType}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Encoder, Encoders, Observation, Row, SparkSession}
 
 import scala.jdk.CollectionConverters._
 
@@ -16,14 +18,15 @@ import scala.jdk.CollectionConverters._
   * generalized to a durable commit log that makes the whole job resumable at
   * bucket granularity.
   */
-/** @param wall_ms AMORTIZED wall time: the single write+stats job covers all
-  *                pending buckets at once (that is the scale design), so its
-  *                wall clock is divided evenly across the buckets it
-  *                committed — every bucket of one run carries the same value,
-  *                and `sum(wall_ms)` over a run reconstructs the run's wall.
-  *                It is NOT a per-bucket commit-unit timing; per-bucket cost
-  *                attribution would need per-partition write metrics, which
-  *                the single-job protocol deliberately trades away.
+/** @param wall_ms AMORTIZED wall time: the single write job (which also
+  *                counts the stats) covers all pending buckets at once
+  *                (that is the scale design), so its wall clock is divided
+  *                evenly across the buckets it committed — every bucket of
+  *                one run carries the same value, and `sum(wall_ms)` over a
+  *                run reconstructs the run's wall. It is NOT a per-bucket
+  *                commit-unit timing; per-bucket cost attribution would need
+  *                per-partition write metrics, which the single-job protocol
+  *                deliberately trades away.
   */
 final case class BucketManifest(run_id: String, bucket: Int, row_count: Long,
                                 checksum: Long, wall_ms: Long, committed_at: Long)
@@ -35,9 +38,10 @@ final case class BucketManifest(run_id: String, bucket: Int, row_count: Long,
   *
   * Protocol: (1) ONE dynamic-partition-overwrite job rewrites the data
   * directories of every pending bucket (idempotent — committed buckets are
-  * filtered out and their directories untouched), (2) per-bucket stats are
-  * derived from the durably written files in one scan, (3) manifest rows are
-  * appended bucket-group by bucket-group. A crash anywhere before a bucket's
+  * filtered out and their directories untouched), (2) the same job counts
+  * each bucket's rows and checksum in the tasks that write its files, (3)
+  * manifest rows, each carrying the written data schema, are appended
+  * bucket-group by bucket-group. A crash anywhere before a bucket's
   * manifest append leaves that bucket uncommitted; resume simply rewrites it
   * — exactly-once content, at-least-once effort. Resume = anti-join of all
   * buckets against committed manifest rows (SURVEY.md §2.5's
@@ -45,11 +49,11 @@ final case class BucketManifest(run_id: String, bucket: Int, row_count: Long,
   *
   * Scale notes (100 TB): buckets are hash buckets over the key column, so
   * bucket count — not input size — bounds the commit-log size. The input is
-  * traversed a CONSTANT number of times regardless of bucket count (one
-  * write pass + one written-files stats pass): at 1,024 buckets over 100 TB
-  * this stays two scans, where a per-bucket job loop would re-scan the input
-  * ~1,000 times. `bucketsPerJob` only batches manifest appends (commit
-  * granularity vs commit-log write count).
+  * traversed ONCE regardless of bucket count (the write pass counts its own
+  * stats): at 1,024 buckets over 100 TB this stays one scan, where a
+  * per-bucket job loop would re-scan the input ~1,000 times. `bucketsPerJob`
+  * only batches manifest appends (commit granularity vs commit-log write
+  * count).
   *
   * All filesystem metadata access goes through Hadoop `FileSystem`, so the
   * layout works on any Spark-supported filesystem (HDFS/S3/local), not just
@@ -59,6 +63,11 @@ object Checkpoint {
 
   private val ManifestSchema = StructType.fromDDL("run_id string, bucket int, " +
     "row_count bigint, checksum bigint, wall_ms bigint, committed_at bigint")
+
+  /** A commit row: the manifest columns plus the written data schema's JSON
+    * (null on lines written before the schema was recorded).
+    */
+  private val CommitSchema = ManifestSchema.add("schema", StringType)
 
   private def hadoopConf(spark: Option[SparkSession]) =
     spark.map(_.sparkContext.hadoopConfiguration)
@@ -71,21 +80,21 @@ object Checkpoint {
 
   private val mapper = new ObjectMapper()
 
-  /** One commit-log line as a manifest row. A line is a commit only if it
+  /** One commit-log line as a commit row. A line is a commit only if it
     * parses to an object with an integer `bucket`: a torn or hand-edited
     * line must read as "not committed", never crash every later resume.
     * Other fields that are absent or mistyped read as null, as in Spark's
     * JSON source.
     */
-  private def manifestRow(line: String): Option[Row] = {
+  private def commitRow(line: String): Option[Row] = {
     val n = try mapper.readTree(line) catch { case _: java.io.IOException => null }
     if (n == null || !n.path("bucket").isInt) None
     else {
       def long(f: String): java.lang.Long =
         if (n.path(f).isIntegralNumber && n.path(f).canConvertToLong) n.path(f).asLong() else null
-      val runId = if (n.path("run_id").isTextual) n.path("run_id").asText() else null
-      Some(Row(runId, n.path("bucket").asInt(), long("row_count"), long("checksum"),
-        long("wall_ms"), long("committed_at")))
+      def text(f: String): String = if (n.path(f).isTextual) n.path(f).asText() else null
+      Some(Row(text("run_id"), n.path("bucket").asInt(), long("row_count"), long("checksum"),
+        long("wall_ms"), long("committed_at"), text("schema")))
     }
   }
 
@@ -97,10 +106,9 @@ object Checkpoint {
     * are never commits; that covers the `.tmp` of an append killed before
     * its rename. Tables whose manifests were committed by the earlier
     * parquet-append protocol stay readable: their `.parquet` commit files
-    * are read by Spark and unioned. Without one the frame is a local
-    * relation, so the collects of [[committedBuckets]] run no Spark job.
+    * are collected into the same rows (a Spark job, only for such tables).
     */
-  def manifests(spark: SparkSession, dir: String): DataFrame = {
+  private def commitRows(spark: SparkSession, dir: String): Seq[Row] = {
     val (fs, mdir) = fsOf(s"$dir/manifest", Some(spark))
     val files =
       if (!fs.exists(mdir)) Seq.empty[Path]
@@ -111,17 +119,23 @@ object Checkpoint {
       val in = new java.io.BufferedReader(new java.io.InputStreamReader(
         fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
       try Iterator.continually(in.readLine()).takeWhile(_ != null)
-        .filter(_.trim.nonEmpty).flatMap(manifestRow).toList
+        .filter(_.trim.nonEmpty).flatMap(commitRow).toList
       finally in.close()
     }
-    val local = spark.createDataFrame(rows.asJava, ManifestSchema)
     // pathGlobFilter: a migrated table holds BOTH formats in one directory,
     // and Spark's file listing filters only hidden files, not extensions
-    if (files.exists(_.getName.endsWith(".parquet")))
-      local.unionAll(spark.read.schema(ManifestSchema)
-        .option("pathGlobFilter", "*.parquet").parquet(s"$dir/manifest"))
-    else local
+    if (!files.exists(_.getName.endsWith(".parquet"))) rows
+    else rows ++ spark.read.schema(ManifestSchema)
+      .option("pathGlobFilter", "*.parquet").parquet(s"$dir/manifest")
+      .collect().map(r => Row.fromSeq(r.toSeq :+ null))
   }
+
+  /** The commit log as a local relation of the six manifest columns, so
+    * collecting it runs no Spark job.
+    */
+  def manifests(spark: SparkSession, dir: String): DataFrame =
+    spark.createDataFrame(commitRows(spark, dir).map(r => Row.fromSeq(r.toSeq.init)).asJava,
+      ManifestSchema)
 
   /** Crash-atomic append: write to a hidden .tmp path, sync (where the
     * filesystem supports it), then rename — a kill mid-write leaves only a
@@ -131,21 +145,24 @@ object Checkpoint {
     * local FS treats it as a flush). Rename is atomic on HDFS/local; on S3
     * it is copy+delete — there, pair this layout with an S3-committer-style
     * conditional put, exactly as real table formats do.
+    *
+    * @param schema JSON of the written data schema, recorded on every line
     */
   private def appendManifest(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                             rows: Seq[BucketManifest]): Unit = {
+                             rows: Seq[BucketManifest], schema: Option[String]): Unit = {
     val name = s"commit-${java.util.UUID.randomUUID()}.json"
     val tmp = new Path(s"$dir/manifest/.$name.tmp")
     val fin = new Path(s"$dir/manifest/$name")
     val out = fs.create(tmp, false)
     try {
       rows.foreach { r =>
-        // run_id is caller-controlled: escape the JSON string minimally
-        val rid = r.run_id.replace("\\", "\\\\").replace("\"", "\\\"")
-        out.write((s"""{"run_id":"$rid","bucket":${r.bucket},""" +
-          s""""row_count":${r.row_count},"checksum":${r.checksum},""" +
-          s""""wall_ms":${r.wall_ms},"committed_at":${r.committed_at}}""" + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        // Jackson escapes every character a caller-chosen run_id may hold
+        val line = mapper.createObjectNode().put("run_id", r.run_id).put("bucket", r.bucket)
+          .put("row_count", r.row_count).put("checksum", r.checksum)
+          .put("wall_ms", r.wall_ms).put("committed_at", r.committed_at)
+        schema.foreach(line.put("schema", _))
+        out.write(mapper.writeValueAsBytes(line))
+        out.write('\n')
       }
       try out.hsync() catch { case _: UnsupportedOperationException => () }
     } finally out.close()
@@ -165,10 +182,95 @@ object Checkpoint {
       }
   }
 
-  def committedBuckets(spark: SparkSession, dir: String): Set[Int] = {
-    import spark.implicits._
-    // na.drop: a legacy parquet manifest row without a bucket is not a commit
-    manifests(spark, dir).select("bucket").na.drop().as[Int].collect().toSet
+  /** Commit `buckets` as manifest rows of `runId`, `perFile` rows per
+    * commit file; a bucket without stats commits as `(0, 0)`.
+    *
+    * @param failBefore if >= 0, throw before committing the given bucket
+    *                   ordinal (the kill/resume test hook)
+    */
+  private def commit(spark: SparkSession, dir: String, runId: String, buckets: Seq[Int],
+                     stats: Map[Int, (Long, Long)], wallMs: Long, perFile: Int,
+                     schema: Option[StructType], failBefore: Int = -1): Seq[BucketManifest] = {
+    val (mfs, _) = fsOf(s"$dir/manifest", Some(spark))
+    cleanTmpManifests(mfs, dir)
+    val out = Seq.newBuilder[BucketManifest]
+    var ordinal = 0
+    buckets.grouped(math.max(1, perFile)).foreach { group =>
+      if (failBefore >= 0 && ordinal >= failBefore)
+        throw new InjectedFailure(ordinal)
+      val rows = group.map { b =>
+        val (n, c) = stats.getOrElse(b, (0L, 0L))
+        BucketManifest(runId, b, n, c, wallMs, System.currentTimeMillis())
+      }
+      appendManifest(mfs, dir, rows, schema.map(_.json))
+      out ++= rows
+      ordinal += group.size
+    }
+    out.result()
+  }
+
+  def committedBuckets(spark: SparkSession, dir: String): Set[Int] =
+    // a legacy parquet manifest row without a bucket is not a commit
+    commitRows(spark, dir).filterNot(_.isNullAt(1)).map(_.getInt(1)).toSet
+
+  /** Rows of every commit of the table, summed from the commit log on the
+    * driver (rows without a `row_count` add nothing).
+    */
+  def committedRowCount(spark: SparkSession, dir: String): Long =
+    commitRows(spark, dir).filterNot(_.isNullAt(2)).map(_.getLong(2)).sum
+
+  /** Per-bucket row count and checksum over `[0, nBuckets)` buckets. The
+    * buffer is `(count, checksum)` pairs indexed by bucket, so each row
+    * costs O(1) whatever the bucket count.
+    */
+  private final class BucketStats(nBuckets: Int)
+      extends Aggregator[(Int, Long), Array[Long], Array[Long]] {
+    override def zero: Array[Long] = new Array[Long](2 * nBuckets)
+    override def reduce(b: Array[Long], r: (Int, Long)): Array[Long] = {
+      b(2 * r._1) += 1
+      b(2 * r._1 + 1) += r._2
+      b
+    }
+    override def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
+      var i = 0
+      while (i < x.length) { x(i) += y(i); i += 1 }
+      x
+    }
+    override def finish(b: Array[Long]): Array[Long] = b
+    override def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+    override def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder[Array[Long]]()
+  }
+
+  /** Run `write` on a writer of `routed` — a frame already repartitioned so
+    * that each write task holds rows of one bucket — partitioned by
+    * `partitionCols`, and return the `(row_count, checksum)` of every bucket
+    * it wrote rows to: the count of rows and the sum of
+    * `xxhash64(struct(data columns by name)) & 0xFFFFFFFF`, an
+    * order-insensitive checksum whose mask keeps the sum far from Long
+    * overflow. The data columns are all but `partitionCols`.
+    *
+    * The stats are observed AFTER the routing exchange, so the tasks that
+    * count them are the result tasks that write and commit the files, and
+    * they count exactly the rows those files hold. Spark merges a result
+    * task's accumulators once, from its first successful attempt; map-stage
+    * tasks re-run on a fetch failure, so counting there could count twice.
+    * The values equal a recomputation over the written files (pinned by
+    * `CheckpointSpec`), without reading them back.
+    */
+  private def countedWrite(routed: DataFrame, nBuckets: Int, partitionCols: String*)(
+      write: DataFrameWriter[Row] => Unit): Map[Int, (Long, Long)] = {
+    val dataCols = routed.columns.filterNot(partitionCols.contains).sorted
+    val stats = udaf(new BucketStats(nBuckets),
+      Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong))
+    val observation = Observation()
+    write(routed.observe(observation, stats(col("__bucket"),
+      xxhash64(struct(dataCols.map(col).toIndexedSeq: _*)).bitwiseAND(lit(0xFFFFFFFFL)))
+      .as("stats")).write.partitionBy(partitionCols: _*))
+    val counted = Option(observation.get("stats"))
+      .map(_.asInstanceOf[scala.collection.Seq[Long]]).getOrElse(Seq.empty)
+    counted.grouped(2).zipWithIndex.collect {
+      case (Seq(n, c), b) if n > 0 => b -> ((n, c))
+    }.toMap
   }
 
   /** Deliberate mid-run crash for resume tests (fires between the data write
@@ -201,99 +303,73 @@ object Checkpoint {
                      dir: String, runId: String, bucketsPerJob: Int = 1,
                      failBeforeBucket: Int = -1): Seq[BucketManifest] = {
     val spark = df.sparkSession
-    import spark.implicits._
     val done = committedBuckets(spark, dir)
     val pendingBuckets = (0 until nBuckets).filterNot(done)
     if (pendingBuckets.isEmpty) return Seq.empty
 
     val t0 = System.nanoTime()
-    val bucketed = df.withColumn("__bucket",
-      pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets)).cast("int"))
     // ONE job for every pending bucket: dynamic partition overwrite replaces
     // exactly the touched bucket directories. Input is scanned once however
     // many buckets are pending (the per-bucket-loop alternative re-scans the
     // full input once per bucket group — a scale-killer at high bucket
-    // counts). The repartition aligns tasks with bucket directories: without
-    // it every map task writes one file per bucket it sees (tasks × buckets
-    // small files — 1M files at 1,000 executors × 1,024 buckets, and wall
-    // time grows with bucket count, not data size). When buckets < cores, a
-    // within-bucket sub-hash spreads each bucket over ~shufflePartitions /
-    // buckets tasks so write parallelism stays full; file count stays
-    // ~max(buckets, shuffle partitions) in every regime.
-    val filtered = bucketed.filter(col("__bucket").isin(pendingBuckets: _*))
+    // counts). Each write task gets the rows of exactly one bucket: its id is
+    // the bucket's ordinal among the pending buckets, so no two buckets share
+    // a task and no task is left empty by a hash collision. Without the
+    // routing every map task writes one file per bucket it sees (tasks ×
+    // buckets small files — 1M files at 1,000 executors × 1,024 buckets, and
+    // wall time grows with bucket count, not data size). When buckets <
+    // cores, a sub-hash lane (murmur3, independent of the xxhash64 bucket)
+    // spreads each bucket over `spread` tasks so write parallelism stays
+    // full: pending × spread files, ~max(buckets, shuffle partitions).
     val shufflePar = spark.sessionState.conf.numShufflePartitions
-    val spread = math.max(1, shufflePar / math.max(1, pendingBuckets.size))
-    val parted =
-      if (spread == 1) filtered.repartition(pendingBuckets.size, col("__bucket"))
-      else filtered.repartition(pendingBuckets.size * spread, col("__bucket"),
-        pmod(xxhash64(keyCols.map(col): _*), lit(spread)))
-    parted.write.mode("overwrite")
+    val spread = math.max(1, shufflePar / pendingBuckets.size)
+    val ordinal = Array.fill(nBuckets)(-1)
+    pendingBuckets.zipWithIndex.foreach { case (b, i) => ordinal(b) = i }
+    val lane = if (spread == 1) lit(0) else pmod(hash(keyCols.map(col): _*), lit(spread))
+    val routed = df
+      .withColumn("__bucket", pmod(xxhash64(keyCols.map(col): _*), lit(nBuckets)).cast("int"))
+      .filter(col("__bucket").isin(pendingBuckets: _*))
+      .repartitionById(pendingBuckets.size * spread,
+        element_at(typedLit(ordinal.toSeq), col("__bucket") + 1) * spread + lane)
+    val stats = countedWrite(routed, nBuckets, "__bucket")(_.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("__bucket")
-      .parquet(s"$dir/data")
-
-    // stats from the durably written files (validates what is on disk, not
-    // what the upstream plan produced): row count + an order-insensitive
-    // checksum (sum of masked xxhash64 — mask keeps the ANSI-mode sum far
-    // from Long overflow). Explicit schema: with zero rows written (empty
-    // pending buckets on tiny inputs) there are no files to infer from.
-    val (fs, dataPath) = fsOf(s"$dir/data", Some(spark))
-    val stats: Map[Int, (Long, Long)] =
-      if (!fs.exists(dataPath)) Map.empty
-      else {
-        val written = spark.read
-          .schema(org.apache.spark.sql.types.StructType(
-            df.schema.fields :+
-              org.apache.spark.sql.types.StructField("__bucket", IntegerType)))
-          .parquet(s"$dir/data")
-          .where(col("__bucket").isin(pendingBuckets: _*))
-        val dataCols = written.columns.filterNot(_ == "__bucket").sorted
-        written.groupBy("__bucket")
-          .agg(count(lit(1)).as("n"),
-            coalesce(sum(xxhash64(struct(dataCols.map(col).toIndexedSeq: _*))
-              .bitwiseAND(lit(0xFFFFFFFFL))), lit(0L)).as("c"))
-          .as[(Int, Long, Long)].collect()
-          .map { case (b, n, c) => b -> ((n, c)) }.toMap
-      }
+      .parquet(s"$dir/data"))
     // write + stats effort amortized over the buckets it covered
     val wallMs = ((System.nanoTime() - t0) / 1000000) / pendingBuckets.size
 
     // durable commits: manifest rows appended only after the data write,
     // bucket-group by bucket-group (bucketsPerJob trades commit granularity
     // against commit-log file count). Appends are direct FileSystem writes,
-    // never Spark jobs — see [[manifests]].
-    val (mfs, _) = fsOf(s"$dir/manifest", Some(spark))
-    cleanTmpManifests(mfs, dir)
-    val out = Seq.newBuilder[BucketManifest]
-    var ordinal = 0
-    pendingBuckets.grouped(math.max(1, bucketsPerJob)).foreach { group =>
-      if (failBeforeBucket >= 0 && ordinal >= failBeforeBucket)
-        throw new InjectedFailure(ordinal)
-      val rows: Seq[BucketManifest] = group.map { b =>
-        val (n, c) = stats.getOrElse(b, (0L, 0L))
-        BucketManifest(runId, b, n, c, wallMs, System.currentTimeMillis())
-      }
-      appendManifest(mfs, dir, rows)
-      out ++= rows
-      ordinal += group.size
-    }
-    out.result()
+    // never Spark jobs — see [[commitRows]].
+    commit(spark, dir, runId, pendingBuckets, stats, wallMs, bucketsPerJob,
+      Some(df.schema), failBeforeBucket)
   }
 
   /** Read the committed table back. Snapshot-consistent: only buckets with a
     * manifest row are visible (data written by a crashed run without its
     * manifest commit is invisible until resume rewrites it) — partition
-    * pruning on `__bucket` keeps the filter scan-level.
+    * pruning on `__bucket` keeps the filter scan-level. The scan uses the
+    * data schema recorded with the newest commit, so no Spark job runs
+    * before an action and a table whose committed buckets are all empty
+    * still reads with its columns; only a table with commit lines written
+    * before the schema was recorded infers it from the Parquet footers.
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val committed = committedBuckets(spark, dir).toSeq
+    val commits = commitRows(spark, dir).filterNot(_.isNullAt(1))
     // a run killed before ANY commit leaves no data/ at all — the snapshot
     // contract says "empty", not AnalysisException
     val (fs, dataPath) = fsOf(s"$dir/data", Some(spark))
-    if (committed.isEmpty || !fs.exists(dataPath))
+    if (commits.isEmpty || !fs.exists(dataPath))
       return spark.emptyDataFrame
-    spark.read.parquet(s"$dir/data")
-      .where(col("__bucket").isin(committed: _*))
+    val reader =
+      if (commits.exists(_.isNullAt(6))) spark.read
+      else {
+        val newest = commits.maxBy(r => if (r.isNullAt(5)) Long.MinValue else r.getLong(5))
+        spark.read.schema(DataType.fromJson(newest.getString(6)).asInstanceOf[StructType]
+          .add("__bucket", IntegerType))
+      }
+    reader.parquet(s"$dir/data")
+      .where(col("__bucket").isin(commits.map(_.getInt(1)).distinct: _*))
       .drop("__bucket")
   }
 
@@ -331,46 +407,25 @@ object Checkpoint {
                            nBuckets: Int, dir: String, sub: String,
                            runId: String,
                            bucketsPerJob: Int): Seq[BucketManifest] = {
-    val spark = df.sparkSession
-    import spark.implicits._
     require(!runId.contains("=") && !runId.contains("/"), s"bad runId: $runId")
     val t0 = System.nanoTime()
-    val bucketed = df
+    val stats = appendRun(df
       .withColumn("__bucket", pmod(bucketOf.cast("long"), lit(nBuckets)).cast("int"))
-      .withColumn("__run", lit(runId))
-    bucketed.repartition(nBuckets, col("__bucket"))
-      .write.mode("append")
-      .partitionBy("__run", "__bucket")
-      .parquet(s"$dir/$sub")
-    // stats from the durably written run tree (same contract as
-    // writeResumable: validate disk, not the upstream plan)
-    val written = spark.read
-      .schema(org.apache.spark.sql.types.StructType(
-        df.schema.fields :+
-          org.apache.spark.sql.types.StructField("__bucket", IntegerType)))
-      .parquet(s"$dir/$sub/__run=$runId")
-    val dataCols = written.columns.filterNot(_ == "__bucket").sorted
-    val stats = written.groupBy("__bucket")
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(xxhash64(struct(dataCols.map(col).toIndexedSeq: _*))
-          .bitwiseAND(lit(0xFFFFFFFFL))), lit(0L)).as("c"))
-      .as[(Int, Long, Long)].collect()
-      .map { case (b, n, c) => b -> ((n, c)) }.toMap
+      .withColumn("__run", lit(runId)), nBuckets, s"$dir/$sub")
     val wallMs = ((System.nanoTime() - t0) / 1000000) /
       math.max(1, stats.size)
-    val (mfs, _) = fsOf(s"$dir/manifest", Some(spark))
-    cleanTmpManifests(mfs, dir)
-    val out = Seq.newBuilder[BucketManifest]
-    stats.keys.toSeq.sorted.grouped(math.max(1, bucketsPerJob)).foreach { g =>
-      val rows = g.map { b =>
-        val (n, c) = stats(b)
-        BucketManifest(runId, b, n, c, wallMs, System.currentTimeMillis())
-      }
-      appendManifest(mfs, dir, rows)
-      out ++= rows
-    }
-    out.result()
+    commit(df.sparkSession, dir, runId, stats.keys.toSeq.sorted, stats, wallMs,
+      bucketsPerJob, Some(df.schema))
   }
+
+  /** Append `frame` — rows with `__run` and a `__bucket` in `[0, nBuckets)`
+    * — as a run tree under `path`, bucket `b` written by task `b`, and
+    * return the [[countedWrite]] stats of the buckets it holds rows for.
+    */
+  private def appendRun(frame: DataFrame, nBuckets: Int,
+                        path: String): Map[Int, (Long, Long)] =
+    countedWrite(frame.repartitionById(nBuckets, col("__bucket")), nBuckets, "__run", "__bucket")(
+      _.mode("append").parquet(path))
 
   /** Time-travel read: the table AS OF the last run in `runOrder`. For each
     * bucket the newest run in `runOrder` (caller-supplied commit order —
@@ -431,9 +486,9 @@ object Checkpoint {
     * policy decision, exactly as in Iceberg's `expire_snapshots`).
     *
     * Integrity is part of the protocol, not a hope: the rewritten run's
-    * per-bucket `(row_count, checksum)` — computed from the durably written
-    * files, the engine-wide validate-disk-not-plan contract — must equal
-    * the winning manifests' values; any difference throws
+    * per-bucket `(row_count, checksum)` — counted by the tasks that write
+    * its files, over exactly the rows they wrote — must equal the winning
+    * manifests' values; any difference throws
     * [[CompactionIntegrityViolation]] BEFORE the manifest commit, leaving
     * the store exactly as it was (the half-written run tree is invisible:
     * no manifest row ⇒ no reader lists it — the same crash-atomicity
@@ -464,45 +519,33 @@ object Checkpoint {
         val w = rs.maxBy(r => idx(r._1))
         b -> ((w._1, w._3, w._4))
       }
-    val pred = winner.toSeq.groupBy(_._2._1).map { case (r, bs) =>
+    rewriteChecked(spark, dir, runId, winner, "winning", t0)
+  }
+
+  /** Rewrite the partitions `want` names (bucket → (run, row_count,
+    * checksum)) as the new run `runId`, then commit them — but only if each
+    * bucket's counted stats equal the ones in `want`; any difference throws
+    * [[CompactionIntegrityViolation]] before anything commits.
+    */
+  private def rewriteChecked(spark: SparkSession, dir: String, runId: String,
+                             want: Map[Int, (String, Long, Long)], source: String,
+                             t0: Long): Seq[BucketManifest] = {
+    val pred = want.toSeq.groupBy(_._2._1).map { case (r, bs) =>
       col("__run") === lit(r) && col("__bucket").isin(bs.map(_._1): _*)
     }.reduce(_ || _)
-    val nBuckets = winner.keys.max + 1
-    spark.read.parquet(s"$dir/data").where(pred).drop("__run")
-      .withColumn("__run", lit(runId))
-      .repartition(nBuckets, col("__bucket"))
-      .write.mode("append")
-      .partitionBy("__run", "__bucket")
-      .parquet(s"$dir/data")
-    val written = spark.read.parquet(s"$dir/data/__run=$runId")
-    val dataCols = written.columns.filterNot(_ == "__bucket").sorted
-    val stats = written.groupBy("__bucket")
-      .agg(count(lit(1)).as("n"),
-        coalesce(sum(xxhash64(struct(dataCols.map(col).toIndexedSeq: _*))
-          .bitwiseAND(lit(0xFFFFFFFFL))), lit(0L)).as("c"))
-      .as[(Int, Long, Long)].collect()
-      .map { case (b, n, c) => b -> ((n, c)) }.toMap
-    winner.foreach { case (b, (_, n, c)) =>
+    val winners = spark.read.parquet(s"$dir/data").where(pred)
+    val stats = appendRun(winners.drop("__run").withColumn("__run", lit(runId)),
+      want.keys.max + 1, s"$dir/data")
+    want.foreach { case (b, (_, n, c)) =>
       val (wn, wc) = stats.getOrElse(b, (0L, 0L))
       if (wn != n || wc != c)
         throw new CompactionIntegrityViolation(
           s"bucket $b rewrote to (rows=$wn, checksum=$wc) " +
-            s"but the winning manifest says (rows=$n, checksum=$c)")
+            s"but the $source manifest says (rows=$n, checksum=$c)")
     }
-    val wallMs = ((System.nanoTime() - t0) / 1000000) /
-      math.max(1, winner.size)
-    val (mfs, _) = fsOf(s"$dir/manifest", Some(spark))
-    cleanTmpManifests(mfs, dir)
-    val out = Seq.newBuilder[BucketManifest]
-    winner.keys.toSeq.sorted.grouped(64).foreach { g =>
-      val rows = g.map { b =>
-        val (n, c) = stats(b)
-        BucketManifest(runId, b, n, c, wallMs, System.currentTimeMillis())
-      }
-      appendManifest(mfs, dir, rows)
-      out ++= rows
-    }
-    out.result()
+    val wallMs = ((System.nanoTime() - t0) / 1000000) / want.size
+    commit(spark, dir, runId, want.keys.toSeq.sorted, stats, wallMs, 64,
+      Some(winners.drop("__run", "__bucket").schema))
   }
 
   /** Incremental read between two snapshot lineages — the CDC view of the
@@ -556,8 +599,8 @@ object Checkpoint {
     * `readAt(targetOrder)` bucket-for-bucket.
     *
     * Integrity mirrors [[compactVersioned]]: the rewritten buckets'
-    * per-bucket (row_count, checksum) from the durably written files must
-    * equal the TARGET winners' manifest values before anything commits —
+    * per-bucket (row_count, checksum), counted by the tasks that write them,
+    * must equal the TARGET winners' manifest values before anything commits —
     * a mismatch throws and leaves the store untouched (the orphan run tree
     * is invisible without manifest rows).
     *
@@ -590,57 +633,12 @@ object Checkpoint {
       !cur.get(b).exists(_._1 == run)
     }
     val tombstone = (cur.keySet -- tgt.keySet).toSeq.sorted
-    val (mfs, _) = fsOf(s"$dir/manifest", Some(spark))
-    cleanTmpManifests(mfs, dir)
-    val out = Seq.newBuilder[BucketManifest]
-    if (rewrite.nonEmpty) {
-      val pred = rewrite.toSeq.groupBy(_._2._1).map { case (r, bs) =>
-        col("__run") === lit(r) && col("__bucket").isin(bs.map(_._1): _*)
-      }.reduce(_ || _)
-      val nBuckets = rewrite.keys.max + 1
-      spark.read.parquet(s"$dir/data").where(pred).drop("__run")
-        .withColumn("__run", lit(runId))
-        .repartition(nBuckets, col("__bucket"))
-        .write.mode("append")
-        .partitionBy("__run", "__bucket")
-        .parquet(s"$dir/data")
-      val written = spark.read.parquet(s"$dir/data/__run=$runId")
-      val dataCols = written.columns.filterNot(_ == "__bucket").sorted
-      val stats = written.groupBy("__bucket")
-        .agg(count(lit(1)).as("n"),
-          coalesce(sum(xxhash64(struct(dataCols.map(col).toIndexedSeq: _*))
-            .bitwiseAND(lit(0xFFFFFFFFL))), lit(0L)).as("c"))
-        .as[(Int, Long, Long)].collect()
-        .map { case (b, n, c) => b -> ((n, c)) }.toMap
-      rewrite.foreach { case (b, (_, n, c)) =>
-        val (wn, wc) = stats.getOrElse(b, (0L, 0L))
-        if (wn != n || wc != c)
-          throw new CompactionIntegrityViolation(
-            s"restore bucket $b rewrote to (rows=$wn, checksum=$wc) " +
-              s"but the target manifest says (rows=$n, checksum=$c)")
-      }
-      val wallMs = ((System.nanoTime() - t0) / 1000000) /
-        math.max(1, rewrite.size)
-      rewrite.keys.toSeq.sorted.grouped(64).foreach { g =>
-        val rows = g.map { b =>
-          val (n, c) = stats(b)
-          BucketManifest(runId, b, n, c, wallMs, System.currentTimeMillis())
-        }
-        appendManifest(mfs, dir, rows)
-        out ++= rows
-      }
-    }
-    if (tombstone.nonEmpty) {
-      // no data files: a zero-row manifest makes the restore run the
-      // bucket's winner, and the partition-pruned scan reads nothing
-      tombstone.grouped(64).foreach { g =>
-        val rows = g.map(b =>
-          BucketManifest(runId, b, 0L, 0L, 0L, System.currentTimeMillis()))
-        appendManifest(mfs, dir, rows)
-        out ++= rows
-      }
-    }
-    out.result()
+    val restored =
+      if (rewrite.isEmpty) Seq.empty
+      else rewriteChecked(spark, dir, runId, rewrite, "target", t0)
+    // no data files: a zero-row manifest makes the restore run the bucket's
+    // winner, and the partition-pruned scan reads nothing
+    restored ++ commit(spark, dir, runId, tombstone, Map.empty, 0L, 64, None)
   }
 
   /** AS OF TIMESTAMP read — Iceberg's `FOR TIMESTAMP AS OF` on the
@@ -821,13 +819,13 @@ object Checkpoint {
   def vacuumVersioned(spark: SparkSession, dir: String,
                       retain: Seq[Seq[String]]): VacuumStats = {
     require(retain.nonEmpty, "vacuum must retain at least one lineage")
-    import spark.implicits._
-    val all = manifests(spark, dir).distinct()
-      .as[BucketManifest].collect()
+    // each row with the data schema recorded beside it, which survives
+    val all = commitRows(spark, dir).distinct.map(r => (BucketManifest(r.getString(0),
+      r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)), Option(r.getString(6))))
     val live = scala.collection.mutable.Set.empty[(String, Int)]
     retain.foreach { lineage =>
       val idx = lineage.zipWithIndex.toMap
-      all.filter(r => idx.contains(r.run_id)).groupBy(_.bucket)
+      all.map(_._1).filter(r => idx.contains(r.run_id)).groupBy(_.bucket)
         .foreach { case (b, rs) =>
           live += ((rs.maxBy(r => idx(r.run_id)).run_id, b))
         }
@@ -851,7 +849,7 @@ object Checkpoint {
     }
     // log compaction: append the surviving rows first, then drop the old
     // commit files (the crash window only duplicates rows — see scaladoc)
-    val liveRows = all.filter(r => live.contains((r.run_id, r.bucket)))
+    val liveRows = all.filter { case (r, _) => live.contains((r.run_id, r.bucket)) }
     val (mfs, mdir) = fsOf(s"$dir/manifest", Some(spark))
     cleanTmpManifests(mfs, dir)
     val old =
@@ -859,7 +857,9 @@ object Checkpoint {
         mfs.listStatus(mdir).map(_.getPath)
           .filterNot(_.getName.startsWith("."))
       else Array.empty[Path]
-    liveRows.grouped(64).foreach(g => appendManifest(mfs, dir, g.toSeq))
+    liveRows.groupBy(_._2).foreach { case (schema, rs) =>
+      rs.map(_._1).grouped(64).foreach(g => appendManifest(mfs, dir, g, schema))
+    }
     old.foreach(p => mfs.delete(p, true): Unit)
     VacuumStats(live.size, deleted, liveRows.length)
   }

@@ -1,15 +1,21 @@
 package graft
 
 import graft.table.Checkpoint
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.{Signaler, ThreadSignaler, TimeLimits}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
+
+import scala.jdk.CollectionConverters._
 
 /** Kill/resume semantics of the per-bucket checkpointed write (north rule:
   * partition-granular resume with lineage + row-count metrics).
   */
-class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
+class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits {
 
   private lazy val spark = SparkSession.builder()
     .master("local[4]")
@@ -155,19 +161,172 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("checksum detects content drift between manifest and recomputation") {
     import spark.implicits._
+    // the per-bucket stats over the files on disk, as the writers computed
+    // them before they counted inside the write
+    def recompute(path: String): Map[Int, (Long, Long)] = {
+      val again = spark.read.parquet(path)
+      val dataCols = again.columns.filterNot(_ == "__bucket").sorted
+      again.groupBy("__bucket")
+        .agg(count(lit(1)).as("n"),
+          sum(xxhash64(struct(dataCols.map(col): _*)).bitwiseAND(lit(0xFFFFFFFFL))).as("c"))
+        .as[(Int, Long, Long)].collect().map { case (b, n, c) => (b, (n, c)) }.toMap
+    }
+    def committed(dir: String, run: String): Map[Int, (Long, Long)] =
+      Checkpoint.manifests(spark, dir).filter(col("run_id") === run)
+        .select("bucket", "row_count", "checksum").as[(Int, Long, Long)]
+        .collect().map { case (b, n, c) => (b, (n, c)) }.toMap
+    // a bucket committed without files (a restore tombstone) holds (0, 0)
+    def assertMatches(dir: String, run: String, path: String): Unit = {
+      val m = committed(dir, run)
+      val re = recompute(path)
+      assert(m.nonEmpty && re.keySet.subsetOf(m.keySet), s"run $run: $m vs $re")
+      m.foreach { case (b, nc) => assert(re.getOrElse(b, (0L, 0L)) == nc, s"run $run bucket $b") }
+    }
+
     val dir = freshDir("checksum")
     Checkpoint.writeResumable(sampleDf, Seq("k"), 4, dir, "c")
-    val m = Checkpoint.manifests(spark, dir)
-      .select("bucket", "row_count", "checksum").as[(Int, Long, Long)]
-      .collect().map { case (b, n, c) => (b, (n, c)) }.toMap
     // recompute from the stored table: must agree bucket by bucket
-    val again = spark.read.parquet(s"$dir/data")
-    val dataCols = again.columns.filterNot(_ == "__bucket").sorted
-    val re = again.groupBy("__bucket")
-      .agg(count(lit(1)).as("n"),
-        sum(xxhash64(struct(dataCols.map(col): _*)).bitwiseAND(lit(0xFFFFFFFFL))).as("c"))
-      .as[(Int, Long, Long)].collect().map { case (b, n, c) => (b, (n, c)) }.toMap
-    assert(re == m)
+    assert(recompute(s"$dir/data") == committed(dir, "c"))
+
+    val vdir = freshDir("checksum_versioned")
+    val base = sampleDf.withColumn("d", col("k") * 0.5)
+    Checkpoint.writeVersioned(base, col("k") % 8, 8, vdir, "r1")
+    Checkpoint.writeVersioned(base.filter(col("k") % 8 < 3).withColumn("s", upper(col("s"))),
+      col("k") % 8, 8, vdir, "r2")
+    Checkpoint.compactVersioned(spark, vdir, Seq("r1", "r2"), "c1")
+    Checkpoint.writeVersioned(base.filter(col("k") % 8 === 7), col("k") % 8, 8, vdir, "r3")
+    Checkpoint.restoreVersioned(spark, vdir, Seq("r1", "r2", "c1", "r3"), Seq("r1"), "x1")
+    for (run <- Seq("r1", "r2", "c1", "r3", "x1"))
+      assertMatches(vdir, run, s"$vdir/data/__run=$run")
+  }
+
+  test("in-write stats: empty, filtered-to-empty and sparse inputs commit promptly") {
+    import spark.implicits._
+    implicit val signaler: Signaler = ThreadSignaler
+    def stats(dir: String) = Checkpoint.manifests(spark, dir)
+      .select("bucket", "row_count", "checksum").as[(Int, Long, Long)].collect().sorted.toSeq
+    failAfter(Span(120, Seconds)) {
+      val empty = freshDir("empty_in")
+      Checkpoint.writeResumable(
+        spark.createDataFrame(new java.util.ArrayList[Row](), sampleDf.schema), Seq("k"), 4, empty, "e")
+      assert(stats(empty) == (0 until 4).map(b => (b, 0L, 0L)))
+      val filtered = freshDir("filtered_in")
+      Checkpoint.writeResumable(sampleDf.filter(col("k") < 0), Seq("k"), 4, filtered, "f")
+      assert(stats(filtered) == (0 until 4).map(b => (b, 0L, 0L)))
+      // 3 rows over 8 buckets: at least 5 buckets commit (0, 0)
+      val sparse = freshDir("sparse_in")
+      val three = Seq((1L, "a", 1L), (2L, "b", 2L), (3L, "c", 3L)).toDF("k", "s", "g")
+      Checkpoint.writeResumable(three, Seq("k"), 8, sparse, "s")
+      val got = stats(sparse)
+      assert(got.map(_._1) == (0 until 8) && got.map(_._2).sum == 3L)
+      assert(got.count(_._2 == 0L) >= 5 && got.filter(_._2 == 0L).forall(_._3 == 0L))
+      val back = spark.read.parquet(s"$sparse/data")
+      val dataCols = back.columns.filterNot(_ == "__bucket").sorted
+      val re = back.groupBy("__bucket")
+        .agg(count(lit(1)).as("n"),
+          sum(xxhash64(struct(dataCols.map(col): _*)).bitwiseAND(lit(0xFFFFFFFFL))).as("c"))
+        .as[(Int, Long, Long)].collect().sorted.toSeq
+      assert(got.filter(_._2 > 0) == re)
+    }
+  }
+
+  test("writeVersioned of an empty input commits nothing") {
+    val dir = freshDir("empty_versioned")
+    assert(Checkpoint.writeVersioned(sampleDf.filter(col("k") < 0), col("k") % 4, 4, dir, "v")
+      .isEmpty)
+    assert(Checkpoint.manifests(spark, dir).isEmpty)
+    assert(Checkpoint.readAt(spark, dir, Seq("v")).isEmpty)
+  }
+
+  test("bucketed write: each pending bucket goes to its own write tasks, none of them empty") {
+    val shufflePar = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // (buckets, spread): spread = shuffle partitions / pending buckets
+    for ((nBuckets, spread) <- Seq((8, 1), (2, shufflePar / 2))) {
+      val dir = freshDir(s"route$nBuckets")
+      val (_, ev) = Listened(spark.sparkContext) {
+        Checkpoint.writeResumable(sampleDf, Seq("k"), nBuckets, dir, "r")
+      }
+      assertRouted(ev, nBuckets * spread, dir, (0 until nBuckets).map(_ -> spread))
+    }
+    // a resume routes by ordinal among the pending buckets only
+    val dir = freshDir("route_resume")
+    intercept[Checkpoint.InjectedFailure] {
+      Checkpoint.writeResumable(sampleDf, Seq("k"), 8, dir, "r1", failBeforeBucket = 3)
+    }
+    val pending = (0 until 8).toSet -- Checkpoint.committedBuckets(spark, dir)
+    val (_, ev) = Listened(spark.sparkContext) {
+      Checkpoint.writeResumable(sampleDf, Seq("k"), 8, dir, "r2")
+    }
+    assertRouted(ev, pending.size, dir, (0 until 8).map(_ -> 1))
+    assert(Checkpoint.read(spark, dir).count() == 5000)
+  }
+
+  /** The write stage (the one stage whose tasks write output records) ran
+    * `tasks` tasks, none of which read zero records, and every
+    * `__bucket=N` directory holds the given number of data files.
+    */
+  private def assertRouted(ev: Listened, tasks: Int, dir: String,
+                           filesPerBucket: Seq[(Int, Int)]): Unit = {
+    val writing = ev.tasks.groupBy(_.stageId)
+      .filter(_._2.exists(_.taskMetrics.outputMetrics.recordsWritten > 0))
+    assert(writing.size == 1, s"stages writing output: ${writing.keys}")
+    val write = writing.values.head
+    assert(write.size == tasks, s"${write.size} write tasks, expected $tasks")
+    assert(write.forall(recordsRead(_) > 0),
+      s"write tasks reading no records: ${write.count(recordsRead(_) == 0)} of ${write.size}")
+    filesPerBucket.foreach { case (b, n) =>
+      val files = new java.io.File(s"$dir/data/__bucket=$b").listFiles()
+        .count(_.getName.endsWith(".parquet"))
+      assert(files == n, s"bucket $b holds $files files, expected $n")
+    }
+  }
+
+  private def recordsRead(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Long =
+    e.taskMetrics.shuffleReadMetrics.recordsRead
+
+  test("commit log: run ids that need JSON escaping commit and read back equal") {
+    import spark.implicits._
+    val df = sampleDf.limit(200)
+    val ids = Seq("nightly\nrun", "tab\there", "ctl\u0001\u001fx", "quote\"d\\",
+      "na\u00efve-\u65e5\u672c-\ud83d\uddfb")
+    ids.zipWithIndex.foreach { case (id, i) =>
+      val dir = freshDir(s"runid$i")
+      assert(Checkpoint.writeResumable(df, Seq("k"), 4, dir, id).size == 4)
+      assert(Checkpoint.committedBuckets(spark, dir) == (0 until 4).toSet, s"run id $id")
+      assert(Checkpoint.manifests(spark, dir).select("run_id").as[String].collect().toSeq ==
+        Seq.fill(4)(id))
+      // committed: a rerun has nothing left to write
+      assert(Checkpoint.writeResumable(df, Seq("k"), 4, dir, id).isEmpty)
+      assert(Checkpoint.read(spark, dir).count() == 200)
+    }
+  }
+
+  test("read: a table whose committed buckets hold no rows reads empty, with its columns") {
+    val dir = freshDir("allempty")
+    Checkpoint.writeResumable(sampleDf.filter(col("k") < 0), Seq("k"), 4, dir, "e")
+    assert(Checkpoint.committedBuckets(spark, dir) == (0 until 4).toSet)
+    val back = Checkpoint.read(spark, dir)
+    assert(back.schema.map(f => (f.name, f.dataType)) ==
+      sampleDf.schema.map(f => (f.name, f.dataType)))
+    assert(back.count() == 0)
+  }
+
+  test("read: no Spark job before an action; same schema and rows as the inferred read") {
+    import spark.implicits._
+    val dir = freshDir("readjobs")
+    intercept[Checkpoint.InjectedFailure] {
+      Checkpoint.writeResumable(sampleDf, Seq("k"), 8, dir, "r1", failBeforeBucket = 5)
+    }
+    val (back, ev) = Listened(spark.sparkContext)(Checkpoint.read(spark, dir))
+    assert(ev.jobs == 0, s"read launched ${ev.jobs} Spark jobs")
+    // the read as it was before the schema was recorded: footer inference
+    val committed = Checkpoint.committedBuckets(spark, dir).toSeq
+    val oracle = spark.read.parquet(s"$dir/data")
+      .where(col("__bucket").isin(committed: _*)).drop("__bucket")
+    assert(back.schema == oracle.schema)
+    val rows = back.as[(Long, String, Long)].collect().sorted.toSeq
+    assert(rows.nonEmpty && rows.size < 5000)
+    assert(rows == oracle.as[(Long, String, Long)].collect().sorted.toSeq)
   }
 
   test("time travel: per-bucket newest-write-wins across three snapshots; pruned scan") {
@@ -429,5 +588,85 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll {
       val want = (i * 10L, if (i % 4 == 1) Some(i * 2L) else None)
       assert(m(i.toLong) == want, s"k=$i")
     }
+  }
+}
+
+/** The Spark jobs and task ends of what `body` ran on `sc`. */
+final class Listened(val jobs: Int, val tasks: Seq[SparkListenerTaskEnd])
+
+object Listened {
+  /** Run `body` with a listener on `sc`. A one-task marker job runs after it
+    * and is awaited: the listener bus delivers events in order, so every
+    * event of `body` has arrived once the marker's job end has.
+    */
+  def apply[T](sc: SparkContext)(body: => T): (T, Listened) = {
+    val marker = "graft.test.marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerTaskEnd]()
+    val markerJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val markerStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p => p.getProperty("spark.jobGroup.id") == marker)) {
+          e.stageIds.foreach(markerStages.add)
+          markerJob.set(e.jobId)
+        } else jobs.incrementAndGet(): Unit
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob.get()) drained.countDown()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (!markerStages.contains(e.stageId)) tasks.add(e): Unit
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      sc.setJobGroup(marker, marker, interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus not drained")
+      (out, new Listened(jobs.get(), tasks.asScala.toSeq))
+    } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** The in-write stats under task retries: a `local[4,2]` session gives each
+  * task a second attempt.
+  */
+class CheckpointRetrySpec extends AnyFunSuite with BeforeAndAfterAll {
+
+  private lazy val spark = {
+    // getOrCreate would return a prior suite's session with its master
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).foreach(_.stop())
+    SparkSession.builder()
+      .master("local[4,2]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+  }
+
+  override def afterAll(): Unit = spark.stop()
+
+  test("a task that fails once and is retried counts each row once") {
+    import spark.implicits._
+    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_ckpt_test_retry"
+    Checkpoint.clear(dir)
+    val n = 4000L
+    val input = spark.sparkContext.parallelize(0L until n, 4).mapPartitionsWithIndex { (p, it) =>
+      if (p == 0 && org.apache.spark.TaskContext.get().attemptNumber() == 0)
+        throw new IllegalStateException("injected first-attempt failure")
+      it.map(k => (k, s"v$k"))
+    }.toDF("k", "s")
+    val (_, ev) = Listened(spark.sparkContext) {
+      Checkpoint.writeResumable(input, Seq("k"), 8, dir, "retry")
+    }
+    assert(ev.tasks.exists(_.reason != org.apache.spark.Success), "no task attempt failed")
+    val m = Checkpoint.manifests(spark, dir).select("bucket", "row_count", "checksum")
+      .as[(Int, Long, Long)].collect().map { case (b, rows, c) => (b, (rows, c)) }.toMap
+    assert(m.values.map(_._1).sum == n)
+    val again = spark.read.parquet(s"$dir/data")
+    val re = again.groupBy("__bucket")
+      .agg(count(lit(1)).as("n"),
+        sum(xxhash64(struct(col("k"), col("s"))).bitwiseAND(lit(0xFFFFFFFFL))).as("c"))
+      .as[(Int, Long, Long)].collect().map { case (b, rows, c) => (b, (rows, c)) }.toMap
+    assert(re == m)
   }
 }
