@@ -12,7 +12,7 @@ import java.util.concurrent.{Executors, TimeUnit}
   *     run truncated mid-loop leaves the driver every completed query's
   *     parquet plus the full oracle map to score it with.
   *  2. The default run is the CORE tier only ([[graft.queries.Tiers.core]],
-  *     133 entries ≈ the round-3 driver-green surface); the 455-entry
+  *     133 entries ≈ the round-3 driver-green surface); the 368-entry
   *     registry runs only under `SPARK_GRAFT_TIER=full` (or explicit
   *     query-name args).
   *  3. Queries run through a small thread pool (`SPARK_GRAFT_VERIFY_THREADS`,

@@ -69,26 +69,36 @@ object GlobalRank {
       .localCheckpoint(false)
   }
 
-  /** Running offsets over a tiny (≤ numParts rows) per-partition aggregate
-    * via a θ-self-join instead of a window: numParts² comparisons is
-    * nothing, and the plan carries no unpartitioned window at all. The
-    * offset is null when no earlier partition has a non-null value.
+  /** Per partition, `agg` (sum, min, ...) of `valCol` over the EARLIER
+    * partitions of a tiny (≤ numParts rows) per-partition aggregate, as
+    * column `_gr_off`, via a θ-self-join instead of a window: numParts²
+    * comparisons is nothing, and the plan carries no unpartitioned window
+    * at all. The offset is null when no earlier partition has a non-null
+    * value.
     */
-  private def runningOffsets(perPart: DataFrame, valCol: String): DataFrame =
+  private def runningOffsets(perPart: DataFrame, valCol: String,
+                             agg: Column => Column): DataFrame =
     perPart.as("a")
       .join(perPart.as("b"), col(s"b.$PID") < col(s"a.$PID"), "left")
       .groupBy(col(s"a.$PID").as(PID))
-      .agg(sum(col(s"b.$valCol")).as("_gr_off"))
+      .agg(agg(col(s"b.$valCol")).as("_gr_off"))
 
   /** Global `row_number()` over `orderCols` as column `out`. */
   def withRowNumber(df: DataFrame, out: String, orderCols: Seq[Column],
-                    numParts: Int = -1): DataFrame = {
+                    numParts: Int = -1): DataFrame =
+    rowNumbered(df, out, orderCols, numParts)._1
+
+  /** [[withRowNumber]] and the per-partition row counts (`_gr_cnt` by
+    * partition) its offsets come from.
+    */
+  private def rowNumbered(df: DataFrame, out: String, orderCols: Seq[Column],
+                          numParts: Int): (DataFrame, DataFrame) = {
     val r = ranged(df, orderCols, numParts)
     val counts = r.groupBy(col(PID)).agg(count(lit(1)).as("_gr_cnt"))
-    val offsets = runningOffsets(counts, "_gr_cnt")
-    r.join(broadcast(offsets), Seq(PID))
+    val offsets = runningOffsets(counts, "_gr_cnt", sum)
+    (r.join(broadcast(offsets), Seq(PID))
       .withColumn(out, col(LRN) + coalesce(col("_gr_off"), lit(0L)))
-      .drop(PID, LRN, "_gr_off")
+      .drop(PID, LRN, "_gr_off"), counts)
   }
 
   /** Global `lag(valueCol, 1)` over `orderCols` as column `out`: the first
@@ -145,7 +155,7 @@ object GlobalRank {
                  orderCols: Seq[Column], numParts: Int = -1): DataFrame = {
     val r = ranged(df, orderCols, numParts)
     val sums = r.groupBy(col(PID)).agg(sum(valueCol).as("_gr_psum"))
-    val offsets = runningOffsets(sums, "_gr_psum")
+    val offsets = runningOffsets(sums, "_gr_psum", sum)
     val local = "_gr_local"
     r.join(broadcast(offsets), Seq(PID))
       .withColumn(local, sum(valueCol).over(
@@ -156,26 +166,49 @@ object GlobalRank {
       .drop(PID, LRN, "_gr_off", local)
   }
 
+  /** Global running `min(valueCol)` over the rows strictly BEFORE each row
+    * in `orderCols` order, as column `out` (null for the global first row):
+    * the partition-local running min, then the min of the earlier range
+    * partitions carried in from their per-partition minima. Nulls are
+    * ignored, as by the global window.
+    */
+  def withPrecedingMin(df: DataFrame, valueCol: String, out: String,
+                       orderCols: Seq[Column], numParts: Int = -1): DataFrame = {
+    val r = ranged(df, orderCols, numParts)
+    val mins = r.groupBy(col(PID)).agg(min(valueCol).as("_gr_pmin"))
+    val carry = runningOffsets(mins, "_gr_pmin", min)
+    val local = "_gr_local"
+    r.join(broadcast(carry), Seq(PID))
+      .withColumn(local, min(valueCol).over(
+          Window.partitionBy(col(PID)).orderBy(orderCols: _*)
+            .rowsBetween(Window.unboundedPreceding, -1)))
+      .withColumn(out, least(col(local), col("_gr_off")))
+      .drop(PID, LRN, "_gr_off", local)
+  }
+
   /** Global `ntile(buckets)` over `orderCols` as column `out` (int),
     * bit-equal to the SQL-standard ntile: the first `n % buckets` buckets
-    * get `n/buckets + 1` rows, the rest `n/buckets`.
+    * get `n/buckets + 1` rows, the rest `n/buckets`. The row count `n` is
+    * the sum of the per-partition counts the row numbers are offset by,
+    * joined in as a one-row broadcast, so building the frame runs no job
+    * beyond the row numbering's own.
     */
   def withNtile(df: DataFrame, out: String, buckets: Int,
                 orderCols: Seq[Column], numParts: Int = -1): DataFrame = {
     require(buckets > 0, s"buckets must be > 0, got $buckets")
     val rn = "_gr_rn"
-    val withRn = withRowNumber(df, rn, orderCols, numParts)
-    val n = withRn.agg(count(lit(1))).head().getLong(0)
-    val base = n / buckets
-    val extra = n % buckets
-    val thr = (base + 1) * extra
+    val (withRn, counts) = rowNumbered(df, rn, orderCols, numParts)
+    val n = counts.agg(sum("_gr_cnt").as("_gr_n"))
+      .select(expr(s"_gr_n DIV $buckets").as("_gr_base"),
+        expr(s"_gr_n % $buckets").as("_gr_extra"))
+      .withColumn("_gr_thr", (col("_gr_base") + 1) * col("_gr_extra"))
     // integral DIV, not Column./ (double division): exact at any n
-    withRn.withColumn(out,
-        when(lit(base) === 0L, col(rn)) // n < buckets: bucket = rank
-          .when(col(rn) <= thr,
-            expr(s"($rn - 1) DIV ${base + 1} + 1"))
-          .otherwise(expr(s"$extra + ($rn - 1 - $thr) DIV $base + 1"))
+    withRn.crossJoin(broadcast(n)).withColumn(out,
+        when(col("_gr_base") === 0L, col(rn)) // n < buckets: bucket = rank
+          .when(col(rn) <= col("_gr_thr"),
+            expr(s"($rn - 1) DIV (_gr_base + 1) + 1"))
+          .otherwise(expr(s"_gr_extra + ($rn - 1 - _gr_thr) DIV _gr_base + 1"))
         .cast("int"))
-      .drop(rn)
+      .drop(rn, "_gr_base", "_gr_extra", "_gr_thr")
   }
 }

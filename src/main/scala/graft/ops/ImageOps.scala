@@ -5,8 +5,8 @@ import graft.raster.Fidelity
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 
-/** Multimodal (image) column operators over the input table's `bytes`
-  * payloads. Decode is REAL (javax.imageio PNG/JPEG + raw HGT via
+/** The image kernels of the core registry tier, over the input table's
+  * `bytes` payloads. Decode is REAL (javax.imageio PNG/JPEG + raw HGT via
   * graft.raster) — no stub needed for this engine's payloads; the Spark-side
   * plumbing is a typed mapPartitions so each tile decodes exactly once per
   * partition and only the needed columns reach the stage (column pruning
@@ -39,592 +39,17 @@ object ImageOps {
     }.toDF()
   }
 
-  /** Per-tile raster change-detection row. */
-  final case class ChangeRow(image_id: String, n_px: Long, n_changed: Long,
-                             abs_sum: Long, abs_max: Long)
-
-  /** Raster CHANGE DETECTION — the raster↔raster join the engine's join
-    * inventory was missing next to raster↔vector (J4): two epochs of the
-    * same tile store joined on tile key, decoded pairwise, per-tile
-    * difference statistics (changed-pixel count above a threshold, total
-    * and max absolute change) in exact integers. The terrain-monitoring /
-    * map-update primitive ("which tiles changed enough to re-process").
-    *
-    * Scale shape: ONE equi-join on the store's partition key — on a
-    * tile_key-bucketed layout both sides co-locate and the join is
-    * shuffle-free; decode happens once per matched pair inside the map,
-    * and only the 5-integer stats rows leave the operator (never pixels).
-    * Tiles present in one epoch only are dropped (inner join — the
-    * new/retired-tile report is a cheap anti-join the caller composes).
-    */
-  def changeStats(a: Dataset[TileRow], b: Dataset[TileRow],
-                  threshold: Int): DataFrame = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    a.joinWith(b, a("image_id") === b("image_id"))
-      .mapPartitions { it =>
-        it.map { case (ta, tb) =>
-          val da = TileCodec.decode(ta)
-          val db = TileCodec.decode(tb)
-          require(da.size == db.size,
-            s"epoch size mismatch for ${ta.image_id}: ${da.size} vs ${db.size}")
-          var nch = 0L; var s = 0L; var mx = 0L
-          var i = 0
-          while (i < da.samples.length) {
-            val d = math.abs(db.samples(i) - da.samples(i)).toLong
-            if (d > threshold) nch += 1
-            s += d
-            if (d > mx) mx = d
-            i += 1
-          }
-          ChangeRow(ta.image_id, da.samples.length.toLong, nch, s, mx)
-        }
-      }.toDF()
-  }
-
-  /** Per-image Laplacian focus measure row. */
-  final case class BlurRow(image_id: String, n_int: Long, lap_sum: Long,
-                           lap_sumsq: Long, var_num: Long)
-
-  /** Variance-of-Laplacian focus measure — the standard blur/defocus filter
-    * of image-corpus curation (a sharp image has high-frequency content ⇒
-    * large 4-neighbour Laplacian variance; a blurred one collapses toward
-    * zero). Exact integers end to end: per interior pixel
-    * `lap = 4v − v↑ − v↓ − v← − v→`, and the emitted moments
-    * `(n, Σlap, Σlap², n·Σlap² − (Σlap)²)` let any consumer rank/threshold
-    * without a float division (the variance NUMERATOR is the comparable —
-    * same denominator n² for every image of one shape). The Laplacian
-    * stencil is symmetric under row/column flips, so the moment set is
-    * independent of the decode's row orientation. Integer headroom:
-    * |lap| ≤ 4·max_value ⇒ Σlap² ≤ n·16·max², and the variance numerator
-    * needs n·Σlap² < 2⁶³ — holds to megapixel images at 16-bit depth.
-    * Decode-once mapPartitions, one row out per image, ZERO shuffle.
-    */
-  def blurStats(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[BlurRow]
-    tiles.mapPartitions { it =>
-      it.map { t =>
-        val d = TileCodec.decode(t)
-        val size = d.size
-        var sum = 0L; var sumsq = 0L
-        var r = 1
-        while (r < size - 1) {
-          var c = 1
-          val base = r * size
-          while (c < size - 1) {
-            val lap = 4L * d.samples(base + c) -
-              d.samples(base - size + c) - d.samples(base + size + c) -
-              d.samples(base + c - 1) - d.samples(base + c + 1)
-            sum += lap; sumsq += lap * lap
-            c += 1
-          }
-          r += 1
-        }
-        val n = (size - 2).toLong * (size - 2).toLong
-        BlurRow(t.image_id, n, sum, sumsq, n * sumsq - sum * sum)
-      }
-    }.toDF()
-  }
-
-  /** One joint-moment block of one two-epoch image pair. */
-  final case class NccBlockRow(image_id: String, py: Int, px: Int, n_px: Long,
-                               sa: Long, sb: Long, saa: Long, sbb: Long,
-                               sab: Long)
-
-  /** Blockwise JOINT moments of a two-epoch raster pair — the sufficient
-    * statistics of normalized cross-correlation and SSIM per
-    * `block`×`block` window: `(n, Σa, Σb, Σa², Σb², Σab)`, from which any
-    * consumer forms `NCC = (n·Σab − Σa·Σb) / √((n·Σa²−(Σa)²)(n·Σb²−(Σb)²))`
-    * or the SSIM luminance/contrast/structure terms without this operator
-    * ever committing to a float — the registration-QA / change-localization
-    * refinement of the whole-image diff ([[changeStats]] says "this tile
-    * changed", the block moments say WHERE and how correlated the change
-    * is). Ragged right/top remainder dropped (the [[patchify]] grid
-    * contract). Integer headroom: Σab ≤ n·maxA·maxB < 2⁶³ for megapixel
-    * blocks at 16-bit depth.
-    *
-    * Scale shape: image_id equi-join (co-locating shuffle-free on a
-    * tile_key-bucketed layout), decode-once per pair, (side/block)² rows
-    * out, pixels never leave the operator — the changeStats plan with a
-    * blocked emit.
-    */
-  def nccBlocks(a: Dataset[TileRow], b: Dataset[TileRow],
-                block: Int): DataFrame = {
-    require(block > 0, s"block must be > 0, got $block")
-    val spark = a.sparkSession
-    import spark.implicits._
-    a.joinWith(b, a("image_id") === b("image_id"))
-      .mapPartitions { it =>
-        it.flatMap { case (ta, tb) =>
-          val da = TileCodec.decode(ta)
-          val db = TileCodec.decode(tb)
-          require(da.size == db.size,
-            s"epoch size mismatch for ${ta.image_id}: ${da.size} vs ${db.size}")
-          val size = da.size
-          val per = size / block
-          for {
-            py <- 0 until per
-            px <- 0 until per
-          } yield {
-            var sa = 0L; var sb = 0L; var saa = 0L; var sbb = 0L; var sab = 0L
-            var r = py * block
-            val rEnd = r + block
-            while (r < rEnd) {
-              val base = r * size + px * block
-              var i = 0
-              while (i < block) {
-                val va: Long = da.samples(base + i)
-                val vb: Long = db.samples(base + i)
-                sa += va; sb += vb
-                saa += va * va; sbb += vb * vb; sab += va * vb
-                i += 1
-              }
-              r += 1
-            }
-            NccBlockRow(ta.image_id, py, px, block.toLong * block,
-              sa, sb, saa, sbb, sab)
-          }
-        }
-      }.toDF()
-  }
-
-  /** Walsh–Hadamard 8×8 block-transform energy census — the integer-exact
-    * stand-in for DCT energy compaction (the WHT shares the DCT's ±
-    * butterfly structure with signs only, so the per-coefficient energy
-    * split is the same compressibility read codecs make, with no floats
-    * anywhere). For each requested natural-order coefficient (cu, cv) the
-    * per-block signed sum Σ (−1)^{popcount(cu&i)+popcount(cv&j)}·v(i,j)
-    * over the 75×75 grid of 8×8 blocks, squared and summed per image —
-    * low-order AC energy ⇒ smooth gradients, high-order ⇒ texture/noise.
-    *
-    * 100 TB shape: decode-once mapPartitions, zero shuffle, one row per
-    * (image, coefficient).
-    *
-    * @return (image_id, cu, cv, n_blocks, energy)
-    */
-  final case class WhtRow(image_id: String, cu: Int, cv: Int,
-                          n_blocks: Long, energy: Long)
-
-  def whtEnergy(tiles: Dataset[TileRow],
-                coeffs: Seq[(Int, Int)]): DataFrame = {
-    require(coeffs.nonEmpty && coeffs.forall { case (u, v) =>
-      u >= 0 && u < 8 && v >= 0 && v < 8 }, s"coeffs must be in 0..7: $coeffs")
-    implicit val enc = Encoders.product[WhtRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val per = size / 8
-        coeffs.iterator.map { case (cu, cv) =>
-          val sgnR = Array.tabulate(8)(i =>
-            if (Integer.bitCount(cu & i) % 2 == 0) 1L else -1L)
-          val sgnC = Array.tabulate(8)(j =>
-            if (Integer.bitCount(cv & j) % 2 == 0) 1L else -1L)
-          var energy = 0L
-          var br = 0
-          while (br < per) {
-            var bc = 0
-            while (bc < per) {
-              var coef = 0L
-              var i = 0
-              while (i < 8) {
-                val base = (br * 8 + i) * size + bc * 8
-                val s = sgnR(i)
-                var j = 0
-                while (j < 8) {
-                  coef += s * sgnC(j) * d.samples(base + j)
-                  j += 1
-                }
-                i += 1
-              }
-              energy += coef * coef
-              bc += 1
-            }
-            br += 1
-          }
-          WhtRow(tl.image_id, cu, cv, per.toLong * per, energy)
-        }
-      }
-    }.toDF()
-  }
-
-  /** Cross-tile seam audit — the mosaic-QA check a pyramid/mosaic build
-    * runs before publishing: for every east-west adjacent tile pair, the
-    * east edge column of the west tile compared sample-by-sample against
-    * the west edge column of its east neighbor (SRTM-style 1°-grid tiles
-    * nominally SHARE the seam column, so non-zero deltas mean mis-
-    * registered or differently-processed sources). Emits one row per seam
-    * with exact integer agreement stats.
-    *
-    * 100 TB shape: decode-once per tile, only two edge VECTORS (size
-    * samples each) ever leave the operator — pixels don't shuffle; the
-    * seam join is a tiny (seam_lng, seam_lat) equi-join, and the
-    * per-seam stats are codegen'd zip_with/aggregate HOFs.
-    *
-    * @return (seam_lng, seam_lat, west_id, east_id, n_samples, n_equal,
-    *          sum_abs, max_abs)
-    */
-  final case class SeamEdgeRow(seam_lng: Int, seam_lat: Int, side: String,
-                               image_id: String, edge: Array[Long])
-
-  def tileSeams(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[SeamEdgeRow]
-    val edges = tiles.mapPartitions { it =>
-      it.flatMap { t =>
-        val d = TileCodec.decode(t)
-        val n = d.size
-        val (lng, lat) = graft.geo.TileKey.toDegrees(t.image_id)
-        val west = Array.tabulate(n)(r => d.samples(r * n).toLong)
-        val east = Array.tabulate(n)(r => d.samples(r * n + n - 1).toLong)
-        Iterator(
-          SeamEdgeRow(lng + 1, lat, "E", t.image_id, east),
-          SeamEdgeRow(lng, lat, "W", t.image_id, west))
-      }
-    }
-    val e = edges.filter(col("side") === "E")
-      .select(col("seam_lng"), col("seam_lat"),
-        col("image_id").as("west_id"), col("edge").as("ee"))
-    val w = edges.filter(col("side") === "W")
-      .select(col("seam_lng"), col("seam_lat"),
-        col("image_id").as("east_id"), col("edge").as("we"))
-    e.join(w, Seq("seam_lng", "seam_lat"))
-      .selectExpr("seam_lng", "seam_lat", "west_id", "east_id",
-        "CAST(size(ee) AS BIGINT) AS n_samples",
-        "CAST(size(filter(zip_with(ee, we, (a, b) -> abs(a - b)), d -> d = CAST(0 AS BIGINT))) AS BIGINT) AS n_equal",
-        "aggregate(zip_with(ee, we, (a, b) -> abs(a - b)), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS sum_abs",
-        "aggregate(zip_with(ee, we, (a, b) -> abs(a - b)), CAST(0 AS BIGINT), (acc, x) -> CASE WHEN x > acc THEN x ELSE acc END) AS max_abs")
-  }
-
-  /** Best-epoch block compositing — the cloud-free-mosaic / focus-stack
-    * selection rule: per aligned block, the epoch with the higher
-    * total-variation detail energy (Σ|∂h| + Σ|∂v| over within-block
-    * neighbor pairs, exact integers) wins; haze/cloud/defocus flattens
-    * detail, so the per-block argmax assembles the sharpest composite.
-    * Epoch A wins ties (the deterministic, oracle-replicable convention).
-    * Emits the per-image selection rollup: blocks won per epoch, each
-    * epoch's total energy, and the composite (selected) energy — the
-    * mosaic QA summary a compositing job logs per scene.
-    *
-    * 100 TB shape: ONE image_id equi-join (shuffle-free on a
-    * tile_key-bucketed layout), decode-once per pair, one row per image;
-    * pixels never leave the operator.
-    *
-    * @return (image_id, n_blocks, n_a, n_b, energy_a, energy_b,
-    *          composite_energy)
-    */
-  final case class BestEpochRow(image_id: String, n_blocks: Long, n_a: Long,
-                                n_b: Long, energy_a: Long, energy_b: Long,
-                                composite_energy: Long)
-
-  def bestEpoch(a: Dataset[TileRow], b: Dataset[TileRow],
-                block: Int): DataFrame = {
-    require(block > 1, s"block must be > 1, got $block")
-    val spark = a.sparkSession
-    import spark.implicits._
-    a.joinWith(b, a("image_id") === b("image_id"))
-      .mapPartitions { it =>
-        it.map { case (ta, tb) =>
-          val da = TileCodec.decode(ta)
-          val db = TileCodec.decode(tb)
-          require(da.size == db.size,
-            s"epoch size mismatch for ${ta.image_id}: ${da.size} vs ${db.size}")
-          val size = da.size
-          val per = size / block
-          var nA = 0L; var nB = 0L
-          var eA = 0L; var eB = 0L; var eSel = 0L
-          var py = 0
-          while (py < per) {
-            var px = 0
-            while (px < per) {
-              var ta0 = 0L; var tb0 = 0L
-              var r = py * block
-              val rEnd = r + block
-              while (r < rEnd) {
-                val base = r * size + px * block
-                var i = 0
-                while (i < block) {
-                  val idx = base + i
-                  if (i < block - 1) {
-                    ta0 += math.abs(da.samples(idx + 1) - da.samples(idx)).toLong
-                    tb0 += math.abs(db.samples(idx + 1) - db.samples(idx)).toLong
-                  }
-                  if (r < rEnd - 1) {
-                    ta0 += math.abs(da.samples(idx + size) - da.samples(idx)).toLong
-                    tb0 += math.abs(db.samples(idx + size) - db.samples(idx)).toLong
-                  }
-                  i += 1
-                }
-                r += 1
-              }
-              eA += ta0; eB += tb0
-              if (ta0 >= tb0) { nA += 1; eSel += ta0 }
-              else { nB += 1; eSel += tb0 }
-              px += 1
-            }
-            py += 1
-          }
-          BestEpochRow(ta.image_id, per.toLong * per, nA, nB, eA, eB, eSel)
-        }
-      }.toDF()
-  }
-
-  final case class CrosstabRow(image_id: String, zone_a: Int, zone_b: Int,
-                               n: Long)
-
-  /** Zonal cross-tabulation of a two-epoch raster pair — the
-    * change-detection CONFUSION MATRIX: quantize both epochs to
-    * `binWidth`-wide zones and count pixels per (zone_a, zone_b) cell.
-    * The diagonal is "stayed in class", off-diagonal cells localize which
-    * class transitioned to which — the standard land-cover / content
-    * change summary that a plain per-pixel diff ([[nccBlocks]],
-    * `changeStats`) cannot express. Exact integer counts; output is
-    * vocabulary-bounded (zones² rows max per image), so the emit is
-    * mergeable at any scale.
-    *
-    * Scale shape: image_id equi-join (co-locating shuffle-free on a
-    * tile_key-bucketed layout), decode-once per pair, kernel-side
-    * counting — pixels never leave the operator.
-    */
-  def crosstab(a: Dataset[TileRow], b: Dataset[TileRow],
-               binWidth: Int): DataFrame = {
-    require(binWidth > 0, s"binWidth must be > 0, got $binWidth")
-    val spark = a.sparkSession
-    import spark.implicits._
-    a.joinWith(b, a("image_id") === b("image_id"))
-      .mapPartitions { it =>
-        it.flatMap { case (ta, tb) =>
-          val da = TileCodec.decode(ta)
-          val db = TileCodec.decode(tb)
-          require(da.size == db.size,
-            s"epoch size mismatch for ${ta.image_id}: ${da.size} vs ${db.size}")
-          val counts = scala.collection.mutable.HashMap.empty[(Int, Int), Long]
-          var i = 0
-          while (i < da.samples.length) {
-            val k = (math.floorDiv(da.samples(i).toInt, binWidth),
-              math.floorDiv(db.samples(i).toInt, binWidth))
-            counts(k) = counts.getOrElse(k, 0L) + 1L
-            i += 1
-          }
-          counts.toSeq.sortBy(_._1).map { case ((za, zb), n) =>
-            CrosstabRow(ta.image_id, za, zb, n)
-          }
-        }
-      }.toDF()
-  }
-
-  final case class HaarRow(image_id: String, n_blocks: Long, ll_sum: Long,
-                           lh_energy: Long, hl_energy: Long, hh_energy: Long)
-
-  /** Level-1 Haar wavelet subband census over non-overlapping 2×2 blocks
-    * (ragged odd row/col dropped — the patchify convention): per block
-    * a=NW b=NE c=SW d=SE, LL = a+b+c+d, LH = (a+c)−(b+d) (horizontal
-    * detail), HL = (a+b)−(c+d) (vertical), HH = a−b−c+d (diagonal); the
-    * image row emits Σ LL and Σ detail² per subband — the energy split
-    * between approximation and detail bands that separates compressible
-    * smooth content from texture and from noise (the JPEG2000-grade
-    * compressibility screen of image curation, and the one-level DWT any
-    * multiresolution codec starts with). Pure integer arithmetic, so the
-    * oracle replays every block from the closed form. Decode-once
-    * mapPartitions, one O(n) pass, ZERO shuffle.
-    */
-  def haar(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[HaarRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val half = size / 2
-        var ll = 0L; var lh = 0L; var hl = 0L; var hh = 0L
-        var br = 0
-        while (br < half) {
-          var bc = 0
-          while (bc < half) {
-            val a = d.samples((2 * br) * size + 2 * bc).toLong
-            val b = d.samples((2 * br) * size + 2 * bc + 1).toLong
-            val c = d.samples((2 * br + 1) * size + 2 * bc).toLong
-            val e = d.samples((2 * br + 1) * size + 2 * bc + 1).toLong
-            ll += a + b + c + e
-            val lhv = (a + c) - (b + e); lh += lhv * lhv
-            val hlv = (a + b) - (c + e); hl += hlv * hlv
-            val hhv = a - b - c + e; hh += hhv * hhv
-            bc += 1
-          }
-          br += 1
-        }
-        HaarRow(tl.image_id, half.toLong * half, ll, lh, hl, hh)
-      }
-    }.toDF()
-  }
-
-  final case class OrientRow(image_id: String, sector: Int, n: Long,
-                             energy: Long)
-
-  /** Gradient-orientation census (the HOG descriptor's binning step,
-    * Dalal–Triggs, public) with NO trig anywhere: central-difference
-    * (gx, gy) per interior pixel, assigned to one of 8 half-open π/4
-    * octants purely by SIGN and |gx|-vs-|gy| integer comparisons (sector
-    * k covers [kπ/4,(k+1)π/4); zero gradient → sector 8 "flat"), with
-    * Σ(gx²+gy²) energy per sector. The orientation signature that
-    * separates isotropic texture from banding/scan artifacts — and being
-    * comparison-exact, the oracle replays every pixel. Decode-once,
-    * one O(n) pass, ≤9 rows per image, ZERO shuffle.
-    */
-  def orientHist(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[OrientRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val cnt = new Array[Long](9); val en = new Array[Long](9)
-        var r = 1
-        while (r < size - 1) {
-          var c = 1
-          while (c < size - 1) {
-            val gx = d.samples(r * size + c + 1) - d.samples(r * size + c - 1)
-            val gy = d.samples((r + 1) * size + c) - d.samples((r - 1) * size + c)
-            val s =
-              if (gx == 0 && gy == 0) 8
-              else if (gx > 0 && gy >= 0) { if (gy < gx) 0 else 1 }
-              else if (gx <= 0 && gy > 0) { if (-gx < gy) 2 else 3 }
-              else if (gx < 0 && gy <= 0) { if (-gy < -gx) 4 else 5 }
-              else { if (gx < -gy) 6 else 7 }
-            cnt(s) += 1L
-            en(s) += gx.toLong * gx + gy.toLong * gy
-            c += 1
-          }
-          r += 1
-        }
-        (0 to 8).iterator.filter(cnt(_) > 0L)
-          .map(k => OrientRow(tl.image_id, k, cnt(k), en(k)))
-      }
-    }.toDF()
-  }
-
-  final case class BlobRow(image_id: String, n_high: Long, n_blobs: Long,
-                           largest: Long)
-
-  /** TRUE connected-component labeling of the high mask (≥ `thr`) on the
-    * stride-10 lattice, 4-connected — the blob census [[eulerStats]] only
-    * approximates (Euler number = blobs − holes): per image the high-cell
-    * count, the exact number of blobs and the largest blob's size. Engine:
-    * one union-find pass per image (decode-once, state ∝ lattice); oracle:
-    * recursive-CTE min-label propagation over the adjacency — the same
-    * contract as the dedup clustering gates, per image.
-    */
-  def blobStats(tiles: Dataset[TileRow], thr: Long): DataFrame = {
-    implicit val enc = Encoders.product[BlobRow]
-    val n = 60
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val high = new Array[Boolean](n * n)
-        var nHigh = 0L
-        var i = 0
-        while (i < n) {
-          var j = 0
-          while (j < n) {
-            if (d.samples((i * 10) * size + (j * 10)).toLong >= thr) {
-              high(i * n + j) = true; nHigh += 1
-            }
-            j += 1
-          }
-          i += 1
-        }
-        val parent = Array.tabulate(n * n)(identity)
-        // runtime closure, not a local def: a lifted local method would
-        // capture the enclosing module and break task serialization
-        val find: Int => Int = x0 => {
-          var x = x0
-          while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
-          x
-        }
-        i = 0
-        while (i < n) {
-          var j = 0
-          while (j < n) {
-            val p = i * n + j
-            if (high(p)) {
-              if (i > 0 && high(p - n)) {
-                val a = find(p); val b = find(p - n)
-                if (a != b) parent(math.max(a, b)) = math.min(a, b)
-              }
-              if (j > 0 && high(p - 1)) {
-                val a = find(p); val b = find(p - 1)
-                if (a != b) parent(math.max(a, b)) = math.min(a, b)
-              }
-            }
-            j += 1
-          }
-          i += 1
-        }
-        val sizes = scala.collection.mutable.HashMap.empty[Int, Long]
-        var p = 0
-        while (p < n * n) {
-          if (high(p)) {
-            val r = find(p)
-            sizes(r) = sizes.getOrElse(r, 0L) + 1L
-          }
-          p += 1
-        }
-        BlobRow(tl.image_id, nHigh, sizes.size.toLong,
-          if (sizes.isEmpty) 0L else sizes.values.max)
-      }
-    }.toDF()
-  }
-
-  final case class CutFillRow(image_id: String, zr: Int, zc: Int, cut: Long,
-                              fill: Long, net: Long)
-
-  /** CUT/FILL volumes between two raster epochs per 4×4 zone block on the
-    * stride-10 sample lattice — the earthworks / change-budget rollup:
-    * cut = Σ max(0, a−b), fill = Σ max(0, b−a), net = Σ(a−b), all exact
-    * integers in sample units. The signed SPLIT is the point — a plain net
-    * difference hides offsetting cut and fill (geo_elev_diff's limitation).
-    * Decode-once per epoch pair, ZERO shuffle past the image-key join.
-    */
-  def cutFill(a: Dataset[TileRow], b: Dataset[TileRow]): DataFrame = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    a.joinWith(b, a("image_id") === b("image_id"))
-      .mapPartitions { it =>
-        it.flatMap { case (ta, tb) =>
-          val da = TileCodec.decode(ta)
-          val db = TileCodec.decode(tb)
-          require(da.size == db.size,
-            s"epoch size mismatch for ${ta.image_id}: ${da.size} vs ${db.size}")
-          val size = da.size
-          val cut = new Array[Long](16); val fill = new Array[Long](16)
-          var i = 0
-          while (i < 60) {
-            var j = 0
-            while (j < 60) {
-              val p = (i * 10) * size + (j * 10)
-              val d = da.samples(p) - db.samples(p)
-              val z = (i / 15) * 4 + (j / 15)
-              if (d > 0) cut(z) += d else fill(z) -= d
-              j += 1
-            }
-            i += 1
-          }
-          (0 until 16).iterator.map { z =>
-            CutFillRow(ta.image_id, z / 4, z % 4, cut(z), fill(z),
-              cut(z) - fill(z))
-          }
-        }
-      }.toDF()
-  }
-
   final case class HogRow(image_id: String, br: Int, bc: Int, sector: Int,
                           n: Long, energy: Long)
 
-  /** Block HOG census — [[orientHist]] localized to a 4×4 block grid (the
-    * histogram-of-oriented-gradients descriptor layout, Dalal & Triggs
-    * 2005, public, minus the float normalization): per 150² block, the
-    * 8-octant orientation counts + flat bin and exact gradient energy.
-    * The block-local structure signature used for patch matching and
-    * texture segmentation; same trig-free half-open octant ladder as the
-    * global census, so the oracle adds two GROUP BY keys and nothing else.
+  /** Block HOG census — a gradient-orientation census localized to a 4×4
+    * block grid (the histogram-of-oriented-gradients descriptor layout,
+    * Dalal & Triggs 2005, public, minus the float normalization): per 150²
+    * block, the 8-octant orientation counts + flat bin and exact gradient
+    * energy. The block-local structure signature used for patch matching
+    * and texture segmentation. Central differences go to 8 half-open
+    * octants by pure sign / |gx|-vs-|gy| comparisons (no trig), so the
+    * oracle replays every pixel's comparisons exactly.
     */
   def hogBlocks(tiles: Dataset[TileRow]): DataFrame = {
     implicit val enc = Encoders.product[HogRow]
@@ -659,1134 +84,8 @@ object ImageOps {
     }.toDF()
   }
 
-  final case class RoughRow(image_id: String, depth: Int, n_blocks: Long,
-                            range_sum: Long, range_max: Long)
-
-  /** Multiresolution roughness pyramid: at depth d the even 600² prefix is
-    * cut into (2^d)² blocks and each block contributes its exact value
-    * range (max − min); the per-depth Σrange / max-range profile is the
-    * adaptive-compression / quadtree-splitting heuristic made queryable —
-    * smooth content collapses fast with depth, textured content doesn't.
-    * Pure integer min/max, so the oracle replays every block as a GROUP BY
-    * on the block grid. Decode-once, `depths` passes, ZERO shuffle.
-    */
-  def roughnessPyramid(tiles: Dataset[TileRow], depths: Int): DataFrame = {
-    require(depths >= 1 && depths <= 4, s"depths in 1..4: $depths")
-    implicit val enc = Encoders.product[RoughRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8) // even prefix divisible by 8
-        (0 until depths).iterator.map { dep =>
-          val nb = 1 << dep
-          val bs = ext / nb
-          var sum = 0L; var mx = 0L
-          var br = 0
-          while (br < nb) {
-            var bc = 0
-            while (bc < nb) {
-              var lo = Int.MaxValue; var hi = Int.MinValue
-              var r = br * bs
-              while (r < (br + 1) * bs) {
-                var c = bc * bs
-                while (c < (bc + 1) * bs) {
-                  val v = d.samples(r * size + c).toInt
-                  if (v < lo) lo = v
-                  if (v > hi) hi = v
-                  c += 1
-                }
-                r += 1
-              }
-              val rng = (hi - lo).toLong
-              sum += rng
-              if (rng > mx) mx = rng
-              bc += 1
-            }
-            br += 1
-          }
-          RoughRow(tl.image_id, dep, nb.toLong * nb, sum, mx)
-        }
-      }
-    }.toDF()
-  }
-
-  final case class QuadLeaf(image_id: String, depth: Int, br: Int, bc: Int,
-                            rng: Long)
-
-  /** Adaptive quadtree encoding — the actual split DECISIONS, not the
-    * per-depth aggregates of [[roughnessPyramid]]: starting from the even
-    * 600² prefix, a block SPLITS into 4 while its value range exceeds
-    * `thr` and depth < `maxDepth`; everything else is a LEAF. The output
-    * is the leaf set (depth, block row/col, exact range) — the adaptive
-    * raster-compression / level-of-detail structure (smooth regions stay
-    * coarse, textured regions refine), replayable by an oracle that
-    * computes every depth's block ranges and walks the ancestor chain:
-    * leaf(d) ⟺ all ancestors' rng > thr ∧ (rng ≤ thr ∨ d = maxDepth).
-    * Exact integer min/max, decode-once, ZERO shuffle; ≤ 4^maxDepth
-    * rows/image.
-    */
-  def quadtreeLeaves(tiles: Dataset[TileRow], thr: Long,
-                     maxDepth: Int): DataFrame = {
-    require(maxDepth >= 1 && maxDepth <= 4, s"maxDepth in 1..4: $maxDepth")
-    implicit val enc = Encoders.product[QuadLeaf]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val out = scala.collection.mutable.ArrayBuffer.empty[QuadLeaf]
-        // explicit DFS stack: a recursive local def would lift to the
-        // enclosing module and break closure serialization
-        var stk: List[(Int, Int, Int)] = List((0, 0, 0))
-        while (stk.nonEmpty) {
-          val (depth, br, bc) = stk.head
-          stk = stk.tail
-          val bs = ext >> depth
-          var lo = Int.MaxValue; var hi = Int.MinValue
-          var r = br * bs
-          while (r < (br + 1) * bs) {
-            var c = bc * bs
-            while (c < (bc + 1) * bs) {
-              val v = d.samples(r * size + c).toInt
-              if (v < lo) lo = v
-              if (v > hi) hi = v
-              c += 1
-            }
-            r += 1
-          }
-          val rng = (hi - lo).toLong
-          if (rng > thr && depth < maxDepth)
-            stk = (depth + 1, 2 * br, 2 * bc) ::
-              (depth + 1, 2 * br, 2 * bc + 1) ::
-              (depth + 1, 2 * br + 1, 2 * bc) ::
-              (depth + 1, 2 * br + 1, 2 * bc + 1) :: stk
-          else out += QuadLeaf(tl.image_id, depth, br, bc, rng)
-        }
-        out.iterator
-      }
-    }.toDF()
-  }
-
-  final case class HoughRow(image_id: String, rk: Int, dir: Int, rho_b: Int,
-                            n: Long)
-
-  /** Integer Hough line census over 4 quantized directions — the
-    * deskew/structure detector: every edge pixel (central-difference
-    * gradient energy ≥ `thr`) votes for the line through it in each
-    * direction family (vertical ρ=c, horizontal ρ=r, diagonal ρ=r+c,
-    * anti-diagonal ρ=r−c+ext−1), ρ bucketed by 8; the top-`topK`
-    * accumulator cells per image are the dominant lines. The synthetic
-    * field's 8-px block-bonus seams light up as genuine grid lines. No
-    * trig — directions are exact lattice families, every vote an integer;
-    * decode-once, ZERO shuffle, accumulator state 4·2·ext/8 counters.
-    */
-  def houghLines(tiles: Dataset[TileRow], thr: Long, topK: Int): DataFrame = {
-    implicit val enc = Encoders.product[HoughRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val nb = ((2 * ext) >> 3) + 1
-        val acc = Array.fill(4)(new Array[Long](nb))
-        var r = 1
-        while (r < ext - 1) {
-          var c = 1
-          while (c < ext - 1) {
-            val gx = d.samples(r * size + c + 1) - d.samples(r * size + c - 1)
-            val gy = d.samples((r + 1) * size + c) - d.samples((r - 1) * size + c)
-            if (gx.toLong * gx + gy.toLong * gy >= thr) {
-              acc(0)(c >> 3) += 1
-              acc(1)(r >> 3) += 1
-              acc(2)((r + c) >> 3) += 1
-              acc(3)((r - c + ext - 1) >> 3) += 1
-            }
-            c += 1
-          }
-          r += 1
-        }
-        val rows = for { dir <- 0 until 4; b <- 0 until nb if acc(dir)(b) > 0 }
-          yield (dir, b, acc(dir)(b))
-        rows.sortBy { case (dir, b, n) => (-n, dir, b) }.take(topK)
-          .zipWithIndex.map { case ((dir, b, n), idx) =>
-            HoughRow(tl.image_id, idx + 1, dir, b, n) }
-      }
-    }.toDF()
-  }
-
-  final case class DtRow(image_id: String, n_cells: Long, n_high: Long,
-                         sum_dt: Long, max_dt: Long)
-
-  /** Manhattan distance transform on the stride-10 sample lattice (60×60
-    * index grid over the 600² prefix): distance in GRID STEPS from every
-    * cell to the nearest cell whose sample ≥ `thr` — the proximity field
-    * behind morphological dilation, buffer masks and "how far from
-    * terrain X" features. The engine runs the exact two-raster-scan DP
-    * (forward min(left, up)+1, backward min(right, down)+1 — exact for the
-    * 4-neighbour Manhattan metric); the oracle brute-forces
-    * `min |Δi|+|Δj|` over the high set. Exact integers, decode-once, ZERO
-    * shuffle.
-    */
-  def distanceTransformStats(tiles: Dataset[TileRow], thr: Long): DataFrame = {
-    implicit val enc = Encoders.product[DtRow]
-    val n = 60
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val inf = Int.MaxValue / 4
-        val dt = new Array[Int](n * n)
-        var nHigh = 0L
-        var i = 0
-        while (i < n) {
-          var j = 0
-          while (j < n) {
-            val v = d.samples((i * 10) * size + (j * 10)).toLong
-            if (v >= thr) { dt(i * n + j) = 0; nHigh += 1 }
-            else dt(i * n + j) = inf
-            j += 1
-          }
-          i += 1
-        }
-        i = 0
-        while (i < n) { // forward raster scan
-          var j = 0
-          while (j < n) {
-            var m = dt(i * n + j)
-            if (i > 0 && dt((i - 1) * n + j) + 1 < m) m = dt((i - 1) * n + j) + 1
-            if (j > 0 && dt(i * n + j - 1) + 1 < m) m = dt(i * n + j - 1) + 1
-            dt(i * n + j) = m
-            j += 1
-          }
-          i += 1
-        }
-        i = n - 1
-        while (i >= 0) { // backward raster scan
-          var j = n - 1
-          while (j >= 0) {
-            var m = dt(i * n + j)
-            if (i < n - 1 && dt((i + 1) * n + j) + 1 < m) m = dt((i + 1) * n + j) + 1
-            if (j < n - 1 && dt(i * n + j + 1) + 1 < m) m = dt(i * n + j + 1) + 1
-            dt(i * n + j) = m
-            j -= 1
-          }
-          i -= 1
-        }
-        var sum = 0L; var mx = 0L
-        var p = 0
-        while (p < n * n) {
-          sum += dt(p)
-          if (dt(p) > mx) mx = dt(p)
-          p += 1
-        }
-        DtRow(tl.image_id, (n * n).toLong, nHigh, sum, mx)
-      }
-    }.toDF()
-  }
-
-  final case class BlockinessRow(image_id: String, b_sum: Long, b_n: Long,
-                                 i_sum: Long, i_n: Long,
-                                 blockiness_milli: Long)
-
-  /** JPEG-blockiness audit — the compression-artifact detector: over the
-    * even 600² prefix, every adjacent-pixel absolute difference
-    * (horizontal and vertical) split into 8×8 BLOCK-BOUNDARY pairs
-    * (index divisible by 8) vs interior pairs; a DCT-coded image shows a
-    * boundary/interior discontinuity ratio > 1. `blockiness_milli` is the
-    * exact cross-multiplied floored ratio ×1000 of the two mean absolute
-    * steps.
-    *
-    * 100 TB shape: decode-once mapPartitions, one row per image, zero
-    * shuffle.
-    */
-  def blockiness(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[BlockinessRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var bs = 0L; var bn = 0L; var is = 0L; var in = 0L
-        var r = 0
-        while (r < ext) {
-          var c = 1
-          while (c < ext) {
-            val dh = math.abs(d.samples(r * size + c) -
-              d.samples(r * size + c - 1)).toLong
-            if (c % 8 == 0) { bs += dh; bn += 1 } else { is += dh; in += 1 }
-            c += 1
-          }
-          r += 1
-        }
-        r = 1
-        while (r < ext) {
-          var c = 0
-          while (c < ext) {
-            val dv = math.abs(d.samples(r * size + c) -
-              d.samples((r - 1) * size + c)).toLong
-            if (r % 8 == 0) { bs += dv; bn += 1 } else { is += dv; in += 1 }
-            c += 1
-          }
-          r += 1
-        }
-        val ratio = if (is == 0L || bn == 0L) 0L
-        else bs * in * 1000L / (is * bn)
-        BlockinessRow(tl.image_id, bs, bn, is, in, ratio)
-      }
-    }.toDF()
-  }
-
-  final case class DiversityRow(image_id: String, py: Int, px: Int,
-                                n_px: Long, n_distinct: Long, min_v: Long,
-                                max_v: Long, mode_v: Long, mode_n: Long)
-
-  /** Per-block value-diversity census — the no-logarithm entropy proxy a
-    * compression/uniformity screen uses: over each 100² block of the even
-    * 600² prefix, the distinct sample-value count, range, and the modal
-    * value with its multiplicity (ties to the SMALLEST value). Few
-    * distinct values ⇒ flat/synthetic content (RLE-friendly); a dominant
-    * mode ⇒ banding or nodata fill.
-    *
-    * 100 TB shape: decode-once mapPartitions, one per-block hash count,
-    * 36 rows per tile, zero shuffle.
-    */
-  def blockDiversity(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[DiversityRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val nb = ext / 100
-        Iterator.range(0, nb * nb).map { b =>
-          val py = b / nb; val px = b % nb
-          val counts = new java.util.HashMap[Int, Long]()
-          var minV = Long.MaxValue; var maxV = Long.MinValue
-          var r = py * 100
-          while (r < (py + 1) * 100) {
-            var c = px * 100
-            while (c < (px + 1) * 100) {
-              val v = d.samples(r * size + c).toInt
-              counts.merge(v, 1L, (a, x) => a + x)
-              if (v < minV) minV = v
-              if (v > maxV) maxV = v
-              c += 1
-            }
-            r += 1
-          }
-          var modeV = 0L; var modeN = 0L
-          val e = counts.entrySet().iterator()
-          while (e.hasNext) {
-            val en = e.next()
-            if (en.getValue > modeN ||
-              (en.getValue == modeN && en.getKey < modeV)) {
-              modeN = en.getValue; modeV = en.getKey.toLong
-            }
-          }
-          DiversityRow(tl.image_id, py, px, 10000L, counts.size.toLong,
-            minV, maxV, modeV, modeN)
-        }
-      }
-    }.toDF()
-  }
-
-  final case class DitherRow(image_id: String, bcell: Int, n_px: Long,
-                             n_on: Long)
-
-  /** Ordered (Bayer 8×8) dithering census — the 1-bit halftoning pass as
-    * per-threshold-cell statistics: each pixel quantizes to a 0..63 level
-    * (v ≫ 6, clamped) and switches ON iff level > B₈(r mod 8, c mod 8),
-    * where B₈ is the closed-form index-dilation Bayer matrix
-    * `Σ_k ((r_k⊕c_k) ≪ (2(2−k)+1)) | (r_k ≪ 2(2−k))` (bit k of r/c) — no
-    * table, so the oracle replays it arithmetically. Per (image, matrix
-    * cell) the pixel and ON counts: a flat field turns cells on in
-    * strict threshold order, so the 64-row profile is the banding/gradient
-    * diagnostic of the halftone.
-    *
-    * 100 TB shape: decode-once mapPartitions, zero shuffle, 64 rows per
-    * image.
-    */
-  def bayerDither(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[DitherRow]
-    val bayer = Array.tabulate(8, 8) { (r, c) =>
-      (0 until 3).map { k =>
-        val rk = (r >> k) & 1; val ck = (c >> k) & 1
-        ((rk ^ ck) << (2 * (2 - k) + 1)) | (rk << (2 * (2 - k)))
-      }.sum
-    }
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val npx = new Array[Long](64)
-        val non = new Array[Long](64)
-        var r = 0
-        while (r < size) {
-          var c = 0
-          while (c < size) {
-            val b = bayer(r % 8)(c % 8)
-            val lvl = math.min(63, math.max(0, d.samples(r * size + c) >> 6))
-            npx(b) += 1
-            if (lvl > b) non(b) += 1
-            c += 1
-          }
-          r += 1
-        }
-        Iterator.range(0, 64).map(b =>
-          DitherRow(tl.image_id, b, npx(b), non(b)))
-      }
-    }.toDF()
-  }
-
-  final case class TensorRow(image_id: String, py: Int, px: Int, n_px: Long,
-                             sxx: Long, syy: Long, sxy: Long,
-                             coherence_num: Long)
-
-  /** Gradient structure-tensor census per ~100² block — the orientation-
-    * coherence read (Förstner/Harris family, public) in exact integers:
-    * central differences WITHOUT the ÷2 (gx = v(r,c+1) − v(r,c−1), gy
-    * likewise), per block the second moments Σgx², Σgy², Σgx·gy and the
-    * coherence numerator (Σgx² − Σgy²)² + 4(Σgx·gy)² = (λ₁−λ₂)² — high
-    * where gradients align (edges/striping), ~0 where isotropic
-    * (texture/noise). The eigen-split itself needs one sqrt the CONSUMER
-    * takes; the engine ships only integers.
-    *
-    * 100 TB shape: decode-once mapPartitions, zero shuffle, 36 rows per
-    * tile.
-    */
-  def structureTensor(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[TensorRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val nb = (size - 2 + 99) / 100
-        val sxx = new Array[Long](nb * nb)
-        val syy = new Array[Long](nb * nb)
-        val sxy = new Array[Long](nb * nb)
-        val npx = new Array[Long](nb * nb)
-        var r = 1
-        while (r <= size - 2) {
-          val py = (r - 1) / 100
-          var c = 1
-          while (c <= size - 2) {
-            val gx = (d.samples(r * size + c + 1) -
-              d.samples(r * size + c - 1)).toLong
-            val gy = (d.samples((r + 1) * size + c) -
-              d.samples((r - 1) * size + c)).toLong
-            val b = py * nb + (c - 1) / 100
-            sxx(b) += gx * gx; syy(b) += gy * gy; sxy(b) += gx * gy
-            npx(b) += 1
-            c += 1
-          }
-          r += 1
-        }
-        Iterator.range(0, nb * nb).map { b =>
-          val dxy = sxx(b) - syy(b)
-          TensorRow(tl.image_id, b / nb, b % nb, npx(b), sxx(b), syy(b),
-            sxy(b), dxy * dxy + 4L * sxy(b) * sxy(b))
-        }
-      }
-    }.toDF()
-  }
-
-  final case class KuwaharaRow(image_id: String, n_px: Long, q0: Long,
-                               q1: Long, q2: Long, q3: Long, sum_out: Long,
-                               sum_absdiff: Long)
-
-  /** Kuwahara edge-preserving smoothing census (Kuwahara 1976, public) —
-    * per interior pixel the four overlapping 3×3 quadrants (NW/NE/SW/SE of
-    * the 5×5 window), the pixel takes the MEAN of the quadrant with the
-    * smallest variance (edges survive because the window straddling an
-    * edge loses to the flat side). All-integer: equal quadrant size makes
-    * the variance comparison `9·Σx² − (Σx)²` exact, ties go to the lowest
-    * quadrant index, the output mean is the floor division. Census output
-    * per image: interior pixel count, per-quadrant pick counts (the
-    * edge-orientation fingerprint), Σ output and Σ|output − v| (total
-    * smoothing energy).
-    *
-    * 100 TB shape: decode-once mapPartitions, TWO summed-area tables per
-    * tile (values + squares, one O(n) pass) answer every quadrant in O(1)
-    * — the integral-image discipline of [[integralBoxSums]]; zero shuffle,
-    * one row per image.
-    */
-  def kuwaharaStats(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[KuwaharaRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val w = size + 1
-        val ii = new Array[Long](w * w)
-        val ii2 = new Array[Long](w * w)
-        var r = 0
-        while (r < size) {
-          var rowS = 0L; var rowS2 = 0L
-          var c = 0
-          while (c < size) {
-            val v = d.samples(r * size + c).toLong
-            rowS += v; rowS2 += v * v
-            ii((r + 1) * w + (c + 1)) = ii(r * w + (c + 1)) + rowS
-            ii2((r + 1) * w + (c + 1)) = ii2(r * w + (c + 1)) + rowS2
-            c += 1
-          }
-          r += 1
-        }
-        def box(arr: Array[Long], r0: Int, c0: Int, r1: Int, c1: Int): Long =
-          arr((r1 + 1) * w + (c1 + 1)) - arr(r0 * w + (c1 + 1)) -
-            arr((r1 + 1) * w + c0) + arr(r0 * w + c0)
-        var nPx = 0L; val qc = new Array[Long](4)
-        var sumOut = 0L; var sumAd = 0L
-        r = 2
-        while (r <= size - 3) {
-          var c = 2
-          while (c <= size - 3) {
-            var best = 0; var bestNum = Long.MaxValue; var bestSum = 0L
-            var q = 0
-            while (q < 4) {
-              val r0 = if (q < 2) r - 2 else r
-              val r1 = if (q < 2) r else r + 2
-              val c0 = if (q % 2 == 0) c - 2 else c
-              val c1 = if (q % 2 == 0) c else c + 2
-              val s = box(ii, r0, c0, r1, c1)
-              val s2 = box(ii2, r0, c0, r1, c1)
-              val num = 9L * s2 - s * s
-              if (num < bestNum) { bestNum = num; best = q; bestSum = s }
-              q += 1
-            }
-            val out = Math.floorDiv(bestSum, 9L)
-            val v0 = d.samples(r * size + c).toLong
-            nPx += 1; qc(best) += 1; sumOut += out
-            sumAd += math.abs(out - v0)
-            c += 1
-          }
-          r += 1
-        }
-        KuwaharaRow(tl.image_id, nPx, qc(0), qc(1), qc(2), qc(3),
-          sumOut, sumAd)
-      }
-    }.toDF()
-  }
-
-  final case class MedianRow(image_id: String, n_px: Long, n_changed: Long,
-                             sum_abs: Long, max_abs: Long)
-
-  /** 3×3 median-filter census — the classic salt-and-pepper denoise pass as
-    * per-image statistics: over the interior of the even 600² prefix, the
-    * exact integer median of each pixel's 3×3 neighbourhood (5th smallest of
-    * 9) compared to the pixel itself. Output: interior pixel count, pixels
-    * the filter would CHANGE, Σ|median − v| (total denoise energy) and
-    * max|median − v| (the strongest single correction) — the knobs of an
-    * impulse-noise screening stage. Decode-once, ZERO shuffle, one
-    * insertion-sorted 9-buffer per pixel; the oracle replays the median as
-    * a discrete quantile over the 9 closed-form neighbour values.
-    */
-  def medianDenoiseStats(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[MedianRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var nPx = 0L; var nChanged = 0L; var sumAbs = 0L; var maxAbs = 0L
-        val buf = new Array[Int](9)
-        var r = 1
-        while (r < ext - 1) {
-          var c = 1
-          while (c < ext - 1) {
-            var i = 0
-            var dr = -1
-            while (dr <= 1) {
-              var dc = -1
-              while (dc <= 1) {
-                val v = d.samples((r + dr) * size + (c + dc)).toInt
-                // insertion sort into buf[0..i)
-                var j = i
-                while (j > 0 && buf(j - 1) > v) { buf(j) = buf(j - 1); j -= 1 }
-                buf(j) = v
-                i += 1
-                dc += 1
-              }
-              dr += 1
-            }
-            val med = buf(4)
-            val v0 = d.samples(r * size + c).toInt
-            val ad = math.abs(med - v0).toLong
-            nPx += 1
-            if (ad != 0) nChanged += 1
-            sumAbs += ad
-            if (ad > maxAbs) maxAbs = ad
-            c += 1
-          }
-          r += 1
-        }
-        MedianRow(tl.image_id, nPx, nChanged, sumAbs, maxAbs)
-      }
-    }.toDF()
-  }
-
-  final case class BoxRow(image_id: String, box_id: Int, r0: Int, c0: Int,
-                          side: Int, box_sum: Long)
-
-  /** Deterministic query-box layout for [[integralBoxSums]]: closed-form
-    * in the box index and the usable square extent, shared verbatim by
-    * the engine and the oracle generator (side ≤ 163, anchors wrap inside
-    * `ext − side`, so every box fits any tile with ext ≥ 192).
-    */
-  def boxSpec(i: Int, ext: Int): (Int, Int, Int) = {
-    val side = 64 + (i * 37) % 100
-    ((i * 97) % (ext - side), (i * 139 + 53) % (ext - side), side)
-  }
-
-  /** Summed-area-table box sums: ONE O(n) integral-image pass per tile,
-    * then each of `nBoxes` deterministic query boxes answered in O(1) via
-    * the 4-corner identity — the Viola–Jones / box-filter primitive that
-    * turns arbitrary-size rectangle sums into constant-time lookups (vs
-    * O(side²) per box naively; the pyramid ops above pay per-pixel per
-    * level). Box anchors/sides are closed-form in the box index, so the
-    * oracle replays every box as a grid-range GROUP BY while the engine
-    * proves the SAT identity. Exact integer throughout (600² int16 sums
-    * < 2³¹ ≪ Long), decode-once, ZERO shuffle, fixed nBoxes rows/image.
-    */
-  def integralBoxSums(tiles: Dataset[TileRow], nBoxes: Int): DataFrame = {
-    require(nBoxes >= 1 && nBoxes <= 64, s"nBoxes in 1..64: $nBoxes")
-    implicit val enc = Encoders.product[BoxRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min size
-        val w = ext + 1
-        val sat = new Array[Long](w * w)
-        var r = 0
-        while (r < ext) {
-          var rowSum = 0L
-          var c = 0
-          while (c < ext) {
-            rowSum += d.samples(r * size + c)
-            sat((r + 1) * w + c + 1) = sat(r * w + c + 1) + rowSum
-            c += 1
-          }
-          r += 1
-        }
-        (0 until nBoxes).iterator.map { i =>
-          val (r0, c0, side) = boxSpec(i, ext)
-          val s = sat((r0 + side) * w + c0 + side) - sat(r0 * w + c0 + side) -
-            sat((r0 + side) * w + c0) + sat(r0 * w + c0)
-          BoxRow(tl.image_id, i, r0, c0, side, s)
-        }
-      }
-    }.toDF()
-  }
-
-  final case class LapRow(image_id: String, level: Int, n_px: Long,
-                          energy: Long)
-
-  /** Laplacian-pyramid residual energy (Burt–Adelson, public): per level k
-    * the residual is `4·gₖ(r,c) − sₖ(r/2, c/2)` where sₖ is the 2×2 block
-    * SUM of gₖ and gₖ₊₁ = sₖ — i.e. deviation from the block mean scaled
-    * by 4, which keeps every value an exact integer (no mean division
-    * anywhere). Σ residual² per level is the detail-vs-approximation
-    * energy split across scales — the signal a compression/blur planner
-    * reads (blurred inputs collapse level-0 energy first). 600×600 even
-    * region, 3 levels, decode-once, ZERO shuffle, 3 rows/image.
-    */
-  def laplacianPyramid(tiles: Dataset[TileRow], levels: Int = 3): DataFrame = {
-    require(levels >= 1 && levels <= 4, s"levels in 1..4: $levels")
-    implicit val enc = Encoders.product[LapRow]
-    tiles.flatMap { tl =>
-      val d = TileCodec.decode(tl)
-      val size = d.size
-      var ext = 600 min size
-      if (ext % 2 == 1) ext -= 1
-      var g = new Array[Long](ext * ext)
-      var i = 0
-      while (i < ext) {
-        var c = 0
-        while (c < ext) { g(i * ext + c) = d.samples(i * size + c); c += 1 }
-        i += 1
-      }
-      val out = new Array[LapRow](levels)
-      var k = 0
-      var side = ext
-      while (k < levels) {
-        val half = side / 2
-        val s = new Array[Long](half * half)
-        var r = 0
-        while (r < side) {
-          var c = 0
-          while (c < side) {
-            s((r / 2) * half + c / 2) += g(r * side + c)
-            c += 1
-          }
-          r += 1
-        }
-        var energy = 0L
-        r = 0
-        while (r < side) {
-          var c = 0
-          while (c < side) {
-            val res = 4L * g(r * side + c) - s((r / 2) * half + c / 2)
-            energy += res * res
-            c += 1
-          }
-          r += 1
-        }
-        out(k) = LapRow(tl.image_id, k, side.toLong * side, energy)
-        g = s; side = half; k += 1
-      }
-      out.iterator
-    }.toDF()
-  }
-
-  final case class AdaptRow(image_id: String, n_eval: Long, n_fg: Long,
-                            sum_excess: Long)
-
-  /** Adaptive (local-mean) threshold census — the document-scan
-    * binarization audit: a pixel is foreground when it exceeds its 15×15
-    * neighbourhood mean, compared WITHOUT division (`225·v > boxsum`), so
-    * the verdict is exact integer arithmetic. Box sums come from one
-    * summed-area table per image (the integralBoxSums primitive, O(1) per
-    * window); only interior pixels with a full window are evaluated, so
-    * no clamping asymmetry enters the oracle replay. `sum_excess`
-    * accumulates `225·v − boxsum` over foreground pixels — the contrast
-    * mass a flat (low-detail) image can't fake. Decode-once, ZERO shuffle,
-    * one row/image.
-    */
-  def adaptiveThreshold(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[AdaptRow]
-    val half = 7
-    tiles.map { tl =>
-      val d = TileCodec.decode(tl)
-      val size = d.size
-      val ext = 600 min size
-      val w = ext + 1
-      val sat = new Array[Long](w * w)
-      var r = 0
-      while (r < ext) {
-        var rowSum = 0L
-        var c = 0
-        while (c < ext) {
-          rowSum += d.samples(r * size + c)
-          sat((r + 1) * w + c + 1) = sat(r * w + c + 1) + rowSum
-          c += 1
-        }
-        r += 1
-      }
-      // strict interior (half+1 .. ext-half-1): every SAT corner lookup
-      // lands on a real prefix row, so the oracle's cumsum replay needs
-      // no implicit-zero edge rows
-      var nEval = 0L; var nFg = 0L; var excess = 0L
-      r = half + 1
-      while (r < ext - half) {
-        var c = half + 1
-        while (c < ext - half) {
-          val box = sat((r + half + 1) * w + c + half + 1) -
-            sat((r - half) * w + c + half + 1) -
-            sat((r + half + 1) * w + c - half) +
-            sat((r - half) * w + c - half)
-          val lhs = 225L * d.samples(r * size + c)
-          nEval += 1
-          if (lhs > box) { nFg += 1; excess += lhs - box }
-          c += 1
-        }
-        r += 1
-      }
-      AdaptRow(tl.image_id, nEval, nFg, excess)
-    }.toDF()
-  }
-
-  final case class BorderRow(image_id: String, n_border: Long,
-                             sum_border: Long, n_inner: Long,
-                             sum_inner: Long, contrast_mil: Long)
-
-  /** Border-vs-interior contrast — the letterbox / padding / watermark-
-    * frame detector a training-image curation pass runs before cropping:
-    * pixels in the `frame`-wide border ring are summed against the
-    * interior, and the absolute mean difference is reported in exact
-    * milli-units by cross-multiplication
-    * (`⌊1000·|Σb·nᵢ − Σᵢ·n_b| / (n_b·nᵢ)⌋` — no float mean anywhere).
-    * Synthetic/natural images sit near 0; a padded or letterboxed image
-    * jumps by the pad-vs-content gap. Decode-once, ZERO shuffle, one
-    * row/image.
-    */
-  def borderContrast(tiles: Dataset[TileRow], frame: Int = 8): DataFrame = {
-    require(frame > 0, s"frame must be > 0: $frame")
-    implicit val enc = Encoders.product[BorderRow]
-    tiles.map { tl =>
-      val d = TileCodec.decode(tl)
-      val size = d.size
-      val ext = 600 min size
-      var nb = 0L; var sb = 0L; var ni = 0L; var si = 0L
-      var r = 0
-      while (r < ext) {
-        var c = 0
-        val rowBorder = r < frame || r >= ext - frame
-        while (c < ext) {
-          val v = d.samples(r * size + c).toLong
-          if (rowBorder || c < frame || c >= ext - frame) { nb += 1; sb += v }
-          else { ni += 1; si += v }
-          c += 1
-        }
-        r += 1
-      }
-      val diff = math.abs(sb * ni - si * nb)
-      BorderRow(tl.image_id, nb, sb, ni, si, 1000L * diff / (nb * ni))
-    }.toDF()
-  }
-
-  final case class PlaneRow(image_id: String, plane: Int, n_set: Long)
-
-  /** Bit-plane population census: per bit position, how many samples have
-    * it set — the classic randomness-vs-structure screen (low planes of
-    * natural data are ~50/50 noise-like, high planes carry structure; a
-    * constant or synthetic field shows degenerate planes). One decode-once
-    * O(planes·n) pass, fixed `planes` rows per image, ZERO shuffle; pure
-    * bit arithmetic the oracle replays with `(v // 2^b) % 2`.
-    */
-  def bitPlanes(tiles: Dataset[TileRow], planes: Int): DataFrame = {
-    require(planes >= 1 && planes <= 16, s"planes in 1..16: $planes")
-    implicit val enc = Encoders.product[PlaneRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val cnt = new Array[Long](planes)
-        val n = d.samples.length
-        var i = 0
-        while (i < n) {
-          val v = d.samples(i).toInt & 0xFFFF
-          var b = 0
-          while (b < planes) {
-            if (((v >> b) & 1) == 1) cnt(b) += 1L
-            b += 1
-          }
-          i += 1
-        }
-        (0 until planes).iterator.map(b => PlaneRow(tl.image_id, b, cnt(b)))
-      }
-    }.toDF()
-  }
-
-  /** LBP's 8-neighborhood, clockwise from NW (bit 0) — shared by the
-    * kernel and the oracle generator.
-    */
-  val LbpOffsets: Array[(Int, Int)] = Array(
-    (-1, -1), (-1, 0), (-1, 1), (0, 1), (1, 1), (1, 0), (1, -1), (0, -1))
-
-  final case class LbpRow(image_id: String, code: Int, n: Long)
-
-  /** Local-binary-pattern census (Ojala et al., public): per interior
-    * pixel an 8-bit code — bit i set when the i-th 8-neighbor is ≥ the
-    * center — histogrammed over the 256 codes per image. The classic
-    * micro-texture descriptor: flat fields collapse onto code 255,
-    * directional gradients onto a handful of codes, texture spreads the
-    * histogram; its per-image shape is the texture signature image
-    * curation clusters on. Pure integer comparisons, so the oracle
-    * replays every neighborhood from the closed form. Decode-once
-    * mapPartitions, one O(8n) pass, ≤256 rows per image, ZERO shuffle.
-    */
-  def lbp(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[LbpRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val hist = new Array[Long](256)
-        var r = 1
-        while (r < size - 1) {
-          var c = 1
-          while (c < size - 1) {
-            val v = d.samples(r * size + c).toInt
-            var code = 0; var i = 0
-            while (i < 8) {
-              val o = LbpOffsets(i)
-              if (d.samples((r + o._1) * size + (c + o._2)).toInt >= v)
-                code |= 1 << i
-              i += 1
-            }
-            hist(code) += 1L
-            c += 1
-          }
-          r += 1
-        }
-        (0 until 256).iterator.filter(hist(_) > 0L)
-          .map(k => LbpRow(tl.image_id, k, hist(k)))
-      }
-    }.toDF()
-  }
-
-  /** FAST's 16-pixel Bresenham circle (radius 3), standard clockwise order
-    * from the top — shared by the kernel and the oracle generator.
-    */
-  val FastOffsets: Array[(Int, Int)] = Array(
-    (-3, 0), (-3, 1), (-2, 2), (-1, 3), (0, 3), (1, 3), (2, 2), (3, 1),
-    (3, 0), (3, -1), (2, -2), (1, -3), (0, -3), (-1, -3), (-2, -2), (-3, -1))
-
-  final case class CornerRow(image_id: String, r: Int, c: Int, code: Long)
-
-  /** FAST corner positions + a 32-bit descriptor (bright mask ∥ dark mask
-    * of the radius-3 circle) — the keypoint table [[fastCorners]]'s census
-    * aggregates away. The descriptor is translation-invariant (it moves
-    * with the field), which is what [[cornerMatch]] exploits.
-    */
-  def cornerTable(tiles: Dataset[TileRow], t: Int): Dataset[CornerRow] = {
-    require(t > 0, s"threshold must be > 0, got $t")
-    implicit val enc = Encoders.product[CornerRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val out = scala.collection.mutable.ArrayBuffer.empty[CornerRow]
-        var r = 3
-        while (r < size - 3) {
-          var c = 3
-          while (c < size - 3) {
-            val v = d.samples(r * size + c).toInt
-            var bm = 0; var dm = 0
-            var i = 0
-            while (i < 16) {
-              val off = FastOffsets(i)
-              val p = d.samples((r + off._1) * size + (c + off._2)).toInt
-              if (p >= v + t) bm |= (1 << i)
-              if (p <= v - t) dm |= (1 << i)
-              i += 1
-            }
-            // segment test: >= 12 contiguous set bits, wrap-around
-            val bmm = (bm.toLong << 16) | bm.toLong
-            val dmm = (dm.toLong << 16) | dm.toLong
-            var rb = bmm; var rd = dmm
-            var k = 1
-            while (k <= 11) { rb &= (bmm >> k); rd &= (dmm >> k); k += 1 }
-            // descriptor = circle masks ∥ center value (mod 4096): all three
-            // move with the field under translation, and the center value
-            // keeps descriptor buckets selective — without it the synthetic
-            // field's repeating seams put ~56k corners in one bucket and
-            // the match join explodes into all-pairs-within-bucket
-            if ((rb & 0xFFFFL) != 0L || (rd & 0xFFFFL) != 0L)
-              out += CornerRow(tl.image_id, r, c,
-                (((bm.toLong << 16) | dm.toLong) << 12) | (v.toLong & 0xFFFL))
-            c += 1
-          }
-          r += 1
-        }
-        out.iterator
-      }
-    }
-  }
-
-  /** Image REGISTRATION by corner-descriptor voting: detect FAST corners
-    * with their circle descriptors in both epochs, equi-join on
-    * (image, descriptor) — the bucketed candidate generation, never
-    * corner-all-pairs — and let every match vote for its displacement
-    * (ra−rb, ca−cb); the modal displacement per image is the estimated
-    * translation. The RANSAC-free core of raster/frame alignment: under a
-    * pure shift the true matches agree on ONE displacement while
-    * descriptor collisions scatter, so the mode wins.
-    *
-    * @return (image_id, dr, dc, n_votes, n_matches) — the winning
-    *         displacement, its votes, and the total match count
-    */
-  def cornerMatch(tilesA: Dataset[TileRow], tilesB: Dataset[TileRow],
-                  t: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val a = cornerTable(tilesA, t).toDF("image_id", "ra", "ca", "code")
-    val b = cornerTable(tilesB, t).toDF("image_id", "rb", "cb", "code")
-    val votes = a.join(b, Seq("image_id", "code"))
-      .groupBy(col("image_id"), (col("ra") - col("rb")).as("dr"),
-        (col("ca") - col("cb")).as("dc"))
-      .agg(count(lit(1)).as("n_votes"))
-    val tot = votes.groupBy("image_id").agg(sum("n_votes").as("n_matches"))
-    val w = Window.partitionBy("image_id")
-      .orderBy(col("n_votes").desc, col("dr"), col("dc"))
-    votes.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .join(tot, "image_id")
-      .select("image_id", "dr", "dc", "n_votes", "n_matches")
-  }
-
-  final case class FastRow(image_id: String, n_tested: Long, n_bright: Long,
-                           n_dark: Long, n_corners: Long)
-
-  /** FAST-12 corner census (Rosten & Drummond's segment test, public): a
-    * pixel is a corner when ≥ 12 CONTIGUOUS pixels of its radius-3
-    * 16-pixel Bresenham circle are all brighter than center+t (or all
-    * darker than center−t). Pure integer arithmetic — the contiguous-run
-    * test is the doubled-mask trick `mm = m | m<<16; mm & mm>>1 & … &
-    * mm>>11 ≠ 0 (low 16 bits)` — so the census is bit-reproducible and
-    * the oracle can replay every circle pixel from the closed form. This
-    * is the keypoint-DENSITY screen of image curation: texture-rich
-    * natural scenes score thousands of corners, synthetic gradients and
-    * flat fills score ~0; non-max suppression is a consumer concern, the
-    * census counts raw segment-test positives.
-    *
-    * Same scale contract as [[histogram]]: decode-once mapPartitions, one
-    * O(16n) pass over the margin-3 interior, one output row per image,
-    * ZERO shuffle.
-    *
-    * @param t segment-test threshold
-    */
-  def fastCorners(tiles: Dataset[TileRow], t: Int): DataFrame = {
-    require(t > 0, s"threshold must be > 0, got $t")
-    implicit val enc = Encoders.product[FastRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        @inline def run12(m: Int): Boolean = {
-          val mm: Long = (m.toLong << 16) | m.toLong
-          var rr = mm
-          var k = 1
-          while (k <= 11) { rr &= (mm >> k); k += 1 }
-          (rr & 0xFFFFL) != 0L
-        }
-        var nT = 0L; var nB = 0L; var nD = 0L; var nC = 0L
-        var r = 3
-        while (r < size - 3) {
-          var c = 3
-          while (c < size - 3) {
-            val v = d.samples(r * size + c).toInt
-            var bm = 0; var dm = 0
-            var i = 0
-            while (i < 16) {
-              val off = FastOffsets(i)
-              val p = d.samples((r + off._1) * size + (c + off._2)).toInt
-              if (p >= v + t) bm |= (1 << i)
-              if (p <= v - t) dm |= (1 << i)
-              i += 1
-            }
-            val b = run12(bm); val dk = run12(dm)
-            nT += 1L
-            if (b) nB += 1L
-            if (dk) nD += 1L
-            if (b || dk) nC += 1L
-            c += 1
-          }
-          r += 1
-        }
-        FastRow(tl.image_id, nT, nB, nD, nC)
-      }
-    }.toDF()
-  }
-
-  /** Per-image Sobel gradient-energy row. */
-  final case class SobelRow(image_id: String, n_int: Long, gx_sum: Long,
-                            gy_sum: Long, energy_sum: Long, energy_max: Long)
-
-  /** Sobel gradient energy — the edge-content measure next to the
-    * variance-of-Laplacian focus measure ([[blurStats]]): per interior
-    * pixel the 3×3 Sobel kernels
-    * {{{
-    *   Gx = (v(r-1,c+1) + 2v(r,c+1) + v(r+1,c+1))
-    *      − (v(r-1,c-1) + 2v(r,c-1) + v(r+1,c-1))
-    *   Gy = (v(r+1,c-1) + 2v(r+1,c) + v(r+1,c+1))
-    *      − (v(r-1,c-1) + 2v(r-1,c) + v(r-1,c+1))
-    * }}}
-    * and the emitted exact-integer moments `(Σ Gx, Σ Gy, Σ(Gx²+Gy²),
-    * max(Gx²+Gy²))` rank images by edge density / texture without a float
-    * anywhere — the flat-vs-textured filter of image-corpus curation, and
-    * (summed over tiles of one raster) the gradient magnitude a hillshade
-    * or slope product consumes (cf. the central-difference slope operator
-    * over the same grids). Unlike the symmetric Laplacian, Gy's SIGN fixes
-    * the row orientation: it is defined on the decoded logical grid (row 0
-    * = south edge, the engine-wide decode contract anchored on the
-    * reference's north-first flip, src/elevation/getElevation.ts:56-58),
-    * which the oracle replays index-for-index. Integer headroom:
-    * |Gx|,|Gy| ≤ 8·max_value ⇒ energy ≤ 128·max² < 2⁶³ at 16-bit depth.
-    * Decode-once mapPartitions, one row out per image, ZERO shuffle.
-    */
-  def sobelStats(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[SobelRow]
-    tiles.mapPartitions { it =>
-      it.map { t =>
-        val d = TileCodec.decode(t)
-        val size = d.size
-        var gxs = 0L; var gys = 0L; var es = 0L; var emax = 0L
-        var r = 1
-        while (r < size - 1) {
-          val up = (r - 1) * size   // logical south neighbour row
-          val mid = r * size
-          val dn = (r + 1) * size
-          var c = 1
-          while (c < size - 1) {
-            val gx = (d.samples(up + c + 1) + 2L * d.samples(mid + c + 1) +
-                d.samples(dn + c + 1)) -
-              (d.samples(up + c - 1) + 2L * d.samples(mid + c - 1) +
-                d.samples(dn + c - 1))
-            val gy = (d.samples(dn + c - 1) + 2L * d.samples(dn + c) +
-                d.samples(dn + c + 1)) -
-              (d.samples(up + c - 1) + 2L * d.samples(up + c) +
-                d.samples(up + c + 1))
-            val e = gx * gx + gy * gy
-            gxs += gx; gys += gy; es += e
-            if (e > emax) emax = e
-            c += 1
-          }
-          r += 1
-        }
-        val n = (size - 2).toLong * (size - 2).toLong
-        SobelRow(t.image_id, n, gxs, gys, es, emax)
-      }
-    }.toDF()
-  }
-
   /** One luminance-histogram bin of one image. */
   final case class ImgHistRow(image_id: String, bin: Int, n_px: Long)
-
-  /** One extracted patch of one image (ViT-style tokenization). */
-  final case class PatchRow(image_id: String, py: Int, px: Int, n_px: Long,
-                            px_sum: Long, px_sumsq: Long, px_min: Int,
-                            px_max: Int)
-
-  /** PATCH EXTRACTION — cut each decoded grid into non-overlapping
-    * `patch`×`patch` windows (row-major patch coordinates `(py, px)`) and
-    * emit one row per patch with its exact integer moments — the
-    * vision-transformer tokenization step of a multimodal training
-    * pipeline, where a 100 TB image corpus becomes a (images × patches)
-    * table feeding embedding / masking / quality-filter stages. The ragged
-    * right/bottom remainder (grids whose side is not a multiple of
-    * `patch`) is dropped, matching the standard ViT center-crop-to-grid
-    * contract; exact moments (sum, sum of squares, min, max) stand in for
-    * the patch payload so the gate is bit-checkable, while a payload
-    * variant is the same loop writing `Array[Short]` slices.
-    *
-    * Scale shape: decode-once mapPartitions, (side/patch)² rows out per
-    * image and ZERO shuffle — each patch row is complete where its image
-    * was read; downstream per-patch pipelines group by the already-unique
-    * (image_id, py, px). Pixels never leave the operator.
-    */
-  def patchify(tiles: Dataset[TileRow], patch: Int): DataFrame = {
-    require(patch > 0, s"patch must be > 0, got $patch")
-    implicit val enc = Encoders.product[PatchRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { t =>
-        val d = TileCodec.decode(t)
-        val size = d.size
-        val per = size / patch
-        for {
-          py <- 0 until per
-          px <- 0 until per
-        } yield {
-          var sum = 0L; var sumsq = 0L
-          var mn = Int.MaxValue; var mx = Int.MinValue
-          var r = py * patch
-          val rEnd = r + patch
-          while (r < rEnd) {
-            val base = r * size + px * patch
-            var i = 0
-            while (i < patch) {
-              val v: Int = d.samples(base + i)
-              sum += v; sumsq += v.toLong * v
-              if (v < mn) mn = v
-              if (v > mx) mx = v
-              i += 1
-            }
-            r += 1
-          }
-          PatchRow(t.image_id, py, px, patch.toLong * patch, sum, sumsq, mn, mx)
-        }
-      }
-    }.toDF()
-  }
 
   /** Per-image fixed-width value histogram from the decoded grid — the
     * exposure/contrast profile used to filter degenerate images (all-flat,
@@ -1878,404 +177,6 @@ object ImageOps {
           }
         }
         OtsuRow(t.image_id, bestBin, n, bestW0, bestA0, n - bestW0, bestObj)
-      }
-    }.toDF()
-  }
-
-  final case class Otsu2Row(image_id: String, t1_bin: Int, t2_bin: Int,
-                            n_px: Long, w0: Long, w1: Long, w2: Long,
-                            obj_q: Long)
-
-  /** Two-threshold (3-class) Otsu: exhaustive scan over bin pairs
-    * t1 < t2 of the width-`width` histogram, maximizing the quantized
-    * between-class objective Σ_k ⌊A_k²·10⁶ / (w_k·n)⌋ (per-term floors,
-    * empty classes skipped, ties to the lexicographically smallest
-    * pair) — the trimodal segmentation (shadow / mid / highlight) the
-    * single-threshold [[otsu]] cannot express. Per-tile in-memory prefix
-    * sums over ≤64 bins; the 64²/2 candidate scan never leaves the
-    * executor.
-    */
-  def otsuMultilevel(tiles: Dataset[TileRow], width: Int): DataFrame = {
-    require(width > 0, s"width must be > 0, got $width")
-    implicit val enc = Encoders.product[Otsu2Row]
-    tiles.mapPartitions { it =>
-      it.map { t =>
-        val d = TileCodec.decode(t)
-        val counts = scala.collection.mutable.LongMap.empty[Long]
-        var i = 0
-        while (i < d.samples.length) {
-          val b = math.floorDiv(d.samples(i).toInt, width)
-          counts(b.toLong) = counts.getOrElse(b.toLong, 0L) + 1L
-          i += 1
-        }
-        val bins = counts.keys.toArray.sorted
-        val lo = bins.head.toInt; val hi = bins.last.toInt
-        val nb = hi - lo + 1
-        val w = new Array[Long](nb + 1)   // prefix counts over [lo, lo+j)
-        val a = new Array[Long](nb + 1)   // prefix Σ b·c
-        var j = 0
-        while (j < nb) {
-          val c = counts.getOrElse((lo + j).toLong, 0L)
-          w(j + 1) = w(j) + c
-          a(j + 1) = a(j) + (lo + j).toLong * c
-          j += 1
-        }
-        val n = w(nb)
-        var bestT1 = Int.MinValue; var bestT2 = Int.MinValue
-        var bestObj = -1L
-        var bw = (0L, 0L, 0L); var ba = (0L, 0L, 0L)
-        var t1 = 0
-        while (t1 < nb - 1) {
-          var t2 = t1 + 1
-          while (t2 < nb) {
-            val w0 = w(t1 + 1); val w1 = w(t2 + 1) - w(t1 + 1)
-            val w2 = n - w(t2 + 1)
-            if (w0 > 0 && w1 > 0 && w2 > 0) {
-              val a0 = a(t1 + 1); val a1 = a(t2 + 1) - a(t1 + 1)
-              val a2 = a(nb) - a(t2 + 1)
-              def term(ak: Long, wk: Long): Long =
-                (BigInt(ak) * ak * 1000000 / (BigInt(wk) * n)).toLong
-              val obj = term(a0, w0) + term(a1, w1) + term(a2, w2)
-              if (obj > bestObj) { // strict: ties keep the smallest pair
-                bestObj = obj; bestT1 = lo + t1; bestT2 = lo + t2
-                bw = (w0, w1, w2); ba = (a0, a1, a2)
-              }
-            }
-            t2 += 1
-          }
-          t1 += 1
-        }
-        Otsu2Row(t.image_id, bestT1, bestT2, n, bw._1, bw._2, bw._3,
-          bestObj)
-      }
-    }.toDF()
-  }
-
-  final case class GlcmRow(image_id: String, n_pairs: Long, s_i: Long,
-                           s_j: Long, s_ij: Long, s_absdiff: Long,
-                           s_sqdiff: Long, n_eq: Long)
-
-  /** Per-image gray-level co-occurrence moments at offset (0, 1) — the
-    * Haralick texture profile (contrast / correlation / homogeneity family)
-    * that separates flat, noisy, and structured tiles for quality
-    * filtering. Each horizontal neighbor pair (r, c)→(r, c+1) contributes
-    * its quantized levels `i = ⌊v/binWidth⌋, j` to the EXACT integer
-    * moments `(n_pairs, Σi, Σj, Σij, Σ|i−j|, Σ(i−j)², #{i=j})` — contrast
-    * is `Σ(i−j)²/n` and correlation's numerator `n·Σij − Σi·Σj`, each one
-    * float division away; the diagonal mass `n_eq/n` is the exact part of
-    * homogeneity. No float anywhere, so the table is bit-reproducible.
-    *
-    * Integer headroom: at 64-wide bins on int16 grids, Σij ≤ n·levels² <
-    * 2⁶³ to n ≈ 10¹⁴ pairs per image — any real image.
-    *
-    * Same scale contract as [[histogram]]: decode-once mapPartitions, one
-    * output row per image, ZERO shuffle.
-    */
-  def glcm(tiles: Dataset[TileRow], binWidth: Int): DataFrame = {
-    require(binWidth > 0, s"binWidth must be > 0, got $binWidth")
-    implicit val enc = Encoders.product[GlcmRow]
-    tiles.mapPartitions { it =>
-      it.map { t =>
-        val d = TileCodec.decode(t)
-        val size = d.size
-        var np = 0L; var si = 0L; var sj = 0L; var sij = 0L
-        var sad = 0L; var ssd = 0L; var neq = 0L
-        var r = 0
-        while (r < size) {
-          val base = r * size
-          var c = 0
-          while (c < size - 1) {
-            val i = math.floorDiv(d.samples(base + c).toInt, binWidth).toLong
-            val j = math.floorDiv(d.samples(base + c + 1).toInt, binWidth).toLong
-            val diff = i - j
-            np += 1L; si += i; sj += j; sij += i * j
-            sad += math.abs(diff); ssd += diff * diff
-            if (diff == 0L) neq += 1L
-            c += 1
-          }
-          r += 1
-        }
-        GlcmRow(t.image_id, np, si, sj, sij, sad, ssd, neq)
-      }
-    }.toDF()
-  }
-
-  final case class MorphRow(image_id: String, n_px: Long, n_fg: Long,
-                            n_ero: Long, n_dil: Long, n_edge: Long)
-
-  /** Per-image 3×3 box morphology census over the `thr`-binarized grid —
-    * foreground / eroded / dilated pixel counts plus the morphological
-    * gradient `n_dil − n_ero` (the boundary-pixel mass: near-zero for flat
-    * or salt-and-pepper tiles, large for structured ones — the shape-noise
-    * discriminator beside [[blurStats]]' frequency view). The structuring
-    * element is border-CLIPPED (at edges the 3×3 box truncates to the
-    * in-bounds rectangle), which keeps the operator total without a
-    * padding convention; erosion = all clipped-box pixels foreground,
-    * dilation = any. Both are computed separably (row min/max pass, then
-    * column pass over that) — the box is a product set, so the composition
-    * is exactly the 2-D clipped-box min/max and the oracle's two window
-    * passes replay it bit-for-bit.
-    *
-    * Same scale contract as [[histogram]]: decode-once mapPartitions, two
-    * O(n) passes, one output row per image, ZERO shuffle.
-    *
-    * @param thr foreground threshold (sample ≥ thr)
-    */
-  /** Per-image perimeter/compactness census row. */
-  final case class PerimRow(image_id: String, n_high: Long, perimeter: Long,
-                            compact_ppm: Long)
-
-  /** PERIMETER + ISOPERIMETRIC compactness of the ≥`thr` mask — the shape
-    * descriptor next to [[morph]]'s area-based gradient: perimeter counts
-    * EXPOSED EDGES (4-neighborhood; the grid border is exposed), so it is
-    * the true boundary length of the binary mask, and the compactness
-    * quotient `16·10⁶·A div P²` normalizes a solid square to exactly 10⁶
-    * (fragmented / filamentous masks score far lower — the blob-vs-streak
-    * discriminator of mask QA). Pure integers; decode-once, zero shuffle.
-    */
-  def perimeter(tiles: Dataset[TileRow], thr: Int): DataFrame = {
-    implicit val enc = Encoders.product[PerimRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        @inline def high(r: Int, c: Int): Boolean =
-          r >= 0 && r < size && c >= 0 && c < size &&
-            d.samples(r * size + c) >= thr
-        var area = 0L; var per = 0L
-        var r = 0
-        while (r < size) {
-          var c = 0
-          while (c < size) {
-            if (high(r, c)) {
-              area += 1L
-              if (!high(r - 1, c)) per += 1L
-              if (!high(r + 1, c)) per += 1L
-              if (!high(r, c - 1)) per += 1L
-              if (!high(r, c + 1)) per += 1L
-            }
-            c += 1
-          }
-          r += 1
-        }
-        val compact =
-          if (per == 0L) 0L else 16L * 1000000L * area / (per * per)
-        PerimRow(tl.image_id, area, per, compact)
-      }
-    }.toDF()
-  }
-
-  def morph(tiles: Dataset[TileRow], thr: Int): DataFrame = {
-    implicit val enc = Encoders.product[MorphRow]
-    tiles.mapPartitions { it =>
-      it.map { t =>
-        val d = TileCodec.decode(t)
-        val size = d.size
-        val n = size * size
-        val b = new Array[Boolean](n)
-        var i = 0
-        while (i < n) { b(i) = d.samples(i) >= thr; i += 1 }
-        // horizontal clipped-box pass
-        val hmin = new Array[Boolean](n); val hmax = new Array[Boolean](n)
-        var r = 0
-        while (r < size) {
-          val base = r * size
-          var c = 0
-          while (c < size) {
-            val lo = math.max(c - 1, 0); val hi = math.min(c + 1, size - 1)
-            var mn = true; var mx = false
-            var cc = lo
-            while (cc <= hi) {
-              val v = b(base + cc); mn &&= v; mx ||= v; cc += 1
-            }
-            hmin(base + c) = mn; hmax(base + c) = mx
-            c += 1
-          }
-          r += 1
-        }
-        // vertical clipped-box pass + counts
-        var nFg = 0L; var nEro = 0L; var nDil = 0L
-        r = 0
-        while (r < size) {
-          val lo = math.max(r - 1, 0); val hi = math.min(r + 1, size - 1)
-          var c = 0
-          while (c < size) {
-            if (b(r * size + c)) nFg += 1L
-            var mn = true; var mx = false
-            var rr = lo
-            while (rr <= hi) {
-              mn &&= hmin(rr * size + c); mx ||= hmax(rr * size + c); rr += 1
-            }
-            if (mn) nEro += 1L
-            if (mx) nDil += 1L
-            c += 1
-          }
-          r += 1
-        }
-        MorphRow(t.image_id, n.toLong, nFg, nEro, nDil, nDil - nEro)
-      }
-    }.toDF()
-  }
-
-  final case class EulerRow(image_id: String, n_q1: Long, n_q3: Long,
-                            n_qd: Long, euler4: Long, euler8: Long)
-
-  /** Per-image Euler characteristic census over the `thr`-binarized grid —
-    * Gray's quad-count formula (S. B. Gray, "Local properties of binary
-    * images in two dimensions", IEEE ToC 1971): scan every 2×2 quad of the
-    * background-PADDED image and count the bit patterns with exactly one
-    * foreground corner (Q1), exactly three (Q3), and the two diagonal
-    * patterns (Qd); then `4·χ₄ = Q1 − Q3 + 2·Qd` (4-connectivity) and
-    * `4·χ₈ = Q1 − Q3 − 2·Qd` (8-connectivity), both exactly divisible by 4
-    * on a padded image. χ = components − holes is the topology-grade
-    * degenerate-image discriminator: salt-and-pepper noise inflates |χ|
-    * by orders of magnitude while any structured scene keeps it small —
-    * a one-row-per-image screen no histogram moment can replicate.
-    *
-    * Same scale contract as [[histogram]]: decode-once mapPartitions, one
-    * O(n) pass over (size+1)² quads, one output row per image, ZERO
-    * shuffle; all counts exact integers.
-    *
-    * @param thr foreground threshold (sample ≥ thr)
-    */
-  def eulerCensus(tiles: Dataset[TileRow], thr: Int): DataFrame = {
-    implicit val enc = Encoders.product[EulerRow]
-    tiles.mapPartitions { it =>
-      it.map { t =>
-        val d = TileCodec.decode(t)
-        val size = d.size
-        @inline def fg(r: Int, c: Int): Int =
-          if (r < 0 || c < 0 || r >= size || c >= size) 0
-          else if (d.samples(r * size + c) >= thr) 1 else 0
-        var q1 = 0L; var q3 = 0L; var qd = 0L
-        var r = -1
-        while (r < size) {
-          var c = -1
-          while (c < size) {
-            val tl = fg(r, c); val tr = fg(r, c + 1)
-            val bl = fg(r + 1, c); val br = fg(r + 1, c + 1)
-            val s = tl + tr + bl + br
-            if (s == 1) q1 += 1L
-            else if (s == 3) q3 += 1L
-            // s == 2 with equal diagonal corners ⇒ one of the two
-            // checkerboard patterns (tl=br=1,tr=bl=0 or the transpose)
-            else if (s == 2 && tl == br) qd += 1L
-            c += 1
-          }
-          r += 1
-        }
-        val e4x4 = q1 - q3 + 2L * qd
-        val e8x4 = q1 - q3 - 2L * qd
-        require(e4x4 % 4 == 0 && e8x4 % 4 == 0,
-          s"euler quad census not ≡ 0 mod 4 on ${t.image_id}: $q1/$q3/$qd")
-        EulerRow(t.image_id, q1, q3, qd, e4x4 / 4, e8x4 / 4)
-      }
-    }.toDF()
-  }
-
-  final case class RleRow(image_id: String, n_runs_h: Long, max_run_h: Long,
-                          ss_run_h: Long, n_runs_v: Long, max_run_v: Long,
-                          ss_run_v: Long)
-
-  /** Per-image run-length census over the `thr`-binarized grid — the RLE
-    * compressibility profile, horizontal AND vertical: number of maximal
-    * foreground runs, longest run, and Σlen² (the second moment that
-    * separates a few long coherent runs from many fragments at equal
-    * foreground mass). Dual-axis because structure is directional: scanline
-    * banding compresses horizontally but not vertically; the h/v asymmetry
-    * is itself the signal. Complements [[morph]] (boundary mass) and
-    * [[eulerCensus]] (topology) as the cheap coherence screen for
-    * degenerate-image filtering.
-    *
-    * Same scale contract as [[histogram]]: decode-once mapPartitions, two
-    * O(n) passes, one output row per image, ZERO shuffle; all counts exact
-    * integers (Σlen² ≤ n·size < 2⁶³ for any real image).
-    *
-    * @param thr foreground threshold (sample ≥ thr)
-    */
-  def rle(tiles: Dataset[TileRow], thr: Int): DataFrame = {
-    implicit val enc = Encoders.product[RleRow]
-    tiles.mapPartitions { it =>
-      it.map { t =>
-        val d = TileCodec.decode(t)
-        val size = d.size
-        // scan lines along `major`, stepping `minor`: (stride, step) maps
-        // (line, pos) to the flat index for each axis
-        def scan(lineStride: Int, posStride: Int): (Long, Long, Long) = {
-          var nRuns = 0L; var maxRun = 0L; var ssRun = 0L
-          var line = 0
-          while (line < size) {
-            var run = 0L
-            var pos = 0
-            while (pos < size) {
-              val v = d.samples(line * lineStride + pos * posStride)
-              if (v >= thr) run += 1L
-              else if (run > 0L) {
-                nRuns += 1L; ssRun += run * run
-                if (run > maxRun) maxRun = run
-                run = 0L
-              }
-              pos += 1
-            }
-            if (run > 0L) {
-              nRuns += 1L; ssRun += run * run
-              if (run > maxRun) maxRun = run
-            }
-            line += 1
-          }
-          (nRuns, maxRun, ssRun)
-        }
-        val (nh, mh, sh) = scan(size, 1) // rows left→right
-        val (nv, mv, sv) = scan(1, size) // columns top→bottom
-        RleRow(t.image_id, nh, mh, sh, nv, mv, sv)
-      }
-    }.toDF()
-  }
-
-  final case class ProjRow(image_id: String, total: Long, row_argmax: Int,
-                           row_max: Long, row_ss: Long, col_argmax: Int,
-                           col_max: Long, col_ss: Long)
-
-  /** Per-image axis projection profiles — the 0°/90° Radon transform's
-    * summary moments: row sums and column sums reduced to (argmax index,
-    * max, Σprofile²). The projection second moment Σp² at fixed total mass
-    * is the classic skew/banding detector (uniform mass minimizes it;
-    * concentrated bands maximize it), and the argmax locates the dominant
-    * band — the cheap layout screen used before any expensive geometric
-    * normalization. Ties on the max break to the SMALLEST index so the
-    * result is deterministic.
-    *
-    * Same scale contract as [[histogram]]: decode-once mapPartitions, one
-    * O(n) pass accumulating both profiles, one output row per image, ZERO
-    * shuffle; exact integers throughout (Σp² ≤ size·(size·vmax)² fits
-    * int64 to ~4k² int16 tiles).
-    */
-  def projections(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[ProjRow]
-    tiles.mapPartitions { it =>
-      it.map { t =>
-        val d = TileCodec.decode(t)
-        val size = d.size
-        val rows = new Array[Long](size); val cols = new Array[Long](size)
-        var i = 0
-        while (i < d.samples.length) {
-          val v = d.samples(i).toLong
-          rows(i / size) += v; cols(i % size) += v
-          i += 1
-        }
-        def moments(p: Array[Long]): (Int, Long, Long) = {
-          var am = 0; var mx = Long.MinValue; var ss = 0L
-          var j = 0
-          while (j < p.length) {
-            if (p(j) > mx) { mx = p(j); am = j }
-            ss += p(j) * p(j)
-            j += 1
-          }
-          (am, mx, ss)
-        }
-        val (ra, rm, rs) = moments(rows)
-        val (ca, cm, cs) = moments(cols)
-        ProjRow(t.image_id, rows.sum, ra, rm, rs, ca, cm, cs)
       }
     }.toDF()
   }
@@ -2490,587 +391,13 @@ object ImageOps {
       "cap_sw_lat", "cap_size")
   }
 
-  /** Perceptual-hash near-duplicate pairs — the image-modality analog of
-    * MinHash+LSH ([[TextDedup.minhashCandidates]]): decode each image once,
-    * recompute its 64-bit average-hash from the pixels, and find all pairs
-    * within Hamming distance `radius` WITHOUT an all-pairs comparison.
+  /** Perceptual-hash near-duplicate pairs: a 64-bit average hash per
+    * image, then a multi-index Hamming band join (4 × 16-bit bands, so
+    * every pair within radius ≤ 3 shares a band by pigeonhole) instead of
+    * an all-pairs comparison.
     *
-    * Multi-index Hamming (the published pigeonhole scheme used by
-    * image-dedup pipelines): split the hash into 4 disjoint 16-bit bands;
-    * any pair with d(a,b) ≤ 3 agrees exactly on at least one band, so a
-    * band equi-join has PERFECT recall at radius ≤ 3 (require-checked) —
-    * unlike MinHash this is a guarantee, not a probability. 100 TB shape:
-    * one shuffle keyed on (band_i, band_key); bucket population is the
-    * near-dup cluster size plus 16-bit collisions (corpus/2^16 expected per
-    * band value — at 10^12 rows raise the band width, radius budget
-    * permitting, or sub-bucket hot bands the way the LSH path salts). The
-    * post-join Hamming filter is one codegen'd `bit_count(pa ^ pb)`; the
-    * candidate self-join never materializes pairs outside shared buckets.
+    * @return (id_a, id_b, hamming) with id_a < id_b and hamming ≤ radius
     */
-  final case class DownsampleRow(image_id: String, level: Int, n_px: Long,
-                                 sum_abs_diff: Long, max_abs_diff: Long)
-
-  /** Decimation-bias audit: stride-2 picking vs 2×2 floor-mean
-    * downsampling compared per output pixel, cascaded over `levels`
-    * pyramid levels (each level built from the MEAN path, the correct
-    * one) — Σ|stride − mean| is the aliasing energy a naive pyramid
-    * injects. All-integer: means are floor divisions by 4. Decode-once,
-    * one row per (image, level).
-    */
-  def downsampleBias(tiles: Dataset[TileRow], levels: Int): DataFrame = {
-    require(levels >= 1, s"levels must be >= 1: $levels")
-    implicit val enc = Encoders.product[DownsampleRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        var ext = 600 min (size - size % 8)
-        var cur = Array.tabulate(ext * ext)(i =>
-          d.samples((i / ext) * size + i % ext).toLong)
-        Iterator.range(1, levels + 1).map { lvl =>
-          val half = ext / 2
-          val mean = new Array[Long](half * half)
-          var sumAd = 0L; var maxAd = 0L
-          var r = 0
-          while (r < half) {
-            var c = 0
-            while (c < half) {
-              val base = 2 * r * ext + 2 * c
-              val m = Math.floorDiv(cur(base) + cur(base + 1) +
-                cur(base + ext) + cur(base + ext + 1), 4L)
-              mean(r * half + c) = m
-              val ad = math.abs(cur(base) - m)
-              sumAd += ad
-              if (ad > maxAd) maxAd = ad
-              c += 1
-            }
-            r += 1
-          }
-          val row = DownsampleRow(tl.image_id, lvl,
-            half.toLong * half, sumAd, maxAd)
-          cur = mean; ext = half
-          row
-        }
-      }
-    }.toDF()
-  }
-
-  final case class GradZcrRow(image_id: String, n_steps: Long,
-                              n_flips: Long, rate_ppm: Long)
-
-  /** Horizontal-gradient zero-crossing census: strict sign flips of
-    * v(r,c+1) − v(r,c) along each row of the even 600² prefix (zero
-    * gradients break runs without flipping) — the spatial-frequency proxy
-    * ([[graft.ops.MediaOps]]'s ZCR on the raster axis). Decode-once, one
-    * row per image.
-    */
-  def gradientZcr(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[GradZcrRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var steps = 0L; var flips = 0L
-        var r = 0
-        while (r < ext) {
-          var prevSign = 0
-          var c = 1
-          while (c < ext) {
-            val g = d.samples(r * size + c) - d.samples(r * size + c - 1)
-            val sg = if (g > 0) 1 else if (g < 0) -1 else 0
-            if (sg != 0) {
-              if (prevSign != 0 && sg != prevSign) flips += 1
-              prevSign = sg
-            }
-            steps += 1
-            c += 1
-          }
-          r += 1
-        }
-        GradZcrRow(tl.image_id, steps, flips,
-          if (steps == 0) 0L else flips * 1000000L / steps)
-      }
-    }.toDF()
-  }
-
-  final case class ContrastRow(image_id: String, py: Int, px: Int,
-                               p10_v: Long, p90_v: Long, range_v: Long)
-
-  /** Robust per-block contrast map: nearest-rank p10/p90 sample values per
-    * 100² block (the (n−1)·q div 100 + 1 convention) — outlier-immune
-    * local dynamic range, the tone-mapping input next to
-    * [[blockDiversity]]'s min/max. Decode-once, 36 rows per image.
-    */
-  def contrastMap(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[ContrastRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val nb = 6
-        Iterator.range(0, nb * nb).map { b =>
-          val py = b / nb; val px = b % nb
-          val buf = new Array[Short](10000)
-          var i = 0
-          var r = py * 100
-          while (r < (py + 1) * 100) {
-            var c = px * 100
-            while (c < (px + 1) * 100) {
-              buf(i) = d.samples(r * size + c); i += 1
-              c += 1
-            }
-            r += 1
-          }
-          java.util.Arrays.sort(buf)
-          val p10 = buf((10000 - 1) * 10 / 100).toLong
-          val p90 = buf((10000 - 1) * 90 / 100).toLong
-          ContrastRow(tl.image_id, py, px, p10, p90, p90 - p10)
-        }
-      }
-    }.toDF()
-  }
-
-  final case class FocusRow(image_id: String, py: Int, px: Int,
-                            n_px: Long, lap_abs_sum: Long, lap_abs_max: Long)
-
-  /** Per-block focus map: Σ|4v − N − S − E − W| (the absolute discrete
-    * Laplacian) per ~100² interior block — the local sharpness read a
-    * best-frame selector uses; blur collapses it block by block.
-    * Decode-once, 36 rows per image.
-    */
-  def focusMap(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[FocusRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val nb = 6
-        val sums = new Array[Long](nb * nb)
-        val maxs = new Array[Long](nb * nb)
-        val cnts = new Array[Long](nb * nb)
-        var r = 1
-        while (r <= size - 2) {
-          val py = math.min((r - 1) / 100, nb - 1)
-          var c = 1
-          while (c <= size - 2) {
-            val lap = math.abs(4L * d.samples(r * size + c) -
-              d.samples((r - 1) * size + c) - d.samples((r + 1) * size + c) -
-              d.samples(r * size + c - 1) - d.samples(r * size + c + 1))
-            val b = py * nb + math.min((c - 1) / 100, nb - 1)
-            sums(b) += lap
-            if (lap > maxs(b)) maxs(b) = lap
-            cnts(b) += 1
-            c += 1
-          }
-          r += 1
-        }
-        Iterator.range(0, nb * nb).map(b =>
-          FocusRow(tl.image_id, b / nb, b % nb, cnts(b), sums(b), maxs(b)))
-      }
-    }.toDF()
-  }
-
-  final case class KeystoneRow(image_id: String, n_rows: Long,
-                               sum_cent_milli: Long, slope_num: Long,
-                               var_axis_num: Long)
-
-  /** Keystone/skew audit: per row the milli-floored mass centroid column
-    * Σc·v/Σv, then the exact least-squares slope numerator of centroid vs
-    * row index — a rectified image fits slope ≈ 0; perspective keystone
-    * or shear drifts it linearly. The 1-D projective cousin of
-    * [[illumTilt]]; one division (slope_num/var_axis_num) left to the
-    * consumer. Decode-once, one row per image.
-    */
-  def keystone(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[KeystoneRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var sumCent = 0L; var sumRCent = 0L
-        var r = 0
-        while (r < ext) {
-          var rs = 0L; var rcs = 0L
-          var c = 0
-          while (c < ext) {
-            val v = d.samples(r * size + c).toLong
-            rs += v; rcs += c * v
-            c += 1
-          }
-          val cent = if (rs == 0L) 0L else rcs * 1000L / rs
-          sumCent += cent; sumRCent += r * cent
-          r += 1
-        }
-        val n = ext.toLong
-        val sr = n * (n - 1) / 2
-        val sr2 = (n - 1) * n * (2 * n - 1) / 6
-        KeystoneRow(tl.image_id, n, sumCent,
-          n * sumRCent - sr * sumCent, n * sr2 - sr * sr)
-      }
-    }.toDF()
-  }
-
-  final case class TiltRow(image_id: String, n_px: Long, sum_v: Long,
-                           srv: Long, scv: Long, var_axis_num: Long,
-                           br_num: Long, bc_num: Long)
-
-  /** Illumination-tilt audit — the planar least-squares fit v ≈ a + b·r +
-    * c·c as EXACT normal-equation numerators: on the centered square grid
-    * the r/c regressors are orthogonal with equal variance, so
-    * slope_r = br_num / var_axis_num and slope_c = bc_num / var_axis_num
-    * with br_num = n·Σrv − Σr·Σv (the one division left to the consumer).
-    * A vignette/illumination gradient shows as large |slopes|; the flat
-    * calibration read under [[sobelStats]]'s local gradients.
-    * Decode-once, one row per image.
-    */
-  def illumTilt(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[TiltRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var sv = 0L; var srv = 0L; var scv = 0L
-        var r = 0
-        while (r < ext) {
-          var c = 0
-          while (c < ext) {
-            val v = d.samples(r * size + c).toLong
-            sv += v; srv += r * v; scv += c * v
-            c += 1
-          }
-          r += 1
-        }
-        val n = ext.toLong * ext
-        val sAxis = ext.toLong * (ext - 1) / 2 * ext // Σr over grid
-        val sAxis2 = (ext.toLong - 1) * ext * (2L * ext - 1) / 6 * ext
-        val varNum = n * sAxis2 - sAxis * sAxis
-        TiltRow(tl.image_id, n, sv, srv, scv, varNum,
-          n * srv - sAxis * sv, n * scv - sAxis * sv)
-      }
-    }.toDF()
-  }
-
-  final case class BoxCountRow(image_id: String, scale: Int,
-                               n_boxes: Long, n_total: Long)
-
-  /** Box-counting census of the ≥ `thr` mask at dyadic scales — the
-    * fractal-dimension input (the log-log slope is the consumer's fit;
-    * the engine ships exact occupied-box counts): a box of side s is
-    * occupied iff ANY pixel in it is high. Partial edge boxes count
-    * (box = index division), so non-divisible scales stay exact.
-    * Decode-once, |scales| rows per image.
-    */
-  def boxCount(tiles: Dataset[TileRow], thr: Int,
-               scales: Seq[Int]): DataFrame = {
-    require(scales.nonEmpty && scales.forall(_ >= 1), s"bad scales: $scales")
-    implicit val enc = Encoders.product[BoxCountRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        scales.iterator.map { sc =>
-          val nb = (ext + sc - 1) / sc
-          val occ = new Array[Boolean](nb * nb)
-          var r = 0
-          while (r < ext) {
-            var c = 0
-            while (c < ext) {
-              if (d.samples(r * size + c) >= thr)
-                occ((r / sc) * nb + c / sc) = true
-              c += 1
-            }
-            r += 1
-          }
-          var n = 0L; var i = 0
-          while (i < occ.length) { if (occ(i)) n += 1; i += 1 }
-          BoxCountRow(tl.image_id, sc, n, nb.toLong * nb)
-        }
-      }
-    }.toDF()
-  }
-
-  /** One raster row as (image_id, c, v) rows — the 1-D terrain profile
-    * feeding chord/visibility analytics. Decode-once.
-    */
-  def rowProfile(tiles: Dataset[TileRow], row: Int): DataFrame = {
-    implicit val enc = Encoders.product[(String, Long, Long)]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        require(row < size, s"row $row out of bounds for size $size")
-        Iterator.range(0, size).map(c =>
-          (tl.image_id, c.toLong, d.samples(row * size + c).toLong))
-      }
-    }.toDF("image_id", "c", "v")
-  }
-
-  final case class VariogramRow(image_id: String, dy: Int, dx: Int,
-                                n_pairs: Long, sum_sq: Long)
-
-  /** Directional empirical variogram — the geostatistics primitive under
-    * kriging/IDW radius choices: for each literal lag vector (dy, dx) the
-    * exact Σ(v(p) − v(p+h))² and pair count over the 600² prefix (the
-    * semivariance is sum/(2n), one division the consumer takes).
-    * Anisotropy (row lags ≠ column lags) falls straight out of the
-    * closed-form field's 2c+3r gradient. Decode-once, |lags| rows per
-    * image.
-    */
-  def variogram(tiles: Dataset[TileRow],
-                lags: Seq[(Int, Int)]): DataFrame = {
-    require(lags.nonEmpty && lags.forall { case (dy, dx) =>
-      dy >= 0 && dx >= 0 && (dy > 0 || dx > 0) }, s"bad lags: $lags")
-    implicit val enc = Encoders.product[VariogramRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        lags.iterator.map { case (dy, dx) =>
-          var s = 0L
-          var r = 0
-          while (r < ext - dy) {
-            var c = 0
-            while (c < ext - dx) {
-              val df = (d.samples(r * size + c) -
-                d.samples((r + dy) * size + c + dx)).toLong
-              s += df * df
-              c += 1
-            }
-            r += 1
-          }
-          VariogramRow(tl.image_id, dy, dx,
-            (ext - dy).toLong * (ext - dx), s)
-        }
-      }
-    }.toDF()
-  }
-
-  final case class ShiftRow(image_id: String, py: Int, px: Int, best_dy: Int,
-                            best_dx: Int, sad: Long)
-
-  /** Per-block shift field between two co-registered epochs — optical-flow
-    * -lite block matching: for each ~100² block the (dy, dx) ∈ [−2, 2]²
-    * minimizing the exact SAD Σ|A(r,c) − B(r+dy, c+dx)| (ties by dy then
-    * dx) — the local-misregistration map above [[nccBlocks]]'s global
-    * moments. Block interiors inset by 2 so every candidate shift stays
-    * in-bounds.
-    *
-    * 100 TB shape: tiles join on image_id (co-partitioned epochs), 25
-    * candidate SADs per block computed in one decode pass, 36 rows out.
-    */
-  def shiftField(a: Dataset[TileRow], b: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[ShiftRow]
-    val spark = a.sparkSession
-    import spark.implicits._
-    a.joinWith(b, a("image_id") === b("image_id"))
-      .mapPartitions { it =>
-        it.flatMap { case (ta, tb) =>
-          val da = TileCodec.decode(ta); val db = TileCodec.decode(tb)
-          val size = da.size
-          val nb = 6
-          Iterator.range(0, nb * nb).map { blk =>
-            val py = blk / nb; val px = blk % nb
-            var bestDy = 0; var bestDx = 0; var bestSad = Long.MaxValue
-            var dy = -2
-            while (dy <= 2) {
-              var dx = -2
-              while (dx <= 2) {
-                var sad = 0L
-                var r = py * 100 + 2
-                while (r < py * 100 + 98) {
-                  var c = px * 100 + 2
-                  while (c < px * 100 + 98) {
-                    sad += math.abs(da.samples(r * size + c) -
-                      db.samples((r + dy) * size + c + dx)).toLong
-                    c += 1
-                  }
-                  r += 1
-                }
-                if (sad < bestSad) { bestSad = sad; bestDy = dy; bestDx = dx }
-                dx += 1
-              }
-              dy += 1
-            }
-            ShiftRow(ta.image_id, py, px, bestDy, bestDx, bestSad)
-          }
-        }
-      }.toDF()
-  }
-
-  final case class BandingRow(image_id: String, best_lag: Int,
-                              score_q: Long, n_terms: Long)
-
-  /** Banding-period detector: the column-mean profile's autocorrelation
-    * at lags 2..32, scored by the floored per-term mean product so
-    * unequal overlap counts compare fairly (the [[graft.ops.MediaOps]]
-    * tempo discipline on the spatial axis); the winning lag is the
-    * stripe/banding period a scanner or compression stage imprinted.
-    * Column sums collapse the decode to 600 Longs per tile, then the lag
-    * scan is O(lags·cols).
-    */
-  def bandingPeriod(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[BandingRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val cs = new Array[Long](ext)
-        var r = 0
-        while (r < ext) {
-          var c = 0
-          while (c < ext) { cs(c) += d.samples(r * size + c); c += 1 }
-          r += 1
-        }
-        var bestLag = 0; var bestScore = Long.MinValue; var bestN = 0L
-        var lag = 2
-        while (lag <= 32) {
-          var s = 0L; var c = 0
-          while (c < ext - lag) { s += cs(c) * cs(c + lag); c += 1 }
-          val n = (ext - lag).toLong
-          val score = s / n
-          if (score > bestScore) { bestScore = score; bestLag = lag; bestN = n }
-          lag += 1
-        }
-        BandingRow(tl.image_id, bestLag, bestScore, bestN)
-      }
-    }.toDF()
-  }
-
-  /** Quantized-level histogram per tile: v ≫ 6 clamped to 0..63, one
-    * (image_id, level, n) row per occupied level — the shared input of
-    * histogram matching/equalization passes. Decode-once, ≤ 64 rows per
-    * tile.
-    */
-  def levelHistogram(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[(String, Int, Long)]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val h = new Array[Long](64)
-        var i = 0
-        while (i < size * size) {
-          h(math.min(63, math.max(0, d.samples(i) >> 6))) += 1
-          i += 1
-        }
-        Iterator.range(0, 64).filter(h(_) > 0)
-          .map(l => (tl.image_id, l, h(l)))
-      }
-    }.toDF("image_id", "level", "n")
-  }
-
-  final case class RowDefectRow(image_id: String, rank: Int, row: Int,
-                                delta_sum: Long)
-
-  /** Dead-row screen — the stuck-sensor-line detector: per row r ≥ 1 of
-    * the even 600² prefix, Σ_c |v(r,c) − v(r−1,c)|; the 3 LOWEST-delta
-    * rows (ties to the lower row index) are the repeated-line suspects a
-    * scanline-defect QA flags. Decode-once, 3 rows per image.
-    */
-  def rowDefects(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[RowDefectRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val deltas = Array.tabulate(ext - 1) { i =>
-          val r = i + 1
-          var s = 0L; var c = 0
-          while (c < ext) {
-            s += math.abs(d.samples(r * size + c) -
-              d.samples((r - 1) * size + c)).toLong
-            c += 1
-          }
-          (r, s)
-        }
-        deltas.sortBy { case (r, s) => (s, r) }.take(3).zipWithIndex
-          .map { case ((r, s), i) =>
-            RowDefectRow(tl.image_id, i + 1, r, s)
-          }.iterator
-      }
-    }.toDF()
-  }
-
-  final case class SymmetryRow(image_id: String, n_pairs: Long,
-                               h_absdiff: Long, v_absdiff: Long,
-                               hv_ratio_milli: Long)
-
-  /** Mirror-symmetry census: Σ|v(r,c) − v(r, W−1−c)| over left-half pairs
-    * (horizontal flip) and Σ|v(r,c) − v(H−1−r, c)| over top-half pairs
-    * (vertical flip), on the even 600² prefix — near-zero sums mean flip
-    * augmentation adds nothing; the h/v ratio (milli, floored) reads
-    * directional structure. Decode-once, one row per image.
-    */
-  def symmetryStats(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[SymmetryRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var hs = 0L; var vs = 0L
-        var r = 0
-        while (r < ext) {
-          var c = 0
-          while (c < ext / 2) {
-            hs += math.abs(d.samples(r * size + c) -
-              d.samples(r * size + (ext - 1 - c))).toLong
-            c += 1
-          }
-          r += 1
-        }
-        r = 0
-        while (r < ext / 2) {
-          var c = 0
-          while (c < ext) {
-            vs += math.abs(d.samples(r * size + c) -
-              d.samples((ext - 1 - r) * size + c)).toLong
-            c += 1
-          }
-          r += 1
-        }
-        val np = ext.toLong * (ext / 2)
-        val ratio = if (vs == 0L) 0L else hs * 1000L / vs
-        SymmetryRow(tl.image_id, np, hs, vs, ratio)
-      }
-    }.toDF()
-  }
-
-  /** Pairwise perceptual-hash Hamming-distance histogram — the radius
-    * tuning curve for [[phashNearDup]]: how many image pairs each Hamming
-    * threshold would merge, bucketed by 8 bits. Run on a SAMPLE corpus
-    * (this is the full-pairwise diagnostic that sizes the banded join,
-    * never the production path).
-    *
-    * @return (bucket = hd/8, n_pairs, min_hd, max_hd)
-    */
-  def phashHist(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[(String, Long)]
-    val hashes = tiles.mapPartitions { it =>
-      it.map { t =>
-        val samples = t.fmt match {
-          case "hgt" => graft.raster.Hgt.decode(t.bytes, t.w)
-          case _     => graft.raster.ImageCodec.decodeToGrid(t.bytes)._1
-        }
-        (t.image_id, Fidelity.phash(samples, t.w))
-      }
-    }.toDF("image_id", "phash")
-    val a = hashes.toDF("id_a", "pa")
-    val b = hashes.toDF("id_b", "pb")
-    a.crossJoin(broadcast(b)).filter(col("id_a") < col("id_b"))
-      .withColumn("hd", expr("bit_count(pa ^ pb)").cast("long"))
-      .withColumn("bucket", expr("hd DIV 8").cast("int"))
-      .groupBy("bucket").agg(count(lit(1)).as("n_pairs"),
-        min("hd").as("min_hd"), max("hd").as("max_hd"))
-  }
-
   def phashNearDup(tiles: Dataset[TileRow], radius: Int): DataFrame = {
     require(radius <= 3, s"4 bands guarantee recall only for radius <= 3, got $radius")
     implicit val enc = Encoders.product[(String, Long)]
@@ -3099,1298 +426,4 @@ object ImageOps {
       .filter(col("hamming") <= radius)
   }
 
-  /** Image near-dup CLUSTERING + keep-set: [[phashNearDup]]'s Hamming-band
-    * pair graph contracted to connected components via
-    * [[TextDedup.connectedComponentsStar]] (O(log n) rounds), keeping the
-    * lexicographically-least image per cluster — the image-side analogue of
-    * the text `dedup_cluster_keep` endgame, for when visual duplicates
-    * CHAIN (crop of a resize of a re-encode): pairwise dedup would keep one
-    * per PAIR, clustering keeps one per chain. Ids stay opaque strings
-    * end-to-end (component labels are string mins — same total order in
-    * any engine for ASCII ids).
-    *
-    * @return (image_id, cluster, keep) — cluster = min image_id of the
-    *         component; keep = this row is the cluster representative
-    */
-  def phashClusters(tiles: Dataset[TileRow], radius: Int): DataFrame = {
-    val pairs = phashNearDup(tiles, radius)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"))
-    val nodes = tiles.toDF().select(col("image_id").as("doc_id")).distinct()
-    TextDedup.connectedComponentsStar(pairs, nodes)
-      .select(col("doc_id").as("image_id"), col("comp").as("cluster"),
-        (col("doc_id") === col("comp")).as("keep"))
-  }
-
-  /** Per-image Harris corner census row. */
-  final case class HarrisRow(image_id: String, n_blocks: Long, n_corners: Long,
-                             r_max: Long, best_br: Int, best_bc: Int)
-
-  /** HARRIS corner census — the STRUCTURE-TENSOR detector next to the
-    * segment-test one ([[fastCorners]]): FAST fires on intensity contrast
-    * around a circle; Harris fires where the local gradient field spans TWO
-    * directions (the autocorrelation surface curves both ways), which is
-    * the geometric definition of a corner and the keypoint foundation of
-    * classic registration/SfM pipelines. Per non-overlapping 2×2 block of
-    * interior pixels the Sobel structure tensor
-    * `Sxx = Σgx², Syy = Σgy², Sxy = Σgx·gy` and the integer-scaled
-    * Harris–Stephens response with k = 1/16:
-    * {{{ R₁₆ = 16·(Sxx·Syy − Sxy²) − (Sxx + Syy)² }}}
-    * (16·R for real-valued R = det − k·trace², so sign and argmax are
-    * preserved and NO float enters the decision path — a single-pixel
-    * tensor would make det ≡ 0, hence the 2×2 aggregation window). Emitted:
-    * block count, corner count (R₁₆ > 0: det must beat the edge/flat
-    * penalty), the exact max response and its argmax block (ties → smallest
-    * (br, bc)). On the synthetic grids the positive responses localize the
-    * 8×8 quantization-lattice corners — the detector provably recovers the
-    * planted structure. Integer headroom: |g| ≤ 8·max ⇒ S ≤ 4·64·max² and
-    * R₁₆ ≤ 32·(4·64·max²)² < 2⁶³ at the gate's 12-bit sample depth.
-    * Decode-once mapPartitions, one row out per image, ZERO shuffle.
-    */
-  def harris(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[HarrisRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        @inline def gx(r: Int, c: Int): Long =
-          (d.samples((r - 1) * size + c + 1) + 2L * d.samples(r * size + c + 1) +
-            d.samples((r + 1) * size + c + 1)) -
-            (d.samples((r - 1) * size + c - 1) + 2L * d.samples(r * size + c - 1) +
-              d.samples((r + 1) * size + c - 1))
-        @inline def gy(r: Int, c: Int): Long =
-          (d.samples((r + 1) * size + c - 1) + 2L * d.samples((r + 1) * size + c) +
-            d.samples((r + 1) * size + c + 1)) -
-            (d.samples((r - 1) * size + c - 1) + 2L * d.samples((r - 1) * size + c) +
-              d.samples((r - 1) * size + c + 1))
-        val nb = (size - 3) / 2            // blocks per axis over rows/cols 1..size-2
-        var corners = 0L; var rMax = Long.MinValue; var bestBr = 0; var bestBc = 0
-        var br = 0
-        while (br < nb) {
-          var bc = 0
-          while (bc < nb) {
-            var sxx = 0L; var syy = 0L; var sxy = 0L
-            var dr = 0
-            while (dr < 2) {
-              var dc = 0
-              while (dc < 2) {
-                val x = gx(1 + 2 * br + dr, 1 + 2 * bc + dc)
-                val y = gy(1 + 2 * br + dr, 1 + 2 * bc + dc)
-                sxx += x * x; syy += y * y; sxy += x * y
-                dc += 1
-              }
-              dr += 1
-            }
-            val r16 = 16L * (sxx * syy - sxy * sxy) - (sxx + syy) * (sxx + syy)
-            if (r16 > 0) corners += 1L
-            if (r16 > rMax) { rMax = r16; bestBr = br; bestBc = bc }
-            bc += 1
-          }
-          br += 1
-        }
-        HarrisRow(tl.image_id, nb.toLong * nb, corners, rMax, bestBr, bestBc)
-      }
-    }.toDF()
-  }
-
-  /** Radial intensity profile: pixel count + exact intensity sum per
-    * squared-distance ring around the image centre — the rotational-
-    * symmetry / vignetting / centre-bias audit (lens falloff and centred
-    * watermarks show up as ring-mean trends no global histogram can see).
-    * Rings are SQUARED-distance buckets `((r−cr)² + (c−cc)²) div ringDiv`,
-    * capped at `nRings−1` — no sqrt anywhere, so every value is an exact
-    * integer both here and in the oracle's replay. Per-image local
-    * accumulation into `nRings` cells; decode-once, zero shuffle,
-    * `nRings` rows out per image.
-    *
-    * @return (image_id, ring, n_px, sum_v)
-    */
-  final case class RadialRow(image_id: String, ring: Int, n_px: Long,
-                             sum_v: Long)
-
-  def radialProfile(tiles: Dataset[TileRow], ringDiv: Long,
-                    nRings: Int): DataFrame = {
-    require(ringDiv > 0 && nRings > 0, s"bad ring spec: $ringDiv/$nRings")
-    implicit val enc = Encoders.product[RadialRow]
-    tiles.flatMap { tl =>
-      val d = TileCodec.decode(tl)
-      val size = d.size
-      val ctr = (size - 1) / 2
-      val n = new Array[Long](nRings)
-      val sv = new Array[Long](nRings)
-      var r = 0
-      while (r < size) {
-        var c = 0
-        val rBase = r * size
-        val dr2 = (r - ctr).toLong * (r - ctr)
-        while (c < size) {
-          val d2 = dr2 + (c - ctr).toLong * (c - ctr)
-          val ring = math.min(d2 / ringDiv, (nRings - 1).toLong).toInt
-          n(ring) += 1
-          sv(ring) += d.samples(rBase + c)
-          c += 1
-        }
-        r += 1
-      }
-      Iterator.range(0, nRings).filter(n(_) > 0)
-        .map(i => RadialRow(tl.image_id, i, n(i), sv(i)))
-    }.toDF()
-  }
-
-  /** Block-pooled minimum-seam energy (seam carving's core DP, Avidan–
-    * Shamir, public): pool the horizontal total-variation `Σ|v(r,c+1)−v(r,c)|`
-    * into a `nb×nb` block grid (nb = (size−1)/block), then run the
-    * classic vertical-seam recurrence
-    * `d(br,bc) = e(br,bc) + min(d(br−1, bc−1..bc+1))` top to bottom —
-    * the cheapest low-detail corridor through the image, the
-    * content-aware-crop / retarget primitive (and a localisation-grade
-    * "where is the boring stripe" signal for tile QA). Pooling first is
-    * the scale move: the DP state is nb integers instead of a full-res
-    * column vector, and the whole thing stays a per-row local pass —
-    * decode-once, zero shuffle, 5 integers out per image. Exact integer
-    * arithmetic end-to-end; ties in the final column pick the smallest
-    * index (total order, oracle-replicable).
-    *
-    * @return (image_id, n_block_rows, n_block_cols, seam_cost, end_col)
-    */
-  final case class SeamRow(image_id: String, n_block_rows: Int,
-                           n_block_cols: Int, seam_cost: Long, end_col: Long)
-
-  def seamEnergy(tiles: Dataset[TileRow], block: Int): DataFrame = {
-    require(block > 0, s"block must be positive: $block")
-    implicit val enc = Encoders.product[SeamRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val nb = (size - 1) / block
-        val px = nb * block
-        val e = Array.ofDim[Long](nb, nb)
-        var r = 0
-        while (r < px) {
-          var c = 0
-          val rBase = r * size
-          while (c < px) {
-            val diff = d.samples(rBase + c + 1) - d.samples(rBase + c)
-            e(r / block)(c / block) += math.abs(diff).toLong
-            c += 1
-          }
-          r += 1
-        }
-        var prev = e(0)
-        var br = 1
-        while (br < nb) {
-          val cur = new Array[Long](nb)
-          var bc = 0
-          while (bc < nb) {
-            var best = prev(bc)
-            if (bc > 0 && prev(bc - 1) < best) best = prev(bc - 1)
-            if (bc < nb - 1 && prev(bc + 1) < best) best = prev(bc + 1)
-            cur(bc) = e(br)(bc) + best
-            bc += 1
-          }
-          prev = cur
-          br += 1
-        }
-        var bestCost = Long.MaxValue; var bestCol = 0L
-        var bc = 0
-        while (bc < nb) {
-          if (prev(bc) < bestCost) { bestCost = prev(bc); bestCol = bc.toLong }
-          bc += 1
-        }
-        SeamRow(tl.image_id, nb, nb, bestCost, bestCol)
-      }
-    }.toDF()
-  }
-
-  /** Second-order intensity moments → equivalent-ellipse orientation, the
-    * shape descriptor behind blob orientation / registration priors (the
-    * trig-free sibling of [[positionMoments]]' first-order checksums).
-    *
-    * Per image the exact CENTRAL moments of the intensity mass: with
-    * `S = Σv`, `Sr = Σv·r`, `Sc = Σv·c` (row-major indices), the
-    * trunc-toward-zero rationals `mu20 = (S·Σv·r² − Sr²) div S`,
-    * `mu02 = (S·Σv·c² − Sc²) div S`, `mu11 = (S·Σv·rc − Sr·Sc) div S`
-    * (trunc is the convention Spark `DIV` and DuckDB `//` share, cf.
-    * [[Curation.readability]]) — numerators exceed int64 at 601², so
-    * they ride through BigInt (the oracle mirrors with HUGEINT) and only
-    * the int64 moments leave the row. Orientation is classified
-    * without trig: the major axis of the moment ellipse satisfies
-    * `tan(2θ) = 2μ11/(μ20−μ02)`, so (sign(μ11), sign(μ20−μ02)) pins θ to
-    * one of four octant classes (0 = r-axis-dominant & positive shear,
-    * …), and `ecc_num = (μ20−μ02)² + 4μ11²` (BigInt → div 2^40)
-    * orders elongation. Pure per-row integer arithmetic; decode-once,
-    * zero shuffle — at 100 TB this is a map-only pass whose output is 7
-    * integers per image.
-    */
-  final case class EllipseRow(image_id: String, s_v: Long, mu20: Long,
-                              mu02: Long, mu11: Long, orient: Int,
-                              ecc_q: Long)
-
-  def momentEllipse(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[EllipseRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        var s = 0L; var sr = 0L; var sc = 0L
-        var srr = 0L; var scc = 0L; var src = 0L
-        var r = 0
-        while (r < size) {
-          var c = 0
-          val rBase = r * size
-          while (c < size) {
-            val v: Long = d.samples(rBase + c)
-            s += v; sr += v * r; sc += v * c
-            srr += v * r * r; scc += v * c * c; src += v * r * c
-            c += 1
-          }
-          r += 1
-        }
-        // BigInt `/` truncates toward zero — the same convention as Spark
-        // DIV and DuckDB `//`, so the oracle replays it verbatim in HUGEINT
-        val bs = BigInt(s)
-        val mu20 = (bs * srr - BigInt(sr) * sr) / bs
-        val mu02 = (bs * scc - BigInt(sc) * sc) / bs
-        val mu11 = (bs * src - BigInt(sr) * sc) / bs
-        val diff = mu20 - mu02
-        val orient =
-          (if (mu11.signum >= 0) 0 else 2) + (if (diff.signum >= 0) 0 else 1)
-        val ecc = (diff * diff + 4 * mu11 * mu11) / (BigInt(1) << 40)
-        EllipseRow(tl.image_id, s, mu20.toLong, mu02.toLong, mu11.toLong,
-          orient, ecc.toLong)
-      }
-    }.toDF()
-  }
-
-  /** Projection-profile deskew estimate (Postl's method, public): for each
-    * integer shear candidate s in [-maxShear, maxShear], pixels are bucketed
-    * to the sheared row index `((r + maxShear)·size + s·c) div size` (the
-    * +maxShear offset keeps the numerator non-negative so trunc-div = floor
-    * on both engines) and the candidate's score is the energy of the sheared
-    * row-projection, `Σ_buckets p²` — text/structure rows align under the
-    * correct shear and maximize the profile energy. Exact Long integers end
-    * to end; the estimate is the argmax shear (smallest-s tie-break).
-    *
-    * 100 TB shape: decode-once mapPartitions, zero shuffle, one output row
-    * per image; per-image work is (2·maxShear+1)·size² integer adds. The
-    * scanned-corpus ingest step before any OCR or layout model.
-    *
-    * @return (image_id, best_shear, best_score, flat_score) — flat_score is
-    *         the s = 0 energy, so best_score/flat_score reads as the
-    *         alignment gain the deskew would buy
-    */
-  final case class DeskewRow(image_id: String, best_shear: Int,
-                             best_score: Long, flat_score: Long)
-
-  def deskew(tiles: Dataset[TileRow], maxShear: Int): DataFrame = {
-    require(maxShear > 0, s"maxShear must be positive: $maxShear")
-    implicit val enc = Encoders.product[DeskewRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val nBkt = size + 2 * maxShear + 1
-        var bestS = 0; var bestScore = Long.MinValue; var flat = 0L
-        var s = -maxShear
-        while (s <= maxShear) {
-          val p = new Array[Long](nBkt)
-          var r = 0
-          while (r < size) {
-            val rBase = r * size
-            val num0 = (r + maxShear) * size
-            var c = 0
-            while (c < size) {
-              p((num0 + s * c) / size) += d.samples(rBase + c).toLong
-              c += 1
-            }
-            r += 1
-          }
-          var score = 0L
-          var j = 0
-          while (j < nBkt) { score += p(j) * p(j); j += 1 }
-          if (s == 0) flat = score
-          if (score > bestScore) { bestScore = score; bestS = s }
-          s += 1
-        }
-        DeskewRow(tl.image_id, bestS, bestScore, flat)
-      }
-    }.toDF()
-  }
-
-  final case class CensusRow(image_id: String, popcnt: Int, n_pixels: Long)
-
-  /** 3×3 census-transform popcount histogram (Zabih–Woodfill 1994,
-    * public): for each interior pixel of the even 600² prefix, the number
-    * of its 8 neighbours strictly greater than the centre, binned 0..8 —
-    * the mass function of the illumination-invariant descriptor stereo
-    * and optical-flow matchers rank patches by. Decode-once
-    * mapPartitions; exactly 9 rows per image (empty bins emit 0).
-    */
-  def censusTransform(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[CensusRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val hist = new Array[Long](9)
-        var r = 1
-        while (r < ext - 1) {
-          var c = 1
-          while (c < ext - 1) {
-            val v = d.samples(r * size + c)
-            var k = 0
-            var dr = -1
-            while (dr <= 1) {
-              var dc = -1
-              while (dc <= 1) {
-                if ((dr != 0 || dc != 0) &&
-                  d.samples((r + dr) * size + (c + dc)) > v) k += 1
-                dc += 1
-              }
-              dr += 1
-            }
-            hist(k) += 1
-            c += 1
-          }
-          r += 1
-        }
-        (0 to 8).map(k => CensusRow(tl.image_id, k, hist(k)))
-      }
-    }.toDF()
-  }
-
-  final case class PitRow(image_id: String, n_interior: Long, n_pits: Long,
-                          depth_sum: Long)
-
-  /** D8 pit census: interior cells of the even 600² prefix strictly lower
-    * than all 8 neighbours, plus the total fill depth Σ(min neighbour −
-    * centre) — the depression inventory hydrological conditioning (pit
-    * filling before flow routing) is sized by. Decode-once mapPartitions,
-    * one row per tile.
-    */
-  def pitCensus(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[PitRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var interior = 0L; var pits = 0L; var depth = 0L
-        var r = 1
-        while (r < ext - 1) {
-          var c = 1
-          while (c < ext - 1) {
-            val v = d.samples(r * size + c).toInt
-            var nmin = Int.MaxValue
-            var dr = -1
-            while (dr <= 1) {
-              var dc = -1
-              while (dc <= 1) {
-                if (dr != 0 || dc != 0) {
-                  val nv = d.samples((r + dr) * size + (c + dc)).toInt
-                  if (nv < nmin) nmin = nv
-                }
-                dc += 1
-              }
-              dr += 1
-            }
-            if (nmin > v) { pits += 1; depth += (nmin - v).toLong }
-            interior += 1
-            c += 1
-          }
-          r += 1
-        }
-        PitRow(tl.image_id, interior, pits, depth)
-      }
-    }.toDF()
-  }
-
-  final case class PaletteRow(image_id: String, n_px: Long, n_distinct: Long,
-                              palette_sum: Long, err_sum: Long)
-
-  /** Popularity-quantization audit: the k most frequent sample values of
-    * the even 600² prefix (ties to the smaller value) form the palette;
-    * the report is the exact total L1 mapping error Σ count·min|v−p| —
-    * the palettization-loss number (GIF/PNG8-style popularity quantizers)
-    * computed on the per-value histogram, never per pixel twice.
-    * Decode-once, one row per image.
-    */
-  def popularityPalette(tiles: Dataset[TileRow], k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    implicit val enc = Encoders.product[PaletteRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val counts = scala.collection.mutable.LongMap.empty[Long]
-        var r = 0
-        while (r < ext) {
-          var c = 0
-          while (c < ext) {
-            val v = d.samples(r * size + c).toLong
-            counts(v) = counts.getOrElse(v, 0L) + 1L
-            c += 1
-          }
-          r += 1
-        }
-        val palette = counts.toSeq
-          .sortBy { case (v, n) => (-n, v) }.take(k).map(_._1).toArray
-        var err = 0L
-        counts.foreach { case (v, n) =>
-          var best = Long.MaxValue
-          var j = 0
-          while (j < palette.length) {
-            val e = math.abs(v - palette(j))
-            if (e < best) best = e
-            j += 1
-          }
-          err += n * best
-        }
-        PaletteRow(tl.image_id, ext.toLong * ext, counts.size.toLong,
-          palette.sum, err)
-      }
-    }.toDF()
-  }
-
-  final case class LsbRow(image_id: String, n_px: Long, n_flips: Long,
-                          flip_ppm: Long)
-
-  /** LSB watermark embed cost: pixels of the even 600² prefix whose
-    * least-significant bit disagrees with the deterministic payload bit
-    * ((r·7 + c·13) mod 2) — half the pixels in expectation; deviations
-    * say the LSB plane is not noise (already-quantized or synthetic
-    * content, where LSB embedding is visible). One row per image.
-    */
-  def lsbEmbedCost(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[LsbRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var flips = 0L
-        var r = 0
-        while (r < ext) {
-          var c = 0
-          while (c < ext) {
-            val lsb = d.samples(r * size + c) & 1
-            if (lsb != ((r * 7 + c * 13) % 2)) flips += 1
-            c += 1
-          }
-          r += 1
-        }
-        val n = ext.toLong * ext
-        LsbRow(tl.image_id, n, flips, 1000000L * flips / n)
-      }
-    }.toDF()
-  }
-
-  final case class TerrainRoseRow(image_id: String, octant: Int, band: Int,
-                                  n_cells: Long)
-
-  /** Terrain rose: aspect octant (0..7 counter-clockwise from +x by
-    * integer sign/ratio comparisons on the central-difference gradient,
-    * −1 = flat) × slope band (|∇|² thresholds 200/800) census per tile —
-    * the aspect/slope wheel a terrain summary prints, with no trig
-    * anywhere. Decode-once, ≤27 rows per image.
-    */
-  def terrainRose(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[TerrainRoseRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val census = scala.collection.mutable.Map.empty[(Int, Int), Long]
-        var r = 1
-        while (r < ext - 1) {
-          var c = 1
-          while (c < ext - 1) {
-            val gx = d.samples(r * size + c + 1).toLong -
-              d.samples(r * size + c - 1).toLong
-            val gy = d.samples((r + 1) * size + c).toLong -
-              d.samples((r - 1) * size + c).toLong
-            val s2 = gx * gx + gy * gy
-            val band = if (s2 <= 200) 0 else if (s2 <= 800) 1 else 2
-            val oct =
-              if (gx == 0 && gy == 0) -1
-              else if (gx > 0 && gy >= 0) { if (gx > gy) 0 else 1 }
-              else if (gx <= 0 && gy > 0) { if (gy > -gx) 2 else 3 }
-              else if (gx < 0 && gy <= 0) { if (-gx > -gy) 4 else 5 }
-              else { if (-gy > gx) 6 else 7 }
-            census((oct, band)) = census.getOrElse((oct, band), 0L) + 1L
-            c += 1
-          }
-          r += 1
-        }
-        census.toSeq.sortBy(_._1).map { case ((o, b), n) =>
-          TerrainRoseRow(tl.image_id, o, b, n)
-        }
-      }
-    }.toDF()
-  }
-
-  final case class BtcRow(image_id: String, n_blocks: Long, err_sum: Long,
-                          max_block_err: Long)
-
-  /** Block-truncation-coding audit (Delp–Mitchell 1979, public): per 4×4
-    * block, pixels split at the block mean (16·v ≥ Σ — no division), the
-    * two reconstruction levels are the floored low/high means, and the
-    * report is the exact L1 reconstruction error — the 2-bpp codec loss
-    * on this content. Decode-once, one row per image.
-    */
-  def btcAudit(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[BtcRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var blocks = 0L; var err = 0L; var mxe = 0L
-        var br = 0
-        while (br < ext) {
-          var bc = 0
-          while (bc < ext) {
-            var s16 = 0L
-            var i = 0
-            while (i < 16) {
-              s16 += d.samples((br + i / 4) * size + bc + i % 4).toLong
-              i += 1
-            }
-            var sl = 0L; var nl = 0L; var sh = 0L; var nh = 0L
-            i = 0
-            while (i < 16) {
-              val v = d.samples((br + i / 4) * size + bc + i % 4).toLong
-              if (16L * v >= s16) { sh += v; nh += 1 }
-              else { sl += v; nl += 1 }
-              i += 1
-            }
-            val a = if (nl == 0) 0L else sl / nl
-            val b = if (nh == 0) 0L else sh / nh
-            var be = 0L
-            i = 0
-            while (i < 16) {
-              val v = d.samples((br + i / 4) * size + bc + i % 4).toLong
-              be += math.abs(v - (if (16L * v >= s16) b else a))
-              i += 1
-            }
-            blocks += 1
-            err += be
-            if (be > mxe) mxe = be
-            bc += 4
-          }
-          br += 4
-        }
-        BtcRow(tl.image_id, blocks, err, mxe)
-      }
-    }.toDF()
-  }
-
-  final case class ArealRow(image_id: String, tr: Int, tc: Int,
-                            est_scaled: Long, true_sum: Long, abs_err: Long)
-
-  /** Areal interpolation audit: source zones are the 3×3 200-px grid with
-    * their exact sums; target zones the 4×4 150-px grid. The
-    * area-weighted estimate Σ overlap·srcSum ÷ 40000 (exact axis-aligned
-    * rectangle intersections, one floor at the end) is compared to the
-    * true target sums — the dasymetric-baseline error every zonal
-    * re-aggregation (census tract → hex cell) should report. One pass,
-    * 16 rows per image.
-    */
-  def arealInterp(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[ArealRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val srcSum = Array.ofDim[Long](3, 3)
-        val trueSum = Array.ofDim[Long](4, 4)
-        var r = 0
-        while (r < 600) {
-          var c = 0
-          while (c < 600) {
-            val v = d.samples(r * size + c).toLong
-            srcSum(r / 200)(c / 200) += v
-            trueSum(r / 150)(c / 150) += v
-            c += 1
-          }
-          r += 1
-        }
-        def overlap(a0: Int, a1: Int, b0: Int, b1: Int): Long =
-          math.max(0, math.min(a1, b1) - math.max(a0, b0)).toLong
-        for { tr <- 0 until 4; tc <- 0 until 4 } yield {
-          var num = 0L
-          for { sr <- 0 until 3; sc <- 0 until 3 } {
-            val ov = overlap(sr * 200, sr * 200 + 200, tr * 150, tr * 150 + 150) *
-              overlap(sc * 200, sc * 200 + 200, tc * 150, tc * 150 + 150)
-            num += ov * srcSum(sr)(sc)
-          }
-          val est = num / 40000L
-          ArealRow(tl.image_id, tr, tc, est, trueSum(tr)(tc),
-            math.abs(est - trueSum(tr)(tc)))
-        }
-      }
-    }.toDF()
-  }
-
-  final case class NormalDispRow(image_id: String, n_samples: Long,
-                                 sx: Long, sy: Long, sz: Long, r2: Long)
-
-  /** Surface-normal dispersion (the vector-strength roughness measure):
-    * resultant of the unnormalized central-difference normals
-    * (−dzdx, −dzdy, 2) over every 2nd interior pixel — R²/(ΣnΣn) → 1 on
-    * planar terrain, drops with directional disorder; all pieces exact
-    * integers (R² = sx²+sy²+sz²). One row per tile.
-    */
-  def normalDispersion(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[NormalDispRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var n = 0L; var sx = 0L; var sy = 0L
-        var r = 1
-        while (r < ext - 1) {
-          if (r % 2 == 1) {
-            var c = 1
-            while (c < ext - 1) {
-              if (c % 2 == 1) {
-                sx -= d.samples(r * size + c + 1).toLong -
-                  d.samples(r * size + c - 1).toLong
-                sy -= d.samples((r + 1) * size + c).toLong -
-                  d.samples((r - 1) * size + c).toLong
-                n += 1
-              }
-              c += 1
-            }
-          }
-          r += 1
-        }
-        val sz = 2L * n
-        NormalDispRow(tl.image_id, n, sx, sy, sz,
-          sx * sx + sy * sy + sz * sz)
-      }
-    }.toDF()
-  }
-
-  final case class SwathRow(image_id: String, bin: Long, n_cells: Long,
-                            min_v: Long, max_v: Long, sum_v: Long)
-
-  /** Swath profile along the fixed chord (100,0)→(500,599): cells within
-    * cross-track half-width 20 are projected onto the chord, binned into
-    * 50 along-track bins (integer cross-multiplied projection — no
-    * division until the final bin floor), and summarized min/max/sum —
-    * the corridor elevation profile geomorphologists cut across valleys.
-    * Decode-once, ≤50 rows per image.
-    */
-  def swathProfile(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[SwathRow]
-    val dr = 400L; val dcc = 599L
-    val dd = dr * dr + dcc * dcc
-    val w2dd = 400L * dd // half-width 20 => 20² · |d|²
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val mn = Array.fill(50)(Long.MaxValue)
-        val mx = Array.fill(50)(Long.MinValue)
-        val sm = new Array[Long](50)
-        val cnt = new Array[Long](50)
-        var r = 0
-        while (r < ext) {
-          var c = 0
-          while (c < ext) {
-            val tn = (r - 100L) * dr + c * dcc
-            if (tn >= 0 && tn <= dd) {
-              val cross = (r - 100L) * dcc - c * dr
-              if (cross * cross <= w2dd) {
-                val bin = math.min(49L, tn * 50L / dd).toInt
-                val v = d.samples(r * size + c).toLong
-                if (v < mn(bin)) mn(bin) = v
-                if (v > mx(bin)) mx(bin) = v
-                sm(bin) += v
-                cnt(bin) += 1
-              }
-            }
-            c += 1
-          }
-          r += 1
-        }
-        (0 until 50).filter(cnt(_) > 0).map(b =>
-          SwathRow(tl.image_id, b.toLong, cnt(b), mn(b), mx(b), sm(b)))
-      }
-    }.toDF()
-  }
-
-  final case class PeakRow(image_id: String, rank: Int, r: Int, c: Int,
-                           v: Long, sw: Long, swr: Long, swc: Long)
-
-  /** Strict local-maxima keypoints with sub-pixel centroid pieces: the 5
-    * highest interior peaks (ties to the smaller (r,c)), each with the
-    * 3×3 intensity-weighted centroid numerators Σv, Σv·r, Σv·c — the
-    * star/corner centroiding step (the sub-pixel position is the exact
-    * rational swr/sw, swc/sw). Decode-once, 5 rows per image.
-    */
-  def peakCentroids(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[PeakRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val peaks = scala.collection.mutable.ArrayBuffer.empty[(Long, Int, Int)]
-        var r = 1
-        while (r < ext - 1) {
-          var c = 1
-          while (c < ext - 1) {
-            val v = d.samples(r * size + c).toInt
-            var isMax = true
-            var dr2 = -1
-            while (dr2 <= 1 && isMax) {
-              var dc2 = -1
-              while (dc2 <= 1 && isMax) {
-                if ((dr2 != 0 || dc2 != 0) &&
-                  d.samples((r + dr2) * size + (c + dc2)) >= v) isMax = false
-                dc2 += 1
-              }
-              dr2 += 1
-            }
-            if (isMax) peaks += ((v.toLong, r, c))
-            c += 1
-          }
-          r += 1
-        }
-        peaks.sortBy { case (v, r2, c2) => (-v, r2, c2) }.take(5)
-          .zipWithIndex.map { case ((v, pr, pc), i) =>
-            var sw = 0L; var swr = 0L; var swc = 0L
-            var a = -1
-            while (a <= 1) {
-              var b = -1
-              while (b <= 1) {
-                val nv = d.samples((pr + a) * size + (pc + b)).toLong
-                sw += nv; swr += nv * (pr + a); swc += nv * (pc + b)
-                b += 1
-              }
-              a += 1
-            }
-            PeakRow(tl.image_id, i + 1, pr, pc, v, sw, swr, swc)
-          }
-      }
-    }.toDF()
-  }
-
-  final case class LapPyrRow(image_id: String, level: Int, n_px: Long,
-                             energy: Long)
-
-  /** Laplacian-pyramid detail energies (Burt–Adelson 1983, public) in
-    * exact integers: G1 = 2×2 block sums (×4 scale), G2 = 2×2 of G1
-    * (×16); level-0 detail Σ|4v − G1|, level-1 detail Σ|4·G1 − G2|, and
-    * the level-2 base mass ΣG2 — where the image keeps its detail across
-    * scales (blur/compression shifts this profile down-pyramid).
-    * Decode-once, 3 rows per image.
-    */
-  def laplacianPyramid(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[LapPyrRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val h1 = ext / 2
-        val h2 = ext / 4
-        val g1 = Array.ofDim[Long](h1 * h1)
-        var r = 0
-        while (r < ext) {
-          var c = 0
-          while (c < ext) {
-            g1((r / 2) * h1 + c / 2) += d.samples(r * size + c).toLong
-            c += 1
-          }
-          r += 1
-        }
-        val g2 = Array.ofDim[Long](h2 * h2)
-        var i = 0
-        while (i < h1 * h1) {
-          g2((i / h1 / 2) * h2 + (i % h1) / 2) += g1(i)
-          i += 1
-        }
-        var e0 = 0L
-        r = 0
-        while (r < ext) {
-          var c = 0
-          while (c < ext) {
-            e0 += math.abs(4L * d.samples(r * size + c) -
-              g1((r / 2) * h1 + c / 2))
-            c += 1
-          }
-          r += 1
-        }
-        var e1 = 0L
-        i = 0
-        while (i < h1 * h1) {
-          e1 += math.abs(4L * g1(i) - g2((i / h1 / 2) * h2 + (i % h1) / 2))
-          i += 1
-        }
-        var base = 0L
-        i = 0
-        while (i < h2 * h2) { base += g2(i); i += 1 }
-        Seq(LapPyrRow(tl.image_id, 0, ext.toLong * ext, e0),
-          LapPyrRow(tl.image_id, 1, h1.toLong * h1, e1),
-          LapPyrRow(tl.image_id, 2, h2.toLong * h2, base))
-      }
-    }.toDF()
-  }
-
-  final case class IrradianceRow(image_id: String, n_samples: Long,
-                                 irr_q_sum: Long, n_dark: Long)
-
-  /** Multi-azimuth irradiance proxy: at every 4th interior sample the
-    * central-difference surface normal (−dzdx, −dzdy, 2) dotted with six
-    * 60°-spaced sun vectors at 45° elevation (the shared ×1000 integer
-    * table `suns`), negative incidence clamped — the daily insolation
-    * index a single-azimuth hillshade cannot give. Exact integers.
-    */
-  def irradianceSum(tiles: Dataset[TileRow],
-                    suns: Seq[(Long, Long, Long)]): DataFrame = {
-    implicit val enc = Encoders.product[IrradianceRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var n = 0L; var irr = 0L; var dark = 0L
-        var r = 1
-        while (r < ext - 1) {
-          if (r % 4 == 1) {
-            var c = 1
-            while (c < ext - 1) {
-              if (c % 4 == 1) {
-                val dzdx = d.samples(r * size + c + 1).toLong -
-                  d.samples(r * size + c - 1).toLong
-                val dzdy = d.samples((r + 1) * size + c).toLong -
-                  d.samples((r - 1) * size + c).toLong
-                var sum = 0L; var allDark = true
-                suns.foreach { case (sx, sy, sz) =>
-                  val dot = -dzdx * sx - dzdy * sy + 2L * sz
-                  if (dot > 0) { sum += dot; allDark = false }
-                }
-                irr += sum
-                if (allDark) dark += 1
-                n += 1
-              }
-              c += 1
-            }
-          }
-          r += 1
-        }
-        IrradianceRow(tl.image_id, n, irr, dark)
-      }
-    }.toDF()
-  }
-
-  final case class DemosaicRow(image_id: String, n_interp: Long,
-                               sad_q: Long, max_err_q: Long)
-
-  /** Bayer-green demosaic audit (RGGB): at the R (even,even) and B
-    * (odd,odd) sites the green channel must be interpolated from the 4
-    * orthogonal neighbours — the ×4-scaled reconstruction error
-    * Σ|Σ₄nbrs − 4v| against the true field says how much detail bilinear
-    * demosaicing would lose on this content. Exact integers, interior
-    * pixels of the even 600² prefix, one row per image.
-    */
-  def demosaicError(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[DemosaicRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var n = 0L; var sad = 0L; var mx = 0L
-        var r = 1
-        while (r < ext - 1) {
-          var c = 1
-          while (c < ext - 1) {
-            if (r % 2 == c % 2) { // R (even,even) and B (odd,odd) sites
-              val v = d.samples(r * size + c).toLong
-              val g4 = d.samples((r - 1) * size + c).toLong +
-                d.samples((r + 1) * size + c).toLong +
-                d.samples(r * size + c - 1).toLong +
-                d.samples(r * size + c + 1).toLong
-              val e = math.abs(g4 - 4L * v)
-              n += 1; sad += e
-              if (e > mx) mx = e
-            }
-            c += 1
-          }
-          r += 1
-        }
-        DemosaicRow(tl.image_id, n, sad, mx)
-      }
-    }.toDF()
-  }
-
-  final case class LandformRow(image_id: String, class_s: Int, class_l: Int,
-                               n_pixels: Long)
-
-  /** Two-scale TPI landform census (Weiss 2001 landform classes, public):
-    * per interior pixel of the offset-100 100² window the sign of the
-    * cross-multiplied topographic position index at a 5×5 and a 13×13
-    * neighbourhood (ts = 25·v − Σ₅ₓ₅, tl = 169·v − Σ₁₃ₓ₁₃ — no division,
-    * both engines agree exactly); the 3×3 sign grid is the
-    * canyon/valley/flat/ridge/peak partition. Integral-image prefix sums
-    * in-memory, 9 census rows max per image.
-    */
-  def landformClass(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[LandformRow]
-    val off = 100; val n = 100
-    val rs = 2; val rl = 6
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        // integral image over the window, ii(r)(c) = Σ v[0..r)[0..c)
-        val ii = Array.ofDim[Long](n + 1, n + 1)
-        var r = 0
-        while (r < n) {
-          var c = 0
-          while (c < n) {
-            ii(r + 1)(c + 1) = ii(r)(c + 1) + ii(r + 1)(c) - ii(r)(c) +
-              d.samples((off + r) * size + (off + c)).toLong
-            c += 1
-          }
-          r += 1
-        }
-        def box(r: Int, c: Int, rad: Int): Long =
-          ii(r + rad + 1)(c + rad + 1) - ii(r - rad)(c + rad + 1) -
-            ii(r + rad + 1)(c - rad) + ii(r - rad)(c - rad)
-        val census = scala.collection.mutable.Map.empty[(Int, Int), Long]
-        r = rl
-        while (r < n - rl) {
-          var c = rl
-          while (c < n - rl) {
-            val v = d.samples((off + r) * size + (off + c)).toLong
-            val ts = 25L * v - box(r, c, rs)
-            val tln = 169L * v - box(r, c, rl)
-            val cs = if (ts > 0) 1 else if (ts < 0) -1 else 0
-            val cl = if (tln > 0) 1 else if (tln < 0) -1 else 0
-            census((cs, cl)) = census.getOrElse((cs, cl), 0L) + 1L
-            c += 1
-          }
-          r += 1
-        }
-        census.toSeq.sortBy(_._1).map { case ((cs, cl), cnt) =>
-          LandformRow(tl.image_id, cs, cl, cnt)
-        }
-      }
-    }.toDF()
-  }
-
-  final case class DiagProjRow(image_id: String, direction: String,
-                               n_lines: Long, min_sum: Long, max_sum: Long,
-                               sumsq: Long)
-
-  /** Diagonal (45°/135°) projection profiles over the even 600² prefix:
-    * per anti-diagonal (r+c) and diagonal (r−c) line the sample sum —
-    * the two Radon directions [[projections]]' row/column profiles miss,
-    * closing the 4-direction streak/skew detector. Per image one summary
-    * row per direction (extrema + second moment of the line sums).
-    */
-  def diagProjections(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[DiagProjRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val nd = 2 * ext - 1
-        val s1 = new Array[Long](nd)
-        val s2 = new Array[Long](nd)
-        var r = 0
-        while (r < ext) {
-          var c = 0
-          while (c < ext) {
-            val v = d.samples(r * size + c).toLong
-            s1(r + c) += v
-            s2(r - c + ext - 1) += v
-            c += 1
-          }
-          r += 1
-        }
-        def summarize(name: String, a: Array[Long]): DiagProjRow = {
-          var mn = Long.MaxValue; var mx = Long.MinValue; var sq = 0L
-          var i = 0
-          while (i < a.length) {
-            if (a(i) < mn) mn = a(i)
-            if (a(i) > mx) mx = a(i)
-            sq += a(i) * a(i)
-            i += 1
-          }
-          DiagProjRow(tl.image_id, name, a.length.toLong, mn, mx, sq)
-        }
-        Seq(summarize("anti", s1), summarize("main", s2))
-      }
-    }.toDF()
-  }
-
-  final case class DiffusionRow(image_id: String, n_interior: Long,
-                                sum_flux: Long, sum_abs_flux: Long,
-                                n_pos: Long)
-
-  /** One Perona–Malik anisotropic-diffusion step (1990, public) in exact
-    * integers: per interior pixel the 4-neighbour flux
-    * F = Σ ⌊10⁶/(1000+d²)⌋·d with d the neighbour difference — the
-    * edge-preserving conduction field (large gradients conduct less).
-    * Division is always positive-by-positive, so both engines floor
-    * identically; the report is the per-image flux field summary.
-    */
-  def peronaMalik(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[DiffusionRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var interior = 0L; var sf = 0L; var saf = 0L; var np = 0L
-        val offs = Array((1, 0), (-1, 0), (0, 1), (0, -1))
-        var r = 1
-        while (r < ext - 1) {
-          var c = 1
-          while (c < ext - 1) {
-            val v = d.samples(r * size + c).toLong
-            var f = 0L
-            var k = 0
-            while (k < 4) {
-              val dd = d.samples((r + offs(k)._1) * size + c + offs(k)._2)
-                .toLong - v
-              f += (1000000L / (1000L + dd * dd)) * dd
-              k += 1
-            }
-            sf += f
-            saf += math.abs(f)
-            if (f > 0) np += 1
-            interior += 1
-            c += 1
-          }
-          r += 1
-        }
-        DiffusionRow(tl.image_id, interior, sf, saf, np)
-      }
-    }.toDF()
-  }
-
-  final case class GlrlmRow(image_id: String, n_runs: Long, sre_q: Long,
-                            lre: Long, gln: Long, rp_permille: Long)
-
-  /** Gray-level run-length texture (Galloway 1975, public): horizontal
-    * runs of equal quantized level (v ≫ 6) over the even 600² prefix;
-    * exact pieces of the classic GLRLM features — run count, short-run
-    * emphasis Σ⌊10⁶/len²⌋ (per-run floors), long-run emphasis Σlen²,
-    * gray-level non-uniformity Σ(runs-per-level)², and run percentage in
-    * permille. Decode-once, one row per image.
-    */
-  def glrlm(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[GlrlmRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val perLevel = scala.collection.mutable.LongMap.empty[Long]
-        var runs = 0L; var sre = 0L; var lre = 0L
-        var r = 0
-        while (r < ext) {
-          var c = 0
-          while (c < ext) {
-            val lv = math.min(63, math.max(0, d.samples(r * size + c) >> 6))
-            var len = 1L
-            while (c + 1 < ext &&
-              math.min(63, math.max(0, d.samples(r * size + c + 1) >> 6)) == lv) {
-              len += 1; c += 1
-            }
-            runs += 1
-            sre += 1000000L / (len * len)
-            lre += len * len
-            perLevel(lv.toLong) = perLevel.getOrElse(lv.toLong, 0L) + 1L
-            c += 1
-          }
-          r += 1
-        }
-        var gln = 0L
-        perLevel.foreach { case (_, n) => gln += n * n }
-        GlrlmRow(tl.image_id, runs, sre, lre, gln,
-          1000L * runs / (ext.toLong * ext))
-      }
-    }.toDF()
-  }
-
-  final case class FillRow(image_id: String, n_cells: Long, n_raised: Long,
-                           fill_volume: Long)
-
-  /** Bounded-round depression filling (morphological reconstruction by
-    * erosion, the hydrological-conditioning step before D8 routing):
-    * Jacobi rounds of `f(p) = max(orig(p), min over 8 neighbours f(n))`
-    * from a +∞ interior / fixed border, on the `n`² window at offset
-    * `off` — `rounds` is set above the window's measured fixpoint depth,
-    * so the reported fill is the converged pit-free surface. Exact
-    * integers; per image the raised-cell count and fill volume.
-    */
-  def fillDepressions(tiles: Dataset[TileRow], off: Int, n: Int,
-                      rounds: Int): DataFrame = {
-    implicit val enc = Encoders.product[FillRow]
-    val BIG = 1000000000L
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val orig = Array.tabulate(n * n)(i =>
-          d.samples((off + i / n) * size + (off + i % n)).toLong)
-        def border(i: Int): Boolean = {
-          val r = i / n; val c = i % n
-          r == 0 || c == 0 || r == n - 1 || c == n - 1
-        }
-        var cur = Array.tabulate(n * n)(i => if (border(i)) orig(i) else BIG)
-        var k = 0
-        while (k < rounds) {
-          val nxt = new Array[Long](n * n)
-          var r = 0
-          while (r < n) {
-            var c = 0
-            while (c < n) {
-              val i = r * n + c
-              if (border(i)) nxt(i) = orig(i)
-              else {
-                var mn = Long.MaxValue
-                var dr = -1
-                while (dr <= 1) {
-                  var dc = -1
-                  while (dc <= 1) {
-                    if (dr != 0 || dc != 0) {
-                      val v = cur((r + dr) * n + (c + dc))
-                      if (v < mn) mn = v
-                    }
-                    dc += 1
-                  }
-                  dr += 1
-                }
-                nxt(i) = math.max(orig(i), mn)
-              }
-              c += 1
-            }
-            r += 1
-          }
-          cur = nxt
-          k += 1
-        }
-        var raised = 0L; var vol = 0L
-        var i = 0
-        while (i < n * n) {
-          if (cur(i) > orig(i)) { raised += 1; vol += cur(i) - orig(i) }
-          i += 1
-        }
-        FillRow(tl.image_id, (n.toLong * n), raised, vol)
-      }
-    }.toDF()
-  }
-
-  final case class ModeFilterRow(image_id: String, n_interior: Long,
-                                 n_changed: Long, l1_change: Long)
-
-  /** 3×3 mode-filter audit: per interior pixel the most frequent value of
-    * the 9-cell neighbourhood (ties to the smallest value); reported are
-    * the pixels the filter would change and the total L1 change — the
-    * impulse-noise repair estimate (mode filters fix salt noise that
-    * medians blur). Decode-once, one row per image.
-    */
-  def modeFilter(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[ModeFilterRow]
-    tiles.mapPartitions { it =>
-      it.map { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        var interior = 0L; var changed = 0L; var l1 = 0L
-        val vals = new Array[Int](9)
-        var r = 1
-        while (r < ext - 1) {
-          var c = 1
-          while (c < ext - 1) {
-            var i = 0
-            var dr = -1
-            while (dr <= 1) {
-              var dc = -1
-              while (dc <= 1) {
-                vals(i) = d.samples((r + dr) * size + (c + dc)).toInt
-                i += 1
-                dc += 1
-              }
-              dr += 1
-            }
-            var mode = 0; var bestCnt = 0
-            var j = 0
-            while (j < 9) {
-              var cnt = 0
-              var k = 0
-              while (k < 9) { if (vals(k) == vals(j)) cnt += 1; k += 1 }
-              if (cnt > bestCnt || (cnt == bestCnt && vals(j) < mode)) {
-                mode = vals(j); bestCnt = cnt
-              }
-              j += 1
-            }
-            val ctr = d.samples(r * size + c).toInt
-            if (mode != ctr) { changed += 1; l1 += math.abs(mode - ctr).toLong }
-            interior += 1
-            c += 1
-          }
-          r += 1
-        }
-        ModeFilterRow(tl.image_id, interior, changed, l1)
-      }
-    }.toDF()
-  }
-
-  final case class NyquistRow(image_id: String, by: Long, bx: Long,
-                              s_checker: Long, s_row: Long, s_col: Long)
-
-  /** Nyquist-component energy per 100² block: the three alternating-sign
-    * sums Σv·(−1)^(r+c) (checkerboard), Σv·(−1)^c (horizontal Nyquist)
-    * and Σv·(−1)^r (vertical) — the exact-integer detectors for the
-    * highest-frequency artifacts bad demosaicing or 2× decimation without
-    * a low-pass leaves behind. Decode-once, 36 rows per image.
-    */
-  def nyquistEnergy(tiles: Dataset[TileRow]): DataFrame = {
-    implicit val enc = Encoders.product[NyquistRow]
-    tiles.mapPartitions { it =>
-      it.flatMap { tl =>
-        val d = TileCodec.decode(tl)
-        val size = d.size
-        val ext = 600 min (size - size % 8)
-        val nb = ext / 100
-        val chk = Array.ofDim[Long](nb, nb)
-        val rw = Array.ofDim[Long](nb, nb)
-        val cl = Array.ofDim[Long](nb, nb)
-        var r = 0
-        while (r < nb * 100) {
-          var c = 0
-          while (c < nb * 100) {
-            val v = d.samples(r * size + c).toLong
-            val sr = if (c % 2 == 0) v else -v
-            val sc = if (r % 2 == 0) v else -v
-            val sk = if ((r + c) % 2 == 0) v else -v
-            chk(r / 100)(c / 100) += sk
-            rw(r / 100)(c / 100) += sr
-            cl(r / 100)(c / 100) += sc
-            c += 1
-          }
-          r += 1
-        }
-        for { by <- 0 until nb; bx <- 0 until nb }
-          yield NyquistRow(tl.image_id, by.toLong, bx.toLong,
-            chk(by)(bx), rw(by)(bx), cl(by)(bx))
-      }
-    }.toDF()
-  }
 }

@@ -175,18 +175,6 @@ object Fixtures {
          FROM sym s JOIN h${k - 1} hh ON hh.node = s.v) t
        GROUP BY u)"""
 
-  /** Six 60°-spaced sun vectors at 45° elevation, ×1000 integers —
-    * rounded ONCE here and embedded as literals in both the engine call
-    * and the oracle VALUES, so both sides share one integer table.
-    */
-  private[graft] val sunVectors: Seq[(Long, Long, Long)] = (0 until 6).map { k =>
-    val az = 2.0 * math.Pi * k.toDouble / 6.0
-    val ce = math.cos(math.Pi / 4.0)
-    (math.round(ce * math.cos(az) * 1000.0),
-      math.round(ce * math.sin(az) * 1000.0),
-      math.round(math.sin(math.Pi / 4.0) * 1000.0))
-  }
-
   /** Synthetic media metadata from supplier (closed-form, so the DuckDB
     * oracle can replay any byte of the generated payload; MediaOps.synth
     * builds the actual binary column from the same formula).

@@ -725,11 +725,10 @@ object OracleCtes {
        SELECT doc AS doc_id, min(other) AS comp, doc = min(other) AS keep
        FROM reach GROUP BY doc ORDER BY doc_id"""
 
-  /** Shared CTEs for the phash gates: recompute the 6×4 variant corpus's
-    * 64-bit perceptual hashes from the closed-form tile generator, band
-    * them 4×16 bits, and emit banded candidate pairs (`cand`). Ends
-    * unterminated — consumers append their own final SELECT (pair filter
-    * for img_phash_neardup, recursive component map for img_dedup_cluster).
+  /** CTEs of the img_phash_neardup oracle: recompute the 6×4 variant
+    * corpus's 64-bit perceptual hashes from the closed-form tile generator,
+    * band them 4×16 bits, and emit banded candidate pairs (`cand`). Ends
+    * unterminated — the oracle appends its pair filter.
     */
   private[graft] def phashPairCtes: String =
     """corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),

@@ -398,320 +398,6 @@ object OracleCtes2 {
          SELECT node, CAST(deg AS BIGINT) AS deg FROM d4 ORDER BY node"""
   }
 
-  /** Sobel oracle: both 3×3 kernels replayed over the closed-form curvy
-    * field (same grid recipe as the img_blur laplacian oracle, but the
-    * asymmetric Gy pins the south-first row orientation too).
-    */
-  private[graft] def sobelOracleSql: String = {
-    def v(c: String, r: String) = gridV(c, r)
-    val gx = s"((${v("c.range+1", "r.range-1")} + 2*${v("c.range+1", "r.range")} + ${v("c.range+1", "r.range+1")})" +
-      s" - (${v("c.range-1", "r.range-1")} + 2*${v("c.range-1", "r.range")} + ${v("c.range-1", "r.range+1")}))"
-    val gy = s"((${v("c.range-1", "r.range+1")} + 2*${v("c.range", "r.range+1")} + ${v("c.range+1", "r.range+1")})" +
-      s" - (${v("c.range-1", "r.range-1")} + 2*${v("c.range", "r.range-1")} + ${v("c.range+1", "r.range-1")}))"
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       g AS (SELECT swlng, swlat, $gx AS gx, $gy AS gy
-         FROM k, range(1,600) r, range(1,600) c)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(count(*) AS BIGINT) AS n_int,
-         CAST(sum(gx) AS BIGINT) AS gx_sum,
-         CAST(sum(gy) AS BIGINT) AS gy_sum,
-         CAST(sum(gx*gx + gy*gy) AS BIGINT) AS energy_sum,
-         CAST(max(gx*gx + gy*gy) AS BIGINT) AS energy_max
-       FROM g GROUP BY swlng, swlat ORDER BY image_id"""
-  }
-
-  /** Harris oracle: every 2×2 interior block's Sobel structure tensor from
-    * the closed-form field (299×299 blocks over rows/cols 1..598), the
-    * integer response 16·det − trace², census + argmax (ties → smallest
-    * (br, bc)). Sums cast to BIGINT (DuckDB integer sums widen to HUGEINT).
-    */
-  private[graft] def harrisOracleSql: String = {
-    val cb = "(1 + 2*bc.range + dc.range)"
-    val rb = "(1 + 2*br.range + dr.range)"
-    def v(dc: Int, dr: Int) = gridV(s"$cb+($dc)", s"$rb+($dr)")
-    val gx = s"((${v(1, -1)} + 2*${v(1, 0)} + ${v(1, 1)})" +
-      s" - (${v(-1, -1)} + 2*${v(-1, 0)} + ${v(-1, 1)}))"
-    val gy = s"((${v(-1, 1)} + 2*${v(0, 1)} + ${v(1, 1)})" +
-      s" - (${v(-1, -1)} + 2*${v(0, -1)} + ${v(1, -1)}))"
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       g AS (SELECT swlng, swlat, br.range AS br, bc.range AS bc,
-           $gx AS gx, $gy AS gy
-         FROM k, range(0,299) br, range(0,299) bc, range(0,2) dr, range(0,2) dc),
-       st AS (SELECT swlng, swlat, br, bc,
-           CAST(sum(gx*gx) AS BIGINT) AS sxx, CAST(sum(gy*gy) AS BIGINT) AS syy,
-           CAST(sum(gx*gy) AS BIGINT) AS sxy
-         FROM g GROUP BY 1, 2, 3, 4),
-       resp AS (SELECT swlng, swlat, br, bc,
-           16*(sxx*syy - sxy*sxy) - (sxx+syy)*(sxx+syy) AS r16 FROM st),
-       agg AS (SELECT swlng, swlat, CAST(count(*) AS BIGINT) AS n_blocks,
-           CAST(sum(CASE WHEN r16 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_corners
-         FROM resp GROUP BY 1, 2),
-       best AS (SELECT swlng, swlat, r16, br, bc,
-           row_number() OVER (PARTITION BY swlng, swlat ORDER BY r16 DESC, br, bc) AS rn
-         FROM resp)
-       SELECT (CASE WHEN a.swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(a.swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN a.swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(a.swlng) AS VARCHAR),3,'0')) AS image_id,
-         a.n_blocks, a.n_corners, CAST(b.r16 AS BIGINT) AS r_max,
-         CAST(b.br AS INT) AS best_br, CAST(b.bc AS INT) AS best_bc
-       FROM agg a JOIN best b ON a.swlng = b.swlng AND a.swlat = b.swlat AND b.rn = 1
-       ORDER BY image_id"""
-  }
-
-  /** Seam oracle: horizontal TV pooled to the 20×20 block grid (rows/cols
-    * 0..599, gradient to c+1), then the 19 vertical-seam DP rounds
-    * unrolled as min-join CTEs; final column ties break to the smallest
-    * index via the same (cost, bc) row_number order as the engine.
-    */
-  private[graft] def seamOracleSql: String = {
-    val v = gridV("c.range", "r.range")
-    val vn = gridV("c.range+1", "r.range")
-    val dp = (1 to 19).map { i =>
-      s"""d$i AS (SELECT e.swlng, e.swlat, e.bc, e.e + min(p.cost) AS cost
-         FROM e JOIN d${i - 1} p ON p.swlng = e.swlng AND p.swlat = e.swlat
-           AND abs(p.bc - e.bc) <= 1
-         WHERE e.br = $i GROUP BY e.swlng, e.swlat, e.bc, e.e)"""
-    }.mkString(",\n       ")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       e AS (SELECT swlng, swlat, r.range//30 AS br, c.range//30 AS bc,
-           CAST(sum(abs(($vn) - ($v))) AS BIGINT) AS e
-         FROM k, range(0,600) r, range(0,600) c GROUP BY 1, 2, 3, 4),
-       d0 AS (SELECT swlng, swlat, bc, e AS cost FROM e WHERE br = 0),
-       $dp,
-       best AS (SELECT swlng, swlat, cost, bc,
-           row_number() OVER (PARTITION BY swlng, swlat ORDER BY cost, bc) AS rn
-         FROM d19)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(20 AS INT) AS n_block_rows, CAST(20 AS INT) AS n_block_cols,
-         CAST(cost AS BIGINT) AS seam_cost, CAST(bc AS BIGINT) AS end_col
-       FROM best WHERE rn = 1 ORDER BY image_id"""
-  }
-
-  /** Haar oracle: every 2×2 block of the closed-form field (300×300 blocks
-    * over the even 600×600 prefix of the 601-size grid), the four subband
-    * values assembled from the same NW/NE/SW/SE corners the kernel reads.
-    */
-  private[graft] def haarOracleSql: String = {
-    val va = gridV("2*c.range", "2*r.range")
-    val vb = gridV("2*c.range+1", "2*r.range")
-    val vc = gridV("2*c.range", "2*r.range+1")
-    val vd = gridV("2*c.range+1", "2*r.range+1")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       b AS (SELECT swlng, swlat,
-           ($va + $vb + $vc + $vd) AS ll,
-           (($va + $vc) - ($vb + $vd)) AS lh,
-           (($va + $vb) - ($vc + $vd)) AS hl,
-           ($va - $vb - $vc + $vd) AS hh
-         FROM k, range(0,300) r, range(0,300) c)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(count(*) AS BIGINT) AS n_blocks,
-         CAST(sum(ll) AS BIGINT) AS ll_sum,
-         CAST(sum(lh*lh) AS BIGINT) AS lh_energy,
-         CAST(sum(hl*hl) AS BIGINT) AS hl_energy,
-         CAST(sum(hh*hh) AS BIGINT) AS hh_energy
-       FROM b GROUP BY swlng, swlat ORDER BY image_id"""
-  }
-
-  /** FAST-12 oracle: every circle pixel replayed from the closed-form
-    * curvy field (margin-3 interior, range(3,598)); bright/dark masks as
-    * bit sums generated from the SAME [[ops.ImageOps.FastOffsets]] table
-    * the kernel walks, contiguous-12 by the identical doubled-mask trick
-    * in DuckDB bit arithmetic.
-    */
-  /** Registration oracle: both epochs' FAST corner tables (epoch B's field
-    * is the generator shifted by (+2, +3)), descriptor equi-join,
-    * displacement vote, per-image mode.
-    */
-  private[graft] def registerOracleSql: String = {
-    val thr = 2
-    def run12(mm: String) = (1 to 11).map(k => s"($mm >> $k)")
-      .mkString(s"(($mm & ", " & ", ") & 65535) <> 0")
-    def cornerCtes(tag: String, sc: Int, sr: Int): String = {
-      def v(dc: Int, dr: Int) =
-        gridV(s"c.range+(${dc + sc})", s"r.range+(${dr + sr})")
-      def mask(cmp: String) = ops.ImageOps.FastOffsets.zipWithIndex.map {
-        case ((dr, dc), i) =>
-          s"(CASE WHEN ${v(dc, dr)} $cmp THEN ${1 << i} ELSE 0 END)"
-      }.mkString(" + ")
-      val bm = mask(s">= ${v(0, 0)} + $thr")
-      val dm = mask(s"<= ${v(0, 0)} - $thr")
-      s"""${tag}m AS MATERIALIZED (SELECT swlng, swlat, r.range AS r, c.range AS c,
-            ${v(0, 0)} AS v0, $bm AS bm, $dm AS dm
-          FROM k, range(3,598) r, range(3,598) c),
-         ${tag}t AS (SELECT swlng, swlat, r, c, v0, bm, dm,
-            ((CAST(bm AS BIGINT) << 16) | CAST(bm AS BIGINT)) AS bmm,
-            ((CAST(dm AS BIGINT) << 16) | CAST(dm AS BIGINT)) AS dmm FROM ${tag}m),
-         $tag AS MATERIALIZED (SELECT swlng, swlat, r, c,
-             ((((CAST(bm AS BIGINT) << 16) | CAST(dm AS BIGINT)) << 12)
-               | (CAST(v0 AS BIGINT) % 4096)) AS code
-           FROM ${tag}t WHERE (${run12("bmm")}) OR (${run12("dmm")}))"""
-    }
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       ${cornerCtes("cna", 0, 0)},
-       ${cornerCtes("cnb", 3, 2)},
-       v AS (SELECT a.swlng, a.swlat, a.r - b.r AS dr, a.c - b.c AS dc,
-           count(*) AS n_votes
-         FROM cna a JOIN cnb b ON b.swlng = a.swlng AND b.swlat = a.swlat
-           AND b.code = a.code
-         GROUP BY 1, 2, 3, 4),
-       tt AS (SELECT swlng, swlat, CAST(sum(n_votes) AS BIGINT) AS n_matches
-         FROM v GROUP BY 1, 2),
-       rk AS (SELECT *, row_number() OVER (PARTITION BY swlng, swlat
-           ORDER BY n_votes DESC, dr, dc) AS rn FROM v)
-       SELECT (CASE WHEN rk.swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(rk.swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN rk.swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(rk.swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(dr AS INT) AS dr, CAST(dc AS INT) AS dc,
-         CAST(n_votes AS BIGINT) AS n_votes, tt.n_matches
-       FROM rk JOIN tt ON tt.swlng = rk.swlng AND tt.swlat = rk.swlat
-       WHERE rn = 1 ORDER BY image_id"""
-  }
-
-  private[graft] def fastOracleSql: String = {
-    val thr = 2
-    def v(dc: Int, dr: Int) =
-      gridV(s"c.range+($dc)", s"r.range+($dr)")
-    def mask(cmp: String) = ops.ImageOps.FastOffsets.zipWithIndex.map {
-      case ((dr, dc), i) =>
-        s"(CASE WHEN ${v(dc, dr)} $cmp THEN ${1 << i} ELSE 0 END)"
-    }.mkString(" + ")
-    val bm = mask(s">= ${v(0, 0)} + $thr")
-    val dm = mask(s"<= ${v(0, 0)} - $thr")
-    def run12(mm: String) = (1 to 11).map(k => s"($mm >> $k)")
-      .mkString(s"(($mm & ", " & ", ") & 65535) <> 0")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       m AS (SELECT swlng, swlat, $bm AS bm, $dm AS dm
-         FROM k, range(3,598) r, range(3,598) c),
-       t AS (SELECT swlng, swlat,
-           ((CAST(bm AS BIGINT) << 16) | CAST(bm AS BIGINT)) AS bmm,
-           ((CAST(dm AS BIGINT) << 16) | CAST(dm AS BIGINT)) AS dmm FROM m),
-       f AS (SELECT swlng, swlat,
-           CASE WHEN ${run12("bmm")} THEN 1 ELSE 0 END AS isb,
-           CASE WHEN ${run12("dmm")} THEN 1 ELSE 0 END AS isd FROM t)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(count(*) AS BIGINT) AS n_tested,
-         CAST(sum(isb) AS BIGINT) AS n_bright,
-         CAST(sum(isd) AS BIGINT) AS n_dark,
-         CAST(sum(CASE WHEN isb = 1 OR isd = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_corners
-       FROM f GROUP BY swlng, swlat ORDER BY image_id"""
-  }
-
-  /** LBP oracle: every interior neighborhood replayed from the closed
-    * form; bit weights generated from the SAME [[ops.ImageOps.LbpOffsets]]
-    * table the kernel walks.
-    */
-  private[graft] def lbpOracleSql: String = {
-    def v(dc: Int, dr: Int) = gridV(s"c.range+($dc)", s"r.range+($dr)")
-    val code = ops.ImageOps.LbpOffsets.zipWithIndex.map {
-      case ((dr, dc), i) =>
-        s"(CASE WHEN ${v(dc, dr)} >= ${v(0, 0)} THEN ${1 << i} ELSE 0 END)"
-    }.mkString(" + ")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       p AS (SELECT swlng, swlat, $code AS code
-         FROM k, range(1,600) r, range(1,600) c)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(code AS INT) AS code,
-         CAST(count(*) AS BIGINT) AS n
-       FROM p GROUP BY swlng, swlat, code ORDER BY image_id, code"""
-  }
-
-  /** Bit-plane oracle: all samples from the closed form, per-plane set
-    * counts via `(v // 2^b) % 2` (samples are non-negative, so integer
-    * division matches the kernel's shift-and-mask exactly).
-    */
-  private[graft] def bitPlanesOracleSql: String = {
-    val v = gridV("c.range", "r.range")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       px AS (SELECT swlng, swlat, $v AS v
-         FROM k, range(0,601) r, range(0,601) c)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(b.range AS INT) AS plane,
-         CAST(sum((v // (1 << CAST(b.range AS INT))) % 2) AS BIGINT) AS n_set
-       FROM px, range(0, 12) b
-       GROUP BY swlng, swlat, b.range ORDER BY image_id, plane"""
-  }
-
-  /** Roughness-pyramid oracle: per depth, block ranges as a GROUP BY on
-    * the (r//bs, c//bs) block grid of the closed-form field, then the
-    * per-image Σ/max rollup; depths unrolled as a UNION ALL.
-    */
-  private[graft] def roughnessOracleSql: String = {
-    val v = gridV("c.range", "r.range")
-    val parts = (0 until 4).map { dep =>
-      val nb = 1 << dep
-      val bs = 600 / nb
-      s"""SELECT swlng, swlat, $dep AS depth,
-          CAST(${nb.toLong * nb} AS BIGINT) AS n_blocks,
-          CAST(sum(rng) AS BIGINT) AS range_sum,
-          CAST(max(rng) AS BIGINT) AS range_max
-        FROM (SELECT swlng, swlat, (r.range // $bs) AS br,
-            (c.range // $bs) AS bc, max($v) - min($v) AS rng
-          FROM k, range(0,600) r, range(0,600) c
-          GROUP BY 1, 2, 3, 4) GROUP BY 1, 2, 3"""
-    }.mkString("\n         UNION ALL ")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(depth AS INT) AS depth, n_blocks, range_sum, range_max
-       FROM ($parts) ORDER BY image_id, depth"""
-  }
-
-  /** Quadtree-leaf oracle: every depth's block ranges from the closed-form
-    * field (same grid GROUP BY as the roughness oracle), then the leaf
-    * predicate replayed declaratively — a block is a leaf iff its own range
-    * stops the split (rng ≤ thr, or the depth cap) AND every strict
-    * ancestor split (rng > thr), the ancestor found by integer-dividing the
-    * block coordinates.
-    */
-  private[graft] def quadtreeOracleSql: String = {
-    val v = gridV("c.range", "r.range")
-    val parts = (0 to 3).map { dep =>
-      val bs = 600 >> dep
-      s"""SELECT swlng, swlat, $dep AS depth, (r.range // $bs) AS br,
-            (c.range // $bs) AS bc, max($v) - min($v) AS rng
-          FROM k, range(0,600) r, range(0,600) c
-          GROUP BY 1, 2, 3, 4, 5"""
-    }.mkString("\n         UNION ALL ")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       blk AS ($parts)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(depth AS INT) AS depth, CAST(br AS INT) AS br,
-         CAST(bc AS INT) AS bc, CAST(rng AS BIGINT) AS rng
-       FROM blk b
-       WHERE (b.rng <= 770 OR b.depth = 3)
-         AND NOT EXISTS (SELECT 1 FROM blk anc
-           WHERE anc.swlng = b.swlng AND anc.swlat = b.swlat
-             AND anc.depth < b.depth AND anc.rng <= 770
-             AND anc.br = b.br // (1 << (b.depth - anc.depth))
-             AND anc.bc = b.bc // (1 << (b.depth - anc.depth)))
-       ORDER BY image_id, depth, br, bc"""
-  }
-
   /** Hilbert-key oracle: the published xy→d recurrence unrolled as 8 CTE
     * steps — quadrant digit `(3·rx)⊕ry` written as the polynomial
     * `3rx + ry − 2·rx·ry` (rx, ry ∈ {0,1}), then the reflect+transpose
@@ -805,82 +491,6 @@ object OracleCtes2 {
        ORDER BY qid, step"""
   }
 
-  /** Median-census oracle: the 9 closed-form neighbour values per interior
-    * pixel as a list, median = list_sort(...)[5], image rollup in exact
-    * integers.
-    */
-  /** Kuwahara oracle: the four 3×3 quadrant (Σx, Σx²) pairs per interior
-    * pixel spelled out over the closed-form grid, min-variance pick by the
-    * same `9·Σx² − (Σx)²` comparison with lowest-index ties, floor-mean
-    * output.
-    */
-  private[graft] def kuwaharaOracleSql: String = {
-    def v(dc: Int, dr: Int) = gridV(s"c.range+($dc)", s"r.range+($dr)")
-    def quad(rs: Seq[Int], cs: Seq[Int]) =
-      for { dr <- rs; dc <- cs } yield v(dc, dr)
-    val quads = Seq(
-      quad(-2 to 0, -2 to 0), quad(-2 to 0, 0 to 2),
-      quad(0 to 2, -2 to 0), quad(0 to 2, 0 to 2))
-    val sums = quads.zipWithIndex.map { case (q, i) =>
-      s"(${q.mkString(" + ")}) AS s$i" }.mkString(",\n           ")
-    val ssqs = quads.zipWithIndex.map { case (q, i) =>
-      s"(${q.map(x => s"$x*$x").mkString(" + ")}) AS ss$i" }
-      .mkString(",\n           ")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       px AS (SELECT swlng, swlat, ${v(0, 0)} AS v0,
-           $sums,
-           $ssqs
-         FROM k, range(2,599) r, range(2,599) c),
-       nv AS (SELECT swlng, swlat, v0, s0, s1, s2, s3,
-           9*ss0 - s0*s0 AS n0, 9*ss1 - s1*s1 AS n1,
-           9*ss2 - s2*s2 AS n2, 9*ss3 - s3*s3 AS n3 FROM px),
-       pick AS (SELECT swlng, swlat, v0,
-           CASE WHEN n0 <= n1 AND n0 <= n2 AND n0 <= n3 THEN 0
-                WHEN n1 <= n2 AND n1 <= n3 THEN 1
-                WHEN n2 <= n3 THEN 2 ELSE 3 END AS q,
-           CASE WHEN n0 <= n1 AND n0 <= n2 AND n0 <= n3 THEN s0 // 9
-                WHEN n1 <= n2 AND n1 <= n3 THEN s1 // 9
-                WHEN n2 <= n3 THEN s2 // 9 ELSE s3 // 9 END AS outv
-         FROM nv)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(count(*) AS BIGINT) AS n_px,
-         CAST(sum(CASE WHEN q = 0 THEN 1 ELSE 0 END) AS BIGINT) AS q0,
-         CAST(sum(CASE WHEN q = 1 THEN 1 ELSE 0 END) AS BIGINT) AS q1,
-         CAST(sum(CASE WHEN q = 2 THEN 1 ELSE 0 END) AS BIGINT) AS q2,
-         CAST(sum(CASE WHEN q = 3 THEN 1 ELSE 0 END) AS BIGINT) AS q3,
-         CAST(sum(outv) AS BIGINT) AS sum_out,
-         CAST(sum(abs(outv - v0)) AS BIGINT) AS sum_absdiff
-       FROM pick GROUP BY 1 ORDER BY image_id"""
-  }
-
-  /** Structure-tensor oracle: the same central differences over the
-    * closed-form grid, block moments by GROUP BY.
-    */
-  private[graft] def structureTensorOracleSql: String = {
-    def v(dc: Int, dr: Int) = gridV(s"c.range+($dc)", s"r.range+($dr)")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       g AS (SELECT swlng, swlat, (r.range - 1) // 100 AS py,
-           (c.range - 1) // 100 AS px,
-           (${v(1, 0)}) - (${v(-1, 0)}) AS gx,
-           (${v(0, 1)}) - (${v(0, -1)}) AS gy
-         FROM k, range(1,600) r, range(1,600) c),
-       b AS (SELECT swlng, swlat, py, px, CAST(count(*) AS BIGINT) AS n_px,
-           CAST(sum(gx*gx) AS BIGINT) AS sxx,
-           CAST(sum(gy*gy) AS BIGINT) AS syy,
-           CAST(sum(gx*gy) AS BIGINT) AS sxy
-         FROM g GROUP BY 1, 2, 3, 4)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(py AS INT) AS py, CAST(px AS INT) AS px, n_px, sxx, syy, sxy,
-         (sxx - syy) * (sxx - syy) + 4 * sxy * sxy AS coherence_num
-       FROM b ORDER BY image_id, py, px"""
-  }
-
   /** Farthest-first oracle: 4 unrolled pick rounds, each the LEAST of the
     * exact integer distances to every prior pivot, top-1 by
     * (d2 desc, vec_id).
@@ -911,134 +521,6 @@ object OracleCtes2 {
        UNION ALL SELECT 3, vec_id, d2 FROM p3
        UNION ALL SELECT 4, vec_id, d2 FROM p4
        ORDER BY pick_no"""
-  }
-
-  /** Block-diversity oracle: value counts per 100² block, distinct/range
-    * rollup + smallest-tie mode by rank.
-    */
-  private[graft] def blockDiversityOracleSql: String = {
-    val v = gridV("c.range", "r.range")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       g AS (SELECT swlng, swlat, r.range // 100 AS py, c.range // 100 AS px,
-           $v AS v
-         FROM k, range(0,600) r, range(0,600) c),
-       vc AS (SELECT swlng, swlat, py, px, v, CAST(count(*) AS BIGINT) AS cnt
-         FROM g GROUP BY 1, 2, 3, 4, 5),
-       st AS (SELECT swlng, swlat, py, px,
-           CAST(count(*) AS BIGINT) AS n_distinct,
-           CAST(min(v) AS BIGINT) AS min_v, CAST(max(v) AS BIGINT) AS max_v
-         FROM vc GROUP BY 1, 2, 3, 4),
-       md AS (SELECT swlng, swlat, py, px, CAST(v AS BIGINT) AS mode_v,
-           cnt AS mode_n, row_number() OVER (PARTITION BY swlng, swlat, py, px
-             ORDER BY cnt DESC, v) AS rn
-         FROM vc)
-       SELECT (CASE WHEN st.swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(st.swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN st.swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(st.swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(st.py AS INT) AS py, CAST(st.px AS INT) AS px,
-         CAST(10000 AS BIGINT) AS n_px, n_distinct, min_v, max_v,
-         mode_v, mode_n
-       FROM st JOIN md ON md.swlng = st.swlng AND md.swlat = st.swlat
-         AND md.py = st.py AND md.px = st.px AND md.rn = 1
-       ORDER BY image_id, py, px"""
-  }
-
-  /** Blockiness oracle: horizontal + vertical adjacent |Δ| over the 600²
-    * prefix, split by 8-divisible boundary index.
-    */
-  private[graft] def blockinessOracleSql: String = {
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       h AS (SELECT swlng, swlat,
-           abs((${gridV("c.range", "r.range")}) - (${gridV("c.range-1", "r.range")})) AS dv,
-           CASE WHEN c.range % 8 = 0 THEN 1 ELSE 0 END AS isb
-         FROM k, range(0,600) r, range(1,600) c),
-       vv AS (SELECT swlng, swlat,
-           abs((${gridV("c.range", "r.range")}) - (${gridV("c.range", "r.range-1")})) AS dv,
-           CASE WHEN r.range % 8 = 0 THEN 1 ELSE 0 END AS isb
-         FROM k, range(1,600) r, range(0,600) c),
-       u AS (SELECT * FROM h UNION ALL SELECT * FROM vv),
-       ag AS (SELECT swlng, swlat,
-           CAST(sum(CASE WHEN isb = 1 THEN dv ELSE 0 END) AS BIGINT) AS b_sum,
-           CAST(sum(isb) AS BIGINT) AS b_n,
-           CAST(sum(CASE WHEN isb = 0 THEN dv ELSE 0 END) AS BIGINT) AS i_sum,
-           CAST(sum(1 - isb) AS BIGINT) AS i_n
-         FROM u GROUP BY 1, 2)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         b_sum, b_n, i_sum, i_n,
-         CASE WHEN i_sum = 0 OR b_n = 0 THEN CAST(0 AS BIGINT)
-              ELSE b_sum * i_n * 1000 // (i_sum * b_n) END AS blockiness_milli
-       FROM ag ORDER BY image_id"""
-  }
-
-  /** Bayer-dither oracle: the index-dilation matrix replayed as modular
-    * bit arithmetic, clamped v≫6 level, per-cell rollup.
-    */
-  private[graft] def bayerOracleSql: String = {
-    val v = gridV("c.range", "r.range")
-    val bcell = "((rr%2 + cc%2) % 2)*32 + (rr%2)*16" +
-      " + (((rr//2)%2 + (cc//2)%2) % 2)*8 + ((rr//2)%2)*4" +
-      " + (((rr//4)%2 + (cc//4)%2) % 2)*2 + ((rr//4)%2)"
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       g AS (SELECT swlng, swlat, (r.range % 8) AS rr, (c.range % 8) AS cc,
-           $v AS v
-         FROM k, range(0,601) r, range(0,601) c),
-       b AS (SELECT swlng, swlat, $bcell AS bcell,
-           greatest(0, least(63, v // 64)) AS lvl FROM g)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(bcell AS INT) AS bcell, CAST(count(*) AS BIGINT) AS n_px,
-         CAST(sum(CASE WHEN lvl > bcell THEN 1 ELSE 0 END) AS BIGINT) AS n_on
-       FROM b GROUP BY 1, 2 ORDER BY image_id, bcell"""
-  }
-
-  private[graft] def medianOracleSql: String = {
-    def v(dc: Int, dr: Int) = gridV(s"c.range+($dc)", s"r.range+($dr)")
-    val nine = (for { dr <- -1 to 1; dc <- -1 to 1 } yield v(dc, dr)).mkString(", ")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       px AS (SELECT swlng, swlat, ${v(0, 0)} AS v0, [$nine] AS nb
-         FROM k, range(1,599) r, range(1,599) c),
-       m AS (SELECT swlng, swlat, v0, list_sort(nb)[5] AS med FROM px)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(count(*) AS BIGINT) AS n_px,
-         CAST(sum(CASE WHEN med <> v0 THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-         CAST(sum(abs(med - v0)) AS BIGINT) AS sum_abs,
-         CAST(max(abs(med - v0)) AS BIGINT) AS max_abs
-       FROM m GROUP BY 1 ORDER BY image_id"""
-  }
-
-  /** Distance-transform oracle: brute-force `min |Δi|+|Δj|` from every
-    * stride-10 lattice cell to the high set — the naive O(cells·high)
-    * definition the engine's two-scan DP answers in O(cells).
-    */
-  private[graft] def distanceOracleSql: String = {
-    val v = gridV("j.range*10", "i.range*10")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       g AS (SELECT swlng, swlat, i.range AS i, j.range AS j, $v AS v
-         FROM k, range(0,60) i, range(0,60) j),
-       h AS (SELECT swlng, swlat, i, j FROM g WHERE v >= 3600),
-       d AS (SELECT g.swlng, g.swlat, g.i, g.j,
-           min(abs(g.i - h.i) + abs(g.j - h.j)) AS dt
-         FROM g JOIN h ON h.swlng = g.swlng AND h.swlat = g.swlat
-         GROUP BY 1, 2, 3, 4),
-       hc AS (SELECT swlng, swlat, CAST(count(*) AS BIGINT) AS n_high
-         FROM h GROUP BY 1, 2)
-       SELECT (CASE WHEN d.swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(d.swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN d.swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(d.swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(3600 AS BIGINT) AS n_cells, hc.n_high,
-         CAST(sum(dt) AS BIGINT) AS sum_dt, CAST(max(dt) AS BIGINT) AS max_dt
-       FROM d JOIN hc ON hc.swlng = d.swlng AND hc.swlat = d.swlat
-       GROUP BY 1, 2, 3 ORDER BY image_id"""
   }
 
   /** Fréchet oracle: the coupling DP unrolled as one CTE per anti-diagonal
@@ -1223,34 +705,6 @@ object OracleCtes2 {
        FROM ($out) ORDER BY traj_id, step, node_id"""
   }
 
-  /** Hough oracle: the same central-difference edge mask and 4 lattice
-    * direction families as integer vote counts, top-5 per image.
-    */
-  private[graft] def houghOracleSql: String = {
-    def v(dc: Int, dr: Int) = gridV(s"c.range+($dc)", s"r.range+($dr)")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       g AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
-           (${v(1, 0)} - ${v(-1, 0)}) AS gx,
-           (${v(0, 1)} - ${v(0, -1)}) AS gy
-         FROM k, range(1,599) r, range(1,599) c),
-       e AS (SELECT swlng, swlat, r, c FROM g WHERE gx*gx + gy*gy >= 200),
-       h AS (SELECT swlng, swlat, 0 AS dir, c // 8 AS rho_b FROM e
-         UNION ALL SELECT swlng, swlat, 1, r // 8 FROM e
-         UNION ALL SELECT swlng, swlat, 2, (r + c) // 8 FROM e
-         UNION ALL SELECT swlng, swlat, 3, (r - c + 599) // 8 FROM e),
-       cnt AS (SELECT swlng, swlat, dir, rho_b, count(*) AS n
-         FROM h GROUP BY 1, 2, 3, 4),
-       rkd AS (SELECT *, row_number() OVER (PARTITION BY swlng, swlat
-           ORDER BY n DESC, dir, rho_b) AS rk FROM cnt)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(rk AS INT) AS rk, CAST(dir AS INT) AS dir,
-         CAST(rho_b AS INT) AS rho_b, CAST(n AS BIGINT) AS n
-       FROM rkd WHERE rk <= 5 ORDER BY image_id, rk"""
-  }
-
   /** PPR oracle: the pagerank recurrence with the teleport share pinned to
     * the seed literals, 3 rounds unrolled.
     */
@@ -1272,49 +726,6 @@ object OracleCtes2 {
              THEN 1000000 ELSE 0 END AS BIGINT) AS ppr FROM nodes),
          $rounds
          SELECT node, CAST(ppr AS BIGINT) AS ppr FROM r3 ORDER BY node"""
-  }
-
-  /** Cut/fill oracle: a − (plane+900) = c + r + bonus − 900 on the
-    * stride-10 lattice, split-signed per 4×4 zone.
-    */
-  private[graft] def cutFillOracleSql: String =
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       px AS (SELECT swlng, swlat, i.range AS i, j.range AS j,
-           (j.range*10) + (i.range*10)
-             + (((j.range*10)//8)*((i.range*10)//8)) % 32 - 900 AS d
-         FROM corners, range(0,60) i, range(0,60) j)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(i // 15 AS INT) AS zr, CAST(j // 15 AS INT) AS zc,
-         CAST(sum(CASE WHEN d > 0 THEN d ELSE 0 END) AS BIGINT) AS cut,
-         CAST(sum(CASE WHEN d < 0 THEN -d ELSE 0 END) AS BIGINT) AS fill,
-         CAST(sum(d) AS BIGINT) AS net
-       FROM px GROUP BY 1, 2, 3 ORDER BY image_id, zr, zc"""
-
-  /** Saliency oracle: the 3×3 / 9×9 box sums per stride-6 lattice point as
-    * one offsets cross join, metric |9·s3 − s9| rolled up per image.
-    */
-  private[graft] def saliencyOracleSql: String = {
-    val v = gridV("j*6 + dc", "i*6 + dr")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       o9 AS (SELECT a.range - 4 AS dr, b.range - 4 AS dc
-         FROM range(0,9) a, range(0,9) b),
-       px AS (SELECT swlng, swlat, a, i.range AS i, j.range AS j
-         FROM k, range(1,100) i, range(1,100) j),
-       sums AS (SELECT swlng, swlat, i, j,
-           CAST(sum($v) AS BIGINT) AS s9,
-           CAST(sum(CASE WHEN dr BETWEEN -1 AND 1 AND dc BETWEEN -1 AND 1
-             THEN $v ELSE 0 END) AS BIGINT) AS s3
-         FROM px, o9 GROUP BY 1, 2, 3, 4),
-       m AS (SELECT swlng, swlat, abs(9*s3 - s9) AS m FROM sums)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(count(*) AS BIGINT) AS n_pts,
-         CAST(sum(CASE WHEN m >= 2000 THEN 1 ELSE 0 END) AS BIGINT) AS n_salient,
-         CAST(sum(m) AS BIGINT) AS sum_m, CAST(max(m) AS BIGINT) AS max_m
-       FROM m GROUP BY 1 ORDER BY image_id"""
   }
 
   /** Cost-distance oracle: the same 8-connected uphill-cost edges from
@@ -1342,60 +753,6 @@ object OracleCtes2 {
        $rounds
        SELECT CAST(node AS BIGINT) AS node, CAST(dist AS BIGINT) AS dist
        FROM d6 ORDER BY node"""
-  }
-
-  /** Integral-box oracle: each of the 16 closed-form boxes replayed as a
-    * grid-range GROUP BY over the synthetic field — the naive O(side²)
-    * sum the engine's summed-area table answers in O(1).
-    */
-  private[graft] def integralBoxOracleSql: String = {
-    val v = gridV("c.range", "r.range")
-    val boxes = (0 until 16).map { i =>
-      val (r0, c0, side) = ops.ImageOps.boxSpec(i, 600)
-      s"($i,$r0,$c0,$side)"
-    }.mkString(",")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       boxes(box_id, r0, c0, side) AS (VALUES $boxes),
-       cell AS (SELECT swlng, swlat, box_id, r0, c0, side, $v AS v
-         FROM k, boxes, range(0,600) r, range(0,600) c
-         WHERE r.range >= r0 AND r.range < r0 + side
-           AND c.range >= c0 AND c.range < c0 + side)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(box_id AS INT) AS box_id, CAST(r0 AS INT) AS r0,
-         CAST(c0 AS INT) AS c0, CAST(side AS INT) AS side,
-         CAST(sum(v) AS BIGINT) AS box_sum
-       FROM cell GROUP BY 1, 2, 3, 4, 5 ORDER BY image_id, box_id"""
-  }
-
-  /** Orientation-census oracle: central differences from the closed form,
-    * the identical half-open octant CASE ladder (pure integer sign /
-    * magnitude comparisons), energy as exact Σ(gx²+gy²).
-    */
-  private[graft] def orientOracleSql: String = {
-    def v(dc: Int, dr: Int) = gridV(s"c.range+($dc)", s"r.range+($dr)")
-    s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-       k AS (SELECT swlng, swlat,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-       g AS (SELECT swlng, swlat,
-           (${v(1, 0)} - ${v(-1, 0)}) AS gx,
-           (${v(0, 1)} - ${v(0, -1)}) AS gy
-         FROM k, range(1,600) r, range(1,600) c),
-       sct AS (SELECT swlng, swlat, gx, gy,
-           CASE WHEN gx = 0 AND gy = 0 THEN 8
-                WHEN gx > 0 AND gy >= 0 THEN (CASE WHEN gy < gx THEN 0 ELSE 1 END)
-                WHEN gx <= 0 AND gy > 0 THEN (CASE WHEN -gx < gy THEN 2 ELSE 3 END)
-                WHEN gx < 0 AND gy <= 0 THEN (CASE WHEN -gy < -gx THEN 4 ELSE 5 END)
-                ELSE (CASE WHEN gx < -gy THEN 6 ELSE 7 END) END AS sector
-         FROM g)
-       SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-           CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-         CAST(sector AS INT) AS sector,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(gx*gx + gy*gy) AS BIGINT) AS energy
-       FROM sct GROUP BY swlng, swlat, sector ORDER BY image_id, sector"""
   }
 
   /** Convex-hull oracle: the Carathéodory certificate — a deduped point is

@@ -489,18 +489,10 @@ object QAnn {
             .as("n_correct"))
         .orderBy("alabel")
     }),
-    // Per-block value-diversity census (ops.ImageOps.blockDiversity):
-    // distinct-count, range and smallest-tie mode per 100² block — the
-    // log-free entropy proxy of a compression/nodata screen. Decode-once,
-    // zero shuffle.,
     "ann_farthest_first" -> ((s, dir) => {
       ops.Embeddings.farthestFirst(t(s, dir, "embeddings"), k = 5)
         .orderBy("pick_no")
     }),
-    // Manhattan distance transform (ops.ImageOps.distanceTransformStats):
-    // grid-step distance to the nearest high sample (≥3600) on the
-    // stride-10 lattice — exact two-raster-scan DP in the engine, brute
-    // min |Δi|+|Δj| over the high set in the oracle.,
     "ann_semdedup" -> ((s, dir) => {
       val e = t(s, dir, "embeddings")
       val (cents, _) = trainedKmeans(s, dir)

@@ -403,9 +403,6 @@ object QDedup {
         .groupBy("degree").agg(count(lit(1)).as("n_docs"))
         .orderBy("degree")
     }),
-    // Directional variogram (ops.ImageOps.variogram): exact Σ(v−v₊ₕ)² at
-    // 6 literal lags — the geostatistics read under kriging/IDW radius
-    // choices; anisotropy falls out of the field's 2c+3r gradient.,
     "dedup_shingle_df_hist" -> ((s, dir) => {
       dedupCorpus(s, dir)
         .select(col("doc_id"),
@@ -415,10 +412,6 @@ object QDedup {
         .groupBy("df").agg(count(lit(1)).as("n_shingles"))
         .orderBy("df")
     }),
-    // JPEG-blockiness audit (ops.ImageOps.blockiness): 8×8 boundary vs
-    // interior adjacent-step ratio in exact cross-multiplied milli — the
-    // codec-artifact screen next to img_noise_mad. Decode-once, one row
-    // per image.,
     "dedup_spans" -> ((s, dir) => {
       ops.TextDedup.duplicateSpanStats(dedupCorpus(s, dir), n = 8)
         .orderBy("doc_id")
@@ -489,8 +482,6 @@ object QDedup {
         .withColumn("recall_plain_ppm", expr("1000000 * hit_plain DIV n_truth"))
         .withColumn("recall_multi_ppm", expr("1000000 * hit_multi DIV n_truth"))
     }),
-    // Areal interpolation audit (ops.ImageOps.arealInterp): exact
-    // rectangle-overlap re-aggregation error, 3x3 -> 4x4 zones.
   )
 
   val sql: Map[String, String] = Map(

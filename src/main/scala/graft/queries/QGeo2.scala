@@ -16,7 +16,7 @@ import OracleCtes._
 import OracleCtes2._
 
 /** Geospatial gates: tiling, elevation sampling, spatial joins, terrain, cells
-  * (29 entries) with the DuckDB oracle SQL beside each query.
+  * (15 entries) with the DuckDB oracle SQL beside each query.
   * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
   */
 object QGeo2 {
@@ -161,25 +161,6 @@ object QGeo2 {
           "n_common * 1000000 DIV (n_cells + n_prev - n_common)"))
         .orderBy("eday")
     }),
-    // Cycle-space dimension (cyclomatic number m − n + c): edges, nodes
-    // and star-CC component count in one row — how far from a forest the
-    // graph is, the redundancy read under graph_mst's spanning forest.,
-    "geo_hypsometric" -> ((s, dir) => {
-      val h = ops.ImageOps.levelHistogram(gateTiles(s, "png"))
-      val wc = Window.partitionBy("image_id").orderBy("level")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val tot = h.groupBy("image_id").agg(sum("n").as("n_px"))
-      val cum = h.withColumn("cum", sum("n").over(wc))
-        .join(tot, Seq("image_id"))
-      val dec = s.createDataFrame((1 to 9).map(d => Tuple1(d.toLong)))
-        .toDF("decile")
-      cum.crossJoin(broadcast(dec))
-        .filter(expr("cum * 10 >= n_px * decile"))
-        .groupBy("image_id", "decile")
-        .agg(min("level").as("level"))
-        .withColumn("decile", col("decile").cast("int"))
-        .orderBy("image_id", "decile")
-    }),
     // Per-trajectory speed quantiles: exact integer µunit/s Manhattan
     // speeds per segment, nearest-rank p50/p95 — the mobility profile
     // over traj_speed's binary flags.,
@@ -195,72 +176,6 @@ object QGeo2 {
         .groupBy("z", "x", "y").agg(count(lit(1)).as("n"))
         .orderBy("z", "x", "y")
     }),
-    // Semi/anti-join (dedup keep-set): documents whose text hash appears
-    // more than once lose all but the lowest doc_id.,
-    "geo_elev_diff" -> ((s, dir) => {
-      import s.implicits._
-      val corners = Seq((-120, 36), (-120, 37), (-119, 36), (-119, 37),
-        (-118, 36), (-117, 37))
-      val epochA = s.createDataset(TileGen.tiles(corners, 601, "hgt"))
-      val epochB = s.createDataset(corners.map { case (lng, lat) =>
-        TileGen.tileRow(lng, lat, 601, "hgt", TileGen.planeAt) })
-      ops.ImageOps.changeStats(epochA, epochB, threshold = 600)
-        .orderBy("image_id")
-    }),
-    // Blockwise joint moments of the two epochs (ops.ImageOps.nccBlocks):
-    // the NCC/SSIM sufficient statistics (n, Σa, Σb, Σa², Σb², Σab) per
-    // 100×100 window — change LOCALIZATION next to geo_elev_diff's
-    // whole-tile verdict; exact integers, decode-once, pixels never
-    // shuffle.,
-    "zonal_crosstab" -> ((s, dir) => {
-      import s.implicits._
-      val corners = Seq((-120, 36), (-120, 37), (-119, 36), (-119, 37),
-        (-118, 36), (-117, 37))
-      val epochA = s.createDataset(TileGen.tiles(corners, 601, "hgt"))
-      val epochB = s.createDataset(corners.map { case (lng, lat) =>
-        TileGen.tileRow(lng, lat, 601, "hgt", TileGen.planeAt) })
-      ops.ImageOps.crosstab(epochA, epochB, binWidth = 512)
-        .orderBy("image_id", "zone_a", "zone_b")
-    }),
-    // Variance-of-Laplacian focus measure (ops.ImageOps.blurStats): the
-    // standard blur filter of image curation, exact integer moments so the
-    // sharpness ranking needs no float division. Decode-once, zero shuffle.,
-    "zonal_cutfill" -> ((s, dir) => {
-      import s.implicits._
-      val corners = Seq((-120, 36), (-120, 37), (-119, 36), (-119, 37),
-        (-118, 36), (-117, 37))
-      val epochA = s.createDataset(TileGen.tiles(corners, 601, "hgt"))
-      val epochB = s.createDataset(corners.map { case (lng, lat) =>
-        TileGen.tileRow(lng, lat, 601, "hgt",
-          (sw, sl, r, c) => (TileGen.planeAt(sw, sl, r, c) + 900).toShort) })
-      ops.ImageOps.cutFill(epochA, epochB)
-        .orderBy("image_id", "zr", "zc")
-    }),
-    // Center-surround SALIENCY census (difference-of-box-means, exact by
-    // cross-multiplication: |s3/9 − s9/81| ≥ t ⇔ |9·s3 − s9| ≥ 81·t): the
-    // attention/figure-ground screen; integer box sums on the stride-6
-    // lattice, threshold 2000 in the cross-multiplied units.,
-    "geo_intervisibility" -> ((s, dir) => {
-      val prof = ops.ImageOps.rowProfile(gateTiles(s, "png"), row = 300)
-        .filter(col("image_id") === "N36W120")
-      val st = prof.filter(col("c") % 50 === 0 && col("c") > 0 &&
-        col("c") <= 500)
-      val pairs = st.select(col("c").as("ca"), col("v").as("va"))
-        .join(st.select(col("c").as("cb"), col("v").as("vb")),
-          col("ca") < col("cb"))
-      pairs.join(prof.select(col("c"), col("v")),
-          col("c") > col("ca") && col("c") < col("cb"))
-        .withColumn("above",
-          expr("v * (cb - ca) > va * (cb - c) + vb * (c - ca)"))
-        .groupBy("ca", "cb", "va", "vb")
-        .agg(count(lit(1)).as("n_between"),
-          sum(when(col("above"), 1L).otherwise(0L)).as("n_above"))
-        .withColumn("visible", col("n_above") === 0L)
-        .orderBy("ca", "cb")
-    }),
-    // Keystone/skew audit (ops.ImageOps.keystone): row-centroid drift
-    // slope numerators — the rectification QA next to img_deskew's
-    // projection-profile angle.,
     "geo_centroid_drift" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val pts = t(s, dir, "events").filter(col("user_id") < 50)
@@ -285,25 +200,6 @@ object QGeo2 {
             "(cy_milli - pcy) * (cy_milli - pcy) END"))
         .select("day", "n", "cx_milli", "cy_milli", "drift_d2_milli")
         .orderBy("day")
-    }),
-    // Degree-inequality Gini pieces: ranked-degree weighted sums — is
-    // attention concentrated in hubs? The events_gini read on graph
-    // structure; one rank window over |V| rows.,
-    "geo_horizon_angle" -> ((s, dir) => {
-      val prof = ops.ImageOps.rowProfile(gateTiles(s, "png"), row = 300)
-        .filter(col("image_id") === "N36W120")
-      val obs = prof.filter(col("c").isin(100L, 300L, 500L))
-        .select(col("c").as("c0"), col("v").as("v0"))
-      obs.join(prof.select(col("c"), col("v")), col("c") > col("c0"))
-        .withColumn("angle_q", expr(
-          "((v - v0 + 4000 * (c - c0)) * 1000000) DIV (c - c0) " +
-            "- 4000000000"))
-        .withColumn("rn", row_number().over(Window.partitionBy("c0")
-          .orderBy(col("angle_q").desc, col("c"))))
-        .filter(col("rn") === 1)
-        .select(col("c0"), col("v0"), col("c").as("horizon_c"),
-          col("v").as("horizon_v"), col("angle_q"))
-        .orderBy("c0")
     }),
     // Per-user Fano dispersion of daily activity: variance/mean numerator
     // and denominator exact, milli-floored index — bursty users (>1000)
@@ -332,11 +228,10 @@ object QGeo2 {
         .crossJoin(jumps("hkey", "hilbert"))
         .crossJoin(jumps("mkey", "morton"))
     }),
-    // NFD compaction bin packing (ops.Curation.binPackNfd): per table
-    // partition, manifest files sorted (size desc, id) fill 512-unit bins
-    // greedily — the OPTIMIZE plan; the oracle walks the identical
-    // recurrence as a recursive
-    // CTE. Key-bounded mapGroups over metadata-scale rows.,
+    // Marching-squares contour census at the 1800 m isoline: the exact
+    // per-cell case classification of raster→vector contour extraction,
+    // engine-computed from the real decode, oracle-recomputed from the
+    // closed-form corners. t=1800 cuts every gate tile (v spans ~806-3869).,
     "geo_contours" -> ((s, dir) => {
       ops.ImageOps.contourCensus(gateTiles(s), 1800).orderBy("image_id")
     }),
@@ -360,24 +255,6 @@ object QGeo2 {
       }.toDF("image_id", "sx", "sy", "n_px", "r_sum", "g_sum", "b_sum")
         .orderBy("image_id", "sx", "sy")
     }),
-    // Exact per-group quantiles by deterministic SELECTION (rank
-    // floor((n-1)p)+1 under the total order (value, event_id)) — selection
-    // of an existing element is engine-exact where interpolation arithmetic
-    // is not; the scale shape is one shuffle on the group key and a
-    // rank-filter, no global sort.,
-    "geo_pit_census" -> ((s, dir) => {
-      ops.ImageOps.pitCensus(gateTiles(s)).orderBy("image_id")
-    }),
-    // SumBasic-style extractive pick: corpus word frequencies score each
-    // 10-word chunk (quantized mean frequency, argmax per doc, ties to
-    // the earliest chunk) — the classic frequency-summarization primitive
-    // over the documents table.,
-    "geo_fill_depressions" -> ((s, dir) => {
-      ops.ImageOps.fillDepressions(gateTiles(s), off = 80, n = 40,
-        rounds = 32).orderBy("image_id")
-    }),
-    // Run-length texture pieces (ops.ImageOps.glrlm): Galloway GLRLM
-    // short/long-run emphasis + gray-level non-uniformity, exact.,
     "geo_cost_corridor" -> ((s, dir) => {
       def gridEdges(rev: Boolean) = {
         val base = s.range(100L * 100L)
@@ -401,44 +278,6 @@ object QGeo2 {
         .agg(lit(best).as("best_cost"), count(lit(1)).as("n_corridor"),
           sum(when(col("tot") === best, 1L).otherwise(0L)).as("n_optimal"),
           sum(when(col("tot") <= best + 10L, 1L).otherwise(0L)).as("n_tight"))
-    }),
-    // Multiprobe LSH recall contrast: probing the 8 Hamming-1 signature
-    // flips alongside the home bucket — recall gained per extra candidate
-    // against the exact cos>=0.999 truth on the planted-dupe corpus (the
-    // one-table multiprobe trick that replaces 9 hash tables at scale).,
-    "geo_landform_class" -> ((s, dir) => {
-      ops.ImageOps.landformClass(gateTiles(s))
-        .orderBy("image_id", "class_s", "class_l")
-    }),
-    // Candidate-key discovery over orders: distinct-vs-total census for
-    // four candidate column sets — the profiling step schema inference
-    // and CDC key selection start from.,
-    "geo_irradiance_sum" -> ((s, dir) => {
-      ops.ImageOps.irradianceSum(gateTiles(s), sunVectors)
-        .orderBy("image_id")
-    }),
-    "geo_swath_profile" -> ((s, dir) => {
-      ops.ImageOps.swathProfile(gateTiles(s)).orderBy("image_id", "bin")
-    }),
-    // CUPED variance-reduction pieces: per-user pre/post event counts
-    // (45-day cut, arms by user parity) aggregated to the exact
-    // covariance/variance integers and the pooled theta fraction — the
-    // experiment-sensitivity machinery, no float ever formed.,
-    "geo_normal_dispersion" -> ((s, dir) => {
-      ops.ImageOps.normalDispersion(gateTiles(s)).orderBy("image_id")
-    }),
-    // Order-of-magnitude profile of the value column: digit-length
-    // histogram of exact cents per type with ppm shares — the mixed-unit
-    // (dollars-vs-cents, seconds-vs-millis) ingestion bug detector.,
-    "geo_area_weighted_interp" -> ((s, dir) => {
-      ops.ImageOps.arealInterp(gateTiles(s)).orderBy("image_id", "tr", "tc")
-    }),
-    // IVF candidate accounting: per query the two probed lists and the
-    // exact fraction of the corpus scanned (the latency-proxy number
-    // that justifies IVF over brute force at scale).,
-    "geo_terrain_rose" -> ((s, dir) => {
-      ops.ImageOps.terrainRose(gateTiles(s))
-        .orderBy("image_id", "octant", "band")
     }),
   )
 
@@ -543,30 +382,6 @@ object QGeo2 {
          FROM sz t JOIN sz p ON p.eday = t.eday - 1
          LEFT JOIN cm ON cm.eday = t.eday
          ORDER BY t.eday""",
-    // min-label reach components + edge/node counts,
-    "geo_hypsometric" -> {
-      val v = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         h AS (SELECT swlng, swlat,
-             CAST(greatest(0, least(63, ($v) // 64)) AS INT) AS level,
-             CAST(count(*) AS BIGINT) AS n
-           FROM k, range(0,601) r, range(0,601) c GROUP BY 1, 2, 3),
-         tot AS (SELECT swlng, swlat, CAST(sum(n) AS BIGINT) AS n_px
-           FROM h GROUP BY 1, 2),
-         cum AS (SELECT h.swlng, h.swlat, level, n_px,
-             CAST(sum(n) OVER (PARTITION BY h.swlng, h.swlat
-               ORDER BY level) AS BIGINT) AS cum
-           FROM h JOIN tot ON tot.swlng = h.swlng AND tot.swlat = h.swlat),
-         dec AS (SELECT CAST(d.range AS BIGINT) AS decile
-           FROM range(1,10) d)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(decile AS INT) AS decile, CAST(min(level) AS INT) AS level
-         FROM cum, dec WHERE cum * 10 >= n_px * decile
-         GROUP BY 1, 2 ORDER BY image_id, decile"""
-    },
     // Manhattan µspeed per segment, nearest-rank quantiles,
     "zxy_rollup" ->
       """WITH pts AS (SELECT
@@ -583,46 +398,6 @@ object QGeo2 {
            UNION ALL SELECT 10, x14 >> 4, y14 >> 4 FROM xy)
          SELECT CAST(z AS INT) AS z, CAST(x AS INT) AS x, CAST(y AS INT) AS y, count(*) AS n
          FROM lv GROUP BY 1, 2, 3 ORDER BY z, x, y""",
-    "geo_elev_diff" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT swlng, swlat,
-           c.range + r.range + ((c.range//8)*(r.range//8)) % 32 AS ad
-           FROM corners, range(0,601) r, range(0,601) c)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(count(*) AS BIGINT) AS n_px,
-           CAST(sum(CASE WHEN ad > 600 THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-           CAST(sum(ad) AS BIGINT) AS abs_sum,
-           CAST(max(ad) AS BIGINT) AS abs_max
-         FROM g GROUP BY swlng, swlat ORDER BY image_id""",
-    "zonal_crosstab" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-                 CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range
-             + ((c.range//8)*(r.range//8)) % 32 AS va,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + c.range + 2*r.range AS vb
-           FROM corners, range(0,601) r, range(0,601) c)
-         SELECT image_id, CAST(va // 512 AS INT) AS zone_a,
-           CAST(vb // 512 AS INT) AS zone_b, CAST(count(*) AS BIGINT) AS n
-         FROM g GROUP BY 1, 2, 3 ORDER BY image_id, zone_a, zone_b""",
-    "zonal_cutfill" -> cutFillOracleSql,
-    "geo_intervisibility" ->
-      s"""WITH k AS (SELECT ((-120+180)*7 + (36+90)*11) % 1000 AS a),
-         prof AS (SELECT CAST(c.range AS BIGINT) AS c,
-             CAST(${gridV("c.range", "300")} AS BIGINT) AS v
-           FROM k, range(0,601) c),
-         st AS (SELECT c, v FROM prof
-           WHERE c % 50 = 0 AND c > 0 AND c <= 500),
-         pairs AS (SELECT a.c AS ca, a.v AS va, b.c AS cb, b.v AS vb
-           FROM st a JOIN st b ON a.c < b.c),
-         bet AS (SELECT ca, cb, va, vb,
-             p.v * (cb - ca) > va * (cb - p.c) + vb * (p.c - ca) AS above
-           FROM pairs JOIN prof p ON p.c > ca AND p.c < cb)
-         SELECT ca, cb, va, vb, CAST(count(*) AS BIGINT) AS n_between,
-           CAST(sum(CASE WHEN above THEN 1 ELSE 0 END) AS BIGINT) AS n_above,
-           sum(CASE WHEN above THEN 1 ELSE 0 END) = 0 AS visible
-         FROM bet GROUP BY 1, 2, 3, 4 ORDER BY ca, cb""",
     // per-row centroid from the closed form, regression pieces,
     "geo_centroid_drift" ->
       """WITH b AS (SELECT user_id, event_id, ts, epoch_us(ts) AS ts_us,
@@ -646,23 +421,6 @@ object QGeo2 {
                 ELSE (cx_milli - pcx) * (cx_milli - pcx)
                    + (cy_milli - pcy) * (cy_milli - pcy) END AS drift_d2_milli
          FROM f ORDER BY day""",
-    // asc-ranked degrees, exact Gini pieces,
-    "geo_horizon_angle" ->
-      s"""WITH k AS (SELECT ((-120+180)*7 + (36+90)*11) % 1000 AS a),
-         prof AS (SELECT CAST(c.range AS BIGINT) AS c,
-             CAST(${gridV("c.range", "300")} AS BIGINT) AS v
-           FROM k, range(0,601) c),
-         obs AS (SELECT c AS c0, v AS v0 FROM prof
-           WHERE c IN (100, 300, 500)),
-         j AS (SELECT c0, v0, c, v,
-             ((v - v0 + 4000 * (c - c0)) * 1000000) // (c - c0)
-               - 4000000000 AS angle_q
-           FROM obs JOIN prof ON c > c0),
-         r AS (SELECT c0, v0, c AS horizon_c, v AS horizon_v, angle_q,
-             row_number() OVER (PARTITION BY c0
-               ORDER BY angle_q DESC, c) AS rn FROM j)
-         SELECT c0, v0, horizon_c, horizon_v, angle_q
-         FROM r WHERE rn = 1 ORDER BY c0""",
     // daily counts per user, exact dispersion pieces,
     "geo_curve_locality" ->
       s"""WITH pts AS (SELECT c_custkey AS point_id,
@@ -744,56 +502,6 @@ object QGeo2 {
            count(*) AS n_px, CAST(sum(tr) AS BIGINT) AS r_sum,
            CAST(sum(tg) AS BIGINT) AS g_sum, CAST(sum(tb) AS BIGINT) AS b_sum
          FROM t GROUP BY swlng, swlat, sx, sy ORDER BY image_id, sx, sy""",
-    // trunc-div gaps in whole seconds; variance numerator in HUGEINT,
-    // value int64 by construction,
-    "geo_pit_census" -> {
-      val ctr = gridV("c.range", "r.range")
-      val nmin = "LEAST(" +
-        (for { dr <- -1 to 1; dc <- -1 to 1; if dr != 0 || dc != 0 }
-          yield gridV(s"c.range+($dc)", s"r.range+($dr)")).mkString(", ") + ")"
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat, ($nmin) - ($ctr) AS dgap
-           FROM k, range(1,599) r, range(1,599) c)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(count(*) AS BIGINT) AS n_interior,
-           CAST(sum(CASE WHEN dgap > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pits,
-           CAST(sum(CASE WHEN dgap > 0 THEN dgap ELSE 0 END) AS BIGINT) AS depth_sum
-         FROM px GROUP BY 1 ORDER BY image_id"""
-    },
-    // 1-based list positions shifted to 0-based, same quantized argmax,
-    "geo_fill_depressions" -> {
-      val gv = gridV("c.range + 80", "r.range + 80")
-      val rounds = (1 to 32).map { k =>
-        s"""f$k AS MATERIALIZED (SELECT cl.swlng, cl.swlat, cl.r, cl.c, cl.v,
-            CASE WHEN cl.r = 0 OR cl.c = 0 OR cl.r = 39 OR cl.c = 39 THEN cl.v
-              ELSE GREATEST(cl.v, MIN(p.fv)) END AS fv
-          FROM cells cl JOIN f${k - 1} p ON p.swlng = cl.swlng
-            AND p.swlat = cl.swlat AND p.r BETWEEN cl.r - 1 AND cl.r + 1
-            AND p.c BETWEEN cl.c - 1 AND cl.c + 1
-            AND NOT (p.r = cl.r AND p.c = cl.c)
-          GROUP BY cl.swlng, cl.swlat, cl.r, cl.c, cl.v)"""
-      }.mkString(",\n         ")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         cells AS MATERIALIZED (SELECT swlng, swlat, r.range AS r, c.range AS c,
-             CAST($gv AS BIGINT) AS v
-           FROM k, range(0,40) r, range(0,40) c),
-         f0 AS MATERIALIZED (SELECT swlng, swlat, r, c, v,
-             CASE WHEN r = 0 OR c = 0 OR r = 39 OR c = 39 THEN v
-               ELSE 1000000000 END AS fv
-           FROM cells),
-         $rounds
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(count(*) AS BIGINT) AS n_cells,
-           CAST(sum(CASE WHEN fv > v THEN 1 ELSE 0 END) AS BIGINT) AS n_raised,
-           CAST(sum(CASE WHEN fv > v THEN fv - v ELSE 0 END) AS BIGINT) AS fill_volume
-         FROM f32 GROUP BY 1 ORDER BY image_id"""
-    },
     // gaps-and-islands runs over quantized levels, per-run floors,
     "geo_cost_corridor" -> {
       def relax(p: String, edge: String) = (1 to 6).map { r =>
@@ -825,161 +533,6 @@ object QGeo2 {
            CAST(sum(CASE WHEN tot = best THEN 1 ELSE 0 END) AS BIGINT) AS n_optimal,
            CAST(sum(CASE WHEN tot <= best + 10 THEN 1 ELSE 0 END) AS BIGINT) AS n_tight
          FROM j, bc WHERE tot <= best + 50 GROUP BY best"""
-    },
-    // same planes/bucket, 9-probe expansion, exact truth join,
-    "geo_landform_class" -> {
-      val gv = gridV("c.range + 100", "r.range + 100")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         cells AS MATERIALIZED (SELECT swlng, swlat, r.range AS r,
-             c.range AS c, CAST($gv AS BIGINT) AS v
-           FROM k, range(0,100) r, range(0,100) c),
-         pxx AS (SELECT p.swlng, p.swlat, p.r, p.c, p.v,
-             CAST(sum(CASE WHEN b.r BETWEEN p.r-2 AND p.r+2
-               AND b.c BETWEEN p.c-2 AND p.c+2 THEN b.v END) AS BIGINT) AS ss,
-             CAST(sum(b.v) AS BIGINT) AS sl
-           FROM cells p JOIN cells b ON b.swlng = p.swlng
-             AND b.swlat = p.swlat AND b.r BETWEEN p.r-6 AND p.r+6
-             AND b.c BETWEEN p.c-6 AND p.c+6
-           WHERE p.r BETWEEN 6 AND 93 AND p.c BETWEEN 6 AND 93
-           GROUP BY 1, 2, 3, 4, 5),
-         cl AS (SELECT swlng, swlat,
-             CASE WHEN 25*v - ss > 0 THEN 1 WHEN 25*v - ss < 0 THEN -1
-               ELSE 0 END AS class_s,
-             CASE WHEN 169*v - sl > 0 THEN 1 WHEN 169*v - sl < 0 THEN -1
-               ELSE 0 END AS class_l
-           FROM pxx)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(class_s AS INT) AS class_s, CAST(class_l AS INT) AS class_l,
-           CAST(count(*) AS BIGINT) AS n_pixels
-         FROM cl GROUP BY 1, 2, 3 ORDER BY image_id, class_s, class_l"""
-    },
-    // four candidate sets, distinct-vs-total with ppm duplication,
-    "geo_irradiance_sum" -> {
-      val values = sunVectors.map { case (sx, sy, sz) => s"($sx, $sy, $sz)" }
-        .mkString(",")
-      val dzdx = s"(${gridV("c.range+1", "r.range")}) - (${gridV("c.range-1", "r.range")})"
-      val dzdy = s"(${gridV("c.range", "r.range+1")}) - (${gridV("c.range", "r.range-1")})"
-      s"""WITH suns(sx, sy, sz) AS (VALUES $values),
-         corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
-             $dzdx AS dzdx, $dzdy AS dzdy
-           FROM k, range(1,599) r, range(1,599) c
-           WHERE r.range % 4 = 1 AND c.range % 4 = 1),
-         d AS (SELECT swlng, swlat, r, c,
-             CAST(sum(CASE WHEN -dzdx*sx - dzdy*sy + 2*sz > 0
-               THEN -dzdx*sx - dzdy*sy + 2*sz ELSE 0 END) AS BIGINT) AS irr,
-             max(CASE WHEN -dzdx*sx - dzdy*sy + 2*sz > 0 THEN 1 ELSE 0 END) AS lit
-           FROM px, suns GROUP BY 1, 2, 3, 4)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(count(*) AS BIGINT) AS n_samples,
-           CAST(sum(irr) AS BIGINT) AS irr_q_sum,
-           CAST(sum(1 - lit) AS BIGINT) AS n_dark
-         FROM d GROUP BY 1 ORDER BY image_id"""
-    },
-    // per-arm OLS pieces on the pre-period, cross-multiplied slope diff,
-    "geo_swath_profile" -> {
-      val gv = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat, CAST($gv AS BIGINT) AS v,
-             (r.range - 100) * 400 + c.range * 599 AS tn,
-             (r.range - 100) * 599 - c.range * 400 AS crs
-           FROM k, range(0,600) r, range(0,600) c),
-         sw AS (SELECT swlng, swlat,
-             LEAST(49, tn * 50 // 518801) AS bin, v
-           FROM px WHERE tn >= 0 AND tn <= 518801
-             AND crs * crs <= 207520400)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(bin AS BIGINT) AS bin, CAST(count(*) AS BIGINT) AS n_cells,
-           CAST(min(v) AS BIGINT) AS min_v, CAST(max(v) AS BIGINT) AS max_v,
-           CAST(sum(v) AS BIGINT) AS sum_v
-         FROM sw GROUP BY 1, 2 ORDER BY image_id, bin"""
-    },
-    // per-user 45-day pre/post counts, arm pieces + pooled theta fraction,
-    "geo_normal_dispersion" -> {
-      val dzdx = s"(${gridV("c.range+1", "r.range")}) - (${gridV("c.range-1", "r.range")})"
-      val dzdy = s"(${gridV("c.range", "r.range+1")}) - (${gridV("c.range", "r.range-1")})"
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat, $dzdx AS dzdx, $dzdy AS dzdy
-           FROM k, range(1,599) r, range(1,599) c
-           WHERE r.range % 2 = 1 AND c.range % 2 = 1),
-         agg AS (SELECT swlng, swlat, CAST(count(*) AS BIGINT) AS n_samples,
-             CAST(sum(-dzdx) AS BIGINT) AS sx,
-             CAST(sum(-dzdy) AS BIGINT) AS sy
-           FROM px GROUP BY 1, 2)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           n_samples, sx, sy, 2 * n_samples AS sz,
-           sx * sx + sy * sy + 4 * n_samples * n_samples AS r2
-         FROM agg ORDER BY image_id"""
-    },
-    // digit-length histogram of exact cents, ppm shares,
-    "geo_area_weighted_interp" -> {
-      val gv = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
-             CAST($gv AS BIGINT) AS v
-           FROM k, range(0,600) r, range(0,600) c),
-         src AS (SELECT swlng, swlat, r // 200 AS sr, c // 200 AS sc,
-             CAST(sum(v) AS BIGINT) AS ssum FROM px GROUP BY 1, 2, 3, 4),
-         tgt AS (SELECT swlng, swlat, r // 150 AS tr, c // 150 AS tc,
-             CAST(sum(v) AS BIGINT) AS tsum FROM px GROUP BY 1, 2, 3, 4),
-         est AS (SELECT t.swlng, t.swlat, t.tr, t.tc,
-             CAST(sum(GREATEST(0, LEAST(s.sr*200+200, t.tr*150+150)
-                 - GREATEST(s.sr*200, t.tr*150))
-               * GREATEST(0, LEAST(s.sc*200+200, t.tc*150+150)
-                 - GREATEST(s.sc*200, t.tc*150))
-               * s.ssum) // 40000 AS BIGINT) AS est
-           FROM (SELECT DISTINCT swlng, swlat, tr, tc FROM tgt) t
-           JOIN src s ON s.swlng = t.swlng AND s.swlat = t.swlat
-           GROUP BY 1, 2, 3, 4)
-         SELECT (CASE WHEN est.swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(est.swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN est.swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(est.swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(est.tr AS INT) AS tr, CAST(est.tc AS INT) AS tc,
-           est AS est_scaled, tsum AS true_sum,
-           abs(est - tsum) AS abs_err
-         FROM est JOIN tgt ON tgt.swlng = est.swlng
-           AND tgt.swlat = est.swlat AND tgt.tr = est.tr AND tgt.tc = est.tc
-         ORDER BY image_id, est.tr, est.tc"""
-    },
-    // two nearest lists per query, corpus-scan fraction in ppm,
-    "geo_terrain_rose" -> {
-      val gx = s"(${gridV("c.range+1", "r.range")}) - (${gridV("c.range-1", "r.range")})"
-      val gy = s"(${gridV("c.range", "r.range+1")}) - (${gridV("c.range", "r.range-1")})"
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         g AS (SELECT swlng, swlat, $gx AS gx, $gy AS gy
-           FROM k, range(1,599) r, range(1,599) c),
-         cl AS (SELECT swlng, swlat,
-             CASE WHEN gx = 0 AND gy = 0 THEN -1
-               WHEN gx > 0 AND gy >= 0 THEN
-                 CASE WHEN gx > gy THEN 0 ELSE 1 END
-               WHEN gx <= 0 AND gy > 0 THEN
-                 CASE WHEN gy > -gx THEN 2 ELSE 3 END
-               WHEN gx < 0 AND gy <= 0 THEN
-                 CASE WHEN -gx > -gy THEN 4 ELSE 5 END
-               ELSE CASE WHEN -gy > gx THEN 6 ELSE 7 END END AS octant,
-             CASE WHEN gx*gx + gy*gy <= 200 THEN 0
-               WHEN gx*gx + gy*gy <= 800 THEN 1 ELSE 2 END AS band
-           FROM g)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(octant AS INT) AS octant, CAST(band AS INT) AS band,
-           CAST(count(*) AS BIGINT) AS n_cells
-         FROM cl GROUP BY 1, 2, 3 ORDER BY image_id, octant, band"""
     },
   )
 }

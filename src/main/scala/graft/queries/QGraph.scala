@@ -503,9 +503,6 @@ object QGraph {
           .cast("int"))
         .orderBy("rk")
     }),
-    // Robust per-block contrast map (ops.ImageOps.contrastMap): nearest-
-    // rank p10/p90 per 100² block — the outlier-immune local dynamic
-    // range under img_block_diversity's extremes.,
     "graph_cyclomatic" -> ((s, dir) => {
       val edges = t(s, dir, "lineitem")
         .filter(col("l_orderkey") % 31 === 0)
@@ -584,9 +581,6 @@ object QGraph {
         "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000 AS t")
       ops.Graph.temporalReach(edges, pivot = 1L).orderBy("node")
     }),
-    // Nyquist-component block energies (ops.ImageOps.nyquistEnergy):
-    // alternating-sign sums per 100-square block — checkerboard /
-    // decimation-aliasing artifact detector.,
     "graph_voterank" -> ((s, dir) => {
       val edges = t(s, dir, "lineitem")
         .filter(col("l_orderkey") % 7 === 0)
@@ -889,10 +883,6 @@ object QGraph {
          SELECT n_nodes, n_edges, n_recip,
            CAST(n_recip // 2 AS BIGINT) AS n_mutual_pairs
          FROM n, t, r""",
-    // blockwise joint moments over the two closed-form epochs (curvy vs
-    // plane) — the grid recipe of img_patchify with both fields emitted
-    // every signed pixel from the closed form; sign = parity of cu&(r%8)
-    // (resp. cv&(c%8)) via bit sums, 75×75 blocks over 0..599,
     "graph_kcore" -> kcoreOracleSql,
     "graph_hits" -> hitsOracleSql,
     "graph_labelprop" -> labelpropOracleSql,

@@ -1,99 +1,18 @@
 package graft
 package queries
 
-import graft.core.{FeatureRow, GeoJson, TileRow}
-import graft.functions.cells
-import graft.functions.raster._
-import graft.functions.spatial._
-import graft.ops.Elevation
 import graft.synth.TileGen
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 
 import Fixtures._
 import OracleCtes._
-import OracleCtes2._
 
-/** Image-kernel gates over the synthetic raster corpus
-  * (83 entries) with the DuckDB oracle SQL beside each query.
-  * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
+/** Image-kernel gates over the synthetic raster corpus (the 10 core-tier
+  * `img_*` entries) with the DuckDB oracle SQL beside each query.
   */
 object QImg {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "img_emd_epochs" -> ((s, dir) => {
-      import s.implicits._
-      val corners = Seq((-120, 36), (-120, 37), (-119, 36), (-119, 37),
-        (-118, 36), (-117, 37))
-      val epochA = s.createDataset(TileGen.tiles(corners, 601, "hgt"))
-      val epochB = s.createDataset(corners.map { case (lng, lat) =>
-        TileGen.tileRow(lng, lat, 601, "hgt", TileGen.planeAt) })
-      val hA = ops.ImageOps.levelHistogram(epochA)
-        .withColumnRenamed("n", "na")
-      val hB = ops.ImageOps.levelHistogram(epochB)
-        .withColumnRenamed("n", "nb")
-      val j = hA.join(hB, Seq("image_id", "level"), "full_outer")
-        .select(col("image_id"), col("level"),
-          coalesce(col("na"), lit(0L)).as("na"),
-          coalesce(col("nb"), lit(0L)).as("nb"))
-      val w = Window.partitionBy("image_id").orderBy("level")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      j.withColumn("ca", sum("na").over(w))
-        .withColumn("cb", sum("nb").over(w))
-        .groupBy("image_id")
-        .agg(count(lit(1)).as("n_levels"),
-          sum(expr("abs(ca - cb)")).as("emd"))
-        .orderBy("image_id")
-    }),
-    // Community conductance pieces over the label-propagation partition:
-    // per label the volume, internal and cut edge counts + the floored
-    // conductance ppm — the partition-quality read above graph_modularity.,
-    "img_hist_match" -> ((s, dir) => {
-      import s.implicits._
-      val corners = Seq((-120, 36), (-120, 37), (-119, 36), (-119, 37),
-        (-118, 36), (-117, 37))
-      val epochA = s.createDataset(TileGen.tiles(corners, 601, "hgt"))
-      val epochB = s.createDataset(corners.map { case (lng, lat) =>
-        TileGen.tileRow(lng, lat, 601, "hgt", TileGen.planeAt) })
-      val wc = Window.partitionBy("image_id").orderBy("level")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val ca = ops.ImageOps.levelHistogram(epochA)
-        .withColumn("cdf_a", sum("n").over(wc))
-      val cb = ops.ImageOps.levelHistogram(epochB)
-        .withColumn("cdf_b", sum("n").over(wc))
-      ca.as("a").join(cb.as("b"),
-          col("a.image_id") === col("b.image_id") &&
-            col("b.cdf_b") >= col("a.cdf_a"))
-        .groupBy(col("a.image_id").as("image_id"),
-          col("a.level").as("level"), col("a.n").as("n_px"),
-          col("a.cdf_a").as("cdf_a"))
-        .agg(min(col("b.level")).as("mapped_level"))
-        .orderBy("image_id", "level")
-    }),
-    // Haar multiresolution energy split of the hourly series: 3 cascade
-    // levels of pairwise (sum, difference), per level the exact detail
-    // energy Σd² — which timescale carries the variance (hourly noise vs
-    // daily structure); first 128 hours, unpaired tails drop at each
-    // level in both engines.,
-    "img_gradient_zcr" -> ((s, dir) => {
-      ops.ImageOps.gradientZcr(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Random-failure resilience (the contrast row to
-    // graph_attack_resilience): remove the deterministic 20% node sample
-    // (id % 5 = 0) instead of hubs — scale-free graphs barely notice
-    // random loss but shatter under targeted loss; same two star-CC
-    // passes.,
-    "img_contrast_map" -> ((s, dir) => {
-      ops.ImageOps.contrastMap(gateTiles(s, "png"))
-        .orderBy("image_id", "py", "px")
-    }),
-    // SimHash bit-balance audit: per bit position the share of documents
-    // with the bit set — a healthy hash sits near 50%; skewed bits waste
-    // Hamming budget and inflate band collisions.,
-    "img_focus_map" -> ((s, dir) => {
-      ops.ImageOps.focusMap(gateTiles(s, "png"))
-        .orderBy("image_id", "py", "px")
-    }),
     "img_fidelity" -> ((s, dir) => {
       import s.implicits._
       implicit val enc = Encoders.product[(graft.core.TileRow, String)]
@@ -134,128 +53,10 @@ object QImg {
         .select(col("image_id"), posexplode(col("pixels")).as(Seq("idx", "px")))
         .orderBy("image_id", "idx")
     }),
-    // Hierarchical tile-pyramid rollup: z14 point counts rolled up the
-    // quadtree to z12 and z10 (parent = child >> 2 per level).,
+    // Per-image decode statistics (min / max / sum / IEEE mean) from the
+    // real PNG decode, recomputed by the oracle from the closed-form grid.,
     "img_stats" -> ((s, dir) => {
       ops.ImageOps.decodeStats(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Raster change detection (ops.ImageOps.changeStats): two epochs of
-    // the tile store — the curvy field vs the smooth plane — joined on
-    // tile key and diffed pairwise; only 5-integer stats rows leave the
-    // operator. The raster<->raster join next to J4's raster<->vector.,
-    "img_ncc_blocks" -> ((s, dir) => {
-      import s.implicits._
-      val corners = Seq((-120, 36), (-120, 37), (-119, 36), (-119, 37),
-        (-118, 36), (-117, 37))
-      val epochA = s.createDataset(TileGen.tiles(corners, 601, "hgt"))
-      val epochB = s.createDataset(corners.map { case (lng, lat) =>
-        TileGen.tileRow(lng, lat, 601, "hgt", TileGen.planeAt) })
-      ops.ImageOps.nccBlocks(epochA, epochB, block = 100)
-        .orderBy("image_id", "py", "px")
-    }),
-    // Walsh–Hadamard 8×8 block-transform energy census
-    // (ops.ImageOps.whtEnergy): per-coefficient signed block sums squared
-    // — the integer-exact DCT-energy stand-in (compressibility read: low
-    // AC ⇒ gradients, high AC ⇒ texture/noise). Decode-once, zero
-    // shuffle; the oracle replays every signed pixel (parity of cu&i via
-    // bit sums).,
-    "img_wht_energy" -> ((s, dir) => {
-      ops.ImageOps.whtEnergy(gateTiles(s, "png"),
-          Seq((0, 1), (1, 0), (1, 1), (2, 2)))
-        .orderBy("image_id", "cu", "cv")
-    }),
-    // Cross-tile seam audit (ops.ImageOps.tileSeams): east edge column vs
-    // the east neighbor's west edge column per adjacent pair — the mosaic
-    // mis-registration QA (nominally shared seam columns). Only edge
-    // vectors leave the decode; stats are codegen'd zip_with/aggregate
-    // HOFs. The oracle replays both edges closed-form (3r cancels).,
-    "img_tile_seams" -> ((s, dir) => {
-      ops.ImageOps.tileSeams(gateTiles(s))
-        .orderBy("seam_lng", "seam_lat")
-    }),
-    // Best-epoch block compositing (ops.ImageOps.bestEpoch): per aligned
-    // 100×100 block the epoch with higher total-variation detail wins
-    // (epoch A on ties) — the cloud-free-mosaic / focus-stack selection
-    // rule; one selection-rollup row per image. Decode-once per pair, ONE
-    // image_id equi-join; the oracle replays every neighbor-pair |Δ| from
-    // the two closed-form fields (the base offset cancels in differences).,
-    "img_best_epoch" -> ((s, dir) => {
-      import s.implicits._
-      val corners = Seq((-120, 36), (-120, 37), (-119, 36), (-119, 37),
-        (-118, 36), (-117, 37))
-      val epochA = s.createDataset(TileGen.tiles(corners, 601, "hgt"))
-      val epochB = s.createDataset(corners.map { case (lng, lat) =>
-        TileGen.tileRow(lng, lat, 601, "hgt", TileGen.planeAt) })
-      ops.ImageOps.bestEpoch(epochA, epochB, block = 100)
-        .orderBy("image_id")
-    }),
-    // Per-block SSIM between two raster epochs — the perceptual
-    // change/fidelity measure next to img_ncc_blocks' correlation (SSIM
-    // multiplies a luminance term by a contrast+structure term, so a
-    // brightness shift and a texture change score differently). The four
-    // factors are EXACT integers over the same block moments nccBlocks
-    // already emits (everything ×n² so no division: num1 = 2·Sa·Sb + c1n²,
-    // num2 = 2·(n·Sab − Sa·Sb) + c2n², den1 = Sa² + Sb² + c1n², den2 =
-    // n·var_a + n·var_b + c2n²); only the final ratio is float — one IEEE
-    // product/division chain both engines replay bit-for-bit, floored to
-    // ppm. c1 = 1677·n², c2 = 15099·n² (the classic (0.01L)²/(0.03L)²
-    // at L = 4095, integer-floored).,
-    "img_ssim_blocks" -> ((s, dir) => {
-      import s.implicits._
-      val corners = Seq((-120, 36), (-120, 37), (-119, 36), (-119, 37),
-        (-118, 36), (-117, 37))
-      val epochA = s.createDataset(TileGen.tiles(corners, 601, "hgt"))
-      val epochB = s.createDataset(corners.map { case (lng, lat) =>
-        TileGen.tileRow(lng, lat, 601, "hgt", TileGen.planeAt) })
-      ops.ImageOps.nccBlocks(epochA, epochB, block = 100)
-        .withColumn("num1", expr("2L*sa*sb + 167700000000L"))
-        .withColumn("num2", expr("2L*(n_px*sab - sa*sb) + 1509900000000L"))
-        .withColumn("den1", expr("sa*sa + sb*sb + 167700000000L"))
-        .withColumn("den2", expr(
-          "(n_px*saa - sa*sa) + (n_px*sbb - sb*sb) + 1509900000000L"))
-        .withColumn("ssim_ppm", expr(
-          """CAST(FLOOR(CAST(num1 AS DOUBLE) * CAST(num2 AS DOUBLE)
-             / (CAST(den1 AS DOUBLE) * CAST(den2 AS DOUBLE)) * 1000000.0D) AS BIGINT)"""))
-        .select("image_id", "py", "px", "num1", "num2", "den1", "den2", "ssim_ppm")
-        .orderBy("image_id", "py", "px")
-    }),
-    // Image REGISTRATION (ops.ImageOps.cornerMatch): epoch B is epoch A
-    // translated by (2, 3); FAST corners + 32-bit circle descriptors
-    // equi-join across epochs (bucketed by descriptor, never all-pairs)
-    // and vote for their displacement — the mode recovers the true shift.,
-    "img_register" -> ((s, dir) => {
-      import s.implicits._
-      val corners = Seq((-120, 36), (-120, 37), (-119, 36), (-119, 37),
-        (-118, 36), (-117, 37))
-      val epochA = s.createDataset(TileGen.tiles(corners, 601, "hgt"))
-      val epochB = s.createDataset(corners.map { case (lng, lat) =>
-        TileGen.tileRow(lng, lat, 601, "hgt",
-          (sw, sl, r, c) => TileGen.sampleAt(sw, sl, r + 2, c + 3)) })
-      ops.ImageOps.cornerMatch(epochA, epochB, t = 2).orderBy("image_id")
-    }),
-    // Change-detection confusion matrix (ops.ImageOps.crosstab): pixels
-    // counted per (zone_a, zone_b) over the width-512 quantization of the
-    // two epochs — which class became which, the summary a per-pixel diff
-    // can't express. Keyed pair join, kernel-side counting, zones² rows.,
-    "img_blur" -> ((s, dir) => {
-      ops.ImageOps.blurStats(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Sobel gradient energy (ops.ImageOps.sobelStats): the edge-content /
-    // texture measure beside the blur filter — exact integer Gx/Gy moments
-    // per image, Gy's sign pinning the south-first decode orientation.
-    // Decode-once, zero shuffle; the oracle replays both kernels over the
-    // closed-form field.,
-    "img_sobel" -> ((s, dir) => {
-      ops.ImageOps.sobelStats(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // ViT-style patch extraction (ops.ImageOps.patchify): each grid cut
-    // into non-overlapping 100×100 patches, one row per patch with exact
-    // integer moments (ragged 601st row/col dropped by the grid contract).
-    // Decode-once, zero shuffle; the oracle recomputes every patch moment
-    // from the closed-form field.,
-    "img_patchify" -> ((s, dir) => {
-      ops.ImageOps.patchify(gateTiles(s, "png"), patch = 100)
-        .orderBy("image_id", "py", "px")
     }),
     // Per-image luminance histogram (width-256 bins): the exposure profile
     // for degenerate-image filtering; decode-once, zero shuffle.,
@@ -270,472 +71,13 @@ object QImg {
     "img_otsu" -> ((s, dir) => {
       ops.ImageOps.otsu(gateTiles(s, "png"), width = 64).orderBy("image_id")
     }),
-    // Haralick texture moments (ops.ImageOps.glcm): per-image exact-integer
-    // co-occurrence moments at offset (0,1) over width-64 gray levels —
-    // contrast/correlation/homogeneity numerators with no float anywhere.
-    // Decode-once, zero shuffle.,
-    "img_glcm" -> ((s, dir) => {
-      ops.ImageOps.glcm(gateTiles(s, "png"), binWidth = 64).orderBy("image_id")
-    }),
-    // 3x3 box morphology census (ops.ImageOps.morph): foreground/eroded/
-    // dilated counts + morphological gradient over the >=2000 binarization,
-    // border-clipped SE computed separably — the oracle replays the two
-    // window passes. Decode-once, zero shuffle.,
-    "img_morph" -> ((s, dir) => {
-      ops.ImageOps.morph(gateTiles(s, "png"), thr = 2000).orderBy("image_id")
-    }),
-    // Perimeter + isoperimetric compactness of the >=3600 mask
-    // (ops.ImageOps.perimeter): exposed-edge count (border counts) and
-    // 16e6·A div P² — a solid square scores exactly 10⁶, filaments far
-    // less; the blob-vs-streak mask QA number next to img_morph's
-    // area-based gradient. Pure integers, decode-once, zero shuffle.,
-    "img_perimeter" -> ((s, dir) => {
-      ops.ImageOps.perimeter(gateTiles(s, "png"), thr = 3600)
-        .orderBy("image_id")
-    }),
-    // Euler characteristic census (ops.ImageOps.eulerCensus): Gray's padded
-    // 2x2 quad counts over the >=2000 binarization — components − holes as
-    // exact integers, the topology-grade noise/structure discriminator.
-    // Decode-once, zero shuffle; the oracle replays the padded quad scan
-    // from the closed-form corners.,
-    "img_euler" -> ((s, dir) => {
-      ops.ImageOps.eulerCensus(gateTiles(s, "png"), thr = 2000)
-        .orderBy("image_id")
-    }),
-    // Run-length census (ops.ImageOps.rle): horizontal + vertical maximal
-    // foreground runs over the >=2000 binarization — count, longest, Σlen²
-    // per axis, the directional-coherence / compressibility screen. The
-    // oracle replays the run structure with lag-window run-starts and a
-    // cumulative run id per scanline. Decode-once, zero shuffle.,
-    "img_rle" -> ((s, dir) => {
-      ops.ImageOps.rle(gateTiles(s, "png"), thr = 2000).orderBy("image_id")
-    }),
-    // Axis projection profiles (ops.ImageOps.projections): 0°/90° Radon
-    // moments — per-axis (argmax, max, Σprofile²) plus total mass, the
-    // banding/skew detector. Decode-once, zero shuffle; the oracle
-    // replays both profiles as GROUP BYs with QUALIFY argmax.,
-    "img_projections" -> ((s, dir) => {
-      ops.ImageOps.projections(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // FAST-12 corner census (ops.ImageOps.fastCorners): Rosten–Drummond
-    // segment test over the radius-3 Bresenham circle — ≥12 CONTIGUOUS
-    // circle pixels all ≥ center+t (or all ≤ center−t), contiguity by the
-    // doubled-mask bit trick, pure integers end to end. The keypoint-
-    // density screen of image curation (texture scores, flat fills don't).
-    // Decode-once, zero shuffle; the oracle replays every circle pixel
-    // from the closed form and the same mask arithmetic in SQL.,
-    "img_fast_corners" -> ((s, dir) => {
-      ops.ImageOps.fastCorners(gateTiles(s, "png"), t = 2).orderBy("image_id")
-    }),
-    // Harris corner census (ops.ImageOps.harris): the STRUCTURE-TENSOR
-    // detector next to FAST's segment test — per 2×2 interior block the
-    // Sobel tensor (Σgx², Σgy², Σgx·gy) and the integer-scaled response
-    // R₁₆ = 16·det − trace² (k = 1/16, sign/argmax preserved, no float in
-    // the decision path). Corner count + exact max response + its argmax
-    // block; positives localize the planted 8×8 quantization lattice.
-    // Decode-once, zero shuffle; the oracle replays every block tensor.,
-    "img_harris" -> ((s, dir) => {
-      ops.ImageOps.harris(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Second-order moment ellipse (ops.ImageOps.momentEllipse): exact
-    // central moments mu20/mu02/mu11 of the intensity mass (BigInt
-    // numerators, trunc-div by Σv), a trig-free orientation quadrant from
-    // (sign μ11, sign μ20−μ02), and the elongation number
-    // (μ20−μ02)²+4μ11² div 2^40 — the blob-orientation / registration
-    // prior next to img_register. Decode-once, zero shuffle; the oracle
-    // replays the moments in HUGEINT from the closed-form grid.,
-    "img_ellipse" -> ((s, dir) => {
-      ops.ImageOps.momentEllipse(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Block-pooled min-seam DP (ops.ImageOps.seamEnergy): horizontal
-    // total-variation pooled to a 20×20 block grid, then the seam-carving
-    // recurrence d(r,c) = e(r,c) + min(d(r−1, c−1..c+1)) — the cheapest
-    // low-detail corridor, exact integers, smallest-column tie-break.
-    // Decode-once, zero shuffle; the oracle unrolls the 19 DP rounds.,
-    "img_seam" -> ((s, dir) => {
-      ops.ImageOps.seamEnergy(gateTiles(s, "png"), block = 30)
-        .orderBy("image_id")
-    }),
-    // Projection-profile deskew estimate (ops.ImageOps.deskew, Postl's
-    // method): per integer shear candidate s ∈ [-3, 3] the energy Σp² of
-    // the sheared row-projection (bucket = ((r+3)·size + s·c) div size,
-    // offset keeps the numerator non-negative so trunc = floor on both
-    // engines); the skew estimate is the argmax shear, flat_score (s = 0)
-    // alongside for the alignment-gain read. The scanned-page ingest step
-    // before OCR/layout. Decode-once, zero shuffle; the oracle replays
-    // every sheared bucket from the closed-form grid.,
-    "img_deskew" -> ((s, dir) => {
-      ops.ImageOps.deskew(gateTiles(s, "png"), maxShear = 3)
-        .orderBy("image_id")
-    }),
-    // Radial intensity profile (ops.ImageOps.radialProfile): n_px + exact
-    // Σv per squared-distance ring about the centre — the vignetting /
-    // centre-bias audit; squared-bucket rings, no sqrt, 20 rows/image.,
-    "img_radial" -> ((s, dir) => {
-      ops.ImageOps.radialProfile(gateTiles(s, "png"), ringDiv = 9000L,
-          nRings = 20)
-        .orderBy("image_id", "ring")
-    }),
-    // Level-1 Haar wavelet subband census (ops.ImageOps.haar): ΣLL + per-
-    // subband detail energies (Σ LH², HL², HH²) over non-overlapping 2×2
-    // blocks, pure integers — the approximation-vs-detail energy split
-    // that separates compressible smooth content from texture and noise
-    // (the one-level DWT every multiresolution codec starts with).
-    // Decode-once, zero shuffle; the oracle replays every block from the
-    // closed-form field.,
-    "img_haar" -> ((s, dir) => {
-      ops.ImageOps.haar(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Local-binary-pattern census (ops.ImageOps.lbp): 8-neighbor ≥-code
-    // per interior pixel, histogrammed over the 256 codes — the classic
-    // micro-texture signature (flat → one code, gradients → a handful,
-    // texture spreads the histogram). Decode-once, zero shuffle, ≤256
-    // rows/image; the oracle replays every neighborhood from the closed
-    // form.,
-    "img_lbp" -> ((s, dir) => {
-      ops.ImageOps.lbp(gateTiles(s, "png")).orderBy("image_id", "code")
-    }),
-    // Gradient-orientation census (ops.ImageOps.orientHist — the HOG
-    // binning step with NO trig): central differences assigned to 8
-    // half-open octants by pure sign/|gx|-vs-|gy| comparisons + a flat
-    // bucket, Σ(gx²+gy²) per sector — the banding/scan-artifact
-    // discriminator. Decode-once, zero shuffle; the oracle replays every
-    // pixel's comparisons.
     // Block HOG census (ops.ImageOps.hogBlocks): the orientation octant
     // histogram + exact gradient energy per 4×4 spatial block — the
-    // block-local structure descriptor; same trig-free octant ladder as
-    // img_orient_hist, two more GROUP BY keys in the oracle.,
+    // block-local structure descriptor; a trig-free octant ladder the
+    // oracle replays pixel by pixel. Decode-once, zero shuffle.,
     "img_hog" -> ((s, dir) => {
       ops.ImageOps.hogBlocks(gateTiles(s, "png"))
         .orderBy("image_id", "br", "bc", "sector")
-    }),
-    "img_orient_hist" -> ((s, dir) => {
-      ops.ImageOps.orientHist(gateTiles(s, "png"))
-        .orderBy("image_id", "sector")
-    }),
-    // Bit-plane population census (ops.ImageOps.bitPlanes): per-bit set
-    // counts over all samples — the randomness-vs-structure screen (noise
-    // planes sit near 50%, structural planes skew). Pure bit arithmetic,
-    // decode-once, zero shuffle, 12 rows/image.,
-    "img_bit_planes" -> ((s, dir) => {
-      ops.ImageOps.bitPlanes(gateTiles(s, "png"), planes = 12)
-        .orderBy("image_id", "plane")
-    }),
-    // Multiresolution roughness pyramid (ops.ImageOps.roughnessPyramid):
-    // per-depth Σ(block max−min) + worst block over 1/4/16/64 blocks —
-    // the quadtree-splitting / adaptive-compression heuristic as a
-    // queryable profile. Exact integer min/max, decode-once, zero
-    // shuffle; the oracle replays each depth as a block-grid GROUP BY.,
-    "img_roughness" -> ((s, dir) => {
-      ops.ImageOps.roughnessPyramid(gateTiles(s, "png"), depths = 4)
-        .orderBy("image_id", "depth")
-    }),
-    // Summed-area-table box sums (ops.ImageOps.integralBoxSums): one O(n)
-    // integral-image pass, 16 deterministic boxes answered in O(1) each by
-    // the 4-corner identity — the box-filter/Viola–Jones primitive. The
-    // oracle recomputes every box as a grid-range GROUP BY, so a green row
-    // proves the SAT arithmetic end to end.,
-    "img_integral_box" -> ((s, dir) => {
-      ops.ImageOps.integralBoxSums(gateTiles(s, "png"), nBoxes = 16)
-        .orderBy("image_id", "box_id")
-    }),
-    // Laplacian-pyramid residual energy (ops.ImageOps.laplacianPyramid):
-    // per-level Σ(4·g − blocksum)² — deviation from the 2×2 block mean
-    // scaled by 4 so every value stays an exact integer; 3 levels.,
-    "img_laplacian" -> ((s, dir) => {
-      ops.ImageOps.laplacianPyramid(gateTiles(s, "png"), levels = 3)
-        .orderBy("image_id", "level")
-    }),
-    // Border-vs-interior contrast (ops.ImageOps.borderContrast): 8-px
-    // frame ring vs interior mean gap in exact milli-units — the
-    // letterbox / padding / watermark-frame detector.,
-    "img_border" -> ((s, dir) => {
-      ops.ImageOps.borderContrast(gateTiles(s, "png"), frame = 8)
-        .orderBy("image_id")
-    }),
-    // Adaptive local-mean threshold census (ops.ImageOps.adaptiveThreshold):
-    // 225·v vs 15×15 SAT box sum (division-free), interior pixels only;
-    // n_fg + contrast excess mass per image.,
-    "img_adaptive_thresh" -> ((s, dir) => {
-      ops.ImageOps.adaptiveThreshold(gateTiles(s, "png"))
-        .orderBy("image_id")
-    }),
-    // Adaptive quadtree leaves (ops.ImageOps.quadtreeLeaves): the actual
-    // split decisions at thr=770 — the synthetic field's depth-2 block
-    // ranges straddle the threshold (745..776), so the tree genuinely
-    // mixes depth-2 leaves with depth-3 refinements. Oracle walks the
-    // ancestor chain over per-depth block ranges.,
-    "img_quadtree" -> ((s, dir) => {
-      ops.ImageOps.quadtreeLeaves(gateTiles(s, "png"), thr = 770L,
-          maxDepth = 3)
-        .orderBy("image_id", "depth", "br", "bc")
-    }),
-    // CUT/FILL earthworks rollup (ops.ImageOps.cutFill): epoch B is a
-    // tilted plane +900, so the signed difference genuinely changes sign
-    // across each tile; per 4×4 zone the split cut/fill/net volumes on the
-    // stride-10 lattice — what geo_elev_diff's net number hides.,
-    "img_saliency" -> ((s, dir) => {
-      import s.implicits._
-      val tiles = gateTiles(s, "png")
-      tiles.mapPartitions { it =>
-        it.map { tl =>
-          val d = graft.core.TileCodec.decode(tl)
-          val size = d.size
-          var nPts = 0L; var nSal = 0L; var sumM = 0L; var maxM = 0L
-          var i = 1
-          while (i < 100) {
-            var j = 1
-            while (j < 100) {
-              val r = i * 6; val c = j * 6
-              var s3 = 0L; var s9 = 0L
-              var dr = -4
-              while (dr <= 4) {
-                var dc = -4
-                while (dc <= 4) {
-                  val v = d.samples((r + dr) * size + (c + dc)).toLong
-                  s9 += v
-                  if (dr >= -1 && dr <= 1 && dc >= -1 && dc <= 1) s3 += v
-                  dc += 1
-                }
-                dr += 1
-              }
-              val m = math.abs(9L * s3 - s9)
-              nPts += 1
-              if (m >= 2000L) nSal += 1
-              sumM += m
-              if (m > maxM) maxM = m
-              j += 1
-            }
-            i += 1
-          }
-          (tl.image_id, nPts, nSal, sumM, maxM)
-        }
-      }.toDF("image_id", "n_pts", "n_salient", "sum_m", "max_m")
-        .orderBy("image_id")
-    }),
-    // 3×3 median-filter census (ops.ImageOps.medianDenoiseStats): exact
-    // integer median-of-9 vs the pixel — the salt-and-pepper screening
-    // stats. Oracle sorts the 9 closed-form neighbour values per pixel
-    // (list_sort[5]).,
-    "img_median" -> ((s, dir) => {
-      ops.ImageOps.medianDenoiseStats(gateTiles(s, "png"))
-        .orderBy("image_id")
-    }),
-    // Kuwahara edge-preserving smoothing census (ops.ImageOps
-    // .kuwaharaStats): per interior pixel the min-variance 3×3 quadrant of
-    // the 5×5 window wins (exact 9·Σx²−(Σx)² comparison, ties to lowest
-    // index) and contributes its floor-mean — per-quadrant pick counts +
-    // smoothing energy per image. Two integral images, O(1) per quadrant,
-    // zero shuffle.,
-    "img_kuwahara" -> ((s, dir) => {
-      ops.ImageOps.kuwaharaStats(gateTiles(s, "png"))
-        .orderBy("image_id")
-    }),
-    // Gradient structure tensor per ~100² block (ops.ImageOps
-    // .structureTensor): integer central differences, second moments and
-    // the (λ₁−λ₂)² coherence numerator — the orientation/striping QA next
-    // to img_sobel's magnitude census. Decode-once, zero shuffle.,
-    "img_structure_tensor" -> ((s, dir) => {
-      ops.ImageOps.structureTensor(gateTiles(s, "png"))
-        .orderBy("image_id", "py", "px")
-    }),
-    // Ordered Bayer-dither census (ops.ImageOps.bayerDither): 1-bit
-    // halftone ON-counts per closed-form B₈ threshold cell — 64 rows per
-    // image, decode-once, zero shuffle; the oracle replays the matrix
-    // arithmetically (bit dilation, no table).,
-    "img_bayer_dither" -> ((s, dir) => {
-      ops.ImageOps.bayerDither(gateTiles(s, "png"))
-        .orderBy("image_id", "bcell")
-    }),
-    // Decimation-bias audit (ops.ImageOps.downsampleBias): stride-2 pick
-    // vs 2×2 floor-mean per output pixel over 2 cascaded pyramid levels —
-    // the aliasing energy a naive pyramid injects; the resampling QA next
-    // to tile_pyramid's materialization.,
-    "img_downsample_bias" -> ((s, dir) => {
-      ops.ImageOps.downsampleBias(gateTiles(s, "png"), levels = 2)
-        .orderBy("image_id", "level")
-    }),
-    "img_keystone" -> ((s, dir) => {
-      ops.ImageOps.keystone(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Duplication-rate-by-length audit: is the dedup candidate graph
-    // biased toward long documents? Docs bucketed by 20-word bands,
-    // flagged if they appear in ANY MinHash candidate pair.,
-    "img_illum_tilt" -> ((s, dir) => {
-      ops.ImageOps.illumTilt(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Mobility regularity: per user the distinct (cell, day) visit table,
-    // cells revisited on ≥5 distinct days as the routine share — the
-    // predictability read over traj_anchors' home/work inference.,
-    "img_mask_sensitivity" -> ((s, dir) => {
-      val h = ops.ImageOps.levelHistogram(gateTiles(s, "png"))
-      val wc = Window.partitionBy("image_id").orderBy("level")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val tot = h.groupBy("image_id").agg(sum("n").as("n_px"))
-      val med = h.withColumn("cum", sum("n").over(wc))
-        .join(tot, Seq("image_id"))
-        .filter(col("cum") >= expr("(n_px + 1) DIV 2"))
-        .groupBy("image_id", "n_px").agg(min("level").as("med_level"))
-      h.join(med, Seq("image_id"))
-        .groupBy("image_id", "n_px", "med_level")
-        .agg(sum(when(col("level") > col("med_level") - 1, col("n"))
-            .otherwise(0L)).as("fg_lo"),
-          sum(when(col("level") > col("med_level"), col("n"))
-            .otherwise(0L)).as("fg_mid"),
-          sum(when(col("level") > col("med_level") + 1, col("n"))
-            .otherwise(0L)).as("fg_hi"))
-        .withColumn("band_px", expr("fg_lo - fg_hi"))
-        .orderBy("image_id")
-    }),
-    // Box-counting census at dyadic scales (ops.ImageOps.boxCount): the
-    // fractal-dimension input over the ≥3600 mask — occupied boxes per
-    // scale, partial edge boxes exact; decode-once, 5 rows per image.,
-    "img_boxcount" -> ((s, dir) => {
-      ops.ImageOps.boxCount(gateTiles(s, "png"), thr = 3600,
-          scales = Seq(1, 2, 4, 8, 16))
-        .orderBy("image_id", "scale")
-    }),
-    // Daily activity-centroid drift: per day the exact integer centroid
-    // (milli-floored) of all walk fixes and its squared day-over-day
-    // displacement — the range-shift read. One day rollup + one lag
-    // window.,
-    "img_variogram" -> ((s, dir) => {
-      ops.ImageOps.variogram(gateTiles(s, "png"),
-          Seq((1, 0), (0, 1), (4, 0), (0, 4), (16, 0), (0, 16)))
-        .orderBy("image_id", "dy", "dx")
-    }),
-    // Leave-one-out 5-NN label prediction over the embedding corpus:
-    // exact milli-quantized distances, majority vote (ties to the lower
-    // label) — per-label accuracy, the end-to-end representation-quality
-    // number above ann_silhouette's geometry read.,
-    "img_shift_field" -> ((s, dir) => {
-      import s.implicits._
-      val corners = Seq((-120, 36), (-120, 37), (-119, 36), (-119, 37),
-        (-118, 36), (-117, 37))
-      val epochA = s.createDataset(TileGen.tiles(corners, 601, "hgt"))
-      val epochB = s.createDataset(corners.map { case (lng, lat) =>
-        TileGen.tileRow(lng, lat, 601, "hgt", TileGen.planeAt) })
-      ops.ImageOps.shiftField(epochA, epochB)
-        .orderBy("image_id", "py", "px")
-    }),
-    // Space-filling-curve locality audit: the SAME quantized 256² cells
-    // ordered by the Hilbert key vs an arithmetic Morton interleave —
-    // total and max cell jump between consecutive points (Hilbert's
-    // always-adjacent property vs Z-order's seam jumps), the write-
-    // clustering choice quantified.,
-    "img_banding_period" -> ((s, dir) => {
-      ops.ImageOps.bandingPeriod(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    "img_blockiness" -> ((s, dir) => {
-      ops.ImageOps.blockiness(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Rich-club census: per degree threshold k the high-degree core size,
-    // its internal edge count and density φ ppm — hub-interconnection
-    // structure over the same canonical graph; stats-only joins against
-    // the literal threshold list.,
-    "img_block_diversity" -> ((s, dir) => {
-      ops.ImageOps.blockDiversity(gateTiles(s, "png"))
-        .orderBy("image_id", "py", "px")
-    }),
-    // Audience-overlap matrix: per event-type pair the exact common-user
-    // count and floored Jaccard ppm — the cross-sell / cannibalization
-    // read over distinct (type, user) memberships; one user-keyed
-    // self-join, audiences joined back by type.,
-    "img_distance" -> ((s, dir) => {
-      ops.ImageOps.distanceTransformStats(gateTiles(s, "png"), thr = 3600L)
-        .orderBy("image_id")
-    }),
-    // Histogram-equalization LUT: per image, 16 equal-width value buckets
-    // over [vmin, vmax] and the exact cumulative ppm each bucket maps to —
-    // the contrast-normalization transform as a queryable table (the
-    // decode side applies cdf_ppm as the remap). Exact integer bucketing;
-    // one image-keyed pass.,
-    "img_equalize" -> ((s, dir) => {
-      import s.implicits._
-      gateTiles(s, "png").mapPartitions { it =>
-        it.flatMap { tl =>
-          val d = graft.core.TileCodec.decode(tl)
-          val size = d.size
-          var lo = Long.MaxValue; var hi = Long.MinValue
-          var r = 0
-          while (r < 600) {
-            var c = 0
-            while (c < 600) {
-              val v = d.samples(r * size + c).toLong
-              if (v < lo) lo = v
-              if (v > hi) hi = v
-              c += 1
-            }
-            r += 1
-          }
-          val span = hi - lo + 1
-          val cnt = new Array[Long](16)
-          r = 0
-          while (r < 600) {
-            var c = 0
-            while (c < 600) {
-              val v = d.samples(r * size + c).toLong
-              cnt((((v - lo) * 16) / span).toInt) += 1L
-              c += 1
-            }
-            r += 1
-          }
-          var cum = 0L
-          (0 until 16).iterator.map { b =>
-            cum += cnt(b)
-            (tl.image_id, b, cnt(b), cum * 1000000L / 360000L)
-          }
-        }
-      }.toDF("image_id", "bucket", "n", "cdf_ppm")
-        .orderBy("image_id", "bucket")
-    }),
-    // Noise estimate: the exact lower MEDIAN of |4-neighbour Laplacian|
-    // per image (the robust MAD-style sigma proxy behind denoising
-    // parameter choice — img_blur's variance is outlier-dominated). One
-    // decode + one in-memory sort per image.,
-    "img_noise_mad" -> ((s, dir) => {
-      import s.implicits._
-      gateTiles(s, "png").mapPartitions { it =>
-        it.map { tl =>
-          val d = graft.core.TileCodec.decode(tl)
-          val size = d.size
-          val n = 598 * 598
-          val a = new Array[Int](n)
-          var p = 0
-          var r = 1
-          while (r < 599) {
-            var c = 1
-            while (c < 599) {
-              val lap = 4 * d.samples(r * size + c) -
-                d.samples(r * size + c + 1) - d.samples(r * size + c - 1) -
-                d.samples((r + 1) * size + c) - d.samples((r - 1) * size + c)
-              a(p) = math.abs(lap)
-              p += 1
-              c += 1
-            }
-            r += 1
-          }
-          java.util.Arrays.sort(a)
-          (tl.image_id, n.toLong, a((n + 1) / 2 - 1).toLong)
-        }
-      }.toDF("image_id", "n_px", "med_abs_lap")
-        .orderBy("image_id")
-    }),
-    // TRUE blob labeling (ops.ImageOps.blobStats): exact 4-connected
-    // components of the ≥3600 mask on the stride-10 lattice — blob count
-    // and largest blob, what img_euler's blobs−holes number only
-    // approximates. Union-find per image; recursive-CTE min-label oracle.,
-    "img_blobs" -> ((s, dir) => {
-      ops.ImageOps.blobStats(gateTiles(s, "png"), thr = 3600L)
-        .orderBy("image_id")
-    }),
-    // Hough line census (ops.ImageOps.houghLines): 4 lattice direction
-    // families, ρ-bucket votes from gradient-energy≥200 edge pixels, top-5
-    // accumulator cells per image — the block-bonus seams surface as the
-    // dominant lines. Exact integer votes, decode-once.,
-    "img_hough" -> ((s, dir) => {
-      ops.ImageOps.houghLines(gateTiles(s, "png"), thr = 200L, topK = 5)
-        .orderBy("image_id", "rk")
     }),
     // Dual-resolution conversion (reference getResolutionAndSize.ts: 1″↔3″):
     // 3:1 decimation resample re-encoded as HGT rows, then re-decoded for
@@ -745,10 +87,9 @@ object QImg {
       ops.ImageOps.decodeStats(ops.ImageOps.resample(gateTiles(s), 3))
         .orderBy("image_id")
     }),
-    // Marching-squares contour census at the 1800 m isoline: the exact
-    // per-cell case classification of raster→vector contour extraction,
-    // engine-computed from the real decode, oracle-recomputed from the
-    // closed-form corners. t=1800 cuts every gate tile (v spans ~806-3869).,
+    // Geometric augmentation (flip / rotate) pinned by position-weighted
+    // moments, which are not permutation-invariant; the oracle applies the
+    // same index identities to the closed-form grid.,
     "img_augment" -> ((s, dir) => {
       val tiles = gateTiles(s)
       (("none", tiles) +: Seq("flip_h", "flip_v", "rot90")
@@ -771,261 +112,18 @@ object QImg {
       ops.ImageOps.phashNearDup(phashCorpusTiles(s), 3)
         .orderBy("id_a", "id_b")
     }),
-    // Hamming-radius yield curve (ops.ImageOps.phashHist): the pairwise
-    // phash distance histogram over the variant corpus — the threshold
-    // tuning read for the banded near-dup join, the image twin of
-    // dedup_jaccard_hist.,
-    "img_phash_hist" -> ((s, dir) => {
-      ops.ImageOps.phashHist(phashCorpusTiles(s)).orderBy("bucket")
-    }),
-    "img_symmetry" -> ((s, dir) => {
-      ops.ImageOps.symmetryStats(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // INTERSECT / EXCEPT surface: distinct pre- vs post-midpoint user
-    // sets — retained / churned / acquired counts in one row.,
-    "img_dedup_cluster" -> ((s, dir) => {
-      ops.ImageOps.phashClusters(phashCorpusTiles(s), 3)
-        .orderBy("image_id")
-    }),
-    // Bigram collocations (ops.Curation.collocations): phrase mining by
-    // integer-quantized lift — PMI's ranking without PMI's log. Counts are
-    // vocabulary-bounded mergeable aggs; the pair tail is pruned by
-    // minCount before any join.,
-    "img_row_defects" -> ((s, dir) => {
-      ops.ImageOps.rowDefects(gateTiles(s, "png"))
-        .orderBy("image_id", "rank")
-    }),
-    // DSIR-style importance weights (Xie et al. 2023, public): score every
-    // corpus doc by how target-like its 2-gram distribution is — per gram,
-    // ratio_q = (target_freq·10⁶) div corpus_freq; doc weight = Σ ratio_q
-    // over its gram instances. The data-selection knob upstream of
-    // curation_quota (pick the highest-weight docs per budget). Gram stats
-    // bounded by vocabulary; one gram-keyed join back.,
-    "img_census_transform" -> ((s, dir) => {
-      ops.ImageOps.censusTransform(gateTiles(s, "png"))
-        .orderBy("image_id", "popcnt")
-    }),
-    // D8 pit census (ops.ImageOps.pitCensus): interior cells below all 8
-    // neighbours + total fill depth — the depression inventory that sizes
-    // hydrological conditioning before geo_flowdir/geo_watershed routing.,
-    "img_nyquist_energy" -> ((s, dir) => {
-      ops.ImageOps.nyquistEnergy(gateTiles(s, "png"))
-        .orderBy("image_id", "by", "bx")
-    }),
-    // Chapman-Kolmogorov Markov-property test: per-user event sequences
-    // give 1-step and 2-step transition counts; if the chain is Markov,
-    // P2 ~ P1^2 — both sides quantized to ppm with per-term floors so the
-    // deviation |emp - model| is an exact integer both engines agree on.,
-    "img_popularity_palette" -> ((s, dir) => {
-      ops.ImageOps.popularityPalette(gateTiles(s, "png"), k = 16)
-        .orderBy("image_id")
-    }),
-    // Positional bias of the top-20 corpus tokens per source: exact
-    // permille relative positions (lead/tail placement skew — the
-    // summarization-prior diagnostic positional TF indexes capture).,
-    "img_mode_filter" -> ((s, dir) => {
-      ops.ImageOps.modeFilter(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // 2:1 decimation audit (ops.MediaOps.decimateAudit): original vs
-    // pair-mean energy and the odd-even difference energy — the aliasing
-    // exposure of a naive audio downsample.,
-    "img_otsu_multilevel" -> ((s, dir) => {
-      ops.ImageOps.otsuMultilevel(gateTiles(s, "png"), width = 64)
-        .orderBy("image_id")
-    }),
-    // Greedy longest-match wordpiece segmentation over a fixed subword
-    // vocabulary: pieces-per-token fertility per source — the tokenizer
-    // cost model (distinct tokens segmented ONCE, counts joined back,
-    // never re-segmenting per occurrence).,
-    "img_glrlm" -> ((s, dir) => {
-      ops.ImageOps.glrlm(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Waveform min/max preview pyramid (ops.MediaOps.minmaxPyramid):
-    // three zoom levels of per-bucket extrema in one pass.,
-    "img_perona_malik" -> ((s, dir) => {
-      ops.ImageOps.peronaMalik(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Least-cost corridor on the synthetic cost grid: forward and
-    // reverse 6-round bounded SSSP fields, cells within slack of the
-    // best 5050->5555 cost — the corridor analysis (route robustness)
-    // that needs NO sequential path walk, just two fields and a filter.,
-    "img_diag_projections" -> ((s, dir) => {
-      ops.ImageOps.diagProjections(gateTiles(s, "png"))
-        .orderBy("image_id", "direction")
-    }),
-    // Late-arrival census under a 10-minute watermark: events whose ts
-    // falls behind the running max of earlier arrivals (arrival order =
-    // event_id) minus the allowed lateness — the batch audit that sizes
-    // a streaming watermark before deploying it.,
-    "img_demosaic_error" -> ((s, dir) => {
-      ops.ImageOps.demosaicError(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Alpha-beta tracker over each user's x-coordinate walk: the
-    // fixed-gain predictor-corrector (g=1/4, h=1/8, truncating division —
-    // DuckDB's // truncates, so both engines round residual corrections
-    // toward zero) every real-time track smoother runs — per-key
-    // sequential fold in flatMapGroups, exact integers end to end.,
-    "img_laplacian_pyramid" -> ((s, dir) => {
-      ops.ImageOps.laplacianPyramid(gateTiles(s, "png"))
-        .orderBy("image_id", "level")
-    }),
-    // Six-azimuth irradiance proxy (ops.ImageOps.irradianceSum) over the
-    // shared x1000 sun-vector table — terrain insolation census.,
-    "img_peak_centroids" -> ((s, dir) => {
-      ops.ImageOps.peakCentroids(gateTiles(s, "png"))
-        .orderBy("image_id", "rank")
-    }),
-    // Two REAL BPE merge rounds (Sennrich 2016, public): corpus-weighted
-    // adjacent-symbol pair counts over space-separated character
-    // segmentations, top pair merged via left-to-right non-overlapping
-    // replace (identical scan semantics in the JVM and DuckDB), then
-    // recount — the tokenizer-training loop text_bpe_pairs only
-    // inventories. Distinct words segmented once, counts joined back.,
-    "img_btc_audit" -> ((s, dir) => {
-      ops.ImageOps.btcAudit(gateTiles(s, "png")).orderBy("image_id")
-    }),
-    // Weekly leaderboard churn: per ISO-ish week the event types ranked
-    // by volume, joined to the previous week's ranks — the rank-delta
-    // report trend dashboards run.,
-    "img_lsb_embed_cost" -> ((s, dir) => {
-      ops.ImageOps.lsbEmbedCost(gateTiles(s, "png")).orderBy("image_id")
-    }),
   )
 
   val sql: Map[String, String] = Map(
-    "img_emd_epochs" -> {
-      val va = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         ha AS (SELECT swlng, swlat,
-             CAST(greatest(0, least(63, ($va) // 64)) AS INT) AS level,
-             CAST(count(*) AS BIGINT) AS na
-           FROM k, range(0,601) r, range(0,601) c GROUP BY 1, 2, 3),
-         hb AS (SELECT swlng, swlat,
-             CAST(greatest(0, least(63, (a + c.range + 2*r.range) // 64)) AS INT) AS level,
-             CAST(count(*) AS BIGINT) AS nb
-           FROM k, range(0,601) r, range(0,601) c GROUP BY 1, 2, 3),
-         j AS (SELECT COALESCE(ha.swlng, hb.swlng) AS swlng,
-             COALESCE(ha.swlat, hb.swlat) AS swlat,
-             COALESCE(ha.level, hb.level) AS level,
-             COALESCE(na, 0) AS na, COALESCE(nb, 0) AS nb
-           FROM ha FULL OUTER JOIN hb ON hb.swlng = ha.swlng
-             AND hb.swlat = ha.swlat AND hb.level = ha.level),
-         cdf AS (SELECT swlng, swlat, level,
-             CAST(sum(na) OVER w AS BIGINT) AS ca,
-             CAST(sum(nb) OVER w AS BIGINT) AS cb
-           FROM j WINDOW w AS (PARTITION BY swlng, swlat ORDER BY level))
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(count(*) AS BIGINT) AS n_levels,
-           CAST(sum(abs(ca - cb)) AS BIGINT) AS emd
-         FROM cdf GROUP BY 1 ORDER BY image_id"""
-    },
-    // labelprop rounds + per-label volume/cut/internal pieces,
-    "img_hist_match" -> {
-      val va = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         ga AS (SELECT swlng, swlat,
-             greatest(0, least(63, ($va) // 64)) AS level
-           FROM k, range(0,601) r, range(0,601) c),
-         gb AS (SELECT swlng, swlat,
-             greatest(0, least(63, (a + c.range + 2*r.range) // 64)) AS level
-           FROM k, range(0,601) r, range(0,601) c),
-         ha AS (SELECT swlng, swlat, CAST(level AS INT) AS level,
-             CAST(count(*) AS BIGINT) AS n FROM ga GROUP BY 1, 2, 3),
-         hb AS (SELECT swlng, swlat, CAST(level AS INT) AS level,
-             CAST(count(*) AS BIGINT) AS n FROM gb GROUP BY 1, 2, 3),
-         ca AS (SELECT swlng, swlat, level, n, CAST(sum(n) OVER (
-             PARTITION BY swlng, swlat ORDER BY level) AS BIGINT) AS cdf_a
-           FROM ha),
-         cb AS (SELECT swlng, swlat, level, CAST(sum(n) OVER (
-             PARTITION BY swlng, swlat ORDER BY level) AS BIGINT) AS cdf_b
-           FROM hb),
-         m AS (SELECT ca.swlng, ca.swlat, ca.level, ca.n AS n_px, ca.cdf_a,
-             CAST(min(cb.level) AS INT) AS mapped_level
-           FROM ca JOIN cb ON cb.swlng = ca.swlng AND cb.swlat = ca.swlat
-             AND cb.cdf_b >= ca.cdf_a
-           GROUP BY 1, 2, 3, 4, 5)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           level, n_px, cdf_a, mapped_level
-         FROM m ORDER BY image_id, level"""
-    },
-    // 3 unrolled pairwise (sum, difference) cascade levels,
-    "img_gradient_zcr" -> {
-      val gr = s"(${gridV("c.range", "r.range")}) - (${gridV("c.range-1", "r.range")})"
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         g AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
-             $gr AS gr
-           FROM k, range(0,600) r, range(1,600) c),
-         nz AS (SELECT swlng, swlat, r, c,
-             CASE WHEN gr > 0 THEN 1 ELSE -1 END AS sg
-           FROM g WHERE gr <> 0),
-         fl AS (SELECT swlng, swlat, sg, lag(sg) OVER (
-             PARTITION BY swlng, swlat, r ORDER BY c) AS psg FROM nz),
-         st AS (SELECT swlng, swlat, CAST(count(*) AS BIGINT) AS n_steps
-           FROM g GROUP BY 1, 2),
-         fc AS (SELECT swlng, swlat,
-             CAST(sum(CASE WHEN psg IS NOT NULL AND sg <> psg
-               THEN 1 ELSE 0 END) AS BIGINT) AS n_flips
-           FROM fl GROUP BY 1, 2)
-         SELECT (CASE WHEN st.swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(st.swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN st.swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(st.swlng) AS VARCHAR),3,'0')) AS image_id,
-           n_steps, n_flips,
-           CASE WHEN n_steps = 0 THEN CAST(0 AS BIGINT)
-                ELSE n_flips * 1000000 // n_steps END AS rate_ppm
-         FROM st JOIN fc ON fc.swlng = st.swlng AND fc.swlat = st.swlat
-         ORDER BY image_id"""
-    },
-    // the attack-resilience machinery with the % 5 sample removed,
-    "img_contrast_map" -> {
-      val v = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         g AS (SELECT swlng, swlat,
-             CAST(r.range // 100 AS INT) AS py,
-             CAST(c.range // 100 AS INT) AS px, CAST($v AS BIGINT) AS v
-           FROM k, range(0,600) r, range(0,600) c),
-         rk AS (SELECT swlng, swlat, py, px, v, row_number() OVER (
-             PARTITION BY swlng, swlat, py, px ORDER BY v) AS rn FROM g)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           py, px,
-           max(CASE WHEN rn = 1000 THEN v END) AS p10_v,
-           max(CASE WHEN rn = 9000 THEN v END) AS p90_v,
-           max(CASE WHEN rn = 9000 THEN v END)
-             - max(CASE WHEN rn = 1000 THEN v END) AS range_v
-         FROM rk GROUP BY 1, 2, 3 ORDER BY image_id, py, px"""
-    },
-    // per-bit majority votes over the word-hash lists,
-    "img_focus_map" -> {
-      val v0 = gridV("c.range", "r.range")
-      val vn = gridV("c.range", "r.range-1")
-      val vs = gridV("c.range", "r.range+1")
-      val vw = gridV("c.range-1", "r.range")
-      val ve = gridV("c.range+1", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         g AS (SELECT swlng, swlat,
-             CAST(least((r.range - 1) // 100, 5) AS INT) AS py,
-             CAST(least((c.range - 1) // 100, 5) AS INT) AS px,
-             abs(4*($v0) - ($vn) - ($vs) - ($vw) - ($ve)) AS lap
-           FROM k, range(1,600) r, range(1,600) c)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           py, px, CAST(count(*) AS BIGINT) AS n_px,
-           CAST(sum(lap) AS BIGINT) AS lap_abs_sum,
-           CAST(max(lap) AS BIGINT) AS lap_abs_max
-         FROM g GROUP BY 1, 2, 3 ORDER BY image_id, py, px"""
-    },
-    // per-fix min d2 to center VALUES, per-traj nearest-rank quantiles,
+    // fidelity: px_sum recomputed from the closed-form grid — the engine's
+    // value comes from the DECODED payload (png decode included), so the
+    // decode arithmetic is anchored. For the exact lanes sse=0 / psnr_q
+    // sentinel ARE the decode contract (the engine computes them from the
+    // real decode; the oracle states the contract values). The noisy lane
+    // makes the PSNR formula itself load-bearing: the oracle rebuilds the
+    // +3-every-97th-sample grid, recomputes its nonzero sse and runs the
+    // identical 10*log10(peak^2/(sse/n)) quantization the engine applies
+    // to its decoded pixels,
     "img_fidelity" ->
       """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
          g AS (SELECT swlng, swlat,
@@ -1075,167 +173,6 @@ object QImg {
            CAST(sum(v) AS BIGINT) AS px_sum,
            CAST(sum(v) AS BIGINT) / CAST(count(*) AS BIGINT) AS px_mean
          FROM g GROUP BY swlng, swlat ORDER BY image_id""",
-    // marching-squares census recomputed from the closed-form corners: each
-    // 2x2 cell's 4-bit case from the same >= 1800 corner bits, saddles =
-    // {5,10}, segments 2 for saddles / 1 for any other cut case,
-    "img_ncc_blocks" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT swlng, swlat,
-           CAST(r.range // 100 AS INT) AS py, CAST(c.range // 100 AS INT) AS px,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range
-             + ((c.range//8)*(r.range//8)) % 32 AS va,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + c.range + 2*r.range AS vb
-           FROM corners, range(0,600) r, range(0,600) c)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           py, px,
-           CAST(count(*) AS BIGINT) AS n_px,
-           CAST(sum(va) AS BIGINT) AS sa,
-           CAST(sum(vb) AS BIGINT) AS sb,
-           CAST(sum(va*va) AS BIGINT) AS saa,
-           CAST(sum(vb*vb) AS BIGINT) AS sbb,
-           CAST(sum(va*vb) AS BIGINT) AS sab
-         FROM g GROUP BY swlng, swlat, py, px
-         ORDER BY image_id, py, px""",
-    // the ncc moment CTE re-finished as the four exact SSIM factors + the
-    // single IEEE ratio floored to ppm (epoch B is the smooth plane),
-    "img_wht_energy" -> {
-      def par(u: String, x: String) =
-        s"(1 - 2*((($u & ($x%8))%2 + (($u & ($x%8))//2)%2 + (($u & ($x%8))//4)%2) % 2))"
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         coeffs(cu, cv) AS (VALUES (0,1),(1,0),(1,1),(2,2)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-                 CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range
-             + ((c.range//8)*(r.range//8)) % 32 AS px
-           FROM corners, range(0,600) r, range(0,600) c),
-         sg AS (SELECT image_id, cu, cv, r // 8 AS br, c // 8 AS bc,
-             px * ${par("cu", "r")} * ${par("cv", "c")} AS sv
-           FROM g, coeffs),
-         bl AS (SELECT image_id, cu, cv, br, bc,
-             CAST(sum(sv) AS BIGINT) AS coef
-           FROM sg GROUP BY 1, 2, 3, 4, 5)
-         SELECT image_id, CAST(cu AS INT) AS cu, CAST(cv AS INT) AS cv,
-           CAST(count(*) AS BIGINT) AS n_blocks,
-           CAST(sum(coef * coef) AS BIGINT) AS energy
-         FROM bl GROUP BY 1, 2, 3 ORDER BY image_id, cu, cv"""
-    },
-    // adjacent corner pairs; east edge A1+1200+(75·(r//8))%32 vs west
-    // edge A2 (+3r on both sides cancels),
-    "img_tile_seams" -> {
-      def key(lngV: String, latV: String) =
-        s"(CASE WHEN $latV < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs($latV) AS VARCHAR),2,'0') || " +
-          s"CASE WHEN $lngV < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs($lngV) AS VARCHAR),3,'0'))"
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         pairs AS (SELECT a.swlng AS alng, a.swlat AS lat, b.swlng AS blng
-           FROM corners a JOIN corners b
-           ON b.swlng = a.swlng + 1 AND b.swlat = a.swlat),
-         r AS (SELECT alng, lat, blng, unnest(range(0, 601)) AS rr FROM pairs),
-         d AS (SELECT alng, lat, blng,
-             abs((((alng+180)*7 + (lat+90)*11) % 1000 + 1200 + ((600//8)*(rr//8)) % 32)
-               - (((blng+180)*7 + (lat+90)*11) % 1000)) AS ad
-           FROM r)
-         SELECT CAST(blng AS INT) AS seam_lng, CAST(lat AS INT) AS seam_lat,
-           ${key("alng", "lat")} AS west_id, ${key("blng", "lat")} AS east_id,
-           CAST(count(*) AS BIGINT) AS n_samples,
-           CAST(sum(CASE WHEN ad = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_equal,
-           CAST(sum(ad) AS BIGINT) AS sum_abs,
-           CAST(max(ad) AS BIGINT) AS max_abs
-         FROM d GROUP BY 1, 2, 3, 4 ORDER BY seam_lng, seam_lat"""
-    },
-    // per-pixel neighbor |Δ| of both fields from the closed forms (base
-    // offset cancels); plane field contributes 1/pixel h, 2/pixel v,
-    "img_best_epoch" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-                 CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c
-           FROM corners, range(0,600) r, range(0,600) c),
-         h AS (SELECT image_id, r // 100 AS by, c // 100 AS bx,
-             CASE WHEN c % 100 < 99 THEN
-               abs(2 + (((c+1)//8)*(r//8)) % 32 - ((c//8)*(r//8)) % 32) ELSE 0 END
-           + CASE WHEN r % 100 < 99 THEN
-               abs(3 + ((c//8)*((r+1)//8)) % 32 - ((c//8)*(r//8)) % 32) ELSE 0 END AS ea,
-             CASE WHEN c % 100 < 99 THEN 1 ELSE 0 END
-           + CASE WHEN r % 100 < 99 THEN 2 ELSE 0 END AS eb
-           FROM g),
-         bl AS (SELECT image_id, by, bx, CAST(sum(ea) AS BIGINT) AS ta,
-             CAST(sum(eb) AS BIGINT) AS tb
-           FROM h GROUP BY 1, 2, 3)
-         SELECT image_id, CAST(count(*) AS BIGINT) AS n_blocks,
-           CAST(sum(CASE WHEN ta >= tb THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-           CAST(sum(CASE WHEN ta < tb THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-           CAST(sum(ta) AS BIGINT) AS energy_a,
-           CAST(sum(tb) AS BIGINT) AS energy_b,
-           CAST(sum(CASE WHEN ta >= tb THEN ta ELSE tb END) AS BIGINT) AS composite_energy
-         FROM bl GROUP BY 1 ORDER BY image_id""",
-    "img_ssim_blocks" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT swlng, swlat,
-           CAST(r.range // 100 AS INT) AS py, CAST(c.range // 100 AS INT) AS px,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range
-             + ((c.range//8)*(r.range//8)) % 32 AS va,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + c.range + 2*r.range AS vb
-           FROM corners, range(0,600) r, range(0,600) c),
-         m AS (SELECT swlng, swlat, py, px,
-           CAST(count(*) AS BIGINT) AS n_px,
-           CAST(sum(va) AS BIGINT) AS sa, CAST(sum(vb) AS BIGINT) AS sb,
-           CAST(sum(va*va) AS BIGINT) AS saa, CAST(sum(vb*vb) AS BIGINT) AS sbb,
-           CAST(sum(va*vb) AS BIGINT) AS sab
-           FROM g GROUP BY swlng, swlat, py, px),
-         f AS (SELECT swlng, swlat, py, px,
-           2*sa*sb + 167700000000 AS num1,
-           2*(n_px*sab - sa*sb) + 1509900000000 AS num2,
-           sa*sa + sb*sb + 167700000000 AS den1,
-           (n_px*saa - sa*sa) + (n_px*sbb - sb*sb) + 1509900000000 AS den2
-           FROM m)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           py, px, CAST(num1 AS BIGINT) AS num1, CAST(num2 AS BIGINT) AS num2,
-           CAST(den1 AS BIGINT) AS den1, CAST(den2 AS BIGINT) AS den2,
-           CAST(FLOOR(CAST(num1 AS DOUBLE) * CAST(num2 AS DOUBLE)
-             / (CAST(den1 AS DOUBLE) * CAST(den2 AS DOUBLE)) * CAST(1000000 AS DOUBLE)) AS BIGINT) AS ssim_ppm
-         FROM f ORDER BY image_id, py, px""",
-    "img_register" -> registerOracleSql,
-    // Laplacian pyramid: block-sum levels via integer-div GROUP BYs,
-    // residual 4·g − blocksum joined back per level,
-    "img_blur" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         l AS (SELECT swlng, swlat,
-           4*(((c.range//8)*(r.range//8)) % 32)
-           - (((c.range//8)*((r.range-1)//8)) % 32)
-           - (((c.range//8)*((r.range+1)//8)) % 32)
-           - ((((c.range-1)//8)*(r.range//8)) % 32)
-           - ((((c.range+1)//8)*(r.range//8)) % 32) AS lap
-           FROM corners, range(1,600) r, range(1,600) c),
-         a AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(count(*) AS BIGINT) AS n_int,
-           CAST(sum(lap) AS BIGINT) AS lap_sum,
-           CAST(sum(lap*lap) AS BIGINT) AS lap_sumsq
-           FROM l GROUP BY 1)
-         SELECT image_id, n_int, lap_sum, lap_sumsq,
-           n_int * lap_sumsq - lap_sum * lap_sum AS var_num
-         FROM a ORDER BY image_id""",
-    "img_sobel" -> sobelOracleSql,
-    "img_patchify" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT swlng, swlat,
-           CAST(r.range // 100 AS INT) AS py, CAST(c.range // 100 AS INT) AS px,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range
-             + ((c.range//8)*(r.range//8)) % 32 AS v
-           FROM corners, range(0,600) r, range(0,600) c)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           py, px,
-           CAST(count(*) AS BIGINT) AS n_px,
-           CAST(sum(v) AS BIGINT) AS px_sum,
-           CAST(sum(v*v) AS BIGINT) AS px_sumsq,
-           CAST(min(v) AS INT) AS px_min,
-           CAST(max(v) AS INT) AS px_max
-         FROM g GROUP BY swlng, swlat, py, px
-         ORDER BY image_id, py, px""",
     "img_histogram" ->
       """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
          g AS (SELECT swlng, swlat,
@@ -1274,599 +211,7 @@ object QImg {
          FROM obj
          QUALIFY row_number() OVER (PARTITION BY image_id ORDER BY obj_q DESC, b) = 1
          ORDER BY image_id""",
-    // same grid recipe with (r, c) kept; horizontal neighbor via lead,
-    // width-64 levels, exact integer moments,
-    "img_glcm" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-                 CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range + ((c.range//8)*(r.range//8)) % 32 AS v
-           FROM corners, range(0,601) r, range(0,601) c),
-         q AS (SELECT image_id, r, c, v // 64 AS b FROM g),
-         p AS (SELECT image_id, b AS i,
-             lead(b) OVER (PARTITION BY image_id, r ORDER BY c) AS j
-           FROM q)
-         SELECT image_id, CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(sum(i) AS BIGINT) AS s_i, CAST(sum(j) AS BIGINT) AS s_j,
-           CAST(sum(i*j) AS BIGINT) AS s_ij,
-           CAST(sum(abs(i-j)) AS BIGINT) AS s_absdiff,
-           CAST(sum((i-j)*(i-j)) AS BIGINT) AS s_sqdiff,
-           CAST(sum(CASE WHEN i = j THEN 1 ELSE 0 END) AS BIGINT) AS n_eq
-         FROM p WHERE j IS NOT NULL GROUP BY 1 ORDER BY image_id""",
-    // same grid; >=2000 binarization, separable border-clipped 3x3 box
-    // min/max as two window passes (rows then columns)
-    // exposed-edge perimeter of the >=3600 mask + 16e6·A div P²,
-    "img_morph" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-                 CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range + ((c.range//8)*(r.range//8)) % 32 AS v
-           FROM corners, range(0,601) r, range(0,601) c),
-         b AS (SELECT image_id, r, c, CASE WHEN v >= 2000 THEN 1 ELSE 0 END AS b FROM g),
-         hm AS (SELECT image_id, r, c, b,
-             min(b) OVER (PARTITION BY image_id, r ORDER BY c ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS hmin,
-             max(b) OVER (PARTITION BY image_id, r ORDER BY c ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS hmax
-           FROM b),
-         vm AS (SELECT image_id, b,
-             min(hmin) OVER (PARTITION BY image_id, c ORDER BY r ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS ero,
-             max(hmax) OVER (PARTITION BY image_id, c ORDER BY r ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS dil
-           FROM hm)
-         SELECT image_id, CAST(count(*) AS BIGINT) AS n_px,
-           CAST(sum(b) AS BIGINT) AS n_fg, CAST(sum(ero) AS BIGINT) AS n_ero,
-           CAST(sum(dil) AS BIGINT) AS n_dil,
-           CAST(sum(dil) - sum(ero) AS BIGINT) AS n_edge
-         FROM vm GROUP BY 1 ORDER BY image_id""",
-    // Gray's padded 2x2 quad census replayed from the closed-form corners:
-    // each quad position (r,c) in [-1,600]^2 evaluates its four corner
-    // bits inline (out-of-bounds = background), Q1/Q3/diagonal counts,
-    // then the exactly-divisible-by-4 Euler numbers,
-    "img_perimeter" -> {
-      val v0 = gridV("c.range", "r.range")
-      def nb(dc: Int, dr: Int, guard: String) =
-        s"CASE WHEN $guard THEN FALSE ELSE (${gridV(s"c.range+($dc)", s"r.range+($dr)")}) >= 3600 END"
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         h AS (SELECT swlng, swlat,
-             ($v0) >= 3600 AS hi,
-             ${nb(0, -1, "r.range = 0")} AS hup,
-             ${nb(0, 1, "r.range = 600")} AS hdn,
-             ${nb(-1, 0, "c.range = 0")} AS hlf,
-             ${nb(1, 0, "c.range = 600")} AS hrt
-           FROM k, range(0,601) r, range(0,601) c),
-         agg AS (SELECT swlng, swlat,
-             CAST(sum(CASE WHEN hi THEN 1 ELSE 0 END) AS BIGINT) AS n_high,
-             CAST(sum(CASE WHEN hi THEN
-               (CASE WHEN NOT hup THEN 1 ELSE 0 END) + (CASE WHEN NOT hdn THEN 1 ELSE 0 END)
-               + (CASE WHEN NOT hlf THEN 1 ELSE 0 END) + (CASE WHEN NOT hrt THEN 1 ELSE 0 END)
-               ELSE 0 END) AS BIGINT) AS perimeter
-           FROM h GROUP BY 1, 2)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           n_high, perimeter,
-           CASE WHEN perimeter = 0 THEN CAST(0 AS BIGINT)
-                ELSE (16000000 * n_high) // (perimeter * perimeter) END AS compact_ppm
-         FROM agg ORDER BY image_id"""
-    },
-    "img_euler" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         q AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-                 CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS b0
-           FROM corners, range(-1,601) r, range(-1,601) c),
-         bits AS (SELECT image_id,
-           CASE WHEN r BETWEEN 0 AND 600 AND c BETWEEN 0 AND 600
-                AND b0 + 2*c + 3*r + ((c//8)*(r//8)) % 32 >= 2000 THEN 1 ELSE 0 END AS tl,
-           CASE WHEN r BETWEEN 0 AND 600 AND c+1 BETWEEN 0 AND 600
-                AND b0 + 2*(c+1) + 3*r + (((c+1)//8)*(r//8)) % 32 >= 2000 THEN 1 ELSE 0 END AS tr,
-           CASE WHEN r+1 BETWEEN 0 AND 600 AND c BETWEEN 0 AND 600
-                AND b0 + 2*c + 3*(r+1) + ((c//8)*((r+1)//8)) % 32 >= 2000 THEN 1 ELSE 0 END AS bl,
-           CASE WHEN r+1 BETWEEN 0 AND 600 AND c+1 BETWEEN 0 AND 600
-                AND b0 + 2*(c+1) + 3*(r+1) + (((c+1)//8)*((r+1)//8)) % 32 >= 2000 THEN 1 ELSE 0 END AS br
-           FROM q),
-         agg AS (SELECT image_id,
-           CAST(count(*) FILTER (tl+tr+bl+br = 1) AS BIGINT) AS n_q1,
-           CAST(count(*) FILTER (tl+tr+bl+br = 3) AS BIGINT) AS n_q3,
-           CAST(count(*) FILTER (tl+tr+bl+br = 2 AND tl = br) AS BIGINT) AS n_qd
-           FROM bits GROUP BY 1)
-         SELECT image_id, n_q1, n_q3, n_qd,
-           CAST((n_q1 - n_q3 + 2*n_qd) // 4 AS BIGINT) AS euler4,
-           CAST((n_q1 - n_q3 - 2*n_qd) // 4 AS BIGINT) AS euler8
-         FROM agg ORDER BY image_id""",
-    // run structure replayed per scanline: lag-window run starts, a
-    // cumulative run id, lengths grouped per (line, run) — both axes,
-    "img_rle" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-                 CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c,
-           CASE WHEN ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range
-                + ((c.range//8)*(r.range//8)) % 32 >= 2000 THEN 1 ELSE 0 END AS b
-           FROM corners, range(0,601) r, range(0,601) c),
-         hs AS (SELECT image_id, r, c, b,
-             CASE WHEN b = 1 AND coalesce(lag(b) OVER (PARTITION BY image_id, r ORDER BY c), 0) = 0
-                  THEN 1 ELSE 0 END AS strt FROM g),
-         hr AS (SELECT image_id, r, b,
-             sum(strt) OVER (PARTITION BY image_id, r ORDER BY c) AS rid FROM hs),
-         hl AS (SELECT image_id, CAST(count(*) AS BIGINT) AS len
-           FROM hr WHERE b = 1 GROUP BY image_id, r, rid),
-         hh AS (SELECT image_id, CAST(count(*) AS BIGINT) AS n_runs_h,
-             CAST(max(len) AS BIGINT) AS max_run_h,
-             CAST(sum(len*len) AS BIGINT) AS ss_run_h FROM hl GROUP BY 1),
-         vs AS (SELECT image_id, r, c, b,
-             CASE WHEN b = 1 AND coalesce(lag(b) OVER (PARTITION BY image_id, c ORDER BY r), 0) = 0
-                  THEN 1 ELSE 0 END AS strt FROM g),
-         vr AS (SELECT image_id, c, b,
-             sum(strt) OVER (PARTITION BY image_id, c ORDER BY r) AS rid FROM vs),
-         vl AS (SELECT image_id, CAST(count(*) AS BIGINT) AS len
-           FROM vr WHERE b = 1 GROUP BY image_id, c, rid),
-         vv AS (SELECT image_id, CAST(count(*) AS BIGINT) AS n_runs_v,
-             CAST(max(len) AS BIGINT) AS max_run_v,
-             CAST(sum(len*len) AS BIGINT) AS ss_run_v FROM vl GROUP BY 1)
-         SELECT image_id, n_runs_h, max_run_h, ss_run_h,
-           n_runs_v, max_run_v, ss_run_v
-         FROM hh JOIN vv USING (image_id) ORDER BY image_id""",
-    // every (shear, sheared-row bucket) partial sum from the closed form;
-    // trunc-div = floor since the numerator is offset non-negative,
-    "img_projections" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-                 CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range
-             + ((c.range//8)*(r.range//8)) % 32 AS v
-           FROM corners, range(0,601) r, range(0,601) c),
-         rs AS (SELECT image_id, r, CAST(sum(v) AS BIGINT) AS p FROM g GROUP BY 1, 2),
-         cs AS (SELECT image_id, c, CAST(sum(v) AS BIGINT) AS p FROM g GROUP BY 1, 2),
-         ra AS (SELECT image_id, CAST(r AS INT) AS row_argmax, p AS row_max FROM rs
-           QUALIFY row_number() OVER (PARTITION BY image_id ORDER BY p DESC, r) = 1),
-         rm AS (SELECT image_id, CAST(sum(p) AS BIGINT) AS total,
-             CAST(sum(p*p) AS BIGINT) AS row_ss FROM rs GROUP BY 1),
-         ca AS (SELECT image_id, CAST(c AS INT) AS col_argmax, p AS col_max FROM cs
-           QUALIFY row_number() OVER (PARTITION BY image_id ORDER BY p DESC, c) = 1),
-         cm AS (SELECT image_id, CAST(sum(p*p) AS BIGINT) AS col_ss FROM cs GROUP BY 1)
-         SELECT image_id, total, row_argmax, row_max, row_ss,
-           col_argmax, col_max, col_ss
-         FROM rm JOIN ra USING (image_id) JOIN ca USING (image_id)
-           JOIN cm USING (image_id) ORDER BY image_id""",
-    // both closed-form epochs quantized to width-512 zones, counted per
-    // (zone_a, zone_b) cell,
-    "img_fast_corners" -> fastOracleSql,
-    "img_harris" -> harrisOracleSql,
-    // second-order HUGEINT moments over the closed-form grid; trunc-div
-    // (DuckDB // == Spark DIV == BigInt /) keeps every value int64-exact,
-    "img_ellipse" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-                 CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range + ((c.range//8)*(r.range//8)) % 32 AS v
-           FROM corners, range(0,601) r, range(0,601) c),
-         m AS (SELECT image_id,
-             CAST(sum(v) AS HUGEINT) AS s,
-             CAST(sum(v*r) AS HUGEINT) AS sr, CAST(sum(v*c) AS HUGEINT) AS sc,
-             CAST(sum(CAST(v AS BIGINT)*r*r) AS HUGEINT) AS srr,
-             CAST(sum(CAST(v AS BIGINT)*c*c) AS HUGEINT) AS scc,
-             CAST(sum(CAST(v AS BIGINT)*r*c) AS HUGEINT) AS src
-           FROM g GROUP BY 1),
-         mu AS (SELECT image_id, s,
-             (s*srr - sr*sr) // s AS mu20,
-             (s*scc - sc*sc) // s AS mu02,
-             (s*src - sr*sc) // s AS mu11 FROM m)
-         SELECT image_id, CAST(s AS BIGINT) AS s_v,
-           CAST(mu20 AS BIGINT) AS mu20, CAST(mu02 AS BIGINT) AS mu02,
-           CAST(mu11 AS BIGINT) AS mu11,
-           CAST((CASE WHEN mu11 >= 0 THEN 0 ELSE 2 END) +
-                (CASE WHEN mu20 >= mu02 THEN 0 ELSE 1 END) AS INT) AS orient,
-           CAST(((mu20-mu02)*(mu20-mu02) + 4*mu11*mu11)
-             // CAST(1099511627776 AS HUGEINT) AS BIGINT) AS ecc_q
-         FROM mu ORDER BY image_id""",
-    "img_seam" -> seamOracleSql,
-    // radial profile: squared-distance ring buckets about node (300,300),
-    // exact-integer count + Σv per ring over the same synthetic grid,
-    "img_deskew" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         shears(s) AS (VALUES (-3),(-2),(-1),(0),(1),(2),(3)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-                 CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range
-             + ((c.range//8)*(r.range//8)) % 32 AS v
-           FROM corners, range(0,601) r, range(0,601) c),
-         b AS (SELECT image_id, s, ((r + 3) * 601 + s * c) // 601 AS bkt,
-             CAST(sum(v) AS BIGINT) AS p
-           FROM g, shears GROUP BY 1, 2, 3),
-         sc AS (SELECT image_id, s, CAST(sum(p * p) AS BIGINT) AS score
-           FROM b GROUP BY 1, 2),
-         best AS (SELECT image_id, CAST(s AS INT) AS best_shear,
-             score AS best_score FROM sc
-           QUALIFY row_number() OVER (PARTITION BY image_id ORDER BY score DESC, s) = 1)
-         SELECT image_id, best_shear, best_score, f.score AS flat_score
-         FROM best JOIN (SELECT image_id, score FROM sc WHERE s = 0) f USING (image_id)
-         ORDER BY image_id""",
-    // both projection profiles as GROUP BYs; argmax via QUALIFY with the
-    // smallest-index tiebreak,
-    "img_radial" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range + ((c.range//8)*(r.range//8)) % 32 AS v
-           FROM corners, range(0,601) r, range(0,601) c)
-         SELECT image_id,
-           CAST(least(((r-300)*(r-300) + (c-300)*(c-300)) // 9000, 19) AS INT) AS ring,
-           count(*) AS n_px, CAST(sum(v) AS BIGINT) AS sum_v
-         FROM g GROUP BY 1, 2 ORDER BY image_id, ring""",
-    "img_haar" -> haarOracleSql,
-    "img_lbp" -> lbpOracleSql,
     "img_hog" -> hogOracleSql,
-    // r1 committed with every order; zz is the crashed writer's tree,
-    "img_orient_hist" -> orientOracleSql,
-    "img_bit_planes" -> bitPlanesOracleSql,
-    "img_roughness" -> roughnessOracleSql,
-    "img_integral_box" -> integralBoxOracleSql,
-    "img_laplacian" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g0 AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c,
-           CAST(((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range + ((c.range//8)*(r.range//8)) % 32 AS BIGINT) AS v
-           FROM corners, range(0,600) r, range(0,600) c),
-         g1 AS (SELECT image_id, r//2 AS r, c//2 AS c, CAST(sum(v) AS BIGINT) AS v FROM g0 GROUP BY 1,2,3),
-         g2 AS (SELECT image_id, r//2 AS r, c//2 AS c, CAST(sum(v) AS BIGINT) AS v FROM g1 GROUP BY 1,2,3),
-         g3 AS (SELECT image_id, r//2 AS r, c//2 AS c, CAST(sum(v) AS BIGINT) AS v FROM g2 GROUP BY 1,2,3),
-         e0 AS (SELECT a.image_id, CAST(count(*) AS BIGINT) AS n_px,
-             CAST(sum((4*a.v - s.v)*(4*a.v - s.v)) AS BIGINT) AS energy
-           FROM g0 a JOIN g1 s ON s.image_id = a.image_id AND s.r = a.r//2 AND s.c = a.c//2 GROUP BY 1),
-         e1 AS (SELECT a.image_id, CAST(count(*) AS BIGINT) AS n_px,
-             CAST(sum((4*a.v - s.v)*(4*a.v - s.v)) AS BIGINT) AS energy
-           FROM g1 a JOIN g2 s ON s.image_id = a.image_id AND s.r = a.r//2 AND s.c = a.c//2 GROUP BY 1),
-         e2 AS (SELECT a.image_id, CAST(count(*) AS BIGINT) AS n_px,
-             CAST(sum((4*a.v - s.v)*(4*a.v - s.v)) AS BIGINT) AS energy
-           FROM g2 a JOIN g3 s ON s.image_id = a.image_id AND s.r = a.r//2 AND s.c = a.c//2 GROUP BY 1)
-         SELECT image_id, CAST(0 AS INT) AS level, n_px, energy FROM e0
-         UNION ALL SELECT image_id, CAST(1 AS INT), n_px, energy FROM e1
-         UNION ALL SELECT image_id, CAST(2 AS INT), n_px, energy FROM e2
-         ORDER BY image_id, level""",
-    // border ring vs interior, cross-multiplied milli-unit mean gap,
-    "img_border" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           (r.range < 8 OR r.range >= 592 OR c.range < 8 OR c.range >= 592) AS brd,
-           CAST(((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range + ((c.range//8)*(r.range//8)) % 32 AS BIGINT) AS v
-           FROM corners, range(0,600) r, range(0,600) c),
-         a AS (SELECT image_id,
-             CAST(sum(CASE WHEN brd THEN 1 ELSE 0 END) AS BIGINT) AS n_border,
-             CAST(sum(CASE WHEN brd THEN v ELSE 0 END) AS BIGINT) AS sum_border,
-             CAST(sum(CASE WHEN brd THEN 0 ELSE 1 END) AS BIGINT) AS n_inner,
-             CAST(sum(CASE WHEN brd THEN 0 ELSE v END) AS BIGINT) AS sum_inner
-           FROM g GROUP BY 1)
-         SELECT image_id, n_border, sum_border, n_inner, sum_inner,
-           (1000 * abs(sum_border * n_inner - sum_inner * n_border))
-             // (n_border * n_inner) AS contrast_mil
-         FROM a ORDER BY image_id""",
-    // adaptive threshold: SAT via two chained window cumsums, four
-    // corner lookups per interior pixel, division-free 225·v vs box,
-    "img_adaptive_thresh" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           r.range AS r, c.range AS c,
-           CAST(((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range + ((c.range//8)*(r.range//8)) % 32 AS BIGINT) AS v
-           FROM corners, range(0,600) r, range(0,600) c),
-         rc AS (SELECT image_id, r, c, v,
-             sum(v) OVER (PARTITION BY image_id, r ORDER BY c) AS rcum FROM g),
-         ii AS (SELECT image_id, r, c,
-             CAST(sum(rcum) OVER (PARTITION BY image_id, c ORDER BY r) AS BIGINT) AS s FROM rc),
-         e AS (SELECT g.image_id, 225*g.v AS lhs,
-             a.s - b.s - d.s + f.s AS box
-           FROM g
-           JOIN ii a ON a.image_id = g.image_id AND a.r = g.r+7 AND a.c = g.c+7
-           JOIN ii b ON b.image_id = g.image_id AND b.r = g.r-8 AND b.c = g.c+7
-           JOIN ii d ON d.image_id = g.image_id AND d.r = g.r+7 AND d.c = g.c-8
-           JOIN ii f ON f.image_id = g.image_id AND f.r = g.r-8 AND f.c = g.c-8
-           WHERE g.r BETWEEN 8 AND 592 AND g.c BETWEEN 8 AND 592)
-         SELECT image_id, CAST(count(*) AS BIGINT) AS n_eval,
-           CAST(sum(CASE WHEN lhs > box THEN 1 ELSE 0 END) AS BIGINT) AS n_fg,
-           CAST(sum(CASE WHEN lhs > box THEN lhs - box ELSE 0 END) AS BIGINT) AS sum_excess
-         FROM e GROUP BY 1 ORDER BY image_id""",
-    "img_quadtree" -> quadtreeOracleSql,
-    "img_saliency" -> saliencyOracleSql,
-    // equalization LUT: 16-bucket spine LEFT-joined so empty buckets keep
-    // their cdf rows, exactly like the engine's dense array,
-    "img_median" -> medianOracleSql,
-    "img_kuwahara" -> kuwaharaOracleSql,
-    "img_structure_tensor" -> structureTensorOracleSql,
-    "img_bayer_dither" -> bayerOracleSql,
-    "img_downsample_bias" -> {
-      val v = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         g AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
-             CAST($v AS BIGINT) AS v
-           FROM k, range(0,600) r, range(0,600) c),
-         l1 AS (SELECT swlng, swlat, r // 2 AS rr, c // 2 AS cc,
-             CAST(sum(v) AS BIGINT) // 4 AS m,
-             max(CASE WHEN r % 2 = 0 AND c % 2 = 0 THEN v END) AS tl
-           FROM g GROUP BY 1, 2, 3, 4),
-         e1 AS (SELECT swlng, swlat, 1 AS level,
-             CAST(count(*) AS BIGINT) AS n_px,
-             CAST(sum(abs(tl - m)) AS BIGINT) AS sum_abs_diff,
-             CAST(max(abs(tl - m)) AS BIGINT) AS max_abs_diff
-           FROM l1 GROUP BY 1, 2),
-         l2 AS (SELECT swlng, swlat, rr // 2 AS r2, cc // 2 AS c2,
-             CAST(sum(m) AS BIGINT) // 4 AS m2,
-             max(CASE WHEN rr % 2 = 0 AND cc % 2 = 0 THEN m END) AS tl
-           FROM l1 GROUP BY 1, 2, 3, 4),
-         e2 AS (SELECT swlng, swlat, 2 AS level,
-             CAST(count(*) AS BIGINT) AS n_px,
-             CAST(sum(abs(tl - m2)) AS BIGINT) AS sum_abs_diff,
-             CAST(max(abs(tl - m2)) AS BIGINT) AS max_abs_diff
-           FROM l2 GROUP BY 1, 2),
-         u AS (SELECT * FROM e1 UNION ALL SELECT * FROM e2)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           level, n_px, sum_abs_diff, max_abs_diff
-         FROM u ORDER BY image_id, level"""
-    },
-    // the walk segments, 4-orientation strict crossing test,
-    "img_keystone" -> {
-      val v = gridV("c.range", "r.range")
-      val n = 600L
-      val sr = n * (n - 1) / 2
-      val sr2 = (n - 1) * n * (2 * n - 1) / 6
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         rows_ AS (SELECT swlng, swlat, r.range AS r,
-             CAST(sum($v) AS BIGINT) AS rs,
-             CAST(sum(c.range * ($v)) AS BIGINT) AS rcs
-           FROM k, range(0,600) r, range(0,600) c GROUP BY 1, 2, 3),
-         cent AS (SELECT swlng, swlat, r,
-             CASE WHEN rs = 0 THEN CAST(0 AS BIGINT)
-                  ELSE rcs * 1000 // rs END AS cent
-           FROM rows_),
-         agr AS (SELECT swlng, swlat,
-             CAST(sum(cent) AS BIGINT) AS sum_cent_milli,
-             CAST(sum(r * cent) AS BIGINT) AS src
-           FROM cent GROUP BY 1, 2)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST($n AS BIGINT) AS n_rows, sum_cent_milli,
-           $n * src - $sr * sum_cent_milli AS slope_num,
-           CAST(${n * sr2 - sr * sr} AS BIGINT) AS var_axis_num
-         FROM agr ORDER BY image_id"""
-    },
-    // banded candidate membership flag, 20-word buckets,
-    "img_illum_tilt" -> {
-      val v = gridV("c.range", "r.range")
-      val n = 600L * 600L
-      val sAxis = 600L * 599L / 2L * 600L
-      val sAxis2 = 599L * 600L * 1199L / 6L * 600L
-      val varNum = n * sAxis2 - sAxis * sAxis
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         g AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
-             CAST($v AS BIGINT) AS v
-           FROM k, range(0,600) r, range(0,600) c),
-         agr AS (SELECT swlng, swlat, CAST(sum(v) AS BIGINT) AS sv,
-             CAST(sum(r * v) AS BIGINT) AS srv,
-             CAST(sum(c * v) AS BIGINT) AS scv
-           FROM g GROUP BY 1, 2)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST($n AS BIGINT) AS n_px, sv AS sum_v, srv, scv,
-           CAST($varNum AS BIGINT) AS var_axis_num,
-           $n * srv - $sAxis * sv AS br_num,
-           $n * scv - $sAxis * sv AS bc_num
-         FROM agr ORDER BY image_id"""
-    },
-    // distinct (cell, day) visits from the walk, routine-cell rollup,
-    "img_mask_sensitivity" -> {
-      val v = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         h AS (SELECT swlng, swlat,
-             CAST(greatest(0, least(63, ($v) // 64)) AS INT) AS level,
-             CAST(count(*) AS BIGINT) AS n
-           FROM k, range(0,601) r, range(0,601) c GROUP BY 1, 2, 3),
-         tot AS (SELECT swlng, swlat, CAST(sum(n) AS BIGINT) AS n_px
-           FROM h GROUP BY 1, 2),
-         cum AS (SELECT h.swlng, h.swlat, level, n, n_px,
-             CAST(sum(n) OVER (PARTITION BY h.swlng, h.swlat
-               ORDER BY level) AS BIGINT) AS cum
-           FROM h JOIN tot ON tot.swlng = h.swlng AND tot.swlat = h.swlat),
-         med AS (SELECT swlng, swlat, n_px,
-             CAST(min(level) AS INT) AS med_level
-           FROM cum WHERE cum >= (n_px + 1) // 2 GROUP BY 1, 2, 3),
-         fg AS (SELECT h.swlng, h.swlat, med.n_px, med.med_level,
-             CAST(sum(CASE WHEN level > med_level - 1 THEN n ELSE 0 END) AS BIGINT) AS fg_lo,
-             CAST(sum(CASE WHEN level > med_level THEN n ELSE 0 END) AS BIGINT) AS fg_mid,
-             CAST(sum(CASE WHEN level > med_level + 1 THEN n ELSE 0 END) AS BIGINT) AS fg_hi
-           FROM h JOIN med ON med.swlng = h.swlng AND med.swlat = h.swlat
-           GROUP BY 1, 2, 3, 4)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           n_px, med_level, fg_lo, fg_mid, fg_hi, fg_lo - fg_hi AS band_px
-         FROM fg ORDER BY image_id"""
-    },
-    // mask boxes per scale via index-division distinct counts,
-    "img_boxcount" -> {
-      val v = gridV("c.range", "r.range")
-      val branches = Seq(1, 2, 4, 8, 16).map { sc =>
-        s"""SELECT swlng, swlat, $sc AS scale,
-            CAST(count(DISTINCT (r.range // $sc) * 1000 + (c.range // $sc)) AS BIGINT) AS n_boxes,
-            CAST(${((600 + sc - 1) / sc).toLong * ((600 + sc - 1) / sc)} AS BIGINT) AS n_total
-          FROM k, range(0,600) r, range(0,600) c
-          WHERE ($v) >= 3600 GROUP BY 1, 2"""
-      }.mkString("\n         UNION ALL ")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         u AS ($branches)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(scale AS INT) AS scale, n_boxes, n_total
-         FROM u ORDER BY image_id, scale"""
-    },
-    // the walk cumsum, day rollup (day CAST to TIMESTAMP), lag drift,
-    "img_variogram" -> {
-      val lags = Seq((1, 0), (0, 1), (4, 0), (0, 4), (16, 0), (0, 16))
-      val branches = lags.map { case (dy, dx) =>
-        val va = gridV("c.range", "r.range")
-        val vb = gridV(s"c.range+($dx)", s"r.range+($dy)")
-        s"""SELECT swlng, swlat, $dy AS dy, $dx AS dx,
-            CAST(${(600 - dy).toLong * (600 - dx)} AS BIGINT) AS n_pairs,
-            CAST(sum((($va) - ($vb)) * (($va) - ($vb))) AS BIGINT) AS sum_sq
-          FROM k, range(0,${600 - dy}) r, range(0,${600 - dx}) c
-          GROUP BY 1, 2"""
-      }.mkString("\n         UNION ALL ")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         u AS ($branches)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(dy AS INT) AS dy, CAST(dx AS INT) AS dx, n_pairs, sum_sq
-         FROM u ORDER BY image_id, dy, dx"""
-    },
-    // exact milli distances, rank-5 window, majority with low-label ties,
-    "img_shift_field" -> {
-      val va = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         sh(dy, dx) AS (SELECT CAST(y.range AS INT) - 2, CAST(x.range AS INT) - 2
-           FROM range(0,5) y, range(0,5) x),
-         g AS (SELECT swlng, swlat, CAST(r.range // 100 AS INT) AS py,
-             CAST(c.range // 100 AS INT) AS px, dy, dx,
-             abs(($va) - (a + (c.range + dx) + 2*(r.range + dy))) AS ad
-           FROM k, range(0,600) r, range(0,600) c, sh
-           WHERE r.range % 100 >= 2 AND r.range % 100 < 98
-             AND c.range % 100 >= 2 AND c.range % 100 < 98),
-         sadt AS (SELECT swlng, swlat, py, px, dy, dx,
-             CAST(sum(ad) AS BIGINT) AS sad
-           FROM g GROUP BY 1, 2, 3, 4, 5, 6),
-         r AS (SELECT swlng, swlat, py, px, dy AS best_dy, dx AS best_dx,
-             sad, row_number() OVER (PARTITION BY swlng, swlat, py, px
-               ORDER BY sad, dy, dx) AS rn FROM sadt)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           py, px, best_dy, best_dx, sad
-         FROM r WHERE rn = 1 ORDER BY image_id, py, px"""
-    },
-    // the shared Hilbert recurrence + arithmetic Morton, jumps under both
-    // orders,
-    "img_banding_period" -> {
-      val v = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         cs AS (SELECT swlng, swlat, c.range AS c,
-             CAST(sum($v) AS BIGINT) AS s
-           FROM k, range(0,600) r, range(0,600) c GROUP BY 1, 2, 3),
-         j AS (SELECT a.swlng, a.swlat, CAST(b.c - a.c AS INT) AS lag,
-             a.s * b.s AS prod
-           FROM cs a JOIN cs b ON b.swlng = a.swlng AND b.swlat = a.swlat
-             AND b.c - a.c BETWEEN 2 AND 32),
-         sc AS (SELECT swlng, swlat, lag,
-             CAST(sum(prod) AS BIGINT) // CAST(count(*) AS BIGINT) AS score_q,
-             CAST(count(*) AS BIGINT) AS n_terms
-           FROM j GROUP BY 1, 2, 3),
-         r AS (SELECT swlng, swlat, lag AS best_lag, score_q, n_terms,
-             row_number() OVER (PARTITION BY swlng, swlat
-               ORDER BY score_q DESC, lag) AS rn FROM sc)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           best_lag, score_q, n_terms
-         FROM r WHERE rn = 1 ORDER BY image_id"""
-    },
-    // distinct (type, user, day) baskets, pair join + independence lift,
-    "img_blockiness" -> blockinessOracleSql,
-    // level-1 means from the raw grid, level-2 means-of-means, top-left
-    // stride vs mean per output pixel,
-    "img_block_diversity" -> blockDiversityOracleSql,
-    "img_distance" -> distanceOracleSql,
-    "img_equalize" -> {
-      val v = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         g AS (SELECT swlng, swlat, $v AS v FROM k, range(0,600) r, range(0,600) c),
-         mm AS (SELECT swlng, swlat, min(v) AS lo, max(v) AS hi FROM g GROUP BY 1, 2),
-         bk AS (SELECT g.swlng, g.swlat,
-             ((g.v - mm.lo) * 16) // (mm.hi - mm.lo + 1) AS bucket
-           FROM g JOIN mm ON mm.swlng = g.swlng AND mm.swlat = g.swlat),
-         cn AS (SELECT swlng, swlat, bucket, count(*) AS n FROM bk GROUP BY 1, 2, 3),
-         sp AS (SELECT mm.swlng, mm.swlat, b.range AS bucket FROM mm, range(0, 16) b),
-         j AS (SELECT sp.swlng, sp.swlat, sp.bucket, COALESCE(cn.n, 0) AS n
-           FROM sp LEFT JOIN cn ON cn.swlng = sp.swlng AND cn.swlat = sp.swlat
-             AND cn.bucket = sp.bucket)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(bucket AS INT) AS bucket, CAST(n AS BIGINT) AS n,
-           CAST((sum(n) OVER (PARTITION BY swlng, swlat ORDER BY bucket
-             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)) * 1000000 // 360000 AS BIGINT) AS cdf_ppm
-         FROM j ORDER BY image_id, bucket"""
-    },
-    // lower median of |Laplacian| by selection rank per image,
-    "img_noise_mad" -> {
-      val v0 = gridV("c.range", "r.range")
-      def v(dc: Int, dr: Int) = gridV(s"c.range+($dc)", s"r.range+($dr)")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         l AS (SELECT swlng, swlat,
-             abs(4*($v0) - (${v(1, 0)}) - (${v(-1, 0)}) - (${v(0, 1)}) - (${v(0, -1)})) AS al
-           FROM k, range(1,599) r, range(1,599) c),
-         r AS (SELECT swlng, swlat, al,
-             row_number() OVER (PARTITION BY swlng, swlat ORDER BY al) AS rn,
-             count(*) OVER (PARTITION BY swlng, swlat) AS n FROM l)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(n AS BIGINT) AS n_px, CAST(al AS BIGINT) AS med_abs_lap
-         FROM r WHERE rn = (n + 1) // 2 ORDER BY image_id"""
-    },
-    // min-label blob components per image; every image has high cells,
-    "img_blobs" -> {
-      val v = "(a + 2*(j.range*10) + 3*(i.range*10) + (((j.range*10)//8)*((i.range*10)//8)) % 32)"
-      s"""WITH RECURSIVE corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         c AS (SELECT swlng, swlat, i.range*60 + j.range AS cell,
-             i.range AS i, j.range AS j
-           FROM k, range(0,60) i, range(0,60) j WHERE $v >= 3600),
-         e AS (SELECT x.swlng, x.swlat, x.cell AS ca, y.cell AS cb
-           FROM c x JOIN c y ON x.swlng = y.swlng AND x.swlat = y.swlat
-             AND ((abs(x.i - y.i) = 1 AND x.j = y.j)
-               OR (x.i = y.i AND abs(x.j - y.j) = 1))),
-         reach(swlng, swlat, cell, other) AS (
-           SELECT swlng, swlat, cell, cell FROM c
-           UNION
-           SELECT r.swlng, r.swlat, r.cell, e.cb FROM reach r
-             JOIN e ON e.swlng = r.swlng AND e.swlat = r.swlat AND e.ca = r.other),
-         comp AS (SELECT swlng, swlat, cell, min(other) AS blob
-           FROM reach GROUP BY 1, 2, 3),
-         bs AS (SELECT swlng, swlat, blob, count(*) AS sz
-           FROM comp GROUP BY 1, 2, 3),
-         hc AS (SELECT swlng, swlat, count(*) AS n_high FROM c GROUP BY 1, 2)
-         SELECT (CASE WHEN bs.swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(bs.swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN bs.swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(bs.swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(max(hc.n_high) AS BIGINT) AS n_high,
-           CAST(count(*) AS BIGINT) AS n_blobs,
-           CAST(max(sz) AS BIGINT) AS largest
-         FROM bs JOIN hc ON hc.swlng = bs.swlng AND hc.swlat = bs.swlat
-         GROUP BY 1 ORDER BY image_id"""
-    },
-    // per-edge common-neighbour count + open-neighbourhood Jaccard ppm,
-    "img_hough" -> houghOracleSql,
     "img_resample" ->
       """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
          g AS (SELECT swlng, swlat,
@@ -1878,15 +223,6 @@ object QImg {
            CAST(sum(v) AS BIGINT) AS px_sum,
            CAST(sum(v) AS BIGINT) / CAST(count(*) AS BIGINT) AS px_mean
          FROM g GROUP BY swlng, swlat ORDER BY image_id""",
-    // fidelity: px_sum recomputed from the closed-form grid — the engine's
-    // value comes from the DECODED payload (png decode included), so the
-    // decode arithmetic is anchored. For the exact lanes sse=0 / psnr_q
-    // sentinel ARE the decode contract (the engine computes them from the
-    // real decode; the oracle states the contract values). The noisy lane
-    // makes the PSNR formula itself load-bearing: the oracle rebuilds the
-    // +3-every-97th-sample grid, recomputes its nonzero sse and runs the
-    // identical 10*log10(peak^2/(sse/n)) quantization the engine applies
-    // to its decoded pixels,
     "img_augment" ->
       """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
          g AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
@@ -1936,402 +272,5 @@ object QImg {
       s"""WITH $phashPairCtes
          SELECT id_a, id_b, CAST(bit_count(xor(pa, pb)) AS INT) AS hamming
          FROM cand WHERE bit_count(xor(pa, pb)) <= 3 ORDER BY id_a, id_b""",
-    "img_phash_hist" ->
-      s"""WITH $phashPairCtes,
-         p AS (SELECT CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hd
-           FROM corpus a JOIN corpus b ON a.image_id < b.image_id)
-         SELECT CAST(hd // 8 AS INT) AS bucket,
-           CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(min(hd) AS BIGINT) AS min_hd,
-           CAST(max(hd) AS BIGINT) AS max_hd
-         FROM p GROUP BY 1 ORDER BY bucket""",
-    // the frechet trajectory synth, chord cross² argmax,
-    "img_symmetry" -> {
-      val hv = s"abs((${gridV("c.range", "r.range")}) - (${gridV("599 - c.range", "r.range")}))"
-      val vv = s"abs((${gridV("c.range", "r.range")}) - (${gridV("c.range", "599 - r.range")}))"
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         h AS (SELECT swlng, swlat, CAST(sum($hv) AS BIGINT) AS hs
-           FROM k, range(0,600) r, range(0,300) c GROUP BY 1, 2),
-         vva AS (SELECT swlng, swlat, CAST(sum($vv) AS BIGINT) AS vs
-           FROM k, range(0,300) r, range(0,600) c GROUP BY 1, 2)
-         SELECT (CASE WHEN h.swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(h.swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN h.swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(h.swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(180000 AS BIGINT) AS n_pairs, hs AS h_absdiff,
-           vs AS v_absdiff,
-           CASE WHEN vs = 0 THEN CAST(0 AS BIGINT)
-                ELSE hs * 1000 // vs END AS hv_ratio_milli
-         FROM h JOIN vva ON vva.swlng = h.swlng AND vva.swlat = h.swlat
-         ORDER BY image_id"""
-    },
-    // INTERSECT/EXCEPT over distinct user sets,
-    "img_dedup_cluster" ->
-      s"""WITH RECURSIVE $phashPairCtes,
-         pairs AS (SELECT id_a, id_b FROM cand WHERE bit_count(xor(pa, pb)) <= 3),
-         reach(id, other) AS (
-           SELECT image_id, image_id FROM corpus
-           UNION
-           SELECT r.id, CASE WHEN p.id_a = r.other THEN p.id_b ELSE p.id_a END
-           FROM reach r JOIN pairs p ON p.id_a = r.other OR p.id_b = r.other)
-         SELECT id AS image_id, min(other) AS cluster, id = min(other) AS keep
-         FROM reach GROUP BY id ORDER BY image_id""",
-    "img_row_defects" -> {
-      val dv = s"abs((${gridV("c.range", "r.range")}) - (${gridV("c.range", "r.range-1")}))"
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         d AS (SELECT swlng, swlat, CAST(r.range AS INT) AS row,
-             CAST(sum($dv) AS BIGINT) AS delta_sum
-           FROM k, range(1,600) r, range(0,600) c GROUP BY 1, 2, 3),
-         rk AS (SELECT swlng, swlat, row, delta_sum,
-             CAST(row_number() OVER (PARTITION BY swlng, swlat
-               ORDER BY delta_sum, row) AS INT) AS rank
-           FROM d)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           rank, row, delta_sum
-         FROM rk WHERE rank <= 3 ORDER BY image_id, rank"""
-    },
-    // quantized inverse-square weights, milli-floored prediction,
-    "img_census_transform" -> {
-      val ctr = gridV("c.range", "r.range")
-      val terms = (for { dr <- -1 to 1; dc <- -1 to 1; if dr != 0 || dc != 0 }
-        yield s"(CASE WHEN ${gridV(s"c.range+($dc)", s"r.range+($dr)")} > ($ctr) THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat, $terms AS popcnt
-           FROM k, range(1,599) r, range(1,599) c),
-         cnt AS (SELECT swlng, swlat, popcnt,
-             CAST(count(*) AS BIGINT) AS n FROM px GROUP BY 1, 2, 3),
-         buckets AS (SELECT swlng, swlat, CAST(b.range AS INT) AS popcnt
-           FROM corners, range(0, 9) b)
-         SELECT (CASE WHEN bu.swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(bu.swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN bu.swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(bu.swlng) AS VARCHAR),3,'0')) AS image_id,
-           bu.popcnt, COALESCE(cnt.n, CAST(0 AS BIGINT)) AS n_pixels
-         FROM buckets bu LEFT JOIN cnt ON cnt.swlng = bu.swlng
-           AND cnt.swlat = bu.swlat AND cnt.popcnt = bu.popcnt
-         ORDER BY image_id, bu.popcnt"""
-    },
-    // LEAST over the 8 neighbour samples vs the centre, gap-summed,
-    "img_nyquist_energy" -> {
-      val gv = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat,
-             r.range // 100 AS by, c.range // 100 AS bx,
-             (CASE WHEN (r.range + c.range) % 2 = 0 THEN 1 ELSE -1 END) * ($gv) AS tchk,
-             (CASE WHEN c.range % 2 = 0 THEN 1 ELSE -1 END) * ($gv) AS trow,
-             (CASE WHEN r.range % 2 = 0 THEN 1 ELSE -1 END) * ($gv) AS tcol
-           FROM k, range(0,600) r, range(0,600) c)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(by AS BIGINT) AS by, CAST(bx AS BIGINT) AS bx,
-           CAST(sum(tchk) AS BIGINT) AS s_checker,
-           CAST(sum(trow) AS BIGINT) AS s_row,
-           CAST(sum(tcol) AS BIGINT) AS s_col
-         FROM px GROUP BY 1, 2, 3 ORDER BY image_id, by, bx"""
-    },
-    // same lead-1/lead-2 pair counts, per-term ppm floors in the model,
-    "img_popularity_palette" -> {
-      val gv = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         hist AS (SELECT swlng, swlat, CAST($gv AS BIGINT) AS v,
-             CAST(count(*) AS BIGINT) AS n
-           FROM k, range(0,600) r, range(0,600) c GROUP BY 1, 2, 3),
-         pal AS (SELECT swlng, swlat, v FROM (SELECT swlng, swlat, v, n,
-             row_number() OVER (PARTITION BY swlng, swlat
-               ORDER BY n DESC, v) AS rk FROM hist) t WHERE rk <= 16),
-         err AS (SELECT h.swlng, h.swlat, h.v, h.n,
-             min(abs(h.v - p.v)) AS e
-           FROM hist h JOIN pal p ON p.swlng = h.swlng AND p.swlat = h.swlat
-           GROUP BY 1, 2, 3, 4),
-         ps AS (SELECT swlng, swlat, CAST(sum(v) AS BIGINT) AS palette_sum
-           FROM pal GROUP BY 1, 2)
-         SELECT (CASE WHEN err.swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(err.swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN err.swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(err.swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(sum(n) AS BIGINT) AS n_px,
-           CAST(count(*) AS BIGINT) AS n_distinct,
-           max(ps.palette_sum) AS palette_sum,
-           CAST(sum(n * e) AS BIGINT) AS err_sum
-         FROM err JOIN ps ON ps.swlng = err.swlng AND ps.swlat = err.swlat
-         GROUP BY 1 ORDER BY image_id"""
-    },
-    // same len>1 filter, global top-20 tokens, permille position floors,
-    "img_mode_filter" -> {
-      val gv = gridV("c.range + dc.range", "r.range + dr.range")
-      val ctr = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         nb AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
-             $gv AS v, $ctr AS ctr
-           FROM k, range(1,599) r, range(1,599) c,
-             range(-1,2) dr, range(-1,2) dc),
-         vc AS (SELECT swlng, swlat, r, c, ctr, v, CAST(count(*) AS BIGINT) AS cnt
-           FROM nb GROUP BY 1, 2, 3, 4, 5, 6),
-         md AS (SELECT swlng, swlat, r, c, ctr, v AS mode FROM (SELECT *,
-             row_number() OVER (PARTITION BY swlng, swlat, r, c
-               ORDER BY cnt DESC, v) AS rk FROM vc) t WHERE rk = 1)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(count(*) AS BIGINT) AS n_interior,
-           CAST(sum(CASE WHEN mode <> ctr THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-           CAST(sum(CASE WHEN mode <> ctr THEN abs(mode - ctr) ELSE 0 END)
-             AS BIGINT) AS l1_change
-         FROM md GROUP BY 1 ORDER BY image_id"""
-    },
-    // closed-form byte replay, even/odd pair join, shift-positive floors,
-    "img_otsu_multilevel" ->
-      """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-                 CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 + 2*c.range + 3*r.range + ((c.range//8)*(r.range//8)) % 32 AS v
-           FROM corners, range(0,601) r, range(0,601) c),
-         h AS (SELECT image_id, v // 64 AS b, CAST(count(*) AS BIGINT) AS c
-           FROM g GROUP BY 1, 2),
-         rng AS (SELECT image_id, min(b) AS lo, max(b) AS hi FROM h GROUP BY 1),
-         ts AS (SELECT image_id, lo + i AS t
-           FROM rng, unnest(range(0, hi - lo + 1)) AS t(i)),
-         cum AS (SELECT ts.image_id, ts.t,
-             CAST(COALESCE(sum(h.c), 0) AS BIGINT) AS wt,
-             CAST(COALESCE(sum(h.b * h.c), 0) AS BIGINT) AS aa
-           FROM ts LEFT JOIN h ON h.image_id = ts.image_id AND h.b <= ts.t
-           GROUP BY 1, 2),
-         tot AS (SELECT image_id, CAST(sum(c) AS BIGINT) AS n,
-             CAST(sum(b*c) AS BIGINT) AS s FROM h GROUP BY 1),
-         cand AS (SELECT c1.image_id, c1.t AS t1, c2.t AS t2,
-             c1.wt AS w0, c2.wt - c1.wt AS w1, tot.n - c2.wt AS w2,
-             c1.aa AS a0, c2.aa - c1.aa AS a1, tot.s - c2.aa AS a2, tot.n
-           FROM cum c1 JOIN cum c2 ON c2.image_id = c1.image_id
-             AND c2.t > c1.t
-           JOIN tot ON tot.image_id = c1.image_id
-           WHERE c1.wt > 0 AND c2.wt > c1.wt AND tot.n > c2.wt),
-         obj AS (SELECT image_id, t1, t2, w0, w1, w2, n,
-             CAST((CAST(a0 AS HUGEINT)*a0*1000000) // (CAST(w0 AS HUGEINT)*n)
-               + (CAST(a1 AS HUGEINT)*a1*1000000) // (CAST(w1 AS HUGEINT)*n)
-               + (CAST(a2 AS HUGEINT)*a2*1000000) // (CAST(w2 AS HUGEINT)*n)
-               AS BIGINT) AS obj_q
-           FROM cand)
-         SELECT image_id, CAST(t1 AS INT) AS t1_bin, CAST(t2 AS INT) AS t2_bin,
-           n AS n_px, w0, w1, w2, obj_q
-         FROM obj
-         QUALIFY row_number() OVER (PARTITION BY image_id
-           ORDER BY obj_q DESC, t1, t2) = 1
-         ORDER BY image_id""",
-    // per-position longest-match table + recursive greedy walk,
-    "img_glrlm" -> {
-      val gv = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
-             LEAST(63, GREATEST(0, ($gv) // 64)) AS lv
-           FROM k, range(0,600) r, range(0,600) c),
-         isl AS (SELECT swlng, swlat, r, lv,
-             c - row_number() OVER (PARTITION BY swlng, swlat, r, lv
-               ORDER BY c) AS grp
-           FROM px),
-         runs AS (SELECT swlng, swlat, lv, CAST(count(*) AS BIGINT) AS len
-           FROM isl GROUP BY swlng, swlat, r, lv, grp),
-         per AS (SELECT swlng, swlat, CAST(count(*) AS BIGINT) AS n_runs,
-             CAST(sum(1000000 // (len*len)) AS BIGINT) AS sre_q,
-             CAST(sum(len*len) AS BIGINT) AS lre
-           FROM runs GROUP BY 1, 2),
-         lvl AS (SELECT swlng, swlat, lv, CAST(count(*) AS BIGINT) AS nl
-           FROM runs GROUP BY 1, 2, 3),
-         gl AS (SELECT swlng, swlat, CAST(sum(nl*nl) AS BIGINT) AS gln
-           FROM lvl GROUP BY 1, 2)
-         SELECT (CASE WHEN per.swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(per.swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN per.swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(per.swlng) AS VARCHAR),3,'0')) AS image_id,
-           n_runs, sre_q, lre, gln,
-           CAST(1000 * n_runs // 360000 AS BIGINT) AS rp_permille
-         FROM per JOIN gl ON gl.swlng = per.swlng AND gl.swlat = per.swlat
-         ORDER BY image_id"""
-    },
-    // three bucket widths in one grouped pass over the byte replay,
-    "img_perona_malik" -> {
-      val ctr = gridV("c.range", "r.range")
-      val terms = Seq((1, 0), (-1, 0), (0, 1), (0, -1)).map { case (dr, dcc) =>
-        val nv = gridV(s"c.range+($dcc)", s"r.range+($dr)")
-        s"((1000000 // (1000 + (($nv) - ($ctr)) * (($nv) - ($ctr)))) * (($nv) - ($ctr)))"
-      }.mkString(" + ")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat, $terms AS f
-           FROM k, range(1,599) r, range(1,599) c)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(count(*) AS BIGINT) AS n_interior,
-           CAST(sum(f) AS BIGINT) AS sum_flux,
-           CAST(sum(abs(f)) AS BIGINT) AS sum_abs_flux,
-           CAST(sum(CASE WHEN f > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_pos
-         FROM px GROUP BY 1 ORDER BY image_id"""
-    },
-    // forward + reverse bounded Bellman-Ford fields, slack-band census,
-    "img_diag_projections" -> {
-      val gv = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
-             CAST($gv AS BIGINT) AS v
-           FROM k, range(0,600) r, range(0,600) c),
-         ln AS (SELECT swlng, swlat, 'anti' AS direction, r + c AS line,
-             CAST(sum(v) AS BIGINT) AS s
-           FROM px GROUP BY 1, 2, 3, 4
-           UNION ALL
-           SELECT swlng, swlat, 'main', r - c,
-             CAST(sum(v) AS BIGINT)
-           FROM px GROUP BY 1, 2, 3, 4)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           direction, CAST(count(*) AS BIGINT) AS n_lines,
-           CAST(min(s) AS BIGINT) AS min_sum,
-           CAST(max(s) AS BIGINT) AS max_sum,
-           CAST(sum(s * s) AS BIGINT) AS sumsq
-         FROM ln GROUP BY 1, 2 ORDER BY image_id, direction"""
-    },
-    // running-max watermark on arrival order, 10-minute lateness,
-    "img_demosaic_error" -> {
-      val ctr = gridV("c.range", "r.range")
-      val g4 = Seq((-1, 0), (1, 0), (0, -1), (0, 1)).map { case (dr, dcc) =>
-        s"(${gridV(s"c.range+($dcc)", s"r.range+($dr)")})"
-      }.mkString(" + ")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat,
-             abs(($g4) - 4 * ($ctr)) AS e
-           FROM k, range(1,599) r, range(1,599) c
-           WHERE r.range % 2 = c.range % 2)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(count(*) AS BIGINT) AS n_interp,
-           CAST(sum(e) AS BIGINT) AS sad_q,
-           CAST(max(e) AS BIGINT) AS max_err_q
-         FROM px GROUP BY 1 ORDER BY image_id"""
-    },
-    // g=1/4 h=1/8 predictor-corrector replayed as a recursive CTE,
-    "img_laplacian_pyramid" -> {
-      val gv = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
-             CAST($gv AS BIGINT) AS v
-           FROM k, range(0,600) r, range(0,600) c),
-         g1 AS (SELECT swlng, swlat, r // 2 AS r1, c // 2 AS c1,
-             CAST(sum(v) AS BIGINT) AS g FROM px GROUP BY 1, 2, 3, 4),
-         g2 AS (SELECT swlng, swlat, r1 // 2 AS r2, c1 // 2 AS c2,
-             CAST(sum(g) AS BIGINT) AS g FROM g1 GROUP BY 1, 2, 3, 4),
-         e0 AS (SELECT px.swlng, px.swlat,
-             CAST(sum(abs(4 * px.v - g1.g)) AS BIGINT) AS e
-           FROM px JOIN g1 ON g1.swlng = px.swlng AND g1.swlat = px.swlat
-             AND g1.r1 = px.r // 2 AND g1.c1 = px.c // 2
-           GROUP BY 1, 2),
-         e1 AS (SELECT g1.swlng, g1.swlat,
-             CAST(sum(abs(4 * g1.g - g2.g)) AS BIGINT) AS e
-           FROM g1 JOIN g2 ON g2.swlng = g1.swlng AND g2.swlat = g1.swlat
-             AND g2.r2 = g1.r1 // 2 AND g2.c2 = g1.c1 // 2
-           GROUP BY 1, 2),
-         b2 AS (SELECT swlng, swlat, CAST(sum(g) AS BIGINT) AS e
-           FROM g2 GROUP BY 1, 2),
-         u AS (SELECT swlng, swlat, 0 AS level,
-             CAST(360000 AS BIGINT) AS n_px, e FROM e0
-           UNION ALL SELECT swlng, swlat, 1, CAST(90000 AS BIGINT), e FROM e1
-           UNION ALL SELECT swlng, swlat, 2, CAST(22500 AS BIGINT), e FROM b2)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(level AS INT) AS level, n_px, e AS energy
-         FROM u ORDER BY image_id, level"""
-    },
-    // shared x1000 sun table, clamped incidence dots at sampled pixels,
-    "img_peak_centroids" -> {
-      val ctr = gridV("c.range", "r.range")
-      val strict = (for { dr <- -1 to 1; dc <- -1 to 1; if dr != 0 || dc != 0 }
-        yield s"${gridV(s"c.range+($dc)", s"r.range+($dr)")} < ($ctr)")
-        .mkString(" AND ")
-      def mom(f: (Int, Int) => String) =
-        (for { da <- -1 to 1; db <- -1 to 1 }
-          yield f(da, db)).mkString(" + ")
-      val sw = mom((da, db) => s"(${gridV(s"c+($db)", s"r+($da)")})")
-      val swr = mom((da, db) => s"(${gridV(s"c+($db)", s"r+($da)")}) * (r+($da))")
-      val swc = mom((da, db) => s"(${gridV(s"c+($db)", s"r+($da)")}) * (c+($db))")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         cand AS (SELECT swlng, swlat, a, r.range AS r, c.range AS c,
-             CAST($ctr AS BIGINT) AS v
-           FROM k, range(1,599) r, range(1,599) c
-           WHERE $strict),
-         rk AS (SELECT *, CAST(row_number() OVER (PARTITION BY swlng, swlat
-             ORDER BY v DESC, r, c) AS INT) AS rank FROM cand)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           rank, CAST(r AS INT) AS r, CAST(c AS INT) AS c, v,
-           CAST($sw AS BIGINT) AS sw, CAST($swr AS BIGINT) AS swr,
-           CAST($swc AS BIGINT) AS swc
-         FROM rk WHERE rank <= 5 ORDER BY image_id, rank"""
-    },
-    // same char segmentation, weighted pair counts, literal replace merge,
-    "img_btc_audit" -> {
-      val gv = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat, r.range // 4 AS br, c.range // 4 AS bc,
-             CAST($gv AS BIGINT) AS v
-           FROM k, range(0,600) r, range(0,600) c),
-         bs AS (SELECT swlng, swlat, br, bc, CAST(sum(v) AS BIGINT) AS s16
-           FROM px GROUP BY 1, 2, 3, 4),
-         cls AS (SELECT px.swlng, px.swlat, px.br, px.bc, v, s16,
-             CASE WHEN 16 * v >= s16 THEN 1 ELSE 0 END AS hi
-           FROM px JOIN bs ON bs.swlng = px.swlng AND bs.swlat = px.swlat
-             AND bs.br = px.br AND bs.bc = px.bc),
-         lv AS (SELECT swlng, swlat, br, bc,
-             CASE WHEN sum(1 - hi) = 0 THEN 0
-               ELSE sum(CASE WHEN hi = 0 THEN v ELSE 0 END) // sum(1 - hi)
-               END AS la,
-             CASE WHEN sum(hi) = 0 THEN 0
-               ELSE sum(CASE WHEN hi = 1 THEN v ELSE 0 END) // sum(hi)
-               END AS lb
-           FROM cls GROUP BY 1, 2, 3, 4),
-         be AS (SELECT cls.swlng, cls.swlat, cls.br, cls.bc,
-             CAST(sum(abs(v - CASE WHEN hi = 1 THEN lb ELSE la END))
-               AS BIGINT) AS blk_err
-           FROM cls JOIN lv ON lv.swlng = cls.swlng AND lv.swlat = cls.swlat
-             AND lv.br = cls.br AND lv.bc = cls.bc
-           GROUP BY 1, 2, 3, 4)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(count(*) AS BIGINT) AS n_blocks,
-           CAST(sum(blk_err) AS BIGINT) AS err_sum,
-           CAST(max(blk_err) AS BIGINT) AS max_block_err
-         FROM be GROUP BY 1 ORDER BY image_id"""
-    },
-    // weekly rank vs previous-week rank, inner join on survivors,
-    "img_lsb_embed_cost" -> {
-      val gv = gridV("c.range", "r.range")
-      s"""WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
-         k AS (SELECT swlng, swlat,
-             ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM corners),
-         px AS (SELECT swlng, swlat,
-             CASE WHEN ($gv) % 2 <> (r.range * 7 + c.range * 13) % 2
-               THEN 1 ELSE 0 END AS flip
-           FROM k, range(0,600) r, range(0,600) c)
-         SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
-             CASE WHEN swlng < 0 THEN 'W' ELSE 'E' END || lpad(CAST(abs(swlng) AS VARCHAR),3,'0')) AS image_id,
-           CAST(count(*) AS BIGINT) AS n_px,
-           CAST(sum(flip) AS BIGINT) AS n_flips,
-           CAST(1000000 * sum(flip) // count(*) AS BIGINT) AS flip_ppm
-         FROM px GROUP BY 1 ORDER BY image_id"""
-    },
   )
 }

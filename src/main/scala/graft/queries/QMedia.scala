@@ -233,9 +233,6 @@ object QMedia {
         .select("media_id", "n_win", "fadein_wins", "fadeout_wins")
         .orderBy("media_id")
     }),
-    // Illumination-tilt regression numerators (ops.ImageOps.illumTilt):
-    // exact planar least-squares pieces on the orthogonal grid regressors
-    // — the vignette/calibration read under img_sobel's local gradients.,
     "media_codec_mix" -> ((s, dir) => {
       ops.MediaOps.synth(mediaMeta(s, dir))
         .groupBy("fmt")
@@ -263,10 +260,6 @@ object QMedia {
       ops.MediaOps.decimateAudit(ops.MediaOps.synth(mediaMeta(s, dir)))
         .orderBy("media_id")
     }),
-    // Depression filling (ops.ImageOps.fillDepressions): 32 Jacobi
-    // rounds of max(orig, min-neighbour) reconstruction on the offset-80
-    // 40-square window (measured fixpoint depth 25) — the pit-free
-    // surface geo_pit_census only inventories.,
     "media_minmax_pyramid" -> ((s, dir) => {
       ops.MediaOps.minmaxPyramid(ops.MediaOps.synth(mediaMeta(s, dir)))
         .orderBy("media_id", "level", "bucket")

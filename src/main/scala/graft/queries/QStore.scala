@@ -597,8 +597,6 @@ object QStore {
       streaming.StreamOps.stateRollup(s, s"$dir/events.parquet")
         .orderBy("user_id")
     }),
-    // Dead-row screen (ops.ImageOps.rowDefects): the 3 lowest
-    // adjacent-row |Δ| sums per image — the repeated-scanline defect QA.,
     "bloom_semijoin" -> ((s, dir) => {
       val m = 1 << 17
       val build = t(s, dir, "orders").where(col("o_totalprice") > 480000.0)

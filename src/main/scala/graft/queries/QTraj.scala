@@ -469,8 +469,6 @@ object QTraj {
         .select("o_cell", "d_cell", "n_traj", "emp_ppm", "exp_ppm", "dev_ppm")
         .orderBy("o_cell", "d_cell")
     }),
-    // 3x3 mode-filter audit (ops.ImageOps.modeFilter): pixels an
-    // impulse-noise mode repair would change, with the exact L1 delta.,
     "traj_flow_communities" -> ((s, dir) => {
       val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
       val pts = t(s, dir, "events")

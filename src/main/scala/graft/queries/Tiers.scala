@@ -3,7 +3,7 @@ package graft.queries
 /** Registry tiers (round-5, VERDICT.md "Next round" #2).
   *
   * A registry that runs every entry outgrows the Verify and Bench time
-  * windows, so the registry (455 entries) is split into machine-readable
+  * windows, so the registry (368 entries) is split into machine-readable
   * tiers:
   *
   *  - core (133 entries): the driver-run contract surface -- every
@@ -17,10 +17,12 @@ package graft.queries
   *  - diagnostic (6 entries): labeled exact-O(n^2) baselines and
   *    by-design destructive-resilience sweeps -- correct, oracle-checked, but
   *    definitionally not scale-shaped; never in a timed default path.
-  *  - extended (everything else, 316 entries): the long analytics tail,
+  *  - extended (everything else, 229 entries): the long analytics tail,
   *    every entry of which runs engine code (`graft.ops`, `graft.functions`,
   *    the geo/raster/table layers). Runnable via `SPARK_GRAFT_TIER=full` in
-  *    Verify or the query-name args; not part of the driver default.
+  *    Verify or the query-name args; not part of the driver default. The
+  *    image family (`img_*`) has no extended entries: `ops.ImageOps` holds
+  *    only the kernels the core tier runs.
   */
 object Tiers {
   /** Driver-run contract tier; `SparkEntry.queries` is keyed to this set. */

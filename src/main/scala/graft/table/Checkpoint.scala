@@ -209,6 +209,34 @@ object Checkpoint {
     out.result()
   }
 
+  /** Per bucket, the commit of the run `rank` ranks highest (runs it maps
+    * to None are skipped): the snapshot-resolution step of every versioned
+    * reader, folded on the driver over the commit log, so resolving a
+    * snapshot runs no Spark job. Duplicate lines (a vacuum killed between
+    * its log rewrite and cleanup) resolve to the same winner.
+    */
+  private def winners[K](spark: SparkSession, dir: String)(rank: Row => Option[K])(
+      implicit ord: Ordering[K]): Map[Int, Row] =
+    commitRows(spark, dir).filterNot(_.isNullAt(1))
+      .flatMap(r => rank(r).map(k => (r.getInt(1), k, r)))
+      .groupBy(_._1).map { case (b, rs) => b -> rs.maxBy(_._2)._3 }
+
+  /** Per bucket, the commit of the run of `lineage` (commit order) that
+    * wrote it last.
+    */
+  private def lineageWinners(spark: SparkSession, dir: String,
+                             lineage: Seq[String]): Map[Int, Row] = {
+    val idx = lineage.zipWithIndex.toMap
+    winners(spark, dir)(r => idx.get(r.getString(0)))
+  }
+
+  private def runIds(wins: Map[Int, Row]): Map[Int, String] =
+    wins.map { case (b, r) => b -> r.getString(0) }
+
+  /** The run ids with at least one commit line. */
+  private def committedRuns(spark: SparkSession, dir: String): Set[String] =
+    commitRows(spark, dir).map(_.getString(0)).toSet
+
   def committedBuckets(spark: SparkSession, dir: String): Set[Int] =
     // a legacy parquet manifest row without a bucket is not a commit
     commitRows(spark, dir).filterNot(_.isNullAt(1)).map(_.getInt(1)).toSet
@@ -445,26 +473,27 @@ object Checkpoint {
     */
   def readAt(spark: SparkSession, dir: String, runOrder: Seq[String],
              mergeSchema: Boolean = false): DataFrame = {
-    val idx = runOrder.zipWithIndex.toMap
-    val wins = manifests(spark, dir)
-      .select("run_id", "bucket").distinct()
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1)))
-      .filter { case (r, _) => idx.contains(r) }
-      .groupBy(_._2).toSeq // toSeq BEFORE map: mapping the Map would
-      // collapse buckets sharing a winner index into one key
-      .map { case (b, rs) => (rs.map(r => idx(r._1)).max, b) }
+    val wins = runIds(lineageWinners(spark, dir, runOrder))
     if (wins.isEmpty) return spark.emptyDataFrame
-    val byRun = wins.groupBy(_._1).toSeq.sortBy(_._1)
-    val pred = byRun.map { case (ri, bs) =>
-      col("__run") === lit(runOrder(ri)) &&
-        col("__bucket").isin(bs.map(_._2): _*)
-    }.reduce(_ || _)
+    readWinners(spark, dir, wins, mergeSchema)
+  }
+
+  /** The rows of each bucket's winning run (bucket → run), pushed down as
+    * `__run`/`__bucket` partition-literal disjunctions, so the scan touches
+    * exactly the winning partition directories.
+    */
+  private def readWinners(spark: SparkSession, dir: String, wins: Map[Int, String],
+                          mergeSchema: Boolean = false): DataFrame =
     spark.read.option("mergeSchema", mergeSchema.toString)
       .parquet(s"$dir/data")
-      .where(pred)
+      .where(partitionPred(wins))
       .drop("__run", "__bucket")
-  }
+
+  /** `(__run = r AND __bucket IN (...)) OR ...` over a bucket → run map. */
+  private def partitionPred(wins: Map[Int, String]): org.apache.spark.sql.Column =
+    wins.toSeq.groupBy(_._2).toSeq.sortBy(_._1).map { case (run, bs) =>
+      col("__run") === lit(run) && col("__bucket").isin(bs.map(_._1).sorted: _*)
+    }.reduce(_ || _)
 
   /** Rewrite refused: the compacted run's stats differ from the winning
     * manifests — either the store was corrupted or a concurrent writer
@@ -505,22 +534,21 @@ object Checkpoint {
                        runOrder: Seq[String],
                        runId: String): Seq[BucketManifest] = {
     require(!runId.contains("=") && !runId.contains("/"), s"bad runId: $runId")
-    import spark.implicits._
     val t0 = System.nanoTime()
-    val idx = runOrder.zipWithIndex.toMap
-    val mrows = manifests(spark, dir)
-      .select("run_id", "bucket", "row_count", "checksum").distinct()
-      .as[(String, Int, Long, Long)].collect()
-      .filter { case (r, _, _, _) => idx.contains(r) }
-    if (mrows.isEmpty) return Seq.empty
     // newest committed run per bucket: the content contract to preserve
-    val winner: Map[Int, (String, Long, Long)] =
-      mrows.groupBy(_._2).map { case (b, rs) =>
-        val w = rs.maxBy(r => idx(r._1))
-        b -> ((w._1, w._3, w._4))
-      }
+    val winner = winnerStats(spark, dir, runOrder)
+    if (winner.isEmpty) return Seq.empty
     rewriteChecked(spark, dir, runId, winner, "winning", t0)
   }
+
+  /** Per bucket, the newest committed run of `order` with the row count and
+    * checksum its manifest records: bucket → (run, row_count, checksum).
+    */
+  private def winnerStats(spark: SparkSession, dir: String,
+                          order: Seq[String]): Map[Int, (String, Long, Long)] =
+    lineageWinners(spark, dir, order).map { case (b, r) =>
+      b -> ((r.getString(0), r.getLong(2), r.getLong(3)))
+    }
 
   /** Rewrite the partitions `want` names (bucket → (run, row_count,
     * checksum)) as the new run `runId`, then commit them — but only if each
@@ -530,11 +558,9 @@ object Checkpoint {
   private def rewriteChecked(spark: SparkSession, dir: String, runId: String,
                              want: Map[Int, (String, Long, Long)], source: String,
                              t0: Long): Seq[BucketManifest] = {
-    val pred = want.toSeq.groupBy(_._2._1).map { case (r, bs) =>
-      col("__run") === lit(r) && col("__bucket").isin(bs.map(_._1): _*)
-    }.reduce(_ || _)
-    val winners = spark.read.parquet(s"$dir/data").where(pred)
-    val stats = appendRun(winners.drop("__run").withColumn("__run", lit(runId)),
+    val source = spark.read.parquet(s"$dir/data")
+      .where(partitionPred(want.map { case (b, (run, _, _)) => b -> run }))
+    val stats = appendRun(source.drop("__run").withColumn("__run", lit(runId)),
       want.keys.max + 1, s"$dir/data")
     want.foreach { case (b, (_, n, c)) =>
       val (wn, wc) = stats.getOrElse(b, (0L, 0L))
@@ -545,7 +571,7 @@ object Checkpoint {
     }
     val wallMs = ((System.nanoTime() - t0) / 1000000) / want.size
     commit(spark, dir, runId, want.keys.toSeq.sorted, stats, wallMs, 64,
-      Some(winners.drop("__run", "__bucket").schema))
+      Some(source.drop("__run", "__bucket").schema))
   }
 
   /** Incremental read between two snapshot lineages — the CDC view of the
@@ -564,26 +590,14 @@ object Checkpoint {
     */
   def readDelta(spark: SparkSession, dir: String, oldOrder: Seq[String],
                 newOrder: Seq[String]): DataFrame = {
-    def winners(order: Seq[String]): Map[Int, String] = {
-      val idx = order.zipWithIndex.toMap
-      manifests(spark, dir).select("run_id", "bucket").distinct().collect()
-        .map(r => (r.getString(0), r.getInt(1)))
-        .filter { case (run, _) => idx.contains(run) }
-        .groupBy(_._2).map { case (b, rs) =>
-          b -> rs.maxBy(r => idx(r._1))._1
-        }
-    }
-    val ow = winners(oldOrder)
-    val changed = winners(newOrder).filter { case (b, run) =>
+    val ow = runIds(lineageWinners(spark, dir, oldOrder))
+    val changed = runIds(lineageWinners(spark, dir, newOrder)).filter { case (b, run) =>
       !ow.get(b).contains(run)
     }
-    val base = spark.read.parquet(s"$dir/data")
     // empty delta keeps the data schema (a consumer unions deltas blindly)
-    if (changed.isEmpty) return base.where(lit(false)).drop("__run", "__bucket")
-    val pred = changed.toSeq.groupBy(_._2).map { case (run, bs) =>
-      col("__run") === lit(run) && col("__bucket").isin(bs.map(_._1): _*)
-    }.reduce(_ || _)
-    base.where(pred).drop("__run", "__bucket")
+    if (changed.isEmpty)
+      return spark.read.parquet(s"$dir/data").where(lit(false)).drop("__run", "__bucket")
+    readWinners(spark, dir, changed)
   }
 
   /** RESTORE — Delta's `RESTORE TABLE ... TO VERSION` / Iceberg's
@@ -613,21 +627,9 @@ object Checkpoint {
                        currentOrder: Seq[String], targetOrder: Seq[String],
                        runId: String): Seq[BucketManifest] = {
     require(!runId.contains("=") && !runId.contains("/"), s"bad runId: $runId")
-    import spark.implicits._
     val t0 = System.nanoTime()
-    val mrows = manifests(spark, dir)
-      .select("run_id", "bucket", "row_count", "checksum").distinct()
-      .as[(String, Int, Long, Long)].collect()
-    def winners(order: Seq[String]): Map[Int, (String, Long, Long)] = {
-      val idx = order.zipWithIndex.toMap
-      mrows.filter { case (r, _, _, _) => idx.contains(r) }
-        .groupBy(_._2).map { case (b, rs) =>
-          val w = rs.maxBy(r => idx(r._1))
-          b -> ((w._1, w._3, w._4))
-        }
-    }
-    val cur = winners(currentOrder)
-    val tgt = winners(targetOrder)
+    val cur = winnerStats(spark, dir, currentOrder)
+    val tgt = winnerStats(spark, dir, targetOrder)
     // buckets whose content must change: different winner, or vanished
     val rewrite = tgt.filter { case (b, (run, _, _)) =>
       !cur.get(b).exists(_._1 == run)
@@ -652,21 +654,12 @@ object Checkpoint {
     */
   def readAsOf(spark: SparkSession, dir: String, cutoffMs: Long,
                mergeSchema: Boolean = false): DataFrame = {
-    val wins = manifests(spark, dir)
-      .select("run_id", "bucket", "committed_at")
-      .where(col("committed_at") <= cutoffMs)
-      .collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-      .groupBy(_._2).toSeq
-      .map { case (b, rs) => (rs.maxBy(r => (r._3, r._1))._1, b) }
+    val wins = winners(spark, dir) { r =>
+      if (r.isNullAt(5) || r.getLong(5) > cutoffMs) None
+      else Some((r.getLong(5), r.getString(0)))
+    }
     if (wins.isEmpty) return spark.emptyDataFrame
-    val pred = wins.groupBy(_._1).toSeq.sortBy(_._1).map { case (run, bs) =>
-      col("__run") === lit(run) && col("__bucket").isin(bs.map(_._2): _*)
-    }.reduce(_ || _)
-    spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(s"$dir/data")
-      .where(pred)
-      .drop("__run", "__bucket")
+    readWinners(spark, dir, runIds(wins), mergeSchema)
   }
 
   /** EQUALITY-DELETE vector (merge-on-read DELETE, Iceberg v2 equality
@@ -712,9 +705,7 @@ object Checkpoint {
   def readMor(spark: SparkSession, dir: String, lineage: Seq[String],
               deleteRuns: Seq[String], keyCols: Seq[String]): DataFrame = {
     val base = readAt(spark, dir, lineage)
-    val committed = manifests(spark, dir).select("run_id").distinct()
-      .collect().map(_.getString(0)).toSet
-    val live = deleteRuns.filter(committed)
+    val live = deleteRuns.filter(committedRuns(spark, dir))
     if (live.isEmpty) return base
     val dels = live.map(r => spark.read.parquet(s"$dir/deletes/__run=$r"))
       .reduce(_ unionByName _)
@@ -742,8 +733,7 @@ object Checkpoint {
       if (!fs.exists(dataP)) Seq.empty[String]
       else fs.listStatus(dataP).toSeq.map(_.getPath.getName)
         .filter(_.startsWith("__run=")).map(_.stripPrefix("__run=")).sorted
-    val committed = manifests(spark, dir).select("run_id").distinct()
-      .collect().map(_.getString(0)).toSet
+    val committed = committedRuns(spark, dir)
     val rows = runs.map { r =>
       val n = spark.read.parquet(s"$dir/data/__run=$r").count()
       (r, n, committed.contains(r))
@@ -804,7 +794,7 @@ object Checkpoint {
     * resolved from the durable commit log, and the log compaction appends
     * the rewritten manifest BEFORE removing the old files — a kill between
     * the two leaves duplicate manifest rows, which every reader already
-    * `distinct()`s away ([[readAt]], [[committedBuckets]],
+    * resolves to the same winner ([[readAt]], [[committedBuckets]],
     * [[compactVersioned]]); a kill mid-data-delete leaves extra partitions
     * that the next vacuum removes. No window leaves a retained snapshot
     * unreadable.

@@ -572,6 +572,30 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
     assert(Checkpoint.readAsOf(spark, dir, 0L).isEmpty)
   }
 
+  test("versioned readers resolve snapshots on the driver: at most the footer-read job") {
+    import spark.implicits._
+    val dir = freshDir("vjobs")
+    val base = (0 until 400).map(i => (i.toLong, i * 10L)).toDF("k", "v")
+    Checkpoint.writeVersioned(base, col("k") % 4, 4, dir, "r1")
+    Checkpoint.writeVersioned(
+      base.filter(col("k") % 4 === 1).withColumn("v", col("v") + 1),
+      col("k") % 4, 4, dir, "r2")
+    // building each reader may read Parquet footers for the schema (one
+    // job); resolving the winners must not add any
+    val reads = Seq(
+      "readAt" -> (() => Checkpoint.readAt(spark, dir, Seq("r1", "r2"))),
+      "readDelta" -> (() => Checkpoint.readDelta(spark, dir, Seq("r1"), Seq("r1", "r2"))),
+      "readAsOf" -> (() => Checkpoint.readAsOf(spark, dir, Long.MaxValue)))
+    for ((name, read) <- reads) {
+      val (df, ev) = Listened(spark.sparkContext)(read())
+      assert(ev.jobs <= 1, s"$name launched ${ev.jobs} Spark jobs before an action")
+      // the r1+r2 snapshot; the delta from r1 is bucket 1 alone
+      val want = (0 until 400).filter(i => name != "readDelta" || i % 4 == 1)
+        .map(i => i.toLong -> (i * 10L + (if (i % 4 == 1) 1L else 0L))).toMap
+      assert(df.as[(Long, Long)].collect().toMap == want, name)
+    }
+  }
+
   test("schema evolution: a run that adds a column reads merged, old rows null") {
     import spark.implicits._
     val dir = freshDir("evolve")

@@ -113,13 +113,43 @@ class GlobalRankSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("withNtile adds no Spark job to building its row numbering") {
+    val in = df(100)
+    val keys = Seq(col("v").asc, col("id").asc)
+    val (_, rn) = Listened(spark.sparkContext)(
+      GlobalRank.withRowNumber(in, "rn", keys, numParts = 6))
+    val (_, nt) = Listened(spark.sparkContext)(
+      GlobalRank.withNtile(in, "q", 5, keys, numParts = 6))
+    assert(nt.jobs == rn.jobs,
+      s"withNtile launched ${nt.jobs} jobs to build, withRowNumber ${rn.jobs}")
+  }
+
+  test("withPrecedingMin equals the global strictly-preceding min, nulls ignored") {
+    import spark.implicits._
+    // 64 parts >> 60 rows leaves most range partitions empty; every 7th
+    // value is null
+    val in = (0 until 60).map(i => (i.toLong, ((i * 37) % 11).toLong,
+        if (i % 7 == 3) None else Some(((i * 13) % 17).toLong)))
+      .toDF("id", "v", "y")
+    val keys = Seq(col("v").asc, col("id").asc)
+    def byId(d: DataFrame) = d.select("id", "m").collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
+    val expect = byId(in.withColumn("m", min("y").over(Window.orderBy(keys: _*)
+      .rowsBetween(Window.unboundedPreceding, -1))))
+    for (parts <- Seq(1, 4, 64))
+      assert(byId(GlobalRank.withPrecedingMin(in, "y", "m", keys, numParts = parts)) === expect,
+        s"numParts=$parts")
+  }
+
   test("plans contain no unpartitioned-window exchange to a single partition") {
     val in = df(100)
     val keys = Seq(col("v").asc, col("id").asc)
     for (plan <- Seq(
         GlobalRank.withRowNumber(in, "rn", keys),
         GlobalRank.withLag(in, "v", "p", keys),
-        GlobalRank.withCumSum(in, "grp", "cs", keys))) {
+        GlobalRank.withCumSum(in, "grp", "cs", keys),
+        GlobalRank.withPrecedingMin(in, "grp", "m", keys),
+        GlobalRank.withNtile(in, "q", 5, keys))) {
       val phys = plan.queryExecution.executedPlan.toString
       // the only SinglePartition exchanges allowed are those feeding the
       // tiny per-range-partition aggregate (bounded by numParts rows):

@@ -130,87 +130,6 @@ class IngestJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       above.getAs[Long]("n_above") == 9)
   }
 
-  test("fastCorners: isolated peak is a dark corner, step edge is not, flat is nothing") {
-    import org.apache.spark.sql.Encoders
-    implicit val enc = Encoders.product[graft.core.TileRow]
-    def tile(id: String, f: (Int, Int) => Int) = {
-      val g = Array.tabulate[Short](81)(i => f(i / 9, i % 9).toShort)
-      graft.core.TileRow(id, graft.raster.Hgt.encode(g, 9), 9, 9, "hgt", "{}", 0L)
-    }
-    def census(t: graft.core.TileRow) =
-      graft.ops.ImageOps.fastCorners(spark.createDataset(Seq(t)), t = 10)
-        .collect().map(r => (r.getAs[Long]("n_tested"), r.getAs[Long]("n_bright"),
-          r.getAs[Long]("n_dark"), r.getAs[Long]("n_corners"))).head
-    // size 9, margin 3 -> 3x3 interior = 9 tested pixels everywhere
-    // flat field: no corners of either polarity
-    assert(census(tile("N36W119", (_, _) => 100)) == ((9L, 0L, 0L, 0L)))
-    // single bright peak at (4,4): its whole circle is darker by 100 ->
-    // exactly one dark-polarity corner; no other interior pixel's circle
-    // even touches the peak (all 16 offsets exceed the 3x3 interior)
-    assert(census(tile("N37W119", (r, c) => if (r == 4 && c == 4) 200 else 100))
-      == ((9L, 0L, 1L, 1L)))
-    // vertical step edge: at most 7 contiguous circle pixels cross the
-    // step from any interior pixel -> FAST-12 rejects edges by design
-    assert(census(tile("N36W120", (_, c) => if (c >= 4) 200 else 100))
-      == ((9L, 0L, 0L, 0L)))
-  }
-
-  test("haar: hand-computed 4x4 subband sums; flat field has zero detail energy") {
-    import org.apache.spark.sql.Encoders
-    implicit val enc = Encoders.product[graft.core.TileRow]
-    def tile(f: (Int, Int) => Int) = {
-      val g = Array.tabulate[Short](16)(i => f(i / 4, i % 4).toShort)
-      graft.core.TileRow("N36W119", graft.raster.Hgt.encode(g, 4), 4, 4, "hgt", "{}", 0L)
-    }
-    def row(t: graft.core.TileRow) =
-      graft.ops.ImageOps.haar(spark.createDataset(Seq(t))).collect()
-        .map(r => (r.getAs[Long]("n_blocks"), r.getAs[Long]("ll_sum"),
-          r.getAs[Long]("lh_energy"), r.getAs[Long]("hl_energy"),
-          r.getAs[Long]("hh_energy"))).head
-    // f(r,c) = 4r + c + 1: per block lh = -2, hl = -8, hh = 0 exactly;
-    // block NW corners a ∈ {1, 3, 9, 11}, ll_sum = Σ(4a + 10) = 136
-    assert(row(tile((r, c) => 4 * r + c + 1)) == ((4L, 136L, 16L, 256L, 0L)))
-    // flat field: all detail bands identically zero, LL carries the mass
-    assert(row(tile((_, _) => 7)) == ((4L, 4L * 28L, 0L, 0L, 0L)))
-  }
-
-  test("lbp: flat field is all-255, a pure column gradient is one directional code") {
-    import org.apache.spark.sql.Encoders
-    implicit val enc = Encoders.product[graft.core.TileRow]
-    def hist(f: (Int, Int) => Int) = {
-      val g = Array.tabulate[Short](81)(i => f(i / 9, i % 9).toShort)
-      val t = graft.core.TileRow("N36W119", graft.raster.Hgt.encode(g, 9),
-        9, 9, "hgt", "{}", 0L)
-      graft.ops.ImageOps.lbp(spark.createDataset(Seq(t))).collect()
-        .map(r => r.getAs[Int]("code") -> r.getAs[Long]("n")).toMap
-    }
-    // flat: every neighbor >= center -> code 255 for all 49 interior pixels
-    assert(hist((_, _) => 100) == Map(255 -> 49L))
-    // strict column gradient: exactly the dc >= 0 bits (i1..i5) fire
-    assert(hist((_, c) => c * 10) == Map(62 -> 49L))
-  }
-
-  test("orientHist: octant ladder on axis/diagonal gradients and the flat bucket") {
-    import org.apache.spark.sql.Encoders
-    implicit val enc = Encoders.product[graft.core.TileRow]
-    def hist(f: (Int, Int) => Int) = {
-      val g = Array.tabulate[Short](81)(i => f(i / 9, i % 9).toShort)
-      val t = graft.core.TileRow("N36W119", graft.raster.Hgt.encode(g, 9),
-        9, 9, "hgt", "{}", 0L)
-      graft.ops.ImageOps.orientHist(spark.createDataset(Seq(t))).collect()
-        .map(r => r.getAs[Int]("sector") ->
-          ((r.getAs[Long]("n"), r.getAs[Long]("energy")))).toMap
-    }
-    // pure +x gradient: gx=20, gy=0 -> sector 0; energy 49 * 400
-    assert(hist((_, c) => c * 10) == Map(0 -> ((49L, 19600L))))
-    // pure +y gradient: gx=0, gy=20 -> sector 2 (pi/2 opens octant 2)
-    assert(hist((r, _) => r * 10) == Map(2 -> ((49L, 19600L))))
-    // exact diagonal gy=gx>0: angle pi/4 belongs to the HIGHER octant (1)
-    assert(hist((r, c) => (r + c) * 10) == Map(1 -> ((49L, 39200L))))
-    // flat: everything lands in the flat bucket with zero energy
-    assert(hist((_, _) => 5) == Map(8 -> ((49L, 0L))))
-  }
-
   test("ingestHgt rejects non-square payloads (P3 size predicate)") {
     graft.table.Checkpoint.clear(s"$base/bad")
     val d = new java.io.File(s"$base/bad/hgt"); d.mkdirs()

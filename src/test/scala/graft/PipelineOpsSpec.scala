@@ -515,50 +515,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("harris census matches the brute-force structure-tensor scan") {
-    val size = 65
-    val corners = Seq((10, 5), (11, 6))
-    val grids = corners.map { case (lng, lat) =>
-      (lng, lat, graft.synth.TileGen.grid(lng, lat, size,
-        graft.synth.TileGen.sampleAt))
-    }
-    val tiles = spark.createDataset(grids.map { case (lng, lat, g) =>
-      graft.core.TileRow(graft.geo.TileKey.ofDegrees(lng, lat),
-        graft.raster.Hgt.encode(g, size), size, size, "hgt", "{}", 0L)
-    })(org.apache.spark.sql.Encoders.product[graft.core.TileRow])
-    def want(g: Array[Short]): (Long, Long, Long, Int, Int) = {
-      def v(r: Int, c: Int) = g(r * size + c).toLong
-      def gx(r: Int, c: Int) = (v(r - 1, c + 1) + 2 * v(r, c + 1) + v(r + 1, c + 1)) -
-        (v(r - 1, c - 1) + 2 * v(r, c - 1) + v(r + 1, c - 1))
-      def gy(r: Int, c: Int) = (v(r + 1, c - 1) + 2 * v(r + 1, c) + v(r + 1, c + 1)) -
-        (v(r - 1, c - 1) + 2 * v(r - 1, c) + v(r - 1, c + 1))
-      val nb = (size - 3) / 2
-      var corners = 0L; var rMax = Long.MinValue; var bbr = 0; var bbc = 0
-      for (br <- 0 until nb; bc <- 0 until nb) {
-        var sxx = 0L; var syy = 0L; var sxy = 0L
-        for (dr <- 0 to 1; dc <- 0 to 1) {
-          val x = gx(1 + 2 * br + dr, 1 + 2 * bc + dc)
-          val y = gy(1 + 2 * br + dr, 1 + 2 * bc + dc)
-          sxx += x * x; syy += y * y; sxy += x * y
-        }
-        val r16 = 16L * (sxx * syy - sxy * sxy) - (sxx + syy) * (sxx + syy)
-        if (r16 > 0) corners += 1
-        if (r16 > rMax) { rMax = r16; bbr = br; bbc = bc }
-      }
-      (nb.toLong * nb, corners, rMax, bbr, bbc)
-    }
-    import spark.implicits._
-    val got = graft.ops.ImageOps.harris(tiles)
-      .as[(String, Long, Long, Long, Int, Int)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6))).toMap
-    grids.foreach { case (lng, lat, g) =>
-      assert(got(graft.geo.TileKey.ofDegrees(lng, lat)) == want(g), s"tile ($lng,$lat)")
-    }
-    // the synthetic 8x8 quantization lattice must actually fire the detector
-    assert(grids.forall { case (lng, lat, _) =>
-      got(graft.geo.TileKey.ofDegrees(lng, lat))._2 > 0 })
-  }
-
   test("phashNearDup finds exactly the brute-force Hamming<=3 pairs via band join") {
     val size = 201
     val corners = Seq((10, 5), (11, 5), (12, 6))
@@ -1796,83 +1752,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("momentEllipse matches the brute-force BigInt central moments") {
-    val size = 65
-    val corners = Seq((10, 5), (11, 6))
-    val grids = corners.map { case (lng, lat) =>
-      (lng, lat, graft.synth.TileGen.grid(lng, lat, size,
-        graft.synth.TileGen.sampleAt))
-    }
-    val tiles = spark.createDataset(grids.map { case (lng, lat, g) =>
-      graft.core.TileRow(graft.geo.TileKey.ofDegrees(lng, lat),
-        graft.raster.Hgt.encode(g, size), size, size, "hgt", "{}", 0L)
-    })(org.apache.spark.sql.Encoders.product[graft.core.TileRow])
-    def want(g: Array[Short]): (Long, Long, Long, Long, Int, Long) = {
-      var s = BigInt(0); var sr = BigInt(0); var sc = BigInt(0)
-      var srr = BigInt(0); var scc = BigInt(0); var src = BigInt(0)
-      for (r <- 0 until size; c <- 0 until size) {
-        val v = BigInt(g(r * size + c).toLong)
-        s += v; sr += v * r; sc += v * c
-        srr += v * r * r; scc += v * c * c; src += v * r * c
-      }
-      val mu20 = (s * srr - sr * sr) / s
-      val mu02 = (s * scc - sc * sc) / s
-      val mu11 = (s * src - sr * sc) / s
-      val diff = mu20 - mu02
-      val orient =
-        (if (mu11.signum >= 0) 0 else 2) + (if (diff.signum >= 0) 0 else 1)
-      val ecc = (diff * diff + 4 * mu11 * mu11) / (BigInt(1) << 40)
-      (s.toLong, mu20.toLong, mu02.toLong, mu11.toLong, orient, ecc.toLong)
-    }
-    import spark.implicits._
-    val got = graft.ops.ImageOps.momentEllipse(tiles)
-      .as[(String, Long, Long, Long, Long, Int, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4, r._5, r._6, r._7))).toMap
-    grids.foreach { case (lng, lat, g) =>
-      assert(got(graft.geo.TileKey.ofDegrees(lng, lat)) == want(g),
-        s"tile ($lng,$lat)")
-    }
-  }
-
-  test("seamEnergy matches the brute-force pooled DP") {
-    val size = 65
-    val block = 8 // nb = 8 over rows/cols 0..63
-    val corners = Seq((10, 5), (11, 6))
-    val grids = corners.map { case (lng, lat) =>
-      (lng, lat, graft.synth.TileGen.grid(lng, lat, size,
-        graft.synth.TileGen.sampleAt))
-    }
-    val tiles = spark.createDataset(grids.map { case (lng, lat, g) =>
-      graft.core.TileRow(graft.geo.TileKey.ofDegrees(lng, lat),
-        graft.raster.Hgt.encode(g, size), size, size, "hgt", "{}", 0L)
-    })(org.apache.spark.sql.Encoders.product[graft.core.TileRow])
-    def want(g: Array[Short]): (Long, Long) = {
-      val nb = (size - 1) / block
-      val e = Array.ofDim[Long](nb, nb)
-      for (r <- 0 until nb * block; c <- 0 until nb * block)
-        e(r / block)(c / block) +=
-          math.abs(g(r * size + c + 1) - g(r * size + c)).toLong
-      var prev = e(0)
-      for (br <- 1 until nb) {
-        prev = Array.tabulate(nb) { bc =>
-          val cands = (math.max(0, bc - 1) to math.min(nb - 1, bc + 1)).map(prev)
-          e(br)(bc) + cands.min
-        }
-      }
-      val best = prev.min
-      (best, prev.indexOf(best).toLong)
-    }
-    import spark.implicits._
-    val got = graft.ops.ImageOps.seamEnergy(tiles, block)
-      .as[(String, Int, Int, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
-    grids.foreach { case (lng, lat, g) =>
-      val (cost, col) = want(g)
-      assert(got(graft.geo.TileKey.ofDegrees(lng, lat)) == ((8, 8, cost, col)),
-        s"tile ($lng,$lat)")
-    }
-  }
-
   test("clippingAudit: hand-crafted runs, threshold inclusivity, clean media") {
     import spark.implicits._
     def media(id: Long, vs: Seq[Int]) = graft.ops.MediaOps.MediaRow(
@@ -2050,30 +1929,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       6L -> ("f2", 61.0)))  // re-insert after delete
   }
 
-  test("blurStats: moments match the independent closed-form Laplacian") {
-    import spark.implicits._
-    val tiles = spark.createDataset(graft.synth.TileGen.tiles(
-      Seq((-119, 36), (-118, 37)), 101, "hgt"))
-    val got = graft.ops.ImageOps.blurStats(tiles)
-      .as[(String, Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> (r._2, r._3, r._4, r._5)).toMap
-    for ((swLng, swLat) <- Seq((-119, 36), (-118, 37))) {
-      // independent reference straight from the generator formula — the
-      // linear terms cancel, only the blocky curvature contributes
-      def m(r: Int, c: Int) = ((c / 8) * (r / 8)) % 32
-      var sum = 0L; var sumsq = 0L
-      for (r <- 1 until 100; c <- 1 until 100) {
-        val lap = 4L * m(r, c) - m(r - 1, c) - m(r + 1, c) - m(r, c - 1) - m(r, c + 1)
-        sum += lap; sumsq += lap * lap
-      }
-      val n = 99L * 99L
-      val key = graft.geo.TileKey.ofDegrees(swLng, swLat)
-      assert(got(key) == ((n, sum, sumsq, n * sumsq - sum * sum)), key)
-      // a sharp synthetic field has nonzero focus numerator
-      assert(got(key)._4 > 0L)
-    }
-  }
-
   test("gapFill: spine spans per key, forward fill, gap flags") {
     import spark.implicits._
     // key a: observations at buckets 0, 3 (gap at 1, 2); key b: single obs
@@ -2189,26 +2044,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.size == 6)
   }
 
-  test("patchify: per-patch moments match brute force; ragged edge dropped") {
-    import spark.implicits._
-    val size = 101 // patch 40 -> 2x2 full patches, 21-px ragged edge dropped
-    val tiles = spark.createDataset(graft.synth.TileGen.tiles(
-      Seq((-119, 36)), size, "hgt"))
-    val got = graft.ops.ImageOps.patchify(tiles, patch = 40)
-      .as[(String, Int, Int, Long, Long, Long, Int, Int)].collect()
-      .map(r => (r._2, r._3) -> (r._4, r._5, r._6, r._7, r._8)).toMap
-    assert(got.keySet == Set((0, 0), (0, 1), (1, 0), (1, 1)))
-    for (((py, px), (n, sum, sumsq, mn, mx)) <- got) {
-      var bSum = 0L; var bSq = 0L; var bMn = Int.MaxValue; var bMx = Int.MinValue
-      for (r <- py * 40 until py * 40 + 40; c <- px * 40 until px * 40 + 40) {
-        val v: Int = graft.synth.TileGen.sampleAt(-119, 36, r, c)
-        bSum += v; bSq += v.toLong * v
-        bMn = math.min(bMn, v); bMx = math.max(bMx, v)
-      }
-      assert((n, sum, sumsq, mn, mx) == ((1600L, bSum, bSq, bMn, bMx)), (py, px))
-    }
-  }
-
   test("dataQuality check: each rule class counts violations exactly") {
     import spark.implicits._
     import graft.ops.DataQuality._
@@ -2278,29 +2113,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(1L) == ((5L, 2L, 2L, 40L)))
     // a key that never accumulates: no alarms, statistic pinned at 0
     assert(got(2L) == ((1L, 0L, 0L, 0L)))
-  }
-
-  test("sobel: gradient moments match brute force on the synthetic grid") {
-    import spark.implicits._
-    val size = 12
-    val tiles = spark.createDataset(graft.synth.TileGen.tiles(
-      Seq((-119, 36)), size, "hgt"))
-    val got = graft.ops.ImageOps.sobelStats(tiles)
-      .as[(String, Long, Long, Long, Long, Long)].collect().head
-    def v(r: Int, c: Int): Long =
-      graft.synth.TileGen.sampleAt(-119, 36, r, c).toLong
-    var gxs = 0L; var gys = 0L; var es = 0L; var emax = 0L
-    for (r <- 1 until size - 1; c <- 1 until size - 1) {
-      val gx = (v(r - 1, c + 1) + 2 * v(r, c + 1) + v(r + 1, c + 1)) -
-        (v(r - 1, c - 1) + 2 * v(r, c - 1) + v(r + 1, c - 1))
-      val gy = (v(r + 1, c - 1) + 2 * v(r + 1, c) + v(r + 1, c + 1)) -
-        (v(r - 1, c - 1) + 2 * v(r - 1, c) + v(r - 1, c + 1))
-      val e = gx * gx + gy * gy
-      gxs += gx; gys += gy; es += e; emax = math.max(emax, e)
-    }
-    assert(got == (("N36W119", 100L, gxs, gys, es, emax)))
-    // the grid has nonzero gradient in BOTH axes (Gy pins orientation)
-    assert(got._3 != 0L && got._4 != 0L)
   }
 
   test("quadkey: Bing golden vectors and prefix property") {
@@ -2395,37 +2207,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(nd.forall(_._3 == 1L) && nd.length == 6)
   }
 
-  test("nccBlocks: joint moments match brute force; identical epochs give NCC=1 stats") {
-    import spark.implicits._
-    val size = 90 // block 40 -> 2x2 blocks, 10-px ragged edge dropped
-    val a = spark.createDataset(Seq(
-      graft.synth.TileGen.tileRow(-119, 36, size, "hgt")))
-    val b = spark.createDataset(Seq(
-      graft.synth.TileGen.tileRow(-119, 36, size, "hgt", graft.synth.TileGen.planeAt)))
-    val got = graft.ops.ImageOps.nccBlocks(a, b, block = 40)
-      .as[(String, Int, Int, Long, Long, Long, Long, Long, Long)].collect()
-      .map(r => (r._2, r._3) -> ((r._4, r._5, r._6, r._7, r._8, r._9))).toMap
-    assert(got.keySet == Set((0, 0), (0, 1), (1, 0), (1, 1)))
-    for (((py, px), (n, sa, sb, saa, sbb, sab)) <- got) {
-      var esa = 0L; var esb = 0L; var esaa = 0L; var esbb = 0L; var esab = 0L
-      for (r <- py * 40 until py * 40 + 40; c <- px * 40 until px * 40 + 40) {
-        val va: Long = graft.synth.TileGen.sampleAt(-119, 36, r, c)
-        val vb: Long = graft.synth.TileGen.planeAt(-119, 36, r, c)
-        esa += va; esb += vb; esaa += va * va; esbb += vb * vb; esab += va * vb
-      }
-      assert((n, sa, sb, saa, sbb, sab) ==
-        ((1600L, esa, esb, esaa, esbb, esab)), (py, px))
-    }
-    // an epoch joined with itself: NCC numerator = variance numerator
-    val self = graft.ops.ImageOps.nccBlocks(a, a, block = 40)
-      .as[(String, Int, Int, Long, Long, Long, Long, Long, Long)].collect()
-    for (r <- self) {
-      val (n, sa, sb, saa, sbb, sab) = (r._4, r._5, r._6, r._7, r._8, r._9)
-      assert(sa == sb && saa == sbb && sab == saa)
-      assert(n * sab - sa * sb == n * saa - sa * sa)
-    }
-  }
-
   test("degreeMix: moments on a star vs a cycle separate assortativity signs") {
     import spark.implicits._
     // star K1,4: every edge joins deg-4 hub to deg-1 leaf -> num < 0
@@ -2517,27 +2298,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Map("ab" -> ((3L, 1)), "aa" -> ((2L, 2))))
   }
 
-  test("integralBoxSums: SAT box sums equal brute force on a random tile") {
-    val size = 200
-    val rnd = new scala.util.Random(7)
-    val g = Array.fill(size * size)(rnd.nextInt(4000).toShort)
-    val tile = graft.core.TileRow("N36W119", graft.raster.Hgt.encode(g, size),
-      size, size, "hgt", "{}", 0L)
-    val ds = spark.createDataset(Seq(tile))(
-      org.apache.spark.sql.Encoders.product[graft.core.TileRow])
-    val got = graft.ops.ImageOps.integralBoxSums(ds, 16).collect()
-      .map(r => r.getInt(1) -> ((r.getInt(2), r.getInt(3), r.getInt(4),
-        r.getLong(5)))).toMap
-    assert(got.size == 16)
-    for (i <- 0 until 16) {
-      val (r0, c0, side) = graft.ops.ImageOps.boxSpec(i, size)
-      var s = 0L
-      for (r <- r0 until r0 + side; c <- c0 until c0 + side)
-        s += g(r * size + c)
-      assert(got(i) == ((r0, c0, side, s)), s"box $i")
-    }
-  }
-
   test("activeSegments: hangover bridges 1-gaps, splits larger, per-media") {
     import spark.implicits._
     // media 1: actives 0,1,2,4 (the 1-hole at 3 is bridged by gap=1),
@@ -2611,26 +2371,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("medianDenoiseStats: constant tile is a fixpoint; one impulse localizes") {
-    import spark.implicits._
-    import graft.synth.TileGen
-    val size = 64 // ext = 64, interior 62x62
-    val flat = TileGen.tileRow(-119, 36, size, "hgt", (_, _, _, _) => 500.toShort)
-    val spike = TileGen.tileRow(-118, 36, size, "hgt",
-      (_, _, r, c) => if (r == 10 && c == 10) 900.toShort else 500.toShort)
-    val ds = spark.createDataset(Seq(flat, spike))(
-      org.apache.spark.sql.Encoders.product[graft.core.TileRow])
-    val got = graft.ops.ImageOps.medianDenoiseStats(ds)
-      .as[(String, Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
-    val n = 62L * 62L
-    assert(got("N36W119") == ((n, 0L, 0L, 0L)))
-    // the spiked pixel's 3x3 median is the background (8 of 9 agree), so
-    // exactly ONE pixel changes, by the full impulse height; its
-    // neighbours' medians are untouched (1 outlier of 9)
-    assert(got("N36W118") == ((n, 1L, 400L, 400L)))
-  }
-
   test("Trajectory.convoy matches brute-force maximal-run extraction") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
@@ -2665,24 +2405,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       if run.length >= 3
     } yield (a, b, run.head, run.length.toLong)).toSet
     assert(got == want)
-  }
-
-  test("distanceTransformStats: single impulse yields the exact Manhattan cone") {
-    import spark.implicits._
-    import graft.synth.TileGen
-    val size = 601
-    val spike = TileGen.tileRow(-119, 36, size, "hgt",
-      (_, _, r, c) => if (r == 200 && c == 300) 1000.toShort else 500.toShort)
-    val ds = spark.createDataset(Seq(spike))(
-      org.apache.spark.sql.Encoders.product[graft.core.TileRow])
-    val got = graft.ops.ImageOps.distanceTransformStats(ds, thr = 900L)
-      .as[(String, Long, Long, Long, Long)].collect().head
-    var sum = 0L; var mx = 0L
-    for (i <- 0 until 60; j <- 0 until 60) {
-      val d = math.abs(i - 20L) + math.abs(j - 30L)
-      sum += d; mx = math.max(mx, d)
-    }
-    assert(got == (("N36W119", 3600L, 1L, sum, mx)))
   }
 
   test("Trajectory.frechet matches the recursive definition; orders where Hausdorff cannot") {
@@ -2750,5 +2472,36 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         sx <= x && sy <= y && (sx < x || sy < y) }
     }.toSet
     assert(sky == ref)
+  }
+
+  test("Skyline.skyline2d equals the single-window front on anti-correlated and random input, with no bounded-key window") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod}
+    val rnd = new scala.util.Random(29)
+    val antiCorrelated = (0 until 500).map(i => (i.toLong, (499 - i).toLong))
+    val random = (0 until 2000).map(_ => (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
+      .distinct
+    for ((name, pts) <- Seq("anti-correlated" -> antiCorrelated, "random" -> random)) {
+      val in = pts.toDF("x", "y").repartition(7)
+      // the front as the single global window states it: y below the min
+      // y of every row before it in (x, y) order
+      val oracle = in.withColumn("m", min("y").over(
+          org.apache.spark.sql.expressions.Window.orderBy("x", "y")
+            .rowsBetween(Long.MinValue, -1)))
+        .filter(col("m").isNull || col("y") < col("m"))
+        .select("x", "y").as[(Long, Long)].collect().toSet
+      val sky = graft.ops.Skyline.skyline2d(in, "x", "y")
+      assert(sky.as[(Long, Long)].collect().toSet == oracle, name)
+      if (name == "anti-correlated") assert(oracle.size == pts.size)
+      // no window keyed by the constant-zero marker, which sends every row
+      // to one task; the analyzer moves a window's partition expression
+      // into the projection below it, so look for the marker anywhere
+      val plan = sky.queryExecution.optimizedPlan
+      val marker = plan.flatMap(_.expressions).exists(_.exists {
+        case p: Pmod => p.right == Literal(1)
+        case _ => false
+      })
+      assert(!marker, s"$name: ${plan}")
+    }
   }
 }

@@ -815,18 +815,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(qsum <= 4 * m * m, s"modularity out of range: $qsum vs ${4 * m * m}")
   }
 
-  test("glcm + morph: decode-once map plans, zero shuffle") {
-    val tiles = spark.createDataset(TileGen.tiles(
-      Seq((-120, 36), (-119, 36)), 121, "png"))(Encoders.product[TileRow])
-    for (out <- Seq(graft.ops.ImageOps.glcm(tiles, binWidth = 64),
-                    graft.ops.ImageOps.morph(tiles, thr = 2000))) {
-      assert(out.count() == 2)
-      val plan = out.queryExecution.executedPlan
-      assert(plan.collect { case s: ShuffleExchangeExec => s }.isEmpty,
-        s"image kernel must not shuffle:\n$plan")
-    }
-  }
-
   test("clusteringCoeff: key-bounded joins, no cartesian; closure invariants") {
     import spark.implicits._
     val edges = (0 until 3000).map(i => ((i * 7 % 300).toLong, (i * 13 % 300).toLong))
@@ -875,33 +863,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"otsu must not shuffle:\n$plan")
   }
 
-  test("eulerCensus: known topology (solid square χ=1, ring-with-hole χ=0), zero shuffle") {
-    // solid 9x9 block => 1 component, 0 holes, χ4 = χ8 = 1;
-    // square ring with a 3x3 hole => 1 component, 1 hole, χ4 = χ8 = 0
-    def tile(id: String, fg: (Int, Int) => Boolean) = {
-      val g = TileGen.grid(-120, 36, 16,
-        (_, _, r, c) => if (fg(r, c)) 3000.toShort else 0.toShort)
-      graft.core.TileRow(id, graft.raster.Hgt.encode(g, 16), 16, 16, "hgt",
-        graft.core.TileCodec.captionJson(TileGen.caption(-120, 36, 16)),
-        graft.raster.Fidelity.phash(g, 16))
-    }
-    val solid = tile("N36W120",
-      (r, c) => r >= 2 && r <= 10 && c >= 2 && c <= 10)
-    val ring = tile("N36W119", (r, c) =>
-      r >= 2 && r <= 10 && c >= 2 && c <= 10 &&
-        !(r >= 5 && r <= 7 && c >= 5 && c <= 7))
-    val out = graft.ops.ImageOps.eulerCensus(
-      spark.createDataset(Seq(solid, ring))(Encoders.product[TileRow]),
-      thr = 2000)
-    val rows = out.collect().map(r =>
-      r.getString(0) -> ((r.getAs[Long]("euler4"), r.getAs[Long]("euler8")))).toMap
-    assert(rows("N36W120") == ((1L, 1L)), s"solid square: ${rows("N36W120")}")
-    assert(rows("N36W119") == ((0L, 0L)), s"ring with hole: ${rows("N36W119")}")
-    val plan = out.queryExecution.executedPlan
-    assert(plan.collect { case s: ShuffleExchangeExec => s }.isEmpty,
-      s"eulerCensus must not shuffle:\n$plan")
-  }
-
   test("trussSupport: K4 edges support 2, pendant 0; sum = 3·triangles; no cartesian") {
     import spark.implicits._
     // K4 on {0,1,2,3} (4 triangles, every edge in exactly 2) + pendant 3-9
@@ -944,27 +905,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scans.size <= 2, s"benford should be one agg + one 9-row window")
   }
 
-  test("rle: known striped fixture (h/v asymmetry), zero shuffle") {
-    // rows 2-4 and 8 fully foreground: horizontally 4 runs of 16;
-    // vertically each of the 16 columns has runs of length 3 and 1
-    val g = TileGen.grid(-120, 36, 16, (_, _, r, _) =>
-      if ((r >= 2 && r <= 4) || r == 8) 3000.toShort else 0.toShort)
-    val tile = graft.core.TileRow("N36W120", graft.raster.Hgt.encode(g, 16),
-      16, 16, "hgt",
-      graft.core.TileCodec.captionJson(TileGen.caption(-120, 36, 16)),
-      graft.raster.Fidelity.phash(g, 16))
-    val out = graft.ops.ImageOps.rle(
-      spark.createDataset(Seq(tile))(Encoders.product[TileRow]), thr = 2000)
-    val r = out.collect().head
-    assert(r.getAs[Long]("n_runs_h") == 4L && r.getAs[Long]("max_run_h") == 16L
-      && r.getAs[Long]("ss_run_h") == 4L * 256L)
-    assert(r.getAs[Long]("n_runs_v") == 32L && r.getAs[Long]("max_run_v") == 3L
-      && r.getAs[Long]("ss_run_v") == 16L * (9L + 1L))
-    val plan = out.queryExecution.executedPlan
-    assert(plan.collect { case s: ShuffleExchangeExec => s }.isEmpty,
-      s"rle must not shuffle:\n$plan")
-  }
-
   test("biproject: hub pruned before the pair join, weights exact, no cartesian") {
     import spark.implicits._
     // user 1 is a hub (6 items > maxDegree 5): contributes NO pairs;
@@ -997,28 +937,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (206835·10 − 1015000·25 − 84600000·12) / (1000·10) = −103850.665 →
     // trunc −103850 (both Spark DIV and DuckDB // truncate toward zero)
     assert(r.getAs[Long]("flesch_milli") == -103850L)
-  }
-
-  test("projections: striped fixture moments, smallest-index tiebreak, zero shuffle") {
-    // rows 2-4 and 8 at 3000, else 0: row profile has four equal peaks of
-    // 16·3000 (argmax ties to row 2); every column sums to 4·3000
-    val g = TileGen.grid(-120, 36, 16, (_, _, r, _) =>
-      if ((r >= 2 && r <= 4) || r == 8) 3000.toShort else 0.toShort)
-    val tile = graft.core.TileRow("N36W120", graft.raster.Hgt.encode(g, 16),
-      16, 16, "hgt",
-      graft.core.TileCodec.captionJson(TileGen.caption(-120, 36, 16)),
-      graft.raster.Fidelity.phash(g, 16))
-    val out = graft.ops.ImageOps.projections(
-      spark.createDataset(Seq(tile))(Encoders.product[TileRow]))
-    val r = out.collect().head
-    assert(r.getAs[Long]("total") == 4L * 16L * 3000L)
-    assert(r.getAs[Int]("row_argmax") == 2 && r.getAs[Long]("row_max") == 48000L)
-    assert(r.getAs[Long]("row_ss") == 4L * 48000L * 48000L)
-    assert(r.getAs[Int]("col_argmax") == 0 && r.getAs[Long]("col_max") == 12000L)
-    assert(r.getAs[Long]("col_ss") == 16L * 12000L * 12000L)
-    val plan = out.queryExecution.executedPlan
-    assert(plan.collect { case s: ShuffleExchangeExec => s }.isEmpty,
-      s"projections must not shuffle:\n$plan")
   }
 
   test("intervalUnion: merge, touching-merge, containment; one keyed shuffle chain") {
@@ -1056,28 +974,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"reciprocity planned a cartesian:\n$plan")
     assert(plan.contains("LeftSemi"),
       s"mutual-edge detection must be a keyed semi-join:\n$plan")
-  }
-
-  test("crosstab: two-epoch confusion counts exact, keyed pair join") {
-    // epoch A: rows 0-7 = 0, rows 8-15 = 1000; epoch B: cols 0-7 = 0,
-    // cols 8-15 = 1000 → four 8×8 quadrants, one per (zone_a, zone_b)
-    def tile(f: (Int, Int) => Short) = {
-      val g = TileGen.grid(-120, 36, 16, (_, _, r, c) => f(r, c))
-      graft.core.TileRow("N36W120", graft.raster.Hgt.encode(g, 16), 16, 16,
-        "hgt", graft.core.TileCodec.captionJson(TileGen.caption(-120, 36, 16)),
-        graft.raster.Fidelity.phash(g, 16))
-    }
-    val a = spark.createDataset(Seq(tile((r, _) =>
-      if (r >= 8) 1000.toShort else 0.toShort)))(Encoders.product[TileRow])
-    val b = spark.createDataset(Seq(tile((_, c) =>
-      if (c >= 8) 1000.toShort else 0.toShort)))(Encoders.product[TileRow])
-    val out = graft.ops.ImageOps.crosstab(a, b, binWidth = 512)
-    val got = out.collect().map(r =>
-      (r.getAs[Int]("zone_a"), r.getAs[Int]("zone_b")) -> r.getAs[Long]("n")).toMap
-    assert(got == Map((0, 0) -> 64L, (0, 1) -> 64L, (1, 0) -> 64L, (1, 1) -> 64L))
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"crosstab pair join must be keyed:\n$plan")
   }
 
   test("simpson: exact ppm on a hand-counted doc, join-free two-agg plan") {

@@ -54,4 +54,12 @@ class TiersSpec extends AnyFunSuite {
       .filter(graft.queries.Tiers.coreSet)
     assert(leaked.isEmpty, s"diagnostics leaked into core: $leaked")
   }
+
+  test("every img_* registry entry is in the core tier") {
+    // the image family keeps only the kernels the core tier runs; an
+    // extended img_* entry would bring back the kernels deleted with it
+    val extended = SparkEntry.allQueries.keySet.filter(_.startsWith("img_"))
+      .filterNot(graft.queries.Tiers.coreSet)
+    assert(extended.isEmpty, s"img_* entries outside core: ${extended.toSeq.sorted}")
+  }
 }
