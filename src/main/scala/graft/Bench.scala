@@ -3,11 +3,8 @@ package graft
 import graft.bench.Headline
 import org.apache.spark.sql.SparkSession
 
-/** Per-round benchmark: times every CORE-tier SparkEntry query
-  * ([[graft.queries.Tiers.core]] — `SparkEntry.queries` exposes exactly that
-  * tier since round 5; the O(n²) exact diagnostics and the 400+-entry
-  * extended tail are out of the timed default path per VERDICT r4 #1c/#2)
-  * at `SPARK_GRAFT_SF_DIR`
+/** Per-round benchmark: times every registry entry ([[SparkEntry.queries]],
+  * 133 entries) at `SPARK_GRAFT_SF_DIR`
   * (full evaluation through the noop sink — count() would let column pruning
   * skip the actual operator work), then runs the headline
   * elevation-lookup + spatial-join workload at two parallelism levels

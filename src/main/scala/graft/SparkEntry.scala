@@ -1,14 +1,9 @@
 package graft
 
-import graft.core.{FeatureRow, GeoJson, TileRow}
-import graft.functions.cells
-import graft.functions.raster._
-import graft.functions.spatial._
+import graft.core.GeoJson
 import graft.ops.Elevation
 import graft.synth.TileGen
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Driver contract — each `queries` entry is one operator from SURVEY.md §2
   * (or a training-pipeline op), and `oracleSql` carries the equivalent DuckDB
@@ -36,25 +31,11 @@ object SparkEntry {
       .select($"feature_id", $"coord_idx", $"lng", $"lat", $"tile_key", $"elev")
   }
 
-  /** Driver contract tier (VERDICT r4 #1/#2): exactly [[graft.queries.Tiers.core]]
-    * — every §2 gate plus family representatives. The full registry stays
-    * reachable via [[allQueries]] / `SPARK_GRAFT_TIER=full` in Verify.
+  /** The registry: 133 entries, every SURVEY.md §2 gate plus one to four
+    * representatives of each family. `graft.Verify` runs all of them and
+    * `graft.Bench` times them; `RegistrySpec` pins the exact name set.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = {
-    val all = allQueries
-    graft.queries.Tiers.core.iterator.map(n => n -> all(n)).toMap
-  }
-
-  /** Core-tier oracle SQL, keys matching [[queries]]. */
-  def oracleSql: Map[String, String] = {
-    val all = allOracleSql
-    graft.queries.Tiers.core.iterator.map(n => n -> all(n)).toMap
-  }
-
-  /** Full registry (368 entries: core 133, diagnostic 6, extended 229):
-    * aggregation of the graft.queries family objects.
-    */
-  def allQueries: Map[String, (SparkSession, String) => DataFrame] =
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.queries.QRel.queries ++
     graft.queries.QEvents1.queries ++
     graft.queries.QEvents2.queries ++
@@ -71,7 +52,8 @@ object SparkEntry {
     graft.queries.QImg.queries ++
     graft.queries.QCuration.queries
 
-  def allOracleSql: Map[String, String] =
+  /** DuckDB oracle SQL, keys matching [[queries]]. */
+  def oracleSql: Map[String, String] =
     graft.queries.QRel.sql ++
     graft.queries.QEvents1.sql ++
     graft.queries.QEvents2.sql ++

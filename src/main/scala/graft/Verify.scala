@@ -11,10 +11,8 @@ import java.util.concurrent.{Executors, TimeUnit}
   *  1. `oracle_sql.json` is written FIRST — it is pure metadata, so even a
   *     run truncated mid-loop leaves the driver every completed query's
   *     parquet plus the full oracle map to score it with.
-  *  2. The default run is the CORE tier only ([[graft.queries.Tiers.core]],
-  *     133 entries ≈ the round-3 driver-green surface); the 368-entry
-  *     registry runs only under `SPARK_GRAFT_TIER=full` (or explicit
-  *     query-name args).
+  *  2. The default run is the whole registry ([[SparkEntry.queries]], 133
+  *     entries); query-name args after the two paths run only those.
   *  3. Queries run through a small thread pool (`SPARK_GRAFT_VERIFY_THREADS`,
   *     default 4 — Spark local mode schedules concurrent jobs fine and the
   *     sf0.01 fixtures are tiny), submitted §2-contract-first so a truncated
@@ -54,9 +52,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: run only these queries (local iteration aid;
-    // the driver always passes exactly two args → core-tier run)
+    // the driver always passes exactly two args → whole-registry run)
     val only = args.drop(2).toSet
-    val full = sys.env.get("SPARK_GRAFT_TIER").contains("full")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val nThreads = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS", "4").toInt)
@@ -69,10 +66,8 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
 
-    val registry =
-      if (full || only.nonEmpty) SparkEntry.allQueries else SparkEntry.queries
-    val oracle =
-      if (full || only.nonEmpty) SparkEntry.allOracleSql else SparkEntry.oracleSql
+    val registry = SparkEntry.queries
+    val oracle = SparkEntry.oracleSql
     val names = registry.keys.toSeq
       .filter(n => only.isEmpty || only.contains(n))
       .sortBy(n => (priority(n), n))

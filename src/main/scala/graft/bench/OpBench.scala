@@ -42,7 +42,7 @@ object OpBench {
       println(f"headline min=${times.head}%.2fs all=${times.map(t => f"$t%.2f").mkString(",")}")
     }
     for (name <- names if name != "headline") {
-      val fn = graft.SparkEntry.allQueries(name)
+      val fn = graft.SparkEntry.queries(name)
       val times = (1 to passes).map { _ =>
         val t0 = System.nanoTime()
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()

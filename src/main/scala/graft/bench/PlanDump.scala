@@ -25,14 +25,13 @@ object PlanDump {
       "dedup_minhash",       // LSH band self-join
       "ann_ivfpq_topk",      // IVF-PQ probe path
       "curation_quota",      // two-phase top-k
-      "events_rfm",          // GlobalRank two-phase ntile (round 5)
       "q5_multijoin"         // relational multi-join baseline
     )
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val all = graft.SparkEntry.allQueries
+    val all = graft.SparkEntry.queries
     for (n <- names) {
       println(s"\n===== $n =====")
       try {

@@ -134,53 +134,4 @@ object AsofJoin {
       .select(col(keyCol), col("bucket_us"), col("cents"), col("filled"))
   }
 
-  /** Nearest-neighbour as-of join: for every left row the single right row
-    * minimizing |Δts| within the key group — the sensor-fusion variant of
-    * [[asofJoin]] (backward is "last known reading"; nearest is "the
-    * reading this observation should pair with"). Composed from the two
-    * directional matches: the backward match IS the nearest-from-below and
-    * the forward match (the same machinery on negated ts/seq) the
-    * nearest-from-above, so one comparison picks the winner. Equal gaps
-    * prefer the backward (earlier) row. Among right rows tied on ts, the
-    * backward side resolves to the LARGEST seq and the forward side to the
-    * SMALLEST (negation flips the tiebreak) — both deterministic.
-    *
-    * Plan shape: two window-scan as-of passes + one key-aligned join on
-    * (keys, ts, seq) — still no theta-join, still one linear scan per
-    * direction.
-    *
-    * @return left columns + `near_<p>`/`near_<tsCol>` + signed `near_gap`
-    *         (near ts − left ts; ≤ 0 backward), nulls when the group has
-    *         no right rows
-    */
-  def asofNearest(left: DataFrame, right: DataFrame, keys: Seq[String],
-                  tsCol: String, seqCol: String,
-                  payload: Seq[String]): DataFrame = {
-    val back = asofJoin(left, right, keys, tsCol, seqCol, payload)
-    val negL = left.withColumn(tsCol, -col(tsCol))
-      .withColumn(seqCol, -col(seqCol))
-    val negR = right.withColumn(tsCol, -col(tsCol))
-      .withColumn(seqCol, -col(seqCol))
-    var fwd = asofJoin(negL, negR, keys, tsCol, seqCol, payload)
-      .withColumn(tsCol, -col(tsCol))
-      .withColumn(seqCol, -col(seqCol))
-      .withColumn(s"asof_$tsCol", -col(s"asof_$tsCol"))
-    if (payload.contains(seqCol))
-      fwd = fwd.withColumn(s"asof_$seqCol", -col(s"asof_$seqCol"))
-    val asofCols = (payload.map(p => s"asof_$p") :+ s"asof_$tsCol").distinct
-    val joinKeys = keys :+ tsCol :+ seqCol
-    val fwdR = fwd.select(joinKeys.map(col) ++
-      asofCols.map(c => col(c).as("fwd_" + c.stripPrefix("asof_"))): _*)
-    val j = back.join(fwdR, joinKeys)
-    val bts = col(s"asof_$tsCol"); val fts = col(s"fwd_$tsCol")
-    val useBack = bts.isNotNull &&
-      (fts.isNull || (col(tsCol) - bts) <= (fts - col(tsCol)))
-    val nearCols = payload.map(p =>
-      when(useBack, col(s"asof_$p")).otherwise(col(s"fwd_$p"))
-        .as(s"near_$p")) ++
-      Seq(when(useBack, bts).otherwise(fts).as(s"near_$tsCol"),
-        when(useBack, bts - col(tsCol)).otherwise(fts - col(tsCol))
-          .as("near_gap"))
-    j.select((left.columns.map(col) ++ nearCols).toIndexedSeq: _*)
-  }
 }

@@ -137,111 +137,6 @@ object Curation {
       .select("doc_id", "term", "tf", "df", "idf_q", "score", "rk")
   }
 
-  /** Quantized BM25 top-k terms per document — the length-normalized
-    * ranking function behind every lexical retrieval stack (and the
-    * query-side scorer of retrieval-based decontamination), with the
-    * Okapi saturation curve made ENGINE-EXACT by quantizing both ratios
-    * to integers instead of trusting `ln`/double division ulps:
-    *
-    *   - `idf_q  = (N · 1000) div df`            (as [[tfidfTopTerms]])
-    *   - `dlr_q  = (dl · N · 1000) div ΣL`       (doc length / avg length,
-    *                                              in thousandths)
-    *   - `score_q = (idf_q · tf · 44000) div
-    *                (20000·tf + 6000 + 18·dlr_q)`
-    *
-    * which is exactly `idf_q · tf·(k1+1) / (tf + k1·(1−b+b·dl/avgdl))`
-    * for the standard k1 = 1.2, b = 0.75 with the length ratio pre-rounded
-    * to dlr_q/1000 (multiply numerator and denominator by 20 000/tf-units:
-    * 44 000 = 20 000·2.2, 20 000·k1·(1−b) = 6 000, 20 000·k1·b/1000 = 18).
-    * All operands nonnegative, so Spark `DIV` and DuckDB `//` agree; the
-    * rank (score_q desc, term asc) is total and bit-reproducible.
-    *
-    * Scale shape: identical to [[tfidfTopTerms]] — wordcount tf shuffle,
-    * vocabulary-bounded df agg, term join, per-doc window — plus ONE more
-    * doc-keyed aggregate for dl (computed from the tf table, never a
-    * second corpus scan) and a 2-value broadcast (N, ΣL). Integer
-    * headroom: idf_q ≤ N·1000, so the score numerator stays < 2⁶³ up to
-    * N ≈ 10⁹ docs × tf ≤ 50; beyond that drop idf_q to centi-units.
-    *
-    * @return (doc_id, term, tf, dl, dlr_q, score_q, rk), rk ≤ k
-    */
-  def bm25TopTerms(docs: DataFrame, k: Int): DataFrame = {
-    // same CSE trap as tfidfTopTerms: tf feeds score, df AND dl
-    val tf = docs
-      .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-      .filter(col("term") =!= "")
-      .groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(false)
-    val df = tf.groupBy("term").agg(count(lit(1)).as("df"))
-    val dl = tf.groupBy("doc_id").agg(sum("tf").as("dl"))
-    val tot = docs.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(dl.agg(sum("dl").as("sum_len")))
-    val w = Window.partitionBy("doc_id")
-      .orderBy(col("score_q").desc, col("term"))
-    tf.join(df, "term").join(dl, "doc_id")
-      .crossJoin(broadcast(tot))
-      .withColumn("idf_q", expr("(n_docs * 1000) div df"))
-      .withColumn("dlr_q", expr("(dl * n_docs * 1000) div sum_len"))
-      .withColumn("score_q",
-        expr("(idf_q * tf * 44000) div (20000*tf + 6000 + 18*dlr_q)"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .select("doc_id", "term", "tf", "dl", "dlr_q", "score_q", "rk")
-  }
-
-  /** RAKE keyword extraction (Rose et al. 2010, public): candidate
-    * phrases are the maximal stopword-free token runs of each document;
-    * each word scores `deg/freq` where `freq` counts its occurrences
-    * across ALL phrases and `deg` sums the lengths of the phrases it
-    * appears in (co-occurrence degree, self included); a phrase scores
-    * the sum of its words' scores. The classic zero-training keyphrase
-    * extractor of curation/indexing pipelines — here with the word score
-    * QUANTIZED (`wscore_q = (deg·1000) div freq`) so phrase scores and
-    * the (score desc, phrase asc) ranking are exact 64-bit integers in
-    * both engines.
-    *
-    * Scale shape: tokenize → per-doc window (running stopword count =
-    * phrase id, one doc-keyed shuffle) → (doc, phrase) agg → global word
-    * stats bounded by VOCABULARY (like [[tfidfTopTerms]]'s df) joined
-    * back on the word key → per-doc top-k window. No step keys on
-    * anything wider than (doc, phrase) or the vocabulary.
-    *
-    * @return (doc_id, phrase, n_words, n_occur, score_q, rk), rk ≤ k
-    */
-  def rakeKeywords(docs: DataFrame, stopwords: Seq[String],
-                   k: Int): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("pos")
-    val phrased = docs
-      .select(col("doc_id"), posexplode(split(col("text"), " ")))
-      .withColumnRenamed("col", "tok")
-      .filter(col("tok") =!= "")
-      .withColumn("stop", col("tok").isin(stopwords: _*).cast("long"))
-      .withColumn("pid", sum("stop").over(
-        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .filter(col("stop") === 0)
-      .localCheckpoint(false) // feeds phrases, word stats AND the re-join
-    val phrases = phrased.groupBy("doc_id", "pid")
-      .agg(expr("array_join(transform(array_sort(collect_list(" +
-        "struct(pos, tok))), s -> s.tok), ' ')").as("phrase"),
-        count(lit(1)).as("n_words"))
-      .localCheckpoint(false)
-    val words = phrased.select("doc_id", "pid", "tok")
-      .join(phrases.select("doc_id", "pid", "n_words"), Seq("doc_id", "pid"))
-    val wstats = words.groupBy("tok")
-      .agg(count(lit(1)).as("freq"), sum("n_words").as("deg"))
-      .withColumn("wscore_q", expr("(deg * 1000) div freq"))
-    val pscore = words.join(wstats.select("tok", "wscore_q"), "tok")
-      .groupBy("doc_id", "pid").agg(sum("wscore_q").as("score_q"))
-    val rkw = Window.partitionBy("doc_id")
-      .orderBy(col("score_q").desc, col("phrase").asc)
-    phrases.join(pscore, Seq("doc_id", "pid"))
-      .groupBy("doc_id", "phrase")
-      .agg(max("n_words").as("n_words"), count(lit(1)).as("n_occur"),
-        max("score_q").as("score_q"))
-      .withColumn("rk", row_number().over(rkw))
-      .filter(col("rk") <= k)
-      .select("doc_id", "phrase", "n_words", "n_occur", "score_q", "rk")
-  }
   /** Deterministic stratified sampling — "keep r‰ of each stratum" — the
     * reproducible down-sampling primitive of corpus mixing (per-source /
     * per-language rates chosen from a mixing recipe).
@@ -516,109 +411,6 @@ object Curation {
       .withColumn("ppx_q", expr("surprisal_q div n_tokens"))
   }
 
-  /** Bigram-LM surprisal — the context-aware upgrade of
-    * [[unigramSurprisal]]: train add-one-smoothed word-bigram conditionals
-    * on the corpus itself (`p(w₂|w₁) = (c(w₁w₂)+1)/(c(w₁)+V)`), then score
-    * every document by its total bigram surprisal. Catches word-salad junk
-    * whose unigram distribution looks normal but whose transitions are
-    * improbable — the standard second-pass quality filter.
-    *
-    * Same determinism discipline as the unigram op: each bigram's
-    * surprisal quantizes to integer micro-nats BEFORE the per-doc sum.
-    *
-    * Scale shape: the corpus tokenizes once (localCheckpoint feeds both
-    * the bigram and unigram count tables); counts are vocab/pair-bounded
-    * map-side-combined aggregations; scoring is two key-bounded joins on
-    * (w₁,w₂) and w₁. Documents with fewer than 2 tokens have no bigrams
-    * and drop out (the unigram op covers them).
-    *
-    * @return (doc_id, n_bigrams, surprisal_q, ppx_q) in micro-nats
-    */
-  def bigramSurprisal(docs: DataFrame): DataFrame = {
-    val bg = docs.select(col("doc_id").cast("long"),
-        TextDedup.words(col("text")).as("w"))
-      .filter(size(col("w")) >= 2)
-      .selectExpr("doc_id",
-        """explode(zip_with(slice(w, 1, size(w)-1), slice(w, 2, size(w)-1),
-           (a, b) -> struct(a AS w1, b AS w2))) AS bg""")
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .localCheckpoint(false) // feeds pair counts AND the scoring join
-    val cb = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_xy"))
-    val cu = bg.groupBy("w1").agg(count(lit(1)).as("c_x"))
-    // V = distinct SECOND words (the conditional's support); +1 smoothing
-    val v = cb.select(col("w2")).distinct().agg(count(lit(1)).as("n_vocab"))
-    bg.join(cb, Seq("w1", "w2")).join(cu, "w1")
-      .crossJoin(broadcast(v))
-      .select(col("doc_id"),
-        floor(lit(1e6) * log(
-          (col("c_x") + col("n_vocab")).cast("double") /
-            (col("c_xy") + lit(1L)).cast("double"))).cast("long").as("sq"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).cast("long").as("n_bigrams"),
-        sum("sq").cast("long").as("surprisal_q"))
-      .withColumn("ppx_q", expr("surprisal_q div n_bigrams"))
-  }
-
-  /** Interpolated KNESER–NEY bigram probabilities (Kneser & Ney 1995; the
-    * modified-discount form of Chen & Goodman 1998 with a single discount)
-    * — the LM that add-one smoothing ([[bigramSurprisal]]) approximates
-    * badly: instead of backing off to raw unigram frequency, KN backs off
-    * to CONTINUATION counts ("in how many distinct contexts does w₂
-    * appear"), which is what makes frequent-but-context-bound words
-    * (e.g. "Francisco") cheap to predict only after their context.
-    * Discount d = 3/4, carried in exact quarters so the standard formula
-    *
-    * {{{
-    *   P(w₂|w₁) = max(c₁₂ − d, 0)/c₁ + (d·N₁₊(w₁·)/c₁) · N₁₊(·w₂)/N₁₊(··)
-    * }}}
-    *
-    * becomes all-integer with one ppb fixed-point quantization per term:
-    * `term1 = (4·c₁₂ − 3)·10⁹ div (4·c₁)`, `pcont = Ncont(w₂)·10⁹ div Ntot`,
-    * `term2 = 3·N₁₊(w₁)·pcont div (4·c₁)` — deterministic floor divisions
-    * any engine replays bit-for-bit (quantization error < 2 ppb, far
-    * below any filtering threshold that would consume these scores).
-    *
-    * Plan shape: one bigram explode feeding four key-bounded counts
-    * (pair, left-context, left-fanout, right-continuation — all map-side
-    * partial) and one 1-row broadcast for the global continuation total;
-    * scoring is joins on the bigram keys. The returned table is the
-    * MODEL (one row per distinct bigram, ranked); scoring a corpus
-    * against it is one more join, same shape as [[bigramSurprisal]].
-    *
-    * @return top-`topK` bigrams by count: (w1, w2, c_xy, p_ppb, rk)
-    */
-  def knBigram(docs: DataFrame, topK: Int): DataFrame = {
-    require(topK > 0, s"topK must be positive: $topK")
-    val bg = docs.select(col("doc_id").cast("long"),
-        TextDedup.words(col("text")).as("w"))
-      .filter(size(col("w")) >= 2)
-      .selectExpr("doc_id",
-        """explode(zip_with(slice(w, 1, size(w)-1), slice(w, 2, size(w)-1),
-           (a, b) -> struct(a AS w1, b AS w2))) AS bg""")
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .localCheckpoint(false)
-    val cb = bg.groupBy("w1", "w2").agg(count(lit(1)).as("c_xy"))
-      .localCheckpoint(false) // feeds c_x, fanout, continuation AND scoring
-    val cx = cb.groupBy("w1").agg(sum("c_xy").as("c_x"),
-      count(lit(1)).as("n1p_fol"))
-    val cont = cb.groupBy("w2").agg(count(lit(1)).as("n_cont"))
-    val ntot = cb.agg(count(lit(1)).as("n_tot"))
-    cb.join(cx, "w1").join(cont, "w2").crossJoin(broadcast(ntot))
-      .selectExpr("w1", "w2", "c_xy",
-        """greatest(4L * c_xy - 3L, 0L) * 1000000000L DIV (4L * c_x)
-           + (3L * n1p_fol * (n_cont * 1000000000L DIV n_tot)) DIV (4L * c_x)
-           AS p_ppb""")
-      // top-K via distributed TakeOrdered first (bigram vocab scales with
-      // the corpus); the rank window then runs over a topK-row frame with
-      // the non-foldable bounded key so it neither warns nor single-sorts
-      .orderBy(col("c_xy").desc, col("w1").asc, col("w2").asc).limit(topK)
-      .withColumn("rk", row_number()
-        .over(org.apache.spark.sql.expressions.Window
-          .partitionBy(GlobalRank.boundedPartitionKey(col("c_xy")))
-          .orderBy(col("c_xy").desc, col("w1").asc, col("w2").asc))
-        .cast("int"))
-  }
-
   /** PII redaction — the compliance pass every published training corpus
     * runs: replace e-mail addresses and dashed phone numbers with typed
     * placeholder tokens and report per-document match counts. Patterns are
@@ -645,63 +437,6 @@ object Curation {
       regexp_count(t, lit(phone)).cast("long").as("n_phones"),
       md5(regexp_replace(regexp_replace(t, email, "<EMAIL>"),
         phone, "<PHONE>")).as("redacted_md5"))
-  }
-
-  /** Domain-mixture reweighting: per-source sampling weights that move the
-    * corpus token distribution toward a TARGET distribution — the knob a
-    * training-data pipeline turns after dedup/quality/decontam decide WHAT
-    * survives, to decide HOW OFTEN each domain is sampled (the mixture
-    * tables of the public LLM data recipes). Uniform target here: every
-    * source gets `1_000_000 div n_sources` ppm of the sampled stream.
-    *
-    * Exact rational arithmetic end to end (ppm units, integer floor
-    * division — engine-independent):
-    *
-    *  - `share_ppm  = tok·1_000_000 div total_tok` (actual share),
-    *  - `weight_ppm = target_ppm·1_000_000 div share_ppm` (the per-document
-    *    sampling multiplier; 1_000_000 = sampled at natural rate),
-    *  - `epochs = ceil(weight_ppm / 1_000_000)` — how many passes over an
-    *    up-weighted source a sampler needs (its repetition budget).
-    *
-    * Plan shape: one per-source aggregation (map-side combined), then the
-    * scalar corpus total joined back by cross-joining a 1-row frame —
-    * broadcast by size, no window over a single global partition. Row
-    * count = |sources|, so every downstream consumer broadcasts it.
-    *
-    * @param docs      corpus with a `source` column
-    * @param tokenCount exact-integer per-document token count expression
-    * @return (source, tok, share_ppm, weight_ppm, epochs), one row/source
-    */
-  /** URL canonicalization + dedup — the FIRST dedup pass of every web-scale
-    * corpus (cheaper than any content hash: the same page crawled via
-    * `https://WWW.Site.com/a/?utm=x#top` and `https://site.com/a` is one
-    * fetch decision, caught before bytes are even compared). Rules, all
-    * pure string/regex ops both engines evaluate identically:
-    * lowercase scheme and host, strip a leading `www.`, drop the query
-    * string and fragment, strip trailing slashes (empty path ⇒ `/`).
-    * Deliberately NOT url-decoding or sorting query params — those vary by
-    * site semantics; the knob is the rule list, the shape is per-row.
-    *
-    * Keep rule: min doc_id per canonical URL (one window over `canon` —
-    * the only shuffle; at 100 TB this is the cheap groupBy-dedup shape of
-    * `dedup_exact` with the canonical string as the key).
-    *
-    * @param urls (doc_id, url)
-    * @return (doc_id, canon, keep)
-    */
-  def urlDedup(urls: DataFrame): DataFrame = {
-    val scheme = lower(regexp_extract(col("url"), "^([A-Za-z]+)://", 1))
-    val host = regexp_replace(
-      lower(regexp_extract(col("url"), "^[A-Za-z]+://([^/?#]+)", 1)),
-      "^www\\.", "")
-    val path0 = regexp_extract(col("url"), "^[A-Za-z]+://[^/?#]+([^?#]*)", 1)
-    val path = regexp_replace(path0, "/+$", "")
-    val canon = concat(scheme, lit("://"), host,
-      when(path === "", lit("/")).otherwise(path))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("canon")
-    urls.withColumn("canon", canon)
-      .withColumn("keep", col("doc_id") === min("doc_id").over(w))
-      .select("doc_id", "canon", "keep")
   }
 
   def mixtureWeights(docs: DataFrame, tokenCount: Column): DataFrame = {
@@ -784,89 +519,4 @@ object Curation {
       .drop("f_num", "f_den")
   }
 
-  /** Moving-average type-token ratio (MATTR, Covington–McFall) — the
-    * length-robust lexical-diversity score (plain TTR collapses with
-    * document length; [[simpson]] weights high-frequency types
-    * quadratically; MATTR is the curation-standard fix: mean distinct-type
-    * count over every sliding window of `w` tokens).
-    *
-    * The naive form re-counts distinct tokens per window (O(L·w) state and
-    * a per-window DISTINCT — hopeless as a Spark plan). This computes the
-    * identical sum in ONE window pass via the previous-occurrence
-    * identity: token at position `p` is the FIRST occurrence inside window
-    * start `i` iff `prev(p) < i` (prev = position of the token's previous
-    * occurrence in the doc, −1 if none), so
-    *
-    *   Σ_windows distinct = Σ_p #{ i ∈ [max(0, p−w+1), min(p, L−w)] : i > prev(p) }
-    *                      = Σ_p max(0, min(p, L−w) − max(p−w+1, 0, prev(p)+1) + 1)
-    *
-    * — a per-token closed form from one `lag` over (doc, token). Output
-    * `mattr_ppm = 10^6 · Σ div (w · (L−w+1))` in exact integers; docs
-    * shorter than `w` tokens are dropped (no full window exists —
-    * documented, the standard MATTR edge rule).
-    *
-    * Plan shape: posexplode → one (doc, tok)-keyed window (lag) → one
-    * doc-keyed agg. Both shuffles are key-bounded; no joins, no per-window
-    * state — 100 TB-safe wherever single documents fit a partition (the
-    * same bound every text op here carries).
-    *
-    * @return (doc_id, n_tokens, distinct_sum, mattr_ppm)
-    */
-  def mattr(docs: DataFrame, text: Column, w: Int): DataFrame = {
-    require(w > 1, s"window must exceed 1 token: $w")
-    val occ = Window.partitionBy(col("doc_id"), col("tok")).orderBy(col("p"))
-    docs.select(col("doc_id"), posexplode(split(text, " ")).as(Seq("p", "tok")))
-      .withColumn("prev", coalesce(lag(col("p"), 1).over(occ), lit(-1)))
-      .withColumn("L", count(lit(1)).over(Window.partitionBy("doc_id")))
-      .filter(col("L") >= w)
-      .withColumn("hi", least(col("p"), col("L") - w))
-      .withColumn("lo", greatest(col("p") - (w - 1), lit(0), col("prev") + 1))
-      .groupBy("doc_id")
-      .agg(first("L").as("n_tokens"),
-        sum(greatest(col("hi") - col("lo") + 1, lit(0))).cast("long")
-          .as("distinct_sum"))
-      .withColumn("n_tokens", col("n_tokens").cast("long"))
-      .withColumn("mattr_ppm",
-        expr(s"distinct_sum * 1000000L DIV ($w * (n_tokens - $w + 1))"))
-  }
-
-  /** Next-fit-decreasing compaction bin packing — the small-file
-    * compaction plan an Iceberg/Delta OPTIMIZE job emits: per table
-    * partition, files sorted (size desc, file_id) fill bins greedily, a
-    * new bin opens when the next file would overflow `capacity`
-    * (an oversized file sits alone in its own bin). NFD is the
-    * deterministic member of the FFD family — same ≤ 2·OPT-ish packing
-    * behavior in practice, but replayable row-by-row, which is what makes
-    * it oracle-checkable (DuckDB walks the identical recurrence as a
-    * recursive CTE).
-    *
-    * 100 TB shape: one groupByKey keyed by the TABLE PARTITION — the unit
-    * a compaction job plans independently anyway — with per-group state
-    * one (bin, fill) pair and per-group input the partition's manifest
-    * rows (metadata-scale, thousands, not data-scale). Never a global
-    * sort, never a driver collect.
-    *
-    * @param files (part, file_id, sz)
-    * @return (part, file_id, sz, bin) — bin ids 0-based per partition
-    */
-  def binPackNfd(files: DataFrame, capacity: Long): DataFrame = {
-    require(capacity > 0, s"capacity must be > 0, got $capacity")
-    val spark = files.sparkSession
-    import spark.implicits._
-    files.select(col("part").cast("long"), col("file_id").cast("long"),
-        col("sz").cast("long"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (part, it) =>
-        val fs = it.toArray.sortBy { case (_, id, sz) => (-sz, id) }
-        var bin = 0L; var fill = 0L
-        fs.iterator.zipWithIndex.map { case ((_, id, sz), i) =>
-          if (i == 0) { bin = 0L; fill = sz }
-          else if (fill + sz <= capacity) { fill += sz }
-          else { bin += 1; fill = sz }
-          (part, id, sz, bin)
-        }
-      }
-      .toDF("part", "file_id", "sz", "bin")
-  }
 }

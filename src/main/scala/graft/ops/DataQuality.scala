@@ -204,59 +204,6 @@ object DataQuality {
       .orderBy("ord").drop("ord")
   }
 
-  /** Benford first-digit law expectations in fixed-point ppm:
-    * `round(log10(1 + 1/d) · 10⁶)` for d = 1..9. The nine literals sum to
-    * exactly 1,000,000, so the expected distribution is itself an exact
-    * partition of ppm space — both engines compare against the SAME
-    * integers and no log is evaluated in the gate path.
-    */
-  val BenfordPpm: Seq[Long] =
-    Seq(301030L, 176091L, 124939L, 96910L, 79181L, 66947L, 57992L, 51153L,
-      45757L)
-
-  /** Benford's-law first-significant-digit conformance — the fraud /
-    * synthetic-data / unit-mixup screen of numeric quality auditing:
-    * naturally occurring multiplicative quantities put ~30.1% of first
-    * digits at 1, fabricated or truncated columns don't. One row per
-    * digit with the observed count, the exact floored observed ppm, the
-    * Benford expectation ppm ([[BenfordPpm]]), and the absolute deviation
-    * — all integer arithmetic, so the verdict is bit-reproducible.
-    *
-    * Plan shape: ONE scan → substring-of-cast first digit (codegen'd,
-    * no UDF) → 9-key map-side-combined count; the total and ppm columns
-    * are a window over the 9-row aggregate, not a second pass. Nulls and
-    * non-positive values are excluded (they have no first significant
-    * digit).
-    *
-    * @param column a positive integer-valued column (cast money to cents
-    *               first so the digit is exact)
-    * @param tolPpm deviation tolerance for the verdict column
-    * @return (digit, n_obs, n_total, obs_ppm, e_ppm, dev_ppm, verdict),
-    *         one row per observed digit 1..9
-    */
-  def benford(df: DataFrame, column: String, tolPpm: Long): DataFrame = {
-    require(tolPpm >= 0, s"tolPpm must be >= 0: $tolPpm")
-    val ppmMap = map((1 to 9).flatMap(d =>
-      Seq(lit(d), lit(BenfordPpm(d - 1)))): _*)
-    // window input is the 9-row digit aggregate — bounded by construction;
-    // the non-foldable zero key declares that and keeps the scale-warning
-    // log clean (see GlobalRank.boundedPartitionKey)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(GlobalRank.boundedPartitionKey(col("digit")))
-    df.filter(col(column).isNotNull && col(column) > 0)
-      .select(substring(col(column).cast("string"), 1, 1).cast("int")
-        .as("digit"))
-      .groupBy("digit").agg(count(lit(1)).as("n_obs"))
-      .withColumn("n_total", sum("n_obs").over(w))
-      .withColumn("obs_ppm", expr("n_obs * 1000000 DIV n_total"))
-      .withColumn("e_ppm", element_at(ppmMap, col("digit")).cast("long"))
-      .withColumn("dev_ppm", abs(col("obs_ppm") - col("e_ppm")))
-      .withColumn("verdict",
-        when(col("dev_ppm") <= lit(tolPpm), lit("ok")).otherwise(lit("deviant")))
-      .select("digit", "n_obs", "n_total", "obs_ppm", "e_ppm", "dev_ppm",
-        "verdict")
-  }
-
   /** Schema-evolution diff — the compatibility gate between two table
     * versions: one verdict row per column name appearing in either
     * schema, status ∈ {added, removed, type_changed, unchanged}. This is

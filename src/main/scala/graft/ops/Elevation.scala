@@ -127,10 +127,11 @@ object Elevation {
     // Packed Long shuffle key `tileIntKey * salt + lane` instead of a
     // per-row `"$tileKey#$lane"` string: the string form allocates, hashes
     // and compares ~16 bytes per probe row — pure overhead on the path
-    // where EVERY row crosses the shuffle. The int tile key is the same
-    // bijection the broadcast index uses (TileIndex.key).
+    // where EVERY row crosses the shuffle. The int tile key is the one the
+    // broadcast index uses (TileIndex.key): off the 1° grid it is -1, which
+    // no tile is keyed to, so such a coordinate samples 0 on both paths.
     val keyedCoords = coords.groupByKey { c =>
-      val k = TileIndex.key(math.floor(c.lng).toInt, math.floor(c.lat).toInt).toLong
+      val k = TileIndex.key(math.floor(c.lng), math.floor(c.lat)).toLong
       // salt lane from a per-row hash: coord_idx alone degenerates to one
       // lane for point-style inputs where every row has coord_idx 0
       val lane = if (s == 1) 0
@@ -140,7 +141,7 @@ object Elevation {
     val keyedTiles = tiles.flatMap { t =>
       val (lngD, latD) = TileKey.toDegrees(t.image_id)
       val k = TileIndex.key(lngD, latD).toLong
-      (0 until s).iterator.map(i => (k * s + i, t))
+      if (k < 0) Iterator.empty else (0 until s).iterator.map(i => (k * s + i, t))
     }.groupByKey(_._1)
     keyedCoords.cogroup(keyedTiles) { (_, cs, ts) =>
       ts.toSeq.headOption match {

@@ -346,7 +346,7 @@ object Embeddings {
   // data — and every arithmetic step (exact integer sums, one IEEE division
   // per mean, left-fold d2) is replayable bit-for-bit by an independent
   // engine, so the per-round centroid tables themselves are oracle-gated
-  // (ann_kmeans_train / ann_pq_train).
+  // (ann_kmeans_train).
 
   /** One training-history row: (round, centroid, dim, n, sum_q, mean). */
   type TrainRow = (Int, Int, Int, Long, Long, Double)
@@ -444,38 +444,6 @@ object Embeddings {
       cur = next
     }
     (cur, hist.result())
-  }
-
-  /** Per-code quantization-distortion audit for trained PQ codebooks: every
-    * vector's subvector assigned to its nearest code (min d², ties to the
-    * lower code — the training assignment rule), the squared error floored
-    * to micro units per VECTOR so the per-code sums are order-independent
-    * Longs. High-distortion codes are the under-trained/overloaded cells
-    * [[ivfPqRecall]] ultimately pays for — this localizes them.
-    *
-    * @return (sub, code, n, sum_d2q, max_d2q)
-    */
-  def pqDistortion(vecs: DataFrame,
-                   codebooks: Array[Array[Array[Double]]]): DataFrame = {
-    val nSub = codebooks.length
-    val kCodes = codebooks(0).length
-    val dims = 64 / nSub
-    val v = vecs.select(col("vec_id").cast("long"),
-      col("embedding").cast("array<double>").as("v"))
-    val subRows = (0 until nSub).map { s =>
-      val sub = slice(col("v"), s * dims + 1, dims)
-      val best = least((0 until kCodes).map { k =>
-        struct(vec_dist2(sub, typedLit(codebooks(s)(k).toSeq)).as("d2"),
-          lit(k).as("k"))
-      }: _*)
-      struct(lit(s).as("s"), best.getField("k").as("code"),
-        floor(best.getField("d2") * lit(1000000.0)).cast("long").as("d2q"))
-    }
-    v.select(explode(array(subRows: _*)).as("a"))
-      .select(col("a.s").as("sub"), col("a.code").as("code"), col("a.d2q"))
-      .groupBy("sub", "code")
-      .agg(count(lit(1)).as("n"), sum("d2q").as("sum_d2q"),
-        max("d2q").as("max_d2q"))
   }
 
   /** [[coarseProbe]] with TRAINED centroid literals instead of the closed
@@ -762,54 +730,8 @@ object Embeddings {
         round(col("adc"), 4).as("adc_r"))
   }
 
-  /** Distributed power iteration for the corpus's top principal direction —
-    * the building block of PCA whitening / spectral embedding-quality
-    * checks. Each round is two key-bounded shuffle aggregations computing
-    * `u = Xᵀ(Xv)` (one keyed by row, one by dimension — the classic
-    * distributed matvec; X never materializes as a matrix), so the plan is
-    * rounds × 2 shuffles regardless of corpus size.
-    *
-    * Exactness discipline: X is quantized once to integer milli-units, the
-    * matvec runs in exact integer arithmetic, and the two per-round
-    * rescales (÷2²⁰, then normalize to ±1000 by the max component) are
-    * floor-of-double-division with both operands < 2⁵³ — identical IEEE
-    * ops in any engine, so every round's vector is bit-reproducible.
-    * Integer headroom: |xq| ≤ 1000 ⇒ |u| ≤ n·1000·(dims·1000²); safe in a
-    * 64-bit sum to n ≈ 10⁸ rows at dims = 64 — beyond that, pre-shift xq
-    * (costs precision, not correctness).
-    *
-    * @return (rnd, d, v) — the quantized direction after each round,
-    *         normalized so max|v| = 1000
-    */
-  def powerIteration(emb: DataFrame, rounds: Int, dims: Int): DataFrame = {
-    require(rounds > 0 && dims > 0, s"bad params: $rounds, $dims")
-    val spark = emb.sparkSession
-    val x = emb.select(col("vec_id").cast("long"),
-        posexplode(col("embedding")).as(Seq("d", "xv")))
-      .select(col("vec_id"), col("d").cast("long").as("d"),
-        floor(col("xv").cast("double") * lit(1000.0)).cast("long").as("xq"))
-    var v = spark.range(dims).select(col("id").as("d"),
-      when(col("id") === 0, lit(1000L)).otherwise(lit(0L)).as("v"))
-    val hist = Seq.newBuilder[DataFrame]
-    for (r <- 1 to rounds) {
-      val dot = x.join(v, "d")
-        .groupBy("vec_id").agg(sum(col("xq") * col("v")).as("s"))
-      val u = x.join(dot, "vec_id")
-        .groupBy("d").agg(sum(col("xq") * col("s")).as("u"))
-      val su = u.select(col("d"),
-        floor(col("u").cast("double") / lit(1048576.0)).cast("long").as("su"))
-      val m = su.agg(max(abs(col("su"))).as("m"))
-      v = su.crossJoin(broadcast(m))
-        .select(col("d"), floor(col("su").cast("double") * lit(1000.0) /
-          col("m").cast("double")).cast("long").as("v"))
-        .localCheckpoint() // cut the per-round lineage; 64 rows
-      hist += v.withColumn("rnd", lit(r))
-    }
-    hist.result().reduce(_ unionAll _).select("rnd", "d", "v")
-  }
-
-  /** Project every embedding onto a direction vector (e.g. the
-    * [[powerIteration]] output) — the PCA-projection step of whitening /
+  /** Project every embedding onto a direction vector (e.g. a leading
+    * eigenvector) — the PCA-projection step of whitening /
     * spectral scoring. The corpus side explodes to (vec_id, d, xq) in the
     * same milli-unit quantization as the trainer and the 64-row direction
     * broadcasts into the dot-product join, so the plan is one fan-out
@@ -903,314 +825,4 @@ object Embeddings {
       .na.fill(0L, Seq("hits_lsh", "hits_nnd"))
   }
 
-  /** MMR (maximal marginal relevance, Carbonell & Goldstein 1998, public)
-    * diversified top-k: after exact cosine retrieval of `nCand` candidates
-    * per query, greedily pick `k` results maximizing
-    * `λ·rel − (1−λ)·max_{s∈selected} sim(c, s)` (step 1 has no selected set
-    * ⇒ score = λ·rel) — the retrieval op that stops near-duplicate corpus
-    * vectors from monopolizing a result page.
-    *
-    * Scale shape: retrieval is the broadcast-query corpus scan
-    * (`cosineTopK`'s plan); the candidate pool and its pairwise-sim matrix
-    * are nCand-bounded per query (≤ nCand² rows, key = qid), and each of
-    * the k greedy rounds is a qid-keyed agg + top-1 window over that
-    * bounded pool — NO driver collect, no step touches the corpus again.
-    * Ties break by neighbor_id; every comparison is IEEE double arithmetic
-    * an independent engine replays exactly.
-    *
-    * @return (qid, step, neighbor_id, rel, score) — step ∈ 1..k in pick
-    *         order
-    */
-  def mmrDiversify(vecs: DataFrame, queries: DataFrame, nCand: Int, k: Int,
-                   lambda: Double): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cand0 = cosineTopK(vecs, queries, nCand)
-      .select(col("qid"), col("neighbor_id"), col("cos").as("rel"))
-      .localCheckpoint(false)
-    val corpus = vecs.select(col("vec_id").cast("long"),
-        col("embedding").cast("array<double>").as("v"))
-      .withColumn("nrm", norm(col("v")))
-    // pairwise sims within each query's candidate pool: candidates join
-    // their vectors, then a qid-keyed self-join — ≤ nCand² rows per query
-    val cv = cand0.join(corpus, col("neighbor_id") === col("vec_id"))
-      .select(col("qid"), col("neighbor_id"), col("v"), col("nrm"))
-    val sims = cv.as("a").join(cv.as("b"), Seq("qid"))
-      .filter(col("a.neighbor_id") =!= col("b.neighbor_id"))
-      .select(col("qid"), col("a.neighbor_id").as("ia"),
-        col("b.neighbor_id").as("ib"),
-        (dot(col("a.v"), col("b.v")) / (col("a.nrm") * col("b.nrm"))).as("sim"))
-      .localCheckpoint(false)
-    val w = Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("neighbor_id"))
-    var selected: DataFrame = null // (qid, step, neighbor_id, rel, score)
-    var remaining = cand0
-    for (step <- 1 to k) {
-      val scored =
-        if (selected == null)
-          remaining.withColumn("score", lit(lambda) * col("rel"))
-        else {
-          val ms = sims
-            .join(selected.select(col("qid"), col("neighbor_id").as("ib")),
-              Seq("qid", "ib"))
-            .groupBy(col("qid"), col("ia").as("neighbor_id"))
-            .agg(max(col("sim")).as("maxsim"))
-          remaining.join(ms, Seq("qid", "neighbor_id"))
-            .withColumn("score",
-              lit(lambda) * col("rel") - lit(1.0 - lambda) * col("maxsim"))
-        }
-      val pick = scored.withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("qid"), lit(step).as("step"), col("neighbor_id"),
-          col("rel"), col("score"))
-        .localCheckpoint(false)
-      selected = if (selected == null) pick else selected.unionAll(pick)
-      remaining = remaining
-        .join(pick.select("qid", "neighbor_id"), Seq("qid", "neighbor_id"),
-          "left_anti")
-    }
-    selected
-  }
-
-  /** GREEDY GRAPH-ANN SEARCH — the navigating-graph search shape of
-    * HNSW/NSG (single layer, beam width 1, public algorithms): from a fixed
-    * entry point, repeatedly move to the neighbor closest to the query
-    * until no neighbor improves; the index is a degree-bounded exact kNN
-    * graph (the labeled fixture — a production build uses the
-    * nn-descent rounds already gated by `ann_nn_descent`). Joined against
-    * the brute-force nearest neighbor so the gate also certifies WHERE
-    * greedy search gets trapped in a local minimum (`is_exact` = 0) — the
-    * number that motivates beam widths > 1.
-    *
-    * Determinism: vectors are milli-floored to integer-valued doubles
-    * (exact in IEEE up to 2⁵³, so `vec_dist2`'s double fold is an EXACT
-    * integer and the BIGINT cast loses nothing); every argmin tie-breaks
-    * by (d2, candidate id); a FIXED round count the oracle unrolls as
-    * CTEs (greedy is monotone — once settled, further rounds are
-    * identity).
-    *
-    * Scale shape per round: state is one row per query; ONE node-keyed
-    * equi-join against the graph + one against the corpus — never
-    * all-pairs after the (fixture-sized) graph build. Lineage cut per
-    * round, same discipline as kNN/SSSP.
-    *
-    * @return (query_id, found_id, found_d2, hops, exact_id, exact_d2,
-    *         is_exact) one row per query
-    */
-  def greedyGraphSearch(vecs: DataFrame, corpusMod: Int, queryMod: Int,
-                        queryOff: Int, degree: Int, rounds: Int): DataFrame = {
-    require(degree > 0 && rounds > 0, s"bad degree=$degree rounds=$rounds")
-    import org.apache.spark.sql.expressions.Window
-    val q = vecs.selectExpr("vec_id",
-      """transform(sequence(0, 63),
-         d -> CAST(CAST(FLOOR(element_at(CAST(embedding AS ARRAY<DOUBLE>), d + 1)
-           * 1000.0D) AS BIGINT) AS DOUBLE)) AS vq""")
-    val corpus = q.filter(col("vec_id") % corpusMod === 0)
-      .select(col("vec_id").as("id"), col("vq").as("nv"))
-      .localCheckpoint(false)
-    def d2(a: Column, b: Column) = vec_dist2(a, b).cast("long")
-    val graph = corpus.toDF("a_id", "va")
-      .join(corpus.toDF("b_id", "vb"), col("a_id") =!= col("b_id"))
-      .withColumn("gd2", d2(col("va"), col("vb")))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("a_id").orderBy(col("gd2"), col("b_id"))))
-      .filter(col("rn") <= degree)
-      .select(col("a_id").as("node"), col("b_id").as("nbr"))
-      .localCheckpoint(false)
-    val queries = q.filter(col("vec_id") % queryMod === queryOff)
-      .select(col("vec_id").as("query_id"), col("vq").as("qv"))
-      .localCheckpoint(false)
-    val entryId = corpus.agg(min("id")).first().getLong(0)
-    var state = queries
-      .crossJoin(broadcast(corpus.filter(col("id") === entryId)))
-      .withColumn("d2", d2(col("qv"), col("nv")))
-      .select(col("query_id"), col("qv"), col("id"), col("d2"),
-        lit(0L).as("hops"))
-      .localCheckpoint(false)
-    for (_ <- 1 to rounds) {
-      // best neighbor per query, then a lexicographic (d2, id) compare
-      // against the current node — identical to the argmin over
-      // {cur} ∪ neighbors, without the self-union (whose constraint
-      // rewrite Spark 4 trips over on shared-lineage children)
-      val bestN = state
-        .join(graph, state("id") === graph("node"))
-        .join(corpus.select(col("id").as("cid"), col("nv")),
-          col("nbr") === col("cid"))
-        .withColumn("nd2", d2(col("qv"), col("nv")))
-        .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-          .orderBy(col("nd2"), col("cid"))))
-        .filter(col("rn") === 1)
-        .select(col("query_id"), col("cid"), col("nd2"))
-      state = state.join(bestN, Seq("query_id"), "left_outer")
-        .withColumn("take", col("cid").isNotNull &&
-          (col("nd2") < col("d2") ||
-            (col("nd2") === col("d2") && col("cid") < col("id"))))
-        .select(col("query_id"), col("qv"),
-          when(col("take"), col("cid")).otherwise(col("id")).as("id"),
-          when(col("take"), col("nd2")).otherwise(col("d2")).as("d2"),
-          (col("hops") + when(col("take"), 1L).otherwise(0L)).as("hops"))
-        .localCheckpoint(false)
-    }
-    val exact = queries.crossJoin(corpus)
-      .withColumn("ed2", d2(col("qv"), col("nv")))
-      .withColumn("rn", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("ed2"), col("id"))))
-      .filter(col("rn") === 1)
-      .select(col("query_id"), col("id").as("exact_id"),
-        col("ed2").as("exact_d2"))
-    state.join(exact, "query_id")
-      .withColumn("is_exact", (col("id") === col("exact_id")).cast("int"))
-      .select(col("query_id"), col("id").as("found_id"),
-        col("d2").as("found_d2"), col("hops"), col("exact_id"),
-        col("exact_d2"), col("is_exact"))
-  }
-
-  /** Sampled silhouette audit over a labeled embedding corpus — "do the
-    * labels look like clusters?" as EXACT sufficient statistics: per
-    * sampled anchor, the intra-label squared-distance sum/count (a) and
-    * the nearest OTHER label by milli-floored mean squared distance (b,
-    * ties to the lower label). The classic silhouette s = (b−a)/max(a,b)
-    * is one float division the consumer takes; the engine ships integers
-    * plus the decisive `s_pos = b̄ > ā` bit. Squared distances (not
-    * rooted) keep every quantity a Long — the documented variant.
-    *
-    * 100 TB shape: anchors × corpus is a broadcast-sized sample join (the
-    * corpus never self-joins), then two anchor-keyed aggregations and one
-    * anchor-keyed rank window.
-    *
-    * @return (aid, alabel, a_sum, a_n, a_mean_q, b_label, b_sum, b_n,
-    *         b_mean_q, s_pos); anchors whose label has no other member
-    *         drop (no intra distance exists)
-    */
-  def silhouetteStats(emb: DataFrame, sampleMod: Long): DataFrame = {
-    require(sampleMod >= 1, s"sampleMod must be >= 1: $sampleMod")
-    val q = emb.select(col("vec_id").cast("long"), col("label"),
-      expr("transform(embedding, " +
-        "x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0) AS BIGINT))").as("eq"))
-    val anchors = q.filter(col("vec_id") % sampleMod === 0)
-      .select(col("vec_id").as("aid"), col("label").as("alabel"),
-        col("eq").as("aeq"))
-    val pairs = anchors.join(q, col("vec_id") =!= col("aid"))
-      .withColumn("d2", aggregate(
-        zip_with(col("aeq"), col("eq"), (a, b) => (a - b) * (a - b)),
-        lit(0L), (acc, x) => acc + x))
-    val byLabel = pairs.groupBy("aid", "alabel", "label")
-      .agg(sum("d2").as("dsum"), count(lit(1)).as("dn"))
-    val a = byLabel.filter(col("label") === col("alabel"))
-      .select(col("aid"), col("dsum").as("a_sum"), col("dn").as("a_n"),
-        expr("dsum * 1000 DIV dn").as("a_mean_q"))
-    val b = byLabel.filter(col("label") =!= col("alabel"))
-      .withColumn("b_mean_q", expr("dsum * 1000 DIV dn"))
-      .withColumn("rn", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("aid")
-          .orderBy(col("b_mean_q"), col("label"))))
-      .filter(col("rn") === 1)
-      .select(col("aid"), col("label").as("b_label"),
-        col("dsum").as("b_sum"), col("dn").as("b_n"), col("b_mean_q"))
-    anchors.select(col("aid"), col("alabel"))
-      .join(a, Seq("aid")).join(b, Seq("aid"))
-      .withColumn("s_pos", col("b_mean_q") > col("a_mean_q"))
-  }
-
-  /** Farthest-first traversal (Gonzalez 1985 k-center seeding, public) —
-    * the deterministic coverage-maximizing pivot picker an IVF/routing
-    * index seeds from: start at the lowest vec_id, then k−1 times pick the
-    * point whose min squared distance to the chosen set is LARGEST (ties
-    * to the lower id). Classic 2-approximation to k-center; unlike
-    * kmeans++ it needs no randomness, so both engines replay it exactly.
-    *
-    * Exactness: vectors milli-floored to integer once (the
-    * [[powerIteration]] discipline), every distance an exact Long.
-    *
-    * 100 TB shape: k−1 rounds, each ONE full codegen'd scan (the ≤ k pivot
-    * vectors ride the plan as literals — no join, no shuffle) + a top-1
-    * reduce; the only driver traffic is one row per round. The scan count
-    * is the algorithm's sequential nature, not a plan artifact.
-    *
-    * @return (pick_no, vec_id, d2) — d2 the selection-time min distance
-    *         (0 for the seed)
-    */
-  def farthestFirst(emb: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val q = emb.select(col("vec_id").cast("long"),
-        expr("transform(embedding, " +
-          "x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0) AS BIGINT))").as("eq"))
-      .localCheckpoint(false)
-    val first = q.orderBy("vec_id").limit(1)
-      .as[(Long, Seq[Long])].collect()(0)
-    val picks =
-      scala.collection.mutable.ArrayBuffer[(Long, Long, Long)](
-        (0L, first._1, 0L))
-    val pivotVecs = scala.collection.mutable.ArrayBuffer[Seq[Long]](first._2)
-    var round = 1
-    while (round < k) {
-      val dcols = pivotVecs.toSeq.map { pv =>
-        aggregate(
-          zip_with(col("eq"), array(pv.map(lit): _*),
-            (a, b) => (a - b) * (a - b)),
-          lit(0L), (acc, x) => acc + x)
-      }
-      val mind = if (dcols.size == 1) dcols.head else least(dcols: _*)
-      val next = q.withColumn("d2", mind)
-        .orderBy(col("d2").desc, col("vec_id")).limit(1)
-        .select("vec_id", "d2", "eq")
-        .as[(Long, Long, Seq[Long])].collect()(0)
-      picks += ((round.toLong, next._1, next._2))
-      pivotVecs += next._3
-      round += 1
-    }
-    picks.toSeq.toDF("pick_no", "vec_id", "d2")
-  }
-
-  /** Greedy facility-location / max-coverage selection (the 1−1/e
-    * approximation of Nemhauser–Wolsey–Fisher 1978, public): k rounds,
-    * each picking the candidate covering the most not-yet-covered corpus
-    * vectors within squared distance `r2` (ties to the smallest id) —
-    * the coreset/data-selection primitive that picks representative
-    * training vectors instead of random samples.
-    *
-    * 100 TB shape: the coverage edge list is built ONCE — corpus ⋈
-    * broadcast candidate pool, [[graft.functions.vectors.vec_dist2]]
-    * codegen'd, filtered to the r2 ball so only near pairs materialize;
-    * each round is then one anti-join + one count per candidate + a
-    * single-row collect (k driver rows total, never the corpus).
-    *
-    * @return (round, center_id, gain, covered_total)
-    */
-  def facilityGreedy(emb: DataFrame, candModulo: Int, r2: Double,
-                     k: Int): DataFrame = {
-    require(candModulo >= 1 && k >= 1, "need candModulo >= 1 and k >= 1")
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val e = emb.selectExpr("vec_id", "cast(embedding as array<double>) AS v")
-    val cands = e.filter(col("vec_id") % candModulo === 0)
-      .select(col("vec_id").as("cid"), col("v").as("cv"))
-    val edges = e.crossJoin(broadcast(cands))
-      .filter(vec_dist2(col("v"), col("cv")) <= lit(r2))
-      .select(col("cid"), col("vec_id").as("pid"))
-      .localCheckpoint(false)
-    var covered = Seq.empty[Long].toDF("pid").localCheckpoint(false)
-    var chosen = Seq.empty[Long]
-    val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
-    var total = 0L
-    for (round <- 1 to k) {
-      val base = if (chosen.isEmpty) edges
-        else edges.filter(!col("cid").isin(chosen: _*))
-      val best = base.join(covered, Seq("pid"), "left_anti")
-        .groupBy("cid").agg(count(lit(1)).as("gain"))
-        .orderBy(col("gain").desc, col("cid").asc).limit(1)
-        .as[(Long, Long)].collect()
-      if (best.nonEmpty) {
-        val (cid, g) = best(0)
-        total += g
-        picks += ((round.toLong, cid, g, total))
-        chosen :+= cid
-        covered = covered
-          .unionAll(edges.filter(col("cid") === cid).select("pid"))
-          .distinct().localCheckpoint(false)
-      }
-    }
-    picks.toSeq.toDF("round", "center_id", "gain", "covered_total")
-  }
 }

@@ -5,162 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Link-analysis operators over edge tables — the graph layer of the
   * curation stack (site/domain authority weighting next to the
-  * connected-components dedup in [[TextDedup]]; cf. the label-propagation
-  * and pointer-doubling shapes in [[FlowGraph]]).
+  * connected-components dedup in [[TextDedup]]).
   */
 object Graph {
-
-  /** Fixed-round integer-exact PageRank. Ranks live in micro-units
-    * (r₀ = 1 000 000 per node); each round is
-    *
-    * {{{ r'(v) = 150_000 + (850_000 · Σ_{u→v} (r(u) div outdeg(u))) div 1_000_000 }}}
-    *
-    * i.e. damping 0.85 in exact rational arithmetic — every operation is an
-    * integer floor-division or an order-independent Long sum, so the ranks
-    * after any number of rounds are bit-reproducible in any engine (the
-    * oracle unrolls the same rounds as CTEs). Dangling nodes (outdeg 0)
-    * keep their teleport share and leak their damped mass, the classic
-    * "dangling mass dropped" variant — documented, not redistributed, so
-    * the oracle stays a pure per-round GROUP BY.
-    *
-    * Scale shape: the edge list never moves — each round is one broadcast-
-    * or shuffle-join of the (node, rank) table (|V| rows) to the edges plus
-    * one aggregation keyed by dst, i.e. 2 key-bounded shuffles × rounds,
-    * the same discipline as [[Embeddings.powerIteration]]'s matvec. Rank
-    * lineage is cut per round (localCheckpoint on |V|-row state).
-    * Integer headroom: total mass ≈ |V|·1.15·10⁶ ⇒ the 850 000× product
-    * stays < 2⁶³ to |V| ≈ 10⁷ nodes; at larger |V| drop one decimal of
-    * rank precision (the plan is unchanged). All divisions are SQL `DIV`
-    * (exact integer, positive operands), never double division.
-    *
-    * Multi-edges count multiplicity (u→v twice contributes twice); callers
-    * wanting simple-graph semantics dedupe `edges` first.
-    *
-    * @param edges (src, dst) Long node ids
-    * @param rounds fixed iteration count (deterministic plans beat
-    *               convergence probes for oracle-checked pipelines)
-    * @return (node, rank) after `rounds` rounds, micro-units
-    */
-  /** MAXIMAL MATCHING by mutual-min handshakes — the parallel greedy
-    * matching of Israeli–Itai shape (public): each unmatched node proposes
-    * its min-hash incident edge; an edge whose BOTH endpoints proposed it
-    * is matched; matched nodes drop out; repeat. Each round is two
-    * node-keyed aggregations + one equi-join — no sequential edge scan —
-    * and expected-O(log n) rounds maximalize the matching; the fixed
-    * `rounds` keeps the plan deterministic for the oracle. The matching
-    * primitive of record-linkage ("pair every candidate at most once").
-    *
-    * @param edges undirected (a, b) with a < b
-    * @return (a, b, round) — matched pairs and the round that sealed them
-    */
-  def handshakeMatching(edges: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    var live = edges.select(col("a").cast("long"), col("b").cast("long"))
-      .filter(col("a") < col("b")).distinct()
-      .withColumn("h", expr("(a * 7919 + b * 104729) % 999983"))
-      .localCheckpoint(false)
-    var matched = Seq.empty[(Long, Long, Int)].toDF("a", "b", "round")
-    for (r <- 1 to rounds) {
-      import org.apache.spark.sql.expressions.Window
-      val wa = Window.partitionBy("a").orderBy(col("h"), col("b"))
-      val wb = Window.partitionBy("b").orderBy(col("h"), col("a"))
-      val pick = live
-        .withColumn("ra", row_number().over(wa))
-        .withColumn("rb", row_number().over(wb))
-        .filter(col("ra") === 1 && col("rb") === 1) // mutual-min handshake
-        .select(col("a"), col("b"), lit(r).as("round"))
-        .localCheckpoint(false)
-      matched = matched.unionAll(pick)
-      val taken = pick.select(col("a").as("n")).unionAll(
-        pick.select(col("b").as("n"))).distinct()
-      live = live
-        .join(taken.withColumnRenamed("n", "a"), Seq("a"), "left_anti")
-        .join(taken.withColumnRenamed("n", "b"), Seq("b"), "left_anti")
-        .localCheckpoint(false)
-    }
-    matched
-  }
-
-  /** Deterministic "random" walks — the node2vec/DeepWalk corpus generator
-    * made oracle-checkable: from every seed, `steps` hops where the next
-    * hop is the out-neighbour minimizing the hash
-    * `(cur·1009 + step·131 + nbr·7919) mod 104729` (ties by neighbour id;
-    * a dead end stops the walk). Swapping the hash for a real PRNG gives
-    * classic uniform walks with the identical plan; determinism is what
-    * lets a second engine replay the corpus bit-for-bit.
-    *
-    * Scale shape: each hop is ONE frontier-to-edges equi-join keyed by the
-    * current node plus a per-walk top-1 window — walks·steps rows of
-    * state, never materializing neighbourhoods.
-    *
-    * @return (seed, step, node) — step 0 is the seed itself
-    */
-  def deterministicWalks(edges: DataFrame, seeds: DataFrame,
-                         steps: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(steps >= 1, s"steps must be >= 1: $steps")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .distinct().localCheckpoint(false)
-    var frontier = seeds.select(col("seed").cast("long"))
-      .distinct()
-      .select(col("seed"), lit(0).as("step"), col("seed").as("node"))
-      .localCheckpoint(false)
-    var out = frontier
-    for (k <- 1 to steps) {
-      val w = Window.partitionBy("seed").orderBy(col("h"), col("dst"))
-      frontier = frontier
-        .join(e, col("node") === col("src"))
-        .withColumn("h",
-          expr(s"(node * 1009 + $k * 131 + dst * 7919) % 104729"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("seed"), lit(k).as("step"), col("dst").as("node"))
-        .localCheckpoint(false)
-      out = out.unionAll(frontier)
-    }
-    out
-  }
-
-  /** Personalized PageRank ([[pagerank]] with the teleport vector
-    * concentrated on `seeds` — "importance as seen FROM these nodes", the
-    * related-items / local-community primitive): seeds start with the full
-    * 10⁶ mass and receive the 15% teleport share every round; every other
-    * node's rank is pure damped inflow. Same exact-integer recurrence,
-    * same 2-shuffles-per-round scale shape as [[pagerank]]; the seed test
-    * is a broadcast literal IN (codegen'd, no join).
-    *
-    * @return (node, ppr) after `rounds` rounds, micro-units
-    */
-  def personalizedPagerank(edges: DataFrame, seeds: Seq[Long],
-                           rounds: Int): DataFrame = {
-    require(rounds > 0 && seeds.nonEmpty, s"bad args: $rounds, $seeds")
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(false)
-    val outdeg = e.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-    def teleport = when(col("node").isin(seeds: _*), lit(150000L))
-      .otherwise(lit(0L))
-    var rank = nodes.select(col("node"),
-      when(col("node").isin(seeds: _*), lit(1000000L)).otherwise(lit(0L))
-        .as("rank"))
-    for (_ <- 1 to rounds) {
-      val contrib = rank.join(outdeg, "node")
-        .select(col("node"), expr("rank DIV outdeg").as("c"))
-        .join(e, col("node") === col("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(sum(col("c")).as("inflow"))
-      rank = nodes.join(contrib, Seq("node"), "left")
-        .withColumn("inflow", coalesce(col("inflow"), lit(0L)))
-        .select(col("node"),
-          (teleport + expr("(850000 * inflow) DIV 1000000")).as("rank"))
-        .localCheckpoint(false)
-    }
-    rank
-  }
 
   def pagerank(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds > 0, s"rounds must be positive: $rounds")
@@ -250,56 +97,6 @@ object Graph {
     dist
   }
 
-  /** Multi-source harmonic closeness centrality — "how near is everything
-    * to this hub" for a SAMPLED source set, the scalable stand-in for
-    * all-pairs closeness (exact closeness is Θ(|V|·BFS); every production
-    * deployment samples sources, e.g. Eppstein–Wang). Per source the exact
-    * hop-truncated BFS sweep yields
-    *
-    *   - `n_reach`      nodes reached within `rounds` hops (source excluded),
-    *   - `hop_sum`      Σ dist(s, v) — classic farness,
-    *   - `harmonic_q`   Σ (1_000_000 div dist) — harmonic closeness in
-    *                    exact floored micro-units (each reciprocal floors
-    *                    independently, so the sum is order-independent and
-    *                    bit-reproducible; unreached nodes contribute 0,
-    *                    the standard harmonic treatment of disconnection).
-    *
-    * Scale shape per round: the frontier table (≤ |sources|·|V| rows, keyed
-    * by (src0, node)) joins edges on the node side and re-minimises — two
-    * key-bounded shuffles per hop, identical discipline to [[sssp]] but
-    * batched over ALL sources in one plan (the k BFS sweeps share every
-    * scan and shuffle rather than running k sequential jobs). Never
-    * all-pairs; lineage cut per round on the |sources|·|V| state.
-    *
-    * @param edges   (src, dst) directed edges (pass both directions for
-    *                undirected semantics)
-    * @param sources sampled source node ids
-    * @param rounds  BFS horizon (exact within `rounds` hops)
-    * @return (src0, n_reach, hop_sum, harmonic_q) one row per source
-    */
-  def closeness(edges: DataFrame, sources: Seq[Long], rounds: Int): DataFrame = {
-    require(rounds > 0, s"rounds must be positive: $rounds")
-    require(sources.nonEmpty, "sources must be non-empty")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-    var dist = sources.map(s => (s, s, 0L)).toDF("src0", "node", "dist")
-      .localCheckpoint(false)
-    for (_ <- 1 to rounds) {
-      val relaxed = dist.join(e, col("node") === col("src"))
-        .select(col("src0"), col("dst").as("node"),
-          (col("dist") + lit(1L)).as("dist"))
-      dist = dist.unionAll(relaxed)
-        .groupBy("src0", "node").agg(min("dist").as("dist"))
-        .localCheckpoint(false)
-    }
-    dist.filter(col("dist") > 0)
-      .groupBy("src0")
-      .agg(count(lit(1)).as("n_reach"),
-        sum("dist").as("hop_sum"),
-        sum(expr("1000000L div dist")).as("harmonic_q"))
-  }
-
   /** Common-neighbor link prediction: for every NON-adjacent pair (a, b)
     * that shares at least one neighbor, count the shared neighbors and keep
     * the global top-k — the classic "people you may know" / co-citation
@@ -338,48 +135,6 @@ object Graph {
     counts.join(e,
         counts("a") === e("lo") && counts("b") === e("hi"), "left_anti")
       .orderBy(col("cn").desc, col("a"), col("b"))
-      .limit(topK)
-  }
-
-  /** Resource-allocation link prediction — [[commonNeighbors]] with the
-    * midpoint DISCOUNTED by its degree: RA(a,b) = Σ_{u ∈ CN(a,b)} 1/deg(u)
-    * (Zhou–Lü–Zhang 2009, public; the top performer of the classic local
-    * similarity indices because a 10⁶-degree hub certifies nothing while a
-    * degree-2 midpoint certifies a lot — plain common-neighbor counts can't
-    * tell them apart). Each midpoint contributes the EXACT integer
-    * `floor(10⁶ / deg(u))` ppm, so the score, ordering and oracle replay
-    * are all bit-exact — no float accumulation order anywhere.
-    *
-    * Plan shape: identical to [[commonNeighbors]] (canonical dedup, one
-    * wedge self-join on the midpoint, pair-keyed agg, anti-join vs the edge
-    * set) plus one node-keyed degree join BEFORE the wedge fan-out — the
-    * contribution rides the wedge row, so no per-pair rejoin. Same
-    * Σ deg·(deg−1)/2 wedge bound; hub-degree capping applies unchanged.
-    *
-    * @param edges (src, dst) directed or undirected; self-loops dropped
-    * @param topK  suggestions to keep globally
-    * @return (a, b, cn, ra_ppm) top-k non-adjacent pairs by RA score
-    */
-  def resourceAllocation(edges: DataFrame, topK: Int): DataFrame = {
-    require(topK > 0, s"topK must be positive: $topK")
-    val e = edges
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(false)
-    val adj = e.select(col("lo").as("u"), col("hi").as("v"))
-      .union(e.select(col("hi").as("u"), col("lo").as("v")))
-    val deg = adj.groupBy("u").agg(count(lit(1)).as("deg"))
-    val adjD = adj.join(deg, "u")
-      .select(col("u"), col("v"), expr("1000000L div deg").as("contrib"))
-    val wedges = adjD.as("l").join(adjD.as("r"),
-        col("l.u") === col("r.u") && col("l.v") < col("r.v"))
-      .select(col("l.v").as("a"), col("r.v").as("b"), col("l.contrib"))
-    val scores = wedges.groupBy("a", "b")
-      .agg(count(lit(1)).as("cn"), sum("contrib").as("ra_ppm"))
-    scores.join(e,
-        scores("a") === e("lo") && scores("b") === e("hi"), "left_anti")
-      .orderBy(col("ra_ppm").desc, col("a"), col("b"))
       .limit(topK)
   }
 
@@ -468,66 +223,6 @@ object Graph {
       .select(col("m"), col("sx"), col("sxy"), col("sxx"),
         (col("m") * col("sxy") - col("sx") * col("sx")).as("num"),
         (col("m") * col("sxx") - col("sx") * col("sx")).as("den"))
-  }
-
-  /** Newman modularity of a GIVEN node partition, per community, in exact
-    * integer arithmetic — the community-quality score that decides whether
-    * a clustering (CC dedup labels, hex-cell buckets, a label-propagation
-    * output) actually concentrates edges:
-    *
-    * {{{ Q = Σ_c [ in_c/m − (d_c/(2m))² ] = Σ_c (4·m·in_c − d_c²) / (4m²) }}}
-    *
-    * Emits one row per community with the exact integer pieces —
-    * `(comm, n_nodes, in_edges, deg_sum, qnum = 4·m·in_c − d_c²)` plus the
-    * shared `m` — so per-community and total Q are each one float division
-    * away and the whole table is bit-reproducible. Edges are canonicalized
-    * undirected-simple (self-loops and duplicates dropped, same convention
-    * as [[degreeMix]]); nodes missing from `communities` are dropped with
-    * their incident edges (document the partition as total to avoid it).
-    *
-    * Plan shape: the edge list is the only big table and it shuffles
-    * exactly twice — once keyed by each endpoint to attach the (|V|-row,
-    * broadcastable) community map — then aggregates by community with
-    * map-side combine; degrees ride the same doubled-edge aggregation as
-    * [[degreeMix]]. No driver state, no iteration.
-    *
-    * Integer headroom: qnum ≤ 4·m·in_c ≤ 4m² — int64-safe to m ≈ 1.5·10⁹
-    * edges per partition-evaluation; beyond that shift to DECIMAL(38,0)
-    * with the identical plan.
-    *
-    * @param edges       (src, dst) Long node ids
-    * @param communities (node, comm) total map of nodes to Long labels
-    * @return (comm, n_nodes, in_edges, deg_sum, m, qnum), one row per
-    *         community with ≥ 1 incident edge endpoint (all-isolated
-    *         communities contribute exactly 0 to Q and emit no row);
-    *         n_nodes counts the community's non-isolated nodes
-    */
-  def modularity(edges: DataFrame, communities: DataFrame): DataFrame = {
-    val e = edges
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(false)
-    val comm = communities.select(col("node"), col("comm"))
-    val mdf = e.agg(count(lit(1)).as("m"))
-    val sym = e.select(col("lo").as("node")).union(e.select(col("hi").as("node")))
-    val degByComm = sym.join(comm, "node")
-      .groupBy("comm")
-      .agg(count(lit(1)).as("deg_sum"),
-        countDistinct(col("node")).as("n_nodes"))
-    val inEdges = e
-      .join(comm.select(col("node").as("lo"), col("comm").as("cl")), "lo")
-      .join(comm.select(col("node").as("hi"), col("comm").as("ch")), "hi")
-      .filter(col("cl") === col("ch"))
-      .groupBy(col("cl").as("comm")).agg(count(lit(1)).as("in_edges"))
-    degByComm
-      .join(inEdges, Seq("comm"), "left_outer")
-      .withColumn("in_edges", coalesce(col("in_edges"), lit(0L)))
-      .crossJoin(broadcast(mdf))
-      .select(col("comm"), col("n_nodes"), col("in_edges"),
-        col("deg_sum"), col("m"),
-        (lit(4L) * col("m") * col("in_edges") -
-          col("deg_sum") * col("deg_sum")).as("qnum"))
   }
 
   /** Per-node clustering coefficient pieces in exact integers — the local
@@ -685,36 +380,6 @@ object Graph {
     auth.join(hub, Seq("node"))
   }
 
-  /** Two-hop reach census — per node the DIRECT degree and the count of
-    * nodes at graph distance EXACTLY 2 (friend-of-friend audience): the
-    * wedge join fans each node to its neighbors' neighbors, self and
-    * direct neighbors are removed by one filter + one key anti-join, and
-    * everything stays key-bounded by degree (the join never materializes
-    * more than Σ deg(v)² wedge rows — the same bound the triangle and
-    * clustering-coefficient ops already live with). The audience-size /
-    * influence-radius primitive of social and link-graph analytics.
-    */
-  def twoHop(edges: DataFrame): DataFrame = {
-    val e = edges
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(false)
-    val sym = e.select(col("lo").as("u"), col("hi").as("v"))
-      .union(e.select(col("hi").as("u"), col("lo").as("v")))
-      .localCheckpoint(false)
-    val direct = sym.groupBy("u").agg(count(lit(1)).as("n_direct"))
-    val hops = sym.select(col("u"), col("v").as("m"))
-      .join(sym.select(col("u").as("m"), col("v").as("w")), "m")
-      .filter(col("u") =!= col("w"))
-      .select("u", "w").distinct()
-      .join(sym.select(col("u"), col("v").as("w")), Seq("u", "w"), "left_anti")
-      .groupBy("u").agg(count(lit(1)).as("n_twohop"))
-    direct.join(hops, Seq("u"), "left")
-      .select(col("u").as("node"), col("n_direct"),
-        coalesce(col("n_twohop"), lit(0L)).as("n_twohop"))
-  }
-
   /** Synchronous label-propagation communities (Raghavan–Albert–Kumara,
     * public): every node adopts the MOST FREQUENT label among its
     * neighbors each round, ties to the smallest label — so the fixed
@@ -784,667 +449,4 @@ object Graph {
       .withColumn("n_mutual_pairs", expr("n_recip DIV 2"))
   }
 
-  /** Depth-bounded bill-of-materials rollup — the recursive-CTE transitive
-    * closure Spark SQL lacks, unrolled as `maxDepth` keyed joins. Over a
-    * DAG of (parent, child, qty) component edges, every parent accumulates
-    * each descendant along EVERY distinct path with the path's quantity
-    * product (standard BOM extended-quantity semantics: a part used twice
-    * via two subassemblies counts twice), down to `maxDepth` levels.
-    *
-    * Per root the rollup emits the distinct-reachable count, the exact
-    * Σ path-quantity-product, and the deepest level reached — the
-    * where-used / cost-explosion primitive of manufacturing and dependency
-    * analytics (package trees, data-lineage fan-out) that a DuckDB
-    * `WITH RECURSIVE` replays level by level.
-    *
-    * Scale shape: level k is ONE equi-join of the level-(k−1) frontier to
-    * the edge table on the expansion node — key-bounded shuffles, the edge
-    * list re-partitions once and the frontier is the only moving state;
-    * lineage is cut per level. Path counts (and thus frontier size) can
-    * grow multiplicatively with depth on dense DAGs — that is the
-    * semantics, and `maxDepth` is the documented governor (≤ deg^depth
-    * paths per root). Quantities are integers; Σ products stays exact in
-    * Long for qty ≤ 10³ and depth ≤ 4 on graphs to ~10⁹ paths/root.
-    *
-    * @param edges (parent, child, qty) Long columns; acyclicity is the
-    *              caller's contract (e.g. parent < child ids)
-    * @param maxDepth levels to explode (≥ 1)
-    * @return (root, n_reach, ext_qty, max_depth) per root that has at
-    *         least one child
-    */
-  def bomRollup(edges: DataFrame, maxDepth: Int): DataFrame = {
-    require(maxDepth >= 1 && maxDepth <= 8, s"maxDepth in 1..8: $maxDepth")
-    val e = edges.select(col("parent"), col("child"), col("qty"))
-      .filter(col("parent") =!= col("child")).distinct()
-      .localCheckpoint(false)
-    var frontier = e.select(col("parent").as("root"),
-      col("child").as("node"), col("qty").as("q"), lit(1).as("depth"))
-    var all = frontier
-    for (d <- 2 to maxDepth) {
-      frontier = frontier
-        .join(e.withColumnRenamed("parent", "node"), "node")
-        .select(col("root"), col("child").as("node"),
-          (col("q") * col("qty")).as("q"), lit(d).as("depth"))
-        .localCheckpoint(false)
-      all = all.unionAll(frontier)
-    }
-    all.groupBy("root")
-      .agg(countDistinct("node").as("n_reach"),
-        sum("q").as("ext_qty"),
-        max("depth").cast("bigint").as("max_depth"))
-  }
-
-  /** Per-component bipartiteness by the doubled-graph reduction: every
-    * edge (u, v) becomes (2u, 2v+1) and (2u+1, 2v); the original component
-    * of v contains an odd cycle iff 2v and 2v+1 land in the SAME doubled
-    * component (walking an odd cycle flips parity back onto yourself).
-    * Both component maps reuse [[TextDedup.connectedComponents]] — the
-    * same O(diameter)-round min-label propagation the dedup endgame runs,
-    * so scale behavior is inherited, not re-derived. The verdict gates
-    * 2-coloring (conflict-free user/item splits, signed-graph balance,
-    * crawl frontier layering) before anything downstream assumes it.
-    *
-    * @param edges (src, dst) undirected pairs
-    * @return (comp, n_nodes, is_bipartite) — comp = min node id of the
-    *         original component
-    */
-  def bipartite(edges: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val e = edges.select(col("src").as("doc_a"), col("dst").as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b")).distinct()
-      .localCheckpoint(false)
-    val nodes = e.select(col("doc_a").as("doc_id"))
-      .unionAll(e.select(col("doc_b").as("doc_id"))).distinct()
-      .localCheckpoint(false)
-    val ucomp = TextDedup.connectedComponents(e, nodes, maxRounds)
-    val doubled = e.select((col("doc_a") * 2).as("doc_a"),
-        (col("doc_b") * 2 + 1).as("doc_b"))
-      .unionAll(e.select((col("doc_a") * 2 + 1).as("doc_a"),
-        (col("doc_b") * 2).as("doc_b")))
-    val dnodes = nodes.select((col("doc_id") * 2).as("doc_id"))
-      .unionAll(nodes.select((col("doc_id") * 2 + 1).as("doc_id")))
-    val dcomp = TextDedup.connectedComponentsStar(doubled, dnodes)
-    val conflict = dcomp
-      .select(expr("doc_id div 2").as("doc_id"), col("comp"))
-      .groupBy("doc_id")
-      .agg((countDistinct("comp") === 1).as("odd"))
-    ucomp.join(conflict, Seq("doc_id"))
-      .groupBy("comp")
-      .agg(count(lit(1)).as("n_nodes"),
-        (max(col("odd").cast("int")) === 0).as("is_bipartite"))
-  }
-
-  /** Longest-path level per node in a DAG — the critical-path depth a
-    * build/ETL scheduler reads (level k ⇒ the task can start no earlier
-    * than wave k; max level = the critical path length that bounds
-    * wall-clock under infinite parallelism). Computed by Bellman-style
-    * MAX-relaxation: d_k(v) = max(d_{k-1}(v), max over edges (u,v) of
-    * d_{k-1}(u) + 1), d_0 ≡ 0 — after `rounds` ≥ the longest chain the
-    * fixpoint is exact (sources stay 0). Cycles are the caller's contract
-    * (a cycle would keep relaxing; `rounds` bounds the damage rather than
-    * hanging).
-    *
-    * 100 TB shape: each round is ONE edges⋈levels equi-join + a key-bounded
-    * max-agg + a left-join — all shuffles keyed on node ids, state is one
-    * Long per node, rounds = graph depth (layered DAGs: O(10¹)). No driver
-    * walk, no frontier collect.
-    *
-    * @param edges (src, dst) directed; self-loops dropped
-    * @param rounds ≥ longest chain length for an exact answer
-    * @return (node, lvl)
-    */
-  /** 4-cycle (rectangle) census of an undirected simple graph — the
-    * bot-farm / coordinated-engagement signature (organic interaction
-    * graphs are 4-cycle-sparse; scripted follow-back rings are
-    * 4-cycle-dense). Counted by the diagonal-pair identity: for every
-    * unordered node pair, its co-neighbourhood size n gives C(n,2)
-    * diagonal choices, and every 4-cycle is counted once per diagonal —
-    * exactly twice — so `squares = Σ C(n,2) / 2` (always even, the
-    * division is exact).
-    *
-    * 100 TB shape: ONE wedge self-join keyed on the mid node + one
-    * key-bounded co-count agg — the Σd(m)² wedge cost every triangle/
-    * rectangle counter pays; at scale the standard mitigations (degree
-    * ordering, hot-mid salting) slot into the same plan. No driver walk.
-    *
-    * @param edges undirected (src, dst); self-loops dropped, both
-    *              orientations derived internally
-    * @return ONE row: (n_edges, max_copairs, n_diag_pairs, n_squares)
-    */
-  def squares(edges: DataFrame): DataFrame = {
-    val und = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-    val dir = und.select(col("a").as("u"), col("b").as("m"))
-      .unionAll(und.select(col("b").as("u"), col("a").as("m")))
-    val co = dir.as("l").join(dir.as("r"), col("l.m") === col("r.m"))
-      .filter(col("l.u") < col("r.u"))
-      .groupBy(col("l.u").as("x"), col("r.u").as("y"))
-      .agg(count(lit(1)).as("n"))
-    co.select(expr("n * (n - 1) div 2 AS cp"), col("n"))
-      .agg(sum("cp").as("n_diag_pairs"), max("n").as("max_copairs"))
-      .crossJoin(und.agg(count(lit(1)).as("n_edges")))
-      .select(col("n_edges"), col("max_copairs"), col("n_diag_pairs"),
-        expr("n_diag_pairs div 2 AS n_squares"))
-  }
-
-  def longestPathLevels(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(false)
-    val nodes = e.select(col("src").as("node"))
-      .unionAll(e.select(col("dst").as("node"))).distinct()
-    var lvl = nodes.withColumn("lvl", lit(0L)).localCheckpoint(false)
-    for (_ <- 1 to rounds) {
-      val cand = e.join(lvl.select(col("node").as("src"), col("lvl")), Seq("src"))
-        .groupBy(col("dst").as("node"))
-        .agg(max(col("lvl") + lit(1L)).as("clvl"))
-      lvl = lvl.join(cand, Seq("node"), "left")
-        .select(col("node"),
-          greatest(col("lvl"), coalesce(col("clvl"), lit(0L))).as("lvl"))
-        .localCheckpoint(false)
-    }
-    lvl
-  }
-
-  /** Edge betweenness on the same sampled truncated-radius Brandes pass:
-    * the per-term dependency `(σ_v · (10⁶ + δppm_w)) div σ_w` IS the flow
-    * over edge (v, w), so summing terms per (canonical) edge across
-    * sources and levels yields the bridge-edge ranking — which single
-    * links carry the shortest-path mass ([[betweennessSampled]] exposes
-    * the node view of the identical recurrence).
-    *
-    * @return (a, b, ebc_ppm) canonical a < b, only edges that carry flow
-    */
-  def edgeBetweennessSampled(edges: DataFrame, sources: Seq[Long],
-                             rounds: Int): DataFrame = {
-    require(sources.nonEmpty && rounds >= 1, "need sources and rounds >= 1")
-    val spark = edges.sparkSession
-    val e = edges
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(false)
-    val sym = e.select(col("hi").as("u"), col("lo").as("v"))
-      .unionAll(e.select(col("lo").as("u"), col("hi").as("v")))
-      .localCheckpoint(false)
-    import spark.implicits._
-    var st = sources.map(s => (s, s, 0, 1L))
-      .toDF("src", "node", "dist", "sigma")
-      .localCheckpoint(false)
-    for (k <- 1 to rounds) {
-      val cand = st.filter(col("dist") === k - 1)
-        .join(sym.select(col("u").as("node"), col("v")), Seq("node"))
-        .groupBy(col("src"), col("v").as("node"))
-        .agg(sum("sigma").as("sigma"))
-        .join(st.select("src", "node"), Seq("src", "node"), "left_anti")
-        .withColumn("dist", lit(k))
-        .select("src", "node", "dist", "sigma")
-      st = st.unionByName(cand).localCheckpoint(false)
-    }
-    var delta = st.filter(col("dist") === rounds)
-      .select(col("src"), col("node"), lit(0L).as("dppm"))
-      .localCheckpoint(false)
-    var edgeTerms = spark.emptyDataset[(Long, Long, Long)]
-      .toDF("vn", "wn", "term")
-    for (k <- (rounds - 1) to 0 by -1) {
-      val vs = st.filter(col("dist") === k)
-        .select(col("src"), col("node").as("vn"), col("sigma").as("sv"))
-      val ws = st.filter(col("dist") === k + 1)
-        .select(col("src"), col("node").as("wn"), col("sigma").as("sw"))
-        .join(delta.select(col("src"), col("node").as("wn"),
-          col("dppm").as("dw")), Seq("src", "wn"), "left")
-        .withColumn("dw", coalesce(col("dw"), lit(0L)))
-      val terms = vs
-        .join(sym.select(col("u").as("vn"), col("v").as("wn")), Seq("vn"))
-        .join(ws, Seq("src", "wn"))
-        .withColumn("term", expr("sv * (1000000 + dw) DIV sw"))
-        .localCheckpoint(false)
-      edgeTerms = edgeTerms.unionByName(
-        terms.select(col("vn"), col("wn"), col("term")))
-      delta = delta.unionByName(
-        terms.groupBy(col("src"), col("vn").as("node"))
-          .agg(sum("term").as("dppm")))
-        .localCheckpoint(false)
-    }
-    edgeTerms
-      .select(least(col("vn"), col("wn")).as("a"),
-        greatest(col("vn"), col("wn")).as("b"), col("term"))
-      .groupBy("a", "b").agg(sum("term").as("ebc_ppm"))
-  }
-
-  /** BFS wavefront profile from sampled sources: per source the node
-    * count at each hop distance ≤ `rounds` — the reachability/diameter
-    * read (how fast does the graph expand from here?) that sizes
-    * frontier-based algorithms before running them. Same frontier
-    * expansion as [[betweennessSampled]]'s forward phase, without path
-    * counts.
-    *
-    * @return (src, dist, n_nodes)
-    */
-  def bfsProfile(edges: DataFrame, sources: Seq[Long],
-                 rounds: Int): DataFrame = {
-    require(sources.nonEmpty && rounds >= 1, "need sources and rounds >= 1")
-    val spark = edges.sparkSession
-    val e = edges
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(false)
-    val sym = e.select(col("hi").as("u"), col("lo").as("v"))
-      .unionAll(e.select(col("lo").as("u"), col("hi").as("v")))
-      .localCheckpoint(false)
-    import spark.implicits._
-    var st = sources.map(s => (s, s, 0)).toDF("src", "node", "dist")
-      .localCheckpoint(false)
-    for (k <- 1 to rounds) {
-      val cand = st.filter(col("dist") === k - 1)
-        .join(sym.select(col("u").as("node"), col("v")), Seq("node"))
-        .select(col("src"), col("v").as("node")).distinct()
-        .join(st.select("src", "node"), Seq("src", "node"), "left_anti")
-        .withColumn("dist", lit(k))
-      st = st.unionByName(cand).localCheckpoint(false)
-    }
-    st.groupBy("src", "dist").agg(count(lit(1)).as("n_nodes"))
-  }
-
-  /** Sampled truncated-radius betweenness (Brandes 2001's two-phase
-    * algorithm, public, on a source sample with a fixed BFS radius): per
-    * source an unweighted BFS with exact path counts σ, then the backward
-    * dependency accumulation δ(v) = Σ_{w ∈ succ(v)} σ_v/σ_w · (1 + δ(w))
-    * — quantized per TERM as `(σ_v · (10⁶ + δppm_w)) div σ_w`, so both
-    * engines floor identically and everything stays a Long. Nodes beyond
-    * `rounds` hops from a source are outside that source's horizon
-    * (truncated-radius betweenness — the standard k-bounded estimator).
-    *
-    * 100 TB shape: state is one (src, node, dist, σ) row per reached
-    * pair; each forward round is one frontier⋈edges join + key-bounded
-    * sum + anti-join dedup, each backward round one level⋈edges⋈level
-    * join — 2·rounds key-bounded shuffles regardless of graph size, the
-    * [[sssp]]/[[closeness]] discipline with path counts added.
-    *
-    * @return (node, bc_ppm) — Σ over sources of quantized dependency,
-    *         source self-rows excluded; nodes that accumulate no
-    *         dependency and sit on no source horizon are absent
-    */
-  def betweennessSampled(edges: DataFrame, sources: Seq[Long],
-                         rounds: Int): DataFrame = {
-    require(sources.nonEmpty && rounds >= 1, "need sources and rounds >= 1")
-    val spark = edges.sparkSession
-    val e = edges
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(false)
-    val sym = e.select(col("hi").as("u"), col("lo").as("v"))
-      .unionAll(e.select(col("lo").as("u"), col("hi").as("v")))
-      .localCheckpoint(false)
-    import spark.implicits._
-    var st = sources.map(s => (s, s, 0, 1L))
-      .toDF("src", "node", "dist", "sigma")
-      .localCheckpoint(false)
-    for (k <- 1 to rounds) {
-      val cand = st.filter(col("dist") === k - 1)
-        .join(sym.select(col("u").as("node"), col("v")), Seq("node"))
-        .groupBy(col("src"), col("v").as("node"))
-        .agg(sum("sigma").as("sigma"))
-        .join(st.select("src", "node"), Seq("src", "node"), "left_anti")
-        .withColumn("dist", lit(k))
-        .select("src", "node", "dist", "sigma")
-      st = st.unionByName(cand).localCheckpoint(false)
-    }
-    var delta = st.filter(col("dist") === rounds)
-      .select(col("src"), col("node"), lit(0L).as("dppm"))
-      .localCheckpoint(false)
-    for (k <- (rounds - 1) to 0 by -1) {
-      val vs = st.filter(col("dist") === k)
-        .select(col("src"), col("node").as("vn"), col("sigma").as("sv"))
-      val ws = st.filter(col("dist") === k + 1)
-        .select(col("src"), col("node").as("wn"), col("sigma").as("sw"))
-        .join(delta.select(col("src"), col("node").as("wn"),
-          col("dppm").as("dw")), Seq("src", "wn"), "left")
-        .withColumn("dw", coalesce(col("dw"), lit(0L)))
-      val terms = vs
-        .join(sym.select(col("u").as("vn"), col("v").as("wn")), Seq("vn"))
-        .join(ws, Seq("src", "wn"))
-        .withColumn("term", expr("sv * (1000000 + dw) DIV sw"))
-        .groupBy(col("src"), col("vn").as("node"))
-        .agg(sum("term").as("dppm"))
-      delta = delta.unionByName(terms).localCheckpoint(false)
-    }
-    delta.filter(col("node") =!= col("src"))
-      .groupBy("node").agg(sum("dppm").as("bc_ppm"))
-  }
-
-  /** Exact small-motif census in ONE row: edges, wedges (paths of 2
-    * edges), claws (K₁,₃ stars), triangles, and 3-edge paths — the
-    * subgraph-frequency fingerprint (graphlet degree distribution's first
-    * rows) that separates social, web and bot-farm topologies. Everything
-    * but the triangle count is a closed form over the degree sequence
-    * (wedges = ΣC(d,2), claws = ΣC(d,3)); P₃ uses the identity
-    * `p3 = Σ_{(u,v)∈E}(d_u−1)(d_v−1) − 3·triangles` (each triangle's 3
-    * edges each miscount one path).
-    *
-    * 100 TB shape: one degree agg + two node-keyed joins + the same
-    * canonical wedge join [[triangles]] pays — the Σd² bound with the
-    * usual degree-ordering mitigation; the four 1-row aggregates cross-
-    * join at the end.
-    *
-    * @return ONE row (n_edges, wedges, claws, n_triangles, p3_paths)
-    */
-  def motifCensus(edges: DataFrame): DataFrame = {
-    val und = edges.select(col("src"), col("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"))
-      .distinct()
-      .localCheckpoint(false)
-    val sym = und.select(col("a").as("u"))
-      .unionAll(und.select(col("b").as("u")))
-    val deg = sym.groupBy("u").agg(count(lit(1)).as("d"))
-      .localCheckpoint(false)
-    val base = deg.agg(sum(expr("d * (d - 1) div 2")).as("wedges"),
-      sum(expr("d * (d - 1) * (d - 2) div 6")).as("claws"))
-    val ne = und.agg(count(lit(1)).as("n_edges"))
-    val tri = triangles(edges).agg(count(lit(1)).as("n_triangles"))
-    val pe = und
-      .join(deg.select(col("u").as("a"), col("d").as("da")), Seq("a"))
-      .join(deg.select(col("u").as("b"), col("d").as("db")), Seq("b"))
-      .agg(sum(expr("(da - 1) * (db - 1)")).as("pe"))
-    ne.crossJoin(base).crossJoin(tri).crossJoin(pe)
-      .select(col("n_edges"), col("wedges"), col("claws"),
-        col("n_triangles"),
-        expr("pe - 3 * n_triangles").as("p3_paths"))
-  }
-
-  /** Core number per node by h-index iteration (Lü–Chen–Zhou 2016,
-    * public): h₀(v) = deg(v); each round h(v) becomes the h-index of its
-    * neighbors' values — max over desc-sorted ranks r of min(r, value_r).
-    * The sequence is monotone non-increasing and converges to the exact
-    * coreness, which the classic sequential peeling computes — but THIS
-    * form is per-node-local, so it distributes as rounds of (join, rank
-    * window, max-agg), all key-bounded on node ids. `stable` reports
-    * whether the last two rounds agree (the fixpoint certificate); ranks
-    * among tied values permute only equal entries, so min(r, v_r) is
-    * order-independent and both engines replay bit-equal.
-    *
-    * @param rounds fixed round count (oracle unrolls the same); pick ≥ the
-    *               graph's convergence radius and read `stable`
-    * @return (node, coreness, h_prev, stable)
-    */
-  def corenessHIndex(edges: DataFrame, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1: $rounds")
-    val e = edges
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(false)
-    val sym = e.select(col("hi").as("u"), col("lo").as("v"))
-      .unionAll(e.select(col("lo").as("u"), col("hi").as("v")))
-      .localCheckpoint(false)
-    var h = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("h"))
-      .localCheckpoint(false)
-    var prev: DataFrame = h
-    for (_ <- 1 to rounds) {
-      prev = h
-      val nb = sym.join(h.select(col("node").as("v"), col("h").as("hv")),
-        Seq("v"))
-      h = nb.withColumn("rk", row_number().over(
-          org.apache.spark.sql.expressions.Window.partitionBy("u")
-            .orderBy(col("hv").desc, col("v"))).cast("long"))
-        .groupBy(col("u").as("node"))
-        .agg(max(least(col("rk"), col("hv"))).as("h"))
-        .localCheckpoint(false)
-    }
-    h.join(prev.withColumnRenamed("h", "h_prev"), Seq("node"))
-      .select(col("node"), col("h").as("coreness"), col("h_prev"),
-        (col("h") === col("h_prev")).as("stable"))
-  }
-
-  /** Minimum spanning forest by Borůvka rounds — the distributed MST
-    * (Borůvka 1926, public): every round each component picks its
-    * cheapest outgoing edge (all picks are MSF edges by the cut property),
-    * the picked edges contract components via large-star/small-star CC
-    * ([[TextDedup.connectedComponentsStar]]), and components at least
-    * halve — so the loop is ≤ ⌈log₂ |V|⌉ rounds with NO driver walk. With
-    * distinct `wkey`s the forest is unique, which is what makes the oracle
-    * replicable: the cycle property says an edge is in the MSF iff its
-    * heavier endpoint is NOT reachable from the lighter one using strictly
-    * lighter edges — a single recursive reachability the oracle replays.
-    *
-    * 100 TB shape: per round, two node-keyed joins to tag components, one
-    * key-bounded min-agg (the per-component argmin rides a struct min, so
-    * it partial-aggregates map-side), and the O(log n)-round star CC on
-    * the picked-edge graph (|components| rows, shrinking geometrically).
-    * The edge list shuffles only on its endpoints; state is one label per
-    * node, lineage cut per round. Loop control is a bounded `isEmpty`
-    * probe, never a collect.
-    *
-    * @param edges (src, dst, wkey); multi-edges collapse to min wkey,
-    *              self-loops drop. `wkey` must be DISTINCT per canonical
-    *              undirected pair for a unique forest (compose a tiebreak
-    *              into low bits as the callers do).
-    * @param maxRounds components halve per round, so the default covers
-    *                  2⁶⁴ nodes; the guard catches contract violations
-    * @return MSF edges (a, b, wkey), a < b
-    */
-  def boruvkaMsf(edges: DataFrame, maxRounds: Int = 64): DataFrame = {
-    val e = edges
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b"), col("wkey"))
-      .groupBy("a", "b").agg(min("wkey").as("wkey"))
-      .localCheckpoint(false)
-    var comp = e.select(col("a").as("node"))
-      .unionAll(e.select(col("b").as("node"))).distinct()
-      .withColumn("comp", col("node"))
-      .localCheckpoint(false)
-    val picked = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    var rounds = 0
-    var done = e.isEmpty
-    while (!done) {
-      if (rounds >= maxRounds)
-        throw new IllegalStateException(
-          s"boruvkaMsf: no fixpoint after $maxRounds rounds — components " +
-            "halve per round, so this means the wkey-distinctness contract " +
-            "was violated")
-      val cross = e
-        .join(comp.select(col("node").as("a"), col("comp").as("ca")), Seq("a"))
-        .join(comp.select(col("node").as("b"), col("comp").as("cb")), Seq("b"))
-        .filter(col("ca") =!= col("cb"))
-        .localCheckpoint(false)
-      if (cross.isEmpty) done = true
-      else {
-        // cheapest OUTGOING edge per component: argmin rides a struct min
-        // (wkey leads, so distinct wkeys make the pick deterministic)
-        val dir = cross.select(col("ca").as("c"),
-            struct(col("wkey"), col("a"), col("b"),
-              col("ca"), col("cb")).as("e"))
-          .unionAll(cross.select(col("cb").as("c"),
-            struct(col("wkey"), col("a"), col("b"),
-              col("ca"), col("cb")).as("e")))
-        val chosen = dir.groupBy("c").agg(min("e").as("e"))
-          .select(col("e.wkey").as("wkey"), col("e.a").as("a"),
-            col("e.b").as("b"), col("e.ca").as("ca"), col("e.cb").as("cb"))
-          .distinct()
-          .localCheckpoint(false)
-        picked += chosen.select("a", "b", "wkey")
-        // contract: components of the picked-edge graph fold to one label
-        val cnodes = chosen.select(col("ca").as("doc_id"))
-          .unionAll(chosen.select(col("cb").as("doc_id"))).distinct()
-        val cc = TextDedup.connectedComponentsStar(
-          chosen.select(col("ca").as("doc_a"), col("cb").as("doc_b")), cnodes)
-        comp = comp.join(
-            cc.select(col("doc_id").as("comp"), col("comp").as("newcomp")),
-            Seq("comp"), "left")
-          .select(col("node"),
-            coalesce(col("newcomp"), col("comp")).as("comp"))
-          .localCheckpoint(false)
-        rounds += 1
-      }
-    }
-    if (picked.isEmpty) e.select("a", "b", "wkey").limit(0)
-    else picked.reduce(_ unionAll _)
-  }
-
-  /** Directed-reachability bowtie decomposition (the web macro-structure of
-    * Broder et al. 2000, public): forward set F and backward set B from a
-    * pivot by count-gated fixpoint frontier expansion over the directed
-    * edge list; SCC(pivot) = F∩B, IN = B∖SCC, OUT = F∖SCC, `disc` =
-    * nodes in neither.
-    *
-    * 100 TB shape: each round is one frontier⋈edges equi-join + one
-    * node-keyed anti-join dedup; total rounds = the pivot's directed
-    * eccentricity, state one row per reached node — the [[bfsProfile]]
-    * discipline with the fixpoint gate [[TextDedup]]'s clustering uses
-    * (a cheap `count()` on the shrinking frontier, never a collect).
-    *
-    * @return (component, n_nodes), components `in|out|scc|disc`
-    */
-  def bowtie(edges: DataFrame, pivot: Long): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges.select(col("src").cast("long").as("src"),
-        col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst")).distinct()
-      .localCheckpoint(false)
-    def reach(adj: DataFrame): DataFrame = {
-      var seen = Seq(pivot).toDF("node").localCheckpoint(false)
-      var frontier = seen
-      var done = false
-      while (!done) {
-        val next = frontier
-          .join(adj.select(col("u").as("node"), col("v")), Seq("node"))
-          .select(col("v").as("node")).distinct()
-          .join(seen, Seq("node"), "left_anti")
-          .localCheckpoint(false)
-        if (next.count() == 0) done = true
-        else { seen = seen.unionAll(next).localCheckpoint(false); frontier = next }
-      }
-      seen
-    }
-    val fwd = reach(e.select(col("src").as("u"), col("dst").as("v")))
-    val bwd = reach(e.select(col("dst").as("u"), col("src").as("v")))
-    e.select(col("src").as("node")).unionAll(e.select(col("dst").as("node")))
-      .distinct()
-      .join(fwd.withColumn("f", lit(1)), Seq("node"), "left")
-      .join(bwd.withColumn("b", lit(1)), Seq("node"), "left")
-      .withColumn("component",
-        when(col("f").isNotNull && col("b").isNotNull, "scc")
-          .when(col("b").isNotNull, "in")
-          .when(col("f").isNotNull, "out")
-          .otherwise("disc"))
-      .groupBy("component").agg(count(lit(1)).as("n_nodes"))
-  }
-
-  /** Earliest-arrival reachability over a TEMPORAL edge list (u, v, t):
-    * a node is reached at the smallest arrival time achievable by a chain
-    * of edges whose timestamps never decrease (wait-at-node allowed,
-    * traversal instantaneous) — the time-respecting reachability of
-    * Kempe–Kleinberg–Kumar 2000 (public) that static reachability
-    * overcounts (an edge that fired BEFORE the infection arrived cannot
-    * transmit).
-    *
-    * 100 TB shape: label-correcting fixpoint — each round one
-    * frontier⋈edges equi-join filtered by `t >= arr(u)`, a per-node min,
-    * and a full-outer merge keeping the smaller label; state is one
-    * (node, arr) row per reached node, rounds bounded by the longest
-    * shortest temporal chain, termination gated by a `count()` of
-    * improved labels.
-    *
-    * @return (node, arr_day) for every temporally reachable node,
-    *         pivot included at time 0
-    */
-  def temporalReach(edges: DataFrame, pivot: Long): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges.select(col("u").cast("long").as("node"),
-        col("v").cast("long").as("v"), col("t").cast("long").as("t"))
-      .filter(col("node") =!= col("v")).distinct()
-      .localCheckpoint(false)
-    var arr = Seq((pivot, 0L)).toDF("node", "arr").localCheckpoint(false)
-    var done = false
-    while (!done) {
-      val cand = arr.join(e, Seq("node"))
-        .filter(col("t") >= col("arr"))
-        .groupBy(col("v").as("node")).agg(min("t").as("cand"))
-      val merged = arr.join(cand, Seq("node"), "full_outer")
-        .select(col("node"),
-          least(coalesce(col("arr"), lit(Long.MaxValue)),
-            coalesce(col("cand"), lit(Long.MaxValue))).as("new_arr"),
-          col("arr"))
-        .localCheckpoint(false)
-      if (merged.filter(col("arr").isNull || col("new_arr") < col("arr"))
-            .count() == 0) done = true
-      arr = merged.select(col("node"), col("new_arr").as("arr"))
-        .localCheckpoint(false)
-    }
-    arr.withColumnRenamed("arr", "arr_day")
-  }
-
-  /** VoteRank influence seeding (Zhang et al. 2016, public), integer
-    * milli-abilities: every node starts with voting ability 1000; each
-    * round elects the node with the highest neighbour-ability sum (ties
-    * to the smallest id), zeroes the winner's ability and discounts its
-    * neighbours by δ = 1000·n ÷ 2m (the 1/⟨k⟩ rule, floored, clamped at
-    * 0) — the spreader-set selection that beats top-degree seeding
-    * because elected hubs suppress their own neighbourhoods.
-    *
-    * 100 TB shape: ability is one row per node; a round is one
-    * edges⋈ability join + per-node sum + single-row collect + one
-    * broadcast-semi-join discount update — k driver rows total.
-    *
-    * @return (round, node, score_milli)
-    */
-  def voteRank(edges: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val e = edges
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .filter(col("hi") =!= col("lo")).distinct()
-      .localCheckpoint(false)
-    val sym = e.select(col("hi").as("u"), col("lo").as("v"))
-      .unionAll(e.select(col("lo").as("u"), col("hi").as("v")))
-      .localCheckpoint(false)
-    val nNodes = sym.select("u").distinct().count()
-    val nEdges = e.count()
-    // empty (or all-self-loop) input would divide by zero below — return
-    // the empty result frame instead, matching the require() style of the
-    // other ops for impossible-parameter cases
-    if (nEdges == 0L)
-      return spark.emptyDataset[(Long, Long, Long)]
-        .toDF("round", "node", "score_milli")
-    val delta = 1000L * nNodes / (2L * nEdges)
-    var ability = sym.select(col("u").as("node")).distinct()
-      .withColumn("ab", lit(1000L)).localCheckpoint(false)
-    var chosen = Seq.empty[Long]
-    val picks = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-    for (round <- 1 to k) {
-      val scores = sym.join(ability.select(col("node").as("v"), col("ab")),
-          Seq("v"))
-        .groupBy(col("u").as("node")).agg(sum("ab").as("score"))
-      val base = if (chosen.isEmpty) scores
-        else scores.filter(!col("node").isin(chosen: _*))
-      val best = base.orderBy(col("score").desc, col("node").asc).limit(1)
-        .as[(Long, Long)].collect()
-      if (best.nonEmpty) {
-        val (node, score) = best(0)
-        picks += ((round.toLong, node, score))
-        chosen :+= node
-        val nbrs = sym.filter(col("u") === node)
-          .select(col("v").as("node")).withColumn("isnb", lit(1))
-        ability = ability.join(nbrs, Seq("node"), "left")
-          .select(col("node"),
-            when(col("node") === node, 0L)
-              .when(col("isnb").isNotNull,
-                greatest(lit(0L), col("ab") - delta))
-              .otherwise(col("ab")).as("ab"))
-          .localCheckpoint(false)
-      }
-    }
-    picks.toSeq.toDF("round", "node", "score_milli")
-  }
 }

@@ -177,38 +177,6 @@ object MediaOps {
     }.toDF()
   }
 
-  final case class CrestRow(media_id: Long, n_samp: Long, peak_abs: Long,
-                            sum_sq: Long, crest_ppm: Long)
-
-  /** Crest factor (peak-to-RMS dynamic range) in exact integers:
-    * `crest_ppm = ⌊10⁶ · n · peak² / Σv²⌋` — crest² scaled to ppm with the
-    * division done once at the end, so engine and oracle replay the same
-    * value bit-for-bit. The mastering/compression audit: heavily limited
-    * (over-compressed) audio shows crest² → 1–2, natural speech ≫ that;
-    * paired with [[clippingAudit]] it separates "loud" from "damaged".
-    * One map-only pass per medium, ZERO shuffle, one row/media.
-    */
-  def crestFactor(media: Dataset[MediaRow]): DataFrame = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.map { m =>
-        var peak = 0L; var ss = 0L
-        var i = 0
-        while (i < m.bytes.length) {
-          val v = ((m.bytes(i) & 0xff) - 128).toLong
-          val a = math.abs(v)
-          if (a > peak) peak = a
-          ss += v * v
-          i += 1
-        }
-        val n = m.bytes.length.toLong
-        val crest = if (ss > 0L) 1000000L * n * peak * peak / ss else 0L
-        CrestRow(m.media_id, n, peak, ss, crest)
-      }
-    }.toDF()
-  }
-
   /** Voice-activity-style segment merging: active windows whose indices
     * are within `gap` inactive windows of each other coalesce into ONE
     * segment — the VAD / silence-splitting primitive that turns a
@@ -245,180 +213,6 @@ object MediaOps {
         count(lit(1)).as("n_active"))
   }
 
-  /** Stuck/duplicate-frame audit over the sampled frame stream — the
-    * frozen-encoder / dropped-frame QA of video ingest: a run is a maximal
-    * stretch of CONSECUTIVE sampled frames with equal digest (sampling
-    * faster than the frame rate makes repeats structural, so the audit
-    * also doubles as the oversampling detector). Per asset: frames, runs
-    * of length ≥ 2, the longest run, and the duplicate-frame overhead
-    * Σ(len−1) a dedup re-encode would reclaim.
-    *
-    * 100 TB shape: decode-side digests only (16-byte stub window per
-    * frame — a real codec swap changes nothing downstream), ONE media_id
-    * window Exchange, one row per asset.
-    *
-    * @return (media_id, n_frames, n_stuck_runs, max_run, n_dup_frames)
-    */
-  def stuckFrames(media: Dataset[MediaRow], everyMs: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("media_id").orderBy("ts_ms")
-    frameSample(media, everyMs)
-      .withColumn("strt", when(coalesce(
-        lag("frame_digest", 1).over(w) =!= col("frame_digest"),
-        lit(true)), 1L).otherwise(0L))
-      .withColumn("run_id", sum("strt").over(w))
-      .groupBy("media_id", "run_id")
-      .agg(count(lit(1)).as("len"))
-      .groupBy("media_id")
-      .agg(sum("len").as("n_frames"),
-        sum(when(col("len") >= 2, 1L).otherwise(0L)).as("n_stuck_runs"),
-        max("len").as("max_run"),
-        sum(col("len") - 1).as("n_dup_frames"))
-  }
-
-  /** Zero-crossing rate census — the classic spectral-content proxy next
-    * to [[windowSquares]]'s energy (voiced/low-frequency content crosses
-    * rarely, fricatives/noise cross constantly; VAD and audio-quality
-    * screens read both). Per fixed `winLen`-sample window the count of
-    * STRICT sign flips between adjacent samples (`s·s' < 0`; zeros never
-    * cross — the exact, oracle-replicable convention), rolled up per
-    * asset: total plus the max/min window so the spread is visible
-    * without shipping per-window rows.
-    *
-    * 100 TB shape: decode-once mapPartitions over the opaque payload,
-    * zero shuffle, ONE row per asset.
-    *
-    * @return (media_id, n_win, total_cross, max_cross, min_cross)
-    */
-  final case class ZcrRow(media_id: Long, n_win: Long, total_cross: Long,
-                          max_cross: Long, min_cross: Long)
-
-  def zeroCrossingRate(media: Dataset[MediaRow], winLen: Int): DataFrame = {
-    require(winLen > 1, s"winLen must be > 1, got $winLen")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.mapPartitions { it =>
-      it.map { m =>
-        val nWin = m.bytes.length / winLen
-        var tot = 0L; var mx = 0L; var mn = Long.MaxValue
-        var w = 0
-        while (w < nWin) {
-          var cr = 0L
-          val base = w * winLen
-          var i = 0
-          while (i < winLen - 1) {
-            val a = (m.bytes(base + i) & 0xff) - 128
-            val b = (m.bytes(base + i + 1) & 0xff) - 128
-            if (a * b < 0) cr += 1
-            i += 1
-          }
-          tot += cr; if (cr > mx) mx = cr; if (cr < mn) mn = cr
-          w += 1
-        }
-        if (nWin == 0) mn = 0L
-        ZcrRow(m.media_id, nWin.toLong, tot, mx, mn)
-      }
-    }.toDF()
-  }
-
-  final case class DcRow(media_id: Long, n_samp: Long, sum_v: Long,
-                         min_v: Long, max_v: Long)
-
-  /** DC-offset audit — the broken-ADC/bias screen: per asset the exact
-    * signed sample sum (a healthy centered signal sums near 0; a stuck
-    * bias shifts it by n·offset), plus the range. Decode-once, one row
-    * per asset; mean = sum/n is the consumer's division.
-    */
-  def dcStats(media: Dataset[MediaRow]): DataFrame = {
-    implicit val enc = Encoders.product[DcRow]
-    media.mapPartitions { it =>
-      it.map { m =>
-        var s = 0L; var mn = Long.MaxValue; var mx = Long.MinValue
-        var i = 0
-        while (i < m.bytes.length) {
-          val v = ((m.bytes(i) & 0xff) - 128).toLong
-          s += v
-          if (v < mn) mn = v
-          if (v > mx) mx = v
-          i += 1
-        }
-        if (m.bytes.length == 0) { mn = 0L; mx = 0L }
-        DcRow(m.media_id, m.bytes.length.toLong, s, mn, mx)
-      }
-    }.toDF()
-  }
-
-  final case class TruePeakRow(media_id: Long, n_samp: Long, peak: Long,
-                               true_peak_x16: Long, n_isp: Long)
-
-  /** Inter-sample (true) peak estimate — the loudness-compliance check
-    * (ITU-R BS.1770's oversampled peak, public) that catches clipping a
-    * sample-peak meter misses: 2× oversample by Catmull–Rom half-sample
-    * interpolation h(i) = −v(i−1) + 9v(i) + 9v(i+1) − v(i+2) (×16 scale,
-    * pure integers — linear interp can never exceed the sample peak, a
-    * 4-tap kernel can). Per media: sample peak, the ×16-scaled true peak
-    * max(16·peak, max|h|), and the count of half-sample positions whose
-    * magnitude exceeds the ×16 local sample peak. One sequential scan in
-    * `mapPartitions`, 4 longs of state — map-only at 100 TB.
-    */
-  def truePeak(media: Dataset[MediaRow]): DataFrame = {
-    implicit val enc = Encoders.product[TruePeakRow]
-    media.mapPartitions { it =>
-      it.map { m =>
-        val n = m.bytes.length
-        def v(i: Int): Long = ((m.bytes(i) & 0xff) - 128).toLong
-        var peak = 0L; var hmax = 0L; var isp = 0L
-        var i = 0
-        while (i < n) {
-          val av = math.abs(v(i))
-          if (av > peak) peak = av
-          i += 1
-        }
-        i = 1
-        while (i + 2 < n) {
-          val h = math.abs(-v(i - 1) + 9 * v(i) + 9 * v(i + 1) - v(i + 2))
-          if (h > hmax) hmax = h
-          if (h > 16 * math.max(math.abs(v(i)), math.abs(v(i + 1)))) isp += 1
-          i += 1
-        }
-        TruePeakRow(m.media_id, n.toLong, peak,
-          math.max(16 * peak, hmax), isp)
-      }
-    }.toDF()
-  }
-
-  final case class DecimateRow(media_id: Long, n_samp: Long, sq_sum: Long,
-                               dec_sq_sum: Long, hf_sum: Long)
-
-  /** 2:1 decimation audit: energy of the original, energy after
-    * mean-decimation (pair means with a shift-positive floor so both
-    * engines round identically), and the odd–even difference energy —
-    * the exact-integer read on how much high-frequency content a naive
-    * downsample would alias (the audio twin of the image
-    * downsample-bias pyramid audit). One sequential scan per media.
-    */
-  def decimateAudit(media: Dataset[MediaRow]): DataFrame = {
-    implicit val enc = Encoders.product[DecimateRow]
-    media.mapPartitions { it =>
-      it.map { m =>
-        val n = m.bytes.length
-        def v(i: Int): Long = ((m.bytes(i) & 0xff) - 128).toLong
-        var sq = 0L; var dsq = 0L; var hf = 0L
-        var i = 0
-        while (i < n) { sq += v(i) * v(i); i += 1 }
-        i = 0
-        while (i + 1 < n) {
-          val mean = (v(i) + v(i + 1) + 256L) / 2L - 128L
-          dsq += mean * mean
-          val d = v(i) - v(i + 1)
-          hf += d * d
-          i += 2
-        }
-        DecimateRow(m.media_id, n.toLong, sq, dsq, hf)
-      }
-    }.toDF()
-  }
-
   final case class LevelUsageRow(media_id: Long, n_samp: Long,
                                  n_levels: Long, simpson_num: Long,
                                  util_ppm: Long)
@@ -451,70 +245,4 @@ object MediaOps {
     }.toDF()
   }
 
-  final case class EchoRow(media_id: Long, ac0: Long, best_lag: Long,
-                           ac_best: Long)
-
-  /** Echo / comb-filter detection: exact integer autocorrelation
-    * Σ v(k)·v(k+lag) over the candidate lag grid 20..95 step 5, argmax
-    * with ties to the shorter lag — the slapback-echo lag finder (and
-    * the loop-point candidate) on the stub codec's centered bytes. One
-    * sequential scan per (media, lag) pair, all in one pass.
-    */
-  def echoLag(media: Dataset[MediaRow]): DataFrame = {
-    implicit val enc = Encoders.product[EchoRow]
-    val lags = (20 to 95 by 5).toArray
-    media.mapPartitions { it =>
-      it.map { m =>
-        val n = m.bytes.length
-        def v(i: Int): Long = ((m.bytes(i) & 0xff) - 128).toLong
-        var ac0 = 0L
-        var i = 0
-        while (i < n) { ac0 += v(i) * v(i); i += 1 }
-        var bestLag = -1L; var bestAc = Long.MinValue
-        lags.foreach { lag =>
-          var ac = 0L
-          var k = 0
-          while (k + lag < n) { ac += v(k) * v(k + lag); k += 1 }
-          if (ac > bestAc) { bestAc = ac; bestLag = lag.toLong }
-        }
-        EchoRow(m.media_id, ac0, bestLag, bestAc)
-      }
-    }.toDF()
-  }
-
-  final case class PyramidRow(media_id: Long, level: Int, bucket: Long,
-                              v_min: Long, v_max: Long)
-
-  /** Waveform min/max preview pyramid: per media the per-bucket sample
-    * extrema at three zoom levels (256/1024/4096 samples per bucket) —
-    * the precomputed envelope every waveform renderer scrubs instead of
-    * raw samples; at 100 TB this is THE artifact that makes audio QA
-    * interactive. One sequential scan per media, all levels emitted in
-    * the same pass.
-    */
-  def minmaxPyramid(media: Dataset[MediaRow]): DataFrame = {
-    implicit val enc = Encoders.product[PyramidRow]
-    val widths = Array(256, 1024, 4096)
-    media.mapPartitions { it =>
-      it.flatMap { m =>
-        val n = m.bytes.length
-        def v(i: Int): Long = ((m.bytes(i) & 0xff) - 128).toLong
-        widths.zipWithIndex.flatMap { case (w, lvl) =>
-          val nb = (n + w - 1) / w
-          (0 until nb).map { b =>
-            var mn = Long.MaxValue; var mx = Long.MinValue
-            var i = b * w
-            val end = math.min(n, (b + 1) * w)
-            while (i < end) {
-              val x = v(i)
-              if (x < mn) mn = x
-              if (x > mx) mx = x
-              i += 1
-            }
-            PyramidRow(m.media_id, lvl, b.toLong, mn, mx)
-          }
-        }
-      }
-    }.toDF()
-  }
 }

@@ -61,57 +61,4 @@ object Quantiles {
       .agg(max(col("n")).as("n"), qCols: _*)
   }
 
-  /** Median-absolute-deviation outlier profile per group — the ROBUST
-    * counterpart of the Welford z-flag (`events_welford`): mean/stddev are
-    * themselves dragged by the outliers they are supposed to flag, while
-    * the median/MAD pair has a 50% breakdown point (Hampel's rule,
-    * published). Everything is exact integer arithmetic:
-    *
-    *  - `med`  = the LOWER median of `valueInt`, i.e. the element at
-    *    selection rank `(n+1) div 2` under the deterministic
-    *    `(valueInt, idCol)` order (ties broken by id, so the selected row
-    *    is unique and engine-independent — no averaged even-count median,
-    *    which would leave integers);
-    *  - `mad`  = the lower median of `|valueInt − med|` by the same rule;
-    *  - a row is flagged iff `|valueInt − med| > 2·mad` — integers both
-    *    sides, no floats anywhere.
-    *
-    * Plan shape: two per-group window sorts over the SAME partition key
-    * (one Exchange, reused across both windows and the final aggregation)
-    * plus one broadcast-sized (group, med) join back. Like
-    * `events_quantiles` this is the exact-selection path — fine when
-    * groups are many and bounded; a group holding a large fraction of a
-    * 100 TB table takes the [[histogramQuantiles]] bounded-state bins at
-    * median resolution instead (same flagging rule on the bin median).
-    *
-    * @param df       input
-    * @param groupCol group key column name
-    * @param valueInt exact-integer value column (e.g. cents)
-    * @param idCol    unique row id column (deterministic tie-break)
-    * @return one row per group: (groupCol, n, med, mad, n_out)
-    */
-  def madOutliers(df: DataFrame, groupCol: String, valueInt: Column,
-                  idCol: Column): DataFrame = {
-    val base = df.select(col(groupCol), valueInt.cast("long").as("iv"),
-      idCol.as("rid"))
-    def lowerMedian(in: DataFrame, v: String, as: String): DataFrame = {
-      val w = Window.partitionBy(groupCol).orderBy(col(v), col("rid"))
-      val tot = Window.partitionBy(groupCol)
-      in.withColumn("rn", row_number().over(w))
-        .withColumn("n", count(lit(1)).over(tot))
-        .filter(col("rn") === expr("(n + 1) DIV 2"))
-        .select(col(groupCol), col(v).as(as), col("n"))
-    }
-    val med = lowerMedian(base, "iv", "med")
-    val dev = base.join(med.select(col(groupCol), col("med")), Seq(groupCol))
-      .withColumn("dev", abs(col("iv") - col("med")))
-    val mad = lowerMedian(dev.select(col(groupCol), col("dev").as("iv"),
-      col("rid")), "iv", "mad")
-    dev.join(mad.select(col(groupCol), col("mad")), Seq(groupCol))
-      .groupBy(groupCol)
-      .agg(count(lit(1)).as("n"), max(col("med")).as("med"),
-        max(col("mad")).as("mad"),
-        sum(when(col("dev") > lit(2L) * col("mad"), 1L).otherwise(0L))
-          .as("n_out"))
-  }
 }

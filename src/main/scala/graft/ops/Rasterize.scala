@@ -137,114 +137,4 @@ object Rasterize {
       .groupBy("cx", "cy").agg(count(lit(1)).as("n_lines"))
   }
 
-  /** One pole-of-inaccessibility row per polygon. */
-  final case class PoleRow(poly_id: Long, n_inside: Long, best_gy: Int,
-                           best_gx: Int, dist_cells: Long)
-
-  /** POLE OF INACCESSIBILITY on a fixed grid — the interior point farthest
-    * from the boundary, the correct label anchor for polygons where the
-    * centroid falls outside or inside a HOLE (Mapbox's polylabel problem,
-    * public; this is the deterministic grid formulation instead of the
-    * priority-queue refinement, so the oracle can replay it exactly):
-    * rasterize even-odd membership ([[graft.geo.RayCast.containsMulti]] —
-    * holes and multi-shells both correct) on a `gridN`×`gridN` lattice of
-    * cell CENTERS over the polygon's own bbox, then for every inside cell
-    * the exact L1 distance to the nearest OUTSIDE cell (grid border counts
-    * as outside); the argmax cell is the pole. The distance transform is
-    * the standard two-pass forward/backward sweep — O(N²) per polygon,
-    * equal to the brute-force pair minimum the oracle states
-    * definitionally.
-    *
-    * Scale shape: pure per-row kernel on the polygon scan (each polygon's
-    * grid is local, N² booleans) — NO shuffle, no join; the same
-    * decode-once discipline as the image kernels. Determinism: cell
-    * centers are the IEEE chain `min + (g + 0.5)·((max − min)/N)`, replayed
-    * textually by the oracle; ties → smallest (gy, gx).
-    *
-    * @param polys (poly_id, xss, yss) — packed ring arrays, outer shells ⊕
-    *              holes (even-odd)
-    * @return (poly_id, n_inside, best_gy, best_gx, dist_cells); polygons
-    *         with no interior cell center at this resolution are absent
-    */
-  def poleOfInaccessibility(polys: DataFrame, gridN: Int): DataFrame = {
-    require(gridN >= 2, s"gridN must be >= 2, got $gridN")
-    val spark = polys.sparkSession
-    import spark.implicits._
-    polys.select(col("poly_id").cast("long"), col("xss"), col("yss"))
-      .as[(Long, Seq[Seq[Double]], Seq[Seq[Double]])]
-      .mapPartitions { it =>
-        it.flatMap { case (pid, xssS, yssS) =>
-          val xss = xssS.map(_.toArray).toArray
-          val yss = yssS.map(_.toArray).toArray
-          val flatX = xss.flatten
-          val flatY = yss.flatten
-          val minx = flatX.min; val maxx = flatX.max
-          val miny = flatY.min; val maxy = flatY.max
-          val cw = (maxx - minx) / gridN.toDouble
-          val ch = (maxy - miny) / gridN.toDouble
-          val inside = Array.ofDim[Boolean](gridN, gridN)
-          var nIn = 0L
-          var gy = 0
-          while (gy < gridN) {
-            val py = miny + (gy + 0.5d) * ch
-            var gx = 0
-            while (gx < gridN) {
-              val px = minx + (gx + 0.5d) * cw
-              if (graft.geo.RayCast.containsMulti(px, py, xss, yss)) {
-                inside(gy)(gx) = true; nIn += 1
-              }
-              gx += 1
-            }
-            gy += 1
-          }
-          if (nIn == 0) Iterator.empty
-          else {
-            // two-pass L1 distance transform; outside cells and the grid
-            // border are distance 0 sources (dist = steps to leave the mask)
-            val inf = 4L * gridN
-            val d = Array.fill(gridN, gridN)(inf)
-            gy = 0
-            while (gy < gridN) {
-              var gx = 0
-              while (gx < gridN) {
-                if (!inside(gy)(gx)) d(gy)(gx) = 0L
-                else {
-                  // border: 1 + cells to the nearest edge
-                  val b = math.min(math.min(gy + 1, gridN - gy),
-                    math.min(gx + 1, gridN - gx)).toLong
-                  d(gy)(gx) = b
-                  if (gy > 0) d(gy)(gx) = math.min(d(gy)(gx), d(gy - 1)(gx) + 1)
-                  if (gx > 0) d(gy)(gx) = math.min(d(gy)(gx), d(gy)(gx - 1) + 1)
-                }
-                gx += 1
-              }
-              gy += 1
-            }
-            gy = gridN - 1
-            while (gy >= 0) {
-              var gx = gridN - 1
-              while (gx >= 0) {
-                if (gy < gridN - 1) d(gy)(gx) = math.min(d(gy)(gx), d(gy + 1)(gx) + 1)
-                if (gx < gridN - 1) d(gy)(gx) = math.min(d(gy)(gx), d(gy)(gx + 1) + 1)
-                gx -= 1
-              }
-              gy -= 1
-            }
-            var best = -1L; var bgy = 0; var bgx = 0
-            gy = 0
-            while (gy < gridN) {
-              var gx = 0
-              while (gx < gridN) {
-                if (inside(gy)(gx) && d(gy)(gx) > best) {
-                  best = d(gy)(gx); bgy = gy; bgx = gx
-                }
-                gx += 1
-              }
-              gy += 1
-            }
-            Iterator.single(PoleRow(pid, nIn, bgy, bgx, best))
-          }
-        }
-      }.toDF()
-  }
 }

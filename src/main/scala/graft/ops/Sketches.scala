@@ -162,64 +162,8 @@ object Sketches {
       .agg(min(coalesce(col("cnt"), lit(0L))).as("cm_est"))
   }
 
-  /** KMV (k-minimum-values / bottom-k) distinct sketch per group — the
-    * third distinct-count formulation next to [[hllDistinct]] (fixed 32
-    * registers, ~18% σ) and [[BitmapDistinctAgg]] (exact, bounded domain):
-    * keep the k SMALLEST distinct hash values per group; the k-th smallest
-    * order statistic estimates cardinality as `(k−1)·2³¹ / h_k` (σ ≈
-    * 1/√(k−2), so k = 64 halves HLL-32's error), and unlike HLL the
-    * retained hash SET doubles as a deterministic uniform sample of the
-    * group's keys AND composes into set-operation estimates (Jaccard of two
-    * groups ≈ Jaccard of their bottom-k sets).
-    *
-    * Deterministic end-to-end (same multiplicative-congruence hash as
-    * [[hllDistinct]], exact integer division on emit) so the oracle replays
-    * the estimate bit-for-bit.
-    *
-    * 100 TB shape: phase 1 is a mapPartitions fold with a size-capped
-    * TreeSet per (group, partition) — per-partition state is O(groups·k)
-    * and ONLY ≤ k·partitions rows per group ever cross the shuffle, where
-    * exact count(distinct) shuffles every distinct (group, key) pair; phase
-    * 2 dedups the ≤ k·partitions survivors and takes the global bottom-k.
-    *
-    * @param groupCol string-typed grouping column; idCol nonnegative bigint
-    * @return (groupCol, n_k = min(k, distinct), kth_hash, kmv_q = estimate
-    *         — exact n_k when the group has fewer than k distinct hashes)
-    */
-  def kmvDistinct(df: DataFrame, groupCol: String, idCol: String,
-                  k: Int): DataFrame = {
-    require(k >= 2, s"k must be >= 2, got $k")
-    val sess = df.sparkSession
-    import sess.implicits._
-    val pairs = df.selectExpr(groupCol,
-        s"($idCol * 1103515245 + 12345) % 2147483648 AS h")
-      .as[(String, Long)]
-    val locals = pairs.mapPartitions { it =>
-      val state = scala.collection.mutable.Map.empty[String, java.util.TreeSet[java.lang.Long]]
-      it.foreach { case (g, h) =>
-        val s = state.getOrElseUpdate(g, new java.util.TreeSet[java.lang.Long]())
-        s.add(h)
-        if (s.size > k) s.remove(s.last())
-      }
-      state.iterator.flatMap { case (g, s) =>
-        val b = Seq.newBuilder[(String, Long)]
-        val i = s.iterator()
-        while (i.hasNext) b += ((g, i.next().longValue()))
-        b.result().iterator
-      }
-    }.toDF(groupCol, "h")
-    val w = Window.partitionBy(groupCol).orderBy("h")
-    locals.distinct()
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
-      .groupBy(groupCol)
-      .agg(count(lit(1)).as("n_k"), max("h").as("kth_hash"))
-      .withColumn("kmv_q", when(col("n_k") < k, col("n_k"))
-        .otherwise(expr(s"(CAST(${k - 1} AS BIGINT) * 2147483648L) div greatest(kth_hash, 1L)")))
-  }
-
   /** EXACT mergeable distinct count over a bounded id domain — the
-    * roaring-bitmap-style counterpart to [[hllSketch]]: the per-group state
+    * roaring-bitmap-style counterpart to an HLL sketch: the per-group state
     * is a fixed `nBits/8`-byte bitmap, reduced by bit-set and merged by
     * byte-OR (associative + commutative ⇒ map-side partial aggregation is
     * safe), finished by popcount. `count(distinct)` at 100 TB shuffles

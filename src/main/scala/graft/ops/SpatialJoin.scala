@@ -10,50 +10,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame}
 
-/** Static argmin kernel shared by [[NearestSiteExpr]]'s interpreted and
-  * generated paths: index of the closest site by squared planar distance,
-  * strict `<` so ties keep the first (= smallest site_id when the caller
-  * sorts by id). Same IEEE op order as the oracle's cross-join argmin.
-  */
-object VoronoiKernel {
-  def nearest(lng: Double, lat: Double,
-              sxs: Array[Double], sys: Array[Double]): Int = {
-    var best = -1; var bd = Double.PositiveInfinity
-    var k = 0
-    while (k < sxs.length) {
-      val dx = lng - sxs(k); val dy = lat - sys(k)
-      val d2 = dx * dx + dy * dy
-      if (d2 < bd) { bd = d2; best = k }
-      k += 1
-    }
-    best
-  }
-}
-
-/** `nearest_site(lng, lat)` — 0-based index of the nearest of a fixed site
-  * array (the Voronoi label); the site coordinates ride along as reference
-  * objects so the loop whole-stage-codegens with zero allocation.
-  */
-case class NearestSiteExpr(left: Expression, right: Expression,
-                           sxs: Array[Double], sys: Array[Double])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(DoubleType, DoubleType)
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "nearest_site"
-  override def nullSafeEval(lng: Any, lat: Any): Any =
-    VoronoiKernel.nearest(lng.asInstanceOf[Double], lat.asInstanceOf[Double],
-      sxs, sys)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val rx = ctx.addReferenceObj("voroSxs", sxs, "double[]")
-    val ry = ctx.addReferenceObj("voroSys", sys, "double[]")
-    nullSafeCodeGen(ctx, ev, (lng, lat) =>
-      s"${ev.value} = graft.ops.VoronoiKernel.nearest($lng, $lat, $rx, $ry);")
-  }
-  override protected def withNewChildrenInternal(l: Expression,
-      r: Expression): NearestSiteExpr = copy(left = l, right = r)
-}
-
 /** `ray_cast(px, py, xs, ys)` — even-odd point-in-ring test over packed
   * coordinate arrays; the exact refinement predicate of the PIP join (J2).
   */
@@ -529,73 +485,6 @@ object SpatialJoin {
         Geodesic.metersFromT(col("t")).as("dist_m"))
   }
 
-  /** DBSCAN density clustering (Ester et al., KDD'96 — the published
-    * algorithm) over planar points, composed entirely from the engine's
-    * scale primitives so every stage is key-bounded:
-    *
-    *  1. ε-neighbor pairs from [[withinDistance]]'s hex-disk cover — ONE
-    *     cell equi-join, never all-pairs;
-    *  2. core points by neighbor count (`|N_ε(p)| ≥ minPts`, the point
-    *     itself included — the classic convention);
-    *  3. clusters = connected components of the core–core ε-graph via
-    *     [[TextDedup.connectedComponentsStar]] (large-star/small-star,
-    *     O(log n) rounds regardless of cluster diameter — a snaking
-    *     density ridge doesn't serialize the job);
-    *  4. border points (non-core with ≥ 1 core ε-neighbor) join the MIN
-    *     adjacent core's cluster label — the textbook algorithm leaves
-    *     border assignment scan-order-dependent; taking the min makes it
-    *     deterministic and engine-independent (the oracle contract).
-    *
-    * Cluster labels are the min core point id of the component. Noise rows
-    * keep a NULL cluster.
-    *
-    * @param points (pid, lng, lat)
-    * @param eps    ε radius in planar degrees
-    * @param minPts density threshold, self included
-    * @return (pid, role ∈ core|border|noise, cluster — null for noise)
-    */
-  def dbscan(points: DataFrame, eps: Double, minPts: Int): DataFrame = {
-    require(minPts >= 1, s"minPts must be >= 1: $minPts")
-    val pts = points.select(col("pid").cast(LongType),
-      col("lng").cast(DoubleType), col("lat").cast(DoubleType))
-    val pairs = withinDistance(
-        pts.select(col("pid").as("probe_id"), col("lng"), col("lat")),
-        pts.select(col("pid").as("target_id"), col("lng"), col("lat")), eps)
-      .filter(col("probe_id") =!= col("target_id"))
-      .select(col("probe_id"), col("target_id"))
-      .localCheckpoint(false)
-    val nNbr = pairs.groupBy(col("probe_id").as("pid"))
-      .agg(count(lit(1)).as("n_nbr"))
-    val flagged = pts.join(nNbr, Seq("pid"), "left")
-      .withColumn("is_core",
-        coalesce(col("n_nbr"), lit(0L)) + 1 >= lit(minPts.toLong))
-      .select("pid", "is_core")
-    val coreIds = flagged.filter(col("is_core")).select("pid")
-      .localCheckpoint(false)
-    val coreEdges = pairs
-      .join(coreIds.select(col("pid").as("probe_id")), Seq("probe_id"), "left_semi")
-      .join(coreIds.select(col("pid").as("target_id")), Seq("target_id"), "left_semi")
-      .select(col("probe_id").as("doc_a"), col("target_id").as("doc_b"))
-    val comp = TextDedup.connectedComponentsStar(coreEdges,
-        coreIds.select(col("pid").as("doc_id")))
-      .select(col("doc_id").as("pid"), col("comp").as("ccluster"))
-    val borderLbl = pairs
-      .join(comp.select(col("pid").as("target_id"), col("ccluster")),
-        Seq("target_id"))
-      .groupBy(col("probe_id").as("pid"))
-      .agg(min("ccluster").as("bcluster"))
-    flagged.join(comp, Seq("pid"), "left")
-      .join(borderLbl, Seq("pid"), "left")
-      .select(col("pid"),
-        when(col("is_core"), lit("core"))
-          .when(col("bcluster").isNotNull, lit("border"))
-          .otherwise(lit("noise")).as("role"),
-        when(col("is_core"), col("ccluster"))
-          .otherwise(col("bcluster")).as("cluster"))
-  }
-
-  // ---------------- J3: kNN (cell-ring expansion, distance-bounded) ----------------
-
   /** kNN join: for each probe, the k nearest targets by planar squared
     * degree distance (ties by target_id). Cell-ring expansion over the hex
     * index in GEOMETRIC ring batches (0–1 | 2–4 | 5–8 | 9–maxRings):
@@ -929,100 +818,6 @@ object SpatialJoin {
       .select("probe_id", "seg_id", "t", "dist2")
   }
 
-  /** Dense nearest-site assignment (Voronoi labeling): every point gets its
-    * closest of K sites — service-area / catchment assignment. The site set
-    * is SMALL by contract (it collects to a literal array; a 10¹²-point
-    * scan never shuffles AT ALL): the argmin is an `aggregate` HOF fold
-    * over the site array per row — zero joins, zero exchanges, the whole
-    * operator is a projection on the scan. For large site sets use [[knn]]
-    * (cell-ring pruning) instead — this is the k=1 broadcast complement,
-    * the same small-side/big-side split as the tile-index elevation join.
-    *
-    * (First cut was a broadcast crossJoin + `min(struct(d², site_id))`:
-    * Spark's hash aggregate rejects struct-typed min, so the plan fell to
-    * a SortAggregate over the K-fanned candidates — 128 s at sf0.1 for
-    * what is now 1 s. The HOF fold also keeps the tie rule exact: sites
-    * iterate in site_id order and only a STRICTLY smaller d² replaces the
-    * accumulator, so ties keep the smaller site_id.)
-    *
-    * @param points (point_id, lng, lat)
-    * @param sites  (site_id, sx, sy) — must fit on the driver
-    * @return (point_id, site_id, d2) — ties on d² break to smaller site_id
-    */
-  def voronoiAssign(points: DataFrame, sites: DataFrame): DataFrame = {
-    val siteRows = sites.select(col("site_id").cast("long"),
-        col("sx").cast("double"), col("sy").cast("double"))
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1).toSeq
-    require(siteRows.nonEmpty, "voronoiAssign needs at least one site")
-    val sxs = siteRows.map(_._2).toArray
-    val sys = siteRows.map(_._3).toArray
-    // codegen'd argmin loop (an `aggregate` HOF fold is interpreted and
-    // allocates one struct per site per row — measured 17.8 s where this
-    // runs in ~1 s at sf0.1); site_id/d² recompute from the index via
-    // literal-array element_at, same IEEE ops as the loop
-    val idx = org.apache.spark.sql.graftshim.GraftColumns.column(
-      NearestSiteExpr(
-        org.apache.spark.sql.graftshim.GraftColumns.expression(
-          col("lng").cast("double")),
-        org.apache.spark.sql.graftshim.GraftColumns.expression(
-          col("lat").cast("double")), sxs, sys))
-    val one = col("_vi") + 1
-    val sx = element_at(typedLit(sxs.toSeq), one)
-    val sy = element_at(typedLit(sys.toSeq), one)
-    val ddx = col("lng") - sx
-    val ddy = col("lat") - sy
-    points.withColumn("_vi", idx)
-      .select(col("point_id"),
-        element_at(typedLit(siteRows.map(_._1)), one).as("site_id"),
-        (ddx * ddx + ddy * ddy).as("d2"))
-  }
-
-  /** Inverse-distance-weighted interpolation — the scattered-data gridding
-    * primitive (estimate a field at probe locations from irregular
-    * observations), complementing [[graft.raster.Bilinear]]'s regular-grid
-    * sampling. Same exact-candidate discipline as [[snapToSegments]]: cell
-    * size = radius, probes search their 3×3 ring, so every observation
-    * within `radius` is found — one equi-join shuffle keyed by the cell.
-    *
-    * Determinism: weights are `floor(1/d²)` capped at 10¹² (the floor input
-    * is one IEEE division, the cap keeps the long sums exact), so the
-    * per-probe aggregation is an order-independent integer sum and the
-    * interpolated value an integer division. Exact probe/observation
-    * coincidences (d² = 0) are EXCLUDED — the caller dedups those
-    * separately (standard IDW practice: an exact hit is the value itself).
-    *
-    * @param probes (probe_id, px, py)
-    * @param obs    (x, y, v) — v integral
-    * @return (probe_id, n_obs, vsum, wsum, idw_q = vsum div wsum)
-    */
-  def idwInterpolate(probes: DataFrame, obs: DataFrame,
-                     radius: Double): DataFrame = {
-    require(radius > 0, s"radius must be > 0, got $radius")
-    val cs = lit(radius)
-    val obsCells = obs
-      .withColumn("gx", floor(col("x") / cs).cast("long"))
-      .withColumn("gy", floor(col("y") / cs).cast("long"))
-    val probeCells = probes
-      .withColumn("pgx", floor(col("px") / cs).cast("long"))
-      .withColumn("pgy", floor(col("py") / cs).cast("long"))
-      .withColumn("gx", explode(sequence(col("pgx") - 1, col("pgx") + 1)))
-      .withColumn("gy", explode(sequence(col("pgy") - 1, col("pgy") + 1)))
-      .drop("pgx", "pgy")
-    probeCells.join(obsCells, Seq("gx", "gy"))
-      .withColumn("ddx", col("px") - col("x"))
-      .withColumn("ddy", col("py") - col("y"))
-      .withColumn("d2", col("ddx") * col("ddx") + col("ddy") * col("ddy"))
-      .filter(col("d2") > 0.0 && col("d2") <= lit(radius * radius))
-      .withColumn("wq",
-        least(floor(lit(1.0) / col("d2")), lit(1.0e12)).cast("long"))
-      .groupBy("probe_id")
-      .agg(count(lit(1)).cast("long").as("n_obs"),
-        sum(col("wq") * col("v")).cast("long").as("vsum"),
-        sum("wq").cast("long").as("wsum"))
-      .withColumn("idw_q", expr("vsum div wsum"))
-  }
-
   /** Segment×segment intersection join — the vector-overlay primitive
     * (road/river crossings, trajectory × boundary). Candidates come from a
     * uniform-grid equi-join over each segment's bbox cell cover; the pair
@@ -1084,88 +879,4 @@ object SpatialJoin {
         (col("ay1") + col("t") * (col("ay2") - col("ay1"))).as("iy"))
   }
 
-  /** Per-group convex hull over integer coordinates: the footprint /
-    * coverage-outline aggregate (one hull per device, per region, per
-    * cluster). Exact Long cross products via [[graft.geo.Hull]] — the
-    * minimal vertex set is engine-independent, so the DuckDB oracle can
-    * re-derive it from the Carathéodory characterization (not strictly
-    * inside any triangle of other points, not strictly between two points
-    * on a segment).
-    *
-    * Scale shape: ONE shuffle keyed by the group; per-group state is that
-    * group's deduped point set (the same per-feature bound as GeoJSON
-    * reassembly A4). Groups are mutually independent; a group too big for
-    * one task should be pre-reduced (e.g. per-partition hulls unioned, then
-    * hulled again — hull(hull(A)∪hull(B)) = hull(A∪B)).
-    *
-    * @param points (gid, x, y) integer coordinates, |x|,|y| < 2³⁰
-    * @return (gid, x, y) hull vertices, one row per vertex
-    */
-  def convexHullPerGroup(points: DataFrame): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points.select(col("gid").cast("long"), col("x").cast("long"),
-        col("y").cast("long"))
-      .as[(Long, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (gid, it) =>
-        val pts = it.toArray
-        val xs = pts.map(_._2); val ys = pts.map(_._3)
-        graft.geo.Hull.convexHull(xs, ys).iterator
-          .map(i => (gid, xs(i), ys(i)))
-      }
-      .toDF("gid", "x", "y")
-  }
-
-  /** Sort-Tile-Recursive R-tree leaf packing (Leutenegger et al., public)
-    * — the bulk-load step of a spatial index build, surfaced as the leaf
-    * audit a packing job logs (per-leaf count + bbox; tight, low-overlap
-    * leaf rectangles are the whole point of STR). Points are ranked by
-    * (xq, point_id), cut into ⌈√L⌉ vertical slices of ⌈n/S⌉ points, and
-    * each slice is ranked by (yq, point_id) into leaves of `leafCap`.
-    *
-    * The global x-rank is computed DISTRIBUTED, never through one window
-    * partition: range-repartition on the rank key, sort within partitions,
-    * then per-partition offsets (one ≤#partitions-row agg, broadcast back)
-    * + the partition-local row_number. Rank values are independent of
-    * where the range boundaries fall, so the sampling inside
-    * repartitionByRange cannot perturb results. The per-slice y-rank
-    * window is key-bounded (≤⌈n/S⌉ rows per slice). One count() action
-    * sizes the grid — the same pass a production bulk-loader spends.
-    *
-    * @param points (point_id, xq, yq) integer-quantized coordinates
-    * @return (slice, leaf, n_pts, min_x, max_x, min_y, max_y)
-    */
-  def strPack(points: DataFrame, leafCap: Int): DataFrame = {
-    require(leafCap > 0, s"leafCap must be positive: $leafCap")
-    val base = points.select(col("point_id").cast(LongType),
-      col("xq").cast(LongType), col("yq").cast(LongType))
-    val n = base.count()
-    val leaves = (n + leafCap - 1) / leafCap
-    val s = math.ceil(math.sqrt(leaves.toDouble)).toLong max 1L
-    val sliceSz = (n + s - 1) / s max 1L
-    val parts = base
-      .repartitionByRange(col("xq"), col("point_id"))
-      .sortWithinPartitions("xq", "point_id")
-      .withColumn("pid", spark_partition_id())
-    val offs = parts.groupBy("pid").agg(count(lit(1)).as("cnt"))
-      .withColumn("off", coalesce(
-        sum("cnt").over(Window.partitionBy(GlobalRank.boundedPartitionKey(col("pid"))).orderBy("pid")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select("pid", "off")
-    val ranked = parts.join(broadcast(offs), "pid")
-      .withColumn("xr",
-        row_number().over(Window.partitionBy("pid").orderBy("xq", "point_id"))
-          .cast(LongType) - 1L + col("off"))
-      .withColumn("slice", expr(s"xr DIV ${sliceSz}L"))
-    ranked
-      .withColumn("yr",
-        row_number().over(Window.partitionBy("slice").orderBy("yq", "point_id"))
-          .cast(LongType) - 1L)
-      .withColumn("leaf", expr(s"yr DIV ${leafCap}L"))
-      .groupBy("slice", "leaf")
-      .agg(count(lit(1)).as("n_pts"),
-        min("xq").as("min_x"), max("xq").as("max_x"),
-        min("yq").as("min_y"), max("yq").as("max_y"))
-  }
 }

@@ -64,9 +64,6 @@ object TextDedup {
       array_min(transform(hv, h => (lit(a) * h + lit(b)) % lit(P)))
     }: _*)
 
-  def minhashSig(text: Column, shingleN: Int, nHashes: Int): Column =
-    minhashSigFromHashes(shingleHashes(text, shingleN), nHashes)
-
   /** LSH candidate pairs: docs sharing at least one band of `rowsPerBand`
     * consecutive signature values. Returns distinct (doc_a < doc_b).
     * The band self-join is the scale path: each doc emits `bands` rows,
@@ -97,34 +94,6 @@ object TextDedup {
     a.join(b, Seq("band_id", "band_key"))
       .filter(col("doc_a") < col("doc_b"))
       .select("doc_a", "doc_b").distinct()
-  }
-
-  /** LSH bucket-size skew audit — the scale diagnostic an LSH dedup run
-    * monitors BEFORE firing the band self-join: per band the bucket count,
-    * the largest bucket, and Σ C(sz,2) candidate pairs (the exact join
-    * cost; one hot bucket of size k costs k²/2 comparisons, which is how
-    * boilerplate shingles melt a cluster). Same signature/band derivation
-    * as [[minhashPairs]], stopped at the bucket histogram — no self-join.
-    *
-    * @return (band_id, n_buckets, n_rows, max_bucket, candidate_pairs)
-    */
-  def minhashBucketStats(docs: DataFrame, shingleN: Int = 3, nHashes: Int = 8,
-                         bands: Int = 4): DataFrame = {
-    require(nHashes % bands == 0, "nHashes must be divisible by bands")
-    val r = nHashes / bands
-    val sig = docs
-      .select(col("doc_id"), shingleHashes(col("text"), shingleN).as("hv"))
-      .select(col("doc_id"), minhashSigFromHashes(col("hv"), nHashes).as("sig"))
-    val banded = sig.select(col("doc_id"),
-      posexplode(array((0 until bands).map { bnd =>
-        (0 until r).map(i => element_at(col("sig"), bnd * r + i + 1))
-          .reduceLeft((acc, v) => acc * lit(P) + v)
-      }: _*)).as(Seq("band_id", "band_key")))
-    banded.groupBy("band_id", "band_key").agg(count(lit(1)).as("sz"))
-      .groupBy("band_id")
-      .agg(count(lit(1)).as("n_buckets"), sum("sz").as("n_rows"),
-        max("sz").as("max_bucket"),
-        sum(expr("sz * (sz - 1) div 2")).as("candidate_pairs"))
   }
 
   /** Signature-agreement Jaccard ESTIMATE for the band-join candidates:
@@ -305,49 +274,6 @@ object TextDedup {
       .select(col("doc_id"), coalesce(col("comp"), col("doc_id")).as("comp"))
   }
 
-  /** Winnowing fingerprint selection (Schleimer–Wilkerson–Aiken 2003,
-    * public — the MOSS document-fingerprint scheme): over each document's
-    * 3-gram hash sequence, every length-`window` window contributes the
-    * position of its minimum hash (RIGHTMOST on ties, the standard rule);
-    * the distinct selected (position, hash) set is the fingerprint, which
-    * guarantees any shared substring ≥ window+shingle−1 grams yields a
-    * shared fingerprint. Rolled up per document (count/sum/min/max of the
-    * selected hashes) — the set-size/collision diagnostic of a
-    * winnowing-based dedup index.
-    *
-    * Exactness: argmin-with-rightmost-tie rides a single integer min —
-    * key = h·2²⁰ + (2²⁰−1 − pos) (h < P < 2²⁰ and positions < 2²⁰), so
-    * both engines compute one windowed MIN. Documents shorter than
-    * `window` grams have no full window and are omitted (both engines).
-    *
-    * 100 TB shape: one doc-keyed window frame over the gram sequence +
-    * one doc-keyed rollup — key-bounded by document length, the
-    * feature_reassembly bound.
-    *
-    * @return (doc_id, n_grams, n_fp, fp_sum, fp_min, fp_max)
-    */
-  def winnow(docs: DataFrame, shingleN: Int = 3, window: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(window >= 1, s"window must be >= 1: $window")
-    val hv = docs.select(col("doc_id"),
-      posexplode(shingleHashes(col("text"), shingleN)).as(Seq("pos", "h")))
-    val frame = Window.partitionBy("doc_id").orderBy("pos")
-      .rowsBetween(Window.currentRow, window - 1)
-    val keyed = hv
-      .withColumn("key",
-        col("h") * lit(1048576L) + (lit(1048575L) - col("pos")))
-      .withColumn("m", count(lit(1)).over(Window.partitionBy("doc_id")))
-      .withColumn("wmin", min("key").over(frame))
-      .filter(col("pos") <= col("m") - window)
-    keyed.select(col("doc_id"), col("m"),
-        expr("wmin DIV 1048576").as("h"),
-        expr("1048575 - wmin % 1048576").as("sel_pos"))
-      .distinct()
-      .groupBy("doc_id")
-      .agg(max("m").as("n_grams"), count(lit(1)).as("n_fp"),
-        sum("h").as("fp_sum"), min("h").as("fp_min"), max("h").as("fp_max"))
-  }
-
   /** Word-hash array for simhash — materialize once (see shingleHashes). */
   def wordHashes(text: Column): Column = transform(words(text), w => h60(w))
 
@@ -361,124 +287,12 @@ object TextDedup {
       when(vote >= 0, lit(1L << b)).otherwise(lit(0L))
     }.reduceLeft(_ + _)
 
-  /** SimHash of the word multiset (single-column convenience; prefer a
-    * two-step select through [[wordHashes]] so the hashing runs once, not
-    * `bits` times).
-    */
-  def simhash(text: Column, bits: Int): Column =
-    simhashFromHashes(wordHashes(text), bits)
-
-  /** SimHash near-duplicate pairs via multi-index Hamming bands (Manku et
-    * al. 2007, public — the text twin of the image path
-    * [[ImageOps.phashNearDup]]): the `bits`-bit simhash splits into `bands`
-    * contiguous slices; two fingerprints within Hamming distance
-    * `bands − 1` must agree EXACTLY on at least one slice (pigeonhole), so
-    * candidate pairs come from `bands` bucketed equi-joins — ONE shuffle
-    * keyed by (band, slice value), never an all-pairs plan — and the exact
-    * `bit_count(xor)` distance refines. Perfect recall for
-    * radius ≤ bands − 1, enforced.
-    *
-    * @return (id_a, id_b, hamming) for distinct pairs with
-    *         hamming ≤ radius, id_a < id_b
-    */
-  def simhashNearDup(docs: DataFrame, bits: Int = 48, bands: Int = 4,
-                     radius: Int = 3): DataFrame = {
-    require(bits % bands == 0, s"bands must divide bits ($bits % $bands)")
-    require(radius <= bands - 1,
-      s"$bands bands guarantee recall only for radius <= ${bands - 1}, got $radius")
-    val w = bits / bands
-    val mask = (1L << w) - 1
-    val sh = docs
-      .select(col("doc_id").cast("long"), wordHashes(col("text")).as("hw"))
-      .select(col("doc_id"), simhashFromHashes(col("hw"), bits).as("sh"))
-    // lazy localCheckpoint: both sides of the self-join read the
-    // materialized banded fingerprints — without the cut the 48-bit
-    // aggregate-fold simhash pipeline executes twice (same fix as
-    // minhashPairs; measured ~2x on the neardup gate)
-    val banded = sh.select(col("doc_id"), col("sh"),
-        posexplode(array((0 until bands).map(i =>
-          shiftright(col("sh"), w * i).bitwiseAND(lit(mask))): _*)))
-      .toDF("doc_id", "sh", "band_i", "band_key")
-      .localCheckpoint(false)
-    val a = banded.toDF("id_a", "sa", "band_i", "band_key")
-    val b = banded.toDF("id_b", "sb", "band_i2", "band_key2")
-    a.join(b, a("band_i") === b("band_i2") && a("band_key") === b("band_key2") &&
-        a("id_a") < b("id_b"))
-      .select(col("id_a"), col("id_b"),
-        expr("CAST(bit_count(sa ^ sb) AS INT)").as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= radius)
-  }
-
-  /** Exact Jaccard similarity of distinct word-n-gram shingle sets. */
-  def jaccard(textA: Column, textB: Column, n: Int): Column = {
-    val sa = array_distinct(shingles(textA, n))
-    val sb = array_distinct(shingles(textB, n))
-    size(array_intersect(sa, sb)) / size(array_union(sa, sb))
-  }
-
   /** Rolling (polynomial) document fingerprint:
     * fold over words of `acc*31 + (h60(w) mod P) mod (2^31-1)`.
     */
   def fingerprint(text: Column): Column =
     aggregate(words(text), lit(0L),
       (acc, w) => (acc * 31L + h60(w) % lit(P)) % lit(2147483647L))
-
-  /** Exact duplicate-SPAN analysis + removal (the corpus-internal substring
-    * dedup of Lee et al. 2022, "Deduplicating Training Data Makes Language
-    * Models Better", public — the suffix-array pass re-expressed as a
-    * shuffle-bounded n-gram pipeline): a word n-gram occurring at ≥ 2 sites
-    * anywhere in the corpus (across docs OR repeated within one doc) is a
-    * duplicate span; every occurrence except the CANONICAL one (the
-    * lexicographically first (doc_id, pos) site) marks its n covered token
-    * positions redundant, and the cleaned text drops exactly those tokens.
-    *
-    * Scale shape: sites shuffle ONCE keyed on the 60-bit gram hash (the
-    * count + canonical window — key-bounded, partial-friendly); only
-    * NON-canonical duplicate sites fan out ×n into (doc, token) rows, which
-    * aggregate back into one bounded per-doc index array (≤ doc length);
-    * the rebuild joins that narrow array to the doc row and filters the
-    * token array IN PLACE — the text column itself never shuffles. Gram
-    * identity is the 60-bit [[h60]] (hash-based, as published; collisions
-    * are harmless for dedup and the oracle replays the identical hash).
-    *
-    * @param n span length in tokens (docs shorter than n emit no sites)
-    * @return (doc_id, n_tokens, n_dup_sites, n_redundant, dup_frac,
-    *         cleaned_md5) — n_dup_sites counts this doc's sites whose gram
-    *         is corpus-duplicated (canonical included); n_redundant counts
-    *         distinct token positions removed; cleaned_md5 = md5 of the
-    *         space-rejoined surviving tokens
-    */
-  def duplicateSpanStats(docs: DataFrame, n: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val base = docs.select(col("doc_id").cast("long"), col("text"))
-      .withColumn("ws", words(col("text")))
-      .withColumn("m", size(col("ws")))
-    val sites = base.filter(col("m") >= n)
-      .select(col("doc_id"), posexplode(shingles(col("text"), n)).as(Seq("p0", "gs")))
-      .select(col("doc_id"), (col("p0") + 1).as("pos"), h60(col("gs")).as("g"))
-    val wG = Window.partitionBy("g")
-    val marked = sites
-      .withColumn("cnt", count(lit(1)).over(wG))
-      .withColumn("rn", row_number().over(wG.orderBy("doc_id", "pos")))
-      .filter(col("cnt") >= 2)
-    val red = marked.filter(col("rn") > 1)
-      .select(col("doc_id"), explode(sequence(col("pos"), col("pos") + lit(n - 1))).as("t"))
-      .distinct()
-    val redPerDoc = red.groupBy("doc_id")
-      .agg(collect_list(col("t")).as("red_arr"), count(lit(1)).as("n_red"))
-    val dupPerDoc = marked.groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
-    base.join(dupPerDoc, Seq("doc_id"), "left_outer")
-      .join(redPerDoc, Seq("doc_id"), "left_outer")
-      .withColumn("red", coalesce(col("red_arr"), typedLit(Seq.empty[Int])))
-      .select(col("doc_id"), col("m").cast("long").as("n_tokens"),
-        coalesce(col("n_dup"), lit(0L)).as("n_dup_sites"),
-        coalesce(col("n_red"), lit(0L)).as("n_redundant"),
-        (coalesce(col("n_red"), lit(0L)) / col("m")).as("dup_frac"),
-        md5(concat_ws(" ",
-          filter(col("ws"), (w, i) => !array_contains(col("red"), i + 1))))
-          .as("cleaned_md5"))
-  }
 
   /** Composite quality score in [0,1]: length saturation (0.4), stopword
     * ratio (0.3), word-length saturation (0.3). Pure rational arithmetic —
@@ -559,71 +373,10 @@ object TextDedup {
       .select("id_a", "id_b", "na", "nb", "inter", "containment_ppm")
   }
 
-  /** EXACT Jaccard-threshold self-join via prefix filtering (AllPairs /
-    * PPJoin candidate scheme) — the lossless complement of
-    * [[minhashPairs]]: MinHash banding trades recall for candidate count;
-    * the prefix filter is exact (zero false negatives, provably) while
-    * still never enumerating all pairs.
-    *
-    * Scheme: order the token universe rarest-first — (document frequency,
-    * token), a total order both sides share — and keep each document's
-    * PREFIX of its sorted distinct-token set, of length
-    * `n − ⌈t·n⌉ + 1` (integer ppm arithmetic, no IEEE rounding in the
-    * bound). Soundness: J(x,y) ≥ t ⟹ |x∩y| ≥ t·max(|x|,|y|) ≥ ⌈t·|x|⌉;
-    * if no common token sat in x's prefix, all common tokens would fit in
-    * x's suffix of ⌈t·|x|⌉ − 1 slots — contradiction. So every qualifying
-    * pair shares a prefix token ON BOTH SIDES and one equi-join on the
-    * prefix token finds a candidate superset; an exact intersection/union
-    * verify (integer cross-multiplication, `inter·10⁶ ≥ tPpm·union`)
-    * finishes.
-    *
-    * 100 TB shape: rarest-first prefixes make posting lists short exactly
-    * where the join would explode (stopwords land at the END of every
-    * prefix order and rarely enter one); candidate pairs ≤ Σ_w df_prefix(w)²
-    * with df over PREFIX occurrences only. Two token-keyed shuffles + one
-    * pair-keyed verify join, all key-bounded; nothing collects.
-    *
-    * @param thresholdPpm Jaccard threshold in parts-per-million
-    * @return (doc_a, doc_b, j) with doc_a < doc_b, j = round(i/u, 6)
-    */
-  def prefixJaccardJoin(docs: DataFrame, thresholdPpm: Long): DataFrame = {
-    require(thresholdPpm > 0 && thresholdPpm <= 1000000L,
-      s"thresholdPpm out of (0, 1e6]: $thresholdPpm")
-    // one tokenize feeding document frequencies AND prefixes (the verify
-    // re-reads texts candidate-bounded, as in decontam_fuzzy)
-    val toks = docs.select(col("doc_id").cast("long").as("doc_id"),
-        explode(array_distinct(words(col("text")))).as("w"))
-      .localCheckpoint(false)
-    val dfreq = toks.groupBy("w").agg(count(lit(1)).as("df"))
-    val wDoc = Window.partitionBy("doc_id").orderBy(col("df").asc, col("w").asc)
-    val prefix = toks.join(dfreq, "w")
-      .withColumn("pos", row_number().over(wDoc))
-      .withColumn("n", count(lit(1)).over(Window.partitionBy("doc_id")))
-      // minOverlap = ⌈t·n⌉ in exact ppm integers
-      .withColumn("min_ov",
-        expr(s"(n * ${thresholdPpm}L + 999999L) div 1000000L"))
-      .filter(col("pos") <= col("n") - col("min_ov") + 1)
-      .select("doc_id", "w")
-    val cand = prefix.as("a").join(prefix.as("b"),
-        col("a.w") === col("b.w") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .distinct()
-    val sets = docs.select(col("doc_id").cast("long").as("doc_id"),
-      array_distinct(words(col("text"))).as("s"))
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("s").as("sa")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("s").as("sb")), "doc_b")
-      .withColumn("i", size(array_intersect(col("sa"), col("sb"))).cast("long"))
-      .withColumn("u", size(array_union(col("sa"), col("sb"))).cast("long"))
-      .filter(col("i") * lit(1000000L) >= lit(thresholdPpm) * col("u"))
-      .withColumn("j", round(col("i") / col("u"), 6))
-      .select("doc_a", "doc_b", "j")
-  }
-
   /** Edit-distance verification layer over a candidate pair table — the
     * character-exact final arbiter of a dedup cascade: candidates come
-    * from a BANDED generator ([[prefixJaccardJoin]], [[minhashPairs]],
-    * simhash bands), this op re-reads the two texts and keeps pairs whose
+    * from a BANDED generator ([[minhashPairs]], prefix-token or simhash
+    * bands), this op re-reads the two texts and keeps pairs whose
     * Levenshtein distance is ≤ `maxDist`, emitting the exact distance.
     * Token-set measures (Jaccard) are blind to word-internal edits and
     * ordering; edit distance is the boilerplate-suffix / typo-variant

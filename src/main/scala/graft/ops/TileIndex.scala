@@ -34,18 +34,25 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
     val m = new java.util.HashMap[Int, DecodedTile](rows.length * 2)
     rows.foreach { t =>
       val d = TileCodec.decode(t)
-      m.put(TileIndex.key(d.swLng, d.swLat), d)
+      val k = TileIndex.key(d.swLng, d.swLat)
+      if (k >= 0) m.put(k, d)
     }
     m
   }
 
   def size: Int = rows.length
 
+  /** The decoded tile with SW corner (swLng, swLat), or null: the missing
+    * tile of F8, and every corner off the 1° grid.
+    */
+  private def tileAt(swLng: Double, swLat: Double): DecodedTile =
+    decoded.get(TileIndex.key(swLng, swLat))
+
   /** Bilinear elevation at (lng, lat); missing tile ⇒ sea level 0 (F8). */
   def elevation(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else Bilinear.sampleGrid(d.samples, d.size, swLng, swLat, lng, lat)
   }
@@ -58,7 +65,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def slope2(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -84,7 +91,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def hillshade(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -115,7 +122,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def flowdirD8(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -148,7 +155,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def tri(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -166,43 +173,6 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
     }
   }
 
-  /** Topographic position index ×24 (map-algebra op, beyond the reference):
-    * `24·v_centre − Σ` over the 5×5 neighbourhood minus the centre (24
-    * cells, clamped at tile edges) at the grid node nearest to (lng, lat) —
-    * the ridge/valley-position classifier of terrain analysis (Weiss 2001,
-    * public): strongly positive on ridgetops (centre above its
-    * neighbourhood mean), strongly negative in valley bottoms, near 0 on
-    * planar slopes. Scaling the mean comparison by the neighbour count
-    * keeps it pure int64 on int16 samples, so oracle-exact; the classic
-    * index is this value / 24. Missing tile ⇒ 0.
-    */
-  def tpi(lng: Double, lat: Double): Double = {
-    val swLng = math.floor(lng)
-    val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
-    if (d == null) 0.0
-    else {
-      val size = d.size - 1
-      val (rn, cn) = Bilinear.nearestNode(d.size, swLng, swLat, lng, lat)
-      val vc = d.sample(rn, cn).toLong
-      var sum = 0L
-      var dr = -2
-      while (dr <= 2) {
-        var dc = -2
-        while (dc <= 2) {
-          if (!(dr == 0 && dc == 0)) {
-            val cc = math.min(size, math.max(0, cn + dc))
-            val rc = math.min(size, math.max(0, rn + dr))
-            sum += d.sample(rc, cc)
-          }
-          dc += 1
-        }
-        dr += 1
-      }
-      (24L * vc - sum).toDouble
-    }
-  }
-
   /** Discrete Laplacian curvature (map-algebra op, beyond the reference):
     * the 4-neighbour second difference N + S + E + W − 4·centre at the grid
     * node nearest to (lng, lat), neighbours clamped at tile edges — positive
@@ -212,7 +182,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def laplacian(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -235,7 +205,7 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def aspectOctant(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else {
       val size = d.size - 1
@@ -261,14 +231,23 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
   def elevationNearest(lng: Double, lat: Double): Double = {
     val swLng = math.floor(lng)
     val swLat = math.floor(lat)
-    val d = decoded.get(TileIndex.key(swLng.toInt, swLat.toInt))
+    val d = tileAt(swLng, swLat)
     if (d == null) 0.0
     else Bilinear.nearestGrid(d.samples, d.size, swLng, swLat, lng, lat)
   }
 }
 
 object TileIndex {
-  def key(swLng: Int, swLat: Int): Int = (swLat + 90) * 360 + (swLng + 180)
+  /** Int key of the 1° tile with floored SW corner (swLng, swLat): a
+    * bijection from the grid [−180, 179] × [−90, 89] onto [0, 64800), and
+    * -1 (no tile) for any other corner, NaN and ±∞ included. Lng 180.0 is
+    * valid GeoJSON; the reference keys it N36E180-style, a tile that does
+    * not exist, so it samples 0 instead of aliasing W180 one row north.
+    */
+  def key(swLng: Double, swLat: Double): Int =
+    if (swLng >= -180 && swLng <= 179 && swLat >= -90 && swLat <= 89)
+      (swLat.toInt + 90) * 360 + (swLng.toInt + 180)
+    else -1
 
   /** D8 neighbour offsets, index i ⇒ code 1<<i: E SE S SW W NW N NE
     * (HGT north-first rows: +dr = south).
@@ -303,7 +282,6 @@ case class ElevAtExpr(left: Expression, right: Expression,
       case "hillshade"        => bc.value.hillshade(x, y)
       case "flowdirD8"        => bc.value.flowdirD8(x, y)
       case "tri"              => bc.value.tri(x, y)
-      case "tpi"              => bc.value.tpi(x, y)
       case "laplacian"        => bc.value.laplacian(x, y)
       case "aspectOctant"     => bc.value.aspectOctant(x, y)
       case _                  => bc.value.elevation(x, y)
@@ -344,10 +322,6 @@ object ElevAt {
     GraftColumns.column(ElevAtExpr(
       GraftColumns.expression(lng.cast(DoubleType)),
       GraftColumns.expression(lat.cast(DoubleType)), bc, "tri"))
-  def elev_tpi(lng: Column, lat: Column, bc: Broadcast[TileIndex]): Column =
-    GraftColumns.column(ElevAtExpr(
-      GraftColumns.expression(lng.cast(DoubleType)),
-      GraftColumns.expression(lat.cast(DoubleType)), bc, "tpi"))
   def elev_curvature(lng: Column, lat: Column, bc: Broadcast[TileIndex]): Column =
     GraftColumns.column(ElevAtExpr(
       GraftColumns.expression(lng.cast(DoubleType)),

@@ -69,68 +69,4 @@ object TilePyramid {
       ImageCodec.encodeTerrariumPng(elevs, outSize))
   }
 
-  /** The pyramid BUILD step — the upward complement of [[materialize]]:
-    * assemble every 2°×2° block of source tiles into one mosaic and
-    * box-downsample it 2:1 (each output sample = arithmetic mean of its 2×2
-    * source block, exact integer `(a+b+c+d) >> 2`). Tiles share their edge
-    * row/column with their neighbours (the SRTM overlap convention), so the
-    * mosaic takes each tile's `size−1` interior rows/columns — the
-    * assembled block is exactly 2·(size−1) square and the output
-    * (size−1)². Missing tiles contribute 0, the engine's F8 no-data rule.
-    *
-    * Scale shape: ONE shuffle keyed by the 2° parent block (each group
-    * holds ≤ 4 tiles — bounded state), decode inside the group, emit one
-    * stats row; a planet-scale pyramid build is a single key-bounded
-    * groupBy whose output is itself the next level's input.
-    *
-    * @return (plng, plat, n_px, v_sum, vr_sum, vc_sum) — position-weighted
-    *         moments of the downsampled mosaic (the img_augment pinning
-    *         trick: Σv, Σv·r, Σv·c identify the raster up to permutation)
-    */
-  def downsampleMosaic(tiles: Dataset[TileRow]) = {
-    val spark = tiles.sparkSession
-    import spark.implicits._
-    tiles
-      .groupByKey { t =>
-        val (lng, lat) = graft.geo.TileKey.toDegrees(t.image_id)
-        (Math.floorDiv(lng, 2) * 2, Math.floorDiv(lat, 2) * 2)
-      }
-      .mapGroups { (key: (Int, Int), it: Iterator[TileRow]) =>
-        val (plng, plat) = key
-        val grids = scala.collection.mutable.Map[(Int, Int), (Array[Short], Int)]()
-        var inner = 600
-        it.foreach { t =>
-          val d = TileCodec.decode(t)
-          inner = d.size - 1
-          grids((d.swLng - plng, d.swLat - plat)) = (d.samples, d.size)
-        }
-        var vSum = 0L; var vrSum = 0L; var vcSum = 0L
-        var r = 0
-        while (r < inner) {
-          var c = 0
-          while (c < inner) {
-            var s4 = 0L
-            var dr = 0
-            while (dr < 2) {
-              var dc = 0
-              while (dc < 2) {
-                val rr = 2 * r + dr; val cc = 2 * c + dc
-                grids.get((cc / inner, rr / inner)) match {
-                  case Some((g, size)) => s4 += g((rr % inner) * size + (cc % inner))
-                  case None => ()
-                }
-                dc += 1
-              }
-              dr += 1
-            }
-            val v = s4 >> 2
-            vSum += v; vrSum += v * r; vcSum += v * c
-            c += 1
-          }
-          r += 1
-        }
-        (plng, plat, inner.toLong * inner, vSum, vrSum, vcSum)
-      }
-      .toDF("plng", "plat", "n_px", "v_sum", "vr_sum", "vc_sum")
-  }
 }

@@ -310,95 +310,6 @@ object Trajectory {
       .select("traj_id", "tie", "dist_q", "dt_us", "speed_q", "flagged")
   }
 
-  /** Acceleration profile + harsh-event audit — the fleet-telematics rollup
-    * one derivative above [[speedFlags]]: per consecutive segment pair the
-    * quantized acceleration `(speed_q − prev_speed_q)·10⁶ DIV dt_us`
-    * (trunc-div toward zero — Spark DIV and DuckDB `//` agree on negatives,
-    * so braking rows replay exactly), counted against a harsh threshold in
-    * both directions. Rows where either speed is undefined (first two fixes
-    * of a trajectory, same-instant fixes) are excluded from the audit, the
-    * exact contract a real telematics scorer applies.
-    *
-    * 100 TB shape: the same single traj_id window partitioning as
-    * speedFlags (the two extra lags reuse the sort), then one key-bounded
-    * rollup — one row per trajectory, no second shuffle.
-    *
-    * @return (traj_id, n_acc, n_harsh_brake, n_harsh_accel, min_accel_q,
-    *          max_accel_q)
-    */
-  def accelFlags(points: DataFrame, harshQ: Long): DataFrame = {
-    require(harshQ > 0, s"harshQ must be positive: $harshQ")
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val w = Window.partitionBy("traj_id").orderBy("ts_us", "tie")
-    points
-      .select(col("traj_id"), col("ts_us").cast(LongType), col("tie"),
-        floor(col("lng") * lit(1000000.0)).cast(LongType).as("xq"),
-        floor(col("lat") * lit(1000000.0)).cast(LongType).as("yq"))
-      .withColumn("pts", lag("ts_us", 1).over(w))
-      .withColumn("px", lag("xq", 1).over(w))
-      .withColumn("py", lag("yq", 1).over(w))
-      .withColumn("dist_q", coalesce(
-        floor(sqrt(((col("xq") - col("px")) * (col("xq") - col("px")) +
-          (col("yq") - col("py")) * (col("yq") - col("py"))).cast("double")))
-          .cast(LongType), lit(0L)))
-      .withColumn("dt_us", coalesce(col("ts_us") - col("pts"), lit(0L)))
-      .withColumn("speed_q", expr(
-        """CASE WHEN pts IS NULL THEN 0L
-           WHEN dt_us = 0L AND dist_q = 0L THEN 0L
-           WHEN dt_us = 0L THEN -1L
-           ELSE (dist_q * 1000000L) DIV dt_us END"""))
-      .withColumn("prev_sq", lag("speed_q", 1).over(w))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("prev_sq").isNotNull && col("prev_sq") =!= -1L &&
-        col("speed_q") =!= -1L && col("dt_us") > 0L && col("rn") > 2)
-      .withColumn("accel_q",
-        expr("((speed_q - prev_sq) * 1000000L) DIV dt_us"))
-      .groupBy("traj_id")
-      .agg(count(lit(1)).as("n_acc"),
-        sum(when(col("accel_q") <= -harshQ, 1L).otherwise(0L))
-          .as("n_harsh_brake"),
-        sum(when(col("accel_q") >= harshQ, 1L).otherwise(0L))
-          .as("n_harsh_accel"),
-        min("accel_q").as("min_accel_q"),
-        max("accel_q").as("max_accel_q"))
-  }
-
-  /** The composed trajectory pipeline — the spatial analogue of the
-    * curation stack's dedup→quality→decontam→budget chain, stitching this
-    * module's stages into the shape a production movement-analytics job
-    * actually runs:
-    *
-    *   [[speedFlags]] (drop implausible fixes) → [[resample]] (same-instant
-    *   ticks) → 0.1° grid-cell assignment (offset integer DIV — engine-
-    *   exact) → [[odMatrix]] (first→last flows).
-    *
-    * Every stage is the already-gated operator — the pipeline gate proves
-    * the COMPOSITION (cleaning changes which segments exist, resampling
-    * changes which instants are compared, the OD rollup sees only clean
-    * aligned ticks), not new math. Plan shape: the stages share the
-    * traj_id partitioning; the only new exchange beyond the stage set is
-    * the final (o, d) rollup.
-    *
-    * @return (o_cell, d_cell, n_traj)
-    */
-  def cleanPipeline(points: DataFrame, maxSpeedQ: Long,
-                    stepUs: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val flagged = speedFlags(points, maxSpeedQ)
-      .filter(col("flagged"))
-      .select(col("traj_id").as("f_traj"), col("tie").as("f_tie"))
-    val clean = points.join(flagged,
-      points("traj_id") === flagged("f_traj") &&
-        points("tie") === flagged("f_tie"), "left_anti")
-    val ticks = resample(clean, stepUs)
-      .select(col("traj_id"), col("tick_us").as("ts"),
-        col("tick_us").as("tie"),
-        (expr("((ax + 180000000) DIV 100000) * 10000") +
-          expr("(ay + 90000000) DIV 100000")).as("cell"))
-    odMatrix(ticks)
-  }
-
   /** Point-at-fraction along every line (the turf `along` primitive as a
     * batch op): for each requested fraction f of a line's total length,
     * the interpolated position — waypoint/milestone extraction, label
@@ -459,92 +370,6 @@ object Trajectory {
         """CASE WHEN seg_q = 0 THEN yq
            ELSE py + CASE WHEN yq >= py THEN ((yq - py) * offq) DIV seg_q
                      ELSE -(((py - yq) * offq) DIV seg_q) END END AS ay""")
-  }
-
-  /** Symmetric (discrete) Hausdorff distance between trajectory pairs —
-    * the track-similarity refine of trajectory dedup / map-matching QA:
-    * for each candidate pair `(t1, t2)`,
-    * `H² = max( max_a min_b d²(a,b), max_b min_a d²(a,b) )` over the two
-    * point sets, exact integer squared distances throughout (no sqrt — H²
-    * ranks identically and stays oracle-exact).
-    *
-    * Plan shape — the standard candidate/refine split of every join
-    * family here: CANDIDATE pairs are the caller's (typically
-    * [[colocation]]'s cell-level output — trajectories sharing space-time
-    * cells), so the quadratic a×b expansion is confined to pairs already
-    * known to be close, bounded per pair by the two track lengths (the
-    * same per-pair-quadratic contract as the exact-Jaccard verify after
-    * MinHash banding). Within a pair: one pair-keyed join replicating each
-    * side once, a `(pair, probe-point)`-keyed MIN, a pair-keyed MAX —
-    * all key-bounded shuffles; both directions share the one expansion
-    * (min over b per a-point AND min over a per b-point read the same
-    * joined rows). Never all-pairs across trajectories; nothing collects.
-    *
-    * @param points (traj_id, px, py) integer track points
-    * @param pairs  (t1, t2) candidate pairs, t1 < t2 by caller contract
-    * @return (t1, t2, n_a, n_b, hausdorff_d2)
-    */
-  /** Viterbi map-matching (HMM decoding, Newson & Krumm 2009 shape, public)
-    * in exact integers: snap a GPS fix sequence to the road-node grid by
-    * minimizing Σ emission + Σ transition, where emission(t, s) = squared
-    * distance fix_t→node_s and transition(s′, s) = `tw`·manhattan(s′, s)
-    * (the road-continuity prior that plain per-fix nearest-node snapping
-    * lacks — it jumps roads on noisy fixes). Output is the full Viterbi
-    * COST TABLE v(t, s) plus the decoded end state per trajectory, so an
-    * independent engine replays the recurrence step by step without
-    * backpointers.
-    *
-    * Scale shape: one groupByKey on the trajectory; per-key state is the
-    * T×S table (fix count × node grid, both bounded constants of the
-    * matcher, NOT data-sized). The nodes table is a plan-time literal.
-    *
-    * @param fixes (traj_id, seq, px, py) integer coordinates
-    * @param nodes (node_id, nx, ny) the road grid (small, literal)
-    * @param tw    transition weight
-    * @return (traj_id, step, node_id, cost) — every DP cell — plus the
-    *         per-(traj, step) decoded node via min cost (cost ties by
-    *         node_id are broken by the consumer's ORDER BY)
-    */
-  def mapMatch(fixes: DataFrame, nodes: Seq[(Long, Long, Long)],
-               tw: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val spark = fixes.sparkSession
-    import spark.implicits._
-    val nArr = nodes.sortBy(_._1).toArray
-    fixes.select(col("traj_id").cast("long"), col("seq").cast("int"),
-        col("px").cast("long"), col("py").cast("long"))
-      .as[(Long, Int, Long, Long)]
-      .groupByKey(_._1)
-      .flatMapGroups { (traj: Long, it: Iterator[(Long, Int, Long, Long)]) =>
-        val fx = it.toArray.sortBy(_._2)
-        val nS = nArr.length
-        var prev: Array[Long] = null
-        fx.iterator.flatMap { case (_, step, px, py) =>
-          val cur = new Array[Long](nS)
-          var s = 0
-          while (s < nS) {
-            val (_, nx, ny) = nArr(s)
-            val em = (px - nx) * (px - nx) + (py - ny) * (py - ny)
-            if (prev == null) cur(s) = em
-            else {
-              var best = Long.MaxValue
-              var p = 0
-              while (p < nS) {
-                val (_, pnx, pny) = nArr(p)
-                val t = prev(p) +
-                  tw * (math.abs(nx - pnx) + math.abs(ny - pny))
-                if (t < best) best = t
-                p += 1
-              }
-              cur(s) = best + em
-            }
-            s += 1
-          }
-          prev = cur
-          nArr.indices.map(s2 => (traj, step, nArr(s2)._1, cur(s2)))
-        }
-      }
-      .toDF("traj_id", "step", "node_id", "cost")
   }
 
   /** Discrete Fréchet distance (squared, exact integers) — the ORDER-AWARE
@@ -616,9 +441,9 @@ object Trajectory {
   }
 
   /** Dynamic Time Warping (squared-distance costs, exact integers) — the
-    * elastic-alignment member of the similarity trio: [[frechet]] takes
-    * the MAX edge of the best coupling, [[lcss]] counts tolerance
-    * matches, DTW SUMS the cost along the optimal monotone alignment
+    * elastic-alignment member of the similarity family: [[frechet]] takes
+    * the MAX edge of the best coupling, DTW SUMS the cost along the
+    * optimal monotone alignment
     * `dtw(i,j) = d²(i,j) + min(dtw(i−1,j), dtw(i−1,j−1), dtw(i,j−1))`.
     * Same pair-keyed lattice and per-pair bounded DP; the oracle unrolls
     * the identical recurrence per anti-diagonal.
@@ -678,66 +503,6 @@ object Trajectory {
       .toDF("t1", "t2", "n_a", "n_b", "dtw_d2")
   }
 
-  /** LCSS trajectory similarity (Vlachos–Kollios–Gunopulos 2002, public):
-    * longest common subsequence of fixes under a spatial tolerance —
-    * match when d² ≤ eps2, else carry max(skip-a, skip-b). Robust to
-    * outlier fixes the way [[frechet]] (which must couple EVERY point)
-    * is not; sim_ppm = 10⁶·lcss/min(n_a,n_b). Same pair-keyed lattice
-    * build and per-pair bounded DP as frechet; the oracle unrolls the
-    * identical recurrence per anti-diagonal with COALESCE-0 borders.
-    *
-    * @param points (traj_id, seq, px, py) integer coordinates
-    * @param pairs  (t1, t2)
-    * @return (t1, t2, n_a, n_b, lcss_len, sim_ppm)
-    */
-  def lcss(points: DataFrame, pairs: DataFrame, eps2: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val spark = points.sparkSession
-    import spark.implicits._
-    val a = pairs.join(points.select(col("traj_id").as("t1"),
-      col("seq").cast("int").as("i"), col("px").cast("long").as("ax"),
-      col("py").cast("long").as("ay")), "t1")
-    val cells = a.join(points.select(col("traj_id").as("t2"),
-        col("seq").cast("int").as("j"), col("px").cast("long").as("bx"),
-        col("py").cast("long").as("by")), "t2")
-      .select(col("t1").cast("long"), col("t2").cast("long"), col("i"),
-        col("j"),
-        ((col("ax") - col("bx")) * (col("ax") - col("bx")) +
-          (col("ay") - col("by")) * (col("ay") - col("by"))).as("d2"))
-    cells.as[(Long, Long, Int, Int, Long)]
-      .groupByKey { case (t1, t2, _, _, _) => (t1, t2) }
-      .mapGroups { (key: (Long, Long), it: Iterator[(Long, Long, Int, Int, Long)]) =>
-        val (t1, t2) = key
-        val m = it.toArray
-        var nA = 0; var nB = 0
-        m.foreach { case (_, _, i, j, _) =>
-          if (i >= nA) nA = i + 1
-          if (j >= nB) nB = j + 1
-        }
-        val d2 = Array.fill(nA * nB)(Long.MaxValue)
-        m.foreach { case (_, _, i, j, v) => d2(i * nB + j) = v }
-        val ca = new Array[Long](nA * nB)
-        var i = 0
-        while (i < nA) {
-          var j = 0
-          while (j < nB) {
-            val v =
-              if (d2(i * nB + j) <= eps2)
-                (if (i > 0 && j > 0) ca((i - 1) * nB + j - 1) else 0L) + 1L
-              else math.max(
-                if (i > 0) ca((i - 1) * nB + j) else 0L,
-                if (j > 0) ca(i * nB + j - 1) else 0L)
-            ca(i * nB + j) = v
-            j += 1
-          }
-          i += 1
-        }
-        val len = ca(nA * nB - 1)
-        (t1, t2, nA, nB, len, len * 1000000L / math.min(nA, nB))
-      }
-      .toDF("t1", "t2", "n_a", "n_b", "lcss_len", "sim_ppm")
-  }
-
   def hausdorff(points: DataFrame, pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     val a = pairs.join(points.select(col("traj_id").as("t1"),
@@ -760,156 +525,11 @@ object Trajectory {
         greatest(col("h_ab"), col("h_ba")).as("hausdorff_d2"))
   }
 
-  /** Geofence transition extraction — the enter/exit event stream every
-    * fleet/alerting system derives from raw fixes: each fix is tested
-    * against every fence ring (even-odd [[graft.geo.RayCast]], the same
-    * codegen'd predicate as the PIP join), then ONE per-(traj, fence) lag
-    * compares consecutive memberships and keeps only the flips. Fences are
-    * a broadcast literal table (alert geofences are thousands, not
-    * billions); the only shuffle is the (traj_id, fence_id) window, and
-    * rows leaving the operator are transitions only — at 100 TB of fixes
-    * the output is the tiny event stream, never the per-fix membership.
-    *
-    * A fix exactly on a fence edge follows ray-cast open-edge semantics
-    * (may land either side — callers needing closed fences buffer first).
-    *
-    * @param points (traj_id, tie, ts_us, lng, lat) fixes; (ts_us, tie)
-    *               must totally order each trajectory
-    * @param fences (fence_id, xs, ys) packed rings, broadcast-sized
-    * @return (traj_id, fence_id, tie, ts_us, event) — event ∈
-    *         {enter, exit}, ordered flips only (first fix emits nothing)
-    */
-  def geofence(points: DataFrame, fences: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("traj_id", "fence_id").orderBy("ts_us", "tie")
-    points.crossJoin(broadcast(fences))
-      .withColumn("inside",
-        SpatialJoin.ray_cast(col("lng"), col("lat"), col("xs"), col("ys"))
-          .cast("int"))
-      .withColumn("prev", lag(col("inside"), 1).over(w))
-      .filter(col("prev").isNotNull && col("prev") =!= col("inside"))
-      .select(col("traj_id"), col("fence_id"), col("tie"), col("ts_us"),
-        when(col("inside") === 1, lit("enter")).otherwise(lit("exit"))
-          .as("event"))
-  }
-
-  /** Per-(trajectory, fence) dwell accumulation — the billing/exposure
-    * metric behind every geofence product (time on site, zone occupancy):
-    * each inter-fix interval `[tsᵢ, tsᵢ₊₁)` is attributed to the fences the
-    * EARLIER fix is inside (left-continuous step interpolation — exact
-    * integer µs, no midpoint floats), the last fix of a trajectory
-    * contributes 0. `visits` counts entry events, the first fix counting
-    * as an entry when it is already inside. Same broadcast-fence ×
-    * per-(traj, fence) window shape as [[geofence]]; the output is one row
-    * per pair that was ever visited — sparse at fleet scale, never the
-    * per-fix membership.
-    *
-    * @param points (traj_id, tie, ts_us, lng, lat)
-    * @param fences (fence_id, xs, ys) packed rings, broadcast-sized
-    * @return (traj_id, fence_id, n_inside, visits, dwell_us)
-    */
-  def fenceDwell(points: DataFrame, fences: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("traj_id", "fence_id").orderBy("ts_us", "tie")
-    points.crossJoin(broadcast(fences))
-      .withColumn("inside",
-        SpatialJoin.ray_cast(col("lng"), col("lat"), col("xs"), col("ys"))
-          .cast("int"))
-      .withColumn("prev", lag(col("inside"), 1).over(w))
-      .withColumn("dt_us",
-        coalesce(lead(col("ts_us"), 1).over(w) - col("ts_us"), lit(0L)))
-      .groupBy("traj_id", "fence_id")
-      .agg(
-        sum(col("inside").cast("long")).as("n_inside"),
-        sum(when(col("inside") === 1 &&
-          (col("prev").isNull || col("prev") === 0), 1L).otherwise(0L))
-          .as("visits"),
-        sum(when(col("inside") === 1, col("dt_us")).otherwise(0L))
-          .as("dwell_us"))
-      .filter(col("n_inside") > 0)
-  }
-
-  /** Home/work anchor inference — the mobility-analytics primitive behind
-    * commute matrices and user geocoding: fixes are snapped to 0.005°
-    * cells (`floor(coord·200)`, one IEEE multiply both engines replay
-    * bit-equally), bucketed into the night (hour < 6 → "home") and
-    * business-hours (9 ≤ hour < 17 → "work") regimes, and the modal cell
-    * per (trajectory, regime) wins — ties break on (cell_x, cell_y) so the
-    * answer is deterministic. Both shuffles are key-bounded: the count
-    * aggregates raw fixes down to cells first, and the top-1 window ranks
-    * only the per-cell counts — never the 100 TB of fixes.
-    *
-    * @param points (traj_id, hour, lng, lat) fixes; hour ∈ [0, 24)
-    * @return (traj_id, regime, cell_x, cell_y, n_fixes) — regime ∈
-    *         {home, work}, one row per (traj, regime) with ≥1 fix
-    */
-  def anchors(points: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("traj_id", "regime")
-      .orderBy(col("n_fixes").desc, col("cell_x"), col("cell_y"))
-    points
-      .withColumn("regime", when(col("hour") < 6, "home")
-        .when(col("hour") >= 9 && col("hour") < 17, "work"))
-      .filter(col("regime").isNotNull)
-      .withColumn("cell_x", floor(col("lng") * lit(200.0)).cast("long"))
-      .withColumn("cell_y", floor(col("lat") * lit(200.0)).cast("long"))
-      .groupBy("traj_id", "regime", "cell_x", "cell_y")
-      .agg(count(lit(1)).as("n_fixes"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
-  }
-
-  /** Corridor-compliance audit — per fix, is the point within radius `r`
-    * of the reference polyline (route adherence / geofenced-lane QA)?
-    * Exact integers throughout: per segment the squared point-to-segment
-    * distance comparison is regionized (endpoint A if AP·AB ≤ 0, endpoint
-    * B if AP·AB ≥ |AB|², else the perpendicular case cross² ≤ r²·|AB|² —
-    * cross-multiplied so no division ever happens), OR'd over segments.
-    *
-    * 100 TB shape: the corridor rides the plan as literals (no join, pure
-    * codegen'd comparisons per fix), then ONE traj-keyed aggregation.
-    *
-    * @param points (traj_id, seq, px, py) integer coordinates
-    * @param segs   corridor polyline segments (ax, ay, bx, by), each with
-    *               nonzero length
-    * @return (traj_id, n_fixes, n_inside, first_out, last_out) — the out
-    *         columns NULL when fully compliant
-    */
-  def corridorAudit(points: DataFrame, segs: Seq[(Long, Long, Long, Long)],
-                    r: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
-    require(segs.nonEmpty, "need at least one segment")
-    require(segs.forall { case (ax, ay, bx, by) => ax != bx || ay != by },
-      "degenerate zero-length segment")
-    val r2 = r * r
-    val inside = segs.map { case (ax, ay, bx, by) =>
-      val abx = bx - ax; val aby = by - ay
-      val ab2 = abx * abx + aby * aby
-      val apx = col("px") - ax; val apy = col("py") - ay
-      val bpx = col("px") - bx; val bpy = col("py") - by
-      val dot = apx * abx + apy * aby
-      val cross = apx * aby - apy * abx
-      when(dot <= 0, apx * apx + apy * apy <= r2)
-        .when(dot >= ab2, bpx * bpx + bpy * bpy <= r2)
-        .otherwise(cross * cross <= lit(r2) * lit(ab2))
-    }.reduce(_ || _)
-    points.withColumn("inside", inside)
-      .groupBy("traj_id").agg(
-        count(lit(1)).as("n_fixes"),
-        sum(when(col("inside"), 1L).otherwise(0L)).as("n_inside"),
-        min(when(!col("inside"), col("seq"))).as("first_out"),
-        max(when(!col("inside"), col("seq"))).as("last_out"))
-  }
-
   /** EDR trajectory distance (Chen–Özsu–Oria 2005, public): edit distance
     * on real sequences — insertions/deletions cost 1, a substitution
     * costs 0 when the fixes match within `eps2` (squared tolerance) and
-    * 1 otherwise. Completes the [[dtw]]/[[frechet]]/[[lcss]] family: EDR
-    * penalizes gaps (LCSS ignores them) yet tolerates noise (DTW
-    * couples every point). Same pair-keyed lattice fold in mapGroups;
+    * 1 otherwise. Completes the [[dtw]]/[[frechet]] family: EDR
+    * penalizes gaps yet tolerates noise (DTW couples every point). Same pair-keyed lattice fold in mapGroups;
     * at 100 TB the lattice per pair is bounded by the resampled fix
     * budget, and pairs shard by the pairs relation.
     *

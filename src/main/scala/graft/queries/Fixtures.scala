@@ -141,40 +141,6 @@ object Fixtures {
           concat(col("text"), lit(" zz qq ww ee rr tt")).as("text")))
   }
 
-  /** Corridor polyline shared by traj_corridor's engine call and oracle
-    * expression generator.
-    */
-  private[graft] val corridorSegs: Seq[(Long, Long, Long, Long)] =
-    Seq((0L, 0L, 200L, 130L), (200L, 130L, 500L, 200L),
-      (500L, 200L, 6000L, 300L))
-
-  /** Per-segment regionized integer point-to-segment radius test, OR'd —
-    * the SQL mirror of [[ops.Trajectory.corridorAudit]]'s Column chain.
-    */
-  private[graft] def corridorInsideSql(segs: Seq[(Long, Long, Long, Long)],
-                                r: Long): String =
-    segs.map { case (ax, ay, bx, by) =>
-      val abx = bx - ax; val aby = by - ay
-      val ab2 = abx * abx + aby * aby
-      val r2 = r * r
-      s"""(CASE WHEN (px-($ax))*($abx) + (py-($ay))*($aby) <= 0
-          THEN (px-($ax))*(px-($ax)) + (py-($ay))*(py-($ay)) <= $r2
-          WHEN (px-($ax))*($abx) + (py-($ay))*($aby) >= $ab2
-          THEN (px-($bx))*(px-($bx)) + (py-($by))*(py-($by)) <= $r2
-          ELSE ((px-($ax))*($aby) - (py-($ay))*($abx))
-             * ((px-($ax))*($aby) - (py-($ay))*($abx)) <= ${r2 * ab2} END)"""
-    }.mkString("(", " OR ", ")")
-
-  /** One h-index round as a CTE: rank neighbors' h desc, h' = max
-    * min(rank, value).
-    */
-  private[graft] def corenessRoundCte(k: Int): String =
-    s"""h$k AS (SELECT u AS node, CAST(max(least(rk, hv)) AS BIGINT) AS h
-       FROM (SELECT s.u, hh.h AS hv, CAST(row_number() OVER (
-           PARTITION BY s.u ORDER BY hh.h DESC, s.v) AS BIGINT) AS rk
-         FROM sym s JOIN h${k - 1} hh ON hh.node = s.v) t
-       GROUP BY u)"""
-
   /** Synthetic media metadata from supplier (closed-form, so the DuckDB
     * oracle can replay any byte of the generated payload; MediaOps.synth
     * builds the actual binary column from the same formula).
@@ -233,35 +199,5 @@ object Fixtures {
       "c_custkey AS point_id",
       "-180 + (c_custkey % 360) + 0.5D AS lng",
       "-90 + ((c_custkey * 7) % 180) + 0.25D AS lat")
-
-  /** D8 steepest-descent successor table of the synthetic multi-basin
-    * 100×100 grid (first maximal drop wins, borders excluded) — shared by
-    * the hydrology queries (watershed labels, flow accumulation).
-    * Neighbours go through explode + rank, not a folded struct-max
-    * expression: a when()-fold over 8 struct candidates duplicates the
-    * accumulated tree per comparison (2⁸ blowup — kills codegen).
-    */
-  private[graft] def d8SuccGrid(s: SparkSession): DataFrame = {
-    val n = 100
-    val nb = s.range(n.toLong * n)
-      .selectExpr("id AS cell", s"id DIV $n AS i", s"id % $n AS j")
-      .selectExpr("cell", "i", "j", "(i*i)%97 + (j*j)%89 + (i*j)%31 AS e")
-      .withColumn("k", explode(sequence(lit(0), lit(7))))
-      .selectExpr("cell", "e", "k",
-        "i + element_at(array(1,1,0,-1,-1,-1,0,1), k+1) AS ni",
-        "j + element_at(array(0,1,1,1,0,-1,-1,-1), k+1) AS nj")
-    val sc = nb.selectExpr("cell", "k", "ni", "nj",
-      s"""CASE WHEN ni BETWEEN 0 AND ${n - 1} AND nj BETWEEN 0 AND ${n - 1}
-            AND e - ((ni*ni)%97 + (nj*nj)%89 + (ni*nj)%31) > 0
-          THEN e - ((ni*ni)%97 + (nj*nj)%89 + (ni*nj)%31)
-          ELSE -1 END AS drp""")
-    // first maximal drop wins (drp DESC, then direction order k)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("cell").orderBy(col("drp").desc, col("k").asc)
-    sc.withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .selectExpr("cell",
-        s"CASE WHEN drp > 0 THEN ni*$n + nj ELSE cell END AS succ")
-  }
 
 }

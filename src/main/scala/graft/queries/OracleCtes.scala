@@ -38,28 +38,6 @@ object OracleCtes {
        FROM p0 WHERE point_id % 10 = 0)""",
     "SELECT line_id, seq, lng, lat FROM keeps ORDER BY line_id, seq")
 
-  /** Chunked-DP oracle: the SAME unrolled-level machinery, but the point
-    * source re-keys each line into (line·100000 + chunk) groups with every
-    * chunk-boundary vertex duplicated into both neighbouring chunks — the
-    * engine's split-apply contract — and the final select maps group ids
-    * back to lines (DISTINCT dedups the shared boundary keeps). Chunks
-    * hold ≤ chunk+1 points, so split depth ≤ log-bounded ≪ `levels`.
-    */
-  private[graft] def simplifyChunkedOracleSql(levels: Int, chunk: Int): String =
-    simplifyOracleCore(
-      levels,
-      s"""base AS (SELECT point_id % 199 AS line_id, point_id AS seq, lng, lat
-         FROM p0 WHERE point_id % 10 = 0),
-       rb AS (SELECT line_id, seq, lng, lat,
-           row_number() OVER (PARTITION BY line_id ORDER BY seq) - 1 AS r FROM base),
-       pts AS MATERIALIZED (
-         SELECT line_id*100000 + (r // $chunk) AS line_id, seq, lng, lat FROM rb
-         UNION ALL
-         SELECT line_id*100000 + (r // $chunk) - 1 AS line_id, seq, lng, lat
-         FROM rb WHERE r % $chunk = 0 AND r > 0)""",
-      """SELECT DISTINCT line_id // 100000 AS line_id, seq, lng, lat FROM keeps
-       ORDER BY line_id, seq""")
-
   private[graft] def simplifyOracleCore(levels: Int, ptsSql: String,
                                  finalSelect: String): String = {
     // segments CARRY their chord-endpoint coords (alng/alat/blng/blat) so
@@ -283,118 +261,7 @@ object OracleCtes {
        ORDER BY point_id, poly_id"""
   }
 
-  /** Greedy graph-search oracle: the degree-4 exact kNN graph + `rounds`
-    * unrolled argmin CTEs (state ∪ neighbors, tie (d2, id)), then the
-    * brute-force NN join. All distances are BIGINT sums over the
-    * milli-floored vectors — bit-equal to the engine's exact-integer
-    * vec_dist2 doubles.
-    */
-  private[graft] def greedySearchOracleSql(rounds: Int): String = {
-    def d2(a: String, b: String) =
-      s"""list_reduce(list_prepend(CAST(0 AS BIGINT), list_transform(range(0, 64),
-         d -> ($a[d+1] - $b[d+1]) * ($a[d+1] - $b[d+1]))), (p, q) -> p + q)"""
-    val steps = (1 to rounds).map { k =>
-      s"""s$k AS (SELECT query_id, qv, cid AS id, nd2 AS d2,
-           hops + moved AS hops
-         FROM (SELECT u.*, row_number() OVER (PARTITION BY query_id
-             ORDER BY nd2, cid) AS rn
-           FROM (SELECT query_id, qv, id AS cid, d2 AS nd2, hops,
-               CAST(0 AS BIGINT) AS moved FROM s${k - 1}
-             UNION ALL
-             SELECT s.query_id, s.qv, g.nbr AS cid,
-               ${d2("s.qv", "c.nv")} AS nd2, s.hops, CAST(1 AS BIGINT) AS moved
-             FROM s${k - 1} s JOIN graph g ON s.id = g.node
-             JOIN corpus c ON g.nbr = c.id) u)
-         WHERE rn = 1)"""
-    }.mkString(",\n       ")
-    s"""WITH e AS (SELECT vec_id, list_transform(range(0, 64),
-           d -> CAST(floor(CAST(embedding[d+1] AS DOUBLE) * 1000.0) AS BIGINT)) AS vq
-         FROM embeddings),
-       corpus AS (SELECT vec_id AS id, vq AS nv FROM e WHERE vec_id % 16 = 0),
-       graph AS (SELECT node, nbr FROM (
-           SELECT a.id AS node, b.id AS nbr,
-             row_number() OVER (PARTITION BY a.id
-               ORDER BY ${d2("a.nv", "b.nv")}, b.id) AS rn
-           FROM corpus a JOIN corpus b ON a.id <> b.id)
-         WHERE rn <= 4),
-       queries AS (SELECT vec_id AS query_id, vq AS qv FROM e WHERE vec_id % 160 = 7),
-       entry AS (SELECT min(id) AS eid FROM corpus),
-       s0 AS (SELECT q.query_id, q.qv, c.id,
-           ${d2("q.qv", "c.nv")} AS d2, CAST(0 AS BIGINT) AS hops
-         FROM queries q CROSS JOIN entry JOIN corpus c ON c.id = entry.eid),
-       $steps,
-       ex AS (SELECT query_id, id AS exact_id, ed2 AS exact_d2 FROM (
-           SELECT q.query_id, c.id, ${d2("q.qv", "c.nv")} AS ed2,
-             row_number() OVER (PARTITION BY q.query_id
-               ORDER BY ${d2("q.qv", "c.nv")}, c.id) AS rn
-           FROM queries q CROSS JOIN corpus c)
-         WHERE rn = 1)
-       SELECT s.query_id, s.id AS found_id, s.d2 AS found_d2, s.hops,
-         ex.exact_id, ex.exact_d2,
-         CASE WHEN s.id = ex.exact_id THEN 1 ELSE 0 END AS is_exact
-       FROM s$rounds s JOIN ex ON s.query_id = ex.query_id
-       ORDER BY s.query_id"""
-  }
-
-  /** Polylabel oracle: even-odd membership on the 16×16 cell-center
-    * lattice (same crossings fragment as the PIP oracle), the L1 distance
-    * stated DEFINITIONALLY as the inside×outside pair minimum (LEAST'd
-    * with the border distance), argmax with (dist desc, gy, gx) ties.
-    */
-  private[graft] def polylabelOracleSql: String = {
-    val j = "((i + len(xss[r]) - 2) % len(xss[r])) + 1"
-    val crossings = s"""list_sum(list_transform(range(1, len(xss)+1), r ->
-        len(list_filter(range(1, len(xss[r])+1), i ->
-          (yss[r][i] > py) <> (yss[r][$j] > py)
-          AND px < (xss[r][$j] - xss[r][i]) * (py - yss[r][i]) / (yss[r][$j] - yss[r][i]) + xss[r][i]))))"""
-    s"""WITH tri AS (SELECT s_suppkey AS poly_id,
-         -120.0 + (s_suppkey % 40) * CAST(0.1 AS DOUBLE) AS cx,
-         36.0 + ((s_suppkey * 3) % 20) * CAST(0.1 AS DOUBLE) AS cy,
-         CAST(0.05 AS DOUBLE) + (s_suppkey % 7) * CAST(0.013 AS DOUBLE) AS w,
-         CAST(0.04 AS DOUBLE) + (s_suppkey % 5) * CAST(0.017 AS DOUBLE) AS h
-         FROM supplier),
-       poly AS (SELECT poly_id,
-         [[cx - w, cx + w, cx + w, cx - w],
-          [cx - w*CAST(0.5 AS DOUBLE), cx + w*CAST(0.5 AS DOUBLE), cx + w*CAST(0.5 AS DOUBLE), cx - w*CAST(0.5 AS DOUBLE)],
-          [cx + CAST(0.35 AS DOUBLE) - w*CAST(0.4 AS DOUBLE), cx + CAST(0.35 AS DOUBLE) + w*CAST(0.4 AS DOUBLE),
-           cx + CAST(0.35 AS DOUBLE) + w*CAST(0.4 AS DOUBLE), cx + CAST(0.35 AS DOUBLE) - w*CAST(0.4 AS DOUBLE)]] AS xss,
-         [[cy - h, cy - h, cy + h, cy + h],
-          [cy - h*CAST(0.5 AS DOUBLE), cy - h*CAST(0.5 AS DOUBLE), cy + h*CAST(0.5 AS DOUBLE), cy + h*CAST(0.5 AS DOUBLE)],
-          [cy - h*CAST(0.4 AS DOUBLE), cy - h*CAST(0.4 AS DOUBLE), cy + h*CAST(0.4 AS DOUBLE), cy + h*CAST(0.4 AS DOUBLE)]] AS yss
-         FROM tri),
-       bb AS (SELECT poly_id, xss, yss,
-           list_min(flatten(xss)) AS minx, list_max(flatten(xss)) AS maxx,
-           list_min(flatten(yss)) AS miny, list_max(flatten(yss)) AS maxy
-         FROM poly),
-       cells AS (SELECT poly_id, xss, yss,
-           gy.range AS gy, gx.range AS gx,
-           minx + (gx.range + CAST(0.5 AS DOUBLE)) * ((maxx - minx) / CAST(16.0 AS DOUBLE)) AS px,
-           miny + (gy.range + CAST(0.5 AS DOUBLE)) * ((maxy - miny) / CAST(16.0 AS DOUBLE)) AS py
-         FROM bb, range(0,16) gy, range(0,16) gx),
-       m AS (SELECT poly_id, gy, gx, (($crossings) % 2 = 1) AS inside FROM cells),
-       ins AS (SELECT poly_id, gy, gx FROM m WHERE inside),
-       outs AS (SELECT poly_id, gy, gx FROM m WHERE NOT inside),
-       pd AS (SELECT i.poly_id, i.gy, i.gx,
-           min(abs(i.gy - o.gy) + abs(i.gx - o.gx)) AS dp
-         FROM ins i JOIN outs o ON i.poly_id = o.poly_id
-         GROUP BY 1, 2, 3),
-       d AS (SELECT i.poly_id, i.gy, i.gx,
-           least(least(i.gy + 1, 16 - i.gy), least(i.gx + 1, 16 - i.gx),
-             coalesce(p.dp, 9999)) AS dist
-         FROM ins i LEFT JOIN pd p
-           ON i.poly_id = p.poly_id AND i.gy = p.gy AND i.gx = p.gx),
-       best AS (SELECT poly_id, gy, gx, dist,
-           row_number() OVER (PARTITION BY poly_id ORDER BY dist DESC, gy, gx) AS rn,
-           CAST(count(*) OVER (PARTITION BY poly_id) AS BIGINT) AS n_inside
-         FROM d)
-       SELECT poly_id, n_inside, CAST(gy AS INT) AS best_gy,
-         CAST(gx AS INT) AS best_gx, CAST(dist AS BIGINT) AS dist_cells
-       FROM best WHERE rn = 1 ORDER BY poly_id"""
-  }
-
-  /** Shared by events_hll_distinct (batch sketch) and stream_hll (the
-    * streaming drain of the same registers): one oracle, two engines.
-    */
+  /** Oracle of events_hll_distinct (the batch sketch). */
   private[graft] def hllDistinctOracleSql: String = {
     val lsbCase = (0 until 26).map(i => s"WHEN ${1L << i} THEN ${i + 1}")
       .mkString(" ")
@@ -506,74 +373,6 @@ object OracleCtes {
        FROM ca c LEFT JOIN dups d ON d.vec_id = c.vec_id ORDER BY c.vec_id"""
   }
 
-  /** SQ8 oracle: per-vector [mn,mx] byte codes and the floor-quantized
-    * reconstruction error — sub/mul/div/floor and the left fold are IEEE
-    * correctly-rounded, so codes and err_q agree bit-for-bit.
-    */
-  private[graft] def sq8OracleSql: String =
-    """WITH vv AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       mm AS (SELECT vec_id, v, list_min(v) AS mn, list_max(v) AS mx FROM vv),
-       cc AS (SELECT vec_id, mn, mx, v,
-           list_transform(v, x -> CASE WHEN mx = mn THEN 0
-             ELSE least(255, CAST(floor((x - mn) * 255.0 / (mx - mn)) AS BIGINT)) END) AS codes
-         FROM mm)
-       SELECT vec_id, mn, mx,
-         md5(array_to_string(codes, ',')) AS codes_md5,
-         CAST(floor(list_reduce(list_prepend(0.0, list_transform(range(0,64),
-           d -> (v[d+1] - (mn + codes[d+1]*(mx - mn)/255.0)) * (v[d+1] - (mn + codes[d+1]*(mx - mn)/255.0)))),
-           (p,q) -> p + q) * 1000000.0) AS BIGINT) AS err_q
-       FROM cc ORDER BY vec_id"""
-
-  /** Duplicate-span oracle: 8-gram sites over the dedup corpus, corpus-wide
-    * count + canonical rank windows on the same 60-bit gram hash, ×8 token
-    * coverage of non-canonical duplicate sites, and the cleaned text
-    * rebuilt by dropping exactly those token positions.
-    */
-  private[graft] def dedupSpansOracleSql: String =
-    s"""WITH corpus AS ($sqlDedupCorpus),
-       w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM corpus),
-       sites AS (SELECT doc_id, unnest(range(1, len(ws)-6)) AS pos, ws
-         FROM w WHERE len(ws) >= 8),
-       sg AS (SELECT doc_id, pos,
-           ${sqlH60("array_to_string(ws[pos:pos+7], ' ')")} AS g FROM sites),
-       mk AS (SELECT doc_id, pos,
-           count(*) OVER (PARTITION BY g) AS cnt,
-           row_number() OVER (PARTITION BY g ORDER BY doc_id, pos) AS rn
-         FROM sg),
-       dupsites AS (SELECT doc_id, pos, rn FROM mk WHERE cnt >= 2),
-       red AS (SELECT DISTINCT doc_id, pos + d.range AS t
-         FROM dupsites CROSS JOIN range(0, 8) d WHERE rn > 1),
-       nred AS (SELECT doc_id, count(*) AS n_red FROM red GROUP BY 1),
-       ndup AS (SELECT doc_id, count(*) AS n_dup FROM dupsites GROUP BY 1),
-       tk AS (SELECT doc_id, unnest(range(1, len(ws)+1)) AS t, ws FROM w),
-       kept AS (SELECT k.doc_id, string_agg(k.ws[k.t], ' ' ORDER BY k.t) AS cleaned
-         FROM tk k LEFT JOIN red r ON r.doc_id = k.doc_id AND r.t = k.t
-         WHERE r.t IS NULL GROUP BY k.doc_id)
-       SELECT w.doc_id, CAST(len(w.ws) AS BIGINT) AS n_tokens,
-         CAST(COALESCE(ndup.n_dup, 0) AS BIGINT) AS n_dup_sites,
-         CAST(COALESCE(nred.n_red, 0) AS BIGINT) AS n_redundant,
-         COALESCE(nred.n_red, 0) / len(w.ws) AS dup_frac,
-         md5(COALESCE(kept.cleaned, '')) AS cleaned_md5
-       FROM w LEFT JOIN ndup ON ndup.doc_id = w.doc_id
-       LEFT JOIN nred ON nred.doc_id = w.doc_id
-       LEFT JOIN kept ON kept.doc_id = w.doc_id
-       ORDER BY w.doc_id"""
-
-  /** Interval-join oracle: the same exposure/attribution windows on exact
-    * epoch millis, joined by the plain closed-interval overlap predicate —
-    * the engine's bin bucketing + first-shared-bin dedup must reproduce
-    * exactly this pair set.
-    */
-  private[graft] def intervalJoinOracleSql: String =
-    """WITH e AS (SELECT event_id, event_type, epoch_ms(ts) AS ms FROM events),
-       v AS (SELECT event_id AS l_id, ms AS l_s,
-           ms + (event_id % 7 + 1) * 60000 AS l_e FROM e WHERE event_type = 'view'),
-       b AS (SELECT event_id AS r_id, ms AS r_s,
-           ms + (event_id % 11 + 1) * 60000 AS r_e FROM e WHERE event_type = 'purchase')
-       SELECT l_id, r_id, least(l_e, r_e) - greatest(l_s, r_s) AS overlap_ms
-       FROM v JOIN b ON l_s <= r_e AND r_s <= l_e
-       ORDER BY l_id, r_id"""
-
   /** Fuzzy-decontamination oracle: the minhash band pipeline over
     * corpus ∪ eval (corpus = non-eval docs + mutated eval copies at
     * +300000), cross-set band candidates, exact shingle-Jaccard verify.
@@ -642,21 +441,6 @@ object OracleCtes {
        SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
        FROM banded a JOIN banded b ON a.band_id = b.band_id AND a.band_key = b.band_key
        WHERE a.doc_id < b.doc_id ORDER BY doc_a, doc_b"""
-
-  /** Signature-agreement estimate oracle: the band-join candidates joined
-    * back to the 8-lane signatures; n_agree and est_ppm are integer-exact.
-    */
-  private[graft] def minhashEstOracleSql: String =
-    s"""WITH $minhashCtes,
-       pairs AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         FROM banded a JOIN banded b ON a.band_id = b.band_id AND a.band_key = b.band_key
-         WHERE a.doc_id < b.doc_id)
-       SELECT p.doc_a, p.doc_b,
-         CAST((CASE WHEN sa.m0 = sb.m0 THEN 1 ELSE 0 END) + (CASE WHEN sa.m1 = sb.m1 THEN 1 ELSE 0 END) + (CASE WHEN sa.m2 = sb.m2 THEN 1 ELSE 0 END) + (CASE WHEN sa.m3 = sb.m3 THEN 1 ELSE 0 END) + (CASE WHEN sa.m4 = sb.m4 THEN 1 ELSE 0 END) + (CASE WHEN sa.m5 = sb.m5 THEN 1 ELSE 0 END) + (CASE WHEN sa.m6 = sb.m6 THEN 1 ELSE 0 END) + (CASE WHEN sa.m7 = sb.m7 THEN 1 ELSE 0 END) AS BIGINT) AS n_agree,
-         CAST(((CASE WHEN sa.m0 = sb.m0 THEN 1 ELSE 0 END) + (CASE WHEN sa.m1 = sb.m1 THEN 1 ELSE 0 END) + (CASE WHEN sa.m2 = sb.m2 THEN 1 ELSE 0 END) + (CASE WHEN sa.m3 = sb.m3 THEN 1 ELSE 0 END) + (CASE WHEN sa.m4 = sb.m4 THEN 1 ELSE 0 END) + (CASE WHEN sa.m5 = sb.m5 THEN 1 ELSE 0 END) + (CASE WHEN sa.m6 = sb.m6 THEN 1 ELSE 0 END) + (CASE WHEN sa.m7 = sb.m7 THEN 1 ELSE 0 END)) * 1000000 // 8 AS BIGINT) AS est_ppm
-       FROM pairs p JOIN sig sa ON sa.doc_id = p.doc_a
-       JOIN sig sb ON sb.doc_id = p.doc_b
-       ORDER BY doc_a, doc_b"""
 
   /** Cross-modal verification oracle: the MinHash candidate pairs scored
     * by embedding cosine (copies map to base vectors via % 100000).
@@ -759,104 +543,6 @@ object OracleCtes {
            FROM bands a JOIN bands b ON a.band_i = b.band_i AND a.band_key = b.band_key
              AND a.image_id < b.image_id)"""
 
-  /** DBSCAN oracle: brute-force ε-pairs (1500² at sf0.01 — fine for the
-    * oracle, never the engine), HAVING-count core flags, recursive-CTE
-    * min-label components over core–core edges, min-label border
-    * assignment. The ε² threshold is the ENGINE's Scala double
-    * (`0.003 * 0.003` spliced verbatim) so the boundary compares bit-equal
-    * operands — the geo_range_geodesic convention.
-    */
-  private[graft] def dbscanOracleSql: String = {
-    val r2 = java.lang.Double.toString(0.0025 * 0.0025)
-    s"""WITH RECURSIVE pts AS (SELECT c_custkey AS pid,
-         CASE WHEN c_custkey % 41 = 0 THEN -130.0 + (c_custkey % 100) / 10.0
-              ELSE -120.0 + ((c_custkey % 12) % 4) * 0.5 + ((c_custkey * 7) % 19 - 9) / 1000.0 END AS lng,
-         CASE WHEN c_custkey % 41 = 0 THEN 30.0 + ((c_custkey * 13) % 100) / 10.0
-              ELSE 36.0 + ((c_custkey % 12) // 4) * 0.5 + ((c_custkey * 11) % 23 - 11) / 1000.0 END AS lat
-         FROM customer),
-       prs AS (SELECT a.pid AS pa, b.pid AS pb
-         FROM pts a JOIN pts b ON a.pid <> b.pid
-          AND (b.lng - a.lng)*(b.lng - a.lng) + (b.lat - a.lat)*(b.lat - a.lat) <= $r2),
-       core AS (SELECT pa AS pid FROM prs GROUP BY pa HAVING count(*) + 1 >= 8),
-       ce AS (SELECT pa, pb FROM prs
-         WHERE pa IN (SELECT pid FROM core) AND pb IN (SELECT pid FROM core)),
-       reach(pid, other) AS (
-         SELECT pid, pid FROM core
-         UNION
-         SELECT r.pid, e.pb FROM reach r JOIN ce e ON e.pa = r.other),
-       comp AS (SELECT pid, min(other) AS cluster FROM reach GROUP BY pid),
-       bord AS (SELECT p.pa AS pid, min(c.cluster) AS bcluster
-         FROM prs p JOIN comp c ON c.pid = p.pb GROUP BY p.pa)
-       SELECT p.pid,
-         CASE WHEN comp.pid IS NOT NULL THEN 'core'
-              WHEN bord.bcluster IS NOT NULL THEN 'border'
-              ELSE 'noise' END AS role,
-         CASE WHEN comp.pid IS NOT NULL THEN comp.cluster
-              ELSE bord.bcluster END AS cluster
-       FROM pts p LEFT JOIN comp ON comp.pid = p.pid
-       LEFT JOIN bord ON bord.pid = p.pid
-       ORDER BY p.pid"""
-  }
-
-  /** Composed DBSCAN→hull oracle: the dbscan CTEs verbatim, the 1-in-5
-    * member sample quantized to exact integers, then the Carathéodory hull
-    * certificate per cluster (a point is a hull vertex iff not strictly
-    * inside any same-cluster triangle nor strictly interior to a collinear
-    * segment) — all cross products exact BIGINT.
-    */
-  private[graft] def dbscanHullsOracleSql: String = {
-    val r2 = java.lang.Double.toString(0.0025 * 0.0025)
-    s"""WITH RECURSIVE pts0 AS (SELECT c_custkey AS pid,
-         CASE WHEN c_custkey % 41 = 0 THEN -130.0 + (c_custkey % 100) / 10.0
-              ELSE -120.0 + ((c_custkey % 12) % 4) * 0.5 + ((c_custkey * 7) % 19 - 9) / 1000.0 END AS lng,
-         CASE WHEN c_custkey % 41 = 0 THEN 30.0 + ((c_custkey * 13) % 100) / 10.0
-              ELSE 36.0 + ((c_custkey % 12) // 4) * 0.5 + ((c_custkey * 11) % 23 - 11) / 1000.0 END AS lat
-         FROM customer),
-       prs AS (SELECT a.pid AS pa, b.pid AS pb
-         FROM pts0 a JOIN pts0 b ON a.pid <> b.pid
-          AND (b.lng - a.lng)*(b.lng - a.lng) + (b.lat - a.lat)*(b.lat - a.lat) <= $r2),
-       core AS (SELECT pa AS pid FROM prs GROUP BY pa HAVING count(*) + 1 >= 8),
-       ce AS (SELECT pa, pb FROM prs
-         WHERE pa IN (SELECT pid FROM core) AND pb IN (SELECT pid FROM core)),
-       reach(pid, other) AS (
-         SELECT pid, pid FROM core
-         UNION
-         SELECT r.pid, e.pb FROM reach r JOIN ce e ON e.pa = r.other),
-       comp AS (SELECT pid, min(other) AS cluster FROM reach GROUP BY pid),
-       bord AS (SELECT p.pa AS pid, min(c.cluster) AS bcluster
-         FROM prs p JOIN comp c ON c.pid = p.pb GROUP BY p.pa),
-       memb AS (SELECT p.pid, COALESCE(comp.cluster, bord.bcluster) AS gid,
-           p.lng, p.lat
-         FROM pts0 p LEFT JOIN comp ON comp.pid = p.pid
-         LEFT JOIN bord ON bord.pid = p.pid
-         WHERE (comp.pid IS NOT NULL OR bord.bcluster IS NOT NULL)
-           AND p.pid % 5 = 0),
-       ipts AS (SELECT DISTINCT gid,
-           CAST(round((lng + 130.0) * 1000) AS BIGINT) AS x,
-           CAST(round((lat - 30.0) * 1000) AS BIGINT) AS y FROM memb),
-       tri AS (SELECT DISTINCT p.gid, p.x, p.y
-         FROM ipts p
-         JOIN ipts a ON a.gid = p.gid
-         JOIN ipts b ON b.gid = p.gid
-         JOIN ipts c ON c.gid = p.gid
-         WHERE ((a.x-p.x)*(b.y-p.y) - (a.y-p.y)*(b.x-p.x) > 0 AND
-                (b.x-p.x)*(c.y-p.y) - (b.y-p.y)*(c.x-p.x) > 0 AND
-                (c.x-p.x)*(a.y-p.y) - (c.y-p.y)*(a.x-p.x) > 0)
-            OR ((a.x-p.x)*(b.y-p.y) - (a.y-p.y)*(b.x-p.x) < 0 AND
-                (b.x-p.x)*(c.y-p.y) - (b.y-p.y)*(c.x-p.x) < 0 AND
-                (c.x-p.x)*(a.y-p.y) - (c.y-p.y)*(a.x-p.x) < 0)),
-       seg AS (SELECT DISTINCT p.gid, p.x, p.y
-         FROM ipts p
-         JOIN ipts a ON a.gid = p.gid
-         JOIN ipts b ON b.gid = p.gid
-         WHERE (a.x-p.x)*(b.y-p.y) - (a.y-p.y)*(b.x-p.x) = 0
-           AND (p.x-a.x)*(b.x-p.x) + (p.y-a.y)*(b.y-p.y) > 0)
-       SELECT CAST(gid AS BIGINT) AS cluster, x, y FROM (
-         SELECT * FROM ipts
-         EXCEPT (SELECT * FROM tri UNION SELECT * FROM seg))
-       ORDER BY cluster, x, y"""
-  }
-
   /** Shared CTEs for the Cavnar–Trenkle langid gates: regenerate the
     * deterministic multilingual corpus (word lists rendered from the SAME
     * ops.LangId constants), re-derive padded char 2-/3-grams, train the
@@ -906,154 +592,6 @@ object OracleCtes {
        SELECT doc_id, CAST($bits AS BIGINT) AS simhash16 FROM hw ORDER BY doc_id"""
   }
 
-  /** Cell-area-weights oracle: the Sutherland–Hodgman clip REPLAYED IN SQL —
-    * one CTE per clip edge, each pass transforming the ring (a list of
-    * (x, y) structs) exactly as ConvexClip.clip's inner loop does: per
-    * subject edge p→q emit [q], [hit, q], [hit], or [] by the same
-    * orient-sign cases, hit = p + t·(q−p) with t = o(p)/(o(p)−o(q)) in the
-    * same IEEE op order. Cell boundaries are k/16 — exact binary doubles —
-    * so every intermediate bit matches the engine.
-    */
-  private[graft] def cellAreaOracleSql: String =
-    s"""WITH $cellAreaCtes
-       SELECT poly_id, CAST(cx AS INT) AS cx, CAST(cy AS INT) AS cy, area
-       FROM ar WHERE area > 0.0 ORDER BY poly_id, cx, cy"""
-
-  /** Area-weighted zonal elevation oracle: the clip CTEs feed cell centers
-    * into the same closed-form bilinear probe as the elevation oracles
-    * (missing tile ⇒ 0), and per-poly sums run on floor-quantized integers
-    * so the aggregation is order-independent and HUGEINT-cast-safe.
-    */
-  private[graft] def zonalWeightedOracleSql: String =
-    s"""WITH $cellAreaCtes,
-       cc AS (SELECT poly_id, cx, cy, area,
-           (cx + CAST(0.5 AS DOUBLE)) / CAST(16.0 AS DOUBLE) AS clng,
-           (cy + CAST(0.5 AS DOUBLE)) / CAST(16.0 AS DOUBLE) AS clat
-         FROM ar WHERE area > 0.0),
-       k AS (SELECT poly_id, cx, cy, area,
-           CAST(floor(clng) AS BIGINT) AS swlng, CAST(floor(clat) AS BIGINT) AS swlat,
-           (clng - floor(clng)) * 600 AS colf, (clat - floor(clat)) * 600 AS rowf
-         FROM cc),
-       g AS (SELECT *, CAST(floor(colf) AS BIGINT) AS c0, CAST(floor(rowf) AS BIGINT) AS r0,
-           colf - floor(colf) AS cf, rowf - floor(rowf) AS rf,
-           ((swlng+180)*7 + (swlat+90)*11) % 1000 AS a FROM k),
-       v AS (SELECT *,
-           a + 2*c0     + 3*r0     + ((c0//8)*(r0//8)) % 32         AS v00,
-           a + 2*(c0+1) + 3*r0     + (((c0+1)//8)*(r0//8)) % 32     AS v10,
-           a + 2*(c0+1) + 3*(r0+1) + (((c0+1)//8)*((r0+1)//8)) % 32 AS v11,
-           a + 2*c0     + 3*(r0+1) + ((c0//8)*((r0+1)//8)) % 32     AS v01 FROM g),
-       e AS (SELECT poly_id, area,
-           CASE WHEN swlng BETWEEN -120 AND -117 AND swlat BETWEEN 36 AND 37
-                     AND NOT ((swlng = -118 AND swlat = 37) OR (swlng = -117 AND swlat = 36))
-                THEN (v00 + (v10 - v00) * cf) +
-                     ((v01 + (v11 - v01) * cf) - (v00 + (v10 - v00) * cf)) * rf
-                ELSE 0.0 END AS elev
-         FROM v),
-       q AS (SELECT poly_id,
-           CAST(floor(area * elev * CAST(1000000000.0 AS DOUBLE)) AS BIGINT) AS wq,
-           CAST(floor(area * CAST(1000000000000.0 AS DOUBLE)) AS BIGINT) AS aq
-         FROM e)
-       SELECT poly_id, count(*) AS n_cells,
-         CAST(sum(wq) AS BIGINT) AS wsum_q, CAST(sum(aq) AS BIGINT) AS asum_q,
-         CAST(sum(wq) AS BIGINT) / CAST(sum(aq) AS BIGINT) * CAST(1000.0 AS DOUBLE) AS wmean
-       FROM q GROUP BY poly_id ORDER BY poly_id"""
-
-  // lazy: referenced by the two oracle vals declared ABOVE it
-  private[graft] def cellAreaCtes: String = {
-    // orient(a,b,pt) = (bx-ax)*(pt.y-ay) - (by-ay)*(pt.x-ax), pt inlined
-    def orient(ax: String, ay: String, bx: String, by: String, pt: String) =
-      s"(($bx)-($ax))*(($pt).y-($ay)) - (($by)-($ay))*(($pt).x-($ax))"
-    def pass(inRing: String, outRing: String,
-             ax: String, ay: String, bx: String, by: String): String = {
-      val p = s"$inRing[j]"
-      val q = s"$inRing[j % len($inRing) + 1]"
-      val op = orient(ax, ay, bx, by, p)
-      val oq = orient(ax, ay, bx, by, q)
-      val t = s"($op) / (($op) - ($oq))"
-      val hit = s"{'x': ($p).x + ($t)*(($q).x - ($p).x), " +
-        s"'y': ($p).y + ($t)*(($q).y - ($p).y)}"
-      s"""flatten(list_transform(range(1, len($inRing)+1), j ->
-          CASE WHEN ($oq) >= 0 AND ($op) >= 0 THEN [$q]
-               WHEN ($oq) >= 0 THEN [$hit, $q]
-               WHEN ($op) >= 0 THEN [$hit]
-               ELSE [] END)) AS $outRing"""
-    }
-    // CCW cell rectangle (x0,y0)-(x1,y0)-(x1,y1)-(x0,y1): bottom, right,
-    // top, left edges in the engine's ring order
-    val p1 = pass("r0", "r1", "x0", "y0", "x1", "y0")
-    val p2 = pass("r1", "r2", "x1", "y0", "x1", "y1")
-    val p3 = pass("r2", "r3", "x1", "y1", "x0", "y1")
-    val p4 = pass("r3", "r4", "x0", "y1", "x0", "y0")
-    val shoelace = """list_reduce(list_prepend(0.0,
-        list_transform(range(1, len(r4)+1), i ->
-          r4[i].x * r4[i % len(r4) + 1].y - r4[i % len(r4) + 1].x * r4[i].y)),
-        (p,q) -> p + q)"""
-    s"""tri AS (SELECT s_suppkey AS poly_id,
-         -120.0 + (s_suppkey % 40) * CAST(0.1 AS DOUBLE) AS cx0,
-         36.0 + ((s_suppkey * 3) % 20) * CAST(0.1 AS DOUBLE) AS cy0,
-         CAST(0.05 AS DOUBLE) + (s_suppkey % 7) * CAST(0.013 AS DOUBLE) AS w,
-         CAST(0.04 AS DOUBLE) + (s_suppkey % 5) * CAST(0.017 AS DOUBLE) AS h
-         FROM supplier),
-       poly AS (SELECT poly_id,
-           [{'x': cx0, 'y': cy0 + h}, {'x': cx0 - w, 'y': cy0 - h}, {'x': cx0 + w, 'y': cy0 - h}] AS r0,
-           CAST(floor(least(cx0, cx0 - w, cx0 + w) * 16) AS BIGINT) AS gx0,
-           CAST(floor(greatest(cx0, cx0 - w, cx0 + w) * 16) AS BIGINT) AS gx1,
-           CAST(floor(least(cy0 + h, cy0 - h) * 16) AS BIGINT) AS gy0,
-           CAST(floor(greatest(cy0 + h, cy0 - h) * 16) AS BIGINT) AS gy1
-         FROM tri),
-       cellsx AS (SELECT poly_id, r0, gy0, gy1, unnest(range(gx0, gx1 + 1)) AS cx FROM poly),
-       cells AS (SELECT poly_id, r0, cx, unnest(range(gy0, gy1 + 1)) AS cy FROM cellsx),
-       rect AS (SELECT poly_id, r0, cx, cy,
-           cx / CAST(16.0 AS DOUBLE) AS x0, (cx + 1) / CAST(16.0 AS DOUBLE) AS x1,
-           cy / CAST(16.0 AS DOUBLE) AS y0, (cy + 1) / CAST(16.0 AS DOUBLE) AS y1
-         FROM cells),
-       c1 AS MATERIALIZED (SELECT poly_id, cx, cy, x0, x1, y0, y1, $p1 FROM rect),
-       c2 AS MATERIALIZED (SELECT poly_id, cx, cy, x0, x1, y0, y1, $p2 FROM c1),
-       c3 AS MATERIALIZED (SELECT poly_id, cx, cy, x0, x1, y0, y1, $p3 FROM c2),
-       c4 AS MATERIALIZED (SELECT poly_id, cx, cy, $p4 FROM c3),
-       ar AS (SELECT poly_id, cx, cy,
-           CASE WHEN len(r4) < 3 THEN 0.0 ELSE abs($shoelace) / CAST(2.0 AS DOUBLE) END AS area
-         FROM c4)"""
-  }
-
-  /** SimHash near-dup oracle: same 48-bit simhash, the 4×12-bit band
-    * self-join candidates, exact bit_count(xor) refine — all integer ops.
-    */
-  private[graft] def simhashNearDupOracleSql: String = {
-    val bits48 = (0 until 48).map { b =>
-      s"""(CASE WHEN list_sum(list_transform(hw, h -> CASE WHEN (h >> $b) & 1 = 1 THEN 1 ELSE -1 END)) >= 0 THEN ${1L << b} ELSE 0 END)"""
-    }.mkString(" + ")
-    s"""WITH corpus AS ($sqlDedupCorpus),
-       hw AS (SELECT doc_id, list_transform(string_split(text,' '),
-         w -> ${sqlH60("w")}) AS hw FROM corpus),
-       sh AS (SELECT doc_id, CAST($bits48 AS BIGINT) AS sh FROM hw),
-       banded AS (SELECT doc_id, sh, b.range AS band, (sh >> (b.range*12)) & 4095 AS key
-         FROM sh CROSS JOIN range(0,4) b)
-       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b,
-         CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
-       FROM banded a JOIN banded b ON a.band = b.band AND a.key = b.key
-         AND a.doc_id < b.doc_id
-       WHERE bit_count(xor(a.sh, b.sh)) <= 3
-       ORDER BY id_a, id_b"""
-  }
-
-  /** Vocab/OOV oracle: same (count desc, word) total-order cut at 100,
-    * per-doc OOV counted by anti-joining tokens to the vocabulary.
-    */
-  private[graft] def vocabOovOracleSql: String =
-    """WITH w AS (SELECT doc_id, string_split(text,' ') AS ws FROM documents),
-       tok AS (SELECT doc_id, unnest(ws) AS wd FROM w),
-       cnt AS (SELECT wd, count(*) AS c FROM tok GROUP BY 1),
-       vocab AS (SELECT wd FROM (
-           SELECT wd, row_number() OVER (ORDER BY c DESC, wd) AS rk FROM cnt)
-         WHERE rk <= 20),
-       oov AS (SELECT t.doc_id, count(*) AS n_oov FROM tok t
-         LEFT JOIN vocab v ON v.wd = t.wd WHERE v.wd IS NULL GROUP BY 1)
-       SELECT w.doc_id, CAST(len(w.ws) AS BIGINT) AS n_tokens,
-         CAST(COALESCE(o.n_oov, 0) AS BIGINT) AS n_oov,
-         COALESCE(o.n_oov, 0) / len(w.ws) AS oov_frac
-       FROM w LEFT JOIN oov o ON o.doc_id = w.doc_id ORDER BY w.doc_id"""
-
   private[graft] def annLshOracleSql: String = {
     val bucket = (0 until 8).map { j =>
       s"(CASE WHEN ${sqlPlaneDot(j)} >= 0 THEN ${1L << j} ELSE 0 END)"
@@ -1102,65 +640,6 @@ object OracleCtes {
          SELECT qid, neighbor_id, centroid, cos,
            CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank FROM cand)
        WHERE rank <= 5 ORDER BY qid, rank"""
-
-  /** Filtered-search oracle: the topk oracle with a label semi-join on the
-    * corpus side (pre-filter commutes with per-vector centroid assignment,
-    * so post-assignment restriction replays it exactly).
-    */
-  private[graft] def ivfFilteredOracleSql: String =
-    """WITH vv AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       cents AS (SELECT range AS c FROM range(0, 8)),
-       d AS (SELECT vec_id, c,
-         list_reduce(list_prepend(0.0, list_transform(range(0,64),
-           d -> (v[d+1] - (((c*53 + d*17) % 13) - 6)) * (v[d+1] - (((c*53 + d*17) % 13) - 6)))),
-           (p,q) -> p + q) AS d2
-         FROM vv, cents),
-       nrm AS (SELECT vec_id, v, sqrt(list_reduce(list_prepend(0.0, list_transform(range(0,64),
-           d -> v[d+1] * v[d+1])), (p,q) -> p + q)) AS nrm FROM vv),
-       assign AS (SELECT vec_id, c AS centroid FROM (
-         SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn FROM d) WHERE rn = 1),
-       qprobe AS (SELECT vec_id AS qid, c AS centroid FROM (
-         SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn FROM d WHERE vec_id < 5) WHERE rn <= 2),
-       cand AS (SELECT q.qid, n.vec_id AS neighbor_id, a.centroid,
-           list_reduce(list_prepend(0.0, list_transform(range(0,64),
-             d -> n.v[d+1] * qn.v[d+1])), (p,q) -> p + q) / (n.nrm * qn.nrm) AS cos
-         FROM qprobe q JOIN assign a ON a.centroid = q.centroid
-         JOIN nrm n ON n.vec_id = a.vec_id
-         JOIN nrm qn ON qn.vec_id = q.qid
-         WHERE n.vec_id <> q.qid
-           AND n.vec_id IN (SELECT vec_id FROM embeddings WHERE label = 2))
-       SELECT qid, neighbor_id, CAST(centroid AS INT) AS centroid, rank, round(cos, 4) AS cos_r FROM (
-         SELECT qid, neighbor_id, centroid, cos,
-           CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank FROM cand)
-       WHERE rank <= 5 ORDER BY qid, rank"""
-
-  /** Range-search oracle: same coarse-assign/probe CTEs as the topk oracle
-    * (25 queries), threshold filter instead of the rank window.
-    */
-  private[graft] def ivfRangeOracleSql: String =
-    """WITH vv AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       cents AS (SELECT range AS c FROM range(0, 8)),
-       d AS (SELECT vec_id, c,
-         list_reduce(list_prepend(0.0, list_transform(range(0,64),
-           d -> (v[d+1] - (((c*53 + d*17) % 13) - 6)) * (v[d+1] - (((c*53 + d*17) % 13) - 6)))),
-           (p,q) -> p + q) AS d2
-         FROM vv, cents),
-       nrm AS (SELECT vec_id, v, sqrt(list_reduce(list_prepend(0.0, list_transform(range(0,64),
-           d -> v[d+1] * v[d+1])), (p,q) -> p + q)) AS nrm FROM vv),
-       assign AS (SELECT vec_id, c AS centroid FROM (
-         SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn FROM d) WHERE rn = 1),
-       qprobe AS (SELECT vec_id AS qid, c AS centroid FROM (
-         SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn FROM d WHERE vec_id < 25) WHERE rn <= 2),
-       cand AS (SELECT q.qid, n.vec_id AS neighbor_id, a.centroid,
-           list_reduce(list_prepend(0.0, list_transform(range(0,64),
-             d -> n.v[d+1] * qn.v[d+1])), (p,q) -> p + q) / (n.nrm * qn.nrm) AS cos
-         FROM qprobe q JOIN assign a ON a.centroid = q.centroid
-         JOIN nrm n ON n.vec_id = a.vec_id
-         JOIN nrm qn ON qn.vec_id = q.qid
-         WHERE n.vec_id <> q.qid)
-       SELECT qid, neighbor_id, CAST(centroid AS INT) AS centroid,
-         round(cos, 4) AS cos_r
-       FROM cand WHERE cos >= 0.25 ORDER BY qid, neighbor_id"""
 
   /** Recall@5 oracle: IVF candidate set (same CTEs as the topk oracle, 25
     * queries) intersected with the exact brute-force top-5 per query.
@@ -1308,16 +787,6 @@ object OracleCtes {
        SELECT * FROM ($per) ORDER BY round, centroid, dim"""
   }
 
-  private[graft] def pqTrainOracleSql: String = {
-    val per = (1 to 3).map { r =>
-      s"""SELECT $r AS round, CAST(s AS INTEGER) AS sub, CAST(code AS INTEGER) AS code,
-          CAST(dim AS INTEGER) AS dim, n, sum_q,
-          CAST(sum_q AS DOUBLE)/(n*1000000.0) AS mean FROM ps$r"""
-    }.mkString(" UNION ALL ")
-    s"""WITH ${kmeansTrainCtes(8, 3)}, ${pqTrainCtes(8, 16, 3)}
-       SELECT * FROM ($per) ORDER BY round, sub, code, dim"""
-  }
-
   /** Shared trained-IVF-PQ candidate CTEs: both training loops (coarse +
     * PQ), final-round assignment/codes, probe lists for queries < maxQid,
     * and ADC candidates — the per-subspace terms fold in subspace order via
@@ -1370,13 +839,6 @@ object OracleCtes {
              d -> (n.v[d+1] - qv.v[d+1]) * (n.v[d+1] - qv.v[d+1]))), (p,q) -> p + q) AS dist2
          FROM short s JOIN vv n ON n.vec_id = s.neighbor_id
          JOIN vv qv ON qv.vec_id = s.qid)"""
-
-  private[graft] def ivfPqTrainedOracleSql: String =
-    s"""WITH ${ivfPqTrainedCandCtes(5)}, ${ivfPqRefinedCtes(50)}
-       SELECT qid, neighbor_id, rank, round(dist2, 4) AS dist2_r FROM (
-         SELECT qid, neighbor_id, dist2,
-           CAST(row_number() OVER (PARTITION BY qid ORDER BY dist2, neighbor_id) AS INTEGER) AS rank FROM rr)
-       WHERE rank <= 5 ORDER BY qid, rank"""
 
   private[graft] def ivfPqTrainedRecallOracleSql: String =
     s"""WITH ${ivfPqTrainedCandCtes(25)}, ${ivfPqRefinedCtes(50)},
@@ -1434,52 +896,6 @@ object OracleCtes {
          COALESCE(h.n_hits, 0) / 5.0 AS recall
        FROM (SELECT DISTINCT vec_id AS qid FROM embeddings WHERE vec_id < 25) q
        LEFT JOIN hits h ON h.qid = q.qid ORDER BY q.qid"""
-
-  /** The ivfRecall oracle swept over nProbe ∈ {1,2,4} — the operating
-    * curve; probe fan-out parameterized by a probes VALUES list.
-    */
-  private[graft] def ivfRecallCurveOracleSql: String =
-    """WITH vv AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       cents AS (SELECT range AS c FROM range(0, 8)),
-       d AS (SELECT vec_id, c,
-         list_reduce(list_prepend(0.0, list_transform(range(0,64),
-           d -> (v[d+1] - (((c*53 + d*17) % 13) - 6)) * (v[d+1] - (((c*53 + d*17) % 13) - 6)))),
-           (p,q) -> p + q) AS d2
-         FROM vv, cents),
-       nrm AS (SELECT vec_id, v, sqrt(list_reduce(list_prepend(0.0, list_transform(range(0,64),
-           d -> v[d+1] * v[d+1])), (p,q) -> p + q)) AS nrm FROM vv),
-       assign AS (SELECT vec_id, c AS centroid FROM (
-         SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn FROM d) WHERE rn = 1),
-       probes(np) AS (VALUES (1), (2), (4)),
-       qr AS (SELECT vec_id, c, row_number() OVER (PARTITION BY vec_id ORDER BY d2, c) AS rn
-         FROM d WHERE vec_id < 25),
-       qprobe AS (SELECT p.np, qr.vec_id AS qid, qr.c AS centroid FROM qr, probes p WHERE qr.rn <= p.np),
-       cand AS (SELECT q.np, q.qid, n.vec_id AS neighbor_id,
-           list_reduce(list_prepend(0.0, list_transform(range(0,64),
-             d -> n.v[d+1] * qn.v[d+1])), (p,q) -> p + q) / (n.nrm * qn.nrm) AS cos
-         FROM qprobe q JOIN assign a ON a.centroid = q.centroid
-         JOIN nrm n ON n.vec_id = a.vec_id
-         JOIN nrm qn ON qn.vec_id = q.qid
-         WHERE n.vec_id <> q.qid),
-       ivf AS (SELECT np, qid, neighbor_id FROM (
-         SELECT np, qid, neighbor_id, row_number() OVER (PARTITION BY np, qid ORDER BY cos DESC, neighbor_id) AS rank FROM cand)
-         WHERE rank <= 5),
-       exp AS (SELECT qn.vec_id AS qid, n.vec_id AS neighbor_id,
-           list_reduce(list_prepend(0.0, list_transform(range(0,64),
-             d -> n.v[d+1] * qn.v[d+1])), (p,q) -> p + q) / (n.nrm * qn.nrm) AS cos
-         FROM nrm qn, nrm n WHERE qn.vec_id < 25 AND n.vec_id <> qn.vec_id),
-       ex AS (SELECT qid, neighbor_id FROM (
-         SELECT qid, neighbor_id, row_number() OVER (PARTITION BY qid ORDER BY cos DESC, neighbor_id) AS rank FROM exp)
-         WHERE rank <= 5),
-       hits AS (SELECT i.np, i.qid, count(*) AS n_hits FROM ivf i
-         JOIN ex ON ex.qid = i.qid AND ex.neighbor_id = i.neighbor_id GROUP BY 1, 2),
-       qp AS (SELECT q.qid, p.np
-         FROM (SELECT DISTINCT vec_id AS qid FROM embeddings WHERE vec_id < 25) q, probes p)
-       SELECT CAST(qp.np AS INT) AS n_probe, qp.qid,
-         COALESCE(h.n_hits, 0) AS n_hits,
-         COALESCE(h.n_hits, 0) / 5.0 AS recall
-       FROM qp LEFT JOIN hits h ON h.qid = qp.qid AND h.np = qp.np
-       ORDER BY n_probe, qp.qid"""
 
   private[graft] def ivfOracleSql: String =
     """WITH vv AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
@@ -1579,72 +995,4 @@ object OracleCtes {
        FROM rr ORDER BY point_id"""
   }
 
-  /** kRing-smoothing oracle: the same res-9 axial assignment as
-    * [[hexOracleSql]], per-cell counts, then the grid-distance-≤2 pair
-    * join stated directly on the axial metric (the engine's literal-offset
-    * disk explode covers exactly the cells at axial distance ≤ k).
-    */
-  private[graft] def hexKringOracleSql: String = {
-    val e = graft.geo.Hex.edge(9)
-    s"""WITH pts AS ($quadrantPtsCte),
-       ax AS (SELECT point_id,
-         (sqrt(3.0)/3.0 * lng - lat/3.0) / $e AS qf,
-         (2.0/3.0 * lat) / $e AS rf FROM pts),
-       r0 AS (SELECT point_id, qf, rf, -qf - rf AS sf,
-         CAST(floor(qf + 0.5) AS BIGINT) AS qi,
-         CAST(floor(rf + 0.5) AS BIGINT) AS ri,
-         CAST(floor(-qf - rf + 0.5) AS BIGINT) AS si FROM ax),
-       rr AS (SELECT point_id,
-         CASE WHEN abs(qi - qf) > abs(ri - rf) AND abs(qi - qf) > abs(si - sf)
-              THEN -ri - si ELSE qi END AS q,
-         CASE WHEN NOT (abs(qi - qf) > abs(ri - rf) AND abs(qi - qf) > abs(si - sf))
-                   AND abs(ri - rf) > abs(si - sf)
-              THEN -qi - si ELSE ri END AS r FROM r0),
-       cnt AS (SELECT q, r, count(*) AS n FROM rr GROUP BY 1, 2),
-       sm AS (SELECT a.q, a.r, sum(b.n) AS smooth FROM cnt a JOIN cnt b
-         ON (abs(a.q - b.q) + abs(a.r - b.r) + abs((a.q - b.q) + (a.r - b.r))) // 2 <= 2
-         GROUP BY 1, 2)
-       SELECT CAST(9 AS BIGINT) * 288230376151711744 + (c.q + 268435456) * 536870912 + (c.r + 268435456) AS cell,
-         CAST(c.n AS BIGINT) AS n, CAST(s.smooth AS BIGINT) AS smooth
-       FROM cnt c JOIN sm s ON c.q = s.q AND c.r = s.r ORDER BY cell"""
-  }
-
-  /** Hex-region oracle: res-1 axial assignment (the coarse cells where the
-    * 1°-lattice quadrant points form mixed 1–5-cell islands), occupied-cell
-    * adjacency at axial distance 1, reachability closure, min-cell-id
-    * component labels (packed ids are lexicographic in (q, r), matching
-    * the star-CC min-label contract), per-region rollups.
-    */
-  private[graft] def hexRegionsOracleSql: String = {
-    val e = graft.geo.Hex.edge(1)
-    s"""WITH RECURSIVE pts AS ($quadrantPtsCte),
-       ax AS (SELECT point_id,
-         (sqrt(3.0)/3.0 * lng - lat/3.0) / $e AS qf,
-         (2.0/3.0 * lat) / $e AS rf FROM pts),
-       r0 AS (SELECT point_id, qf, rf, -qf - rf AS sf,
-         CAST(floor(qf + 0.5) AS BIGINT) AS qi,
-         CAST(floor(rf + 0.5) AS BIGINT) AS ri,
-         CAST(floor(-qf - rf + 0.5) AS BIGINT) AS si FROM ax),
-       rr AS (SELECT point_id,
-         CASE WHEN abs(qi - qf) > abs(ri - rf) AND abs(qi - qf) > abs(si - sf)
-              THEN -ri - si ELSE qi END AS q,
-         CASE WHEN NOT (abs(qi - qf) > abs(ri - rf) AND abs(qi - qf) > abs(si - sf))
-                   AND abs(ri - rf) > abs(si - sf)
-              THEN -qi - si ELSE ri END AS r FROM r0),
-       cnt AS (SELECT q, r, count(*) AS n FROM rr GROUP BY 1, 2),
-       cid AS (SELECT q, r, n,
-           CAST(1 AS BIGINT) * 288230376151711744 + (q + 268435456) * 536870912 + (r + 268435456) AS cell
-         FROM cnt),
-       adj AS (SELECT a.cell AS ca, b.cell AS cb FROM cid a JOIN cid b
-         ON (abs(a.q - b.q) + abs(a.r - b.r) + abs((a.q - b.q) + (a.r - b.r))) // 2 = 1),
-       reach(cell, other) AS (
-         SELECT cell, cell FROM cid
-         UNION
-         SELECT x.cell, a.cb FROM reach x JOIN adj a ON a.ca = x.other),
-       comp AS (SELECT cell, min(other) AS region FROM reach GROUP BY cell)
-       SELECT c2.region, CAST(count(*) AS BIGINT) AS n_cells,
-         CAST(sum(cid.n) AS BIGINT) AS n_points
-       FROM cid JOIN comp c2 ON cid.cell = c2.cell
-       GROUP BY 1 ORDER BY region"""
-  }
 }

@@ -76,7 +76,7 @@ object OracleCtes2 {
     * clamped neighbours of the nearest node. Missing tile ⇒ 0.
     */
   /** Zonal-histogram oracle (PIP membership × bilinear elevation × 256 m
-    * bins); also the body the `zonal_majority` oracle ranks over.
+    * bins).
     */
   private[graft] def zonalHistOracleSql: String =
     """WITH pts AS (SELECT ((l_orderkey*8 + l_linenumber)*2000 + l_partkey)*100 + l_suppkey AS point_id,
@@ -115,164 +115,6 @@ object OracleCtes2 {
          FROM inside JOIN e USING (point_id)
          GROUP BY 1, 2 ORDER BY 1, 2"""
 
-  /** Shared D8 scaffolding of the hydrology oracles: the 100×100 synthetic
-    * grid, its steepest-descent successor table — reused by watershed,
-    * basin-size and flow-accumulation replays.
-    */
-  private[graft] def watershedCtes: String =
-    """cells AS (SELECT t1.i AS i, t2.j AS j, t1.i*100 + t2.j AS cell
-           FROM range(0,100) t1(i), range(0,100) t2(j)),
-         e AS (SELECT cell, i, j, (i*i)%97 + (j*j)%89 + (i*j)%31 AS e FROM cells),
-         nb AS (SELECT cell, e, k,
-             i + [1,1,0,-1,-1,-1,0,1][k+1] AS ni,
-             j + [0,1,1,1,0,-1,-1,-1][k+1] AS nj
-           FROM e, range(0,8) t(k)),
-         sc AS (SELECT cell, e, k, ni, nj,
-             CASE WHEN ni BETWEEN 0 AND 99 AND nj BETWEEN 0 AND 99
-                   AND e - ((ni*ni)%97 + (nj*nj)%89 + (ni*nj)%31) > 0
-               THEN e - ((ni*ni)%97 + (nj*nj)%89 + (ni*nj)%31)
-               ELSE -1 END AS drp FROM nb),
-         pick AS (SELECT cell, drp, ni*100 + nj AS nc,
-             row_number() OVER (PARTITION BY cell ORDER BY drp DESC, k ASC) AS rk
-           FROM sc),
-         succ AS (SELECT cell,
-             CASE WHEN drp > 0 THEN nc ELSE cell END AS succ
-           FROM pick WHERE rk = 1)"""
-
-  private[graft] def watershedOracleSql: String =
-    s"""WITH RECURSIVE $watershedCtes,
-         w AS (SELECT cell, succ AS cur FROM succ
-           UNION ALL
-           SELECT w.cell, s.succ FROM w JOIN succ s ON s.cell = w.cur
-           WHERE s.succ <> w.cur)
-         SELECT w.cell, w.cur AS sink FROM w JOIN succ s ON s.cell = w.cur
-         WHERE s.succ = w.cur ORDER BY w.cell"""
-
-  /** Flow-accumulation oracle: every cell's downstream path enumerated by
-    * the recursive walk (one row per (source, downstream node), absorbing
-    * at the sink), then upstream counts per node + self.
-    */
-  private[graft] def flowaccumOracleSql: String =
-    s"""WITH RECURSIVE $watershedCtes,
-         p AS (SELECT cell, succ AS cur FROM succ WHERE succ <> cell
-           UNION ALL
-           SELECT p.cell, s.succ FROM p JOIN succ s ON s.cell = p.cur
-           WHERE s.succ <> p.cur)
-         SELECT s.cell, CAST(1 + COALESCE(q.cnt, 0) AS BIGINT) AS acc
-         FROM succ s LEFT JOIN (SELECT cur, count(*) AS cnt FROM p GROUP BY 1) q
-           ON q.cur = s.cell
-         ORDER BY s.cell"""
-
-  /** hex_rollup oracle: res-9 axial assignment → per-cell counts → centers
-    * re-assigned at res 7 — op-order-identical to Hex.cellToParent
-    * (cellCenter → latLngToCell; Sqrt3 = sqrt(3.0) in both engines).
-    */
-  private[graft] def hexRollupOracleSql: String = {
-    val e9 = graft.geo.Hex.edge(9)
-    val e7 = graft.geo.Hex.edge(7)
-    s"""WITH pts AS ($quadrantPtsCte),
-       ax9 AS (SELECT point_id,
-         (sqrt(3.0)/3.0 * lng - lat/3.0) / CAST('$e9' AS DOUBLE) AS qf,
-         (2.0/3.0 * lat) / CAST('$e9' AS DOUBLE) AS rf FROM pts),
-       r09 AS (SELECT point_id, qf, rf, -qf - rf AS sf,
-         CAST(floor(qf + 0.5) AS BIGINT) AS qi,
-         CAST(floor(rf + 0.5) AS BIGINT) AS ri,
-         CAST(floor(-qf - rf + 0.5) AS BIGINT) AS si FROM ax9),
-       rr9 AS (SELECT point_id,
-         CASE WHEN abs(qi - qf) > abs(ri - rf) AND abs(qi - qf) > abs(si - sf)
-              THEN -ri - si ELSE qi END AS q,
-         CASE WHEN NOT (abs(qi - qf) > abs(ri - rf) AND abs(qi - qf) > abs(si - sf))
-                   AND abs(ri - rf) > abs(si - sf)
-              THEN -qi - si ELSE ri END AS r FROM r09),
-       g AS (SELECT q, r, count(*) AS n9 FROM rr9 GROUP BY 1, 2),
-       ctr AS (SELECT n9,
-         CAST('$e9' AS DOUBLE) * (sqrt(3.0) * q + sqrt(3.0) / 2.0 * r) AS cx,
-         CAST('$e9' AS DOUBLE) * (CAST(1.5 AS DOUBLE) * r) AS cy FROM g),
-       ax7 AS (SELECT n9,
-         (sqrt(3.0)/3.0 * cx - cy/3.0) / CAST('$e7' AS DOUBLE) AS qf,
-         (2.0/3.0 * cy) / CAST('$e7' AS DOUBLE) AS rf FROM ctr),
-       r07 AS (SELECT *, -qf - rf AS sf,
-         CAST(floor(qf + 0.5) AS BIGINT) AS qi,
-         CAST(floor(rf + 0.5) AS BIGINT) AS ri,
-         CAST(floor(-qf - rf + 0.5) AS BIGINT) AS si FROM ax7),
-       rr7 AS (SELECT n9,
-         CASE WHEN abs(qi - qf) > abs(ri - rf) AND abs(qi - qf) > abs(si - sf)
-              THEN -ri - si ELSE qi END AS q7,
-         CASE WHEN NOT (abs(qi - qf) > abs(ri - rf) AND abs(qi - qf) > abs(si - sf))
-                   AND abs(ri - rf) > abs(si - sf)
-              THEN -qi - si ELSE ri END AS r7 FROM r07)
-       SELECT CAST(7 AS BIGINT) * 288230376151711744 + (q7 + 268435456) * 536870912 + (r7 + 268435456) AS cell7,
-         CAST(sum(n9) AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS n_children
-       FROM rr7 GROUP BY 1 ORDER BY 1"""
-  }
-
-  /** Mosaic-downsample oracle: the 2:1 box mean over the assembled 2°
-    * block, every sample recomputed closed-form (TileGen.sampleAt), absent
-    * tiles ⇒ 0, `>> 2` exact mean.
-    */
-  private[graft] def tileMosaicOracleSql: String = {
-    def samp(rE: String, cE: String): String =
-      s"""(CASE WHEN ((plng + ($cE) // 600) = -118 AND (36 + ($rE) // 600) = 37)
-              OR ((plng + ($cE) // 600) = -117 AND (36 + ($rE) // 600) = 36) THEN 0
-           ELSE ((plng + ($cE) // 600 + 180)*7 + (36 + ($rE) // 600 + 90)*11) % 1000
-                + 2*(($cE) % 600) + 3*(($rE) % 600)
-                + (((($cE) % 600)//8) * ((($rE) % 600)//8)) % 32 END)"""
-    s"""WITH rc AS (SELECT plng, tr.r AS r, tc.c AS c
-         FROM (VALUES (-120), (-118)) p(plng),
-              range(0,600) tr(r), range(0,600) tc(c)),
-       s AS (SELECT plng, r, c,
-         (${samp("2*r", "2*c")} + ${samp("2*r", "2*c+1")} +
-          ${samp("2*r+1", "2*c")} + ${samp("2*r+1", "2*c+1")}) >> 2 AS v
-         FROM rc)
-       SELECT plng, 36 AS plat, CAST(count(*) AS BIGINT) AS n_px,
-         CAST(sum(v) AS BIGINT) AS v_sum, CAST(sum(v*r) AS BIGINT) AS vr_sum,
-         CAST(sum(v*c) AS BIGINT) AS vc_sum
-       FROM s GROUP BY plng ORDER BY plng"""
-  }
-
-  /** Power-iteration oracle: the 3 rounds of integer-exact Xᵀ(Xv) unrolled
-    * as CTE chains (v0 = e₀·1000; per-round ÷2²⁰ and max-normalize as
-    * floor-of-double-division, mirroring Embeddings.powerIteration).
-    */
-  /** Shared WITH-body of the power-iteration replay: x (milli-quantized
-    * corpus), v0 (seed) and per-round dot/u/s/m/v CTEs — reused by the
-    * projection oracle below.
-    */
-  private[graft] def powerIterCtes(rounds: Int): String = {
-    val roundCtes = (1 to rounds).map { r =>
-      s"""dot$r AS (SELECT vec_id, CAST(sum(xq * v) AS BIGINT) AS s
-           FROM x JOIN v${r - 1} USING (d) GROUP BY 1),
-         u$r AS (SELECT d, CAST(sum(xq * s) AS BIGINT) AS u
-           FROM x JOIN dot$r USING (vec_id) GROUP BY 1),
-         s$r AS (SELECT d, CAST(floor(CAST(u AS DOUBLE)/1048576.0) AS BIGINT) AS su
-           FROM u$r),
-         m$r AS (SELECT max(abs(su)) AS m FROM s$r),
-         v$r AS (SELECT d, CAST(floor(CAST(su AS DOUBLE)*1000.0/CAST(m AS DOUBLE))
-           AS BIGINT) AS v FROM s$r, m$r)"""
-    }.mkString(",\n         ")
-    s"""x AS (SELECT vec_id, d,
-           CAST(floor(CAST(embedding[d+1] AS DOUBLE) * 1000.0) AS BIGINT) AS xq
-         FROM embeddings, range(0,64) t(d)),
-       v0 AS (SELECT d, CASE WHEN d = 0 THEN 1000 ELSE 0 END AS v
-         FROM range(0,64) t(d)),
-       $roundCtes"""
-  }
-
-  private[graft] def powerIterOracleSql(rounds: Int): String = {
-    val out = (1 to rounds)
-      .map(r => s"SELECT $r AS rnd, d, v FROM v$r").mkString(" UNION ALL ")
-    s"""WITH ${powerIterCtes(rounds)}
-       SELECT * FROM ($out) ORDER BY rnd, d"""
-  }
-
-  /** PCA-projection oracle: the round-3 direction replayed via the shared
-    * CTEs, then the same milli-quantized integer dot per vector.
-    */
-  private[graft] def pcaProjectOracleSql: String =
-    s"""WITH ${powerIterCtes(3)}
-       SELECT vec_id, CAST(sum(xq * v) AS BIGINT) AS score
-       FROM x JOIN v3 USING (d) GROUP BY 1 ORDER BY vec_id"""
-
   /** PageRank oracle: the 3 rounds unrolled as CTE chains — every step an
     * integer floor-division (`//` = Spark `DIV` on positive operands) or an
     * order-independent sum, so ranks are bit-equal across engines.
@@ -294,58 +136,6 @@ object OracleCtes2 {
          $rounds
          SELECT node, CAST(pr AS BIGINT) AS pr FROM r3 ORDER BY node"""
   }
-
-  /** HITS oracle: the engine's 3 fixed rounds unrolled as CTEs — per round
-    * auth_raw = Σ hub over in-edges, L1-renormalized to ppm by truncating
-    * division, then hub_raw = Σ NEW auth over out-edges, renormalized the
-    * same way. All arithmetic non-negative integers, so DuckDB's `//`
-    * equals Spark's DIV bit-for-bit.
-    */
-  private[graft] def hitsOracleSql: String = {
-    def norm(raw: String, out: String) =
-      s"""(SELECT n.node,
-             (COALESCE(x.raw, 0) * 1000000) // (SELECT sum(raw) FROM $raw) AS $out
-           FROM nodes n LEFT JOIN $raw x USING (node))"""
-    val rounds = (1 to 3).map { r =>
-      s"""ar$r AS (SELECT e.dst AS node, sum(h.hub) AS raw
-           FROM h${r - 1} h JOIN e ON e.src = h.node GROUP BY 1),
-         a$r AS ${norm(s"ar$r", "auth")},
-         hr$r AS (SELECT e.src AS node, sum(a.auth) AS raw
-           FROM a$r a JOIN e ON e.dst = a.node GROUP BY 1),
-         h$r AS ${norm(s"hr$r", "hub")}"""
-    }.mkString(",\n         ")
-    s"""WITH e AS (SELECT DISTINCT l_suppkey % 500 AS src,
-           l_partkey % 500 AS dst FROM lineitem
-           WHERE l_suppkey % 500 <> l_partkey % 500),
-         nodes AS (SELECT src AS node FROM e UNION SELECT dst AS node FROM e),
-         h0 AS (SELECT node, CAST(1000000 AS BIGINT) AS hub FROM nodes),
-         $rounds
-         SELECT CAST(a3.node AS BIGINT) AS node, CAST(a3.auth AS BIGINT) AS auth,
-                CAST(h3.hub AS BIGINT) AS hub
-         FROM a3 JOIN h3 USING (node) ORDER BY node"""
-  }
-
-  /** Two-hop oracle: wedge join for distance-2 candidates, EXISTS
-    * anti-filter for direct neighbors, same canonical-undirected recipe.
-    */
-  private[graft] def twoHopOracleSql: String =
-    """WITH e AS (SELECT DISTINCT
-           GREATEST(l_suppkey % 500, l_partkey % 500) AS hi,
-           LEAST(l_suppkey % 500, l_partkey % 500) AS lo
-         FROM lineitem WHERE l_orderkey % 7 = 0),
-       e2 AS (SELECT hi, lo FROM e WHERE hi <> lo),
-       sym AS (SELECT lo AS u, hi AS v FROM e2
-               UNION ALL SELECT hi AS u, lo AS v FROM e2),
-       direct AS (SELECT u AS node, count(*) AS n_direct FROM sym GROUP BY 1),
-       th AS (SELECT DISTINCT a.u, b.v AS w FROM sym a JOIN sym b ON a.v = b.u
-         WHERE b.v <> a.u),
-       thx AS (SELECT u, w FROM th WHERE NOT EXISTS
-         (SELECT 1 FROM sym s WHERE s.u = th.u AND s.v = th.w)),
-       t2 AS (SELECT u AS node, count(*) AS n_twohop FROM thx GROUP BY 1)
-       SELECT CAST(d.node AS BIGINT) AS node,
-         CAST(n_direct AS BIGINT) AS n_direct,
-         CAST(COALESCE(n_twohop, 0) AS BIGINT) AS n_twohop
-       FROM direct d LEFT JOIN t2 USING (node) ORDER BY node"""
 
   /** Label-propagation oracle: the engine's 3 deterministic mode-vote
     * sweeps unrolled — per round, neighbor-label counts then the per-node
@@ -371,156 +161,6 @@ object OracleCtes2 {
          $rounds
          SELECT CAST(node AS BIGINT) AS node, CAST(lbl AS BIGINT) AS lbl
          FROM l3 ORDER BY node"""
-  }
-
-  /** k-core oracle: the engine's fixed-round peel unrolled as CTEs — per
-    * round, degrees over edges with BOTH endpoints in the prior survivor
-    * set, HAVING deg ≥ k. Same graph recipe as the engine (canonical
-    * undirected dedup, self-loops dropped, adjacency doubled).
-    */
-  private[graft] def kcoreOracleSql: String = {
-    val rounds = (1 to 4).map { r =>
-      s"""d$r AS (SELECT s.u AS node, count(*) AS deg
-           FROM sym s JOIN a${r - 1} x ON s.u = x.node
-           JOIN a${r - 1} y ON s.v = y.node
-           GROUP BY 1 HAVING count(*) >= 18),
-         a$r AS (SELECT node FROM d$r)"""
-    }.mkString(",\n         ")
-    s"""WITH e AS (SELECT DISTINCT
-           GREATEST(l_suppkey % 500, l_partkey % 500) AS hi,
-           LEAST(l_suppkey % 500, l_partkey % 500) AS lo
-         FROM lineitem WHERE l_orderkey % 7 = 0),
-         e2 AS (SELECT hi, lo FROM e WHERE hi <> lo),
-         sym AS (SELECT lo AS u, hi AS v FROM e2
-                 UNION ALL SELECT hi AS u, lo AS v FROM e2),
-         a0 AS (SELECT DISTINCT u AS node FROM sym),
-         $rounds
-         SELECT node, CAST(deg AS BIGINT) AS deg FROM d4 ORDER BY node"""
-  }
-
-  /** Hilbert-key oracle: the published xy→d recurrence unrolled as 8 CTE
-    * steps — quadrant digit `(3·rx)⊕ry` written as the polynomial
-    * `3rx + ry − 2·rx·ry` (rx, ry ∈ {0,1}), then the reflect+transpose
-    * frame update, all in exact integers.
-    */
-  /** The 8-level Hilbert quadrant+rotation recurrence as chained CTEs
-    * (h1..h8 from h0) — shared by the hilbert-key oracle and the
-    * curve-locality audit.
-    */
-  private[graft] def hilbertStepCtes: String =
-    (0 until 8).map { i =>
-      val sv = 128 >> i
-      s"""h${i + 1} AS (SELECT point_id,
-          d + ${sv.toLong * sv} * (3 * rx + ry - 2 * rx * ry) AS d,
-          CASE WHEN ry = 1 THEN x ELSE (CASE WHEN rx = 1 THEN $sv - 1 - y ELSE y END) END AS x,
-          CASE WHEN ry = 1 THEN y ELSE (CASE WHEN rx = 1 THEN $sv - 1 - x ELSE x END) END AS y
-        FROM (SELECT point_id, d, x, y,
-            CASE WHEN (x & $sv) > 0 THEN 1 ELSE 0 END AS rx,
-            CASE WHEN (y & $sv) > 0 THEN 1 ELSE 0 END AS ry FROM h$i))"""
-    }.mkString(",\n         ")
-
-  /** Bit-interleave Morton key of two 8-bit axes as a pure arithmetic
-    * expression; `div` is the integer-division token ("DIV" Spark,
-    * "//" DuckDB).
-    */
-  private[graft] def mortonSql(qx: String, qy: String, div: String): String =
-    (0 until 8).map { k =>
-      val p = 1 << k
-      s"(($qx $div $p) % 2) * ${1L << (2 * k)} + " +
-        s"(($qy $div $p) % 2) * ${1L << (2 * k + 1)}"
-    }.mkString(" + ")
-
-  private[graft] def hilbertOracleSql: String = {
-    val steps = hilbertStepCtes
-    s"""WITH pts AS (SELECT c_custkey AS point_id,
-         -180 + (c_custkey % 360) + 0.5 AS lng,
-         -90 + ((c_custkey * 7) % 180) + 0.25 AS lat FROM customer),
-       h0 AS (SELECT point_id, CAST(0 AS BIGINT) AS d,
-         LEAST(255, GREATEST(0, CAST(floor(((lng + 180.0) / 360.0) * 256.0) AS BIGINT))) AS x,
-         LEAST(255, GREATEST(0, CAST(floor(((lat + 90.0) / 180.0) * 256.0) AS BIGINT))) AS y FROM pts),
-       $steps
-       SELECT point_id, CAST(d AS BIGINT) AS hkey FROM h8 ORDER BY point_id"""
-  }
-
-  /** MMR oracle: the exact cosine top-20 kernel (same list_sum fold as
-    * ann_cosine_topk), the candidate pairwise-sim matrix, then the 4
-    * greedy rounds unrolled — each round scores the not-yet-picked
-    * candidates via a correlated max-sim subquery against the selected
-    * set and picks the (score desc, neighbor_id) winner.
-    */
-  private[graft] def mmrOracleSql: String = {
-    val lam = "CAST(0.5 AS DOUBLE)"
-    val rounds = (2 to 4).map { st =>
-      s"""sc$st AS (SELECT c.qid, c.neighbor_id, c.rel,
-            $lam * c.rel - $lam * (SELECT max(s.sim) FROM sim s
-              JOIN sel${st - 1} p ON p.qid = s.qid AND p.neighbor_id = s.ib
-              WHERE s.qid = c.qid AND s.ia = c.neighbor_id) AS score
-          FROM cand c
-          WHERE NOT EXISTS (SELECT 1 FROM sel${st - 1} p
-            WHERE p.qid = c.qid AND p.neighbor_id = c.neighbor_id)),
-         pick$st AS (SELECT qid, $st AS step, neighbor_id, rel, score FROM (
-            SELECT *, row_number() OVER (PARTITION BY qid
-              ORDER BY score DESC, neighbor_id) AS rn FROM sc$st) WHERE rn = 1),
-         sel$st AS (SELECT qid, neighbor_id FROM sel${st - 1}
-           UNION ALL SELECT qid, neighbor_id FROM pick$st)"""
-    }.mkString(",\n         ")
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
-       n AS (SELECT vec_id, v, sqrt(list_sum(list_transform(v, x -> x * x))) AS nrm FROM e),
-       q AS (SELECT vec_id AS qid, v AS qv, nrm AS qnrm FROM n WHERE vec_id < 3),
-       p AS (SELECT qid, n.vec_id AS neighbor_id,
-           list_sum(list_transform(range(1, 65), i -> qv[i] * v[i])) / (qnrm * nrm) AS rel
-         FROM q, n WHERE n.vec_id <> qid),
-       cand AS (SELECT qid, neighbor_id, rel FROM (
-           SELECT *, row_number() OVER (PARTITION BY qid ORDER BY rel DESC, neighbor_id) AS rk
-           FROM p) WHERE rk <= 20),
-       cv AS (SELECT c.qid, c.neighbor_id, n.v, n.nrm FROM cand c
-         JOIN n ON n.vec_id = c.neighbor_id),
-       sim AS (SELECT a.qid, a.neighbor_id AS ia, b.neighbor_id AS ib,
-           list_sum(list_transform(range(1, 65), i -> a.v[i] * b.v[i])) / (a.nrm * b.nrm) AS sim
-         FROM cv a JOIN cv b ON a.qid = b.qid AND a.neighbor_id <> b.neighbor_id),
-       sc1 AS (SELECT qid, neighbor_id, rel, $lam * rel AS score FROM cand),
-       pick1 AS (SELECT qid, 1 AS step, neighbor_id, rel, score FROM (
-          SELECT *, row_number() OVER (PARTITION BY qid
-            ORDER BY score DESC, neighbor_id) AS rn FROM sc1) WHERE rn = 1),
-       sel1 AS (SELECT qid, neighbor_id FROM pick1),
-       $rounds
-       SELECT qid, CAST(step AS INTEGER) AS step, neighbor_id,
-         round(rel, 4) AS rel_r, round(score, 4) AS score_r
-       FROM (SELECT * FROM pick1 UNION ALL SELECT * FROM pick2
-         UNION ALL SELECT * FROM pick3 UNION ALL SELECT * FROM pick4)
-       ORDER BY qid, step"""
-  }
-
-  /** Farthest-first oracle: 4 unrolled pick rounds, each the LEAST of the
-    * exact integer distances to every prior pivot, top-1 by
-    * (d2 desc, vec_id).
-    */
-  private[graft] def farthestFirstOracleSql: String = {
-    def d2(p: String) =
-      s"CAST(list_sum(list_transform(range(1,65), " +
-        s"i -> (q.eq[i] - $p.eq[i]) * (q.eq[i] - $p.eq[i]))) AS BIGINT)"
-    val rounds = (1 to 4).map { r =>
-      val pivots = (0 until r).map(j => s"p$j")
-      val mind =
-        if (r == 1) d2("p0")
-        else pivots.map(d2).mkString("LEAST(", ", ", ")")
-      s"""d$r AS (SELECT q.vec_id, q.eq, $mind AS d2
-         FROM e q, ${pivots.mkString(", ")}),
-         p$r AS (SELECT vec_id, eq, d2 FROM d$r
-           ORDER BY d2 DESC, vec_id LIMIT 1)"""
-    }.mkString(",\n         ")
-    s"""WITH e AS (SELECT vec_id, list_transform(embedding,
-         x -> CAST(floor(CAST(x AS DOUBLE) * 1000.0) AS BIGINT)) AS eq
-         FROM embeddings),
-       p0 AS (SELECT vec_id, eq FROM e ORDER BY vec_id LIMIT 1),
-       $rounds
-       SELECT CAST(0 AS BIGINT) AS pick_no, vec_id,
-         CAST(0 AS BIGINT) AS d2 FROM p0
-       UNION ALL SELECT 1, vec_id, d2 FROM p1
-       UNION ALL SELECT 2, vec_id, d2 FROM p2
-       UNION ALL SELECT 3, vec_id, d2 FROM p3
-       UNION ALL SELECT 4, vec_id, d2 FROM p4
-       ORDER BY pick_no"""
   }
 
   /** Fréchet oracle: the coupling DP unrolled as one CTE per anti-diagonal
@@ -559,48 +199,6 @@ object OracleCtes2 {
        sz AS (SELECT t1, t2, CAST(max(i) + 1 AS INTEGER) AS n_a,
            CAST(max(j) + 1 AS INTEGER) AS n_b FROM cells GROUP BY 1, 2)
        SELECT ca10.t1, ca10.t2, sz.n_a, sz.n_b, CAST(ca10.v AS BIGINT) AS frechet_d2
-       FROM ca10 JOIN sz ON sz.t1 = ca10.t1 AND sz.t2 = ca10.t2
-       ORDER BY ca10.t1, ca10.t2"""
-  }
-
-  /** LCSS oracle: the tolerance-gated DP per anti-diagonal, COALESCE-0
-    * borders (missing lattice edges contribute an empty subsequence).
-    */
-  private[graft] def lcssOracleSql: String = {
-    val eps2 = 64L
-    val diags = (1 to 10).map { k =>
-      val p2 = s"ca${math.max(k - 2, 0)}"
-      s"""ca$k AS MATERIALIZED (SELECT c.t1, c.t2, c.i, c.j,
-          CASE WHEN c.d2 <= $eps2 THEN COALESCE(p2.v, 0) + 1
-               ELSE GREATEST(COALESCE(p1.v, 0), COALESCE(p3.v, 0)) END AS v
-        FROM cells c
-        LEFT JOIN ca${k - 1} p1 ON p1.t1 = c.t1 AND p1.t2 = c.t2
-          AND p1.i = c.i - 1 AND p1.j = c.j
-        LEFT JOIN ca${k - 1} p3 ON p3.t1 = c.t1 AND p3.t2 = c.t2
-          AND p3.i = c.i AND p3.j = c.j - 1
-        LEFT JOIN $p2 p2 ON p2.t1 = c.t1 AND p2.t2 = c.t2
-          AND p2.i = c.i - 1 AND p2.j = c.j - 1
-        WHERE c.i + c.j = $k)"""
-    }.mkString(",\n         ")
-    s"""WITH trajs AS (SELECT DISTINCT s_suppkey % 20 AS traj_id FROM supplier),
-       v AS (SELECT traj_id, CAST(g AS BIGINT) AS seq,
-           (traj_id * 7 + g * (traj_id % 5 + 1) * 3) % 40 AS px,
-           (traj_id * 11 + g * (traj_id % 3 + 2) * 2) % 40 AS py
-         FROM trajs, unnest(range(0, 6)) AS t(g)),
-       pairs AS (SELECT a.traj_id AS t1, b.traj_id AS t2
-         FROM trajs a, trajs b WHERE a.traj_id < b.traj_id),
-       cells AS MATERIALIZED (SELECT p.t1, p.t2, CAST(va.seq AS INT) AS i, CAST(vb.seq AS INT) AS j,
-           (va.px - vb.px)*(va.px - vb.px) + (va.py - vb.py)*(va.py - vb.py) AS d2
-         FROM pairs p JOIN v va ON va.traj_id = p.t1 JOIN v vb ON vb.traj_id = p.t2),
-       ca0 AS MATERIALIZED (SELECT t1, t2, i, j,
-           CASE WHEN d2 <= $eps2 THEN 1 ELSE 0 END AS v
-         FROM cells WHERE i = 0 AND j = 0),
-       $diags,
-       sz AS (SELECT t1, t2, CAST(max(i) + 1 AS INTEGER) AS n_a,
-           CAST(max(j) + 1 AS INTEGER) AS n_b FROM cells GROUP BY 1, 2)
-       SELECT ca10.t1, ca10.t2, sz.n_a, sz.n_b,
-         CAST(ca10.v AS BIGINT) AS lcss_len,
-         CAST(ca10.v AS BIGINT) * 1000000 // least(sz.n_a, sz.n_b) AS sim_ppm
        FROM ca10 JOIN sz ON sz.t1 = ca10.t1 AND sz.t2 = ca10.t2
        ORDER BY ca10.t1, ca10.t2"""
   }
@@ -666,128 +264,6 @@ object OracleCtes2 {
        LEFT JOIN h1 ON h1.qid = q.qid ORDER BY q.qid"""
   }
 
-  /** Map-matching oracle: the Viterbi recurrence replayed one MATERIALIZED
-    * CTE per fix, the previous column folded in via a correlated min over
-    * all 25 states.
-    */
-  private[graft] def mapMatchOracleSql: String = {
-    val nodes = (for { i <- 0L until 5L; j <- 0L until 5L }
-      yield s"(${i * 5 + j}, ${j * 20}, ${i * 20})").mkString(",")
-    val steps = (1 to 5).map { k =>
-      s"""v$k AS MATERIALIZED (SELECT f.traj_id, n.node_id,
-          (SELECT min(p.cost + 3*(abs(n.nx - pn.nx) + abs(n.ny - pn.ny)))
-             FROM v${k - 1} p JOIN nodes pn ON pn.node_id = p.node_id
-             WHERE p.traj_id = f.traj_id)
-          + (f.px - n.nx)*(f.px - n.nx) + (f.py - n.ny)*(f.py - n.ny) AS cost
-        FROM fx f, nodes n WHERE f.seq = $k)"""
-    }.mkString(",\n         ")
-    val out = (0 to 5).map(k =>
-      s"SELECT traj_id, $k AS step, node_id, cost FROM v$k")
-      .mkString("\n         UNION ALL ")
-    s"""WITH p0 AS (SELECT user_id, ts, event_id,
-         event_id % 7 AS dx, (event_id * 3) % 5 AS dy FROM events
-         WHERE user_id < 12),
-       c AS (SELECT user_id, ts, event_id,
-           CAST(sum(dx) OVER w AS BIGINT) AS px,
-           CAST(sum(dy) OVER w AS BIGINT) AS py,
-           row_number() OVER w - 1 AS seq
-         FROM p0 WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-       fx AS MATERIALIZED (SELECT user_id AS traj_id, seq, px, py FROM c
-         WHERE seq < 6),
-       nodes(node_id, nx, ny) AS (VALUES $nodes),
-       v0 AS MATERIALIZED (SELECT f.traj_id, n.node_id,
-           (f.px - n.nx)*(f.px - n.nx) + (f.py - n.ny)*(f.py - n.ny) AS cost
-         FROM fx f, nodes n WHERE f.seq = 0),
-       $steps
-       SELECT traj_id, CAST(step AS INT) AS step,
-         CAST(node_id AS BIGINT) AS node_id, CAST(cost AS BIGINT) AS cost
-       FROM ($out) ORDER BY traj_id, step, node_id"""
-  }
-
-  /** PPR oracle: the pagerank recurrence with the teleport share pinned to
-    * the seed literals, 3 rounds unrolled.
-    */
-  private[graft] def pprOracleSql: String = {
-    val rounds = (1 to 3).map { r =>
-      s"""c$r AS (SELECT e.dst AS node, sum(rr.ppr // o.outdeg) AS inflow
-           FROM r${r - 1} rr JOIN outdeg o USING (node)
-           JOIN e ON e.src = rr.node GROUP BY 1),
-         r$r AS (SELECT n.node,
-             (CASE WHEN n.node IN (7, 42, 99) THEN 150000 ELSE 0 END)
-               + (850000 * COALESCE(c.inflow, 0)) // 1000000 AS ppr
-           FROM nodes n LEFT JOIN c$r c USING (node))"""
-    }.mkString(",\n         ")
-    s"""WITH e AS (SELECT DISTINCT l_suppkey % 500 AS src,
-           l_partkey % 500 AS dst FROM lineitem),
-         nodes AS (SELECT src AS node FROM e UNION SELECT dst AS node FROM e),
-         outdeg AS (SELECT src AS node, count(*) AS outdeg FROM e GROUP BY 1),
-         r0 AS (SELECT node, CAST(CASE WHEN node IN (7, 42, 99)
-             THEN 1000000 ELSE 0 END AS BIGINT) AS ppr FROM nodes),
-         $rounds
-         SELECT node, CAST(ppr AS BIGINT) AS ppr FROM r3 ORDER BY node"""
-  }
-
-  /** Cost-distance oracle: the same 8-connected uphill-cost edges from
-    * the closed-form field, the same 6 Bellman–Ford relaxations unrolled
-    * as per-round min-aggregated CTEs (exact min-plus integers).
-    */
-  private[graft] def costDistanceOracleSql: String = {
-    val rounds = (1 to 6).map { r =>
-      s"""d$r AS (SELECT node, min(dist) AS dist FROM (
-            SELECT node, dist FROM d${r - 1}
-            UNION ALL
-            SELECT e.dst AS node, p.dist + e.w AS dist
-            FROM d${r - 1} p JOIN e ON e.src = p.node) GROUP BY node)"""
-    }.mkString(",\n         ")
-    s"""WITH g AS (SELECT range AS id, range // 100 AS i, range % 100 AS j
-           FROM range(0, 10000)),
-       nb(di, dj) AS (VALUES (1,0),(1,1),(0,1),(-1,1),(-1,0),(-1,-1),(0,-1),(1,-1)),
-       e AS (SELECT i*100 + j AS src, (i+di)*100 + (j+dj) AS dst,
-           1 + GREATEST(0,
-             (((i+di)*(i+di))%97 + ((j+dj)*(j+dj))%89 + ((i+di)*(j+dj))%31)
-             - ((i*i)%97 + (j*j)%89 + (i*j)%31)) AS w
-         FROM g, nb
-         WHERE i+di BETWEEN 0 AND 99 AND j+dj BETWEEN 0 AND 99),
-       d0(node, dist) AS (SELECT 5050, 0),
-       $rounds
-       SELECT CAST(node AS BIGINT) AS node, CAST(dist AS BIGINT) AS dist
-       FROM d6 ORDER BY node"""
-  }
-
-  /** Convex-hull oracle: the Carathéodory certificate — a deduped point is
-    * a hull vertex iff it is NOT strictly inside any triangle of same-group
-    * points and NOT strictly between two of them on a segment. All cross
-    * products are exact BIGINT (integer coordinates), so the certificate
-    * identifies exactly the engine's minimal strict-turn vertex set.
-    */
-  private[graft] def convexHullOracleSql: String =
-    """WITH raw AS (SELECT c_custkey % 25 AS gid,
-           (c_custkey * 7) % 1201 AS x, (c_custkey * 13) % 1009 AS y
-         FROM customer WHERE c_custkey <= 1000),
-       pts AS (SELECT DISTINCT gid, x, y FROM raw),
-       tri AS (SELECT DISTINCT p.gid, p.x, p.y
-         FROM pts p
-         JOIN pts a ON a.gid = p.gid
-         JOIN pts b ON b.gid = p.gid
-         JOIN pts c ON c.gid = p.gid
-         WHERE ((a.x-p.x)*(b.y-p.y) - (a.y-p.y)*(b.x-p.x) > 0 AND
-                (b.x-p.x)*(c.y-p.y) - (b.y-p.y)*(c.x-p.x) > 0 AND
-                (c.x-p.x)*(a.y-p.y) - (c.y-p.y)*(a.x-p.x) > 0)
-            OR ((a.x-p.x)*(b.y-p.y) - (a.y-p.y)*(b.x-p.x) < 0 AND
-                (b.x-p.x)*(c.y-p.y) - (b.y-p.y)*(c.x-p.x) < 0 AND
-                (c.x-p.x)*(a.y-p.y) - (c.y-p.y)*(a.x-p.x) < 0)),
-       seg AS (SELECT DISTINCT p.gid, p.x, p.y
-         FROM pts p
-         JOIN pts a ON a.gid = p.gid
-         JOIN pts b ON b.gid = p.gid
-         WHERE (a.x-p.x)*(b.y-p.y) - (a.y-p.y)*(b.x-p.x) = 0
-           AND (p.x-a.x)*(b.x-p.x) + (p.y-a.y)*(b.y-p.y) > 0)
-       SELECT gid, CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y FROM (
-         SELECT * FROM pts
-         EXCEPT (SELECT * FROM tri UNION SELECT * FROM seg))
-       ORDER BY gid, x, y"""
-
   private[graft] def flowdirOracleSql: String = {
     val scores = (0 until 8).map { i =>
       val dc = Seq(1, 1, 0, -1, -1, -1, 0, 1)(i)
@@ -822,20 +298,6 @@ object OracleCtes2 {
        SELECT point_id,
          CAST(CASE WHEN (swlng = -118 AND swlat = 37) OR (swlng = -117 AND swlat = 36) THEN 0
                    ELSE $terms END AS BIGINT) AS tri
-       FROM c ORDER BY point_id"""
-  }
-
-  /** TPI oracle: 24·centre − Σ(5×5 neighbourhood minus centre) on the
-    * synthetic grid, neighbours clamped, the two absent tiles ⇒ 0.
-    */
-  private[graft] def tpiOracleSql: String = {
-    val terms = (for { dr <- -2 to 2; dc <- -2 to 2; if !(dr == 0 && dc == 0) }
-      yield gridV(clamp("cn", dc), clamp("rn", dr))).mkString(" + ")
-    s"""$nodeScaffoldSql,
-       c AS (SELECT *, ${gridV("cn", "rn")} AS vc FROM b)
-       SELECT point_id,
-         CAST(CASE WHEN (swlng = -118 AND swlat = 37) OR (swlng = -117 AND swlat = 36) THEN 0
-                   ELSE 24*vc - ($terms) END AS BIGINT) AS tpi24
        FROM c ORDER BY point_id"""
   }
 

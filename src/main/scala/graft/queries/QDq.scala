@@ -15,12 +15,17 @@ import Fixtures._
 import OracleCtes._
 import OracleCtes2._
 
-/** Data-quality gates: profiling, drift, expectations
-  * (6 entries) with the DuckDB oracle SQL beside each query.
-  * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
+/** Data-quality gates: expectations and profiling (2 entries),
+  * each with its DuckDB oracle SQL.
   */
 object QDq {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+    // Data-quality expectation suite (ops.DataQuality.check): Deequ-style
+    // declared constraints — all row-level rules fold into ONE scan's
+    // combined aggregation; uniqueness is one key histogram; referential
+    // containment is a distinct-first anti-join probe. The gate declares a
+    // deliberate mix of passing and failing rules so both verdict paths and
+    // every violation count are pinned.
     "dq_expectations" -> ((s, dir) => {
       import ops.DataQuality._
       val orders = t(s, dir, "orders")
@@ -41,70 +46,11 @@ object QDq {
     // the quality gate — nulls, EXACT distinct cardinalities, numeric
     // bounds for every column in ONE aggregation pass (multi-distinct
     // expansion, still a single shuffle). The snapshot-statistics table a
-    // 100 TB pipeline publishes beside every corpus version.,
+    // 100 TB pipeline publishes beside every corpus version.
     "dq_profile" -> ((s, dir) => {
       ops.DataQuality.profile(t(s, dir, "orders"),
         Seq("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderdate", "o_orderpriority")).orderBy("column")
-    }),
-    // Snapshot drift report (ops.DataQuality.drift): the two profiles
-    // compared in exact integer ppm — the gate declares a degraded "after"
-    // snapshot (rows dropped, nulls injected, an enum value collapsed) so
-    // every verdict column fires on a known cause.,
-    "dq_drift" -> ((s, dir) => {
-      val before = t(s, dir, "orders")
-      val after = before.filter(col("o_orderkey") % 10 =!= 0)
-        .withColumn("o_totalprice",
-          when(col("o_orderkey") % 7 === 0, lit(null).cast("double"))
-            .otherwise(col("o_totalprice")))
-        .withColumn("o_orderstatus",
-          when(col("o_orderstatus") === "P", lit("F"))
-            .otherwise(col("o_orderstatus")))
-      ops.DataQuality.drift(before, after,
-        Seq("o_custkey", "o_orderstatus", "o_totalprice"), tolPpm = 20000L)
-        .orderBy("column")
-    }),
-    // Benford first-digit conformance (ops.DataQuality.benford): the
-    // fabricated-numbers screen over o_totalprice in exact cents — one
-    // scan, 9-key agg, fixed-point ppm deviations against the exact
-    // round(log10(1+1/d)·1e6) literals (they sum to exactly 1e6).,
-    "dq_benford" -> ((s, dir) => {
-      val cents = t(s, dir, "orders")
-        .selectExpr("CAST(round(o_totalprice*100) AS BIGINT) AS cents")
-      ops.DataQuality.benford(cents, "cents", tolPpm = 30000L)
-        .orderBy("digit")
-    }),
-    // Schema-evolution diff (ops.DataQuality.schemaDiff): the snapshot
-    // compatibility verdict — one row per column in either version with
-    // added/removed/type_changed/unchanged status, pure metadata (no data
-    // scan at any size). The gate evolves orders: drops a column, widens
-    // a type, adds an ingest column.,
-    "dq_schema_diff" -> ((s, dir) => {
-      val before = t(s, dir, "orders")
-        .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-      val after = before.drop("o_orderstatus")
-        .withColumn("o_totalprice", col("o_totalprice").cast("decimal(12,2)"))
-        .withColumn("o_ingest_day", lit(20260819L))
-      ops.DataQuality.schemaDiff(before, after).orderBy("column")
-    }),
-    // EDR trajectory distance (ops.Trajectory.edr): gap-penalizing,
-    // noise-tolerant — the fourth member of the dtw/frechet/lcss family
-    // over the shared synthetic trajectories, eps2 = 25.,
-    "dq_id_gap_census" -> ((s, dir) => {
-      // key-space rows scale with the data: the adjacent-key delta uses
-      // the range-partitioned two-phase lag with boundary carry
-      // (ops.GlobalRank), never a global single-partition window
-      ops.GlobalRank.withLag(
-          t(s, dir, "orders").select(col("o_orderkey").as("k")).distinct(),
-          "k", "prev", Seq(col("k")))
-        .agg(count(lit(1)).as("n_keys"),
-          min("k").as("min_key"), max("k").as("max_key"),
-          sum(when(col("prev").isNotNull && col("k") - col("prev") > 1, 1L)
-            .otherwise(0L)).as("n_gaps"),
-          coalesce(max(when(col("prev").isNotNull,
-            col("k") - col("prev") - 1)), lit(0L)).as("max_gap"))
-        .withColumn("n_missing",
-          expr("max_key - min_key + 1 - n_keys"))
     }),
   )
 
@@ -173,79 +119,5 @@ object QDq {
          $rows
          ORDER BY "column""""
     },
-    // schema-on-read: typed k out of the JSON props, then native aggs,
-    "dq_drift" -> {
-      def prof(src: String, c: String, numeric: Boolean) = {
-        val mm = if (numeric)
-          s"CAST(min($c) AS DOUBLE) AS mn, CAST(max($c) AS DOUBLE) AS mx"
-        else "CAST(NULL AS DOUBLE) AS mn, CAST(NULL AS DOUBLE) AS mx"
-        s"""SELECT CAST(count(*) AS BIGINT) AS n,
-           CAST(sum(CASE WHEN $c IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS nn,
-           CAST(count(DISTINCT $c) AS BIGINT) AS d, $mm FROM $src"""
-      }
-      def ppm(p: String) =
-        s"CASE WHEN $p.n = 0 THEN 0 ELSE $p.nn * 1000000 // $p.n END"
-      val cols = Seq(("o_custkey", true), ("o_orderstatus", false),
-        ("o_totalprice", true))
-      val branches = cols.map { case (c, num) =>
-        s"""SELECT '$c' AS "column", pa.n AS n_a, pb.n AS n_b,
-           CAST(${ppm("pa")} AS BIGINT) AS null_ppm_a,
-           CAST(${ppm("pb")} AS BIGINT) AS null_ppm_b,
-           pa.d AS d_a, pb.d AS d_b,
-           abs(${ppm("pa")} - ${ppm("pb")}) >= 20000 AS null_drift,
-           abs(pa.d - pb.d) * 1000000 >= 20000 * greatest(pa.d, 1)
-             AS card_drift,
-           (pa.mn IS DISTINCT FROM pb.mn) OR (pa.mx IS DISTINCT FROM pb.mx)
-             AS bounds_moved
-           FROM (${prof("orders", c, num)}) pa, (${prof("aft", c, num)}) pb"""
-      }
-      s"""WITH aft AS (SELECT o_orderkey, o_custkey,
-           CASE WHEN o_orderstatus = 'P' THEN 'F' ELSE o_orderstatus END
-             AS o_orderstatus,
-           CASE WHEN o_orderkey % 7 = 0 THEN CAST(NULL AS DOUBLE)
-                ELSE o_totalprice END AS o_totalprice
-         FROM orders WHERE o_orderkey % 10 <> 0)
-         ${branches.mkString("\n         UNION ALL ")}
-         ORDER BY "column""""
-    },
-    // latest-wins replay from the final changelog: seq2 'D' beats seq1 'U'
-    // beats the seq0 base row — the batch invariant the streaming
-    // max_by-state snapshot must reproduce exactly,
-    "dq_benford" ->
-      """WITH v AS (SELECT CAST(round(o_totalprice*100) AS BIGINT) AS cents FROM orders),
-         d AS (SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS INT) AS digit
-           FROM v WHERE cents IS NOT NULL AND cents > 0),
-         cnt AS (SELECT digit, CAST(count(*) AS BIGINT) AS n_obs FROM d GROUP BY 1),
-         e(digit, e_ppm) AS (VALUES (1, 301030), (2, 176091), (3, 124939),
-           (4, 96910), (5, 79181), (6, 66947), (7, 57992), (8, 51153), (9, 45757)),
-         tot AS (SELECT CAST(sum(n_obs) AS BIGINT) AS n_total FROM cnt)
-         SELECT cnt.digit, n_obs, n_total,
-           CAST(n_obs * 1000000 // n_total AS BIGINT) AS obs_ppm,
-           CAST(e_ppm AS BIGINT) AS e_ppm,
-           CAST(abs(n_obs * 1000000 // n_total - e_ppm) AS BIGINT) AS dev_ppm,
-           CASE WHEN abs(n_obs * 1000000 // n_total - e_ppm) <= 30000
-                THEN 'ok' ELSE 'deviant' END AS verdict
-         FROM cnt JOIN e USING (digit), tot ORDER BY digit""",
-    "dq_schema_diff" ->
-      """SELECT * FROM (VALUES
-           ('o_custkey', 'BIGINT', 'BIGINT', 'unchanged'),
-           ('o_ingest_day', NULL, 'BIGINT', 'added'),
-           ('o_orderkey', 'BIGINT', 'BIGINT', 'unchanged'),
-           ('o_orderstatus', 'STRING', NULL, 'removed'),
-           ('o_totalprice', 'DOUBLE', 'DECIMAL(12,2)', 'type_changed'))
-         AS t("column", type_a, type_b, status) ORDER BY "column"""",
-    // EDR lattice unrolled on anti-diagonals with boundary defaults,
-    "dq_id_gap_census" ->
-      """WITH k AS (SELECT DISTINCT o_orderkey AS k FROM orders),
-         l AS (SELECT k, lag(k) OVER (ORDER BY k) AS prev FROM k)
-         SELECT CAST(count(*) AS BIGINT) AS n_keys,
-           CAST(min(k) AS BIGINT) AS min_key,
-           CAST(max(k) AS BIGINT) AS max_key,
-           CAST(sum(CASE WHEN prev IS NOT NULL AND k - prev > 1
-             THEN 1 ELSE 0 END) AS BIGINT) AS n_gaps,
-           CAST(COALESCE(max(CASE WHEN prev IS NOT NULL
-             THEN k - prev - 1 END), 0) AS BIGINT) AS max_gap,
-           CAST(max(k) - min(k) + 1 - count(*) AS BIGINT) AS n_missing
-         FROM l""",
   )
 }

@@ -15,9 +15,9 @@ import Fixtures._
 import OracleCtes._
 import OracleCtes2._
 
-/** Event-analytics gates: sessions, funnels, sketches, time series
-  * (11 entries) with the DuckDB oracle SQL beside each query.
-  * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
+/** Event-analytics gates: Welford stats, rolling z-scores, hourly
+  * aggregates (3 entries),
+  * each with its DuckDB oracle SQL.
   */
 object QEvents1 {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -40,47 +40,6 @@ object QEvents1 {
           coalesce(col("n_outliers"), lit(0L)).as("n_outliers"))
         .orderBy("event_type")
     }),
-    // Rolling anomaly flags: hourly per-type totals vs the trailing-24h
-    // window (current hour excluded). The z>=2 test is EXACT integer
-    // arithmetic on cents: (x*n - sum)^2 >= 4*(n*sumsq - sum^2) avoids any
-    // float mean/stddev, so the oracle replays it bit-for-bit. Magnitudes
-    // Page's CUSUM drift test (ops.Drift.cusum): per-user sequential
-    // changepoint statistic over exact cents — the sustained-shift monitor
-    // beside the single-outlier z-flags. One key shuffle; the recurrence
-    // is a codegen'd HOF fold the oracle replays as a recursive CTE.,
-    "events_cusum" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("v_cents"))
-      ops.Drift.cusum(ev, "user_id", Seq("ts", "event_id"), "v_cents",
-        drift = 6000L, threshold = 20000L).orderBy("user_id")
-    }),
-    // Holt double-exponential smoothing (ops.Drift.holt): per-user
-    // level+trend forecast in exact ppm integer arithmetic with an
-    // explicit floor division both engines replay identically; the
-    // abs-err backtest column rides along. Same one-shuffle fold plan as
-    // events_cusum; oracle = recursive CTE.,
-    "events_holt" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("user_id"), col("ts"), col("event_id"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("v_cents"))
-      ops.Drift.holt(ev, "user_id", Seq("ts", "event_id"), "v_cents",
-        alphaPpm = 300000L, betaPpm = 100000L, horizon = 3L)
-        .orderBy("user_id")
-    }),
-    // Autocorrelation sufficient statistics (ops.Drift.acf): per-type
-    // lag-1..4 pair moments as exact BIGINTs — the seasonality/persistence
-    // profile beside cusum/holt; one window pass computes all lags, the
-    // moment agg is map-side partial on the already-co-partitioned key.,
-    "events_acf" -> ((s, dir) => {
-      val ev = t(s, dir, "events")
-        .select(col("event_type"), col("ts"), col("event_id"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("v_cents"))
-      ops.Drift.acf(ev, "event_type", Seq("ts", "event_id"), "v_cents",
-        maxLag = 4).orderBy("event_type", "lag")
-    }),
-    // hold in int64 through the gate SFs; a 100 TB deployment would move
-    // the squares to DECIMAL(38,0) (same plan, wider integers).,
     "events_rolling_z" -> ((s, dir) => {
       val w = Window.partitionBy("event_type").orderBy("hr").rowsBetween(-24, -1)
       t(s, dir, "events")
@@ -106,91 +65,6 @@ object QEvents1 {
         .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
         .orderBy("hr", "event_type")
     }),
-    // Structured Streaming through the correctness gate: the events table
-    // replayed as a file-source STREAM into a watermarked event-time window
-    // aggregation, drained with AvailableNow — the drained state equals the
-    // batch GROUP BY bit-for-bit (milli-unit Long sums are micro-batch-
-    // order-independent), so DuckDB is the oracle for the streaming engine.,
-    "events_gap_fill" -> ((s, dir) => {
-      ops.AsofJoin.gapFill(
-          t(s, dir, "events").filter(col("user_id") % 50 === 0),
-          "event_type", expr("unix_micros(CAST(ts AS TIMESTAMP))"),
-          expr("CAST(round(value * 100, 0) AS LONG)"), stepUs = 3600000000L)
-        .orderBy("event_type", "bucket_us")
-    }),
-    // Distinctive keywords per source: exact cross-product association
-    // score o·(N−Nₛ) − (o_tot−o)·Nₛ (positive ⇔ over-represented), top-5
-    // per source — the corpus-mix diagnostic next to text_tfidf; one
-    // word-keyed agg + one key-bounded rank window.,
-    "events_interval_union" -> ((s, dir) => {
-      val iv = t(s, dir, "events").selectExpr(
-        "user_id",
-        "unix_micros(CAST(ts AS TIMESTAMP)) AS s",
-        "unix_micros(CAST(ts AS TIMESTAMP)) + ((event_id % 7) + 1) * 120000000 AS e")
-      ops.IntervalJoin.intervalUnion(iv, "user_id", "s", "e")
-        .orderBy("user_id")
-    }),
-    // Radius-of-gyration pieces per trajectory (the human-mobility range
-    // statistic): the dwell-run random walk's exact integer positions, ONE
-    // window shuffle + one agg; gyr_num = m²Σ(x²+y²) − m(Sx²+Sy²) is the
-    // exact numerator of m³·Rg² — no float anywhere.,
-    "events_rfm" -> ((s, dir) => {
-      val per = t(s, dir, "events")
-        .select(col("user_id"), expr("unix_micros(CAST(ts AS TIMESTAMP))").as("tus"),
-          round(col("value") * 100, 0).cast("long").as("cents"))
-        .groupBy("user_id")
-        .agg(max("tus").as("umax"), count(lit(1)).as("freq"),
-          sum("cents").as("cents"))
-      // per-user rows scale with the data — the quintiles use the
-      // range-partitioned two-phase ntile (ops.GlobalRank), never a
-      // global single-partition window (VERDICT r4 #3)
-      val base = per.crossJoin(broadcast(per.agg(max("umax").as("gmax"))))
-        .withColumn("rec_days", expr("(gmax - umax) DIV 86400000000"))
-      val withR = ops.GlobalRank.withNtile(base, "r_q", 5,
-        Seq(col("rec_days").asc, col("user_id").asc))
-      val withF = ops.GlobalRank.withNtile(withR, "f_q", 5,
-        Seq(col("freq").desc, col("user_id").asc))
-      ops.GlobalRank.withNtile(withF, "m_q", 5,
-          Seq(col("cents").desc, col("user_id").asc))
-        .select("user_id", "rec_days", "freq", "cents", "r_q", "f_q", "m_q")
-        .orderBy("user_id")
-    }),
-    // Antenna-sector coverage join: per literal RF sector (center + two
-    // CCW direction vectors + radius) the walk-fix membership census —
-    // pure integer half-plane cross products, no trig anywhere; antennas
-    // broadcast, one key-bounded rollup.,
-    "events_asof_nearest" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-        .withColumn("tus", expr("unix_micros(cast(ts as timestamp))"))
-        .select("event_id", "user_id", "tus", "event_type")
-      val purchases = e.filter(col("event_type") === "purchase")
-        .drop("event_type")
-      val views = e.filter(col("event_type") === "view").drop("event_type")
-      ops.AsofJoin.asofNearest(purchases, views, Seq("user_id"),
-          tsCol = "tus", seqCol = "event_id", payload = Seq("event_id"))
-        .select(col("event_id"), col("user_id"), col("tus"),
-          col("near_event_id").as("view_event_id"),
-          col("near_tus").as("view_tus"), col("near_gap"))
-        .orderBy("event_id")
-    }),
-    // Precision of the MinHash band join vs EXACT Jaccard ≥ 0.5 truth on
-    // the gate subset — the other half of dedup_minhash_recall's PR pair;
-    // truth by cross-multiplied set sizes, one row.,
-    "events_cm_error" -> ((s, dir) => {
-      val e = t(s, dir, "events")
-      val sk = ops.Sketches.cmSketch(e, "user_id", 1024)
-      val exact = e.groupBy("user_id").agg(count(lit(1)).as("n_exact"))
-      ops.Sketches.cmEstimate(exact, "user_id", sk, 1024)
-        .withColumn("over", col("cm_est") - col("n_exact"))
-        .withColumn("bucket", expr("over DIV 10").cast("int"))
-        .groupBy("bucket")
-        .agg(count(lit(1)).as("n_keys"), sum("over").as("sum_over"),
-          max("over").as("max_over"))
-        .orderBy("bucket")
-    }),
-    // MinHash candidate-degree histogram: per doc the number of band
-    // partners, bucketed — the per-document blast-radius view under
-    // dedup_lsh_skew's per-bucket costs.
   )
 
   val sql: Map[String, String] = Map(
@@ -204,73 +78,6 @@ object QEvents1 {
          SELECT event_type, n, round(mean, 6) AS mean_r, round(stddev, 6) AS std_r,
            coalesce(n_outliers, 0) AS n_outliers
          FROM st2 LEFT JOIN fl USING (event_type) ORDER BY event_type""",
-    "events_cusum" ->
-      """WITH RECURSIVE ev AS (SELECT user_id,
-             CAST(round(value*100) AS BIGINT) AS v,
-             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS i FROM events),
-         cnt AS (SELECT user_id, count(*) AS n FROM ev GROUP BY 1),
-         st AS (
-           SELECT user_id, CAST(0 AS BIGINT) AS i, CAST(0 AS BIGINT) AS s,
-             CAST(0 AS BIGINT) AS alarms, CAST(0 AS BIGINT) AS smax
-           FROM cnt
-           UNION ALL
-           SELECT st.user_id, st.i + 1,
-             CAST(CASE WHEN greatest(0, st.s + e.v - 6000) >= 20000 THEN 0
-                  ELSE greatest(0, st.s + e.v - 6000) END AS BIGINT),
-             CAST(st.alarms + CASE WHEN greatest(0, st.s + e.v - 6000) >= 20000
-                  THEN 1 ELSE 0 END AS BIGINT),
-             CAST(greatest(st.smax, greatest(0, st.s + e.v - 6000)) AS BIGINT)
-           FROM st JOIN ev e ON e.user_id = st.user_id AND e.i = st.i + 1)
-         SELECT st.user_id, c.n AS n_events, st.alarms AS n_alarms,
-           st.s AS s_final, st.smax AS s_max
-         FROM st JOIN cnt c USING (user_id) WHERE st.i = c.n
-         ORDER BY st.user_id""",
-    // the same four lag windows, unpivoted, exact integer moments,
-    "events_holt" -> {
-      def fd(x: String) =
-        s"(($x) - ((($x) % 1000000 + 1000000) % 1000000)) // 1000000"
-      val lNew = fd("300000 * e.v + 700000 * (st.l + st.b)")
-      s"""WITH RECURSIVE ev AS (SELECT user_id,
-             CAST(round(value*100) AS BIGINT) AS v,
-             row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-               AS i FROM events),
-         cnt AS (SELECT user_id, count(*) AS n FROM ev GROUP BY 1),
-         st AS (
-           SELECT ev.user_id, CAST(1 AS BIGINT) AS i, ev.v AS l,
-             CAST(0 AS BIGINT) AS b, CAST(0 AS BIGINT) AS e
-           FROM ev WHERE ev.i = 1
-           UNION ALL
-           SELECT st.user_id, st.i + 1,
-             CAST($lNew AS BIGINT),
-             CAST(${fd(s"100000 * (($lNew) - st.l) + 900000 * st.b")} AS BIGINT),
-             CAST(st.e + abs(e.v - (st.l + st.b)) AS BIGINT)
-           FROM st JOIN ev e ON e.user_id = st.user_id AND e.i = st.i + 1)
-         SELECT st.user_id, c.n AS n_events, st.l AS level, st.b AS trend,
-           CAST(st.l + 3 * st.b AS BIGINT) AS forecast,
-           st.e AS abs_err_sum
-         FROM st JOIN cnt c USING (user_id) WHERE st.i = c.n
-         ORDER BY st.user_id"""
-    },
-    // full recompute from the FINAL table state — the maintenance
-    // invariant the incremental path must hit bit-for-bit,
-    "events_acf" ->
-      """WITH ev AS (SELECT event_type, ts, event_id,
-             CAST(round(value*100) AS BIGINT) AS y FROM events),
-         l AS (SELECT event_type, y,
-             lag(y,1) OVER w AS x1, lag(y,2) OVER w AS x2,
-             lag(y,3) OVER w AS x3, lag(y,4) OVER w AS x4
-           FROM ev WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)),
-         p AS (
-           SELECT event_type, CAST(1 AS BIGINT) AS lag, x1 AS x, y FROM l WHERE x1 IS NOT NULL
-           UNION ALL SELECT event_type, 2, x2, y FROM l WHERE x2 IS NOT NULL
-           UNION ALL SELECT event_type, 3, x3, y FROM l WHERE x3 IS NOT NULL
-           UNION ALL SELECT event_type, 4, x4, y FROM l WHERE x4 IS NOT NULL)
-         SELECT event_type, lag, CAST(count(*) AS BIGINT) AS n_pairs,
-           CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-           CAST(sum(x*x) AS BIGINT) AS sxx, CAST(sum(y*y) AS BIGINT) AS syy,
-           CAST(sum(x*y) AS BIGINT) AS sxy
-         FROM p GROUP BY 1, 2 ORDER BY 1, 2""",
     "events_rolling_z" ->
       """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hr, count(*) AS n,
              CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT) AS cents
@@ -290,106 +97,5 @@ object QEvents1 {
       """SELECT date_trunc('hour', ts) AS hr, event_type, count(*) AS n,
          round(sum(value), 2) AS sum_value
          FROM events GROUP BY 1, 2 ORDER BY hr, event_type""",
-    "events_gap_fill" ->
-      """WITH b AS (SELECT event_type,
-           (epoch_us(ts) // 3600000000) * 3600000000 AS bucket_us,
-           CAST(round(value * 100, 0) AS BIGINT) AS v
-           FROM events WHERE user_id % 50 = 0),
-         p AS (SELECT event_type, bucket_us, CAST(sum(v) AS BIGINT) AS obs_cents
-           FROM b GROUP BY 1, 2),
-         sp AS (SELECT event_type,
-           unnest(range(min(bucket_us), max(bucket_us) + 3600000000, 3600000000)) AS bucket_us
-           FROM p GROUP BY event_type),
-         j AS (SELECT sp.event_type, sp.bucket_us, p.obs_cents
-           FROM sp LEFT JOIN p ON p.event_type = sp.event_type AND p.bucket_us = sp.bucket_us),
-         f AS (SELECT event_type, bucket_us,
-           last_value(obs_cents IGNORE NULLS) OVER (PARTITION BY event_type
-             ORDER BY bucket_us ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cents,
-           obs_cents IS NULL AS filled FROM j)
-         SELECT event_type, bucket_us, cents, filled FROM f
-         ORDER BY event_type, bucket_us""",
-    // word counts vs source marginals, exact cross-product score, top-5,
-    "events_interval_union" ->
-      """WITH iv AS (SELECT user_id, epoch_us(ts) AS s,
-           epoch_us(ts) + ((event_id % 7) + 1) * 120000000 AS e FROM events),
-         m AS (SELECT user_id, s, e,
-             max(e) OVER (PARTITION BY user_id ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm FROM iv),
-         sg AS (SELECT user_id, s, e,
-             CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END AS nw FROM m),
-         si AS (SELECT user_id, s, e,
-             CAST(sum(nw) OVER (PARTITION BY user_id ORDER BY s, e
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS seg
-           FROM sg),
-         segs AS (SELECT user_id, seg, CAST(count(*) AS BIGINT) AS n_iv,
-             min(s) AS ss, max(e) AS ee FROM si GROUP BY 1, 2)
-         SELECT user_id, CAST(sum(n_iv) AS BIGINT) AS n_iv,
-           CAST(count(*) AS BIGINT) AS n_seg,
-           CAST(sum(ee - ss) AS BIGINT) AS covered,
-           CAST(max(ee) - min(ss) AS BIGINT) AS span
-         FROM segs GROUP BY 1 ORDER BY user_id""",
-    // the dwell walk's exact positions, one window + one agg, exact pieces,
-    "events_rfm" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) AS tus,
-           CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events),
-         u AS (SELECT user_id, max(tus) AS umax,
-             CAST(count(*) AS BIGINT) AS freq,
-             CAST(sum(cents) AS BIGINT) AS cents
-           FROM ev GROUP BY 1),
-         g AS (SELECT max(umax) AS gmax FROM u)
-         SELECT user_id,
-           CAST(((SELECT gmax FROM g) - umax) // 86400000000 AS BIGINT) AS rec_days,
-           freq, cents,
-           CAST(ntile(5) OVER (ORDER BY ((SELECT gmax FROM g) - umax) // 86400000000 ASC, user_id ASC) AS INTEGER) AS r_q,
-           CAST(ntile(5) OVER (ORDER BY freq DESC, user_id ASC) AS INTEGER) AS f_q,
-           CAST(ntile(5) OVER (ORDER BY cents DESC, user_id ASC) AS INTEGER) AS m_q
-         FROM u ORDER BY user_id""",
-    // the walk cumsum + sector VALUES, identical cross-product membership,
-    "events_asof_nearest" ->
-      """WITH e AS (SELECT event_id, user_id, epoch_us(ts) AS tus,
-           event_type FROM events),
-         p AS (SELECT event_id, user_id, tus FROM e
-           WHERE event_type = 'purchase'),
-         v AS (SELECT event_id, user_id, tus FROM e
-           WHERE event_type = 'view'),
-         j AS (SELECT p.event_id, p.user_id, p.tus,
-             v.event_id AS view_event_id, v.tus AS vtus,
-             abs(v.tus - p.tus) AS ag,
-             CASE WHEN v.tus <= p.tus THEN 1 ELSE 0 END AS is_back
-           FROM p LEFT JOIN v ON v.user_id = p.user_id),
-         r AS (SELECT *, row_number() OVER (PARTITION BY event_id
-             ORDER BY ag, is_back DESC,
-               CASE WHEN is_back = 1 THEN -view_event_id
-                    ELSE view_event_id END) AS rn
-           FROM j)
-         SELECT event_id, user_id, tus, view_event_id, vtus AS view_tus,
-           vtus - tus AS near_gap
-         FROM r WHERE rn = 1 ORDER BY event_id""",
-    // subset band join replayed + exact Jaccard >= 0.5 truth, PR counts,
-    "events_cm_error" ->
-      """WITH sk AS (SELECT j, pos, count(*) AS cnt FROM (
-           SELECT 0 AS j, ((user_id * 1103515245 + 12345) % 2147483648) % 1024 AS pos FROM events
-           UNION ALL SELECT 1, ((user_id * 214013 + 2531011) % 2147483648) % 1024 FROM events
-           UNION ALL SELECT 2, ((user_id * 69069 + 1234567) % 2147483648) % 1024 FROM events)
-           GROUP BY 1, 2),
-         ex AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n_exact
-           FROM events GROUP BY 1),
-         tp AS (SELECT user_id, n_exact, 0 AS j,
-             ((user_id * 1103515245 + 12345) % 2147483648) % 1024 AS pos FROM ex
-           UNION ALL SELECT user_id, n_exact, 1,
-             ((user_id * 214013 + 2531011) % 2147483648) % 1024 FROM ex
-           UNION ALL SELECT user_id, n_exact, 2,
-             ((user_id * 69069 + 1234567) % 2147483648) % 1024 FROM ex),
-         est AS (SELECT tp.user_id, max(tp.n_exact) AS n_exact,
-             CAST(min(COALESCE(cnt, 0)) AS BIGINT) AS cm_est
-           FROM tp LEFT JOIN sk ON tp.j = sk.j AND tp.pos = sk.pos
-           GROUP BY 1),
-         ov AS (SELECT cm_est - n_exact AS over FROM est)
-         SELECT CAST(over // 10 AS INT) AS bucket,
-           CAST(count(*) AS BIGINT) AS n_keys,
-           CAST(sum(over) AS BIGINT) AS sum_over,
-           CAST(max(over) AS BIGINT) AS max_over
-         FROM ov GROUP BY 1 ORDER BY bucket""",
-    // the banded candidate graph's per-doc degree histogram
   )
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import Fixtures._
 import OracleCtes._
 
-/** Image-kernel gates over the synthetic raster corpus (the 10 core-tier
-  * `img_*` entries) with the DuckDB oracle SQL beside each query.
+/** Image-kernel gates over the synthetic raster corpus (10 entries), each
+  * with its DuckDB oracle SQL.
   */
 object QImg {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -47,19 +47,19 @@ object QImg {
     }),
     // Thumbnails (area-average resize to 8x8) exploded to one row per output
     // pixel — the block boundaries and the IEEE sum/count division are
-    // replicated exactly by the DuckDB oracle over the closed-form grid.,
+    // replicated exactly by the DuckDB oracle over the closed-form grid.
     "img_thumbs" -> ((s, dir) => {
       ops.ImageOps.thumbnails(gateTiles(s, "hgt"), 8).toDF()
         .select(col("image_id"), posexplode(col("pixels")).as(Seq("idx", "px")))
         .orderBy("image_id", "idx")
     }),
     // Per-image decode statistics (min / max / sum / IEEE mean) from the
-    // real PNG decode, recomputed by the oracle from the closed-form grid.,
+    // real PNG decode, recomputed by the oracle from the closed-form grid.
     "img_stats" -> ((s, dir) => {
       ops.ImageOps.decodeStats(gateTiles(s, "png")).orderBy("image_id")
     }),
     // Per-image luminance histogram (width-256 bins): the exposure profile
-    // for degenerate-image filtering; decode-once, zero shuffle.,
+    // for degenerate-image filtering; decode-once, zero shuffle.
     "img_histogram" -> ((s, dir) => {
       ops.ImageOps.histogram(gateTiles(s, "png"), width = 256)
         .orderBy("image_id", "bin")
@@ -67,14 +67,14 @@ object QImg {
     // Per-image Otsu threshold (ops.ImageOps.otsu): argmax of the floored
     // exact between-class-variance objective over width-64 bins — the
     // binarization / degenerate-image split with NO float in the decision
-    // path (BigInt here, int128 in the oracle). Decode-once, zero shuffle.,
+    // path (BigInt here, int128 in the oracle). Decode-once, zero shuffle.
     "img_otsu" -> ((s, dir) => {
       ops.ImageOps.otsu(gateTiles(s, "png"), width = 64).orderBy("image_id")
     }),
     // Block HOG census (ops.ImageOps.hogBlocks): the orientation octant
     // histogram + exact gradient energy per 4×4 spatial block — the
     // block-local structure descriptor; a trig-free octant ladder the
-    // oracle replays pixel by pixel. Decode-once, zero shuffle.,
+    // oracle replays pixel by pixel. Decode-once, zero shuffle.
     "img_hog" -> ((s, dir) => {
       ops.ImageOps.hogBlocks(gateTiles(s, "png"))
         .orderBy("image_id", "br", "bc", "sector")
@@ -82,14 +82,14 @@ object QImg {
     // Dual-resolution conversion (reference getResolutionAndSize.ts: 1″↔3″):
     // 3:1 decimation resample re-encoded as HGT rows, then re-decoded for
     // stats — encode∘decode round-trips through the new payload, and the
-    // oracle recomputes the decimated grid from the closed form.,
+    // oracle recomputes the decimated grid from the closed form.
     "img_resample" -> ((s, dir) => {
       ops.ImageOps.decodeStats(ops.ImageOps.resample(gateTiles(s), 3))
         .orderBy("image_id")
     }),
     // Geometric augmentation (flip / rotate) pinned by position-weighted
     // moments, which are not permutation-invariant; the oracle applies the
-    // same index identities to the closed-form grid.,
+    // same index identities to the closed-form grid.
     "img_augment" -> ((s, dir) => {
       val tiles = gateTiles(s)
       (("none", tiles) +: Seq("flip_h", "flip_v", "rot90")
@@ -107,7 +107,7 @@ object QImg {
     // 64-bit average-hash → multi-index Hamming band join (4×16-bit bands,
     // perfect recall at radius ≤ 3 by pigeonhole) — image dedup without an
     // all-pairs comparison. The oracle replays the identical hash from the
-    // closed-form grids and the identical band join.,
+    // closed-form grids and the identical band join.
     "img_phash_neardup" -> ((s, dir) => {
       ops.ImageOps.phashNearDup(phashCorpusTiles(s), 3)
         .orderBy("id_a", "id_b")
@@ -123,7 +123,7 @@ object QImg {
     // makes the PSNR formula itself load-bearing: the oracle rebuilds the
     // +3-every-97th-sample grid, recomputes its nonzero sse and runs the
     // identical 10*log10(peak^2/(sse/n)) quantization the engine applies
-    // to its decoded pixels,
+    // to its decoded pixels
     "img_fidelity" ->
       """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
          g AS (SELECT swlng, swlat,
@@ -151,7 +151,7 @@ object QImg {
     // thumbnails: 8x8 area-average blocks of the closed-form grid; block of
     // row r is (8r+7)//601 (boundaries floor(b*601/8) — identical to the
     // engine's (br*(601/8.0)).toInt since 601/8 is exactly representable),
-    // and CAST(sum)/count is the same IEEE division of exact integers,
+    // and CAST(sum)/count is the same IEEE division of exact integers
     "img_thumbs" ->
       """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
          g AS (SELECT swlng, swlat, r.range AS r, c.range AS c,
@@ -184,7 +184,7 @@ object QImg {
          FROM g GROUP BY 1, 2 ORDER BY 1, 2""",
     // Otsu replay: same histogram recipe at width 64, cumulative w0/a0 by
     // window, the squared numerator in int128, the SAME floored /n-
-    // normalized objective, ties to the smallest bin via row_number,
+    // normalized objective, ties to the smallest bin via row_number
     "img_otsu" ->
       """WITH corners(swlng, swlat) AS (VALUES (-120,36),(-120,37),(-119,36),(-119,37),(-118,36),(-117,37)),
          g AS (SELECT (CASE WHEN swlat < 0 THEN 'S' ELSE 'N' END || lpad(CAST(abs(swlat) AS VARCHAR),2,'0') ||
@@ -267,7 +267,7 @@ object QImg {
     // as the img_integrity oracle (integer block sums so the +4000 rides
     // inside the single IEEE division), same 4×16-bit band join, same
     // bit_count(xor) Hamming filter (arithmetic >> then & 65535 extracts
-    // identical band keys in both engines — verified on the sign bit),
+    // identical band keys in both engines — verified on the sign bit)
     "img_phash_neardup" ->
       s"""WITH $phashPairCtes
          SELECT id_a, id_b, CAST(bit_count(xor(pa, pb)) AS INT) AS hamming

@@ -15,9 +15,9 @@ import Fixtures._
 import OracleCtes._
 import OracleCtes2._
 
-/** Relational-core gates: aggregates, joins, windows, SQL surface
-  * (10 entries) with the DuckDB oracle SQL beside each query.
-  * Moved verbatim from SparkEntry (round-5 split, VERDICT r4 #5).
+/** Relational-core gates: aggregates, joins, windows, grouping sets,
+  * SQL surface (8 entries),
+  * each with its DuckDB oracle SQL.
   */
 object QRel {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -71,7 +71,7 @@ object QRel {
     // GROUPING SETS surface — the BI reshape next to events_rollup: four
     // explicit sets over (month, status) in ONE
     // expand-and-aggregate pass (Spark's Expand node, never four scans);
-    // the null pattern distinguishes the sets, exact integer cents.,
+    // the null pattern distinguishes the sets, exact integer cents.
     "q_grouping_sets" -> ((s, dir) => {
       t(s, dir, "orders").createOrReplaceTempView("orders_gs")
       s.sql(
@@ -82,25 +82,8 @@ object QRel {
           |GROUP BY GROUPING SETS ((mon, status), (mon), (status), ())
           |ORDER BY mon, status""".stripMargin)
     }),
-    // SKYLINE / Pareto front (ops.Skyline.skyline2d): the orders nobody
-    // beats on BOTH price and date (minimize both) — the classic
-    // multi-criteria operator, answered by the sorted-scan window identity
-    // (never the quadratic dominance self-join the oracle states
-    // definitionally). Integer cents + epoch days; duplicates
-    // pre-aggregated so the (x, y) order is total.,
-    "q_skyline" -> ((s, dir) => {
-      val pairs = t(s, dir, "orders")
-        .filter(col("o_orderkey") % 5 === 0)
-        .selectExpr(
-          "CAST(FLOOR(o_totalprice * 100.0D + 0.5D) AS BIGINT) AS price_c",
-          "unix_micros(CAST(o_orderdate AS TIMESTAMP)) DIV 86400000000 AS day")
-        .groupBy("price_c", "day").agg(count(lit(1)).as("n"))
-      ops.Skyline.skyline2d(pairs, "price_c", "day")
-        .orderBy("price_c")
-    }),
-    // A1: Welford-equivalent single-pass stats + z>=2 outlier flagging
-    // (reference src/s3Fetcher.ts:33-52), on exact-integer moments so the
-    // oracle matches bit-for-bit.,
+    // Anti-join: customers with no order since 1997, counted per market
+    // segment.
     "q_antijoin" -> ((s, dir) => {
       val recent = t(s, dir, "orders")
         .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp"))
@@ -109,18 +92,16 @@ object QRel {
         .groupBy("c_mktsegment").agg(count(lit(1)).as("n_customers"))
         .orderBy("c_mktsegment")
     }),
-    // Semi-join: suppliers with shipped lineitems, per nation.,
+    // Semi-join: suppliers with shipped lineitems, per nation.
     "q_semijoin" -> ((s, dir) => {
       t(s, dir, "supplier")
         .join(t(s, dir, "lineitem"), col("s_suppkey") === col("l_suppkey"), "left_semi")
         .groupBy("s_nationkey").agg(count(lit(1)).as("n_suppliers"))
         .orderBy("s_nationkey")
     }),
-    // Spatial-occupancy skew audit: the z14 cell histogram's head — the
-    // hotspot diagnostic that motivates the salted/adaptive PIP paths
-    // (events_key_skew's spatial sibling). Per-cell count is map-side
-    // combined; the global top-10 ranks the ALREADY-aggregated cell rows
-    // (bounded by distinct cells, never points); share in exact ppm.,
+    // SQL surface: the registered graft functions (tile_key, s2_cell,
+    // hex_cell) called from plain SQL over a temp view of the quadrant
+    // points.
     "sql_surface" -> ((s, dir) => {
       functions.spatial.register(s)
       functions.cells.register(s)
@@ -130,23 +111,6 @@ object QRel {
                       hex_cell(lng, lat, 7) AS hex7
                FROM pts ORDER BY point_id""")
     }),
-
-    // Targeted-attack resilience: largest component before vs after
-    // removing the 5 highest-degree hubs (ties by node id) — the
-    // robustness read scale-free graphs fail; two star-CC passes.,
-    "q_bom_explode" -> ((s, dir) => {
-      val edges = t(s, dir, "lineitem")
-        .filter(col("l_orderkey") % 97 === 0)
-        .selectExpr("least(l_partkey % 300, l_suppkey % 300) AS parent",
-          "greatest(l_partkey % 300, l_suppkey % 300) AS child")
-        .filter(col("parent") =!= col("child"))
-        .withColumn("qty", expr("1 + (parent * 31 + child * 17) % 4"))
-      ops.Graph.bomRollup(edges, maxDepth = 3).orderBy("root")
-    }),
-    // Semantic-balance contingency: IVF cluster x label counts with the
-    // cross-multiplied independence deviation |n*G - R*C| per cell — is
-    // each label spread across semantic clusters or concentrated (the
-    // mixture-health check before cluster-stratified sampling)?
   )
 
   val sql: Map[String, String] = Map(
@@ -180,10 +144,6 @@ object QRel {
              round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2) AS run_total
            FROM orders) WHERE rn <= 3 ORDER BY o_custkey, rn""",
-    // pyramid: pixel centers are dyadic rationals ((k+0.5)/128 is exact in
-    // binary), the bilinear runs in the engine's exact op order, and the
-    // Terrarium triple of the sampled double is recomputed per pixel — the
-    // engine's values additionally round-trip through real PNG bytes,
     "q_grouping_sets" ->
       """SELECT mon, status, CAST(count(1) AS BIGINT) AS n,
            CAST(sum(cents) AS BIGINT) AS sum_cents
@@ -193,19 +153,6 @@ object QRel {
                FROM orders)
          GROUP BY GROUPING SETS ((mon, status), (mon), (status), ())
          ORDER BY mon, status""",
-    // definitional dominance oracle: the engine answers via the sorted-scan
-    // window identity, the oracle states NOT EXISTS dominance directly,
-    "q_skyline" ->
-      """WITH p AS (SELECT CAST(floor(o_totalprice * 100.0 + 0.5) AS BIGINT) AS price_c,
-           epoch_us(o_orderdate) // 86400000000 AS day, count(*) AS n
-           FROM orders WHERE o_orderkey % 5 = 0 GROUP BY 1, 2)
-         SELECT r.price_c, r.day, r.n FROM p r
-         WHERE NOT EXISTS (SELECT 1 FROM p s
-           WHERE s.price_c <= r.price_c AND s.day <= r.day
-             AND (s.price_c < r.price_c OR s.day < r.day))
-         ORDER BY r.price_c""",
-    // KM: curve rows (death time, deaths, at-risk) then the quantized
-    // survival product replayed as a recursive CTE over ranked death times,
     "q_antijoin" ->
       """SELECT c_mktsegment, count(*) AS n_customers FROM customer
          WHERE NOT EXISTS (SELECT 1 FROM orders
@@ -232,25 +179,5 @@ object QRel {
          JOIN hexq ON p.point_id = hexq.point_id
          ORDER BY p.point_id"""
     },
-    // two reach-CC passes, hub top-5 by (degree desc, node),
-    "q_bom_explode" ->
-      """WITH RECURSIVE e AS (
-           SELECT DISTINCT LEAST(l_partkey % 300, l_suppkey % 300) AS parent,
-             GREATEST(l_partkey % 300, l_suppkey % 300) AS child
-           FROM lineitem WHERE l_orderkey % 97 = 0
-             AND l_partkey % 300 <> l_suppkey % 300),
-         eq AS (SELECT parent, child,
-             1 + (parent * 31 + child * 17) % 4 AS qty FROM e),
-         paths AS (
-           SELECT parent AS root, child AS node, qty AS q, 1 AS depth FROM eq
-           UNION ALL
-           SELECT p.root, eq.child AS node, p.q * eq.qty AS q, p.depth + 1
-           FROM paths p JOIN eq ON eq.parent = p.node WHERE p.depth < 3)
-         SELECT CAST(root AS BIGINT) AS root,
-           CAST(count(DISTINCT node) AS BIGINT) AS n_reach,
-           CAST(sum(q) AS BIGINT) AS ext_qty,
-           CAST(max(depth) AS BIGINT) AS max_depth
-         FROM paths GROUP BY root ORDER BY root""",
-    // same coarse assignment, contingency with |n*G - R*C| deviations
   )
 }

@@ -75,98 +75,6 @@ object StreamOps {
     drain(spark, name)
   }
 
-  /** Event-time SESSION-window aggregation over a file-source stream — the
-    * merging-window state machine (Structured Streaming's session_window)
-    * driven through the correctness gate. A session extends while the next
-    * event starts strictly inside [last, last + gap); equivalently a gap
-    * ≥ `gap` starts a new session, which is exactly the batch
-    * gaps-and-islands rule the DuckDB oracle replays. Complete-mode drain
-    * as in [[windowedCounts]]; sums quantized to integer cents pre-sum.
-    *
-    * Scale shape: session state is keyed by (user, merging window) — the
-    * per-key bound of sessionization; in an append deployment the
-    * watermark closes and evicts sessions.
-    *
-    * @return (user_id, start_us, end_us, n_events, sum_cents)
-    */
-  def sessionCounts(spark: SparkSession, path: String,
-                    gap: String = "12 hours"): DataFrame = {
-    val name = s"graft_stream_sess_${runSeq.incrementAndGet()}"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_stream_ckpt_").toString
-    val src = java.nio.file.Paths.get(path)
-    val streamDir =
-      if (java.nio.file.Files.isDirectory(src)) path
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
-      }
-    val schema = spark.read.parquet(streamDir).schema
-    val q = spark.readStream.schema(schema).parquet(streamDir)
-      .withColumn("ts", col("ts").cast("timestamp"))
-      .withWatermark("ts", "1 hour")
-      .groupBy(session_window(col("ts"), gap).as("w"), col("user_id"))
-      .agg(count(lit(1)).cast("long").as("n_events"),
-        sum(round(col("value") * lit(100.0), 0).cast("long")).as("sum_cents"))
-      .select(col("user_id"), unix_micros(col("w.start")).as("start_us"),
-        unix_micros(col("w.end")).as("end_us"), col("n_events"),
-        col("sum_cents"))
-      .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", ckpt)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    drain(spark, name)
-  }
-
-  /** Watermarked STREAM-STREAM interval join drained through the gate:
-    * purchases within 1 h after a view by the same user, both sides
-    * streaming from the same file source. State is bounded by the 2 h
-    * watermark + the time-range condition (Spark evicts view state once
-    * the purchase-side watermark passes v_ts + 1 h). Append mode — every
-    * matched pair emits exactly once, so the drained table equals the
-    * batch interval join bit-for-bit.
-    */
-  def viewPurchaseJoin(spark: SparkSession, path: String): DataFrame = {
-    val name = s"graft_stream_vp_${runSeq.incrementAndGet()}"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_stream_ckpt_").toString
-    val src = java.nio.file.Paths.get(path)
-    val streamDir =
-      if (java.nio.file.Files.isDirectory(src)) path
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
-      }
-    val schema = spark.read.parquet(streamDir).schema
-    def side(tpe: String) = spark.readStream.schema(schema).parquet(streamDir)
-      .filter(col("event_type") === tpe)
-      .select(col("user_id"), col("event_id"), col("ts").cast("timestamp").as("ts"))
-      .withWatermark("ts", "2 hours")
-    val views = side("view")
-      .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
-        col("ts").as("v_ts"))
-    val purchases = side("purchase")
-      .select(col("user_id").as("p_user"), col("event_id").as("purchase_id"),
-        col("ts").as("p_ts"))
-    val q = views.join(purchases,
-        col("v_user") === col("p_user") &&
-          col("p_ts") >= col("v_ts") &&
-          col("p_ts") <= col("v_ts") + expr("INTERVAL 1 HOUR"))
-      .select(col("view_id"), col("purchase_id"),
-        unix_micros(col("v_ts")).as("v_us"), unix_micros(col("p_ts")).as("p_us"))
-      .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", ckpt)
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    drain(spark, name)
-  }
-
   /** STREAMING DEDUPLICATION — the fourth stateful-streaming surface next
     * to the window agg, session windows and the interval join:
     * `dropDuplicates` over (user_id, event_type, day) keeps exactly the
@@ -256,48 +164,6 @@ object StreamOps {
     drain(spark, name)
   }
 
-  /** STREAMING HLL DISTINCT — the engine's distinct-count sketch
-    * ([[graft.ops.Sketches.hllRegisters]]) maintained incrementally: the
-    * stateful streaming aggregation IS the sketch (per-(group, bucket) MAX
-    * rank — 32 Long registers per group, merged by max on every
-    * micro-batch, order-insensitive by construction), so the drained
-    * complete-mode register table is bit-identical to the batch sketch no
-    * matter how the source splits micro-batches, and the finished estimate
-    * reuses the exact same fold ([[graft.ops.Sketches.hllFinish]]) — one
-    * oracle covers both engines.
-    *
-    * Scale shape: state is 32 registers × |groups| — the whole point of
-    * sketching an unbounded stream; a forever-running deployment emits
-    * per-window snapshots off the same state. No watermark: registers
-    * never retire (distinct-so-far semantics).
-    *
-    * @return (groupCol, n_buckets, hll_q) — as the batch twin
-    */
-  def hllDistinct(spark: SparkSession, path: String, groupCol: String,
-                  idCol: String): DataFrame = {
-    val name = s"graft_stream_hll_${runSeq.incrementAndGet()}"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_stream_ckpt_").toString
-    val src = java.nio.file.Paths.get(path)
-    val streamDir =
-      if (java.nio.file.Files.isDirectory(src)) path
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
-      }
-    val schema = spark.read.parquet(streamDir).schema
-    val q = graft.ops.Sketches.hllRegisters(
-        spark.readStream.schema(schema).parquet(streamDir), groupCol, idCol)
-      .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", ckpt)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    graft.ops.Sketches.hllFinish(drain(spark, name), groupCol)
-  }
-
   /** STREAMING CDC SNAPSHOT — latest-wins upsert state maintained as a
     * stateful streaming aggregation: per key, `max_by(payload, seq)` over
     * the change stream IS the snapshot (one struct register per key,
@@ -339,64 +205,6 @@ object StreamOps {
     q.awaitTermination()
     drain(spark, name).select(col(keyCol) +:
       payload.map(p => col(s"__latest.$p").as(p)).toIndexedSeq: _*)
-  }
-
-  /** Materialize a memory sink's table and release the temp-view name. */
-  /** Arbitrary-state streaming rollup through `mapGroupsWithState` — the
-    * custom-state API surface (GroupState) driven through the DuckDB gate:
-    * per user a running (n, Σcents, min, max) updated per micro-batch.
-    * Every field is an order-independent fold, so the FINAL state equals
-    * the batch GROUP BY no matter how the file source splits batches; the
-    * memory sink in update mode keeps every intermediate emission, and the
-    * drain picks each key's last (max-n — n is strictly monotone per
-    * update) row. NoTimeout: state lives for the run, bounded by one tuple
-    * per key — the production deployment would add a timeout eviction.
-    */
-  def stateRollup(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    import spark.implicits._
-    val name = s"graft_stream_state_${runSeq.incrementAndGet()}"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_stream_ckpt_").toString
-    val src = java.nio.file.Paths.get(path)
-    val streamDir =
-      if (java.nio.file.Files.isDirectory(src)) path
-      else {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream_src_")
-        java.nio.file.Files.createSymbolicLink(d.resolve(src.getFileName), src)
-        d.toString
-      }
-    val schema = spark.read.parquet(streamDir).schema
-    val q = spark.readStream.schema(schema).parquet(streamDir)
-      .select(col("user_id").cast("long").as("u"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("c"))
-      .as[(Long, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (u: Long, it: Iterator[(Long, Long)],
-         st: GroupState[(Long, Long, Long, Long)]) =>
-          var (n, s, mn, mx) = st.getOption
-            .getOrElse((0L, 0L, Long.MaxValue, Long.MinValue))
-          it.foreach { case (_, c) =>
-            n += 1; s += c
-            if (c < mn) mn = c
-            if (c > mx) mx = c
-          }
-          st.update((n, s, mn, mx))
-          (u, n, s, mn, mx)
-      }
-      .toDF("user_id", "n", "sum_cents", "min_cents", "max_cents")
-      .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", ckpt)
-      .outputMode("update")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val all = drain(spark, name)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("user_id")
-      .orderBy(col("n").desc)
-    all.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1).drop("rn")
   }
 
   private def drain(spark: SparkSession, name: String): DataFrame = {

@@ -96,6 +96,32 @@ class ElevationSparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("a corner off the 1° grid probes no tile: lng 180 and -180.5 sample 0 on both paths") {
+    import spark.implicits._
+    // the int key (swLat + 90) * 360 + (swLng + 180) would send (180, 36)
+    // to W180/N37 and (-181, 35) to E179/N34: both tiles exist, non-zero
+    val ts = TileGen.tiles(Seq((-180, 37), (179, 34)), 61, "hgt")
+    assert(TileGen.sampleAt(-180, 37, 30, 0) != 0 && TileGen.sampleAt(179, 34, 30, 60) != 0)
+    val index = new TileIndex(ts.toArray)
+    assert(index.elevation(-179.5, 37.5) != 0.0 && index.elevation(179.5, 34.5) != 0.0)
+    val probes = Seq((180.0, 36.5, "N36E180"), (-180.5, 35.5, "N35W181"))
+    for ((lng, lat, _) <- probes) assert(index.elevation(lng, lat) == 0.0, s"($lng, $lat)")
+    val coords = probes.zipWithIndex.map { case ((lng, lat, _), i) =>
+      CoordRow(s"f$i", 0L, lng, lat) }
+    val tds = spark.createDataset(ts)(Encoders.product[TileRow])
+    val cds = spark.createDataset(coords)(Encoders.product[CoordRow])
+    val want = probes.zipWithIndex.map { case ((_, _, key), i) => (s"f$i", key, 0.0) }.toSet
+    for (salt <- Seq(1, 4)) {
+      val got = Elevation.lookupCogroup(cds, tds, salt).collect()
+        .map(r => (r.feature_id, r.tile_key, r.elev)).toSet
+      assert(got == want, s"cogroup salt $salt")
+    }
+    val bc = Elevation.lookupBroadcast(cds.toDF(), tds)
+      .select($"feature_id", $"tile_key", $"elev").as[(String, String, Double)]
+      .collect().toSet
+    assert(bc == want, "broadcast")
+  }
+
   test("addElevation writes elev into position index 2 of the GeoJSON (A4 reassembly)") {
     import spark.implicits._
     val features = spark.createDataset(GeoJson.featureRows(GeoJson.parse(jmt)))

@@ -486,35 +486,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("kmvDistinct matches scalar bottom-k; exact below k; estimate within sigma") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(17)
-    // g0/g1: well above k distinct; g2: exactly 10 distinct (< k path)
-    val rows = (0 until 6000).map(i => (s"g${i % 2}", rnd.nextInt(2500).toLong)) ++
-      (0 until 100).map(i => ("g2", (i % 10).toLong))
-    val df = rows.toDF("grp", "uid").repartition(7)
-    val k = 64
-    def brute(ids: Seq[Long]): (Long, Long, Long) = {
-      val hs = ids.map(id => (id * 1103515245L + 12345L) % 2147483648L)
-        .distinct.sorted.take(k)
-      val kth = hs.last
-      val est = if (hs.size < k) hs.size.toLong
-                else (k - 1).toLong * 2147483648L / math.max(kth, 1L)
-      (hs.size.toLong, kth, est)
-    }
-    val got = graft.ops.Sketches.kmvDistinct(df, "grp", "uid", k)
-      .as[(String, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    rows.groupBy(_._1).foreach { case (g, xs) =>
-      val exact = xs.map(_._2).distinct.size
-      assert(got(g) == brute(xs.map(_._2)), s"group $g")
-      val est = got(g)._3
-      if (exact < k) assert(est == exact, s"group $g below-k must be exact")
-      // sigma ~ 1/sqrt(k-2) ~ 12.7%; 3-sigma bound
-      else assert(math.abs(est - exact) <= 0.39 * exact, s"group $g est=$est exact=$exact")
-    }
-  }
-
   test("phashNearDup finds exactly the brute-force Hamming<=3 pairs via band join") {
     val size = 201
     val corners = Seq((10, 5), (11, 5), (12, 6))
@@ -874,56 +845,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(vmap.size == all.size)
   }
 
-  test("duplicateSpanStats matches brute force on a crafted corpus") {
-    import spark.implicits._
-    // doc 1 and 2 share a 5-token run; doc 3 repeats its own run; doc 4 clean;
-    // doc 5 too short for n=3? m=2 < 3 -> zero sites
-    val docs = Seq(
-      (1L, "a b c d e x y"),
-      (2L, "p q a b c d e"),
-      (3L, "m n o m n o m n o"),
-      (4L, "u v w z k"),
-      (5L, "s t")).toDF("doc_id", "text")
-    val n = 3
-    val got = TextDedup.duplicateSpanStats(docs, n)
-      .as[(Long, Long, Long, Long, Double, String)].collect()
-      .map(r => r._1 -> r).toMap
-    // brute force in plain Scala
-    val corpus = Seq(
-      1L -> "a b c d e x y", 2L -> "p q a b c d e",
-      3L -> "m n o m n o m n o", 4L -> "u v w z k", 5L -> "s t")
-    val sites = corpus.flatMap { case (id, text) =>
-      val ws = text.split(" ")
-      (0 to ws.length - n).map(p => (id, p + 1, ws.slice(p, p + n).mkString(" ")))
-    }
-    val byGram = sites.groupBy(_._3)
-    val dupSites = sites.filter(s => byGram(s._3).size >= 2)
-    val canon = byGram.view.mapValues(_.minBy(s => (s._1, s._2))).toMap
-    val redundant = dupSites.filterNot(s => canon(s._3) == s)
-      .flatMap(s => (s._2 until s._2 + n).map(t => (s._1, t))).toSet
-    corpus.foreach { case (id, text) =>
-      val ws = text.split(" ")
-      val m = ws.length.toLong
-      val nDup = dupSites.count(_._1 == id).toLong
-      val red = redundant.filter(_._1 == id).map(_._2)
-      val cleaned = ws.zipWithIndex.collect {
-        case (w, i) if !red.contains(i + 1) => w
-      }.mkString(" ")
-      val (gid, gm, gdup, gred, gfrac, gmd5) = got(id)
-      assert(gm == m && gdup == nDup && gred == red.size.toLong, s"doc $id")
-      assert(gfrac == red.size.toDouble / m, s"doc $id frac")
-      val md = java.security.MessageDigest.getInstance("MD5")
-        .digest(cleaned.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      assert(gmd5 == md, s"doc $id cleaned: '$cleaned'")
-      assert(gid == id)
-    }
-    // crafted expectations hold: doc2's copy of doc1's run is removed
-    assert(got(2L)._4 > 0 && got(1L)._4 == 0)
-    // doc3's later self-repeats removed, first occurrence kept
-    assert(got(3L)._4 > 0)
-    assert(got(4L)._4 == 0 && got(5L)._4 == 0)
-  }
-
   test("overlapJoin matches brute force incl. touching endpoints and bin straddles") {
     import spark.implicits._
     val rnd = new scala.util.Random(13)
@@ -953,34 +874,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         lefts.toDF("l_id", "l_s", "l_e"), rights.toDF("r_id", "r_s", "r_e"),
         binWidth = 100L).collect()
     assert(gotList.length == expected.size, "duplicate pair emissions")
-  }
-
-  test("simhashNearDup equals brute-force Hamming<=radius (pigeonhole recall)") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(21)
-    val vocab = Vector("a", "b", "c", "d", "e", "f", "g", "h")
-    def sentence(n: Int): String =
-      Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-    val base = (0 until 150).map(i => (i.toLong, sentence(6 + rnd.nextInt(20))))
-    // near copies: one appended word flips few simhash bits
-    val near = base.filter(_._1 % 5 == 0).map { case (id, t) => (id + 1000, t + " q") }
-    val docs = (base ++ near).toDF("doc_id", "text")
-    val got = graft.ops.TextDedup.simhashNearDup(docs, bits = 48, bands = 4, radius = 3)
-      .as[(Long, Long, Int)].collect().toSet
-    // brute force: fetch each doc's simhash via the engine expression, then
-    // all-pairs Hamming (pigeonhole says band recall is perfect at radius 3,
-    // so got must be EXACTLY the <=3 set, not a subset)
-    val sh = docs
-      .select(col("doc_id"), graft.ops.TextDedup.simhash(col("text"), 48).as("sh"))
-      .as[(Long, Long)].collect().toMap
-    val expected = (for {
-      a <- sh.keys; b <- sh.keys if a < b
-      h = java.lang.Long.bitCount(sh(a) ^ sh(b)) if h <= 3
-    } yield (a, b, h)).toSet
-    assert(got == expected)
-    // exact copies of the text would be hamming 0; near copies mostly land
-    // within the radius — require at least some true positives
-    assert(expected.nonEmpty, "degenerate: no near pairs generated")
   }
 
   test("vocabOov matches brute force incl. the deterministic tie cut") {
@@ -1123,35 +1016,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(1L)._4 == got(1L)._3 / 8)
   }
 
-  test("powerIteration equals an exact integer matvec replay") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val dims = 16
-    val vecs = (0 until 60).map(i =>
-      (i.toLong, Array.fill(dims)((rnd.nextDouble() - 0.5).toFloat)))
-    val df = vecs.toDF("vec_id", "embedding")
-    val got = Embeddings.powerIteration(df, rounds = 3, dims = dims)
-      .as[(Int, Long, Long)].collect()
-      .groupBy(_._1).map { case (r, rows) =>
-        r -> rows.sortBy(_._2).map(_._3).toArray
-      }
-    // driver-side replay with the same quantization discipline
-    val xq = vecs.map { case (_, v) =>
-      v.map(f => math.floor(f.toDouble * 1000.0).toLong)
-    }
-    var v = Array.tabulate(dims)(d => if (d == 0) 1000L else 0L)
-    for (r <- 1 to 3) {
-      val dots = xq.map(row => row.zip(v).map { case (a, b) => a * b }.sum)
-      val u = Array.tabulate(dims)(d =>
-        xq.zip(dots).map { case (row, s) => row(d) * s }.sum)
-      val su = u.map(x => math.floor(x.toDouble / 1048576.0).toLong)
-      val m = su.map(math.abs).max
-      v = su.map(x => math.floor(x.toDouble * 1000.0 / m.toDouble).toLong)
-      assert(got(r).sameElements(v), s"round $r mismatch")
-    }
-    assert(math.abs(v.map(math.abs).max) == 1000L)
-  }
-
   test("snapToSegments equals brute-force nearest within radius") {
     import spark.implicits._
     val rnd = new scala.util.Random(11)
@@ -1217,74 +1081,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "pair sets differ (or a pair was emitted from more than one cell)")
   }
 
-  test("downsampleMosaic: 2:1 box mean over the assembled block, missing tiles = 0") {
-    import spark.implicits._
-    // two present tiles of a 2x2 block (NE and SW missing) at size 5
-    // (inner = 4, output 4x4 from the assembled 8x8)
-    val size = 5
-    def mk(lng: Int, lat: Int) = {
-      val g = graft.synth.TileGen.grid(lng, lat, size,
-        (sw, sl, r, c) => graft.synth.TileGen.sampleAt(sw, sl, r, c))
-      graft.core.TileRow(graft.geo.TileKey.ofDegrees(lng, lat),
-        graft.raster.Hgt.encode(g, size), size, size, "hgt",
-        graft.core.TileCodec.captionJson(
-          graft.synth.TileGen.caption(lng, lat, size)),
-        graft.raster.Fidelity.phash(g, size))
-    }
-    val tiles = spark.createDataset(Seq(mk(10, 40), mk(11, 41)))(
-      org.apache.spark.sql.Encoders.product[graft.core.TileRow])
-    val got = graft.ops.TilePyramid.downsampleMosaic(tiles)
-      .as[(Int, Int, Long, Long, Long, Long)].collect()
-    assert(got.length == 1 && got(0)._1 == 10 && got(0)._2 == 40)
-    // driver-side replay
-    val inner = size - 1
-    def sample(rr: Int, cc: Int): Long = {
-      val (tlng, tlat) = (10 + cc / inner, 40 + rr / inner)
-      val present = (tlng, tlat) == ((10, 40)) || (tlng, tlat) == ((11, 41))
-      if (!present) 0L
-      else graft.synth.TileGen.sampleAt(tlng, tlat, rr % inner, cc % inner)
-    }
-    var vs = 0L; var vr = 0L; var vc = 0L
-    for (r <- 0 until inner; c <- 0 until inner) {
-      val v = (sample(2 * r, 2 * c) + sample(2 * r, 2 * c + 1) +
-        sample(2 * r + 1, 2 * c) + sample(2 * r + 1, 2 * c + 1)) >> 2
-      vs += v; vr += v * r; vc += v * c
-    }
-    assert(got(0)._3 == inner.toLong * inner)
-    assert((got(0)._4, got(0)._5, got(0)._6) == ((vs, vr, vc)))
-  }
-
-  test("idwInterpolate equals brute force; exact hits excluded; weights capped") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(23)
-    val probes = (0 until 60).map(i =>
-      (i.toLong, rnd.nextDouble(), rnd.nextDouble()))
-    val obs = (0 until 300).map(i =>
-      (rnd.nextDouble(), rnd.nextDouble(), (i % 50 + 1).toLong)) :+
-      (probes.head._2, probes.head._3, 7L) // exact coincidence with probe 0
-    val r = 0.12
-    val got = ops.SpatialJoin.idwInterpolate(
-        probes.toDF("probe_id", "px", "py"),
-        obs.toDF("x", "y", "v"), r)
-      .as[(Long, Long, Long, Long, Long)].collect().map(x => x._1 -> x).toMap
-    probes.foreach { case (pid, px, py) =>
-      val ws = obs.flatMap { case (x, y, v) =>
-        val (ddx, ddy) = (px - x, py - y)
-        val d2 = ddx * ddx + ddy * ddy
-        if (d2 > 0 && d2 <= r * r)
-          Some((math.min(math.floor(1.0 / d2), 1.0e12).toLong, v))
-        else None
-      }
-      if (ws.isEmpty) assert(!got.contains(pid), s"probe $pid")
-      else {
-        val (_, n, vsum, wsum, idw) = got(pid)
-        assert(n == ws.size && wsum == ws.map(_._1).sum &&
-          vsum == ws.map(w => w._1 * w._2).sum && idw == vsum / wsum,
-          s"probe $pid")
-      }
-    }
-  }
-
   test("kdeSmooth equals a driver-side 3x3 integer convolution") {
     import spark.implicits._
     val rnd = new scala.util.Random(17)
@@ -1319,73 +1115,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.length == 2)
     assert(got(0) == (1L, 10L, 3L, at(0), at(2)), "first A-run")
     assert(got(1) == (1L, 10L, 4L, at(4), at(7)), "second A-run (after the B gap)")
-  }
-
-  test("sinkLabels: pointer doubling equals sequential walking; cycles fail fast") {
-    import spark.implicits._
-    // a deterministic functional DAG: succ(i) = i - (1..3) with sinks at 0..2
-    val n = 400
-    val succSeq = (0 until n).map { i =>
-      if (i < 3) (i.toLong, i.toLong)
-      else (i.toLong, (i - 1 - (i * 7 % 3)).toLong)
-    }
-    val got = graft.ops.FlowGraph.sinkLabels(succSeq.toDF("cell", "succ"))
-      .as[(Long, Long)].collect().toMap
-    val succMap = succSeq.toMap
-    def walk(c: Long): Long = if (succMap(c) == c) c else walk(succMap(c))
-    (0 until n).foreach(i => assert(got(i.toLong) == walk(i.toLong), s"cell $i"))
-    // a 2-cycle must hit the round cap, not spin forever
-    val cyc = Seq((0L, 1L), (1L, 0L)).toDF("cell", "succ")
-    intercept[IllegalArgumentException] {
-      graft.ops.FlowGraph.sinkLabels(cyc, maxRounds = 4).collect()
-    }
-  }
-
-  test("accumulation: path-doubling upstream counts equal sequential walking") {
-    import spark.implicits._
-    // same functional DAG shape as the sinkLabels spec
-    val n = 300
-    val succSeq = (0 until n).map { i =>
-      if (i < 3) (i.toLong, i.toLong)
-      else (i.toLong, (i - 1 - (i * 7 % 3)).toLong)
-    }
-    val got = graft.ops.FlowGraph.accumulation(succSeq.toDF("cell", "succ"))
-      .as[(Long, Long)].collect().toMap
-    val succMap = succSeq.toMap
-    // brute force: acc(u) = 1 + #{v : u on v's proper downstream path}
-    val exp = Array.fill(n)(1L)
-    for (v <- 0 until n) {
-      var c = v.toLong
-      while (succMap(c) != c) { c = succMap(c); exp(c.toInt) += 1 }
-    }
-    (0 until n).foreach(i => assert(got(i.toLong) == exp(i), s"cell $i"))
-  }
-
-  test("strahler: round-synchronized orders equal the recursive definition") {
-    import spark.implicits._
-    // a deterministic forest: parent(i) = i / 2 for i in 1..n (binary tree
-    // rooted at 1, with 0 isolated via self-loop filter) plus an irregular
-    // tail so not every internal node has exactly 2 children
-    val children = (2 to 300) ++ Seq(601, 602, 603).map(_ => 300)
-    val edges = ((2 to 300).map(i => (i.toLong, (i / 2).toLong)) ++
-      Seq((601L, 150L), (602L, 150L), (603L, 150L)))
-    val got = graft.ops.FlowGraph.strahler(edges.toDF("child", "parent"))
-      .as[(Long, Long)].collect().toMap
-    val kids = edges.groupBy(_._2).map { case (p, es) => p -> es.map(_._1) }
-    def ord(v: Long): Long = kids.get(v) match {
-      case None => 1L
-      case Some(cs) =>
-        val os = cs.map(ord); val m = os.max
-        if (os.count(_ == m) >= 2) m + 1 else m
-    }
-    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
-    nodes.foreach(v => assert(got(v) == ord(v), s"node $v"))
-    assert(got.size == nodes.size)
-    // a chain deeper than the guard must fail fast, not spin
-    val chain = (1 to 30).map(i => (i.toLong, (i - 1).toLong)).toDF("child", "parent")
-    intercept[IllegalStateException] {
-      graft.ops.FlowGraph.strahler(chain, maxRounds = 5).collect()
-    }
   }
 
   test("convexHull: minimal vertex set equals the Caratheodory brute force") {
@@ -1667,33 +1396,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!edges.contains((a, b)), s"adjacent pair ($a,$b) suggested") }
   }
 
-  test("madOutliers: lower median, MAD, and Hampel counts match brute force") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    // heavy-tailed: mostly small values, a few huge outliers per group
-    val rows = (0 until 500).map { i =>
-      val g = s"g${i % 3}"
-      val v = if (rnd.nextInt(20) == 0) 100000L + rnd.nextInt(1000)
-              else rnd.nextInt(100).toLong
-      (i.toLong, g, v)
-    }
-    val got = graft.ops.Quantiles.madOutliers(
-        rows.toDF("event_id", "event_type", "iv"),
-        "event_type", col("iv"), col("event_id"))
-      .as[(String, Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> (r._2, r._3, r._4, r._5)).toMap
-    rows.groupBy(_._2).foreach { case (g, rs) =>
-      val sorted = rs.sortBy(r => (r._3, r._1))
-      val med = sorted((sorted.size + 1) / 2 - 1)._3
-      val devs = rs.map(r => (r._1, math.abs(r._3 - med))).sortBy(d => (d._2, d._1))
-      val mad = devs((devs.size + 1) / 2 - 1)._2
-      val nOut = rs.count(r => math.abs(r._3 - med) > 2 * mad).toLong
-      assert(got(g) == ((rs.size.toLong, med, mad, nOut)), s"group $g")
-      // the robust flag actually catches the planted tail
-      assert(nOut > 0, s"group $g flagged no outliers")
-    }
-  }
-
   test("pointAlong matches brute force; endpoints and single-vertex lines") {
     import spark.implicits._
     val rnd = new scala.util.Random(5)
@@ -1768,49 +1470,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(1L) == ((8L, 5L, 2L, 3L)))
     assert(got(2L) == ((5L, 0L, 0L, 0L)))
     assert(got(3L) == ((1L, 1L, 1L, 1L)))
-  }
-
-  test("closeness: hand-walked path graph, horizon truncation, floored harmonic") {
-    import spark.implicits._
-    // undirected path 0-1-2-3-4 (both directions materialized)
-    val base = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L))
-    val edges = (base ++ base.map(_.swap)).toDF("src", "dst")
-    val got = graft.ops.Graph.closeness(edges, Seq(0L, 2L), rounds = 4)
-      .as[(Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    // from 0: d = 1,2,3,4 -> harmonic 1000000+500000+333333+250000
-    assert(got(0L) == ((4L, 10L, 2083333L)))
-    // from 2: two at d=1, two at d=2
-    assert(got(2L) == ((4L, 6L, 3000000L)))
-    // horizon 2 truncates node 0's sweep to {1, 2}
-    val h2 = graft.ops.Graph.closeness(edges, Seq(0L), rounds = 2)
-      .as[(Long, Long, Long, Long)].collect().head
-    assert(h2 == ((0L, 2L, 3L, 1500000L)))
-  }
-
-  test("mattr: brute-force sliding-window distinct counts; short docs dropped") {
-    import spark.implicits._
-    val docs = Seq((1L, "a b a b c"), (2L, "a a a"), (3L, "x y"))
-      .toDF("doc_id", "text")
-    val got = graft.ops.Curation.mattr(docs, col("text"), w = 3)
-      .as[(Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    // doc 1: windows [a b a]=2, [b a b]=2, [a b c]=3 -> 7 over 3*3
-    assert(got(1L) == ((5L, 7L, 777777L)))
-    // doc 2: one window [a a a]=1
-    assert(got(2L) == ((3L, 1L, 333333L)))
-    // doc 3 shorter than the window: dropped
-    assert(!got.contains(3L) && got.size == 2)
-    // brute-force cross-check on a longer mixed doc
-    val toks = "p q r p s q p r r q t".split(" ")
-    val w = 4
-    val brute = (0 to toks.length - w)
-      .map(i => toks.slice(i, i + w).distinct.length.toLong).sum
-    val one = Seq((9L, toks.mkString(" "))).toDF("doc_id", "text")
-    val row = graft.ops.Curation.mattr(one, col("text"), w)
-      .as[(Long, Long, Long, Long)].collect().head
-    assert(row._3 == brute)
-    assert(row._4 == brute * 1000000L / (w * (toks.length - w + 1)))
   }
 
   test("sssp: hand-walked weighted graph; R-hop horizon; min over multi-edges") {
@@ -1980,29 +1639,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got((0L, 0L)) == 2L)
   }
 
-  test("urlDedup: canonicalization rules and min-id keep") {
-    import spark.implicits._
-    val urls = Seq(
-      (1L, "https://WWW.Example.com/A/B/?utm=1#x"), // www+case+query+frag+slash
-      (2L, "https://example.com/A/B"),              // dup of 1
-      (3L, "https://example.com/a/b"),              // path case differs: NOT a dup
-      (4L, "http://example.com/A/B"),               // scheme differs: NOT a dup
-      (5L, "https://example.com"),                  // empty path => '/'
-      (6L, "https://Example.com/"),                 // dup of 5
-      (7L, "https://wwwx.com/p")                    // 'www' only as a PREFIX label
-    ).toDF("doc_id", "url")
-    val got = graft.ops.Curation.urlDedup(urls)
-      .as[(Long, String, Boolean)].collect()
-      .map(r => r._1 -> (r._2, r._3)).toMap
-    assert(got(1L) == (("https://example.com/A/B", true)))
-    assert(got(2L) == (("https://example.com/A/B", false)))
-    assert(got(3L)._2 && got(3L)._1 == "https://example.com/a/b")
-    assert(got(4L)._2 && got(4L)._1 == "http://example.com/A/B")
-    assert(got(5L) == (("https://example.com/", true)))
-    assert(got(6L) == (("https://example.com/", false)))
-    assert(got(7L) == (("https://wwwx.com/p", true)), "wwwx host must not lose chars")
-  }
-
   test("mixtureWeights: exact ppm shares, uniform target, ceil epochs") {
     import spark.implicits._
     val docs = Seq(
@@ -2100,21 +1736,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(graft.ops.Graph.kcore(path, k = 2, rounds = 1).count() == 2L)
   }
 
-  test("cusum: recurrence, alarm reset, max statistic") {
-    import spark.implicits._
-    // drift 10, threshold 25: values 30,30 push s to 20 then 40 -> alarm +
-    // reset; then 5 keeps s at 0; 40 -> 30 -> second alarm; 12 -> s 2
-    val ev = Seq((1L, 1L, 30L), (1L, 2L, 30L), (1L, 3L, 5L), (1L, 4L, 40L),
-      (1L, 5L, 12L), (2L, 1L, 9L)).toDF("k", "t", "v")
-    val got = graft.ops.Drift.cusum(ev, "k", Seq("t"), "v",
-        drift = 10L, threshold = 25L)
-      .as[(Long, Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4, r._5))).toMap
-    assert(got(1L) == ((5L, 2L, 2L, 40L)))
-    // a key that never accumulates: no alarms, statistic pinned at 0
-    assert(got(2L) == ((1L, 0L, 0L, 0L)))
-  }
-
   test("quadkey: Bing golden vectors and prefix property") {
     import spark.implicits._
     // bing maps tile-system doc example: tile (3, 5) at level 3 -> "213"
@@ -2164,27 +1785,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val got = graft.ops.Trajectory.hausdorff(pts, pairs)
       .as[(Long, Long, Long, Long, Long)].collect().head
     assert(got == ((1L, 2L, 2L, 3L, 100L)))
-  }
-
-  test("holt: recurrence matches a hand fold, negative trend floors correctly") {
-    import spark.implicits._
-    val xs = Seq(100L, 90L, 80L, 70L) // falling series -> negative trend
-    val ev = xs.zipWithIndex.map { case (v, i) => (1L, i.toLong, v) }
-      .toDF("k", "t", "v")
-    val got = graft.ops.Drift.holt(ev, "k", Seq("t"), "v",
-        alphaPpm = 500000L, betaPpm = 500000L, horizon = 2L)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().head
-    // hand fold with floor division (alpha = beta = 1/2)
-    def fd(x: Long): Long = Math.floorDiv(x, 1000000L)
-    var l = xs.head; var b = 0L; var e = 0L
-    for (x <- xs.tail) {
-      val pred = l + b
-      val ln = fd(500000L * x + 500000L * pred)
-      val bn = fd(500000L * (ln - l) + 500000L * b)
-      e += math.abs(x - pred); l = ln; b = bn
-    }
-    assert(got == ((1L, 4L, l, b, l + 2 * b, e)))
-    assert(b < 0L, "falling series must carry a negative trend")
   }
 
   test("hex_grid_distance: column arithmetic equals Hex.gridDistance") {
@@ -2267,27 +1867,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(4L) == ((2L, 2L, 4L))) // nothing dropped
   }
 
-  test("knBigram: continuation backoff matches the hand-computed formula") {
-    import spark.implicits._
-    // corpus bigrams: (a b) x2, (b a), (a c), (c b)
-    val docs = Seq((1L, "a b a b"), (2L, "a c b")).toDF("doc_id", "text")
-    val got = graft.ops.Curation.knBigram(docs, topK = 10)
-      .as[(String, String, Long, Long, Int)].collect()
-      .map(r => (r._1, r._2) -> ((r._3, r._4))).toMap
-    // counts: c(a,b)=2 c(b,a)=1 c(a,c)=1 c(c,b)=1; c_x: a=3, b=1, c=1
-    // fanout: a->2, b->1, c->1; cont: b<-2 (a,c), a<-1, c<-1; Ntot=4
-    def kn(c12: Long, cx: Long, fan: Long, cont: Long): Long =
-      math.max(4 * c12 - 3, 0) * 1000000000L / (4 * cx) +
-        (3 * fan * (cont * 1000000000L / 4)) / (4 * cx)
-    assert(got(("a", "b")) == ((2L, kn(2, 3, 2, 2))))
-    assert(got(("b", "a")) == ((1L, kn(1, 1, 1, 1))))
-    assert(got(("a", "c")) == ((1L, kn(1, 3, 2, 1))))
-    assert(got(("c", "b")) == ((1L, kn(1, 1, 1, 2))))
-    // the same count backs off differently: (a,c) vs (b,a) share c12=1 but
-    // differ in context fanout and continuation mass
-    assert(got(("a", "c"))._2 != got(("b", "a"))._2)
-  }
-
   test("bpePairStats: pair counts and deterministic ranking") {
     import spark.implicits._
     val docs = Seq((1L, "aab ab"), (2L, "b aab")).toDF("doc_id", "text")
@@ -2309,66 +1888,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .as[(Long, Long, Long, Long, Long)].collect().toSet
     assert(got == Set((1L, 1L, 0L, 4L, 4L), (1L, 2L, 8L, 8L, 1L),
       (2L, 1L, 5L, 5L, 1L)))
-  }
-
-  test("bomRollup: diamond multiplicity, depth cap, per-root exactness") {
-    import spark.implicits._
-    // diamond 1→{2,3}→4→5: two distinct paths 1⇝4 both count in ext_qty
-    val edges = Seq((1L, 2L, 2L), (1L, 3L, 3L), (2L, 4L, 4L),
-      (3L, 4L, 5L), (4L, 5L, 6L)).toDF("parent", "child", "qty")
-    val d3 = graft.ops.Graph.bomRollup(edges, maxDepth = 3)
-      .as[(Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(d3 == Map(
-      1L -> ((4L, 2L + 3 + 8 + 15 + 48 + 90, 3L)),
-      2L -> ((2L, 4L + 24, 2L)),
-      3L -> ((2L, 5L + 30, 2L)),
-      4L -> ((1L, 6L, 1L))))
-    // depth cap 2: node 5 no longer reachable from 1
-    val d2 = graft.ops.Graph.bomRollup(edges, maxDepth = 2)
-      .as[(Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-    assert(d2(1L) == ((3L, 2L + 3 + 8 + 15, 2L)))
-  }
-
-  test("mmrDiversify replays the greedy MMR recurrence bit-exactly") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val vecs = (0L until 30L).map { i =>
-      (i, Array.fill(8)((rnd.nextInt(19) - 9).toFloat))
-    }.toDF("vec_id", "embedding")
-    val got = Embeddings.mmrDiversify(vecs, vecs.filter(col("vec_id") < 2),
-        nCand = 10, k = 4, lambda = 0.5)
-      .select("qid", "step", "neighbor_id").as[(Long, Int, Long)].collect()
-      .groupBy(_._1).map { case (q, rows) =>
-        q -> rows.sortBy(_._2).map(_._3).toSeq }
-    // local replay with the identical left-fold double arithmetic
-    val v = vecs.as[(Long, Array[Float])].collect().toMap
-      .map { case (k, a) => k -> a.map(_.toDouble) }
-    def dotl(a: Array[Double], b: Array[Double]): Double = {
-      var s = 0.0; var i = 0
-      while (i < a.length) { s += a(i) * b(i); i += 1 }
-      s
-    }
-    def cos(a: Long, b: Long): Double =
-      dotl(v(a), v(b)) / (math.sqrt(dotl(v(a), v(a))) * math.sqrt(dotl(v(b), v(b))))
-    for (q <- Seq(0L, 1L)) {
-      val cand = v.keys.filter(_ != q).toSeq
-        .map(i => (i, cos(q, i))).sortBy { case (i, r) => (-r, i) }.take(10)
-      val rel = cand.toMap
-      var sel = Vector.empty[Long]
-      var rem = cand.map(_._1).toSet
-      for (_ <- 1 to 4) {
-        val pick = rem.toSeq.map { i =>
-          val score = if (sel.isEmpty) 0.5 * rel(i)
-            else 0.5 * rel(i) - 0.5 * sel.map(sl => cos(i, sl)).max
-          (i, score)
-        }.minBy { case (i, sc) => (-sc, i) }._1
-        sel :+= pick
-        rem -= pick
-      }
-      assert(got(q) == sel, s"qid $q: got ${got(q)}, want $sel")
-    }
   }
 
   test("Trajectory.convoy matches brute-force maximal-run extraction") {

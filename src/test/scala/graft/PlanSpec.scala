@@ -706,18 +706,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(!plan.contains("CartesianProduct"), s"cartesian in pcaProject:\n$plan")
   }
 
-  test("prefixJaccardJoin: candidates only from the prefix-token equi-join, no all-pairs") {
-    import spark.implicits._
-    val docs = (0 until 400).map { i =>
-      (i.toLong, (0 until 12).map(j => s"w${(i * 7 + j * 3) % 90}").mkString(" "))
-    }.toDF("doc_id", "text")
-    val out = graft.ops.TextDedup.prefixJaccardJoin(docs, thresholdPpm = 700000L)
-    out.collect()
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"prefix join fell back to all-pairs:\n$plan")
-  }
-
   test("hausdorff: pair-keyed expansion and aggregations, no nested-loop refine") {
     import spark.implicits._
     val pts = (0 until 2000).map(i =>
@@ -741,25 +729,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"kcore planned an all-pairs join:\n$plan")
   }
 
-  test("cusum/holt fold: ONE key exchange, recurrence inside the aggregate") {
-    import spark.implicits._
-    val ev = (0 until 5000).map(i =>
-      (i % 50L, i.toLong, (i * 37) % 1000L)).toDF("k", "t", "v")
-    for (out <- Seq(
-        graft.ops.Drift.cusum(ev, "k", Seq("t"), "v", 10L, 100L),
-        graft.ops.Drift.holt(ev, "k", Seq("t"), "v", 300000L, 100000L, 3L))) {
-      assert(out.collect().length == 50)
-      // AQE echoes the initial plan below the final one — count only the
-      // final plan's exchanges
-      val plan = out.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head
-      val exchanges = "Exchange hashpartitioning".r.findAllIn(plan).length
-      assert(exchanges == 1,
-        s"expected exactly one key exchange, got $exchanges:\n$plan")
-      assert(!plan.contains("CartesianProduct"))
-    }
-  }
-
   test("incrementalAgg: delta path partial-aggregates; no scan of base facts") {
     import spark.implicits._
     val baseAgg = (0 until 16).map(i => (i.toLong, 100L, 10000L))
@@ -776,43 +745,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // combine on grp), so delta traffic is bounded by touched groups
     assert(plan.contains("partial_sum") || plan.contains("HashAggregate"),
       s"delta aggregation missing its partial phase:\n$plan")
-  }
-
-  test("acf: ONE key exchange — window partitioning satisfies the (key,lag) agg") {
-    import spark.implicits._
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val ev = (0 until 2000).map(i => (s"t${i % 3}", i.toLong, (i * 37 % 500).toLong))
-        .toDF("k", "ts", "v")
-      val out = graft.ops.Drift.acf(ev, "k", Seq("ts"), "v", maxLag = 4)
-      out.collect()
-      val plan = out.queryExecution.executedPlan
-      val n = plan.collect { case s: ShuffleExchangeExec => s }.length
-      assert(n == 1, s"acf must shuffle exactly once (got $n):\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-  }
-
-  test("modularity: no cartesian; community map joins stay key-bounded") {
-    import spark.implicits._
-    val edges = (0 until 3000).map(i => ((i * 7 % 300).toLong, (i * 13 % 300).toLong))
-      .toDF("src", "dst")
-    val comms = spark.range(300).selectExpr("id AS node", "id % 8 AS comm")
-    val out = graft.ops.Graph.modularity(edges, comms)
-    val rows = out.collect()
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"),
-      s"modularity planned a cartesian:\n$plan")
-    // the ONLY nested-loop is the broadcast attach of the 1-row m aggregate
-    // (O(|communities|) work); the edge-side community joins must hash.
-    // AQE's toString repeats the plan (Final + Initial) — audit Final only.
-    val finalPlan = plan.split("== Initial Plan ==").head
-    assert(finalPlan.sliding("BroadcastNestedLoopJoin".length)
-      .count(_ == "BroadcastNestedLoopJoin") <= 1,
-      s"modularity nested-loops a non-scalar side:\n$finalPlan")
-    // exact-integer invariant: Σ_c qnum = 4m²·Q, and Q ≤ 1 ⇒ Σ qnum ≤ 4m²
-    val m = rows.head.getAs[Long]("m")
-    val qsum = rows.map(_.getAs[Long]("qnum")).sum
-    assert(qsum <= 4 * m * m, s"modularity out of range: $qsum vs ${4 * m * m}")
   }
 
   test("clusteringCoeff: key-bounded joins, no cartesian; closure invariants") {
@@ -880,29 +812,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = out.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       s"trussSupport planned an unkeyed join:\n$plan")
-  }
-
-  test("benford: exact ppm table on uniform 1..999 (111 per digit), one scan") {
-    import spark.implicits._
-    val df = (1L to 999L).toDF("v")
-    val out = graft.ops.DataQuality.benford(df, "v", tolPpm = 30000L)
-    val rows = out.collect().sortBy(_.getInt(0))
-    assert(rows.length == 9)
-    assert(graft.ops.DataQuality.BenfordPpm.sum == 1000000L)
-    rows.foreach { r =>
-      assert(r.getAs[Long]("n_obs") == 111L)       // 1 + 10 + 100 per digit
-      assert(r.getAs[Long]("n_total") == 999L)
-      assert(r.getAs[Long]("obs_ppm") == 111111L)  // 111·1e6 DIV 999, exact
-      val d = r.getInt(0)
-      assert(r.getAs[Long]("dev_ppm") ==
-        math.abs(111111L - graft.ops.DataQuality.BenfordPpm(d - 1)))
-    }
-    // uniform data is maximally non-Benford at d=1, conformant mid-range
-    assert(rows.head.getAs[String]("verdict") == "deviant")
-    val scans = out.queryExecution.executedPlan.collect {
-      case s: ShuffleExchangeExec => s
-    }
-    assert(scans.size <= 2, s"benford should be one agg + one 9-row window")
   }
 
   test("biproject: hub pruned before the pair join, weights exact, no cartesian") {

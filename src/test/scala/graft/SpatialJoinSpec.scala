@@ -611,49 +611,4 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == expect && got.nonEmpty)
   }
 
-  test("dbscan matches the brute-force reference (roles and labels)") {
-    import spark.implicits._
-    val r = new scala.util.Random(13)
-    // two dense blobs + a sparse bridge + scattered noise
-    val pts: Seq[(Long, Double, Double)] =
-      (0 until 120).map(i => (i.toLong,
-        -119.0 + r.nextDouble() * 0.02, 36.0 + r.nextDouble() * 0.02)) ++
-      (0 until 120).map(i => (200L + i,
-        -118.9 + r.nextDouble() * 0.02, 36.1 + r.nextDouble() * 0.02)) ++
-      (0 until 30).map(i => (400L + i,
-        -119.5 + r.nextDouble() * 0.5, 36.5 + r.nextDouble() * 0.5))
-    val eps = 0.0025; val minPts = 6
-    val got = SpatialJoin.dbscan(pts.toDF("pid", "lng", "lat"), eps, minPts)
-      .as[(Long, String, Option[Long])].collect()
-      .map(t => t._1 -> (t._2, t._3)).toMap
-    // brute force DBSCAN with min-label border assignment
-    val eps2 = eps * eps
-    def d2(a: (Long, Double, Double), b: (Long, Double, Double)) = {
-      val dx = a._2 - b._2; val dy = a._3 - b._3; dx * dx + dy * dy
-    }
-    val nbrs = pts.map(p =>
-      p._1 -> pts.filter(q => q._1 != p._1 && d2(p, q) <= eps2).map(_._1).toSet).toMap
-    val core = pts.map(_._1).filter(p => nbrs(p).size + 1 >= minPts).toSet
-    // components over core-core edges (BFS)
-    var label = core.map(c => c -> c).toMap
-    var changed = true
-    while (changed) {
-      changed = false
-      for (c <- core; n <- nbrs(c) if core(n))
-        if (label(n) < label(c)) { label += c -> label(n); changed = true }
-    }
-    pts.map(_._1).foreach { p =>
-      val want: (String, Option[Long]) =
-        if (core(p)) ("core", Some(label(p)))
-        else {
-          val cn = nbrs(p).filter(core).map(label)
-          if (cn.nonEmpty) ("border", Some(cn.min)) else ("noise", None)
-        }
-      assert(got(p) == want, s"pid $p")
-    }
-    // the fixture actually exercises all three roles and >= 2 clusters
-    val roles = got.values.map(_._1).toSet
-    assert(roles == Set("core", "border", "noise"))
-    assert(got.values.flatMap(_._2).toSet.size >= 2)
-  }
 }

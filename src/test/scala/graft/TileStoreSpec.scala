@@ -57,43 +57,16 @@ class TileStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val smallCorners = for { lng <- -122 to -119; lat <- 36 to 37 } yield (lng, lat)
     TileStore.write(spark.createDataset(TileGen.tiles(smallCorners, 61, "hgt"))(
       Encoders.product[graft.core.TileRow]), small)
-    // jobs are tagged with the phase that started them; the action's job-end
-    // event arrives after every earlier job-start event (one ordered bus)
-    val phaseKey = "graft.test.phase"
-    val buildJobs = new java.util.concurrent.atomic.AtomicInteger()
-    val actionEnded = new java.util.concurrent.CountDownLatch(1)
-    val actionJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(phaseKey)).orNull match {
-          case "build" => buildJobs.incrementAndGet(): Unit
-          case "action" => actionJobs.add(e.jobId): Unit
-          case _ =>
-        }
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (actionJobs.contains(e.jobId)) actionEnded.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(phaseKey, "build")
-      val tiles = TileStore.readTiles(spark, small)
-      sc.setLocalProperty(phaseKey, "action")
-      val got = tiles.collect()
-      sc.setLocalProperty(phaseKey, null)
-      assert(actionEnded.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      assert(buildJobs.get() == 0, s"readTiles launched ${buildJobs.get()} Spark jobs")
-      def key(t: graft.core.TileRow) =
-        (t.image_id, t.bytes.toSeq, t.w, t.h, t.fmt, t.caption, t.phash)
-      val want = TileStore.read(spark, small)
-        .select("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
-        .as[graft.core.TileRow](Encoders.product[graft.core.TileRow]).collect()
-      assert(got.length == smallCorners.size)
-      assert(got.map(key).sortBy(_._1).toSeq == want.map(key).sortBy(_._1).toSeq)
-    } finally {
-      sc.setLocalProperty(phaseKey, null)
-      sc.removeSparkListener(listener)
-    }
+    val (tiles, build) = Listened(spark.sparkContext)(TileStore.readTiles(spark, small))
+    assert(build.jobs == 0, s"readTiles launched ${build.jobs} Spark jobs")
+    val got = tiles.collect()
+    def key(t: graft.core.TileRow) =
+      (t.image_id, t.bytes.toSeq, t.w, t.h, t.fmt, t.caption, t.phash)
+    val want = TileStore.read(spark, small)
+      .select("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+      .as[graft.core.TileRow](Encoders.product[graft.core.TileRow]).collect()
+    assert(got.length == smallCorners.size)
+    assert(got.map(key).sortBy(_._1).toSeq == want.map(key).sortBy(_._1).toSeq)
   }
 
   test("full scan without predicate reads everything") {

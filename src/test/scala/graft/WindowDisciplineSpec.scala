@@ -5,17 +5,16 @@ import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window => LWind
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Regression guard for the round-5 window discipline: NO core-tier query
+/** Regression guard for the round-5 window discipline: NO registry query
   * may plan a global (empty-partition-spec) Window — the shape that moves
   * the whole input to one task. Checked on the OPTIMIZED logical plan,
   * i.e. after the optimizer has folded constant partition keys, so a
-  * bounded-frame marker that the optimizer can eliminate (a bare literal)
-  * fails here exactly as it would warn at run time; the non-foldable
-  * `GlobalRank.boundedPartitionKey` survives.
+  * partition key the optimizer can eliminate (a bare literal) fails here
+  * exactly as it would warn at run time.
   *
-  * Complements the run-level evidence (a full-registry verify logs zero
-  * "No Partition Defined" warnings) with a per-plan assertion that runs in
-  * CI without executing the queries.
+  * Complements the run-level evidence (a Verify run logs zero "No
+  * Partition Defined" warnings) with a per-plan assertion that runs in CI
+  * without executing the queries.
   */
 class WindowDisciplineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -34,7 +33,7 @@ class WindowDisciplineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("no core-tier query plans an unpartitioned window") {
     val offenders = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (name <- graft.queries.Tiers.core) {
+    for (name <- SparkEntry.queries.keys.toSeq.sorted) {
       // building the frame may run bounded driver-side training/collect
       // steps (sf0.001 fixtures); the plan check itself executes nothing
       val df =
