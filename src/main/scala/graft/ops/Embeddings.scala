@@ -76,29 +76,6 @@ object Embeddings {
         round(col("best.d2"), 4).as("d2_r"))
   }
 
-  /** IVF top-k search — the scale path of ANN search: each query probes only
-    * its `nProbe` nearest centroid LISTS instead of the whole corpus, then
-    * exact cosine re-ranks the candidates. The corpus side carries its
-    * centroid as the join key — at 100 TB the corpus is partitioned (and on
-    * disk, partition-pruned) by centroid, and the only wide operation is the
-    * per-query top-k window over candidates from nProbe lists.
-    * Recall < 1 by design (a neighbor assigned to an unprobed list is
-    * missed) — `ann_cosine_topk` is the exact baseline; [[ivfRecall]]
-    * measures recall@k against it; determinism is total, so the oracle
-    * replicates results bit-for-bit.
-    *
-    * The probe side is size-gated in BYTES, mirroring the kNN fallback
-    * (SpatialJoin.knn): an analytics query set (few queries) broadcasts its
-    * nProbe-exploded probe rows — zero shuffle on the corpus, candidate
-    * generation rides the corpus scan; a query-HEAVY workload (batch
-    * re-embedding, queries ≈ corpus) would materialize
-    * queries × nProbe × ~vector-width bytes on the driver and every
-    * executor, so past `broadcastMaxBytes` the candidates come from a plain
-    * shuffle join on `centroid` instead — both sides hash-partition by
-    * centroid list, which is exactly how the corpus is already laid out.
-    *
-    * @return (qid, neighbor_id, centroid, rank, cos_r)
-    */
   /** Shared coarse-probe scaffold of [[ivfSearch]] and [[ivfPqSearch]]:
     * corpus assigned to its nearest centroid, each query exploded to its
     * nProbe nearest centroid lists (lexicographic (d2, c) sort — same tie
@@ -137,6 +114,29 @@ object Embeddings {
     (corpus, probeSide)
   }
 
+  /** IVF top-k search — the scale path of ANN search: each query probes only
+    * its `nProbe` nearest centroid LISTS instead of the whole corpus, then
+    * exact cosine re-ranks the candidates. The corpus side carries its
+    * centroid as the join key — at 100 TB the corpus is partitioned (and on
+    * disk, partition-pruned) by centroid, and the only wide operation is the
+    * per-query top-k window over candidates from nProbe lists.
+    * Recall < 1 by design (a neighbor assigned to an unprobed list is
+    * missed) — `ann_cosine_topk` is the exact baseline; [[ivfRecall]]
+    * measures recall@k against it; determinism is total, so the oracle
+    * replicates results bit-for-bit.
+    *
+    * The probe side is size-gated in BYTES, mirroring the kNN fallback
+    * (SpatialJoin.knn): an analytics query set (few queries) broadcasts its
+    * nProbe-exploded probe rows — zero shuffle on the corpus, candidate
+    * generation rides the corpus scan; a query-HEAVY workload (batch
+    * re-embedding, queries ≈ corpus) would materialize
+    * queries × nProbe × ~vector-width bytes on the driver and every
+    * executor, so past `broadcastMaxBytes` the candidates come from a plain
+    * shuffle join on `centroid` instead — both sides hash-partition by
+    * centroid list, which is exactly how the corpus is already laid out.
+    *
+    * @return (qid, neighbor_id, centroid, rank, cos_r)
+    */
   def ivfSearch(vecs: DataFrame, queries: DataFrame, kCentroids: Int,
                 nProbe: Int, topK: Int,
                 broadcastMaxBytes: Long = 64L << 20): DataFrame = {
@@ -228,13 +228,6 @@ object Embeddings {
     pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= topK)
   }
 
-  /** Recall@topK of [[ivfSearch]] against the exact [[cosineTopK]] baseline
-    * on the same query set — the number a user tuning nProbe/kCentroids
-    * needs. Hits and recall are exact rationals of deterministic sets, so an
-    * independent engine reproduces them bit-for-bit.
-    *
-    * @return (qid, n_hits, recall) with recall = |ivf ∩ exact| / topK
-    */
   /** Shared recall summary: per query, how many of `approx`'s (qid,
     * neighbor_id) rows appear in `exact`'s — queries with zero hits kept
     * at recall 0 via the left outer join.
@@ -250,6 +243,13 @@ object Embeddings {
         (coalesce(col("hits"), lit(0L)) / lit(topK.toDouble)).as("recall"))
   }
 
+  /** Recall@topK of [[ivfSearch]] against the exact [[cosineTopK]] baseline
+    * on the same query set — the number a user tuning nProbe/kCentroids
+    * needs. Hits and recall are exact rationals of deterministic sets, so an
+    * independent engine reproduces them bit-for-bit.
+    *
+    * @return (qid, n_hits, recall) with recall = |ivf ∩ exact| / topK
+    */
   def ivfRecall(vecs: DataFrame, queries: DataFrame, kCentroids: Int,
                 nProbe: Int, topK: Int): DataFrame =
     recallSummary(
@@ -258,26 +258,6 @@ object Embeddings {
       cosineTopK(vecs, queries, topK).select(col("qid"), col("neighbor_id")),
       queries, topK)
 
-  /** One Lloyd iteration of k-means over the embedding column — the centroid
-    * TRAINING step the IVF index needs (ivfAssign/ivfSearch use the
-    * deterministic seed centroids; iterating this step refines them).
-    *
-    * Scale shape: assignment is per-row arithmetic on the corpus scan (no
-    * shuffle); the mean recomputation is `posexplode` to (centroid, dim)
-    * followed by ONE partial-aggregated shuffle whose output is exactly
-    * k·dims rows — the classic distributed Lloyd step. Iterating collects
-    * only the k×dims new centroid components to the driver (bounded, ~512
-    * doubles), never any corpus data.
-    *
-    * Engine-exactness: per-component sums run on QUANTIZED integers
-    * (`q = floor(v_d · 10^6)` — floor of the same IEEE product on both
-    * engines), so the aggregation is order-independent exact 64-bit
-    * arithmetic; the emitted mean is one IEEE division of exact integers.
-    *
-    * @return (centroid, dim, n, sum_q, mean) — n rows per centroid·dim;
-    *         empty centroids emit no rows (standard Lloyd: empty clusters
-    *         keep their old centroid, decided by the caller)
-    */
   /** Deterministic PQ codebook entry: subspace `s`, code `k`, local dim `d`
     * (same modular family as [[centroid]], offset by the subspace).
     */
@@ -316,6 +296,26 @@ object Embeddings {
         col("sc.best.k").as("code"), round(col("sc.best.d2"), 4).as("d2_r"))
   }
 
+  /** One Lloyd iteration of k-means over the embedding column — the centroid
+    * TRAINING step the IVF index needs (ivfAssign/ivfSearch use the
+    * deterministic seed centroids; iterating this step refines them).
+    *
+    * Scale shape: assignment is per-row arithmetic on the corpus scan (no
+    * shuffle); the mean recomputation is `posexplode` to (centroid, dim)
+    * followed by ONE partial-aggregated shuffle whose output is exactly
+    * k·dims rows — the classic distributed Lloyd step. Iterating collects
+    * only the k×dims new centroid components to the driver (bounded, ~512
+    * doubles), never any corpus data.
+    *
+    * Engine-exactness: per-component sums run on QUANTIZED integers
+    * (`q = floor(v_d · 10^6)` — floor of the same IEEE product on both
+    * engines), so the aggregation is order-independent exact 64-bit
+    * arithmetic; the emitted mean is one IEEE division of exact integers.
+    *
+    * @return (centroid, dim, n, sum_q, mean) — n rows per centroid·dim;
+    *         empty centroids emit no rows (standard Lloyd: empty clusters
+    *         keep their old centroid, decided by the caller)
+    */
   def kmeansStep(vecs: DataFrame, k: Int): DataFrame = {
     val dists = (0 until k).map { c =>
       struct(vec_dist2(col("v"), centroid(c)).as("d2"), lit(c).as("c"))

@@ -87,11 +87,6 @@ object MediaOps {
     }.toDF()
   }
 
-  /** Audio path: bytes as centered 8-bit samples (`b − 128`), fixed
-    * windows of `winLen` samples (tail window dropped — exact contract),
-    * exact integer sum of squares per window (the RMS numerator; the
-    * division/sqrt stays with the caller so the gate compares integers).
-    */
   /** Scene-cut detection over the sampled frame stream: a cut is a frame
     * whose 16-sample luminance mean jumps more than `threshold` levels from
     * the previous sampled frame — the standard shot-boundary heuristic on
@@ -116,6 +111,11 @@ object MediaOps {
       .select("media_id", "ts_ms", "luma16", "d_lum", "cut")
   }
 
+  /** Audio path: bytes as centered 8-bit samples (`b − 128`), fixed
+    * windows of `winLen` samples (tail window dropped — exact contract),
+    * exact integer sum of squares per window (the RMS numerator; the
+    * division/sqrt stays with the caller so the gate compares integers).
+    */
   def windowSquares(media: Dataset[MediaRow], winLen: Int): DataFrame = {
     require(winLen > 0, s"winLen must be > 0, got $winLen")
     val spark = media.sparkSession

@@ -704,10 +704,7 @@ object SpatialJoin {
     * @param b (poly_id, xs, ys) right rings, CCW convex
     * @return (poly_a, poly_b) intersecting pairs
     */
-  /** Intersecting pairs WITH both coordinate arrays — the shared core of
-    * [[polygonJoin]] and [[polygonJoinWithArea]].
-    */
-  private def polygonJoinPairs(a: DataFrame, b: DataFrame, level: Int): DataFrame = {
+  def polygonJoin(a: DataFrame, b: DataFrame, level: Int = 9): DataFrame = {
     val spark = a.sparkSession
     import spark.implicits._
     def cellsOf(df: DataFrame, idAs: String): DataFrame = df
@@ -734,33 +731,7 @@ object SpatialJoin {
         array_min(col("ays")) <= array_max(col("bys")) &&
         array_min(col("bys")) <= array_max(col("ays")))
       .filter(expr(intersectsSql("axs", "ays", "bxs", "bys")))
-      .select("poly_a", "poly_b", "axs", "ays", "bxs", "bys")
-  }
-
-  def polygonJoin(a: DataFrame, b: DataFrame, level: Int = 9): DataFrame =
-    polygonJoinPairs(a, b, level).select("poly_a", "poly_b")
-
-  /** [[polygonJoin]] + the exact OVERLAP AREA of each pair via
-    * Sutherland–Hodgman clipping ([[graft.geo.ConvexClip]]) — the
-    * area-weighted zonal-aggregation primitive (a feature spanning zones
-    * contributes proportionally to each). The `b` (clip) rings may be
-    * convex OR concave, either winding: concave clip rings ear-clip
-    * triangulate and per-triangle areas sum exactly
-    * ([[graft.geo.ConvexClip.intersectionAreaGeneral]]);
-    * JTS-cross-checked in SpatialJoinSpec on convex AND concave fixtures.
-    *
-    * @return (poly_a, poly_b, area) for intersecting pairs
-    */
-  def polygonJoinWithArea(a: DataFrame, b: DataFrame, level: Int = 9): DataFrame = {
-    val spark = a.sparkSession
-    import spark.implicits._
-    polygonJoinPairs(a, b, level)
-      .as[(Long, Long, Seq[Double], Seq[Double], Seq[Double], Seq[Double])]
-      .map { case (pa, pb, axs, ays, bxs, bys) =>
-        (pa, pb, graft.geo.ConvexClip.intersectionAreaGeneral(
-          axs.toArray, ays.toArray, bxs.toArray, bys.toArray))
-      }
-      .toDF("poly_a", "poly_b", "area")
+      .select("poly_a", "poly_b")
   }
 
   /** Bounded-radius snap of points onto the nearest line segment — the map-

@@ -1,6 +1,5 @@
 package graft.ops
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
@@ -447,37 +446,5 @@ object TextDedup {
         sum(when(col("df") <= maxDf, 1L).otherwise(0L)).as("n_kept_lines"),
         sum(when(col("df") <= maxDf, size(split(col("line"), " ")).cast("long"))
           .otherwise(0L)).as("n_kept_words"))
-  }
-
-  /** BPE merge statistics — the counting step of byte-pair-encoding
-    * tokenizer training: corpus-wide frequencies of ADJACENT character
-    * pairs inside words, ranked `(count desc, pair asc)`; the top entry is
-    * the merge a BPE trainer would perform next. This is the data-parallel
-    * heart of tokenizer training at 100 TB (each merge round re-runs the
-    * same count over re-segmented symbols) and the vocabulary-design
-    * diagnostic beside [[graft.ops.Curation]]'s token counting.
-    *
-    * Plan shape: tokenize → per-word pair explode (a codegen'd
-    * `transform(sequence(...))`, no UDF) → ONE pair-keyed count with
-    * map-side partials. The final ranking windows over the AGGREGATED pair
-    * vocabulary — at most |alphabet|² rows by construction, so the single
-    * ranking partition is bounded by the alphabet, not the corpus (the
-    * same bounded-global-sort argument as the trained-quantizer codebooks).
-    *
-    * @return (pair, n, rk) the `topK` most frequent pairs, rk 1-based
-    */
-  def bpePairStats(docs: DataFrame, topK: Int): DataFrame = {
-    require(topK > 0, s"topK must be positive: $topK")
-    docs.select(explode(words(col("text"))).as("w"))
-      .filter(length(col("w")) >= 2)
-      .select(explode(
-        expr("transform(sequence(1, length(w)-1), i -> substring(w, i, 2))"))
-        .as("pair"))
-      .groupBy("pair").agg(count(lit(1)).as("n"))
-      // top-K via distributed TakeOrdered; the rank window then runs
-      // over a provably-topK-row frame, never the full pair vocabulary
-      .orderBy(col("n").desc, col("pair").asc).limit(topK)
-      .withColumn("rk", row_number()
-        .over(Window.partitionBy(GlobalRank.boundedPartitionKey(col("n"))).orderBy(col("n").desc, col("pair").asc)).cast("int"))
   }
 }

@@ -641,9 +641,6 @@ object OracleCtes {
            CAST(row_number() OVER (PARTITION BY qid ORDER BY cos DESC, neighbor_id) AS INTEGER) AS rank FROM cand)
        WHERE rank <= 5 ORDER BY qid, rank"""
 
-  /** Recall@5 oracle: IVF candidate set (same CTEs as the topk oracle, 25
-    * queries) intersected with the exact brute-force top-5 per query.
-    */
   /** Shared IVF-PQ candidate CTEs (coarse assign + PQ codes + qprobe +
     * ADC-scored candidates) for the topk and recall oracles — the codebook
     * constants and tie-break order live in exactly one place. The ADC
@@ -859,6 +856,9 @@ object OracleCtes {
        FROM (SELECT DISTINCT vec_id AS qid FROM embeddings WHERE vec_id < 25) q
        LEFT JOIN hits h ON h.qid = q.qid ORDER BY q.qid"""
 
+  /** Recall@5 oracle: IVF candidate set (same CTEs as the topk oracle, 25
+    * queries) intersected with the exact brute-force top-5 per query.
+    */
   private[graft] def ivfRecallOracleSql: String =
     """WITH vv AS (SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings),
        cents AS (SELECT range AS c FROM range(0, 8)),

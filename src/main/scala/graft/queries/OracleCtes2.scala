@@ -71,10 +71,6 @@ object OracleCtes2 {
   private[graft] def clamp(base: String, d: Int): String =
     if (d == 0) base else s"LEAST(600, GREATEST(0, $base + ($d)))"
 
-  /** D8 flow-direction oracle: replicates TileIndex.flowdirD8's integer
-    * comparison (2·drop²ₛ vs drop²d, first maximal code wins) over the 8
-    * clamped neighbours of the nearest node. Missing tile ⇒ 0.
-    */
   /** Zonal-histogram oracle (PIP membership × bilinear elevation × 256 m
     * bins).
     */
@@ -264,6 +260,10 @@ object OracleCtes2 {
        LEFT JOIN h1 ON h1.qid = q.qid ORDER BY q.qid"""
   }
 
+  /** D8 flow-direction oracle: replicates TileIndex.flowdirD8's integer
+    * comparison (2·drop²ₛ vs drop²d, first maximal code wins) over the 8
+    * clamped neighbours of the nearest node. Missing tile ⇒ 0.
+    */
   private[graft] def flowdirOracleSql: String = {
     val scores = (0 until 8).map { i =>
       val dc = Seq(1, 1, 0, -1, -1, -1, 0, 1)(i)

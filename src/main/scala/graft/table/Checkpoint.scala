@@ -8,8 +8,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructType}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Encoder, Encoders, Observation, Row, SparkSession}
 
-import scala.jdk.CollectionConverters._
-
 /** One committed bucket of a resumable write: the lineage + row-count metrics
   * row (north rule: "all stages checkpoint per-partition with lineage +
   * row-count metrics to Iceberg metadata tables"). The reference's analog is
@@ -17,8 +15,8 @@ import scala.jdk.CollectionConverters._
   * metrics (src/fetchTileData.ts:35-48, src/s3Fetcher.ts:12-18) — here
   * generalized to a durable commit log that makes the whole job resumable at
   * bucket granularity.
-  */
-/** @param wall_ms AMORTIZED wall time: the single write job (which also
+  *
+  * @param wall_ms AMORTIZED wall time: the single write job (which also
   *                counts the stats) covers all pending buckets at once
   *                (that is the scale design), so its wall clock is divided
   *                evenly across the buckets it committed — every bucket of
@@ -61,13 +59,12 @@ final case class BucketManifest(run_id: String, bucket: Int, row_count: Long,
   */
 object Checkpoint {
 
-  private val ManifestSchema = StructType.fromDDL("run_id string, bucket int, " +
-    "row_count bigint, checksum bigint, wall_ms bigint, committed_at bigint")
-
-  /** A commit row: the manifest columns plus the written data schema's JSON
-    * (null on lines written before the schema was recorded).
+  /** One commit-log line: a bucket's manifest and the JSON of the data
+    * schema its run wrote.
     */
-  private val CommitSchema = ManifestSchema.add("schema", StringType)
+  private final case class Commit(manifest: BucketManifest, schema: String)
+
+  private def structOf(json: String): StructType = DataType.fromJson(json).asInstanceOf[StructType]
 
   private def hadoopConf(spark: Option[SparkSession]) =
     spark.map(_.sparkContext.hadoopConfiguration)
@@ -80,62 +77,58 @@ object Checkpoint {
 
   private val mapper = new ObjectMapper()
 
-  /** One commit-log line as a commit row. A line is a commit only if it
-    * parses to an object with an integer `bucket`: a torn or hand-edited
-    * line must read as "not committed", never crash every later resume.
-    * Other fields that are absent or mistyped read as null, as in Spark's
-    * JSON source.
+  /** One commit-log line as a commit. A line is a commit only if it parses
+    * to a JSON object that carries all seven fields with their types: a
+    * torn, hand-edited or older-format line must read as "not committed"
+    * (resume rewrites its bucket), never crash every later resume.
     */
-  private def commitRow(line: String): Option[Row] = {
+  private def commitOf(line: String): Option[Commit] = {
     val n = try mapper.readTree(line) catch { case _: java.io.IOException => null }
-    if (n == null || !n.path("bucket").isInt) None
-    else {
-      def long(f: String): java.lang.Long =
-        if (n.path(f).isIntegralNumber && n.path(f).canConvertToLong) n.path(f).asLong() else null
-      def text(f: String): String = if (n.path(f).isTextual) n.path(f).asText() else null
-      Some(Row(text("run_id"), n.path("bucket").asInt(), long("row_count"), long("checksum"),
-        long("wall_ms"), long("committed_at"), text("schema")))
-    }
+    def field(f: String) = Option(n.get(f))
+    def long(f: String) = field(f).filter(v => v.isIntegralNumber && v.canConvertToLong).map(_.asLong())
+    def text(f: String) = field(f).filter(_.isTextual).map(_.asText())
+    if (n == null || !n.isObject) None
+    else for {
+      runId <- text("run_id")
+      bucket <- field("bucket").filter(_.isInt).map(_.asInt())
+      rows <- long("row_count")
+      checksum <- long("checksum")
+      wallMs <- long("wall_ms")
+      committedAt <- long("committed_at")
+      schema <- text("schema")
+    } yield Commit(BucketManifest(runId, bucket, rows, checksum, wallMs, committedAt), schema)
   }
 
   /** The commit log, read on the driver through Hadoop `FileSystem`, the way
     * [[appendManifest]] writes it: a manifest append must not cost a Spark
     * job, and neither must reading the log back — at 1,024 buckets the
     * per-commit job launches were pure overhead that dwarfed the single data
-    * write. Hidden names (`.`/`_` prefixes, as Spark's listing skips them)
-    * are never commits; that covers the `.tmp` of an append killed before
-    * its rename. Tables whose manifests were committed by the earlier
-    * parquet-append protocol stay readable: their `.parquet` commit files
-    * are collected into the same rows (a Spark job, only for such tables).
+    * write. Only `.json` files hold commits; hidden names (`.`/`_`
+    * prefixes, as Spark's listing skips them) never do, which covers the
+    * `.tmp` of an append killed before its rename.
     */
-  private def commitRows(spark: SparkSession, dir: String): Seq[Row] = {
+  private def commits(spark: SparkSession, dir: String): Seq[Commit] = {
     val (fs, mdir) = fsOf(s"$dir/manifest", Some(spark))
     val files =
       if (!fs.exists(mdir)) Seq.empty[Path]
       else fs.listStatus(mdir).toSeq.filter(_.isFile).map(_.getPath)
-        .filterNot(p => p.getName.startsWith(".") || p.getName.startsWith("_"))
+        .filter(p => p.getName.endsWith(".json") &&
+          !p.getName.startsWith(".") && !p.getName.startsWith("_"))
         .sortBy(_.getName)
-    val rows = files.filter(_.getName.endsWith(".json")).flatMap { p =>
+    files.flatMap { p =>
       val in = new java.io.BufferedReader(new java.io.InputStreamReader(
         fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
       try Iterator.continually(in.readLine()).takeWhile(_ != null)
-        .filter(_.trim.nonEmpty).flatMap(commitRow).toList
+        .filter(_.trim.nonEmpty).flatMap(commitOf).toList
       finally in.close()
     }
-    // pathGlobFilter: a migrated table holds BOTH formats in one directory,
-    // and Spark's file listing filters only hidden files, not extensions
-    if (!files.exists(_.getName.endsWith(".parquet"))) rows
-    else rows ++ spark.read.schema(ManifestSchema)
-      .option("pathGlobFilter", "*.parquet").parquet(s"$dir/manifest")
-      .collect().map(r => Row.fromSeq(r.toSeq :+ null))
   }
 
   /** The commit log as a local relation of the six manifest columns, so
     * collecting it runs no Spark job.
     */
   def manifests(spark: SparkSession, dir: String): DataFrame =
-    spark.createDataFrame(commitRows(spark, dir).map(r => Row.fromSeq(r.toSeq.init)).asJava,
-      ManifestSchema)
+    spark.createDataFrame(commits(spark, dir).map(_.manifest))
 
   /** Crash-atomic append: write to a hidden .tmp path, sync (where the
     * filesystem supports it), then rename — a kill mid-write leaves only a
@@ -149,7 +142,7 @@ object Checkpoint {
     * @param schema JSON of the written data schema, recorded on every line
     */
   private def appendManifest(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-                             rows: Seq[BucketManifest], schema: Option[String]): Unit = {
+                             rows: Seq[BucketManifest], schema: String): Unit = {
     val name = s"commit-${java.util.UUID.randomUUID()}.json"
     val tmp = new Path(s"$dir/manifest/.$name.tmp")
     val fin = new Path(s"$dir/manifest/$name")
@@ -160,7 +153,7 @@ object Checkpoint {
         val line = mapper.createObjectNode().put("run_id", r.run_id).put("bucket", r.bucket)
           .put("row_count", r.row_count).put("checksum", r.checksum)
           .put("wall_ms", r.wall_ms).put("committed_at", r.committed_at)
-        schema.foreach(line.put("schema", _))
+          .put("schema", schema)
         out.write(mapper.writeValueAsBytes(line))
         out.write('\n')
       }
@@ -190,7 +183,7 @@ object Checkpoint {
     */
   private def commit(spark: SparkSession, dir: String, runId: String, buckets: Seq[Int],
                      stats: Map[Int, (Long, Long)], wallMs: Long, perFile: Int,
-                     schema: Option[StructType], failBefore: Int = -1): Seq[BucketManifest] = {
+                     schema: StructType, failBefore: Int = -1): Seq[BucketManifest] = {
     val (mfs, _) = fsOf(s"$dir/manifest", Some(spark))
     cleanTmpManifests(mfs, dir)
     val out = Seq.newBuilder[BucketManifest]
@@ -202,50 +195,21 @@ object Checkpoint {
         val (n, c) = stats.getOrElse(b, (0L, 0L))
         BucketManifest(runId, b, n, c, wallMs, System.currentTimeMillis())
       }
-      appendManifest(mfs, dir, rows, schema.map(_.json))
+      appendManifest(mfs, dir, rows, schema.json)
       out ++= rows
       ordinal += group.size
     }
     out.result()
   }
 
-  /** Per bucket, the commit of the run `rank` ranks highest (runs it maps
-    * to None are skipped): the snapshot-resolution step of every versioned
-    * reader, folded on the driver over the commit log, so resolving a
-    * snapshot runs no Spark job. Duplicate lines (a vacuum killed between
-    * its log rewrite and cleanup) resolve to the same winner.
-    */
-  private def winners[K](spark: SparkSession, dir: String)(rank: Row => Option[K])(
-      implicit ord: Ordering[K]): Map[Int, Row] =
-    commitRows(spark, dir).filterNot(_.isNullAt(1))
-      .flatMap(r => rank(r).map(k => (r.getInt(1), k, r)))
-      .groupBy(_._1).map { case (b, rs) => b -> rs.maxBy(_._2)._3 }
-
-  /** Per bucket, the commit of the run of `lineage` (commit order) that
-    * wrote it last.
-    */
-  private def lineageWinners(spark: SparkSession, dir: String,
-                             lineage: Seq[String]): Map[Int, Row] = {
-    val idx = lineage.zipWithIndex.toMap
-    winners(spark, dir)(r => idx.get(r.getString(0)))
-  }
-
-  private def runIds(wins: Map[Int, Row]): Map[Int, String] =
-    wins.map { case (b, r) => b -> r.getString(0) }
-
-  /** The run ids with at least one commit line. */
-  private def committedRuns(spark: SparkSession, dir: String): Set[String] =
-    commitRows(spark, dir).map(_.getString(0)).toSet
-
   def committedBuckets(spark: SparkSession, dir: String): Set[Int] =
-    // a legacy parquet manifest row without a bucket is not a commit
-    commitRows(spark, dir).filterNot(_.isNullAt(1)).map(_.getInt(1)).toSet
+    commits(spark, dir).map(_.manifest.bucket).toSet
 
   /** Rows of every commit of the table, summed from the commit log on the
-    * driver (rows without a `row_count` add nothing).
+    * driver.
     */
   def committedRowCount(spark: SparkSession, dir: String): Long =
-    commitRows(spark, dir).filterNot(_.isNullAt(2)).map(_.getLong(2)).sum
+    commits(spark, dir).map(_.manifest.row_count).sum
 
   /** Per-bucket row count and checksum over `[0, nBuckets)` buckets. The
     * buffer is `(count, checksum)` pairs indexed by bucket, so each row
@@ -368,9 +332,9 @@ object Checkpoint {
     // durable commits: manifest rows appended only after the data write,
     // bucket-group by bucket-group (bucketsPerJob trades commit granularity
     // against commit-log file count). Appends are direct FileSystem writes,
-    // never Spark jobs — see [[commitRows]].
+    // never Spark jobs — see [[commits]].
     commit(spark, dir, runId, pendingBuckets, stats, wallMs, bucketsPerJob,
-      Some(df.schema), failBeforeBucket)
+      df.schema, failBeforeBucket)
   }
 
   /** Read the committed table back. Snapshot-consistent: only buckets with a
@@ -379,25 +343,18 @@ object Checkpoint {
     * pruning on `__bucket` keeps the filter scan-level. The scan uses the
     * data schema recorded with the newest commit, so no Spark job runs
     * before an action and a table whose committed buckets are all empty
-    * still reads with its columns; only a table with commit lines written
-    * before the schema was recorded infers it from the Parquet footers.
+    * still reads with its columns.
     */
   def read(spark: SparkSession, dir: String): DataFrame = {
-    val commits = commitRows(spark, dir).filterNot(_.isNullAt(1))
+    val cs = commits(spark, dir)
     // a run killed before ANY commit leaves no data/ at all — the snapshot
     // contract says "empty", not AnalysisException
     val (fs, dataPath) = fsOf(s"$dir/data", Some(spark))
-    if (commits.isEmpty || !fs.exists(dataPath))
+    if (cs.isEmpty || !fs.exists(dataPath))
       return spark.emptyDataFrame
-    val reader =
-      if (commits.exists(_.isNullAt(6))) spark.read
-      else {
-        val newest = commits.maxBy(r => if (r.isNullAt(5)) Long.MinValue else r.getLong(5))
-        spark.read.schema(DataType.fromJson(newest.getString(6)).asInstanceOf[StructType]
-          .add("__bucket", IntegerType))
-      }
-    reader.parquet(s"$dir/data")
-      .where(col("__bucket").isin(commits.map(_.getInt(1)).distinct: _*))
+    spark.read.schema(structOf(cs.maxBy(_.manifest.committed_at).schema).add("__bucket", IntegerType))
+      .parquet(s"$dir/data")
+      .where(col("__bucket").isin(cs.map(_.manifest.bucket).distinct: _*))
       .drop("__bucket")
   }
 
@@ -409,13 +366,13 @@ object Checkpoint {
   /** Versioned snapshot write — the time-travel side of the Iceberg-style
     * layout. Where [[writeResumable]] REWRITES bucket directories in place
     * (one live version), each `writeVersioned` run appends an immutable
-    * `data/__run=<runId>/__bucket=N/` tree and commits manifest rows after
-    * the data is durable, so every run remains readable forever and
-    * [[readAt]] reconstructs the table AS OF any run: per bucket, the
-    * newest committed write at-or-before the requested snapshot wins —
-    * bucket-granularity overwrite semantics, exactly Iceberg's
-    * copy-on-write partition overwrite with the manifest log as the
-    * snapshot lineage.
+    * `data/__run=<runId>/__bucket=N/` tree, bucket `b` written by task `b`,
+    * and commits manifest rows after the data is durable, so every run
+    * remains readable forever and [[readAt]] reconstructs the table AS OF
+    * any run: per bucket, the newest committed write at-or-before the
+    * requested snapshot wins — bucket-granularity overwrite semantics,
+    * exactly Iceberg's copy-on-write partition overwrite with the manifest
+    * log as the snapshot lineage.
     *
     * The bucket function is an explicit caller expression (not the hash of
     * [[writeResumable]]) so a patch run can target the buckets it changes
@@ -427,430 +384,47 @@ object Checkpoint {
     */
   def writeVersioned(df: DataFrame, bucketOf: org.apache.spark.sql.Column,
                      nBuckets: Int, dir: String, runId: String,
-                     bucketsPerJob: Int = 64): Seq[BucketManifest] =
-    writeRunTree(df, bucketOf, nBuckets, dir, "data", runId, bucketsPerJob)
-
-  private def writeRunTree(df: DataFrame,
-                           bucketOf: org.apache.spark.sql.Column,
-                           nBuckets: Int, dir: String, sub: String,
-                           runId: String,
-                           bucketsPerJob: Int): Seq[BucketManifest] = {
+                     bucketsPerJob: Int = 64): Seq[BucketManifest] = {
     require(!runId.contains("=") && !runId.contains("/"), s"bad runId: $runId")
     val t0 = System.nanoTime()
-    val stats = appendRun(df
+    val frame = df
       .withColumn("__bucket", pmod(bucketOf.cast("long"), lit(nBuckets)).cast("int"))
-      .withColumn("__run", lit(runId)), nBuckets, s"$dir/$sub")
-    val wallMs = ((System.nanoTime() - t0) / 1000000) /
-      math.max(1, stats.size)
+      .withColumn("__run", lit(runId))
+    val stats = countedWrite(frame.repartitionById(nBuckets, col("__bucket")), nBuckets,
+      "__run", "__bucket")(_.mode("append").parquet(s"$dir/data"))
+    val wallMs = ((System.nanoTime() - t0) / 1000000) / math.max(1, stats.size)
     commit(df.sparkSession, dir, runId, stats.keys.toSeq.sorted, stats, wallMs,
-      bucketsPerJob, Some(df.schema))
+      bucketsPerJob, df.schema)
   }
-
-  /** Append `frame` — rows with `__run` and a `__bucket` in `[0, nBuckets)`
-    * — as a run tree under `path`, bucket `b` written by task `b`, and
-    * return the [[countedWrite]] stats of the buckets it holds rows for.
-    */
-  private def appendRun(frame: DataFrame, nBuckets: Int,
-                        path: String): Map[Int, (Long, Long)] =
-    countedWrite(frame.repartitionById(nBuckets, col("__bucket")), nBuckets, "__run", "__bucket")(
-      _.mode("append").parquet(path))
 
   /** Time-travel read: the table AS OF the last run in `runOrder`. For each
     * bucket the newest run in `runOrder` (caller-supplied commit order —
     * the snapshot lineage) holding a committed manifest row for it wins;
     * buckets no run in the prefix wrote are absent. The winner set is
-    * resolved from the commit log (≤ runs × buckets rows — driver-bounded
-    * by the manifest contract, never by data size) and pushed down as
-    * `__run`/`__bucket` partition-literal disjunctions, so the scan touches
-    * exactly the winning partition directories.
+    * resolved from the commit log on the driver (≤ runs × buckets rows —
+    * bounded by the manifest contract, never by data size) and pushed down
+    * as `__run`/`__bucket` partition-literal disjunctions, so the scan
+    * touches exactly the winning partition directories.
+    *
+    * The scan reads with the by-name union of the winners' recorded
+    * schemas in lineage order (Iceberg-style schema evolution: a run that
+    * ADDED columns still reads with older runs, whose rows hold nulls
+    * there), so building the frame runs no Spark job.
     */
-  /** @param mergeSchema resolve the union of the run trees' schemas by
-    *                     name (Iceberg-style schema evolution: a run that
-    *                     ADDED columns still reads with older runs; columns
-    *                     absent in an old run surface as nulls). Off by
-    *                     default — it costs a footer sweep; a real catalog
-    *                     would pin the table schema instead.
-    */
-  def readAt(spark: SparkSession, dir: String, runOrder: Seq[String],
-             mergeSchema: Boolean = false): DataFrame = {
-    val wins = runIds(lineageWinners(spark, dir, runOrder))
+  def readAt(spark: SparkSession, dir: String, runOrder: Seq[String]): DataFrame = {
+    val idx = runOrder.zipWithIndex.toMap
+    val wins = commits(spark, dir).filter(c => idx.contains(c.manifest.run_id))
+      .groupBy(_.manifest.bucket).values.map(_.maxBy(c => idx(c.manifest.run_id)))
+      .toSeq.sortBy(c => (idx(c.manifest.run_id), c.manifest.bucket))
     if (wins.isEmpty) return spark.emptyDataFrame
-    readWinners(spark, dir, wins, mergeSchema)
-  }
-
-  /** The rows of each bucket's winning run (bucket → run), pushed down as
-    * `__run`/`__bucket` partition-literal disjunctions, so the scan touches
-    * exactly the winning partition directories.
-    */
-  private def readWinners(spark: SparkSession, dir: String, wins: Map[Int, String],
-                          mergeSchema: Boolean = false): DataFrame =
-    spark.read.option("mergeSchema", mergeSchema.toString)
-      .parquet(s"$dir/data")
-      .where(partitionPred(wins))
-      .drop("__run", "__bucket")
-
-  /** `(__run = r AND __bucket IN (...)) OR ...` over a bucket → run map. */
-  private def partitionPred(wins: Map[Int, String]): org.apache.spark.sql.Column =
-    wins.toSeq.groupBy(_._2).toSeq.sortBy(_._1).map { case (run, bs) =>
-      col("__run") === lit(run) && col("__bucket").isin(bs.map(_._1).sorted: _*)
+    val schema = wins.map(_.schema).distinct.map(structOf)
+      .reduce((a, b) => b.filterNot(f => a.fieldNames.contains(f.name)).foldLeft(a)(_ add _))
+    val pred = wins.groupBy(_.manifest.run_id).toSeq.sortBy(_._1).map { case (run, cs) =>
+      col("__run") === lit(run) && col("__bucket").isin(cs.map(_.manifest.bucket): _*)
     }.reduce(_ || _)
-
-  /** Rewrite refused: the compacted run's stats differ from the winning
-    * manifests — either the store was corrupted or a concurrent writer
-    * moved a bucket's winner mid-compaction. Nothing was committed.
-    */
-  final class CompactionIntegrityViolation(msg: String)
-      extends RuntimeException(msg)
-
-  /** COMPACTION (lakehouse OPTIMIZE) on the versioned store — copy-on-write
-    * consolidation: read the CURRENT winners of `runOrder` (the same
-    * newest-committed-run-per-bucket resolution as [[readAt]]), rewrite
-    * them as ONE new immutable run (`runId`) with one file per bucket, and
-    * commit its manifest rows only after validating the rewrite against
-    * the commit log. After compaction, `readAt(runOrder :+ runId)` resolves
-    * every bucket to the single compacted run — one partition directory
-    * per bucket instead of winners scattered across the whole run lineage —
-    * while every PRE-compaction snapshot stays readable unchanged (the old
-    * run trees are immutable; retention/GC of superseded runs is a separate
-    * policy decision, exactly as in Iceberg's `expire_snapshots`).
-    *
-    * Integrity is part of the protocol, not a hope: the rewritten run's
-    * per-bucket `(row_count, checksum)` — counted by the tasks that write
-    * its files, over exactly the rows they wrote — must equal the winning
-    * manifests' values; any difference throws
-    * [[CompactionIntegrityViolation]] BEFORE the manifest commit, leaving
-    * the store exactly as it was (the half-written run tree is invisible:
-    * no manifest row ⇒ no reader lists it — the same crash-atomicity
-    * argument as writeResumable's kill contract).
-    *
-    * Plan shape: winner resolution is driver-bounded by the commit log
-    * (≤ runs × buckets rows); the data path is ONE scan of exactly the
-    * winning partition directories (partition-literal pushdown) + one
-    * bucket-aligned repartition + one append — no shuffle beyond the
-    * write alignment, work proportional to the LIVE table, never the
-    * lineage.
-    */
-  def compactVersioned(spark: SparkSession, dir: String,
-                       runOrder: Seq[String],
-                       runId: String): Seq[BucketManifest] = {
-    require(!runId.contains("=") && !runId.contains("/"), s"bad runId: $runId")
-    val t0 = System.nanoTime()
-    // newest committed run per bucket: the content contract to preserve
-    val winner = winnerStats(spark, dir, runOrder)
-    if (winner.isEmpty) return Seq.empty
-    rewriteChecked(spark, dir, runId, winner, "winning", t0)
-  }
-
-  /** Per bucket, the newest committed run of `order` with the row count and
-    * checksum its manifest records: bucket → (run, row_count, checksum).
-    */
-  private def winnerStats(spark: SparkSession, dir: String,
-                          order: Seq[String]): Map[Int, (String, Long, Long)] =
-    lineageWinners(spark, dir, order).map { case (b, r) =>
-      b -> ((r.getString(0), r.getLong(2), r.getLong(3)))
-    }
-
-  /** Rewrite the partitions `want` names (bucket → (run, row_count,
-    * checksum)) as the new run `runId`, then commit them — but only if each
-    * bucket's counted stats equal the ones in `want`; any difference throws
-    * [[CompactionIntegrityViolation]] before anything commits.
-    */
-  private def rewriteChecked(spark: SparkSession, dir: String, runId: String,
-                             want: Map[Int, (String, Long, Long)], source: String,
-                             t0: Long): Seq[BucketManifest] = {
-    val source = spark.read.parquet(s"$dir/data")
-      .where(partitionPred(want.map { case (b, (run, _, _)) => b -> run }))
-    val stats = appendRun(source.drop("__run").withColumn("__run", lit(runId)),
-      want.keys.max + 1, s"$dir/data")
-    want.foreach { case (b, (_, n, c)) =>
-      val (wn, wc) = stats.getOrElse(b, (0L, 0L))
-      if (wn != n || wc != c)
-        throw new CompactionIntegrityViolation(
-          s"bucket $b rewrote to (rows=$wn, checksum=$wc) " +
-            s"but the $source manifest says (rows=$n, checksum=$c)")
-    }
-    val wallMs = ((System.nanoTime() - t0) / 1000000) / want.size
-    commit(spark, dir, runId, want.keys.toSeq.sorted, stats, wallMs, 64,
-      Some(source.drop("__run", "__bucket").schema))
-  }
-
-  /** Incremental read between two snapshot lineages — the CDC view of the
-    * versioned store: exactly the rows of buckets whose WINNER differs
-    * between `oldOrder` and `newOrder` (changed or newly written), read
-    * from the new lineage's winners. An incremental consumer (index
-    * refresh, downstream materialization) processes this delta instead of
-    * re-reading the table — work proportional to the CHANGE, never the
-    * table; Iceberg's incremental scan between snapshots.
-    *
-    * Bucket granularity is the store's write granularity, so the delta is
-    * exact at the protocol level: a bucket whose winner is unchanged
-    * cannot contain changed rows (runs are immutable). Resolution is
-    * driver-bounded by the commit log; the data path is one partition-
-    * pruned scan of only the changed partitions.
-    */
-  def readDelta(spark: SparkSession, dir: String, oldOrder: Seq[String],
-                newOrder: Seq[String]): DataFrame = {
-    val ow = runIds(lineageWinners(spark, dir, oldOrder))
-    val changed = runIds(lineageWinners(spark, dir, newOrder)).filter { case (b, run) =>
-      !ow.get(b).contains(run)
-    }
-    // empty delta keeps the data schema (a consumer unions deltas blindly)
-    if (changed.isEmpty)
-      return spark.read.parquet(s"$dir/data").where(lit(false)).drop("__run", "__bucket")
-    readWinners(spark, dir, changed)
-  }
-
-  /** RESTORE — Delta's `RESTORE TABLE ... TO VERSION` / Iceberg's
-    * rollback, expressed as a NEW COMMIT on the versioned store (the
-    * lakehouse contract: a rollback never deletes history — every
-    * post-restore snapshot stays time-travelable, and the restore itself
-    * is one more auditable run in the lineage): for every bucket whose
-    * winner under `currentOrder` differs from its winner under
-    * `targetOrder`, re-assert the TARGET content as run `runId`; buckets
-    * created after the target (present in current, absent in target) get a
-    * zero-row manifest tombstone so they resolve to the restore run and
-    * read empty. After this, `readAt(currentOrder :+ runId)` equals
-    * `readAt(targetOrder)` bucket-for-bucket.
-    *
-    * Integrity mirrors [[compactVersioned]]: the rewritten buckets'
-    * per-bucket (row_count, checksum), counted by the tasks that write them,
-    * must equal the TARGET winners' manifest values before anything commits —
-    * a mismatch throws and leaves the store untouched (the orphan run tree
-    * is invisible without manifest rows).
-    *
-    * Plan shape: winner diff is driver-bounded by the commit log; the data
-    * path scans exactly the to-restore buckets' target partitions
-    * (partition-literal pushdown) + one bucket-aligned append — work
-    * proportional to the CHANGE since the target, never the table.
-    */
-  def restoreVersioned(spark: SparkSession, dir: String,
-                       currentOrder: Seq[String], targetOrder: Seq[String],
-                       runId: String): Seq[BucketManifest] = {
-    require(!runId.contains("=") && !runId.contains("/"), s"bad runId: $runId")
-    val t0 = System.nanoTime()
-    val cur = winnerStats(spark, dir, currentOrder)
-    val tgt = winnerStats(spark, dir, targetOrder)
-    // buckets whose content must change: different winner, or vanished
-    val rewrite = tgt.filter { case (b, (run, _, _)) =>
-      !cur.get(b).exists(_._1 == run)
-    }
-    val tombstone = (cur.keySet -- tgt.keySet).toSeq.sorted
-    val restored =
-      if (rewrite.isEmpty) Seq.empty
-      else rewriteChecked(spark, dir, runId, rewrite, "target", t0)
-    // no data files: a zero-row manifest makes the restore run the bucket's
-    // winner, and the partition-pruned scan reads nothing
-    restored ++ commit(spark, dir, runId, tombstone, Map.empty, 0L, 64, None)
-  }
-
-  /** AS OF TIMESTAMP read — Iceberg's `FOR TIMESTAMP AS OF` on the
-    * versioned store: per bucket the newest manifest row with
-    * `committed_at <= cutoffMs` wins (ties broken by run_id, so the read
-    * is a pure function of the commit log), resolved driver-side and
-    * pushed down as the same partition-literal pruning as [[readAt]].
-    * Where [[readAt]] takes an explicit lineage, this derives it from the
-    * commit timestamps the protocol already records — the "what did the
-    * table look like at 3pm" audit read.
-    */
-  def readAsOf(spark: SparkSession, dir: String, cutoffMs: Long,
-               mergeSchema: Boolean = false): DataFrame = {
-    val wins = winners(spark, dir) { r =>
-      if (r.isNullAt(5) || r.getLong(5) > cutoffMs) None
-      else Some((r.getLong(5), r.getString(0)))
-    }
-    if (wins.isEmpty) return spark.emptyDataFrame
-    readWinners(spark, dir, runIds(wins), mergeSchema)
-  }
-
-  /** EQUALITY-DELETE vector (merge-on-read DELETE, Iceberg v2 equality
-    * deletes / Delta deletion vectors): instead of rewriting the buckets
-    * that hold matching rows (the copy-on-write path [[upsertVersioned]]
-    * takes), record ONLY the matching keys as a bucketed tombstone run
-    * under `dir/deletes`, committed through the SAME crash-atomic
-    * manifest protocol as data runs — no manifest row, no visible delete.
-    * Write cost is proportional to the DELETED keys, never the table;
-    * [[readMor]] applies the tombstones at read time.
-    *
-    * Delete runs share the commit log with data runs; callers keep the
-    * run-id namespaces disjoint (e.g. `d1`, `d2`) and pass data lineage
-    * and delete lineage separately to [[readMor]] — the same discipline
-    * as Iceberg's separate data/delete manifests.
-    *
-    * @param pred    rows of the CURRENT snapshot (per `lineage`) matching
-    *                this predicate have their keys tombstoned
-    * @param keyCols equality-delete key (the tombstone payload)
-    */
-  def deleteWhere(spark: SparkSession, dir: String, lineage: Seq[String],
-                  pred: org.apache.spark.sql.Column, keyCols: Seq[String],
-                  bucketOf: org.apache.spark.sql.Column, nBuckets: Int,
-                  runId: String): Seq[BucketManifest] = {
-    val keys = readAt(spark, dir, lineage)
+    spark.read.schema(schema.add("__run", StringType).add("__bucket", IntegerType))
+      .parquet(s"$dir/data")
       .where(pred)
-      .select(keyCols.map(col): _*)
-      .distinct()
-    writeRunTree(keys, bucketOf, nBuckets, dir, "deletes", runId, 64)
-  }
-
-  /** Merge-on-read snapshot: the [[readAt]] base minus every key
-    * tombstoned by the COMMITTED delete runs in `deleteRuns` — one
-    * key-equi LEFT ANTI join (the tombstone side is the distinct deleted
-    * key set, orders of magnitude smaller than the table; Catalyst
-    * broadcasts it under the threshold and shuffles on the key above it —
-    * both are the correct 100 TB shape, and the tombstone trees are
-    * bucketed by the same key hash as the data, so a bucket-aligned
-    * reader can co-locate the anti-join entirely). Uncommitted delete
-    * runs are invisible — the crash-atomicity contract extends to
-    * deletes.
-    */
-  def readMor(spark: SparkSession, dir: String, lineage: Seq[String],
-              deleteRuns: Seq[String], keyCols: Seq[String]): DataFrame = {
-    val base = readAt(spark, dir, lineage)
-    val live = deleteRuns.filter(committedRuns(spark, dir))
-    if (live.isEmpty) return base
-    val dels = live.map(r => spark.read.parquet(s"$dir/deletes/__run=$r"))
-      .reduce(_ unionByName _)
-      .select(keyCols.map(col): _*).distinct()
-    base.join(dels, keyCols, "left_anti")
-  }
-
-  /** ORPHAN-FILE audit (the detection half of Iceberg's
-    * remove_orphan_files / Delta VACUUM of untracked files): list every
-    * `__run=` tree under the data directory, count its rows, and flag
-    * whether ANY committed manifest references it. A crashed writer leaves
-    * a complete or partial run tree with no manifest row — invisible to
-    * every reader (the crash-atomicity contract) but still billing
-    * storage; this audit is what a maintenance job deletes from.
-    *
-    * The run listing is driver-side FS metadata (exactly like manifest
-    * resolution); per-run row counts are Spark jobs.
-    *
-    * @return (run_id, n_rows, committed)
-    */
-  def orphanAudit(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val (fs, dataP) = fsOf(s"$dir/data", Some(spark))
-    val runs =
-      if (!fs.exists(dataP)) Seq.empty[String]
-      else fs.listStatus(dataP).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("__run=")).map(_.stripPrefix("__run=")).sorted
-    val committed = committedRuns(spark, dir)
-    val rows = runs.map { r =>
-      val n = spark.read.parquet(s"$dir/data/__run=$r").count()
-      (r, n, committed.contains(r))
-    }
-    rows.toDF("run_id", "n_rows", "committed")
-  }
-
-  /** MERGE INTO (upsert) on the versioned store — Iceberg's copy-on-write
-    * merge at the store's bucket granularity: rows of `patch` REPLACE
-    * current rows with the same key and new keys are inserted, by
-    * rewriting ONLY the buckets the patch touches as one new run.
-    *
-    * Work is proportional to the PATCH, never the table: the touched
-    * bucket set is resolved from the patch (driver-bounded by nBuckets),
-    * the current snapshot is read partition-pruned to those buckets
-    * ([[readAt]] pushes the winner set as partition literals), and one
-    * key-equi full-outer join merges them — patch wins per column.
-    * Untouched buckets keep their old winners; `readAt(lineage :+ runId)`
-    * sees the merged table.
-    *
-    * @param patch    full replacement rows (same schema as the table)
-    * @param keyCols  merge key — unique per row in both sides
-    */
-  def upsertVersioned(spark: SparkSession, dir: String, lineage: Seq[String],
-                      patch: DataFrame, keyCols: Seq[String],
-                      bucketOf: org.apache.spark.sql.Column, nBuckets: Int,
-                      runId: String): Seq[BucketManifest] = {
-    val bucketExpr = pmod(bucketOf.cast("long"), lit(nBuckets)).cast("int")
-    val touched = patch.select(bucketExpr.as("__b")).distinct()
-      .collect().map(_.getInt(0)).toSeq // ≤ nBuckets rows, driver-bounded
-    val current = readAt(spark, dir, lineage)
-      .where(bucketExpr.isin(touched: _*))
-    val dataCols = patch.columns.filterNot(keyCols.contains).toSeq
-    val p = patch.select((keyCols.map(col) ++
-      dataCols.map(c => col(c).as(s"__p_$c"))): _*)
-    val merged = current.join(p, keyCols, "full_outer")
-      .select((keyCols.map(col) ++ dataCols.map(c =>
-        coalesce(col(s"__p_$c"), col(c)).as(c))): _*)
-      .select(patch.columns.map(col).toSeq: _*) // keep the table's column order
-    writeVersioned(merged, bucketOf, nBuckets, dir, runId)
-  }
-
-  final case class VacuumStats(livePartitions: Int, deletedPartitions: Int,
-                               manifestRows: Int)
-
-  /** Retention GC on the versioned store — Iceberg's `expire_snapshots` +
-    * `remove_orphan_files` as one policy step: keep exactly the
-    * `data/__run=R/__bucket=B` partition directories that at least one
-    * RETAINED lineage resolves as a winner (the same
-    * newest-committed-run-per-bucket resolution as [[readAt]]), delete
-    * every other partition, and compact the commit log to the surviving
-    * rows. Every retained snapshot reads back bit-identically (its winners
-    * are untouched immutable trees); every non-retained lineage is gone —
-    * that is the contract of expiry, storage reclaimed in exchange for
-    * history.
-    *
-    * Crash safety: data partitions are deleted only AFTER the live set is
-    * resolved from the durable commit log, and the log compaction appends
-    * the rewritten manifest BEFORE removing the old files — a kill between
-    * the two leaves duplicate manifest rows, which every reader already
-    * resolves to the same winner ([[readAt]], [[committedBuckets]],
-    * [[compactVersioned]]); a kill mid-data-delete leaves extra partitions
-    * that the next vacuum removes. No window leaves a retained snapshot
-    * unreadable.
-    *
-    * Driver-bounded like the rest of the manifest protocol: the live-set
-    * resolution is ≤ runs × buckets commit-log rows, the FS walk is one
-    * directory listing per run — never a data scan.
-    *
-    * @param retain snapshot lineages (each a [[readAt]] `runOrder`) that
-    *               must remain readable
-    */
-  def vacuumVersioned(spark: SparkSession, dir: String,
-                      retain: Seq[Seq[String]]): VacuumStats = {
-    require(retain.nonEmpty, "vacuum must retain at least one lineage")
-    // each row with the data schema recorded beside it, which survives
-    val all = commitRows(spark, dir).distinct.map(r => (BucketManifest(r.getString(0),
-      r.getInt(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)), Option(r.getString(6))))
-    val live = scala.collection.mutable.Set.empty[(String, Int)]
-    retain.foreach { lineage =>
-      val idx = lineage.zipWithIndex.toMap
-      all.map(_._1).filter(r => idx.contains(r.run_id)).groupBy(_.bucket)
-        .foreach { case (b, rs) =>
-          live += ((rs.maxBy(r => idx(r.run_id)).run_id, b))
-        }
-    }
-    val (fs, dataDir) = fsOf(s"$dir/data", Some(spark))
-    var deleted = 0
-    if (fs.exists(dataDir)) {
-      fs.listStatus(dataDir)
-        .filter(_.getPath.getName.startsWith("__run=")).foreach { runSt =>
-          val run = runSt.getPath.getName.stripPrefix("__run=")
-          fs.listStatus(runSt.getPath)
-            .filter(_.getPath.getName.startsWith("__bucket=")).foreach { bSt =>
-              val b = bSt.getPath.getName.stripPrefix("__bucket=").toInt
-              if (!live.contains((run, b))) {
-                fs.delete(bSt.getPath, true); deleted += 1
-              }
-            }
-          if (fs.listStatus(runSt.getPath).isEmpty)
-            fs.delete(runSt.getPath, true): Unit
-        }
-    }
-    // log compaction: append the surviving rows first, then drop the old
-    // commit files (the crash window only duplicates rows — see scaladoc)
-    val liveRows = all.filter { case (r, _) => live.contains((r.run_id, r.bucket)) }
-    val (mfs, mdir) = fsOf(s"$dir/manifest", Some(spark))
-    cleanTmpManifests(mfs, dir)
-    val old =
-      if (mfs.exists(mdir))
-        mfs.listStatus(mdir).map(_.getPath)
-          .filterNot(_.getName.startsWith("."))
-      else Array.empty[Path]
-    liveRows.groupBy(_._2).foreach { case (schema, rs) =>
-      rs.map(_._1).grouped(64).foreach(g => appendManifest(mfs, dir, g, schema))
-    }
-    old.foreach(p => mfs.delete(p, true): Unit)
-    VacuumStats(live.size, deleted, liveRows.length)
+      .drop("__run", "__bucket")
   }
 }

@@ -83,20 +83,6 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
     assert(Checkpoint.read(spark, dir).count() == 5000)
   }
 
-  test("mixed legacy-parquet + json manifests in one dir read together (migration)") {
-    import spark.implicits._
-    val dir = freshDir("mixed")
-    Checkpoint.writeResumable(sampleDf, Seq("k"), 2, dir, "newrun")
-    // forge a legacy parquet-protocol manifest row beside the json commits
-    Seq(("legacy", 99, 1L, 2L, 3L, 4L))
-      .toDF("run_id", "bucket", "row_count", "checksum", "wall_ms", "committed_at")
-      .coalesce(1).write.mode("append").parquet(s"$dir/manifest")
-    val m = Checkpoint.manifests(spark, dir)
-    assert(m.count() == 3) // 2 json + 1 legacy parquet, no cross-format junk
-    assert(m.filter(col("run_id").isNull).count() == 0)
-    assert(Checkpoint.committedBuckets(spark, dir) == Set(0, 1, 99))
-  }
-
   /** Write `lines` verbatim as one file of `dir`'s commit log. */
   private def forgeCommit(dir: String, name: String, lines: String*): Unit = {
     val m = java.nio.file.Paths.get(s"$dir/manifest")
@@ -104,24 +90,34 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
     java.nio.file.Files.writeString(m.resolve(name), lines.map(_ + "\n").mkString)
   }
 
+  /** The `schema` field of a forged commit line: an empty struct's JSON. */
+  private val schemaField = """"schema":"{\"type\":\"struct\",\"fields\":[]}""""
+
   test("commit log: malformed lines are not commits; valid lines beside them count") {
+    import spark.implicits._
     val dir = freshDir("malformed")
     forgeCommit(dir, "commit-forged.json",
-      """{"run_id":"r","bucket":0,"row_count":5,"checksum":1,"wall_ms":2,"committed_at":3}""",
+      s"""{"run_id":"r","bucket":0,"row_count":5,"checksum":1,"wall_ms":2,"committed_at":3,$schemaField}""",
       "this is not json",
       """{"run_id":"r","bucket":""",
-      """{"run_id":"r","bucket":"x","row_count":7,"checksum":1,"wall_ms":2,"committed_at":3}""",
-      """{"run_id":"r","bucket":2,"row_count":6,"checksum":1,"wall_ms":2,"committed_at":3}""")
+      s"""{"run_id":"r","bucket":"x","row_count":7,"checksum":1,"wall_ms":2,"committed_at":3,$schemaField}""",
+      // every field but the schema
+      """{"run_id":"r","bucket":4,"row_count":7,"checksum":1,"wall_ms":2,"committed_at":3}""",
+      s"""{"run_id":"r","bucket":2,"row_count":6,"checksum":1,"wall_ms":2,"committed_at":3,$schemaField}""")
+    // a .parquet commit file, as the parquet-append commit protocol wrote them
+    Seq(("legacy", 6, 1L, 2L, 3L, 4L))
+      .toDF("run_id", "bucket", "row_count", "checksum", "wall_ms", "committed_at")
+      .coalesce(1).write.mode("append").parquet(s"$dir/manifest")
     assert(Checkpoint.committedBuckets(spark, dir) == Set(0, 2))
   }
 
   test("commit log: a leftover hidden .tmp commit file is ignored") {
     val dir = freshDir("hiddentmp")
     forgeCommit(dir, "commit-a.json",
-      """{"run_id":"r","bucket":1,"row_count":5,"checksum":1,"wall_ms":2,"committed_at":3}""")
+      s"""{"run_id":"r","bucket":1,"row_count":5,"checksum":1,"wall_ms":2,"committed_at":3,$schemaField}""")
     // an append killed before its rename
     forgeCommit(dir, ".commit-b.json.tmp",
-      """{"run_id":"r","bucket":7,"row_count":5,"checksum":1,"wall_ms":2,"committed_at":3}""")
+      s"""{"run_id":"r","bucket":7,"row_count":5,"checksum":1,"wall_ms":2,"committed_at":3,$schemaField}""")
     assert(Checkpoint.committedBuckets(spark, dir) == Set(1))
   }
 
@@ -171,7 +167,6 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
       Checkpoint.manifests(spark, dir).filter(col("run_id") === run)
         .select("bucket", "row_count", "checksum").as[(Int, Long, Long)]
         .collect().map { case (b, n, c) => (b, (n, c)) }.toMap
-    // a bucket committed without files (a restore tombstone) holds (0, 0)
     def assertMatches(dir: String, run: String, path: String): Unit = {
       val m = committed(dir, run)
       val re = recompute(path)
@@ -189,10 +184,8 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
     Checkpoint.writeVersioned(base, col("k") % 8, 8, vdir, "r1")
     Checkpoint.writeVersioned(base.filter(col("k") % 8 < 3).withColumn("s", upper(col("s"))),
       col("k") % 8, 8, vdir, "r2")
-    Checkpoint.compactVersioned(spark, vdir, Seq("r1", "r2"), "c1")
     Checkpoint.writeVersioned(base.filter(col("k") % 8 === 7), col("k") % 8, 8, vdir, "r3")
-    Checkpoint.restoreVersioned(spark, vdir, Seq("r1", "r2", "c1", "r3"), Seq("r1"), "x1")
-    for (run <- Seq("r1", "r2", "c1", "r3", "x1"))
+    for (run <- Seq("r1", "r2", "r3"))
       assertMatches(vdir, run, s"$vdir/data/__run=$run")
   }
 
@@ -364,210 +357,6 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
     assert(numFiles == 8, s"expected the 8 winning files, got $numFiles")
   }
 
-  test("restoreVersioned: rollback as new commit; created-after-target buckets tombstone to empty") {
-    import spark.implicits._
-    val dir = freshDir("rs")
-    // r1 writes buckets 0..5 only; r2 patches buckets 0..2 AND creates 6,7
-    val base = (0 until 1200).filter(_ % 8 < 6)
-      .map(i => (i.toLong, i * 10L)).toDF("k", "v")
-    Checkpoint.writeVersioned(base, col("k") % 8, 8, dir, "r1")
-    val extra = (0 until 1200).filterNot(_ % 8 < 6)
-      .map(i => (i.toLong, i * 10L)).toDF("k", "v")
-    Checkpoint.writeVersioned(
-      base.filter(col("k") % 8 < 3).withColumn("v", col("v") + 1)
-        .unionAll(extra),
-      col("k") % 8, 8, dir, "r2")
-    Checkpoint.restoreVersioned(spark, dir, Seq("r1", "r2"), Seq("r1"), "r3")
-    val want = base.as[(Long, Long)].collect().toMap
-    val got = Checkpoint.readAt(spark, dir, Seq("r1", "r2", "r3"))
-      .as[(Long, Long)].collect().toMap
-    assert(got == want, "post-restore snapshot must equal the r1 target")
-    // history is intact: the pre-restore snapshot still reads the r2 state
-    val r2got = Checkpoint.readAt(spark, dir, Seq("r1", "r2"))
-      .as[(Long, Long)].collect().toMap
-    val r2want = (0 until 1200).filter(i => i % 8 < 6 || i % 8 >= 6).map { i =>
-      val bump = if (i % 8 < 3) 1L else 0L
-      i.toLong -> (i * 10L + bump)
-    }.toMap
-    assert(r2got == r2want, "pre-restore snapshot changed")
-    // the restore touched only the changed buckets: 0..2 rewritten + 6,7
-    // tombstoned — manifest rows for r3 cover exactly those
-    val r3rows = Checkpoint.manifests(spark, dir)
-      .filter(col("run_id") === "r3")
-      .select("bucket", "row_count")
-      .as[(Int, Long)].collect().toMap
-    assert(r3rows.keySet == Set(0, 1, 2, 6, 7), s"restore run wrote $r3rows")
-    assert(r3rows(6) == 0L && r3rows(7) == 0L, "tombstones must be zero-row")
-  }
-
-  test("compaction: winners consolidate into one run, old snapshots intact, corruption refused") {
-    import spark.implicits._
-    val dir = freshDir("cp")
-    val base = (0 until 1200).map(i => (i.toLong, i * 10L)).toDF("k", "v")
-    Checkpoint.writeVersioned(base, col("k") % 8, 8, dir, "r1")
-    Checkpoint.writeVersioned(
-      base.filter(col("k") % 8 < 3).withColumn("v", col("v") + 1),
-      col("k") % 8, 8, dir, "r2")
-    val pre = Checkpoint.readAt(spark, dir, Seq("r1", "r2"))
-      .as[(Long, Long)].collect().toMap
-    val ms = Checkpoint.compactVersioned(spark, dir, Seq("r1", "r2"), "c1")
-    assert(ms.map(_.bucket).sorted == (0 until 8), "one manifest per bucket")
-    // content identical through the compacted lineage
-    val post = Checkpoint.readAt(spark, dir, Seq("r1", "r2", "c1"))
-      .as[(Long, Long)].collect().toMap
-    assert(post == pre)
-    // every winner now resolves to c1: the AS-OF scan reads ONLY __run=c1
-    val asOf = Checkpoint.readAt(spark, dir, Seq("r1", "r2", "c1"))
-    val scan = asOf.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.getOrElse(fail("no FileSourceScanExec in plan"))
-    asOf.collect()
-    assert(scan.metrics("numFiles").value == 8,
-      "compacted snapshot must read exactly the 8 compacted files")
-    // pre-compaction snapshots untouched
-    val r1 = Checkpoint.readAt(spark, dir, Seq("r1")).as[(Long, Long)]
-      .collect().toMap
-    assert(r1 == (0 until 1200).map(i => i.toLong -> (i * 10L)).toMap)
-    // a corrupted winner (manifest says other stats) is refused BEFORE
-    // commit: fake a newer manifest row for bucket 0 with a wrong checksum
-    val mdir = new java.io.File(s"$dir/manifest")
-    val bogus = new java.io.File(mdir, "commit-bogus.json")
-    val w = new java.io.PrintWriter(bogus)
-    w.println("""{"run_id":"r9","bucket":0,"row_count":999,"checksum":1,"wall_ms":0,"committed_at":1}""")
-    w.close()
-    intercept[Checkpoint.CompactionIntegrityViolation] {
-      Checkpoint.compactVersioned(spark, dir, Seq("r1", "r2", "r9"), "c2")
-    }
-    // the refused run committed nothing: c2 resolves to the same content
-    assert(Checkpoint.readAt(spark, dir, Seq("r1", "r2", "c1", "c2"))
-      .as[(Long, Long)].collect().toMap == pre)
-  }
-
-  test("vacuum: retained lineage bit-identical, expired lineages gone, orphan dirs reclaimed") {
-    import spark.implicits._
-    val dir = freshDir("vac")
-    val base = (0 until 1200).map(i => (i.toLong, i * 10L)).toDF("k", "v")
-    Checkpoint.writeVersioned(base, col("k") % 8, 8, dir, "r1")
-    Checkpoint.writeVersioned(
-      base.filter(col("k") % 8 < 3).withColumn("v", col("v") + 1),
-      col("k") % 8, 8, dir, "r2")
-    Checkpoint.compactVersioned(spark, dir, Seq("r1", "r2"), "c1")
-    val pre = Checkpoint.readAt(spark, dir, Seq("c1"))
-      .as[(Long, Long)].collect().toMap
-    val st = Checkpoint.vacuumVersioned(spark, dir, Seq(Seq("c1")))
-    // r1 wrote 8 partitions, r2 wrote 3; c1's 8 survive
-    assert(st.deletedPartitions == 11 && st.livePartitions == 8
-      && st.manifestRows == 8, s"stats: $st")
-    // retained snapshot reads back bit-identically post-GC
-    val post = Checkpoint.readAt(spark, dir, Seq("c1"))
-      .as[(Long, Long)].collect().toMap
-    assert(post == pre)
-    // expired lineages resolve to nothing (their manifest rows are gone)
-    assert(Checkpoint.readAt(spark, dir, Seq("r1")).isEmpty)
-    assert(Checkpoint.readAt(spark, dir, Seq("r1", "r2")).isEmpty)
-    // the FS holds exactly the retained run tree
-    val runs = new java.io.File(s"$dir/data").listFiles()
-      .filter(_.getName.startsWith("__run=")).map(_.getName).toSet
-    assert(runs == Set("__run=c1"), s"surviving run dirs: $runs")
-    // vacuum is idempotent: a second pass deletes nothing
-    val st2 = Checkpoint.vacuumVersioned(spark, dir, Seq(Seq("c1")))
-    assert(st2.deletedPartitions == 0 && st2.livePartitions == 8)
-    assert(Checkpoint.readAt(spark, dir, Seq("c1"))
-      .as[(Long, Long)].collect().toMap == pre)
-  }
-
-  test("readDelta: exactly the changed buckets' rows from the new winners; pruned scan") {
-    import spark.implicits._
-    val dir = freshDir("delta")
-    val base = (0 until 1200).map(i => (i.toLong, i * 10L)).toDF("k", "v")
-    Checkpoint.writeVersioned(base, col("k") % 8, 8, dir, "r1")
-    Checkpoint.writeVersioned(
-      base.filter(col("k") % 8 < 3).withColumn("v", col("v") + 1),
-      col("k") % 8, 8, dir, "r2")
-    Checkpoint.writeVersioned(
-      base.filter(col("k") % 8 === 1).withColumn("v", col("v") + 2),
-      col("k") % 8, 8, dir, "r3")
-    // r1 -> r1+r2: buckets 0..2 changed, rows come from r2 (v+1)
-    val d1 = Checkpoint.readDelta(spark, dir, Seq("r1"), Seq("r1", "r2"))
-    assert(d1.as[(Long, Long)].collect().toMap ==
-      (0 until 1200).filter(_ % 8 < 3).map(i => i.toLong -> (i * 10L + 1)).toMap)
-    // r1+r2 -> r1+r2+r3: only bucket 1 changed, rows from r3 (v+2)
-    val d2 = Checkpoint.readDelta(spark, dir, Seq("r1", "r2"),
-      Seq("r1", "r2", "r3"))
-    assert(d2.as[(Long, Long)].collect().toMap ==
-      (0 until 1200).filter(_ % 8 == 1).map(i => i.toLong -> (i * 10L + 2)).toMap)
-    // nothing-to-old: the whole new lineage is the delta (initial sync)
-    val d0 = Checkpoint.readDelta(spark, dir, Seq.empty, Seq("r1"))
-    assert(d0.count() == 1200)
-    // identical lineages: empty delta, data schema preserved
-    val dEmpty = Checkpoint.readDelta(spark, dir, Seq("r1", "r2"), Seq("r1", "r2"))
-    assert(dEmpty.isEmpty && dEmpty.columns.toSet == Set("k", "v"))
-    // scan touches only the changed partition dirs (1 bucket for d2)
-    val fileScan = d2.queryExecution.executedPlan.collectLeaves().collectFirst {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }.getOrElse(fail("no FileSourceScanExec in plan"))
-    assert(fileScan.partitionFilters.nonEmpty)
-    d2.collect()
-    assert(fileScan.metrics("numFiles").value == 1,
-      s"expected 1 changed-bucket file, got ${fileScan.metrics("numFiles").value}")
-  }
-
-  test("upsertVersioned: updates win, inserts land, only touched buckets rewritten") {
-    import spark.implicits._
-    val dir = freshDir("upsert")
-    val base = (0 until 1200).map(i => (i.toLong, i * 10L)).toDF("k", "v")
-    Checkpoint.writeVersioned(base, col("k") % 8, 8, dir, "r1")
-    // patch: update keys of buckets 1 and 4 (v+1), insert 5 fresh keys
-    // into bucket 2 (k = 1202 + 8i)
-    val patch = base.filter(col("k") % 8 isin (1, 4))
-      .withColumn("v", col("v") + 1)
-      .unionAll((0 until 5).map(i => (1202L + 8 * i, 7L)).toDF("k", "v"))
-    Checkpoint.upsertVersioned(spark, dir, Seq("r1"), patch, Seq("k"),
-      col("k") % 8, 8, "u1")
-    val got = Checkpoint.readAt(spark, dir, Seq("r1", "u1"))
-      .as[(Long, Long)].collect().toMap
-    val want = (0 until 1200).map { i =>
-      i.toLong -> (if (i % 8 == 1 || i % 8 == 4) i * 10L + 1 else i * 10L)
-    }.toMap ++ (0 until 5).map(i => (1202L + 8 * i) -> 7L)
-    assert(got == want)
-    // the new run holds ONLY the three touched bucket dirs
-    val u1Buckets = new java.io.File(s"$dir/data/__run=u1").listFiles()
-      .filter(_.getName.startsWith("__bucket=")).map(_.getName).toSet
-    assert(u1Buckets == Set("__bucket=1", "__bucket=2", "__bucket=4"),
-      s"rewritten buckets: $u1Buckets")
-    // the pre-merge snapshot is untouched (time travel still exact)
-    assert(Checkpoint.readAt(spark, dir, Seq("r1"))
-      .as[(Long, Long)].collect().toMap ==
-      (0 until 1200).map(i => i.toLong -> (i * 10L)).toMap)
-  }
-
-  test("readAsOf: commit-frontier cutoffs reproduce every intermediate snapshot") {
-    import spark.implicits._
-    val dir = freshDir("asof")
-    val base = (0 until 400).map(i => (i.toLong, i * 10L)).toDF("k", "v")
-    Checkpoint.writeVersioned(base, col("k") % 4, 4, dir, "r1")
-    Thread.sleep(10)
-    Checkpoint.writeVersioned(
-      base.filter(col("k") % 4 === 1).withColumn("v", col("v") + 1),
-      col("k") % 4, 4, dir, "r2")
-    Thread.sleep(10)
-    Checkpoint.writeVersioned(
-      base.filter(col("k") % 4 === 1).withColumn("v", col("v") + 2),
-      col("k") % 4, 4, dir, "r3")
-    def frontier(run: String) = Checkpoint.manifests(spark, dir)
-      .filter(col("run_id") === run).agg(max("committed_at")).head().getLong(0)
-    def snap(ts: Long) = Checkpoint.readAsOf(spark, dir, ts)
-      .as[(Long, Long)].collect().toMap
-    def want(bump: Long) = (0 until 400).map { i =>
-      i.toLong -> (if (i % 4 == 1) i * 10L + bump else i * 10L)
-    }.toMap
-    assert(snap(frontier("r1")) == want(0))
-    assert(snap(frontier("r2")) == want(1))
-    assert(snap(Long.MaxValue) == want(2))
-    // before any commit: empty
-    assert(Checkpoint.readAsOf(spark, dir, 0L).isEmpty)
-  }
-
   test("versioned readers resolve snapshots on the driver: at most the footer-read job") {
     import spark.implicits._
     val dir = freshDir("vjobs")
@@ -576,20 +365,11 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
     Checkpoint.writeVersioned(
       base.filter(col("k") % 4 === 1).withColumn("v", col("v") + 1),
       col("k") % 4, 4, dir, "r2")
-    // building each reader may read Parquet footers for the schema (one
-    // job); resolving the winners must not add any
-    val reads = Seq(
-      "readAt" -> (() => Checkpoint.readAt(spark, dir, Seq("r1", "r2"))),
-      "readDelta" -> (() => Checkpoint.readDelta(spark, dir, Seq("r1"), Seq("r1", "r2"))),
-      "readAsOf" -> (() => Checkpoint.readAsOf(spark, dir, Long.MaxValue)))
-    for ((name, read) <- reads) {
-      val (df, ev) = Listened(spark.sparkContext)(read())
-      assert(ev.jobs <= 1, s"$name launched ${ev.jobs} Spark jobs before an action")
-      // the r1+r2 snapshot; the delta from r1 is bucket 1 alone
-      val want = (0 until 400).filter(i => name != "readDelta" || i % 4 == 1)
-        .map(i => i.toLong -> (i * 10L + (if (i % 4 == 1) 1L else 0L))).toMap
-      assert(df.as[(Long, Long)].collect().toMap == want, name)
-    }
+    // the winners and the scan schema both come from the commit log
+    val (df, ev) = Listened(spark.sparkContext)(Checkpoint.readAt(spark, dir, Seq("r1", "r2")))
+    assert(ev.jobs == 0, s"readAt launched ${ev.jobs} Spark jobs before an action")
+    val want = (0 until 400).map(i => i.toLong -> (i * 10L + (if (i % 4 == 1) 1L else 0L))).toMap
+    assert(df.as[(Long, Long)].collect().toMap == want)
   }
 
   test("schema evolution: a run that adds a column reads merged, old rows null") {
@@ -600,7 +380,7 @@ class CheckpointSpec extends AnyFunSuite with BeforeAndAfterAll with TimeLimits 
     Checkpoint.writeVersioned(
       base.filter(col("k") % 4 === 1).withColumn("w", col("k") * 2),
       col("k") % 4, 4, dir, "r2")
-    val got = Checkpoint.readAt(spark, dir, Seq("r1", "r2"), mergeSchema = true)
+    val got = Checkpoint.readAt(spark, dir, Seq("r1", "r2"))
     assert(got.columns.toSet == Set("k", "v", "w"))
     val m = got.select("k", "v", "w").as[(Long, Long, Option[Long])]
       .collect().map(r => r._1 -> ((r._2, r._3))).toMap

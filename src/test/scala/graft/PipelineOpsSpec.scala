@@ -1081,24 +1081,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "pair sets differ (or a pair was emitted from more than one cell)")
   }
 
-  test("kdeSmooth equals a driver-side 3x3 integer convolution") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(17)
-    val pts = (0 until 500).map(_ =>
-      (rnd.nextDouble() * 2 - 1, rnd.nextDouble() * 2 - 1))
-    val got = ops.Rasterize.kdeSmooth(pts.toDF("lng", "lat"), cellsPerDeg = 8)
-      .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    val counts = pts.groupBy { case (x, y) =>
-      (math.floor(x * 8).toLong, math.floor(y * 8).toLong)
-    }.map { case (c, l) => c -> l.size.toLong }
-    val want = collection.mutable.Map[(Long, Long), Long]().withDefaultValue(0L)
-    for (((cx, cy), n) <- counts; di <- -1 to 1; dj <- -1 to 1)
-      want((cx + di, cy + dj)) += n * (2 - math.abs(di)) * (2 - math.abs(dj))
-    assert(got == want.toMap)
-    // total kernel mass is 16x the point count (sum over the 3x3 kernel)
-    assert(got.values.sum == 16L * pts.size)
-  }
-
   test("dwellRuns finds exactly the maximal same-cell runs of length >= minRun") {
     import spark.implicits._
     val ts0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
@@ -1115,39 +1097,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.length == 2)
     assert(got(0) == (1L, 10L, 3L, at(0), at(2)), "first A-run")
     assert(got(1) == (1L, 10L, 4L, at(4), at(7)), "second A-run (after the B gap)")
-  }
-
-  test("convexHull: minimal vertex set equals the Caratheodory brute force") {
-    val rnd = new scala.util.Random(41)
-    // grids force duplicates and collinear triples — the degenerate cases
-    for (trial <- 0 until 30) {
-      val n = 3 + rnd.nextInt(20)
-      val xs = Array.fill(n)(rnd.nextInt(10).toLong)
-      val ys = Array.fill(n)(rnd.nextInt(10).toLong)
-      val hull = graft.geo.Hull.convexHull(xs, ys)
-        .map(i => (xs(i), ys(i))).toSet
-      val pts = (xs zip ys).distinct
-      def cross(p: (Long, Long), a: (Long, Long), b: (Long, Long)): Long =
-        (a._1 - p._1) * (b._2 - p._2) - (a._2 - p._2) * (b._1 - p._1)
-      val expected = pts.filter { p =>
-        val others = pts.filter(_ != p)
-        val inTri = others.exists(a => others.exists(b => others.exists { c =>
-          val (d1, d2, d3) = (cross(p, a, b), cross(p, b, c), cross(p, c, a))
-          (d1 > 0 && d2 > 0 && d3 > 0) || (d1 < 0 && d2 < 0 && d3 < 0)
-        }))
-        val onSeg = others.exists(a => others.exists(b =>
-          cross(p, a, b) == 0 &&
-            (p._1 - a._1) * (b._1 - p._1) + (p._2 - a._2) * (b._2 - p._2) > 0))
-        !inTri && !onSeg
-      }.toSet
-      assert(hull == expected, s"trial $trial: $hull vs $expected")
-    }
-    // degenerates: all-equal, all-collinear
-    assert(graft.geo.Hull.convexHull(Array(5L, 5L, 5L), Array(2L, 2L, 2L))
-      .map(i => (5L, 2L)).toSet == Set((5L, 2L)))
-    val cxs = Array(0L, 1L, 2L, 3L); val cys = Array(0L, 2L, 4L, 6L)
-    assert(graft.geo.Hull.convexHull(cxs, cys).map(i => (cxs(i), cys(i))).toSet
-      == Set((0L, 0L), (3L, 6L)))
   }
 
   test("pagerank: 3 rounds on a hand-walked 4-node graph (with a pure-source node)") {
@@ -1607,38 +1556,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       ("b", 1000L) -> (2L, false)))
   }
 
-  test("lineDensity: DDA trace matches brute force; counts are per-line distinct") {
-    import spark.implicits._
-    val verts = Seq(
-      // line 1: a diagonal crossing several cells, revisiting one cell
-      (1L, 0L, 0.005, 0.005), (1L, 1L, 0.055, 0.035), (1L, 2L, 0.005, 0.005),
-      // line 2: axis-aligned east, overlapping line 1's first cell
-      (2L, 0L, 0.001, 0.001), (2L, 1L, 0.045, 0.001))
-      .toDF("line_id", "seq", "lng", "lat")
-    val got = graft.ops.Rasterize.lineDensity(verts, 100)
-      .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    // brute force: same integer DDA
-    def trace(x0: Long, y0: Long, x1: Long, y1: Long): Set[(Long, Long)] = {
-      val steps = math.max(1L, math.max(math.abs(x1 - x0), math.abs(y1 - y0)))
-      (0L to steps).map { i =>
-        def lerp(a: Long, b: Long) =
-          if (b >= a) a + (b - a) * i / steps else a - (a - b) * i / steps
-        (lerp(x0, x1), lerp(y0, y1))
-      }.toSet
-    }
-    def q(v: Double) = math.floor(v * 100).toLong
-    val lines = Seq(
-      1L -> Seq((0.005, 0.005), (0.055, 0.035), (0.005, 0.005)),
-      2L -> Seq((0.001, 0.001), (0.045, 0.001)))
-    val want = lines.flatMap { case (lid, vs) =>
-      vs.zip(vs.drop(1)).flatMap { case ((ax, ay), (bx, by)) =>
-        trace(q(ax), q(ay), q(bx), q(by)) }.toSet.map((c: (Long, Long)) => c -> lid)
-    }.groupBy(_._1).map { case (c, ls) => c -> ls.map(_._2).distinct.size.toLong }
-    assert(got == want)
-    // the shared start cell counts both lines once each
-    assert(got((0L, 0L)) == 2L)
-  }
-
   test("mixtureWeights: exact ppm shares, uniform target, ceil epochs") {
     import spark.implicits._
     val docs = Seq(
@@ -1867,16 +1784,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(4L) == ((2L, 2L, 4L))) // nothing dropped
   }
 
-  test("bpePairStats: pair counts and deterministic ranking") {
-    import spark.implicits._
-    val docs = Seq((1L, "aab ab"), (2L, "b aab")).toDF("doc_id", "text")
-    // pairs: aab -> aa, ab (x2 docs); ab -> ab; b too short
-    // counts: ab = 3 (two aab + one ab), aa = 2
-    val got = graft.ops.TextDedup.bpePairStats(docs, topK = 10)
-      .as[(String, Long, Int)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(got == Map("ab" -> ((3L, 1)), "aa" -> ((2L, 2))))
-  }
-
   test("activeSegments: hangover bridges 1-gaps, splits larger, per-media") {
     import spark.implicits._
     // media 1: actives 0,1,2,4 (the 1-hole at 3 is bridged by gap=1),
@@ -1969,10 +1876,9 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     if (base.head != base.head.reverse) assert(got((0L, 8L)) > 0L)
   }
 
-  test("BitmapDistinctAgg equals countDistinct; Skyline.skyline2d equals dominance brute force") {
+  test("BitmapDistinctAgg equals countDistinct") {
     import spark.implicits._
     val rnd = new scala.util.Random(17)
-    // bitmap distinct
     val rows = (0 until 2000).map(_ => (s"g${rnd.nextInt(4)}", rnd.nextInt(512).toLong))
     val got = rows.toDF("g", "id").as[(String, Long)]
       .groupByKey(_._1).mapValues(_._2)
@@ -1980,47 +1886,5 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().toMap
     val want = rows.groupBy(_._1).map { case (g, rs) => g -> rs.map(_._2).distinct.size.toLong }
     assert(got == want)
-    // skyline on random pairs (with duplicates pre-aggregated)
-    val pts = (0 until 400).map(_ => (rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
-      .distinct
-    val sky = graft.ops.Skyline.skyline2d(
-        pts.toDF("x", "y").repartition(7), "x", "y")
-      .as[(Long, Long)].collect().toSet
-    val ref = pts.filter { case (x, y) =>
-      !pts.exists { case (sx, sy) =>
-        sx <= x && sy <= y && (sx < x || sy < y) }
-    }.toSet
-    assert(sky == ref)
-  }
-
-  test("Skyline.skyline2d equals the single-window front on anti-correlated and random input, with no bounded-key window") {
-    import spark.implicits._
-    import org.apache.spark.sql.catalyst.expressions.{Literal, Pmod}
-    val rnd = new scala.util.Random(29)
-    val antiCorrelated = (0 until 500).map(i => (i.toLong, (499 - i).toLong))
-    val random = (0 until 2000).map(_ => (rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))
-      .distinct
-    for ((name, pts) <- Seq("anti-correlated" -> antiCorrelated, "random" -> random)) {
-      val in = pts.toDF("x", "y").repartition(7)
-      // the front as the single global window states it: y below the min
-      // y of every row before it in (x, y) order
-      val oracle = in.withColumn("m", min("y").over(
-          org.apache.spark.sql.expressions.Window.orderBy("x", "y")
-            .rowsBetween(Long.MinValue, -1)))
-        .filter(col("m").isNull || col("y") < col("m"))
-        .select("x", "y").as[(Long, Long)].collect().toSet
-      val sky = graft.ops.Skyline.skyline2d(in, "x", "y")
-      assert(sky.as[(Long, Long)].collect().toSet == oracle, name)
-      if (name == "anti-correlated") assert(oracle.size == pts.size)
-      // no window keyed by the constant-zero marker, which sends every row
-      // to one task; the analyzer moves a window's partition expression
-      // into the projection below it, so look for the marker anywhere
-      val plan = sky.queryExecution.optimizedPlan
-      val marker = plan.flatMap(_.expressions).exists(_.exists {
-        case p: Pmod => p.right == Literal(1)
-        case _ => false
-      })
-      assert(!marker, s"$name: ${plan}")
-    }
   }
 }

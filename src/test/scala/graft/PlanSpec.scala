@@ -210,11 +210,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
         .toDF("k", "ts", "v")
       audit(graft.ops.AsofJoin.gapFill(ev, "k", col("ts"), col("v"), 100L),
         4, "gapFill")
-      // line density: line window + distinct + cell rollup
-      val verts = (0 until 300).map(i =>
-        (i.toLong % 10, i.toLong, -119.0 + (i % 30) * 0.001, 36.0 + (i % 7) * 0.001))
-        .toDF("line_id", "seq", "lng", "lat")
-      audit(graft.ops.Rasterize.lineDensity(verts, 100), 3, "lineDensity")
       // speed flags / pointAlong / resample: ONE traj window exchange each
       val pts = (0 until 200).map(i =>
         (i.toLong % 5, 1000000L + i * 1000L, i.toLong,
@@ -647,27 +642,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p2 = snap.queryExecution.executedPlan.toString
     assert(!p2.contains("CartesianProduct") && !p2.contains("BroadcastNestedLoop"),
       s"snap fell back to all-pairs:\n$p2")
-  }
-
-  test("kdeSmooth shuffles cells, not points: both exchanges key-bounded") {
-    import spark.implicits._
-    val pts = (0 until 20000).map(i =>
-      ((i % 97) * 0.01, (i % 89) * 0.01)).toDF("lng", "lat")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val out = graft.ops.Rasterize.kdeSmooth(pts, cellsPerDeg = 16)
-      assert(out.collect().nonEmpty)
-      val exchanges = out.queryExecution.executedPlan.collect {
-        case e: ShuffleExchangeExec => e
-      }
-      // one count shuffle + one smoothing shuffle; the 9x fan-out sits
-      // BETWEEN them (on aggregated cells), never on the raw point scan
-      assert(exchanges.size == 2,
-        s"expected 2 exchanges:\n${out.queryExecution.executedPlan}")
-      val plan = out.queryExecution.executedPlan.toString
-      assert(plan.contains("partial_count") || plan.contains("HashAggregate"),
-        s"count must partial-aggregate before the first exchange:\n$plan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
   test("colocation: bucketed self-equi-join on (cell, tb), never all-pairs") {

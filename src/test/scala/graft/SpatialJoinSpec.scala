@@ -465,134 +465,6 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(want.nonEmpty, "degenerate: no intersecting pairs generated")
   }
 
-  test("polygonJoinWithArea overlap areas match JTS intersection areas") {
-    import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
-    import spark.implicits._
-    val gf = new GeometryFactory()
-    val r3 = new scala.util.Random(13)
-    def tri(seed: Int, n: Int): Seq[(Long, Array[Double], Array[Double])] =
-      (0 until n).map { i =>
-        val cx = -120.0 + r3.nextDouble() * 2.0
-        val cy = 36.0 + r3.nextDouble()
-        val w = 0.03 + r3.nextDouble() * 0.2
-        val h = 0.03 + r3.nextDouble() * 0.2
-        (i.toLong + seed, Array(cx, cx - w, cx + w), Array(cy + h, cy - h, cy - h))
-      }
-    val as = tri(0, 50); val bs = tri(1000, 50)
-    val got = graft.ops.SpatialJoin.polygonJoinWithArea(
-        as.toDF("poly_id", "xs", "ys"), bs.toDF("poly_id", "xs", "ys"), level = 9)
-      .as[(Long, Long, Double)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap
-    assert(got.nonEmpty, "degenerate: no intersecting pairs")
-    def jts(xs: Array[Double], ys: Array[Double]) =
-      gf.createPolygon((xs.indices :+ 0).map(j => new Coordinate(xs(j), ys(j))).toArray)
-    val aMap = as.map(t => t._1 -> jts(t._2, t._3)).toMap
-    val bMap = bs.map(t => t._1 -> jts(t._2, t._3)).toMap
-    got.foreach { case ((pa, pb), area) =>
-      val want = aMap(pa).intersection(bMap(pb)).getArea
-      assert(math.abs(area - want) < 1e-9, s"pair ($pa,$pb): $area vs $want")
-    }
-    // completeness: every JTS pair with STRICTLY positive overlap is present
-    for ((ia, ax, ay) <- as; (ib, bx, by) <- bs) {
-      val w = jts(ax, ay).intersection(jts(bx, by)).getArea
-      if (w > 1e-12)
-        assert(got.contains((ia, ib)), s"missing pair ($ia,$ib) with area $w")
-    }
-  }
-
-  test("cellAreaWeights: JTS per-cell equality and exact-partition invariant") {
-    import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
-    import spark.implicits._
-    val gf = new GeometryFactory()
-    val r5 = new scala.util.Random(23)
-    val polys = (0 until 40).map { i =>
-      val cx = -120.0 + r5.nextDouble() * 2.0
-      val cy = 36.0 + r5.nextDouble()
-      val w = 0.03 + r5.nextDouble() * 0.3
-      val h = 0.03 + r5.nextDouble() * 0.3
-      (i.toLong, Array(cx, cx - w, cx + w), Array(cy + h, cy - h, cy - h))
-    }
-    val cells = 16
-    val got = graft.ops.Rasterize.cellAreaWeights(
-        polys.toDF("poly_id", "xs", "ys"), cells)
-      .as[(Long, Int, Int, Double)].collect()
-    assert(got.nonEmpty)
-    def jts(xs: Array[Double], ys: Array[Double]) =
-      gf.createPolygon((xs.indices :+ 0).map(j => new Coordinate(xs(j), ys(j))).toArray)
-    val polyMap = polys.map(t => t._1 -> (jts(t._2, t._3), t._2, t._3)).toMap
-    got.foreach { case (pid, cx, cy, area) =>
-      val rect = gf.createPolygon(Array(
-        new Coordinate(cx.toDouble / cells, cy.toDouble / cells),
-        new Coordinate((cx + 1).toDouble / cells, cy.toDouble / cells),
-        new Coordinate((cx + 1).toDouble / cells, (cy + 1).toDouble / cells),
-        new Coordinate(cx.toDouble / cells, (cy + 1).toDouble / cells),
-        new Coordinate(cx.toDouble / cells, cy.toDouble / cells)))
-      val want = polyMap(pid)._1.intersection(rect).getArea
-      // same tolerance as the polygonJoinWithArea JTS check — JTS computes
-      // the intersection by a different pipeline, ulp drift is expected
-      assert(math.abs(area - want) < 1e-9, s"poly $pid cell ($cx,$cy): $area vs $want")
-      assert(area <= 1.0 / (cells.toDouble * cells) + 1e-15, "cell overflow")
-    }
-    // the cells PARTITION the polygon: per-poly sum of cell areas equals
-    // the polygon's own area
-    val sums = got.groupBy(_._1).view.mapValues(_.map(_._4).sum)
-    polys.foreach { case (pid, xs, ys) =>
-      val whole = graft.geo.ConvexClip.area(xs, ys)
-      assert(math.abs(sums.getOrElse(pid, 0.0) - whole) < 1e-10,
-        s"poly $pid: cells sum ${sums.getOrElse(pid, 0.0)} vs area $whole")
-    }
-  }
-
-  test("polygonJoinWithArea handles CONCAVE clip rings (ear-clip): JTS equality") {
-    import org.locationtech.jts.geom.{Coordinate, GeometryFactory}
-    import spark.implicits._
-    val gf = new GeometryFactory()
-    val r4 = new scala.util.Random(17)
-    // subject side: random triangles (as before)
-    val as = (0 until 40).map { i =>
-      val cx = -120.0 + r4.nextDouble() * 2.0
-      val cy = 36.0 + r4.nextDouble()
-      val w = 0.05 + r4.nextDouble() * 0.25
-      val h = 0.05 + r4.nextDouble() * 0.25
-      (i.toLong, Array(cx, cx - w, cx + w), Array(cy + h, cy - h, cy - h))
-    }
-    // clip side: CONCAVE fixtures — L-shapes (CCW) and 5-point stars (CW,
-    // exercising the winding normalization)
-    val bs = (0 until 40).map { i =>
-      val cx = -120.0 + r4.nextDouble() * 2.0
-      val cy = 36.0 + r4.nextDouble()
-      val s = 0.05 + r4.nextDouble() * 0.2
-      if (i % 2 == 0) {
-        // L-shape, CCW
-        (1000L + i,
-          Array(cx, cx + s, cx + s, cx + s * 0.4, cx + s * 0.4, cx),
-          Array(cy, cy, cy + s * 0.4, cy + s * 0.4, cy + s, cy + s))
-      } else {
-        // 5-point star, CW (reversed CCW construction)
-        val pts = (0 until 10).map { k =>
-          val ang = math.Pi / 2 + k * math.Pi / 5
-          val rr = if (k % 2 == 0) s else s * 0.4
-          (cx + rr * math.cos(ang), cy + rr * math.sin(ang))
-        }.reverse
-        (1000L + i, pts.map(_._1).toArray, pts.map(_._2).toArray)
-      }
-    }
-    val got = graft.ops.SpatialJoin.polygonJoinWithArea(
-        as.toDF("poly_id", "xs", "ys"), bs.toDF("poly_id", "xs", "ys"), level = 9)
-      .as[(Long, Long, Double)].collect()
-      .map(t => (t._1, t._2) -> t._3).toMap
-    assert(got.nonEmpty, "degenerate: no intersecting pairs")
-    assert(got.values.exists(_ > 0), "degenerate: all-zero areas")
-    def jts(xs: Array[Double], ys: Array[Double]) =
-      gf.createPolygon((xs.indices :+ 0).map(j => new Coordinate(xs(j), ys(j))).toArray)
-    val aMap = as.map(t => t._1 -> jts(t._2, t._3)).toMap
-    val bMap = bs.map(t => t._1 -> jts(t._2, t._3)).toMap
-    got.foreach { case ((pa, pb), area) =>
-      val want = aMap(pa).intersection(bMap(pb)).getArea
-      assert(math.abs(area - want) < 1e-9, s"pair ($pa,$pb): $area vs $want")
-    }
-  }
-
   test("salted PIP with >1024 hot cells takes the broadcast-set path and stays exact") {
     import spark.implicits._
     // hotThreshold=0 makes every occupied cell hot: ~2000 distinct cells at
@@ -610,5 +482,4 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select("point_id", "poly_id").as[(Long, Long)].collect().toSet
     assert(got == expect && got.nonEmpty)
   }
-
 }
