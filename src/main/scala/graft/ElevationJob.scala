@@ -1,9 +1,10 @@
 package graft
 
-import graft.core.TileRow
+import graft.core.{FeatureRow, TileRow}
 import graft.ops.{Elevation, TileIndex}
 import graft.sources.GeoJsonSource
 import graft.synth.TileGen
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 /** The reference's `/geojson` endpoint as a spark-submit batch job
@@ -20,19 +21,19 @@ import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
   * runs [[graft.table.TileStore.ingestHgt]] over its HGT archive and passes
   * the store directory.
   *
-  * One pass over a tile store runs 4 Spark jobs, and every one of them
-  * moves tile or feature data:
-  *  1. collect the tiles for the broadcast [[TileIndex]] (the store is read
-  *     with its known schema, so no footer-inference job precedes it);
-  *  2. the shuffle map stage of the bucketed write: read the documents, add
+  * One pass over a tile store runs 3 Spark jobs, and every one of them
+  * moves feature data:
+  *  1. the shuffle map stage of the bucketed write: read the documents, add
   *     elevations and route the features to their buckets;
-  *  3. the bucketed write, whose tasks also count each bucket's rows and
+  *  2. the bucketed write, whose tasks also count each bucket's rows and
   *     checksum for its manifest row;
-  *  4. the GeoJSON-lines write of the committed table, read with the schema
+  *  3. the GeoJSON-lines write of the committed table, read with the schema
   *     recorded in the commit log.
-  * The commit log is written and read on the driver, and the summary's
-  * `tiles` and `features` come from the index and the commit log, so none
-  * of those is a job.
+  * The broadcast [[TileIndex]] is built from the store's file listing and
+  * each task loads the tiles it probes, so no job collects tiles. The
+  * commit log is written and read on the driver, and the summary's `tiles`
+  * and `features` come from the index and the commit log, so none of those
+  * is a job either.
   */
 object ElevationJob {
   def main(args: Array[String]): Unit = {
@@ -54,6 +55,18 @@ object ElevationJob {
       else table.TileStore.readTiles(spark, tileArg)
 
     val t0 = System.nanoTime()
+    val (index, nFeatures) = run(features, tiles, outDir, runId = s"elevjob-${t0}")
+    val secs = (System.nanoTime() - t0) / 1e9
+    println(f"""{"job":"elevation","features":$nFeatures,"tiles":${index.value.size},"sec":$secs%.3f,"buckets":8}""")
+    spark.stop()
+  }
+
+  /** One pass of the job into `outDir`: the index it broadcast, and the
+    * number of features it committed.
+    */
+  private[graft] def run(features: Dataset[FeatureRow], tiles: Dataset[TileRow],
+                         outDir: String, runId: String): (Broadcast[TileIndex], Long) = {
+    val spark = features.sparkSession
     val index = TileIndex.broadcastIndex(tiles)
     val out = Elevation.addElevation(features, index)
     // checkpointed output (north rule): enriched features commit per hash
@@ -61,15 +74,12 @@ object ElevationJob {
     // resumes at bucket granularity, then the GeoJSON-lines render reads the
     // committed snapshot
     table.Checkpoint.writeResumable(out.toDF(), Seq("feature_id"),
-      nBuckets = 8, s"$outDir/table", runId = s"elevjob-${t0}")
+      nBuckets = 8, s"$outDir/table", runId = runId)
     val committed = table.Checkpoint.read(spark, s"$outDir/table")
-      .as[graft.core.FeatureRow](Encoders.product[graft.core.FeatureRow])
+      .as[FeatureRow](Encoders.product[FeatureRow])
     GeoJsonSource.writeLines(committed, s"$outDir/features")
     // counts from the commit log the driver just wrote (no Spark job) rather
     // than re-parsing the output
-    val nFeatures = table.Checkpoint.committedRowCount(spark, s"$outDir/table")
-    val secs = (System.nanoTime() - t0) / 1e9
-    println(f"""{"job":"elevation","features":$nFeatures,"tiles":${index.value.size},"sec":$secs%.3f,"buckets":8}""")
-    spark.stop()
+    (index, table.Checkpoint.committedRowCount(spark, s"$outDir/table"))
   }
 }

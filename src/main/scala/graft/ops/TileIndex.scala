@@ -1,52 +1,66 @@
 package graft.ops
 
 import graft.core.{DecodedTile, TileCodec, TileRow}
+import graft.geo.TileKey
 import graft.raster.Bilinear
+import graft.table.{TileFile, TileStore}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.graftshim.GraftColumns
 import org.apache.spark.sql.types.{DataType, DoubleType}
-import org.apache.spark.sql.{Column, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, Dataset}
+import org.apache.spark.util.SerializableConfiguration
+
+import java.util.concurrent.atomic.{AtomicInteger, AtomicReferenceArray}
 
 /** Broadcast tile-pyramid index (north star: "assigns every geometry ... via
-  * a broadcast tile-pyramid index"): the raster side of the point→tile join
-  * shipped to executors ONCE as encoded payloads, decoded lazily ONCE per
-  * executor JVM, and probed per-row without materializing the `bytes` column
-  * into join output rows.
+  * a broadcast tile-pyramid index"): the raster side of the point→tile join,
+  * probed per row without materializing the `bytes` column into join output
+  * rows.
+  *
+  * What is broadcast depends on where the tiles come from. An index over a
+  * bare [[graft.table.TileStore.readTiles]] scan ships only a reference to
+  * each tile file (path, length, mtime) and the Hadoop configuration; an
+  * index over any other tile set ships the rows. Either way an executor
+  * loads a tile on its first probe, decodes it once, and keeps it in a
+  * direct-address slot over the 64,800 1° cells (no hash, no boxed key).
+  * This is the reference's per-process tile cache
+  * (src/fetchTileData.ts:19-33,50-84) in executor form: the slot lock
+  * coalesces concurrent first probes, there is no eviction, and the cache
+  * lives in this instance, so it lasts as long as its broadcast (one job or
+  * endpoint call) and holds only the tiles that executor probed. The
+  * missing tile ⇒ 0 rule (src/elevation/getElevation.ts:22-28) lives in
+  * [[TileIndex.elevation]].
   *
   * Why not a plain broadcast hash join on `bytes`: Spark's join output
   * materializes each probe row, and reading a BinaryType column copies the
   * full payload (`UnsafeRow.getBinary`) — a 2.9 MB memcpy per coordinate,
   * i.e. ~3 TB of copying per million rows. The index keeps payloads out of
-  * the row entirely; the probe is 4 int16 reads (`Bilinear`). This replaces
-  * the reference's per-process LRU tile cache (src/fetchTileData.ts:50-84):
-  * the broadcast is the cache, request coalescing is free, and the missing
-  * tile ⇒ 0 rule (src/elevation/getElevation.ts:22-28) lives in
-  * [[TileIndex.elevation]].
+  * the row entirely; the probe is 4 int16 reads (`Bilinear`).
   */
-final class TileIndex(rows: Array[TileRow]) extends Serializable {
+final class TileIndex private (rows: Array[TileRow], files: Array[TileFile],
+                               conf: SerializableConfiguration) extends Serializable {
 
-  /** Decoded once per JVM on first probe (executor-local, like the
-    * reference's LRU but immutable and complete).
-    */
-  @transient private lazy val decoded: java.util.HashMap[Int, DecodedTile] = {
-    val m = new java.util.HashMap[Int, DecodedTile](rows.length * 2)
-    rows.foreach { t =>
-      val d = TileCodec.decode(t)
-      val k = TileIndex.key(d.swLng, d.swLat)
-      if (k >= 0) m.put(k, d)
-    }
-    m
-  }
+  /** An index over tile rows held in memory. */
+  def this(rows: Array[TileRow]) = this(rows, Array.empty, null)
 
-  def size: Int = rows.length
+  /** The probe state, built by this instance's first probe in each JVM. */
+  @transient private lazy val slots = new TileIndex.Slots(rows, files, conf)
+
+  /** Tiles in the index: its rows, or its store's tile files. */
+  def size: Int = rows.length + files.length
+
+  /** Tiles this instance has loaded and decoded in this JVM. */
+  private[graft] def loads: Int = slots.loads.get
 
   /** The decoded tile with SW corner (swLng, swLat), or null: the missing
     * tile of F8, and every corner off the 1° grid.
     */
-  private def tileAt(swLng: Double, swLat: Double): DecodedTile =
-    decoded.get(TileIndex.key(swLng, swLat))
+  private def tileAt(swLng: Double, swLat: Double): DecodedTile = {
+    val k = TileIndex.key(swLng, swLat)
+    if (k < 0) null else slots.tile(k)
+  }
 
   /** Bilinear elevation at (lng, lat); missing tile ⇒ sea level 0 (F8). */
   def elevation(lng: Double, lat: Double): Double = {
@@ -238,6 +252,53 @@ final class TileIndex(rows: Array[TileRow]) extends Serializable {
 }
 
 object TileIndex {
+  /** The 1° cells of the grid: 360 × 180. */
+  private val Cells = 64800
+
+  /** Per-JVM probe state of one index: for each cell, the tile's source (a
+    * [[TileRow]] or a [[TileFile]], also the cell's lock) and, once loaded,
+    * the decoded tile. A source key repeated keeps the last row, as the
+    * collected rows' map did.
+    */
+  private final class Slots(rows: Array[TileRow], files: Array[TileFile],
+                            conf: SerializableConfiguration) {
+    private val sources = new Array[AnyRef](Cells)
+    private val tiles = new AtomicReferenceArray[DecodedTile](Cells)
+    val loads = new AtomicInteger
+    rows.foreach(t => put(t.image_id, t))
+    files.foreach(f => put(f.tileKey, f))
+
+    private def put(tileKey: String, source: AnyRef): Unit = {
+      val (swLng, swLat) = TileKey.toDegrees(tileKey)
+      val k = key(swLng, swLat)
+      if (k >= 0) sources(k) = source
+    }
+
+    /** Cell k's decoded tile, or null when the cell has no tile. */
+    def tile(k: Int): DecodedTile = {
+      val d = tiles.get(k)
+      if (d != null) d else load(k)
+    }
+
+    /** Cell k's tile, loaded and decoded by the first caller. */
+    private def load(k: Int): DecodedTile = {
+      val source = sources(k)
+      if (source == null) null
+      else source.synchronized {
+        var d = tiles.get(k)
+        if (d == null) {
+          d = TileCodec.decode(source match {
+            case t: TileRow  => t
+            case f: TileFile => TileStore.readTile(f, conf.value)
+          })
+          tiles.set(k, d)
+          loads.incrementAndGet()
+        }
+        d
+      }
+    }
+  }
+
   /** Int key of the 1° tile with floored SW corner (swLng, swLat): a
     * bijection from the grid [−180, 179] × [−90, 89] onto [0, 64800), and
     * -1 (no tile) for any other corner, NaN and ±∞ included. Lng 180.0 is
@@ -255,14 +316,22 @@ object TileIndex {
   private[ops] val d8dc: Array[Int] = Array(1, 1, 0, -1, -1, -1, 0, 1)
   private[ops] val d8dr: Array[Int] = Array(0, 1, 1, 1, 0, -1, -1, -1)
 
-  /** Collect + broadcast the tile table. Sized for bounded tile sets (the
-    * common case: a query bbox covers few tiles; a whole-planet 3″ store is
-    * ~64k land tiles ≈ 180 GB encoded — beyond that use
-    * [[Elevation.lookupCogroup]], the shuffle path).
+  /** Broadcast an index of `tiles`. A bare [[TileStore.readTiles]] scan
+    * whose every tile_key holds one file is indexed from the store's file
+    * listing: no Spark job runs, and the broadcast is a few hundred bytes
+    * per tile plus the Hadoop configuration, whatever the store's size.
+    * Any other tile set (in-memory rows, filtered or derived frames, a
+    * store with a tile split over files) is collected to the driver and
+    * broadcast as encoded rows, so it must fit in driver memory: ~2.9 MB
+    * per 3″ tile, ~26 MB at 1″.
     */
   def broadcastIndex(tiles: Dataset[TileRow]): Broadcast[TileIndex] = {
-    val rows = tiles.collect()
-    tiles.sparkSession.sparkContext.broadcast(new TileIndex(rows))
+    val index = TileStore.tileFiles(tiles) match {
+      case Some((files, conf)) =>
+        new TileIndex(Array.empty, files.toArray, new SerializableConfiguration(conf))
+      case None => new TileIndex(tiles.collect())
+    }
+    tiles.sparkSession.sparkContext.broadcast(index)
   }
 }
 

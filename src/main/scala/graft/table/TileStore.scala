@@ -2,9 +2,25 @@ package graft.table
 
 import graft.core.TileRow
 import graft.geo.{S2, TileKey}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.ColumnIOFactory
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+
+import scala.jdk.CollectionConverters._
+
+/** One tile's data file in a tile store, as the store's listing gave it. */
+final case class TileFile(tileKey: String, path: String, length: Long, mtime: Long)
 
 /** On-disk tile table with scan-level cell-range pruning (north star:
   * "Catalyst-pushable cell-range predicates").
@@ -46,13 +62,89 @@ object TileStore {
     "image_id string, bytes binary, w int, h int, fmt string, caption string, " +
       "phash bigint, cell8 bigint, tile_key string")
 
+  private val RowColumns = Seq("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+
   /** Read back as the typed input-table row (drops partition duplicates).
     * The schema is given, so no Spark job infers it from Parquet footers.
     */
   def readTiles(spark: SparkSession, dir: String): Dataset[TileRow] =
     spark.read.schema(TableSchema).parquet(dir)
-      .select("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+      .select(RowColumns.map(col): _*)
       .as[TileRow](Encoders.product[TileRow])
+
+  /** The tile files behind `tiles` and the Hadoop configuration to read
+    * them with, when `tiles` is a bare [[readTiles]] scan: its optimized
+    * plan projects the [[TileRow]] columns from one Parquet relation
+    * partitioned by exactly (cell8, tile_key), with no filter, and each
+    * tile_key partition holds one file under a distinct key. None for any
+    * other input. The relation's file index listed the store when the scan
+    * was built, so this runs no Spark job.
+    */
+  def tileFiles(tiles: Dataset[TileRow]): Option[(Seq[TileFile], Configuration)] =
+    tiles.queryExecution.optimizedPlan match {
+      case Project(cols, scan: LogicalRelation) => scan.relation match {
+        case rel: HadoopFsRelation if rel.fileFormat.isInstanceOf[ParquetFileFormat] &&
+            rel.bucketSpec.isEmpty &&
+            rel.partitionSchema.fieldNames.toSeq == Seq("cell8", "tile_key") &&
+            rel.partitionSchema("tile_key").dataType == StringType &&
+            cols.map { case a: AttributeReference => a.name; case _ => "" } == RowColumns =>
+          val parts = rel.location.listFiles(Nil, Nil)
+          val files = parts.collect {
+            case p if p.files.size == 1 && !p.values.isNullAt(1) =>
+              val f = p.files.head
+              TileFile(p.values.getUTF8String(1).toString, f.getPath.toString,
+                f.getLen, f.getModificationTime)
+          }
+          Option.when(files.size == parts.size && files.map(_.tileKey).distinct.size == files.size)(
+            (files, rel.getHadoopConf(rel.sparkSession, rel.options)))
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** Read the tile in `file` with parquet-hadoop: the columns
+    * [[graft.core.TileCodec.decode]] reads (caption and phash are left
+    * empty) of the file's last row, the one a collected scan keeps. A file
+    * that is gone, or whose length or mtime is not the listing's, fails
+    * naming its tile, so a store rewritten after its listing is never read
+    * as the old one.
+    */
+  def readTile(file: TileFile, conf: Configuration): TileRow = {
+    def fail(what: String, cause: Throwable = null) =
+      new IllegalStateException(s"tile ${file.tileKey}: ${file.path} $what", cause)
+    val path = new Path(file.path)
+    val status = try path.getFileSystem(conf).getFileStatus(path) catch {
+      case e: java.io.FileNotFoundException =>
+        throw fail("is gone since the tile store was listed", e)
+    }
+    if (status.getLen != file.length || status.getModificationTime != file.mtime)
+      throw fail(s"changed since the tile store was listed (length ${file.length} -> " +
+        s"${status.getLen}, mtime ${file.mtime} -> ${status.getModificationTime})")
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
+    try {
+      val schema = reader.getFooter.getFileMetaData.getSchema
+      val columns = new MessageType(schema.getName, Seq("image_id", "bytes", "w", "h", "fmt")
+        .map(c => schema.getType(schema.getFieldIndex(c))).asJava)
+      reader.setRequestedSchema(columns)
+      val io = new ColumnIOFactory().getColumnIO(columns, schema)
+      var last: TileRow = null
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val records = io.getRecordReader(pages, new GroupRecordConverter(columns))
+        var i = 0L
+        while (i < pages.getRowCount) {
+          val g = records.read()
+          last = TileRow(g.getString("image_id", 0), g.getBinary("bytes", 0).getBytes,
+            g.getInteger("w", 0), g.getInteger("h", 0), g.getString("fmt", 0), null, 0L)
+          i += 1
+        }
+        pages = reader.readNextRowGroup()
+      }
+      if (last == null || last.image_id != file.tileKey)
+        throw fail(s"holds ${Option(last).fold("no row")(t => s"tile ${t.image_id}")}, not this tile")
+      last
+    } finally reader.close()
+  }
 
   /** Ingest a directory of raw SRTM `.hgt` files — the reference's own data
     * layout (S3 objects named `{N|S}lat{E|W}lng.hgt`,
