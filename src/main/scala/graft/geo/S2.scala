@@ -295,10 +295,6 @@ object S2 {
   def minEdgeDegrees(lvl: Int): Double =
     math.toDegrees(2.0 * math.sqrt(2.0) / 3.0 / (1L << lvl).toDouble)
 
-  /** Average cell edge in degrees (published kAvgEdge ≈ 1.459/2^level rad). */
-  def avgEdgeDegrees(lvl: Int): Double =
-    math.toDegrees(1.459 / (1L << lvl).toDouble)
-
   /** Cover a lng/lat bbox with level-`lvl` cells — superset-correct for
     * candidate-join purposes (the refinement predicate downstream makes
     * over-cover harmless; exact covers would need the full S2RegionCoverer).

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.{Column, DataFrame}
 
 /** `ray_cast(px, py, xs, ys)` — even-odd point-in-ring test over packed
-  * coordinate arrays; the exact refinement predicate of the PIP join (J2).
+  * coordinate arrays; the PIP join's refine for one ring per row, and the
+  * SQL function `ray_cast` ([[graft.GraftExtensions]]).
   */
 case class RayCastExpr(first: Expression, second: Expression,
                        third: Expression, fourth: Expression)
@@ -33,7 +34,8 @@ case class RayCastExpr(first: Expression, second: Expression,
 
 /** `ray_cast_multi(px, py, xss, yss)` — multi-ring even-odd membership over
   * rings packed as arrays-of-arrays: Polygon-with-holes and MultiPolygon
-  * membership (RayCast.containsMulti scaladoc has the semantics).
+  * membership (RayCast.containsMulti scaladoc has the semantics); the PIP
+  * join's refine for multi-ring input.
   */
 case class RayCastMultiExpr(first: Expression, second: Expression,
                             third: Expression, fourth: Expression)
@@ -54,50 +56,22 @@ case class RayCastMultiExpr(first: Expression, second: Expression,
     copy(first = a, second = b, third = c, fourth = d)
 }
 
-/** Static helper invoked from generated code (keeps the broadcast handle —
-  * not the set — in the plan).
-  */
-object PipHelpers {
-  def setContains(bc: org.apache.spark.broadcast.Broadcast[Set[Long]], v: Long): Boolean =
-    bc.value.contains(v)
-}
-
-/** Codegen'd membership test against a broadcast `Set[Long]`: the plan
-  * carries only the broadcast HANDLE (O(1) plan size), so a hot-cell set
-  * with millions of entries doesn't get embedded as In/InSet literals in
-  * every serialized plan; executors fetch the set once via the broadcast.
-  */
-case class BroadcastSetContainsExpr(child: Expression,
-    bc: org.apache.spark.broadcast.Broadcast[Set[Long]])
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(LongType)
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "broadcast_set_contains"
-  override def nullSafeEval(v: Any): Any = bc.value.contains(v.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("bcSet", bc,
-      classOf[org.apache.spark.broadcast.Broadcast[_]].getName)
-    nullSafeCodeGen(ctx, ev, v =>
-      s"${ev.value} = graft.ops.PipHelpers.setContains($bcRef, $v);")
-  }
-  override protected def withNewChildInternal(c: Expression): BroadcastSetContainsExpr =
-    copy(child = c)
-}
-
 /** Spatial joins over cell indexes (north rule J2/J3): candidate pairs via
   * cell equi-join (Catalyst plans a hash shuffle join — or broadcast when one
   * side is small), exact refinement predicates after.
   *
   * Scale design (100 TB / 10^12 rows):
   *  - the only shuffle is the cell equi-join; both sides are keyed by the
-  *    same cell id so AQE can coalesce/skew-split at runtime;
-  *  - cover level trades replication (poly side ×|cover|) against candidate
-  *    fan-in (points per cell) — [[PipJoin.coverLevelFor]] picks it from the
-  *    polygon bbox so each polygon covers O(1..tens) of cells;
-  *  - dense-cell skew (urban hotspots) is handled by salting: hot cells
-  *    detected by a cheap count pass, point side salted, candidate side
-  *    replicated only for the hot cells ([[PipJoin.pointInPolygonSalted]]).
+  *    same cell id, so AQE can coalesce or skew-split it at runtime;
+  *  - the cover level trades replication (poly side ×|cover|) against
+  *    candidate fan-in (points per cell) and is the caller's choice;
+  *  - dense-cell skew (urban hotspots) has one mechanism: on the shuffle
+  *    path, AQE's skew-join split cuts a hot cell's point partition into
+  *    advisory-sized slices and replicates the matching cover partition to
+  *    each ("Parallel Spatial Join Processing with Adaptive Replication",
+  *    EDBT 2025, driven by Spark's own map-output sizes). When the cover
+  *    side is small enough to broadcast, every task holds all of it and
+  *    cell skew never reaches a task.
   */
 object SpatialJoin {
 
@@ -113,267 +87,64 @@ object SpatialJoin {
       GraftColumns.expression(py.cast(DoubleType)),
       GraftColumns.expression(xss), GraftColumns.expression(yss)))
 
-  /** Small hot sets embed as In/InSet literals (fastest probe); large ones
-    * switch to the broadcast-backed expression so plan size stays O(1) —
-    * the hot-set size is bounded only by nPoints / hotThreshold, which at
-    * 10^9+ points can reach millions of cells.
-    */
-  private val InSetLiteralCap = 1024
-  private def hotPredicate(cell: Column,
-      hotB: org.apache.spark.broadcast.Broadcast[Set[Long]]): Column = {
-    val hot = hotB.value
-    if (hot.isEmpty) lit(false)
-    else if (hot.size <= InSetLiteralCap) cell.isin(hot.toSeq: _*)
-    else GraftColumns.column(BroadcastSetContainsExpr(
-      GraftColumns.expression(cell.cast(LongType)), hotB))
-  }
-
   // ---------------- J2: point-in-polygon ----------------
 
   /** Candidate cells of a polygon bbox at `level` (S2 superset cover). */
   private def coverCells(xs: Seq[Double], ys: Seq[Double], level: Int): Seq[Long] =
     S2.coverBBox(xs.min, ys.min, xs.max, ys.max, level)
 
-  /** Pick the S2 cover level so a bbox of the given size covers O(1..9)
-    * cells: smallest level whose avg cell edge is >= half the bbox diagonal
-    * extent, clamped to [6, 16].
-    */
-  def coverLevelFor(maxExtentDegrees: Double): Int = {
-    var l = 16
-    while (l > 6 && S2.avgEdgeDegrees(l) < maxExtentDegrees) l -= 1
-    l
-  }
-
-  /** Point-in-polygon join.
+  /** Point-in-polygon join: S2 bbox cover, cell equi-join with a fused
+    * inclusive-bbox filter, late ring fetch on `poly_id`, then the
+    * codegen'd even-odd ray-cast refine.
+    *
+    * Geometry is never replicated per cover cell: the cell join carries
+    * only flat `(cell, poly_id, bbox)` rows, so geometry bytes stay
+    * proportional to the polygon count, not count × cover size. The
+    * inclusive bbox keeps every point the refine could accept (all rings
+    * lie within the hull bbox) and drops the cell-slop candidates (12.4M
+    * cell candidates → 1.9M bbox survivors on the holes gate at sf0.1);
+    * only the survivors fetch their rings.
+    *
+    * The polygon schema picks the refine. Rings (`xss, yss`) take the
+    * multi-ring [[ray_cast_multi]]; a flat `xs, ys` frame is one ring per
+    * row and takes the single-ring [[ray_cast]], which `RayCast` keeps
+    * bit-identical to the multi-ring test over one ring. Wrapping flat
+    * rings as one-ring arrays read slower on the registry's flat-input rows
+    * (`geo_pip`, `zonal_*`) in a paired registry A/B at sf0.1.
     *
     * @param points (point_id, lng, lat) — any extra columns pass through
-    * @param polys  (poly_id, xs: array<double>, ys: array<double>) one outer
-    *               ring per row, packed coordinate arrays
-    * @param level  S2 cover/probe level; None = derive per the max polygon
-    *               extent via an initial cheap aggregate
+    * @param polys  (poly_id, xss: array<array<double>>, yss) — ring r is
+    *               (xss[r], yss[r]), shells and holes in any order — or
+    *               (poly_id, xs: array<double>, ys) for one ring per row
+    * @param level  S2 cover and probe level
     * @return (point columns..., poly_id) — one row per (point, containing
     *         polygon) pair
     */
-  def pointInPolygon(points: DataFrame, polys: DataFrame,
-                     level: Option[Int] = None,
-                     broadcastPolys: Boolean = true): DataFrame = {
+  def pointInPolygon(points: DataFrame, polys: DataFrame, level: Int): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
-    val lvl = level.getOrElse {
-      val extRow = polys.select(
-        max(greatest(
-          array_max(col("xs")) - array_min(col("xs")),
-          array_max(col("ys")) - array_min(col("ys"))))).head()
-      // empty polys aggregate to NULL — any level yields the correct empty join
-      val ext = if (extRow.isNullAt(0)) 1e-6 else extRow.getDouble(0)
-      coverLevelFor(math.max(ext, 1e-6))
-    }
-    // poly side: explode the bbox cover (flatMap — a typed generator).
-    // Geometry is NEVER replicated per cover cell (see
-    // [[pointInPolygonMulti]] for the measured rationale): the cell join
-    // carries only flat (cell, poly_id, bbox) rows, a fused inclusive-bbox
-    // filter drops the cell-slop candidates, and only survivors fetch the
-    // ring arrays via the poly_id equi-join feeding the exact refine.
+    val rings = polys.columns.contains("xss")
+    val (xs, ys) = if (rings) ("xss", "yss") else ("xs", "ys")
+    val (hullXs, hullYs) =
+      if (rings) (flatten(col(xs)), flatten(col(ys))) else (col(xs), col(ys))
     val polyCells = polys
-      .select(col("poly_id"), col("xs"), col("ys"))
+      .select(col("poly_id"), hullXs, hullYs)
       .as[(Long, Array[Double], Array[Double])]
-      .flatMap { case (pid, xs, ys) =>
-        coverCells(xs.toSeq, ys.toSeq, lvl)
-          .map(c => (c, pid, xs.min, xs.max, ys.min, ys.max))
+      .flatMap { case (pid, hx, hy) =>
+        coverCells(hx.toSeq, hy.toSeq, level)
+          .map(c => (c, pid, hx.min, hx.max, hy.min, hy.max))
       }
       .toDF("cell", "poly_id", "bxmin", "bxmax", "bymin", "bymax")
-    val rings = polys.select(col("poly_id"), col("xs"), col("ys"))
-    val probe = points.withColumn("cell",
-      graft.functions.cells.s2_cell(col("lng"), col("lat"), lit(lvl)))
-    val cand = (if (broadcastPolys) probe.join(broadcast(polyCells), Seq("cell"))
-                else probe.join(polyCells, Seq("cell")))
+    val refine = if (rings) ray_cast_multi _ else ray_cast _
+    points
+      .withColumn("cell", graft.functions.cells.s2_cell(col("lng"), col("lat"), lit(level)))
+      .join(polyCells, Seq("cell"))
       .filter(col("lng") >= col("bxmin") && col("lng") <= col("bxmax") &&
         col("lat") >= col("bymin") && col("lat") <= col("bymax"))
       .drop("cell", "bxmin", "bxmax", "bymin", "bymax")
-    val withRings = if (broadcastPolys) cand.join(broadcast(rings), Seq("poly_id"))
-                    else cand.join(rings, Seq("poly_id"))
-    withRings.filter(ray_cast(col("lng"), col("lat"), col("xs"), col("ys")))
-      .drop("xs", "ys")
-  }
-
-  /** [[pointInPolygon]] for MULTI-RING geometries — Polygon with holes and
-    * MultiPolygon, the two reference-accepted shapes (src/types.ts:33-40)
-    * the single-ring join cannot answer (a lake-hole point would wrongly
-    * report inside). The S2 cover comes from the hull bbox over ALL rings
-    * (holes lie inside the shell bbox, so the cover stays a candidate
-    * superset); the exact refine is the codegen'd multi-ring even-odd
-    * [[ray_cast_multi]].
-    *
-    * Join shape (the 100 TB point): geometry is NEVER replicated per cover
-    * cell. The cell join carries only `(cell, poly_id, bbox)` — 40 flat
-    * bytes — so geometry bytes stay proportional to the polygon COUNT, not
-    * count × cover size; a fused bbox pre-filter drops the cell-slop
-    * candidates (measured 6.5× here: 12.4M cell candidates → 1.9M bbox
-    * survivors at sf0.1), and only the survivors fetch the ring arrays via
-    * a second equi-join on `poly_id` (broadcast when the polygon table is,
-    * shuffle otherwise). Dense-overlap fixtures previously dragged ~200 B
-    * of nested rings through every slop candidate — 13.9 s → ~4 s.
-    *
-    * @param polys (poly_id, xss: array<array<double>>, yss) — ring r is
-    *              (xss[r], yss[r]); shells and holes in any order (even-odd)
-    */
-  def pointInPolygonMulti(points: DataFrame, polys: DataFrame,
-                          level: Option[Int] = None,
-                          broadcastPolys: Boolean = true): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val flatXs = flatten(col("xss")); val flatYs = flatten(col("yss"))
-    val lvl = level.getOrElse {
-      val extRow = polys.select(
-        max(greatest(
-          array_max(flatXs) - array_min(flatXs),
-          array_max(flatYs) - array_min(flatYs)))).head()
-      val ext = if (extRow.isNullAt(0)) 1e-6 else extRow.getDouble(0)
-      coverLevelFor(math.max(ext, 1e-6))
-    }
-    val polyCells = polys
-      .select(col("poly_id"), col("xss"), col("yss"))
-      .as[(Long, Array[Array[Double]], Array[Array[Double]])]
-      .flatMap { case (pid, xss, yss) =>
-        val xs = xss.flatten; val ys = yss.flatten
-        coverCells(xs.toSeq, ys.toSeq, lvl)
-          .map(c => (c, pid, xs.min, xs.max, ys.min, ys.max))
-      }
-      .toDF("cell", "poly_id", "bxmin", "bxmax", "bymin", "bymax")
-    val rings = polys.select(col("poly_id"), col("xss"), col("yss"))
-    val probe = points.withColumn("cell",
-      graft.functions.cells.s2_cell(col("lng"), col("lat"), lit(lvl)))
-    val cand = (if (broadcastPolys) probe.join(broadcast(polyCells), Seq("cell"))
-                else probe.join(polyCells, Seq("cell")))
-      // inclusive bbox keeps every point the even-odd refine could accept
-      // (all rings lie within the hull bbox), so results are identical
-      .filter(col("lng") >= col("bxmin") && col("lng") <= col("bxmax") &&
-        col("lat") >= col("bymin") && col("lat") <= col("bymax"))
-      .drop("cell", "bxmin", "bxmax", "bymin", "bymax")
-    val withRings = if (broadcastPolys) cand.join(broadcast(rings), Seq("poly_id"))
-                    else cand.join(rings, Seq("poly_id"))
-    withRings.filter(ray_cast_multi(col("lng"), col("lat"), col("xss"), col("yss")))
-      .drop("xss", "yss")
-  }
-
-  /** Skew-aware PIP: detect cells holding more than `hotThreshold` points,
-    * salt the point side on those cells, replicate candidate polygons only
-    * for hot cells (adaptive replication — the salted-repartition analog of
-    * AQE skew-join, but applied before the join so the replication factor is
-    * explicit and bounded).
-    */
-  def pointInPolygonSalted(points: DataFrame, polys: DataFrame, level: Int,
-                           hotThreshold: Long, salt: Int): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val probe0 = points.withColumn("cell",
-      graft.functions.cells.s2_cell(col("lng"), col("lat"), lit(level)))
-    val hot = probe0.groupBy("cell").count()
-      .filter(col("count") > hotThreshold).select("cell")
-      .as[Long].collect().toSet
-    val hotB = spark.sparkContext.broadcast(hot)
-    // codegen'd membership (In/InSet literals or the broadcast-backed
-    // expression — never a Scala UDF, which would break codegen on the
-    // probe-side projection)
-    val isHotProbe = hotPredicate(col("cell"), hotB)
-    val probe = probe0.withColumn("salt",
-      when(isHotProbe, pmod(col("point_id").cast(LongType), lit(salt)))
-        .otherwise(lit(0L)))
-    // flat (cell, salt, poly_id, bbox) rows only: geometry is never
-    // replicated through the cover × salt fan-out (salt multiplies the
-    // replication, so the late ring fetch matters MORE here than in the
-    // unsalted join); rings join the bbox survivors on poly_id
-    val polyCells = polys
-      .select(col("poly_id"), col("xs"), col("ys"))
-      .as[(Long, Array[Double], Array[Double])]
-      .flatMap { case (pid, xs, ys) =>
-        coverCells(xs.toSeq, ys.toSeq, level).flatMap { c =>
-          val copies = if (hotB.value.contains(c)) 0 until salt else 0 until 1
-          copies.map(sv => (c, sv.toLong, pid, xs.min, xs.max, ys.min, ys.max))
-        }
-      }
-      .toDF("cell", "salt", "poly_id", "bxmin", "bxmax", "bymin", "bymax")
-    val rings = polys.select(col("poly_id"), col("xs"), col("ys"))
-    probe.join(polyCells, Seq("cell", "salt"))
-      .filter(col("lng") >= col("bxmin") && col("lng") <= col("bxmax") &&
-        col("lat") >= col("bymin") && col("lat") <= col("bymax"))
-      .drop("cell", "salt", "bxmin", "bxmax", "bymin", "bymax")
-      .join(broadcast(rings), Seq("poly_id"))
-      .filter(ray_cast(col("lng"), col("lat"), col("xs"), col("ys")))
-      .drop("xs", "ys")
-  }
-
-  /** Adaptive cell-splitting PIP (north rule: "salted repartitioning and
-    * adaptive cell-splitting"): cells whose point count exceeds
-    * `hotThreshold` are re-indexed at a finer level on BOTH sides, so a
-    * dense cell's candidate join fans out across finer cells (more
-    * parallelism, and polygons covering only part of the dense cell stop
-    * receiving all of its points). The split depth is gated on MEASURED
-    * density — ceil(log4(peakCount / hotThreshold)), capped by
-    * `splitLevels` — so mildly-hot data does not pay the full cover
-    * fan-out. Cold cells join at the coarse level unchanged; results are
-    * the exact union.
-    */
-  def pointInPolygonAdaptive(points: DataFrame, polys: DataFrame, level: Int,
-                             hotThreshold: Long, splitLevels: Int = 2): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val probe0 = points.withColumn("cell",
-      graft.functions.cells.s2_cell(col("lng"), col("lat"), lit(level)))
-    val hotCounts = probe0.groupBy("cell").count()
-      .filter(col("count") > hotThreshold)
-      .as[(Long, Long)].collect()
-    val hot = hotCounts.map(_._1).toSet
-    // gate split depth on MEASURED density, capped by the caller's
-    // splitLevels: each split level quarters a cell, so depth
-    // ceil(log4(peak / threshold)) is what's needed to bring the densest
-    // cell back under the threshold — mildly-hot data must not pay the full
-    // 4^splitLevels cover fan-out
-    val peak = if (hotCounts.isEmpty) 0L else hotCounts.map(_._2).max
-    val densityDepth = if (peak <= hotThreshold) 1
-      else math.ceil(math.log(peak.toDouble / hotThreshold) / math.log(4.0)).toInt
-    val effSplit = math.max(1, math.min(splitLevels, densityDepth))
-    val fine = level + effSplit
-    val hotB = spark.sparkContext.broadcast(hot)
-    val isHotProbe = hotPredicate(col("cell"), hotB)
-    // point side: hot cells re-key at the fine level (cheap: one more
-    // latLngToCell; isin keeps the projection codegen'd), cold cells keep
-    // the coarse key
-    val probe = probe0.withColumn("jcell",
-      when(isHotProbe,
-        graft.functions.cells.s2_cell(col("lng"), col("lat"), lit(fine)))
-        .otherwise(col("cell")))
-      .drop("cell")
-    // polygon side: cover at the coarse level; covers landing on a hot cell
-    // expand to the fine cells inside it. The fine cover is computed ONCE
-    // per polygon and grouped by coarse parent — recomputing it per hot
-    // cover cell is quadratic in cover size and was a 50× slowdown.
-    val polyCells = polys
-      .select(col("poly_id"), col("xs"), col("ys"))
-      .as[(Long, Array[Double], Array[Double])]
-      .flatMap { case (pid, xs, ys) =>
-        def row(c: Long) = (c, pid, xs.min, xs.max, ys.min, ys.max)
-        val coarse = coverCells(xs.toSeq, ys.toSeq, level)
-        if (!coarse.exists(hotB.value.contains)) coarse.map(row)
-        else {
-          val fineByParent = S2.coverBBox(xs.min, ys.min, xs.max, ys.max, fine)
-            .groupBy(fc => S2.parent(fc, level))
-          coarse.flatMap { c =>
-            if (hotB.value.contains(c))
-              fineByParent.getOrElse(c, Nil).map(row)
-            else Seq(row(c))
-          }
-        }
-      }
-      .toDF("jcell", "poly_id", "bxmin", "bxmax", "bymin", "bymax")
-    val rings = polys.select(col("poly_id"), col("xs"), col("ys"))
-    probe.join(polyCells, Seq("jcell"))
-      .filter(col("lng") >= col("bxmin") && col("lng") <= col("bxmax") &&
-        col("lat") >= col("bymin") && col("lat") <= col("bymax"))
-      .drop("jcell", "bxmin", "bxmax", "bymin", "bymax")
-      .join(broadcast(rings), Seq("poly_id"))
-      .filter(ray_cast(col("lng"), col("lat"), col("xs"), col("ys")))
-      .drop("xs", "ys")
+      .join(polys.select(col("poly_id"), col(xs), col(ys)), Seq("poly_id"))
+      .filter(refine(col("lng"), col("lat"), col(xs), col(ys)))
+      .drop(xs, ys)
   }
 
   // ---------------- J5: within-distance (range) join ----------------
@@ -400,8 +171,7 @@ object SpatialJoin {
     * cell (the same bound that makes kNN ring pruning exact) — while the
     * (usually much larger) TARGET side is keyed by its own cell only, never
     * replicated. Both sides shuffle on the cell id, so AQE can coalesce or
-    * skew-split the join at runtime; dense-cell salting composes exactly as
-    * in [[pointInPolygonSalted]] if a probe hotspot demands it. With the
+    * skew-split the join at runtime, as in [[pointInPolygon]]. With the
     * default resolution ([[rangeResFor]]) the disk is 7 cells (R = 1).
     *
     * @param probes  (probe_id, lng, lat)

@@ -22,16 +22,15 @@ import scala.jdk.CollectionConverters._
 /** One tile's data file in a tile store, as the store's listing gave it. */
 final case class TileFile(tileKey: String, path: String, length: Long, mtime: Long)
 
-/** On-disk tile table with scan-level cell-range pruning (north star:
-  * "Catalyst-pushable cell-range predicates").
+/** On-disk tile table, one directory per tile.
   *
   * Schema decision, not an optimizer rule (SURVEY.md §4): the spatial keys —
   * `tile_key` and a coarse S2 cell `cell8` of the tile center — are stored
-  * as **partition columns**, so a query's bbox → covering-key IN-list
-  * becomes Catalyst `PartitionFilters` and prunes directories before any
-  * byte of raster payload is read. Deriving keys at read time would defeat
-  * this. At 10^12 rows the same layout holds: one directory tree per coarse
-  * cell, Parquet row-group stats prune within.
+  * as **partition columns**. The store-backed [[graft.ops.TileIndex]] reads
+  * the `tile_key=` listing ([[tileFiles]]) and loads only the tiles it
+  * probes, and a predicate on either key reaches the scan as Catalyst
+  * `PartitionFilters`. At 10^12 rows the same layout holds: one directory
+  * tree per coarse cell, Parquet row-group stats prune within.
   */
 object TileStore {
 
@@ -191,23 +190,5 @@ object TileStore {
       }
     write(tiles, storeDir)
     read(spark, storeDir).count()
-  }
-
-  /** Scan only the tiles a bbox can touch: the IN-list over both partition
-    * keys reaches the scan as PartitionFilters (verify with
-    * `.explain("formatted")` — see TileStoreSpec).
-    */
-  def scanBBox(spark: SparkSession, dir: String,
-               lngMin: Double, latMin: Double, lngMax: Double, latMax: Double): DataFrame = {
-    val keys = for {
-      lng <- math.floor(lngMin).toInt to math.floor(lngMax).toInt
-      lat <- math.floor(latMin).toInt to math.floor(latMax).toInt
-    } yield TileKey.ofDegrees(lng, lat)
-    val cells = keys.map { k =>
-      val (swLng, swLat) = TileKey.toDegrees(k)
-      S2.latLngToCell(swLng + 0.5, swLat + 0.5, 8)
-    }.distinct
-    read(spark, dir)
-      .where(col("cell8").isin(cells: _*) && col("tile_key").isin(keys: _*))
   }
 }

@@ -845,37 +845,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(vmap.size == all.size)
   }
 
-  test("overlapJoin matches brute force incl. touching endpoints and bin straddles") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(13)
-    // lengths straddle several bins (bin=100); includes zero-length intervals
-    val lefts = (0 until 200).map(i =>
-      (i.toLong, rnd.nextInt(5000).toLong)).map { case (id, s) =>
-      (id, s, s + rnd.nextInt(350).toLong)
-    }
-    val rights = (1000 until 1150).map(i =>
-      (i.toLong, rnd.nextInt(5000).toLong)).map { case (id, s) =>
-      (id, s, s + rnd.nextInt(350).toLong)
-    }
-    val got = graft.ops.IntervalJoin.overlapJoin(
-        lefts.toDF("l_id", "l_s", "l_e"), rights.toDF("r_id", "r_s", "r_e"),
-        binWidth = 100L)
-      .as[(Long, Long, Long)].collect().toSet
-    val expected = (for {
-      (lid, ls, le) <- lefts
-      (rid, rs, re) <- rights
-      if ls <= re && rs <= le
-    } yield (lid, rid, math.min(le, re) - math.max(ls, rs))).toSet
-    assert(got == expected)
-    assert(expected.exists(_._3 == 0) || expected.nonEmpty,
-      "degenerate: no pairs generated")
-    // exactly-once: no pair may be emitted twice across shared bins
-    val gotList = graft.ops.IntervalJoin.overlapJoin(
-        lefts.toDF("l_id", "l_s", "l_e"), rights.toDF("r_id", "r_s", "r_e"),
-        binWidth = 100L).collect()
-    assert(gotList.length == expected.size, "duplicate pair emissions")
-  }
-
   test("vocabOov matches brute force incl. the deterministic tie cut") {
     import spark.implicits._
     val docs = Seq(

@@ -59,19 +59,18 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"read schema not pruned: ${scan.requiredSchema}")
   }
 
-  test("salted PIP probe-side projection stays in whole-stage codegen (no UDF)") {
+  test("PIP probe-side projection stays in whole-stage codegen (no UDF)") {
     import spark.implicits._
     val ptsDir = s"${System.getProperty("java.io.tmpdir")}/graft_planspec_salt"
     graft.table.Checkpoint.clear(ptsDir)
-    // skewed: most points in one level-11 cell so the hot set is non-empty
+    // skewed: most points in one level-11 cell
     (1 to 4000).map(i =>
       (i.toLong, -119.5 + (i % 10) * 1e-5, 36.5 + (i % 7) * 1e-5))
       .toDF("point_id", "lng", "lat").write.mode("overwrite").parquet(ptsDir)
     val pts = spark.read.parquet(ptsDir)
     val polys = Seq((1L, Array(-119.6, -119.4, -119.5), Array(36.4, 36.4, 36.6)))
       .toDF("poly_id", "xs", "ys")
-    val out = graft.ops.SpatialJoin.pointInPolygonSalted(pts, polys,
-      level = 11, hotThreshold = 100L, salt = 4)
+    val out = graft.ops.SpatialJoin.pointInPolygon(pts, polys, 11)
     // collect() drives THIS DataFrame's queryExecution (count() would build
     // a separate one and leave this plan unexecuted / AQE-unfinalized)
     assert(out.collect().length == 4000) // every point inside the triangle once
@@ -79,9 +78,9 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the final plan (with codegen stage markers) exists only
     // post-execution
     val plan = out.queryExecution.executedPlan.toString
-    // the hot-set membership is isin (Catalyst In/InSet), not a Scala UDF —
-    // a UDF would surface as ScalaUDF and break codegen on the probe
-    // projection
+    // the cell key and the ray-cast refine are codegen'd expressions, not
+    // Scala UDFs — a UDF would surface as ScalaUDF and break codegen on the
+    // probe projection
     assert(!plan.contains("ScalaUDF"),
       s"probe side fell out of codegen (ScalaUDF in plan):\n$plan")
     // "*(n)" prefixes mark WholeStageCodegen stages in the final-plan string
@@ -377,7 +376,7 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       .toDF("point_id", "lng", "lat")
     val polys = Seq((1L, Array(-119.5, -119.4, -119.45), Array(36.5, 36.5, 36.6)))
       .toDF("poly_id", "xs", "ys")
-    val out = graft.ops.SpatialJoin.pointInPolygon(pts, polys, Some(10))
+    val out = graft.ops.SpatialJoin.pointInPolygon(pts, polys, 10)
     val plan = out.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoop"),
       s"expected broadcast join:\n$plan")
@@ -565,27 +564,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // re-keys once more); corpus bytes themselves never shuffle
     val shuffles = plan.collect { case s: ShuffleExchangeExec => s }
     assert(shuffles.size <= 2, s"expected <=2 post-join shuffles:\n$plan")
-  }
-
-  test("intervalJoin: bin equi-join, never a cartesian/range nested loop") {
-    import spark.implicits._
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_planspec_ivj"
-    graft.table.Checkpoint.clear(dir)
-    (0 until 20000).map(i => (i.toLong, i.toLong * 37 % 100000))
-      .map { case (id, s) => (id, s, s + id % 400) }
-      .toDF("l_id", "l_s", "l_e").write.mode("overwrite").parquet(dir)
-    val left = spark.read.parquet(dir)
-    val right = left.select(col("l_id").as("r_id"), (col("l_s") + 13).as("r_s"),
-      (col("l_e") + 13).as("r_e"))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    val plan =
-      try graft.ops.IntervalJoin.overlapJoin(left, right, binWidth = 100L)
-        .queryExecution.executedPlan.toString
-      finally spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"interval join fell back to all-pairs:\n$plan")
-    assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin") ||
-      plan.contains("BroadcastHashJoin"), s"expected an equi-join on bin:\n$plan")
   }
 
   test("semDedup: candidate pairs only from the centroid equi-join, no all-pairs") {
@@ -820,25 +798,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (206835·10 − 1015000·25 − 84600000·12) / (1000·10) = −103850.665 →
     // trunc −103850 (both Spark DIV and DuckDB // truncate toward zero)
     assert(r.getAs[Long]("flesch_milli") == -103850L)
-  }
-
-  test("intervalUnion: merge, touching-merge, containment; one keyed shuffle chain") {
-    import spark.implicits._
-    val iv = Seq(
-      (1L, 0L, 10L), (1L, 5L, 12L), (1L, 20L, 30L), (1L, 30L, 35L),
-      (2L, 20L, 30L), (2L, 22L, 25L), (2L, 28L, 40L))
-      .toDF("user_id", "s", "e")
-    val out = graft.ops.IntervalJoin.intervalUnion(iv, "user_id", "s", "e")
-    val rows = out.collect().map(r => r.getLong(0) ->
-      ((r.getAs[Long]("n_iv"), r.getAs[Long]("n_seg"),
-        r.getAs[Long]("covered"), r.getAs[Long]("span")))).toMap
-    // [0,12] merged, [20,35] merged across the touching boundary
-    assert(rows(1L) == ((4L, 2L, 27L, 35L)), s"key 1: ${rows(1L)}")
-    // containment: one segment [20,40]
-    assert(rows(2L) == ((3L, 1L, 20L, 20L)), s"key 2: ${rows(2L)}")
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("Join"),
-      s"intervalUnion must be join-free:\n$plan")
   }
 
   test("reciprocity: mutual pairs exact, self-loops/dups dropped, keyed semi-join") {

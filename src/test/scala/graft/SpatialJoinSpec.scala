@@ -39,20 +39,34 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       if RayCast.contains(px, py, xs, ys)
     } yield (pid, qid)).toSet
 
+  /** Runs `body` under the given session confs, restoring them after. */
+  private def withConfs[T](confs: (String, String)*)(body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Forces the cover and ring sides onto the shuffle path. */
+  private val noBroadcast = "spark.sql.autoBroadcastJoinThreshold" -> "-1"
+
   test("pointInPolygon matches brute force (broadcast + shuffle paths, multiple levels)") {
     import spark.implicits._
     val ptsDf = points.toDF("point_id", "lng", "lat")
     val polysDf = polys.toDF("poly_id", "xs", "ys")
     val expected = bruteForcePip
     assert(expected.nonEmpty, "workload sanity: some containment pairs")
-    for (level <- Seq(None, Some(9), Some(12)); bcast <- Seq(true, false)) {
-      val got = SpatialJoin.pointInPolygon(ptsDf, polysDf, level, bcast)
+    for (level <- Seq(9, 12); shuffle <- Seq(false, true)) {
+      def run() = SpatialJoin.pointInPolygon(ptsDf, polysDf, level)
         .select("point_id", "poly_id").as[(Long, Long)].collect().toSet
-      assert(got == expected, s"level=$level broadcast=$bcast")
+      val got = if (shuffle) withConfs(noBroadcast)(run()) else run()
+      assert(got == expected, s"level=$level shuffle=$shuffle")
     }
   }
 
-  test("pointInPolygonMulti: holes excluded, MultiPolygon shells included, brute-force equality") {
+  test("pointInPolygon over rings: holes excluded, MultiPolygon shells included, brute-force equality") {
     import spark.implicits._
     // rectangles with a centered hole + a disjoint second shell
     val multiPolys: Seq[(Long, Array[Array[Double]], Array[Array[Double]])] =
@@ -89,32 +103,54 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
       RayCast.contains(holeCx, holeCy, xss0(0), yss0(0)))
     val ptsDf = points.toDF("point_id", "lng", "lat")
     val polysDf = multiPolys.toDF("poly_id", "xss", "yss")
-    for (level <- Seq(None, Some(10)); bcast <- Seq(true, false)) {
-      val got = SpatialJoin.pointInPolygonMulti(ptsDf, polysDf, level, bcast)
+    for (shuffle <- Seq(false, true)) {
+      def run() = SpatialJoin.pointInPolygon(ptsDf, polysDf, 10)
         .select("point_id", "poly_id").as[(Long, Long)].collect().toSet
-      assert(got == expected, s"level=$level broadcast=$bcast")
+      val got = if (shuffle) withConfs(noBroadcast)(run()) else run()
+      assert(got == expected, s"shuffle=$shuffle")
     }
   }
 
-  test("pointInPolygonSalted matches brute force and the unsalted path") {
+  test("pointInPolygon on the shuffle path: AQE splits one hot cell, rows equal brute force") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     import spark.implicits._
-    val ptsDf = points.toDF("point_id", "lng", "lat")
-    val polysDf = polys.toDF("poly_id", "xs", "ys")
-    val got = SpatialJoin.pointInPolygonSalted(ptsDf, polysDf, level = 11,
-        hotThreshold = 5L, salt = 4)
-      .select("point_id", "poly_id").as[(Long, Long)].collect().toSet
-    assert(got == bruteForcePip)
-  }
-
-  test("pointInPolygonAdaptive (hot-cell splitting) matches brute force") {
-    import spark.implicits._
-    val ptsDf = points.toDF("point_id", "lng", "lat")
-    val polysDf = polys.toDF("poly_id", "xs", "ys")
-    // threshold low enough that most level-9 cells split
-    val got = SpatialJoin.pointInPolygonAdaptive(ptsDf, polysDf, level = 9,
-        hotThreshold = 10L, splitLevels = 2)
-      .select("point_id", "poly_id").as[(Long, Long)].collect().toSet
-    assert(got == bruteForcePip)
+    // about half the points in one level-11 cell (~0.04° across), the rest
+    // spread over the 4°×2° box; one extra square covers the hot points
+    val hot = graft.geo.S2.latLngToCell(-119.0, 37.0, 11)
+    val (hx, hy) = graft.geo.S2.centerLatLng(hot)
+    val r = new scala.util.Random(11)
+    val skewed = (0L until 20000L).map { i =>
+      if (i % 2 == 0) (i, hx - 0.002 + r.nextDouble() * 0.004, hy - 0.002 + r.nextDouble() * 0.004)
+      else (i, -120.0 + r.nextDouble() * 4.0, 36.0 + r.nextDouble() * 2.0)
+    }
+    assert(skewed.count { case (_, x, y) => graft.geo.S2.latLngToCell(x, y, 11) == hot } >=
+      skewed.size / 2, "workload sanity: one hot level-11 cell")
+    val allPolys = polys :+ ((1000L, Array(hx - 0.01, hx + 0.01, hx + 0.01, hx - 0.01),
+      Array(hy - 0.01, hy - 0.01, hy + 0.01, hy + 0.01)))
+    val expected = (for {
+      (pid, px, py) <- skewed
+      (qid, xs, ys) <- allPolys
+      if RayCast.contains(px, py, xs, ys)
+    } yield (pid, qid)).toSet
+    val polysDf = allPolys.toDF("poly_id", "xs", "ys")
+    // a partition is skewed only past 5× the median partition (Spark's
+    // default skewedPartitionFactor): 8 partitions put the hot cell's well
+    // past that, where the suite's 4 leave it at the edge
+    withConfs(noBroadcast, "spark.sql.shuffle.partitions" -> "8",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "64k",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64k") {
+      val out = SpatialJoin.pointInPolygon(skewed.toDF("point_id", "lng", "lat"), polysDf, 11)
+        .select("point_id", "poly_id")
+      // collect() on `out` itself, so its adaptive plan is the final one
+      val got = out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(got == expected && got.count(_._2 == 1000L) >= skewed.size / 2)
+      val joins = new AdaptiveSparkPlanHelper {}.collect(out.queryExecution.executedPlan) {
+        case j: SortMergeJoinExec => j
+      }
+      assert(joins.exists(_.isSkewJoin),
+        s"expected a skew-split SortMergeJoin:\n${out.queryExecution.executedPlan}")
+    }
   }
 
   test("Douglas-Peucker matches an independent recursive reference; op = kernel") {
@@ -405,18 +441,6 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == Set((1L, 10L, 1), (1L, 11L, 2)))
   }
 
-  test("BroadcastSetContainsExpr matches set semantics (large hot-set path)") {
-    import org.apache.spark.sql.graftshim.GraftColumns
-    import spark.implicits._
-    val set = (0L until 9000L).filter(_ % 3 == 0).toSet // 3000 > InSetLiteralCap
-    val bc = spark.sparkContext.broadcast(set)
-    val got = (0L until 100L).toDF("v")
-      .withColumn("m", GraftColumns.column(graft.ops.BroadcastSetContainsExpr(
-        GraftColumns.expression(org.apache.spark.sql.functions.col("v")), bc)))
-      .as[(Long, Boolean)].collect().toMap
-    assert((0L until 100L).forall(v => got(v) == (v % 3 == 0)))
-  }
-
   test("polygonJoin matches brute-force convex intersection; never a cartesian") {
     import spark.implicits._
     val r2 = new scala.util.Random(77)
@@ -463,23 +487,5 @@ class SpatialJoinSpec extends AnyFunSuite with BeforeAndAfterAll {
     } yield (ia, ib)).toSet
     assert(got == want)
     assert(want.nonEmpty, "degenerate: no intersecting pairs generated")
-  }
-
-  test("salted PIP with >1024 hot cells takes the broadcast-set path and stays exact") {
-    import spark.implicits._
-    // hotThreshold=0 makes every occupied cell hot: ~2000 distinct cells at
-    // level 11 over a 2-degree span force the >InSetLiteralCap dispatch in
-    // hotPredicate through the production join path
-    val pts = (0 until 4000).map(i =>
-      (i.toLong, -119.9 + (i % 2000) * 1e-3, 36.05 + (i % 7) * 1e-3))
-      .toDF("point_id", "lng", "lat")
-    val polys = Seq((1L, Array(-120.0, -117.0, -118.5), Array(36.0, 36.0, 37.5)))
-      .toDF("poly_id", "xs", "ys")
-    val expect = SpatialJoin.pointInPolygon(pts, polys, Some(11))
-      .select("point_id", "poly_id").as[(Long, Long)].collect().toSet
-    val got = SpatialJoin.pointInPolygonSalted(pts, polys,
-        level = 11, hotThreshold = 0L, salt = 3)
-      .select("point_id", "poly_id").as[(Long, Long)].collect().toSet
-    assert(got == expect && got.nonEmpty)
   }
 }
