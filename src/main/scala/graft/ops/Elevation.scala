@@ -182,8 +182,12 @@ object Elevation {
 
   /** Entry point 2 (`/polyline`): decode polyline → sample → Terrarium byte
     * stream in vertex order (F5 → J1 → F6), one narrow pass per polyline
-    * over the broadcast [[TileIndex]]. A polyline without vertices emits no
-    * row.
+    * over the broadcast [[TileIndex]]. Each row is one primitive loop
+    * ([[terrariumBytes]]): no vertex array, no boxed elevations, no byte
+    * triples. An empty polyline emits no row. A malformed one fails its
+    * task with the first failure on the way: the loop samples each vertex
+    * before it reads the next, so a tile load for an earlier vertex (a
+    * store file changed or gone) can fail before the bad varint does.
     */
   def polylineToTerrarium(polylines: Dataset[(String, String)],
                           tiles: Dataset[TileRow]): Dataset[(String, Array[Byte])] = {
@@ -191,10 +195,25 @@ object Elevation {
     import spark.implicits._
     val bc = TileIndex.broadcastIndex(tiles)
     polylines.flatMap { case (id, pl) =>
-      val vertices = Polyline.decode(pl)
       val index = bc.value
-      Option.when(vertices.nonEmpty)(
-        id -> Terrarium.encodeStream(vertices.map { case (lng, lat) => index.elevation(lng, lat) }))
+      val bytes = terrariumBytes(pl)(index.elevation)
+      Option.when(bytes.nonEmpty)(id -> bytes)
     }
+  }
+
+  /** The Terrarium bytes of one encoded polyline: [[Polyline.Cursor]] reads
+    * each vertex as [[Polyline.decode]] does, `elev` samples it, and
+    * [[Terrarium.write]] puts its three bytes into the line's output array,
+    * sized up front by [[Polyline.vertexCount]].
+    */
+  private[graft] def terrariumBytes(pl: String)(elev: (Double, Double) => Double): Array[Byte] = {
+    val out = new Array[Byte](3 * Polyline.vertexCount(pl))
+    val c = new Polyline.Cursor(pl)
+    var at = 0
+    while (c.next()) {
+      Terrarium.write(elev(c.lng, c.lat), out, at)
+      at += 3
+    }
+    out
   }
 }

@@ -23,8 +23,7 @@ object ImageCodec {
       val row = size - 1 - py
       var px = 0
       while (px < size) {
-        val (r, g, b) = Terrarium.encode(elevs(row * size + px))
-        img.setRGB(px, py, (r << 16) | (g << 8) | b)
+        img.setRGB(px, py, Terrarium.rgb(elevs(row * size + px)))
         px += 1
       }
       py += 1

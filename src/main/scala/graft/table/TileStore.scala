@@ -4,6 +4,7 @@ import graft.core.TileRow
 import graft.geo.{S2, TileKey}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -119,7 +120,10 @@ object TileStore {
     if (status.getLen != file.length || status.getModificationTime != file.mtime)
       throw fail(s"changed since the tile store was listed (length ${file.length} -> " +
         s"${status.getLen}, mtime ${file.mtime} -> ${status.getModificationTime})")
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf))
+    // read options from `conf`: the one-argument open builds default options
+    // on a fresh Configuration, which parses core-default.xml once per tile
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(status, conf),
+      HadoopReadOptions.builder(conf, path).build())
     try {
       val schema = reader.getFooter.getFileMetaData.getSchema
       val columns = new MessageType(schema.getName, Seq("image_id", "bytes", "w", "h", "fmt")

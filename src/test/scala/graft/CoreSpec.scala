@@ -143,10 +143,11 @@ class TerrariumSpec extends AnyFunSuite {
   }
   test("encode∘decode ≈ id within 1/256 (property)") {
     val rnd = new scala.util.Random(7)
-    for (_ <- 1 to 1000) {
-      val e = rnd.nextDouble() * 9000 - 500
+    // 32767 + (1 - 2^-40) rounds to 32768, one past the 16-bit range
+    val int16 = int16WithFractions.filter(_ < 32768)
+    for (e <- Array.fill(1000)(rnd.nextDouble() * 9000 - 500) ++ int16) {
       val (r, g, b) = Terrarium.encode(e)
-      assert(math.abs(Terrarium.decode(r, g, b) - e) < 1.0 / 256 + 1e-9)
+      assert(math.abs(Terrarium.decode(r, g, b) - e) < 1.0 / 256 + 1e-9, s"elev $e")
     }
   }
   test("stream layout: 3 bytes per coord in order (F6)") {
@@ -154,6 +155,54 @@ class TerrariumSpec extends AnyFunSuite {
     assert(bytes.length == 6)
     assert((bytes(0) & 0xff, bytes(1) & 0xff, bytes(2) & 0xff) == ((128, 0, 0)))
     assert((bytes(3) & 0xff, bytes(4) & 0xff, bytes(5) & 0xff) == ((128, 1, 0)))
+  }
+
+  /** JS ToUint8, exact at any magnitude: NaN and ±∞ give 0, anything else
+    * truncates toward zero and wraps mod 256.
+    */
+  private def jsToUint8(x: Double): Int =
+    if (x.isNaN || x.isInfinite) 0
+    else new java.math.BigDecimal(x).setScale(0, java.math.RoundingMode.DOWN)
+      .toBigInteger.mod(java.math.BigInteger.valueOf(256)).intValue
+
+  /** The reference's three bytes (src/elevation/getTerrariumDemElevation.ts:10-20). */
+  private def reference(elev: Double): Seq[Int] = {
+    val e = elev + 32768
+    Seq(jsToUint8(math.floor(e / 256)), jsToUint8(e % 256),
+      jsToUint8(math.floor((e - math.floor(e)) * 256)))
+  }
+
+  private def assertEncodesLikeReference(elevs: Array[Double]): Unit = {
+    val out = new Array[Byte](3 * elevs.length)
+    elevs.indices.foreach(i => Terrarium.write(elevs(i), out, 3 * i))
+    elevs.indices.foreach { i =>
+      val want = reference(elevs(i))
+      val got = Seq(out(3 * i) & 0xff, out(3 * i + 1) & 0xff, out(3 * i + 2) & 0xff)
+      assert(got == want, s"elev ${elevs(i)} (bits ${java.lang.Double.doubleToRawLongBits(elevs(i))})")
+      assert(Terrarium.encode(elevs(i)) == ((want(0), want(1), want(2))))
+    }
+    assert(Terrarium.encodeStream(elevs.toSeq).sameElements(out))
+  }
+
+  private val int16WithFractions: Array[Double] =
+    for (v <- (-32768 to 32767).toArray; off <- Array(0.0, 1.0 / 256, 0.5, 1 - math.pow(2, -40)))
+      yield v + off
+
+  test("write equals the reference formula byte for byte: int16 range with fractions") {
+    assertEncodesLikeReference(int16WithFractions)
+  }
+
+  test("write equals the reference formula byte for byte: doubles drawn by bit pattern") {
+    val rnd = new scala.util.Random(11)
+    assertEncodesLikeReference(Array.fill(200000)(java.lang.Double.longBitsToDouble(rnd.nextLong())))
+  }
+
+  test("write equals the reference formula byte for byte: specials and range edges") {
+    val edges = Seq(Double.NaN, Double.PositiveInfinity, 0.0, math.pow(2, 53), math.pow(2, 62),
+      math.pow(2, 63), Double.MaxValue)
+    // each edge, its neighbours, and the elevations that put e itself on it
+    val near = edges.flatMap(x => Seq(x, math.nextUp(x), math.nextDown(x), x - 32768))
+    assertEncodesLikeReference(near.flatMap(x => Seq(x, -x)).toArray)
   }
 }
 
@@ -200,6 +249,49 @@ class PolylineSpec extends AnyFunSuite {
     coords.zip(back).foreach { case ((a1, a2), (b1, b2)) =>
       assert(math.abs(a1 - b1) < 1e-9 && math.abs(a2 - b2) < 1e-9)
     }
+  }
+
+  /** Seeded lines of 0-40 vertices on the 1e-5 grid over the whole globe. */
+  private val lines: Seq[Seq[(Double, Double)]] = {
+    val rnd = new scala.util.Random(5)
+    Seq.fill(500)(Seq.fill(rnd.nextInt(41))(
+      ((rnd.nextInt(36000001) - 18000000) / 1e5, (rnd.nextInt(18000001) - 9000000) / 1e5)))
+  }
+
+  /** The vertices the fused `/polyline` loop hands to its sampler. */
+  private def fusedVertices(pl: String): (Seq[(Double, Double)], Int) = {
+    val seen = Seq.newBuilder[(Double, Double)]
+    val bytes = graft.ops.Elevation.terrariumBytes(pl) { (lng, lat) => seen += ((lng, lat)); 0.0 }
+    (seen.result(), bytes.length)
+  }
+
+  test("decode(encode(cs)) is cs on the 1e-5 grid, and the fused loop reads the same vertices (property)") {
+    lines.foreach { cs =>
+      val pl = Polyline.encode(cs)
+      assert(Polyline.decode(pl).toSeq == cs, pl)
+      assert(fusedVertices(pl) == ((cs, 3 * cs.length)), pl)
+    }
+    assert(Polyline.decode("").isEmpty && fusedVertices("") == ((Nil, 0))) // no vertices, no row
+  }
+
+  test("truncated and odd-varint strings: the fused loop throws what decode throws (property)") {
+    def outcome(f: => Any): Either[Class[_], Any] =
+      try Right(f) catch { case e: Exception => Left(e.getClass) }
+    var malformed = 0
+    lines.filter(_.nonEmpty).take(100).foreach { cs =>
+      val pl = Polyline.encode(cs)
+      val cuts = (1 until pl.length).map(pl.take) ++ Seq(pl + "?", pl + "_")
+      cuts.foreach { s =>
+        val decoded = outcome(Polyline.decode(s).toSeq)
+        val fused = outcome(fusedVertices(s))
+        decoded match {
+          case Left(cls) => malformed += 1; assert(fused == Left(cls), s)
+          case Right(vs: Seq[_]) => assert(fused == Right((vs, 3 * vs.length)), s)
+          case other => fail(s"$other")
+        }
+      }
+    }
+    assert(malformed > 1000)
   }
 }
 
