@@ -133,16 +133,4 @@ object GeoJson {
     }
     out.toSeq
   }
-
-  /** Rebuild a FeatureCollection document from feature rows (ordered by id
-    * where ids are numeric, else lexicographic).
-    */
-  def featureCollection(rows: Seq[FeatureRow]): String = {
-    val root = mapper.createObjectNode()
-    root.put("type", "FeatureCollection")
-    val arr = root.putArray("features")
-    val sorted = rows.sortBy(r => (r.feature_id.toLongOption.getOrElse(Long.MaxValue), r.feature_id))
-    sorted.foreach(r => arr.add(parse(r.feature_json)))
-    write(root)
-  }
 }

@@ -243,37 +243,6 @@ object cells {
       cell + lit((dq.toLong << 29) + dr.toLong) }: _*)
   }
 
-  /** 10-digit Open Location Code (plus code, public spec): lat/lng floored
-    * onto the 1/8000° grid, five base-20 digits each, interleaved
-    * lat-major with the '+' separator after digit pair 4. Composed from
-    * codegen'd built-ins only (no UDF, no custom expression): the digit
-    * extraction `((v % 20p) − (v % p)) / p` keeps the double division
-    * exact (numerator divisible by p), so the whole encode stays inside
-    * whole-stage codegen and an independent SQL oracle replays it with
-    * plain integer ops. Out-of-range coordinates clamp like the spec's
-    * `clipLatitude`/`normalizeLongitude` on the encode grid.
-    */
-  def olc(lng: Column, lat: Column): Column = {
-    import org.apache.spark.sql.functions.{concat, floor, greatest, least, lit}
-    val alpha = "23456789CFGHJMPQRVWX"
-    def grid(v: Column, off: Double, max: Long): Column =
-      least(greatest(floor((v.cast(DoubleType) + lit(off)) * lit(8000.0))
-        .cast(LongType), lit(0L)), lit(max))
-    val ilat = grid(lat, 90.0, 180L * 8000 - 1)
-    val ilng = grid(lng, 180.0, 360L * 8000 - 1)
-    def dig(v: Column, p: Long): Column =
-      lit(alpha).substr(
-        (((v % lit(p * 20)) - (v % lit(p))) / lit(p)).cast(IntegerType) + lit(1),
-        lit(1))
-    concat(
-      dig(ilat, 160000L), dig(ilng, 160000L),
-      dig(ilat, 8000L), dig(ilng, 8000L),
-      dig(ilat, 400L), dig(ilng, 400L),
-      dig(ilat, 20L), dig(ilng, 20L),
-      lit("+"),
-      dig(ilat, 1L), dig(ilng, 1L))
-  }
-
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction("s2_cell",

@@ -30,15 +30,6 @@ object WebMercator {
   def unpack(k: Long): (Int, Int, Int) =
     ((k >>> 58).toInt, ((k >>> 29) & 0x1fffffffL).toInt, (k & 0x1fffffffL).toInt)
 
-  /** West edge longitude of tile column x at zoom z. */
-  def tileWest(x: Int, z: Int): Double = x.toDouble / (1 << z) * 360.0 - 180.0
-
-  /** North edge latitude of tile row y at zoom z. */
-  def tileNorth(y: Int, z: Int): Double = {
-    val n = math.Pi - 2.0 * math.Pi * y / (1 << z)
-    math.toDegrees(math.atan(math.sinh(n)))
-  }
-
   /** All tiles at zoom z intersecting a lng/lat bbox (cell cover). Rejects
     * antimeridian-crossing boxes (minLng > maxLng) explicitly — silently
     * returning an empty cover would drop candidate tiles; callers split such

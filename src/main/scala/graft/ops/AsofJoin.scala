@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -84,54 +84,4 @@ object AsofJoin {
     }
     bounded.select((left.columns ++ fillCols).map(col).toIndexedSeq: _*)
   }
-
-  /** Regular-grid GAP FILLING — the normalization pass of time-series
-    * analytics: emit one row per key per fixed bucket across the key's
-    * observed span, forward-filling buckets with no data from the last
-    * observed value (the `asof` semantics against an implicit spine). Any
-    * rolling/window analytic downstream (the trailing-24h z-flag, rate
-    * deltas) silently mis-windows on a sparse series — 24 ROWS is only
-    * 24 hours if every hour has a row; filling makes ROWS frames honest.
-    *
-    * Exact shape: per key, the bucket spine is
-    * `sequence(min_bucket, max_bucket, step)` (integer micros — engine-
-    * replayable), left-joined to the observed per-bucket aggregates, then
-    * ONE `last(_, ignoreNulls)` ordered window fills forward. Two
-    * key-bounded shuffles (the bucket rollup; the spine join + window share
-    * the key partitioning). The spine is data-bounded per key (its own
-    * span), so a key observed once emits one row — no cross-key span
-    * explosion.
-    *
-    * @param df       input rows
-    * @param keyCol   series key column name
-    * @param tsUs     event-time expression in micros
-    * @param valueInt exact-integer value expression (summed per bucket)
-    * @param stepUs   bucket width in micros
-    * @return (keyCol, bucket_us, cents, filled) — `filled` marks spine
-    *         rows that had no observation (value forward-filled; a gap
-    *         BEFORE the first observation cannot exist by construction)
-    */
-  def gapFill(df: DataFrame, keyCol: String, tsUs: Column, valueInt: Column,
-              stepUs: Long): DataFrame = {
-    require(stepUs > 0, s"stepUs must be positive: $stepUs")
-    val perBucket = df
-      .select(col(keyCol), tsUs.cast("long").as("__ts"),
-        valueInt.cast("long").as("__v"))
-      .withColumn("bucket_us", expr(s"(__ts DIV ${stepUs}L) * ${stepUs}L"))
-      .groupBy(col(keyCol), col("bucket_us"))
-      .agg(sum("__v").as("obs_cents"))
-    val spine = perBucket
-      .groupBy(col(keyCol))
-      .agg(min("bucket_us").as("lo"), max("bucket_us").as("hi"))
-      .withColumn("bucket_us",
-        explode(sequence(col("lo"), col("hi"), lit(stepUs))))
-      .select(col(keyCol), col("bucket_us"))
-    val w = Window.partitionBy(keyCol).orderBy("bucket_us")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    spine.join(perBucket, Seq(keyCol, "bucket_us"), "left")
-      .withColumn("cents", last("obs_cents", ignoreNulls = true).over(w))
-      .withColumn("filled", col("obs_cents").isNull)
-      .select(col(keyCol), col("bucket_us"), col("cents"), col("filled"))
-  }
-
 }

@@ -47,88 +47,4 @@ object Cdc {
       .filter(col("__rn") === 1 && col("__op") =!= "D")
       .select((keyCols ++ payload).map(col): _*)
   }
-
-  /** Slowly-changing-dimension type-2 history build: fold the same
-    * changelog into VERSIONED rows instead of a latest-wins snapshot —
-    * each non-delete change opens a version valid over
-    * `[valid_from, valid_to)` in sequence space, closed by the key's next
-    * change (update or delete); the key's last non-delete version is
-    * `is_current` with a null `valid_to`. The standard dimension-table
-    * answer to "what did this row say at sequence S" — the row-level
-    * analogue of [[graft.table.Checkpoint]] time travel, which answers the
-    * same question per table snapshot.
-    *
-    * Plan shape: ONE key-partitioned window (`lead(seq)` over seq asc) —
-    * a single hash-partition-by-key shuffle; per-key state is one row of
-    * lookahead, so 100 TB changelogs stream through without skew beyond
-    * the key histogram itself. Deterministic under the caller's
-    * unique-(key, seq) contract.
-    *
-    * @param changes change rows: key + payload columns, plus `seq` (Long,
-    *                unique per key) and `op` ('I' | 'U' | 'D'; a 'D' row
-    *                closes the prior version and emits nothing)
-    * @param keyCols key column names
-    * @return history rows: key + payload + `valid_from`, `valid_to`
-    *         (null = open), `is_current`
-    */
-  def scd2(changes: DataFrame, keyCols: Seq[String]): DataFrame = {
-    require(keyCols.nonEmpty, "keyCols must be non-empty")
-    val payload =
-      changes.columns.filterNot(c => keyCols.contains(c) || c == "seq" || c == "op")
-    val w = Window.partitionBy(keyCols.map(col): _*).orderBy(col("seq").asc)
-    changes
-      .withColumn("valid_from", col("seq").cast("long"))
-      .withColumn("valid_to", lead(col("seq").cast("long"), 1).over(w))
-      .filter(col("op") =!= "D")
-      .withColumn("is_current", col("valid_to").isNull)
-      .select((keyCols ++ payload).map(col) ++
-        Seq(col("valid_from"), col("valid_to"), col("is_current")): _*)
-  }
-
-  /** INCREMENTAL AGGREGATE MAINTENANCE: apply a changelog to a maintained
-    * `groupBy(grp).agg(count, sum)` WITHOUT touching the base fact table —
-    * the materialized-view maintenance primitive that makes a 100 TB
-    * rollup affordable to keep fresh: the work is proportional to the
-    * CHANGES (plus the aggregate's own |groups| rows), never to the facts.
-    * Counts and sums are self-maintainable under insert/update/delete
-    * (each change contributes an exact additive delta); min/max are not —
-    * they need the per-group recompute on delete, which is exactly why
-    * this operator restricts itself to the additive family.
-    *
-    * Change rows declare their effect positionally: an insert carries
-    * `(grp_new, v_new)` with null olds, a delete `(grp_old, v_old)` with
-    * null news, an update both (moving a row between groups when they
-    * differ). Values must be exact integers (cents) — incremental
-    * maintenance REORDERS additions relative to a full recompute, so IEEE
-    * float sums would drift; with integer deltas the maintained aggregate
-    * is bit-identical to recomputing from the final state, which is the
-    * oracle contract.
-    *
-    * Plan shape: one `explode` of the two signed delta structs per change,
-    * one grp-keyed partial-aggregated sum (bounded by |touched groups|),
-    * one full-outer join against the base aggregate (|groups| rows), all
-    * key-bounded. Groups whose maintained count reaches 0 are dropped
-    * (absence = empty, the engine-wide encoding).
-    *
-    * @param baseAgg (grp, n, sum_v) — the maintained aggregate
-    * @param changes (grp_old, v_old, grp_new, v_new) nullable as above
-    * @return updated (grp, n, sum_v)
-    */
-  def incrementalAgg(baseAgg: DataFrame, changes: DataFrame): DataFrame = {
-    val deltas = changes.select(explode(array(
-        struct(col("grp_old").as("grp"), lit(-1L).as("dn"),
-          (-col("v_old")).cast("long").as("dv")),
-        struct(col("grp_new").as("grp"), lit(1L).as("dn"),
-          col("v_new").cast("long").as("dv")))).as("d"))
-      .select(col("d.grp").as("grp"), col("d.dn"), col("d.dv"))
-      .filter(col("grp").isNotNull)
-      .groupBy("grp")
-      .agg(sum("dn").as("dn"), sum("dv").as("dv"))
-    baseAgg.join(deltas, Seq("grp"), "full_outer")
-      .select(col("grp"),
-        (coalesce(col("n"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n"),
-        (coalesce(col("sum_v"), lit(0L)) + coalesce(col("dv"), lit(0L)))
-          .as("sum_v"))
-      .filter(col("n") > 0)
-  }
 }

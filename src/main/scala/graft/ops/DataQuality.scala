@@ -203,33 +203,4 @@ object DataQuality {
         "d_a", "d_b", "null_drift", "card_drift", "bounds_moved")
       .orderBy("ord").drop("ord")
   }
-
-  /** Schema-evolution diff — the compatibility gate between two table
-    * versions: one verdict row per column name appearing in either
-    * schema, status ∈ {added, removed, type_changed, unchanged}. This is
-    * the check a 100 TB pipeline runs before accepting a new corpus
-    * snapshot whose producer may have evolved the schema — `removed` and
-    * `type_changed` break readers, `added` is the forward-compatible
-    * case. Pure metadata (StructType) — no data scan at any size; the
-    * output is a local relation.
-    *
-    * @return (column, type_a, type_b, status), column-name ordered;
-    *         absent side types are null
-    */
-  def schemaDiff(before: DataFrame, after: DataFrame): DataFrame = {
-    val spark = before.sparkSession
-    import spark.implicits._
-    val a = before.schema.fields.map(f => f.name -> f.dataType.sql).toMap
-    val b = after.schema.fields.map(f => f.name -> f.dataType.sql).toMap
-    (a.keySet ++ b.keySet).toSeq.sorted.map { c =>
-      val (ta, tb) = (a.get(c), b.get(c))
-      val status = (ta, tb) match {
-        case (Some(_), None) => "removed"
-        case (None, Some(_)) => "added"
-        case (Some(x), Some(y)) if x == y => "unchanged"
-        case _ => "type_changed"
-      }
-      (c, ta.orNull, tb.orNull, status)
-    }.toDF("column", "type_a", "type_b", "status")
-  }
 }

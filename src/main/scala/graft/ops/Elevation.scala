@@ -17,20 +17,24 @@ final case class ElevRow(feature_id: String, coord_idx: Long, lng: Double,
   * bilinear sampling, with missing tiles coalesced to sea level 0
   * (reference: src/elevation/getElevation.ts, fetchElevationTileData.ts).
   *
-  * Two physical paths, chosen by tile-side size:
+  * Two physical paths; the caller picks one:
   *
-  *  - [[lookupBroadcast]]: probe a broadcast [[TileIndex]] of the tile table
-  *    (bounded tile sets — the common case: a query's bbox covers few tiles)
-  *    with a codegen'd scalar expression: zero shuffle, and no join row ever
-  *    carries a tile payload. The two endpoints, [[addElevation]] and
-  *    [[polylineToTerrarium]], probe the same broadcast index inside each
-  *    feature or polyline row: no coordinate rows and no reassembly shuffle.
+  *  - [[lookupBroadcast]]: probe a broadcast [[TileIndex]] with a codegen'd
+  *    scalar expression: zero shuffle, and no join row ever carries a tile
+  *    payload. Over a bare [[graft.table.TileStore.readTiles]] scan the
+  *    index broadcasts file references and each executor loads a tile on
+  *    its first probe; any other tile set is collected and broadcast as
+  *    encoded rows (see [[TileIndex.broadcastIndex]]). The two endpoints,
+  *    [[addElevation]] and [[polylineToTerrarium]], probe the same index
+  *    inside each feature or polyline row: no coordinate rows and no
+  *    reassembly shuffle.
   *
-  *  - [[lookupCogroup]]: the 100 TB path. Both sides hash-partition on
+  *  - [[lookupCogroup]]: a shuffle join. Both sides hash-partition on
   *    (tile_key, salt); each group decodes its tile **once** and streams its
   *    coordinates through in-memory sampling. Salting (`salt > 1`) splits the
-  *    coordinate stream of hot tiles (urban-hotspot skew, north rule) across
-  *    `salt` reducers by replicating only the tile row — never the coords.
+  *    coordinate stream of hot tiles across `salt` reducers by replicating
+  *    only the tile row, never the coords. `geo_elev_cogroup` and the
+  *    headline bench's cogroup block run it.
   */
 object Elevation {
 

@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.graftshim.GraftColumns
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -160,47 +159,6 @@ object Sketches {
       .join(broadcast(sketch), Seq("j", "pos"), "left_outer")
       .groupBy(carried.toIndexedSeq: _*)
       .agg(min(coalesce(col("cnt"), lit(0L))).as("cm_est"))
-  }
-
-  /** EXACT mergeable distinct count over a bounded id domain — the
-    * roaring-bitmap-style counterpart to an HLL sketch: the per-group state
-    * is a fixed `nBits/8`-byte bitmap, reduced by bit-set and merged by
-    * byte-OR (associative + commutative ⇒ map-side partial aggregation is
-    * safe), finished by popcount. `count(distinct)` at 100 TB shuffles
-    * every (group, id) pair; this shuffles one small bitmap per
-    * (group, map partition) — exact, unlike HLL. Requires ids in
-    * [0, nBits); dictionary-encode wider domains first.
-    */
-  final class BitmapDistinctAgg(nBits: Int)
-      extends org.apache.spark.sql.expressions.Aggregator[Long, Array[Byte], Long] {
-    require(nBits > 0 && nBits % 8 == 0, s"nBits must be a positive multiple of 8: $nBits")
-    override def zero: Array[Byte] = new Array[Byte](nBits / 8)
-    // NEVER mutate the incoming buffer: a BINARY-encoded buffer can alias
-    // the aggregation hash map's shared row storage, and in-place bit-sets
-    // then leak across groups — copy-on-write is the safe contract
-    override def reduce(b: Array[Byte], id: Long): Array[Byte] = {
-      require(id >= 0 && id < nBits, s"id out of bitmap domain [0, $nBits): $id")
-      val p = id.toInt
-      val nb = b.clone()
-      nb(p >> 3) = (nb(p >> 3) | (1 << (p & 7))).toByte
-      nb
-    }
-    override def merge(x: Array[Byte], y: Array[Byte]): Array[Byte] = {
-      val nb = x.clone()
-      var i = 0
-      while (i < nb.length) { nb(i) = (nb(i) | y(i)).toByte; i += 1 }
-      nb
-    }
-    override def finish(b: Array[Byte]): Long = {
-      var n = 0L
-      var i = 0
-      while (i < b.length) { n += java.lang.Integer.bitCount(b(i) & 0xFF); i += 1 }
-      n
-    }
-    override def bufferEncoder: org.apache.spark.sql.Encoder[Array[Byte]] =
-      org.apache.spark.sql.Encoders.BINARY
-    override def outputEncoder: org.apache.spark.sql.Encoder[Long] =
-      org.apache.spark.sql.Encoders.scalaLong
   }
 }
 

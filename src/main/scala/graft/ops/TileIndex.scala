@@ -367,36 +367,25 @@ case class ElevAtExpr(left: Expression, right: Expression,
 }
 
 object ElevAt {
+  private def probe(lng: Column, lat: Column, bc: Broadcast[TileIndex],
+                    method: String): Column =
+    GraftColumns.column(ElevAtExpr(
+      GraftColumns.expression(lng.cast(DoubleType)),
+      GraftColumns.expression(lat.cast(DoubleType)), bc, method))
   def elev_at(lng: Column, lat: Column, bc: Broadcast[TileIndex]): Column =
-    GraftColumns.column(ElevAtExpr(
-      GraftColumns.expression(lng.cast(DoubleType)),
-      GraftColumns.expression(lat.cast(DoubleType)), bc))
+    probe(lng, lat, bc, "elevation")
   def elev_at_nearest(lng: Column, lat: Column, bc: Broadcast[TileIndex]): Column =
-    GraftColumns.column(ElevAtExpr(
-      GraftColumns.expression(lng.cast(DoubleType)),
-      GraftColumns.expression(lat.cast(DoubleType)), bc, "elevationNearest"))
+    probe(lng, lat, bc, "elevationNearest")
   def elev_slope2(lng: Column, lat: Column, bc: Broadcast[TileIndex]): Column =
-    GraftColumns.column(ElevAtExpr(
-      GraftColumns.expression(lng.cast(DoubleType)),
-      GraftColumns.expression(lat.cast(DoubleType)), bc, "slope2"))
+    probe(lng, lat, bc, "slope2")
   def elev_hillshade(lng: Column, lat: Column, bc: Broadcast[TileIndex]): Column =
-    GraftColumns.column(ElevAtExpr(
-      GraftColumns.expression(lng.cast(DoubleType)),
-      GraftColumns.expression(lat.cast(DoubleType)), bc, "hillshade"))
+    probe(lng, lat, bc, "hillshade")
   def elev_flowdir(lng: Column, lat: Column, bc: Broadcast[TileIndex]): Column =
-    GraftColumns.column(ElevAtExpr(
-      GraftColumns.expression(lng.cast(DoubleType)),
-      GraftColumns.expression(lat.cast(DoubleType)), bc, "flowdirD8"))
+    probe(lng, lat, bc, "flowdirD8")
   def elev_tri(lng: Column, lat: Column, bc: Broadcast[TileIndex]): Column =
-    GraftColumns.column(ElevAtExpr(
-      GraftColumns.expression(lng.cast(DoubleType)),
-      GraftColumns.expression(lat.cast(DoubleType)), bc, "tri"))
+    probe(lng, lat, bc, "tri")
   def elev_curvature(lng: Column, lat: Column, bc: Broadcast[TileIndex]): Column =
-    GraftColumns.column(ElevAtExpr(
-      GraftColumns.expression(lng.cast(DoubleType)),
-      GraftColumns.expression(lat.cast(DoubleType)), bc, "laplacian"))
+    probe(lng, lat, bc, "laplacian")
   def elev_aspect(lng: Column, lat: Column, bc: Broadcast[TileIndex]): Column =
-    GraftColumns.column(ElevAtExpr(
-      GraftColumns.expression(lng.cast(DoubleType)),
-      GraftColumns.expression(lat.cast(DoubleType)), bc, "aspectOctant"))
+    probe(lng, lat, bc, "aspectOctant")
 }

@@ -75,10 +75,4 @@ object GeoJsonSource {
     import features.sparkSession.implicits._
     features.map(_.feature_json).write.mode("overwrite").text(path)
   }
-
-  /** Collect into one FeatureCollection document (driver-side; for
-    * request-sized outputs, matching the reference's response shape).
-    */
-  def toDocument(features: Dataset[FeatureRow]): String =
-    GeoJson.featureCollection(features.collect().toSeq)
 }

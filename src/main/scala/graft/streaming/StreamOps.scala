@@ -164,49 +164,6 @@ object StreamOps {
     drain(spark, name)
   }
 
-  /** STREAMING CDC SNAPSHOT — latest-wins upsert state maintained as a
-    * stateful streaming aggregation: per key, `max_by(payload, seq)` over
-    * the change stream IS the snapshot (one struct register per key,
-    * merged by seq-max each micro-batch — order-insensitive under the
-    * engine-wide unique-(key, seq) changelog contract, so the drained
-    * complete-mode table equals the batch [[graft.ops.Cdc.applyChanges]]
-    * fold no matter how the source splits micro-batches). Delete markers
-    * ride the payload: the caller filters the drained snapshot on its op
-    * column (a winning 'D' = key absent), keeping the state machine to ONE
-    * declarative aggregate — no flatMapGroupsWithState, nothing custom to
-    * checkpoint beyond Spark's own aggregation state.
-    *
-    * Scale shape: state is one payload struct × |live keys| — the
-    * materialized table itself, the floor for ANY upsert view; a
-    * forever-running deployment compacts by emitting the snapshot and
-    * truncating the log (the streaming twin of the checkpoint store's
-    * snapshot+changelog split).
-    *
-    * @param path    parquet changelog: keyCol + seqCol + payload columns
-    * @param keyCol  upsert key
-    * @param seqCol  total change order per key (unique per key)
-    * @return one row per key: keyCol + payload of the key's LAST change
-    */
-  def cdcSnapshot(spark: SparkSession, path: String, keyCol: String,
-                  seqCol: String): DataFrame = {
-    val name = s"graft_stream_cdc_${runSeq.incrementAndGet()}"
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft_stream_ckpt_").toString
-    val schema = spark.read.parquet(path).schema
-    val payload = schema.fieldNames.filterNot(n => n == keyCol || n == seqCol)
-    val q = spark.readStream.schema(schema).parquet(path)
-      .groupBy(col(keyCol))
-      .agg(max_by(struct(payload.map(col).toIndexedSeq: _*), col(seqCol)).as("__latest"))
-      .writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", ckpt)
-      .outputMode("complete")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    drain(spark, name).select(col(keyCol) +:
-      payload.map(p => col(s"__latest.$p").as(p)).toIndexedSeq: _*)
-  }
-
   private def drain(spark: SparkSession, name: String): DataFrame = {
     val out = spark.table(name).cache()
     out.count()

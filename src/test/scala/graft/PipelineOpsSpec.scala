@@ -861,49 +861,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (4L, 1L, 1L, 1.0)))      // f OOV
   }
 
-  test("simplifyChunked equals per-chunk DP; degenerates to whole-line DP for big chunks") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(31)
-    val verts = for {
-      line <- 0 until 5
-      s <- 0 until 53 // deliberately not a multiple of the chunk size
-    } yield (line.toLong, s.toLong * 3, rnd.nextDouble() * 2, rnd.nextDouble() * 2)
-    val df = verts.toDF("line_id", "seq", "lng", "lat")
-    val eps = 0.2
-    val chunk = 16
-    val got = graft.ops.Trajectory.simplifyChunked(df, eps, chunk)
-      .as[(Long, Long, Double, Double)].collect().toSet
-    // brute force: chunks of 16 ranks with shared boundaries, DP each
-    val expected = verts.groupBy(_._1).flatMap { case (lid, pts0) =>
-      val pts = pts0.sortBy(_._2).toArray
-      val nChunks = (pts.length - 1 + chunk - 1) / chunk
-      (0 until math.max(nChunks, 1)).flatMap { c =>
-        val lo = c * chunk
-        val hi = math.min(lo + chunk, pts.length - 1)
-        val slice = pts.slice(lo, hi + 1)
-        val keep = graft.geo.Simplify.douglasPeucker(
-          slice.map(_._3), slice.map(_._4), eps)
-        slice.indices.filter(keep).map(i =>
-          (lid, slice(i)._2, slice(i)._3, slice(i)._4))
-      }
-    }.toSet
-    assert(got == expected)
-    // chunk >= line length: identical to whole-line DP
-    val whole = graft.ops.Trajectory.simplify(df, eps)
-      .as[(Long, Long, Double, Double)].collect().toSet
-    val big = graft.ops.Trajectory.simplifyChunked(df, eps, chunk = 1000)
-      .as[(Long, Long, Double, Double)].collect().toSet
-    assert(big == whole)
-    // all chunk-boundary vertices survive
-    verts.groupBy(_._1).foreach { case (lid, pts0) =>
-      val pts = pts0.sortBy(_._2).toArray
-      pts.indices.filter(i => i % chunk == 0 || i == pts.length - 1).foreach { i =>
-        assert(got.contains((lid, pts(i)._2, pts(i)._3, pts(i)._4)),
-          s"boundary rank $i of line $lid dropped")
-      }
-    }
-  }
-
   test("sq8 codes round-trip within one quantization step") {
     import spark.implicits._
     val rnd = new scala.util.Random(3)
@@ -1050,24 +1007,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "pair sets differ (or a pair was emitted from more than one cell)")
   }
 
-  test("dwellRuns finds exactly the maximal same-cell runs of length >= minRun") {
-    import spark.implicits._
-    val ts0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
-    def at(m: Int) = new java.sql.Timestamp(ts0.getTime + m * 60000L)
-    // user 1: cells A A A B A A A A; user 2: all distinct
-    val cells1 = Seq(10L, 10L, 10L, 20L, 10L, 10L, 10L, 10L)
-    val rows = cells1.zipWithIndex.map { case (c, i) =>
-      (1L, at(i), i.toLong, c)
-    } ++ (0 until 6).map(i => (2L, at(i), (100 + i).toLong, (30L + i)))
-    val got = graft.ops.Trajectory.dwellRuns(
-        rows.toDF("traj_id", "ts", "tie", "cell"), minRun = 3)
-      .as[(Long, Long, Long, java.sql.Timestamp, java.sql.Timestamp)]
-      .collect().sortBy(r => (r._1, r._4.getTime))
-    assert(got.length == 2)
-    assert(got(0) == (1L, 10L, 3L, at(0), at(2)), "first A-run")
-    assert(got(1) == (1L, 10L, 4L, at(4), at(7)), "second A-run (after the B gap)")
-  }
-
   test("pagerank: 3 rounds on a hand-walked 4-node graph (with a pure-source node)") {
     import spark.implicits._
     // 0->1, 0->2, 1->2, 2->0, 3->0 ; node 3 is a pure source
@@ -1088,34 +1027,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     nodes.foreach(v => assert(got(v) == r(v), s"node $v"))
     // source node 3 (no in-edges) settles at pure teleport from round 1 on
     assert(got(3L) == 150000L)
-  }
-
-  test("hits: 3 rounds on a hand-walked graph; pure source has zero authority") {
-    import spark.implicits._
-    val e = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 0L), (3L, 0L))
-    val got = graft.ops.Graph.hits(e.toDF("src", "dst"), rounds = 3)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    // driver-side replay in exact ppm integer arithmetic (standard update
-    // order: authorities from OLD hubs, hubs from NEW authorities)
-    val nodes = e.flatMap(t => Seq(t._1, t._2)).distinct
-    var hub = nodes.map(_ -> 1000000L).toMap
-    var auth = nodes.map(_ -> 1000000L).toMap
-    def norm(raw: Map[Long, Long]): Map[Long, Long] = {
-      val tot = raw.values.sum
-      nodes.map(v => v -> raw.getOrElse(v, 0L) * 1000000L / tot).toMap
-    }
-    for (_ <- 1 to 3) {
-      auth = norm(nodes.map(v =>
-        v -> e.filter(_._2 == v).map(t => hub(t._1)).sum).filter(_._2 > 0).toMap)
-      hub = norm(nodes.map(v =>
-        v -> e.filter(_._1 == v).map(t => auth(t._2)).sum).filter(_._2 > 0).toMap)
-    }
-    nodes.foreach(v => assert(got(v) == ((auth(v), hub(v))), s"node $v"))
-    // node 3 points but is never pointed at: authority 0, positive hub
-    assert(got(3L)._1 == 0L && got(3L)._2 > 0L)
-    // L1 contract: each score vector sums to <= 1e6 (truncating division)
-    assert(got.values.map(_._1).sum <= 1000000L &&
-      got.values.map(_._2).sum <= 1000000L)
   }
 
   test("labelPropagate: mode vote with min-label ties on two bridged triangles") {
@@ -1155,21 +1066,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("odMatrix: endpoints by (ts, tie) total order; one flow per trajectory") {
-    import spark.implicits._
-    val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
-    def t(s: Int) = new java.sql.Timestamp(ts0.getTime + s * 1000L)
-    val pts = Seq(
-      (1L, t(0), 1L, 10L), (1L, t(5), 2L, 20L), (1L, t(9), 3L, 30L),
-      (2L, t(1), 4L, 10L), (2L, t(2), 5L, 30L),
-      (3L, t(3), 6L, 30L), // single-sample trajectory: o == d
-      // equal timestamps — tie column decides first/last
-      (4L, t(7), 8L, 40L), (4L, t(7), 7L, 10L)
-    ).toDF("traj_id", "ts", "tie", "cell")
-    val got = graft.ops.Trajectory.odMatrix(pts)
-      .as[(Long, Long, Long)].collect().toSet
-    assert(got == Set((10L, 30L, 2L), (30L, 30L, 1L), (10L, 40L, 1L)))
-  }
   test("ivfRangeSearch equals brute force over the probed lists at the threshold") {
     import spark.implicits._
     def vec(i: Int): Array[Float] =
@@ -1292,86 +1188,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (one.bytes(10) & 0xff) == ((5 * 31 + 10 * 7) % 256))
   }
 
-  test("commonNeighbors matches brute force and excludes adjacent pairs") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(7)
-    val raw = (0 until 400).map(_ => (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
-    val got = graft.ops.Graph.commonNeighbors(raw.toDF("src", "dst"), 30)
-      .as[(Long, Long, Long)].collect()
-    // brute force
-    val edges = raw.collect { case (s, d) if s != d =>
-      (math.min(s, d), math.max(s, d)) }.toSet
-    val nbrs = edges.toSeq.flatMap(e => Seq(e._1 -> e._2, e._2 -> e._1))
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-    val nodes = nbrs.keys.toSeq
-    val want = (for {
-      a <- nodes; b <- nodes if a < b && !edges.contains((a, b))
-      cn = (nbrs(a) & nbrs(b)).size if cn > 0
-    } yield (a, b, cn.toLong))
-      .sortBy { case (a, b, cn) => (-cn, a, b) }.take(30)
-    assert(got.toSeq == want, "top-30 suggestions differ from brute force")
-    got.foreach { case (a, b, _) =>
-      assert(!edges.contains((a, b)), s"adjacent pair ($a,$b) suggested") }
-  }
-
-  test("pointAlong matches brute force; endpoints and single-vertex lines") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(5)
-    // random lines incl. a single-vertex line and duplicate vertices
-    val verts = (0 until 20).flatMap { lid =>
-      val n = if (lid == 0) 1 else 2 + rnd.nextInt(8)
-      (0 until n).map { i =>
-        val dup = lid == 3 && i == 2 // duplicated vertex (zero-length seg)
-        val base = if (dup) 1 else i
-        (lid.toLong, i.toLong,
-          -120.0 + lid * 0.1 + base * rnd.nextDouble() * 0.01,
-          36.0 + base * rnd.nextDouble() * 0.01)
-      }
-    }
-    val fracs = Seq(0L, 250000L, 500000L, 1000000L)
-    val got = graft.ops.Trajectory.pointAlong(
-        verts.toDF("line_id", "seq", "lng", "lat"), fracs)
-      .as[(Long, Long, Long, Long)].collect()
-      .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
-    // brute force in the same integer model
-    val byLine = verts.groupBy(_._1)
-    byLine.foreach { case (lid, vs) =>
-      val q = vs.sortBy(_._2).map(v =>
-        (math.floor(v._3 * 1e6).toLong, math.floor(v._4 * 1e6).toLong))
-      val segs = q.zip(q.drop(1)).map { case ((x0, y0), (x1, y1)) =>
-        math.floor(math.sqrt(
-          ((x1 - x0) * (x1 - x0) + (y1 - y0) * (y1 - y0)).toDouble)).toLong
-      }
-      val total = segs.sum
-      fracs.foreach { f =>
-        val target = total * f / 1000000L
-        val want =
-          if (target == 0) q.head
-          else {
-            var cum = 0L; var i = 0
-            while (cum + segs(i) < target) { cum += segs(i); i += 1 }
-            // first segment with prev < target <= cum; skip zero segs
-            while (segs(i) == 0) { i += 1 }
-            val off = target - cum
-            val (x0, y0) = q(i); val (x1, y1) = q(i + 1)
-            def lerp(a: Long, b: Long): Long =
-              if (b >= a) a + (b - a) * off / segs(i)
-              else a - (a - b) * off / segs(i)
-            (lerp(x0, x1), lerp(y0, y1))
-          }
-        assert(got((lid, f)) == want, s"line $lid frac $f")
-      }
-    }
-    // exactly one row per (line, fraction)
-    assert(got.size == byLine.size * fracs.size)
-    // f=1000000 lands exactly on the last vertex
-    byLine.foreach { case (lid, vs) =>
-      val last = vs.maxBy(_._2)
-      assert(got((lid, 1000000L)) ==
-        ((math.floor(last._3 * 1e6).toLong, math.floor(last._4 * 1e6).toLong)))
-    }
-  }
-
   test("clippingAudit: hand-crafted runs, threshold inclusivity, clean media") {
     import spark.implicits._
     def media(id: Long, vs: Seq[Int]) = graft.ops.MediaOps.MediaRow(
@@ -1388,58 +1204,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got(1L) == ((8L, 5L, 2L, 3L)))
     assert(got(2L) == ((5L, 0L, 0L, 0L)))
     assert(got(3L) == ((1L, 1L, 1L, 1L)))
-  }
-
-  test("sssp: hand-walked weighted graph; R-hop horizon; min over multi-edges") {
-    import spark.implicits._
-    // 0-1(1), 0-2(5), 1-2(1), 2-3(1), 3-4(1), plus a worse duplicate 0->1(3)
-    val edges = Seq((0L, 1L, 1L), (0L, 2L, 5L), (1L, 2L, 1L), (2L, 3L, 1L),
-      (3L, 4L, 1L), (0L, 1L, 3L)).toDF("src", "dst", "w")
-    val d4 = graft.ops.Graph.sssp(edges, 0L, rounds = 4)
-      .as[(Long, Long)].collect().toMap
-    assert(d4 == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 3L, 4L -> 4L))
-    // 2 rounds: node 4 (4 hops away) absent; node 3 reachable in 2 hops
-    // only via the expensive 0-2(5)-3(1) path, so its 2-hop-optimal
-    // distance is 6 — tightened to 3 by rounds 3-4 above
-    val d2 = graft.ops.Graph.sssp(edges, 0L, rounds = 2)
-      .as[(Long, Long)].collect().toMap
-    assert(d2 == Map(0L -> 0L, 1L -> 1L, 2L -> 2L, 3L -> 6L))
-  }
-
-  test("resample: brute-force time lerp; aligned fixes and duplicate ts") {
-    import spark.implicits._
-    val step = 100L
-    // traj 1: aligned first fix, a long segment spanning 3 ticks, dup-ts fix
-    val pts = Seq(
-      (1L, 200L, 1L, 10.0, 20.0), (1L, 450L, 2L, 10.001, 20.002),
-      (1L, 450L, 3L, 10.002, 20.001), (1L, 650L, 4L, 10.004, 20.000),
-      // traj 2: unaligned start, single tick inside
-      (2L, 130L, 5L, -5.0, -6.0), (2L, 330L, 6L, -5.002, -6.004))
-      .toDF("traj_id", "ts_us", "tie", "lng", "lat")
-    val got = graft.ops.Trajectory.resample(pts, step)
-      .as[(Long, Long, Long, Long)].collect()
-      .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
-    def q(v: Double) = math.floor(v * 1e6).toLong
-    def lerp(a: Long, b: Long, off: Long, den: Long): Long =
-      if (b >= a) a + (b - a) * off / den else a - (a - b) * off / den
-    // traj 1 ticks: 200 (aligned first fix), 300/400 in (200,450] via tie=2,
-    // 500/600 in (450,650] from the LAST dup-ts fix (tie=3 position)
-    assert(got((1L, 200L)) == ((q(10.0), q(20.0))))
-    assert(got((1L, 300L)) ==
-      ((lerp(q(10.0), q(10.001), 100, 250), lerp(q(20.0), q(20.002), 100, 250))))
-    assert(got((1L, 400L)) ==
-      ((lerp(q(10.0), q(10.001), 200, 250), lerp(q(20.0), q(20.002), 200, 250))))
-    assert(got((1L, 500L)) ==
-      ((lerp(q(10.002), q(10.004), 50, 200), lerp(q(20.001), q(20.000), 50, 200))))
-    assert(got((1L, 600L)) ==
-      ((lerp(q(10.002), q(10.004), 150, 200), lerp(q(20.001), q(20.000), 150, 200))))
-    // traj 2: only ticks 200 and 300 inside (130, 330]
-    assert(got((2L, 200L)) ==
-      ((lerp(q(-5.0), q(-5.002), 70, 200), lerp(q(-6.0), q(-6.004), 70, 200))))
-    assert(got((2L, 300L)) ==
-      ((lerp(q(-5.0), q(-5.002), 170, 200), lerp(q(-6.0), q(-6.004), 170, 200))))
-    // exactly these ticks, nothing else (dup-ts fix emitted no tick itself)
-    assert(got.size == 7)
   }
 
   test("speedFlags: teleports, dup-ts fixes, and first-fix semantics") {
@@ -1506,25 +1270,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       6L -> ("f2", 61.0)))  // re-insert after delete
   }
 
-  test("gapFill: spine spans per key, forward fill, gap flags") {
-    import spark.implicits._
-    // key a: observations at buckets 0, 3 (gap at 1, 2); key b: single obs
-    val rows = Seq(
-      ("a", 50L, 10L), ("a", 80L, 5L),   // bucket 0 (step 100): sum 15
-      ("a", 320L, 7L),                    // bucket 3
-      ("b", 1010L, 2L))
-      .toDF("k", "ts", "v")
-    val got = graft.ops.AsofJoin.gapFill(rows, "k", col("ts"), col("v"), 100L)
-      .as[(String, Long, Long, Boolean)].collect()
-      .map(r => (r._1, r._2) -> (r._3, r._4)).toMap
-    assert(got == Map(
-      ("a", 0L) -> (15L, false),
-      ("a", 100L) -> (15L, true),
-      ("a", 200L) -> (15L, true),
-      ("a", 300L) -> (7L, false),
-      ("b", 1000L) -> (2L, false)))
-  }
-
   test("mixtureWeights: exact ppm shares, uniform target, ceil epochs") {
     import spark.implicits._
     val docs = Seq(
@@ -1543,27 +1288,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got("c") == ((2L, 125000L, 2666664L, 3L)))
     // under-represented sources get weight > 1e6, over-represented < 1e6
     assert(got("a")._3 < 1000000L && got("c")._3 > 1000000L)
-  }
-
-  test("cdc scd2: interval chain, deletes close, last open version is current") {
-    import spark.implicits._
-    val changes = Seq(
-      (1L, "a", 1L, "I"), (1L, "a2", 3L, "U"), (1L, "a3", 7L, "U"), // open chain
-      (2L, "b", 1L, "I"), (2L, "x", 4L, "D"),                       // closed by D
-      (3L, "c", 2L, "I"), (3L, "x", 5L, "D"), (3L, "c2", 9L, "I")   // re-insert
-    ).toDF("k", "name", "seq", "op")
-    val got = graft.ops.Cdc.scd2(changes, Seq("k"))
-      .as[(Long, String, Long, Option[Long], Boolean)].collect()
-      .map(r => (r._1, r._3) -> (r._2, r._4, r._5)).toMap
-    assert(got == Map(
-      (1L, 1L) -> ("a", Some(3L), false),
-      (1L, 3L) -> ("a2", Some(7L), false),
-      (1L, 7L) -> ("a3", None, true),
-      (2L, 1L) -> ("b", Some(4L), false),  // closed by the delete, not current
-      (3L, 2L) -> ("c", Some(5L), false),
-      (3L, 9L) -> ("c2", None, true)))     // re-insert after delete is current
-    // D rows themselves never appear
-    assert(got.size == 6)
   }
 
   test("dataQuality check: each rule class counts violations exactly") {
@@ -1606,22 +1330,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got("s") == ((3L, 0L, 2L, None, None)))
   }
 
-  test("kcore: peeling cascades down chains, cliques survive") {
-    import spark.implicits._
-    // triangle 1-2-3 (+ pendant 4-1, chain 5-6) with k=2: the pendant and
-    // the chain peel (chain in round 1, nothing cascades INTO the triangle)
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (5L, 6L))
-      .toDF("src", "dst")
-    val got = graft.ops.Graph.kcore(edges, k = 2, rounds = 3)
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
-    // a pure path of 4 nodes peels COMPLETELY, but only via the cascade:
-    // round 1 drops the endpoints, round 2 the middle (degree was 2 before)
-    val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
-    assert(graft.ops.Graph.kcore(path, k = 2, rounds = 3).count() == 0L)
-    assert(graft.ops.Graph.kcore(path, k = 2, rounds = 1).count() == 2L)
-  }
-
   test("quadkey: Bing golden vectors and prefix property") {
     import spark.implicits._
     // bing maps tile-system doc example: tile (3, 5) at level 3 -> "213"
@@ -1637,40 +1345,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("qk", graft.functions.raster.quadkey($"x", $"y", 2))
       .as[(Int, Int, String)].collect().head._3
     assert(got((3, 5)).startsWith(parent))
-  }
-
-  test("incrementalAgg: deltas match recompute, moves move, empty groups drop") {
-    import spark.implicits._
-    val baseAgg = Seq((1L, 2L, 100L), (2L, 1L, 50L)).toDF("grp", "n", "sum_v")
-    val changes = Seq(
-      // insert into a NEW group 3
-      (None, None, Some(3L), Some(7L)),
-      // update moving a row from group 1 to group 2 (value 60 -> 65)
-      (Some(1L), Some(60L), Some(2L), Some(65L)),
-      // delete group 2's only original row -> group 2 = the moved row only
-      (Some(2L), Some(50L), None, None)
-    ).toDF("grp_old", "v_old", "grp_new", "v_new")
-    val got = graft.ops.Cdc.incrementalAgg(baseAgg, changes)
-      .as[(Long, Long, Long)].collect().map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(got == Map(1L -> ((1L, 40L)), 2L -> ((1L, 65L)), 3L -> ((1L, 7L))))
-    // a delete that empties a group removes the row entirely
-    val wipe = Seq((Some(3L), Some(7L), Option.empty[Long], Option.empty[Long]))
-      .toDF("grp_old", "v_old", "grp_new", "v_new")
-    val after = graft.ops.Cdc.incrementalAgg(
-        Seq((3L, 1L, 7L)).toDF("grp", "n", "sum_v"), wipe)
-    assert(after.count() == 0L)
-  }
-
-  test("hausdorff: symmetric max-min over point sets, brute-force checked") {
-    import spark.implicits._
-    // A = {(0,0),(10,0)}, B = {(0,1),(10,0),(20,0)}:
-    // h(A,B): a(0,0)->1, a(10,0)->0 => 1;  h(B,A): 1, 0, 100 => 100
-    val pts = Seq((1L, 0L, 0L), (1L, 10L, 0L),
-      (2L, 0L, 1L), (2L, 10L, 0L), (2L, 20L, 0L)).toDF("traj_id", "px", "py")
-    val pairs = Seq((1L, 2L)).toDF("t1", "t2")
-    val got = graft.ops.Trajectory.hausdorff(pts, pairs)
-      .as[(Long, Long, Long, Long, Long)].collect().head
-    assert(got == ((1L, 2L, 2L, 3L, 100L)))
   }
 
   test("hex_grid_distance: column arithmetic equals Hex.gridDistance") {
@@ -1691,22 +1365,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .withColumn("d", graft.functions.cells.hex_grid_distance($"a", $"b"))
       .as[(Long, Long, Long)].collect()
     assert(nd.forall(_._3 == 1L) && nd.length == 6)
-  }
-
-  test("degreeMix: moments on a star vs a cycle separate assortativity signs") {
-    import spark.implicits._
-    // star K1,4: every edge joins deg-4 hub to deg-1 leaf -> num < 0
-    val star = Seq((0L, 1L), (0L, 2L), (0L, 3L), (0L, 4L)).toDF("src", "dst")
-    val s = graft.ops.Graph.degreeMix(star)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().head
-    // sym edges: 8; du sum = 4*4 + 4*1; sxy = 8 * (4*1); sxx = 4*16 + 4*1
-    assert(s == ((8L, 20L, 32L, 68L, 8L * 32L - 400L, 8L * 68L - 400L)))
-    assert(s._5 < 0L, "star must be disassortative")
-    // 4-cycle: regular graph -> zero numerator (and zero denominator)
-    val cyc = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L)).toDF("src", "dst")
-    val c = graft.ops.Graph.degreeMix(cyc)
-      .as[(Long, Long, Long, Long, Long, Long)].collect().head
-    assert(c._5 == 0L && c._6 == 0L)
   }
 
   test("dataQuality drift: ppm verdicts fire exactly on their planted causes") {
@@ -1766,42 +1424,6 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, 1L, 5L, 5L, 1L)))
   }
 
-  test("Trajectory.convoy matches brute-force maximal-run extraction") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(11)
-    // 12 trajectories over 20 buckets, 4 shared cells, random presence
-    val pts = for {
-      t <- 0L until 12L; tb <- 0L until 20L
-      if rnd.nextInt(3) > 0
-    } yield (t, (t % 4) * 100 + tb % 3, tb)
-    val df = pts.toDF("traj_id", "cell", "tb")
-    val got = graft.ops.Trajectory.convoy(df, minLen = 3)
-      .as[(Long, Long, Long, Long)].collect().toSet
-    // brute force: contact buckets per pair, then maximal runs
-    val byTraj = pts.groupBy(_._1)
-      .map { case (t, rows) => t -> rows.map(r => (r._2, r._3)).toSet }
-    val want = (for {
-      a <- 0L until 12L; b <- (a + 1) until 12L
-      cTbs = (for { (ca, tba) <- byTraj.getOrElse(a, Set.empty)
-                    if byTraj.getOrElse(b, Set.empty).contains((ca, tba)) }
-        yield tba).toSeq.distinct.sorted
-      if cTbs.nonEmpty
-      run <- {
-        // split into maximal consecutive runs
-        val runs = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
-        var cur = Seq(cTbs.head)
-        for (tb <- cTbs.tail) {
-          if (tb == cur.last + 1) cur :+= tb
-          else { runs += cur; cur = Seq(tb) }
-        }
-        runs += cur
-        runs.toSeq
-      }
-      if run.length >= 3
-    } yield (a, b, run.head, run.length.toLong)).toSet
-    assert(got == want)
-  }
-
   test("Trajectory.frechet matches the recursive definition; orders where Hausdorff cannot") {
     import spark.implicits._
     val rnd = new scala.util.Random(13)
@@ -1843,17 +1465,5 @@ class PipelineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // in reverse order — Fréchet must see the difference unless the path
     // is a palindrome
     if (base.head != base.head.reverse) assert(got((0L, 8L)) > 0L)
-  }
-
-  test("BitmapDistinctAgg equals countDistinct") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(17)
-    val rows = (0 until 2000).map(_ => (s"g${rnd.nextInt(4)}", rnd.nextInt(512).toLong))
-    val got = rows.toDF("g", "id").as[(String, Long)]
-      .groupByKey(_._1).mapValues(_._2)
-      .agg(new graft.ops.Sketches.BitmapDistinctAgg(512).toColumn.name("n"))
-      .collect().toMap
-    val want = rows.groupBy(_._1).map { case (g, rs) => g -> rs.map(_._2).distinct.size.toLong }
-    assert(got == want)
   }
 }

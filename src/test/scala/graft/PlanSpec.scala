@@ -204,20 +204,12 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       val ch = (0 until 50).map(i => (i.toLong, i * 2.0, 1L, "U"))
         .toDF("k", "v", "seq", "op")
       audit(graft.ops.Cdc.applyChanges(base, ch, Seq("k")), 1, "cdc")
-      // gap fill: bucket rollup + spine agg + join/window — all keyed
-      val ev = (0 until 500).map(i => (s"t${i % 3}", i.toLong * 7, i.toLong))
-        .toDF("k", "ts", "v")
-      audit(graft.ops.AsofJoin.gapFill(ev, "k", col("ts"), col("v"), 100L),
-        4, "gapFill")
-      // speed flags / pointAlong / resample: ONE traj window exchange each
+      // speed flags: ONE traj window exchange
       val pts = (0 until 200).map(i =>
         (i.toLong % 5, 1000000L + i * 1000L, i.toLong,
           -119.0 + i * 1e-4, 36.0 + i * 1e-4))
         .toDF("traj_id", "ts_us", "tie", "lng", "lat")
       audit(graft.ops.Trajectory.speedFlags(pts, 100L), 1, "speedFlags")
-      audit(graft.ops.Trajectory.resample(pts, 100000L), 2, "resample")
-      val lverts = pts.selectExpr("traj_id AS line_id", "tie AS seq", "lng", "lat")
-      audit(graft.ops.Trajectory.pointAlong(lverts, Seq(500000L)), 1, "pointAlong")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
@@ -622,17 +614,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"snap fell back to all-pairs:\n$p2")
   }
 
-  test("colocation: bucketed self-equi-join on (cell, tb), never all-pairs") {
-    import spark.implicits._
-    val pts = (0 until 5000).map(i =>
-      (i % 40L, (i * 7) % 30L, (i * 13) % 5L)).toDF("traj_id", "cell", "tb")
-    val out = graft.ops.Trajectory.colocation(pts)
-    assert(out.collect().nonEmpty)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"colocation fell back to all-pairs:\n$plan")
-  }
-
   test("pagerank: no cartesian; edge contributions partial-aggregate per dst") {
     import spark.implicits._
     val edges = (0 until 3000).map(i =>
@@ -656,66 +637,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("BroadcastHashJoin"),
       s"direction join must broadcast the 64-row side:\n$plan")
     assert(!plan.contains("CartesianProduct"), s"cartesian in pcaProject:\n$plan")
-  }
-
-  test("hausdorff: pair-keyed expansion and aggregations, no nested-loop refine") {
-    import spark.implicits._
-    val pts = (0 until 2000).map(i =>
-      (i % 20L, (i * 7) % 101L, (i * 13) % 97L)).toDF("traj_id", "px", "py")
-    val pairs = (0 until 19).map(i => (i.toLong, i + 1L)).toDF("t1", "t2")
-    val out = graft.ops.Trajectory.hausdorff(pts, pairs)
-    assert(out.collect().length == 19)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"hausdorff planned an all-pairs join:\n$plan")
-  }
-
-  test("kcore: both survivor semi-joins and the degree count stay key-bounded") {
-    import spark.implicits._
-    val edges = (0 until 4000).map(i =>
-      (i % 300L, (i * 17 + (i / 300) * 7) % 300L)).toDF("src", "dst")
-    val out = graft.ops.Graph.kcore(edges, k = 5, rounds = 3)
-    assert(out.collect().nonEmpty)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"kcore planned an all-pairs join:\n$plan")
-  }
-
-  test("incrementalAgg: delta path partial-aggregates; no scan of base facts") {
-    import spark.implicits._
-    val baseAgg = (0 until 16).map(i => (i.toLong, 100L, 10000L))
-      .toDF("grp", "n", "sum_v")
-    val changes = (0 until 2000).map { i =>
-      (Some(i % 16L), Some(i.toLong), Some((i + 1) % 16L), Some(i + 5L))
-    }.toDF("grp_old", "v_old", "grp_new", "v_new")
-    val out = graft.ops.Cdc.incrementalAgg(baseAgg, changes)
-    out.collect()
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
-      s"incrementalAgg planned an all-pairs join:\n$plan")
-    // the signed deltas partial-aggregate before the shuffle (map-side
-    // combine on grp), so delta traffic is bounded by touched groups
-    assert(plan.contains("partial_sum") || plan.contains("HashAggregate"),
-      s"delta aggregation missing its partial phase:\n$plan")
-  }
-
-  test("clusteringCoeff: key-bounded joins, no cartesian; closure invariants") {
-    import spark.implicits._
-    val edges = (0 until 3000).map(i => ((i * 7 % 300).toLong, (i * 13 % 300).toLong))
-      .toDF("src", "dst")
-    val out = graft.ops.Graph.clusteringCoeff(edges)
-    val rows = out.collect()
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"clusteringCoeff planned an unkeyed join:\n$plan")
-    // local closure is bounded by the wedge count, and 3x the per-node
-    // triangle total equals 3 * the global triangle count
-    rows.foreach { r =>
-      assert(r.getAs[Long]("tri_cnt") <= r.getAs[Long]("wedges"),
-        s"node ${r.getAs[Long]("node")}: tri > wedges")
-    }
-    val triTotal = graft.ops.Graph.triangles(edges).count()
-    assert(rows.map(_.getAs[Long]("tri_cnt")).sum == 3 * triTotal)
   }
 
   test("editVerify: candidate-keyed hash joins, banded levenshtein, no cartesian") {
@@ -747,6 +668,20 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"otsu must not shuffle:\n$plan")
   }
 
+  test("triangles: K4 plus a pendant edge is 4 triangles; no cartesian or nested-loop join") {
+    import spark.implicits._
+    // K4 on {0,1,2,3} (4 triangles) + pendant 3-9 (in none)
+    val edges = (for { a <- 0 to 3; b <- 0 to 3 if a < b } yield
+      (a.toLong, b.toLong)).toSeq :+ (3L, 9L)
+    val out = graft.ops.Graph.triangles(edges.toDF("src", "dst"))
+    val rows = out.as[(Long, Long, Long)].collect()
+    assert(rows.length == 4)
+    assert(rows.toSet == Set((0L, 1L, 2L), (0L, 1L, 3L), (0L, 2L, 3L), (1L, 2L, 3L)))
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+      s"triangles planned an unkeyed join:\n$plan")
+  }
+
   test("trussSupport: K4 edges support 2, pendant 0; sum = 3·triangles; no cartesian") {
     import spark.implicits._
     // K4 on {0,1,2,3} (4 triangles, every edge in exactly 2) + pendant 3-9
@@ -766,28 +701,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"trussSupport planned an unkeyed join:\n$plan")
   }
 
-  test("biproject: hub pruned before the pair join, weights exact, no cartesian") {
-    import spark.implicits._
-    // user 1 is a hub (6 items > maxDegree 5): contributes NO pairs;
-    // users 2 and 3 both touch items {2,3} => weight 2 pair survives
-    val edges = ((1 to 6).map(i => (1L, i.toLong)) ++
-      Seq((2L, 1L), (2L, 2L), (2L, 3L), (3L, 2L), (3L, 3L)))
-      .toDF("src", "dst")
-    val out = graft.ops.Graph.biproject(edges, maxDegree = 5L, minWeight = 2L)
-    val rows = out.collect()
-    assert(rows.length == 1)
-    assert(rows.head.getAs[Long]("item_a") == 2L
-      && rows.head.getAs[Long]("item_b") == 3L
-      && rows.head.getAs[Long]("w") == 2L)
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      s"biproject planned an unkeyed join:\n$plan")
-    // without the prune the hub's pairs appear (user 2/3 pairs coincide
-    // with hub pairs, so the distinct-pair count is exactly C(6,2))
-    val unpruned = graft.ops.Graph.biproject(edges, maxDegree = 50L, minWeight = 1L)
-    assert(unpruned.count() == 15)
-  }
-
   test("readability: hand-checked Flesch pieces, floored negative division") {
     import spark.implicits._
     val docs = Seq((1L, "Hello world. It is good!")).toDF("doc_id", "text")
@@ -800,24 +713,6 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.getAs[Long]("flesch_milli") == -103850L)
   }
 
-  test("reciprocity: mutual pairs exact, self-loops/dups dropped, keyed semi-join") {
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 1L), (1L, 3L), (3L, 4L), (4L, 3L),
-      (5L, 5L), (1L, 2L)).toDF("src", "dst")
-    val out = graft.ops.Graph.reciprocity(edges)
-    val r = out.collect().head
-    assert(r.getAs[Long]("n_nodes") == 4L && r.getAs[Long]("n_edges") == 5L)
-    assert(r.getAs[Long]("n_recip") == 4L && r.getAs[Long]("n_mutual_pairs") == 2L)
-    // the DATA join (mutual-edge detection) must be a keyed semi-join; the
-    // final 1-row × 1-row combines are literal crossJoins and may plan as
-    // BroadcastNestedLoopJoin — that's constant-size, not a scale hazard
-    val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"),
-      s"reciprocity planned a cartesian:\n$plan")
-    assert(plan.contains("LeftSemi"),
-      s"mutual-edge detection must be a keyed semi-join:\n$plan")
-  }
-
   test("simpson: exact ppm on a hand-counted doc, join-free two-agg plan") {
     import spark.implicits._
     val docs = Seq((1L, "a a b")).toDF("doc_id", "text")
@@ -828,20 +723,5 @@ class PlanSpec extends AnyFunSuite with BeforeAndAfterAll {
     val plan = graft.ops.Curation.simpson(docs, col("text"))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Join"), s"simpson must be join-free:\n$plan")
-  }
-
-  test("schemaDiff: added/removed/type_changed/unchanged verdicts") {
-    import spark.implicits._
-    val before = Seq((1L, "a", 1.0)).toDF("k", "s", "p")
-    val after = before.drop("s")
-      .withColumn("p", col("p").cast("decimal(10,2)"))
-      .withColumn("extra", lit(1))
-    val got = graft.ops.DataQuality.schemaDiff(before, after)
-      .collect().map(r => r.getString(0) ->
-        ((Option(r.getString(1)), Option(r.getString(2)), r.getString(3)))).toMap
-    assert(got("k") == ((Some("BIGINT"), Some("BIGINT"), "unchanged")))
-    assert(got("s") == ((Some("STRING"), None, "removed")))
-    assert(got("p") == ((Some("DOUBLE"), Some("DECIMAL(10,2)"), "type_changed")))
-    assert(got("extra") == ((None, Some("INT"), "added")))
   }
 }

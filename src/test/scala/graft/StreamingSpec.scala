@@ -262,29 +262,4 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == exp && got.nonEmpty)
     assert(got.size < 5000, "filter must drop something")
   }
-
-  test("streaming cdc snapshot: latest-wins state equals batch changelog fold") {
-    import spark.implicits._
-    val dir = s"${System.getProperty("java.io.tmpdir")}/graft_stream_cdclog"
-    graft.table.Checkpoint.clear(dir)
-    // two parquet files = at least two micro-batch splits under
-    // maxFilesPerTrigger defaults; seq order deliberately straddles them
-    // so the state merge, not file order, must produce latest-wins
-    Seq((1L, 10L, 0L, "I"), (2L, 20L, 0L, "I"), (3L, 30L, 0L, "I"))
-      .toDF("k", "v", "seq", "op").write.parquet(s"$dir/p1")
-    Seq((1L, 11L, 2L, "U"), (2L, 0L, 1L, "D"), (4L, 40L, 1L, "I"),
-        (1L, 99L, 1L, "U"))
-      .toDF("k", "v", "seq", "op").write.parquet(s"$dir/p2")
-    val all = spark.read.parquet(s"$dir/p1").unionByName(
-      spark.read.parquet(s"$dir/p2"))
-    val flat = s"$dir/flat"
-    all.repartition(2).write.parquet(flat)
-    val snap = graft.streaming.StreamOps.cdcSnapshot(spark, flat, "k", "seq")
-      .as[(Long, Long, String)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    // k=1: seq2 'U' wins over seq1; k=2: 'D' wins (caller filters);
-    // k=3 untouched; k=4 inserted
-    assert(snap == Map(1L -> ((11L, "U")), 2L -> ((0L, "D")),
-      3L -> ((30L, "I")), 4L -> ((40L, "I"))))
-  }
 }
